@@ -3,15 +3,18 @@ package graft
 /** Diagnostic main: write the formatted physical plan of selected queries
   * (or `cache:<name>` SharedCaches builders) to files — the evidence dumps
   * the optimization rounds commit under plans/rNN/.
-  * Usage: runMain graft.PlanDump <outDir> <suffix> [sfDir] <name...>
+  * Usage: runMain graft.PlanDump <outDir> <suffix> [--sf <sfDir>] <name...>
+  * (`--sf` defaults to the sf0.001 test data; a directory that does not
+  * exist is rejected).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val (sfDir, names) =
-      if (args(2).startsWith("/")) (args(2), args.drop(3).toSeq)
+      if (args(2) == "--sf") (args(3), args.drop(4).toSeq)
       else ("/root/testdata/sf0.001", args.drop(2).toSeq)
+    require(new java.io.File(sfDir).isDirectory, s"--sf $sfDir: no such directory")
     val spark = Graft.session("graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()

@@ -26,20 +26,24 @@ object CacheScope {
 
   /** Mark `df`'s PLAN as session-pinned: [[drain]] will never unpersist a
     * registered frame whose canonicalized plan matches a pinned one.
-    * Session-shared builders (SharedCaches) pin their frames so a
+    * Every [[graft.queries.SharedCache]] pins its frames so a
     * standalone operator that happens to [[persist]] the IDENTICAL plan
     * (Spark's CacheManager keys entries by canonicalized plan, so the two
     * frames share ONE cache entry) cannot evict the shared cache out from
     * under every cross-query consumer at its drain. */
   def pin(df: DataFrame): DataFrame = {
-    // evict pins of stopped sessions (the TrieMap builders' filterInPlace
-    // discipline): a stale pin retains its session's plan graph forever
-    // and could sameResult-match — and so suppress the drain of — a LIVE
-    // session's frame over the same data
+    // evict pins of stopped sessions, as SharedCache evicts their entries:
+    // a stale pin retains its session's plan graph forever and could
+    // sameResult-match — and so suppress the drain of — a LIVE session's
+    // frame over the same data
     pinned.removeIf(p => p.sparkSession.sparkContext.isStopped)
     pinned.add(df)
     df
   }
+
+  /** How many frames are pinned (a stopped session's pins go at the next
+    * [[pin]]). */
+  private[graft] def pinnedCount: Int = pinned.size
 
   /** Persist `df` (MEMORY_AND_DISK) and register it for the next [[drain]].
     *

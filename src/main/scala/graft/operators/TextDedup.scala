@@ -817,7 +817,8 @@ object TextDedup {
     * discipline every shingle-family operator here uses — a fingerprint in
     * thousands of documents is a template, and capping it bounds the
     * per-fingerprint inverted list, so the self-join never expands on a
-    * hot key). Output: doc_a, doc_b (a < b), n_shared. */
+    * hot key). Output: doc_a, doc_b (a < b), n_shared. Ids must be
+    * integers in [0, 2^32); any other id fails the query. */
   def winnowNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                          k: Int = 5, w: Int = 4, minShared: Long = 2,
                          maxDf: Long = 20): DataFrame = {
@@ -828,11 +829,18 @@ object TextDedup {
     // fingerprint's ids and expand the pairs IN-ROW (native PackedPairs,
     // the ngramJaccardPairs idiom; identical pair multiset since ids are
     // distinct per fp). The df cap bounds every group at maxDf ids, so no
-    // oversized-bucket fallback is needed. ids must fit in [0, 2^32) —
-    // the same bound ngramJaccardPairs documents for this corpus.
+    // oversized-bucket fallback is needed. Each id packs into 32 bits, so
+    // an id that is non-numeric (it would cast to NULL and drop out),
+    // negative or >= 2^32 (it would corrupt its pair) fails the query.
+    val id = col(idCol).try_cast("long")
+    val packable = when(id.isNull && col(idCol).isNotNull ||
+        id < 0L || id >= (1L << 32),
+      raise_error(concat(lit(s"winnowNearDupPairs: $idCol must be an " +
+        "integer in [0, 2^32), got "), col(idCol).cast("string"))))
+      .otherwise(id)
     fps.join(keep, "fp")
       .groupBy(col("fp"))
-      .agg(collect_list(col(idCol).cast("long")).as("ids"))
+      .agg(collect_list(packable).as("ids"))
       .where(size(col("ids")) > 1)
       .select(explode(graft.functions.PackedPairs.packed_pairs(col("ids")))
         .as("pair"))

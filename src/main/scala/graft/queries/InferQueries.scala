@@ -197,18 +197,12 @@ object InferQueries {
     * support-filtered co-purchase graph, exactly the nearDupPairs
     * shared-graph pattern (the lift table is |brand-pairs|-bounded, so
     * the persist is tiny and survives CacheScope's per-query drain). */
-  private val brandLiftCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def brandLift(s: SparkSession, dir: String): DataFrame = {
-    brandLiftCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    brandLiftCache.getOrElseUpdate((s, dir),
-      Graphs.cooccurrenceLift(
-        table(s, dir, "lineitem")
-          .join(table(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")),
-        "l_orderkey", "p_brand", supNum, supDen)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  private[queries] val brandLift = SharedCache("brand_lift") { (s, dir) =>
+    Graphs.cooccurrenceLift(
+      table(s, dir, "lineitem")
+        .join(table(s, dir, "part"), col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey"), col("p_brand")),
+      "l_orderkey", "p_brand", supNum, supDen)
   }
 
   /** The support-filtered brand co-purchase edge set, shared by the

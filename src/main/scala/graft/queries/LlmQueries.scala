@@ -38,17 +38,10 @@ object LlmQueries {
     * pipeline feeds one candidate graph to all its consumers, and it keeps
     * the bench honest about shared intermediates. The result is tiny
     * (pairs above threshold). */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def nearDupPairs(s: SparkSession, d: String): DataFrame = {
-    // evict entries of stopped sessions so neither their cached blocks nor
-    // the session object graphs are pinned forever
-    pairsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    pairsCache.getOrElseUpdate((s, d),
+  private[queries] val nearDupPairs = SharedCache("minhash_pair_graph") {
+    (s, d) =>
       TextDedup.minhashNearDupPairs(
         table(s, d, "documents"), "doc_id", "text", threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** q75's n-gram Jaccard pair set, shared the same way: its inverted-
@@ -57,16 +50,11 @@ object LlmQueries {
     * in full. Computed once per (session, sf dir); what persists is only
     * the verified pairs above threshold — tiny. Queries remain standalone
     * in semantics: each consumer rebuilds identically if run alone. */
-  private val ngramCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def ngramPairs(s: SparkSession, d: String): DataFrame = {
-    ngramCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ngramCache.getOrElseUpdate((s, d),
+  private[queries] val ngramPairs = SharedCache("ngram_jaccard_pairs") {
+    (s, d) =>
       TextDedup.ngramJaccardPairs(
         table(s, d, "documents"), "doc_id", "text",
         n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   /** q141's winnowed-fingerprint pair set, shared the same way (the r12
@@ -74,345 +62,180 @@ object LlmQueries {
     * df-capped inverted-list self-join is the cost; what persists is
     * only the verified pair set — tiny. Standalone semantics: a cold
     * call rebuilds identically (RoundThirteenOpsSpec pins it). */
-  private val winnowCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private[queries] val winnowPairs = SharedCache("winnow_pairs") { (s, d) =>
+    TextDedup.winnowNearDupPairs(
+      table(s, d, "documents"), "doc_id", "text",
+      k = 5, w = 4, minShared = 2, maxDf = 20)
+  }
 
-  private[queries] def winnowPairs(s: SparkSession, d: String): DataFrame = {
-    winnowCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    winnowCache.getOrElseUpdate((s, d),
-      TextDedup.winnowNearDupPairs(
-        table(s, d, "documents"), "doc_id", "text",
-        k = 5, w = 4, minShared = 2, maxDf = 20)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  /** The q142 Lloyd ASSIGNMENT over the embeddings table (vec_id, cid,
+    * emb, nrm) plus its trained centroid frame, as (cents, assign) — FOUR
+    * consumers derive this identical pair at identical parameters
+    * (nlist=8, lloydIters=2): q142 semanticDedup, q362
+    * prototypicalityBand, q387 semanticDecontam, and [[dedupWorklist]]'s
+    * semantic pair stage; each previously re-ran the norms scan + Lloyd
+    * rounds + assignment (~1–2.5 s apiece at sf0.1). ONE build installs
+    * both frames. Standalone semantics: a cold call rebuilds identically
+    * (RoundTwentyOptSpec pins shared == standalone for all four
+    * consumers). */
+  private[queries] val semFrames = SharedCache.twin("sem_cents", "sem_assign") {
+    (s, d) =>
+      val (assign, cents) = Similarity.semAssignmentFrames(
+        table(s, d, "embeddings"), "vec_id", "embedding",
+        nlist = 8, lloydIters = 2)
+      (cents, assign)
   }
 
   /** The q345/q346 end-to-end dedup worklist (exact → near-dup →
-    * semantic, per-doc fate + survivor), session-shared like
-    * [[nearDupPairs]]: the worklist query and its funnel both consume one
-    * build, and the persisted result is |docs| rows. The near-dup stage
-    * reuses the shared MinHash pair graph; the semantic pair set is the
-    * q142 cell lineage's pair form. Standalone semantics: a cold call
-    * rebuilds identically. */
-  /** The q142 Lloyd ASSIGNMENT over the embeddings table (vec_id, cid,
-    * emb, nrm) plus its trained centroid frame — FOUR consumers derive
-    * this identical pair at identical parameters (nlist=8, lloydIters=2):
-    * q142 semanticDedup, q362 prototypicalityBand, q387
-    * semanticDecontam, and [[dedupWorklist]]'s semantic pair stage; each
-    * previously re-ran the norms scan + Lloyd rounds + assignment
-    * (~1–2.5 s apiece at sf0.1). Session-shared like [[knDocBigrams]];
-    * ONE build installs both frames (the bpe_merges/bpe_dict twin
-    * pattern — sem_cents registers FIRST so its line prices the Lloyd
-    * training and sem_assign prices the assignment on top). Standalone
-    * semantics: a cold call rebuilds identically (RoundTwentyOptSpec
-    * pins shared == standalone for all four consumers). */
-  private val semAssignCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val semCentsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def semFramesBuild(s: SparkSession, d: String): Unit = {
-    val (assign, cents) = Similarity.semAssignmentFrames(
-      table(s, d, "embeddings"), "vec_id", "embedding",
-      nlist = 8, lloydIters = 2)
-    semCentsCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        cents.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    semAssignCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        assign.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
-
-  private[queries] def semCentsShared(s: SparkSession, d: String): DataFrame = {
-    semCentsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    semAssignCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!semCentsCache.contains((s, d))) semFramesBuild(s, d)
-    semCentsCache((s, d))
-  }
-
-  private[queries] def semAssignShared(s: SparkSession, d: String): DataFrame = {
-    semCentsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    semAssignCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!semAssignCache.contains((s, d))) semFramesBuild(s, d)
-    semAssignCache((s, d))
-  }
-
-  private val worklistCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def dedupWorklist(s: SparkSession, d: String): DataFrame = {
-    worklistCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    worklistCache.getOrElseUpdate((s, d),
+    * semantic, per-doc fate + survivor): the worklist query and its
+    * funnel both consume one build, and the persisted result is |docs|
+    * rows. The near-dup stage reuses the shared MinHash pair graph; the
+    * semantic pair set is the q142 cell lineage's pair form. Standalone
+    * semantics: a cold call rebuilds identically. */
+  private[queries] val dedupWorklist =
+    SharedCache("dedup_worklist", nearDupPairs, semFrames) { (s, d) =>
       TextDedup.dedupPipeline(
         table(s, d, "documents"), "doc_id", "text",
         nearDupPairs(s, d),
-        Similarity.semanticDupPairsFrom(semAssignShared(s, d), "vec_id",
+        Similarity.semanticDupPairsFrom(semFrames(s, d)._2, "vec_id",
           threshold = 0.3))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+    }
 
   /** The KN-family shared tokenize + per-doc bigram aggregate (doc_id,
     * w1, w2, occ) — SEVEN queries start from this one frame
     * (q342/q343/q344/q347/q348/q349/q354), and before r16 each rebuilt
-    * it (~1.5–4.7 s apiece at sf0.1). Session-shared like
-    * [[nearDupPairs]]; |rows| ≈ corpus bigram instances collapsed to
-    * per-doc types. Standalone semantics: a cold call rebuilds
-    * identically (TextLmSharedSpec pins shared == standalone). */
-  private val knDocBigCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def knDocBigrams(s: SparkSession, d: String): DataFrame = {
-    knDocBigCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    knDocBigCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.docBigrams(
-          table(s, d, "documents"), "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    * it (~1.5–4.7 s apiece at sf0.1). |rows| ≈ corpus bigram instances
+    * collapsed to per-doc types. Standalone semantics: a cold call
+    * rebuilds identically (TextLmSharedSpec pins shared == standalone). */
+  private[queries] val knDocBigrams = SharedCache("kn_doc_bigrams") { (s, d) =>
+    graft.operators.TextLm.docBigrams(table(s, d, "documents"), "doc_id", "text")
   }
 
-  /** The interpolated-KN bigram model TYPE table (w1, w2, lp_mu),
-    * memoized THROUGH [[knDocBigrams]] (so it must build AFTER it in
-    * SharedCaches — the dedup_worklist ordering precedent). Consumed
-    * directly by q342/q343/q354, as the reference model by q348, and as
-    * the general ratio side by q344. Zipf-bounded type table — tiny. */
-  private val knModelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def knModelShared(s: SparkSession, d: String): DataFrame = {
-    knModelCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    knModelCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.knBigramModel(
-          knDocBigrams(s, d), table(s, d, "documents"), "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
+  /** The interpolated-KN bigram model TYPE table (w1, w2, lp_mu), built
+    * from [[knDocBigrams]]. Consumed directly by q342/q343/q354, as the
+    * reference model by q348, and as the general ratio side by q344.
+    * Zipf-bounded type table — tiny. */
+  private[queries] val knModelShared =
+    SharedCache("kn_bigram_model", knDocBigrams) { (s, d) =>
+      graft.operators.TextLm.knBigramModel(
+        knDocBigrams(s, d), table(s, d, "documents"), "text")
+    }
 
   /** The per-language KN scored TYPE frame (one row per (doc, lang,
     * bigram type) with lp_mu under the doc's OWN language model) — feeds
-    * q369 (pooled) and q374 (per-doc + tercile mix). Session-shared like
-    * [[knDocBigrams]]; memoizes THROUGH it, so it registers AFTER it in
-    * SharedCaches. Standalone semantics: a cold call rebuilds
+    * q369 (pooled) and q374 (per-doc + tercile mix). Built from
+    * [[knDocBigrams]]. Standalone semantics: a cold call rebuilds
     * identically (TextLmSharedSpec pins shared == standalone). */
-  private val langScoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def langKnScored(s: SparkSession, d: String): DataFrame = {
-    langScoredCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    langScoredCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.groupedKnScoredFrom(
-          knDocBigrams(s, d), table(s, d, "documents"),
-          "doc_id", "text", "lang")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
+  private[queries] val langKnScored =
+    SharedCache("lang_kn_scored", knDocBigrams) { (s, d) =>
+      graft.operators.TextLm.groupedKnScoredFrom(
+        knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text", "lang")
+    }
 
   /** The 13-rule Gopher repetition MICRO census (doc_id, n_lines,
     * <rule>_mu x13, pass) — FIVE queries consume one build
     * (q375/q376/q381/q385/q392; ~4-5 s apiece at sf0.1 rebuilt, the
-    * single most-shared frame after the KN caches). Session-shared like
-    * [[knDocBigrams]]; standalone semantics: a cold call rebuilds
-    * identically. */
-  private val gopherMicroCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def gopherMicroShared(s: SparkSession, d: String): DataFrame = {
-    gopherMicroCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    gopherMicroCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.gopherMicro(table(s, d, "documents"), "doc_id", "text",
-          lineTokens = 3, paraTokens = 10)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    * single most-shared frame after the KN caches). Standalone
+    * semantics: a cold call rebuilds identically. */
+  private[queries] val gopherMicroShared = SharedCache("gopher_micro") {
+    (s, d) =>
+      TextDedup.gopherMicro(table(s, d, "documents"), "doc_id", "text",
+        lineTokens = 3, paraTokens = 10)
   }
 
   /** The Gopher QUALITY-rule census (q380's full output) — three
-    * consumers (q380/q385/q392). Session-shared like [[knDocBigrams]]. */
-  private val gopherQualityCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def gopherQualityShared(s: SparkSession, d: String): DataFrame = {
-    gopherQualityCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    gopherQualityCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.gopherQualityRules(table(s, d, "documents"), "doc_id",
-          "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    * consumers (q380/q385/q392). */
+  private[queries] val gopherQualityShared = SharedCache("gopher_quality") {
+    (s, d) =>
+      TextDedup.gopherQualityRules(table(s, d, "documents"), "doc_id", "text")
   }
 
   /** The SoftDeDup per-doc loss-weight frame (q388's full output) —
     * THREE consumers (q388 verbatim, q394's allocation input, q398's
     * soft leg), each previously re-running the commonness model + per-doc
     * score over the shared KN inventory (~1.5–1.9 s apiece at sf0.1).
-    * Memoizes THROUGH [[knDocBigrams]], so it registers AFTER it in
-    * SharedCaches. Standalone semantics: a cold call rebuilds identically
-    * (RoundNineteenOptSpec pins it). */
-  private val softWeightsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def softDedupWeightsShared(s: SparkSession, d: String): DataFrame = {
-    softWeightsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    softWeightsCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextLm.softDedupWeights(knDocBigrams(s, d), "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
+    * Built from [[knDocBigrams]]. Standalone semantics: a cold call
+    * rebuilds identically (RoundNineteenOptSpec pins it). */
+  private[queries] val softDedupWeightsShared =
+    SharedCache("softdedup_weights", knDocBigrams) { (s, d) =>
+      graft.operators.TextLm.softDedupWeights(knDocBigrams(s, d), "doc_id")
+    }
 
   /** The per-k memorization window inventories (doc_id, fp, nxt) —
     * EIGHT builds per suite pass collapsed to three priced ones: q389
     * (k=5/10/20), q393 (k=10), q397 (k=5/10/20) and the q395 card's
     * k=10 leg all consume [[TextDedup.memWindowInventory]] frames.
-    * One TrieMap per k (the registry prices each build on its own
-    * line). Standalone semantics: a cold call rebuilds identically
-    * (RoundNineteenOptSpec pins shared == standalone). */
-  private val memWin5Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWin10Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWin20Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memWinMultiCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** r20: the three per-k builds each re-paid the parquet scan + token
+    * Standalone semantics: a cold call rebuilds identically
+    * (RoundNineteenOptSpec pins shared == standalone).
+    *
+    * r20: the three per-k builds each re-paid the parquet scan + token
     * split (guide §2.4 — one corpus pass instead of three). The parent
     * (doc_id, k, fp, nxt) frame is minted once
     * ([[TextDedup.memWindowInventoryMulti]]); each per-k child persists
     * its `k = const` filter of it, so consumers see EXACTLY the frames
     * they always did (schema and rows spec-pinned identical to the
-    * single-k builds). */
-  private[queries] def memWindowsAllShared(s: SparkSession, d: String): DataFrame = {
-    memWinMultiCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWinMultiCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        TextDedup.memWindowInventoryMulti(table(s, d, "documents"),
-          "doc_id", "text", Seq(5, 10, 20))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    * single-k builds), and each child's registry line prices only its
+    * cheap copy. */
+  private[queries] val memWindowsAllShared = SharedCache("mem_windows") {
+    (s, d) =>
+      TextDedup.memWindowInventoryMulti(table(s, d, "documents"),
+        "doc_id", "text", Seq(5, 10, 20))
   }
 
-  private def memWinBuild(s: SparkSession, d: String, k: Int): DataFrame =
-    graft.operators.CacheScope.pin(
+  private def memWindowsOf(k: Int) =
+    SharedCache(s"mem_windows_k$k", memWindowsAllShared) { (s, d) =>
       memWindowsAllShared(s, d).where(col("k") === k)
         .select(col("doc_id"), col("fp"), col("nxt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
 
-  private[queries] def memWindows5Shared(s: SparkSession, d: String): DataFrame = {
-    memWin5Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin5Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 5))
-  }
-
-  private[queries] def memWindows10Shared(s: SparkSession, d: String): DataFrame = {
-    memWin10Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin10Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 10))
-  }
-
-  private[queries] def memWindows20Shared(s: SparkSession, d: String): DataFrame = {
-    memWin20Cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    memWin20Cache.getOrElseUpdate((s, d), memWinBuild(s, d, 20))
-  }
+  private[queries] val memWindows5Shared = memWindowsOf(5)
+  private[queries] val memWindows10Shared = memWindowsOf(10)
+  private[queries] val memWindows20Shared = memWindowsOf(20)
 
   /** The tokenizer word-type SEED (w, freq, sym) — ONE corpus word scan
     * feeding all three trainer families (bpe/wordpiece merge loops
     * directly; unigram via the maxWordLen-filtered projection). Eight
     * consumers ride it transitively (q331/q334/q357/q358/q350/q352/
-    * q353/q390 — far past the house 3+ rule). Session-shared like
-    * [[knDocBigrams]]; standalone semantics: a cold call rebuilds
-    * identically (TextPrepSpec pins shared == standalone). */
-  private val tokSeedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def tokSeedShared(s: SparkSession, d: String): DataFrame = {
-    tokSeedCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    tokSeedCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextPrep.seedWordTypesPlan(
-          table(s, d, "documents"), "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    * q353/q390 — far past the house 3+ rule). Standalone semantics: a
+    * cold call rebuilds identically (TextPrepSpec pins shared ==
+    * standalone). */
+  private[queries] val tokSeedShared = SharedCache("tok_word_seed") { (s, d) =>
+    graft.operators.TextPrep.seedWordTypesPlan(table(s, d, "documents"), "text")
   }
 
-  /** The trained BPE artifacts — merge table (q331) and final word-type
-    * dictionary (q334/q390). ONE merge-loop run per (session, sf dir)
-    * builds BOTH (the loop mints them simultaneously; localCheckpointed
-    * rounds make it eager), installed into their two registry caches
-    * together. Memoizes THROUGH [[tokSeedShared]] — registers AFTER it
-    * (the dedup_worklist ordering precedent); `bpe_dict` registers after
-    * `bpe_merges`, so its breakdown line prices ~0 (same build). */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bpeDictCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** The trained BPE artifacts as (merges, dict) — merge table (q331) and
+    * final word-type dictionary (q334/q390). ONE merge-loop run per
+    * (session, sf dir) builds BOTH (the loop mints them simultaneously;
+    * localCheckpointed rounds make it eager), so the `bpe_dict` registry
+    * line prices ~0. */
+  private[queries] val bpeTrained =
+    SharedCache.twin("bpe_merges", "bpe_dict", tokSeedShared) { (s, d) =>
+      graft.operators.TextPrep.bpeMergeLoopFrom(tokSeedShared(s, d), merges = 10)
+    }
 
-  private def bpeBuild(s: SparkSession, d: String): Unit = {
-    val (m, wt) = graft.operators.TextPrep.bpeMergeLoopFrom(
-      tokSeedShared(s, d), merges = 10)
-    bpeMergesCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    bpeDictCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      wt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    ()
-  }
-
-  private[queries] def bpeMergesShared(s: SparkSession, d: String): DataFrame = {
-    bpeMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    bpeDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!bpeMergesCache.contains((s, d))) bpeBuild(s, d)
-    bpeMergesCache((s, d))
-  }
-
-  private[queries] def bpeDictShared(s: SparkSession, d: String): DataFrame = {
-    bpeMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    bpeDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!bpeDictCache.contains((s, d))) bpeBuild(s, d)
-    bpeDictCache((s, d))
-  }
-
-  /** The trained WordPiece artifacts — the [[bpeMergesShared]] pattern
-    * for the likelihood-ratio family (q357/q358/q390). */
-  private val wpMergesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val wpDictCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def wpBuild(s: SparkSession, d: String): Unit = {
-    val (m, wt) = graft.operators.TextPrep.wordpieceMergeLoopFrom(
-      tokSeedShared(s, d), merges = 10)
-    wpMergesCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    wpDictCache.putIfAbsent((s, d), graft.operators.CacheScope.pin(
-      wt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-    ()
-  }
-
-  private[queries] def wpMergesShared(s: SparkSession, d: String): DataFrame = {
-    wpMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    wpDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!wpMergesCache.contains((s, d))) wpBuild(s, d)
-    wpMergesCache((s, d))
-  }
-
-  private[queries] def wpDictShared(s: SparkSession, d: String): DataFrame = {
-    wpMergesCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    wpDictCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    if (!wpDictCache.contains((s, d))) wpBuild(s, d)
-    wpDictCache((s, d))
-  }
+  /** The trained WordPiece artifacts as (merges, dict) — the
+    * [[bpeTrained]] pattern for the likelihood-ratio family
+    * (q357/q358/q390). */
+  private[queries] val wpTrained =
+    SharedCache.twin("wordpiece_merges", "wordpiece_dict", tokSeedShared) {
+      (s, d) =>
+        graft.operators.TextPrep.wordpieceMergeLoopFrom(
+          tokSeedShared(s, d), merges = 10)
+    }
 
   /** The unigram-LM Viterbi DP frame (one row per word type with cands/
     * best/bounds/pieces) — the ONE frame the whole SentencePiece shelf
     * derives from (q350/q352/q353/q390; the seed model and piece
-    * inventory are recovered from the candidate structs). Memoizes
-    * THROUGH [[tokSeedShared]] (maxWordLen-filtered projection — freq is
-    * per word TYPE, so filtering after the aggregate is identical). */
-  private val unigramDpCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def unigramDpShared(s: SparkSession, d: String): DataFrame = {
-    unigramDpCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    unigramDpCache.getOrElseUpdate((s, d),
-      graft.operators.CacheScope.pin(
-        graft.operators.TextPrep.unigramDpFrom(
-          tokSeedShared(s, d).where(length(col("w")) <= 16)
-            .select(col("w"), col("freq")),
-          maxPieceLen = 4, maxWordLen = 16)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
+    * inventory are recovered from the candidate structs). Built from
+    * [[tokSeedShared]] (maxWordLen-filtered projection — freq is per word
+    * TYPE, so filtering after the aggregate is identical). */
+  private[queries] val unigramDpShared =
+    SharedCache("unigram_dp", tokSeedShared) { (s, d) =>
+      graft.operators.TextPrep.unigramDpFrom(
+        tokSeedShared(s, d).where(length(col("w")) <= 16)
+          .select(col("w"), col("freq")),
+        maxPieceLen = 4, maxWordLen = 16)
+    }
 
   private val stopEn = "('the','a','of','and','to','in')"
   private val stopDe = "('der','die','das','und','ist')"
@@ -466,7 +289,7 @@ object LlmQueries {
     // round is vocab-bounded. All-integer; the oracle re-derives the
     // whole training loop (unrolled materialized CTEs). See
     // TextPrep.bpeTrain.
-    "q331_bpe_train" -> ((s, d) => bpeMergesShared(s, d)),
+    "q331_bpe_train" -> ((s, d) => bpeTrained(s, d)._1),
 
     // BPE ENCODE — the train->apply round trip: q331's 10 merges, then
     // every doc re-tokenized through the trained word-type dictionary;
@@ -474,21 +297,21 @@ object LlmQueries {
     // on top of training. See TextPrep.bpeEncode.
     "q334_bpe_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
-        "doc_id", "text", bpeDictShared(s, d))),
+        "doc_id", "text", bpeTrained(s, d)._2)),
 
     // WordPiece TRAINER (Schuster & Nakajima; the BERT tokenizer) — the
     // third tokenizer family: q331's merge loop with the argmax driven
     // by the likelihood-ratio score count(ab)/(count(a)*count(b)) (one
     // exact IEEE division of exact BIGINTs — no libm), tie-break
     // (score, pair_count, pair). See TextPrep.wordpieceTrain.
-    "q357_wordpiece_train" -> ((s, d) => wpMergesShared(s, d)),
+    "q357_wordpiece_train" -> ((s, d) => wpTrained(s, d)._1),
 
     // WordPiece ENCODE — the train->apply round trip over q357's merge
     // table, same closed-vocab dictionary-join contract as q334. See
     // TextPrep.wordpieceEncode.
     "q358_wordpiece_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
-        "doc_id", "text", wpDictShared(s, d))),
+        "doc_id", "text", wpTrained(s, d)._2)),
 
     // Per-source tokenizer compression census: BPE (q331), WordPiece
     // (q357) and unigram-LM (q350) apply passes rolled up per source —
@@ -498,7 +321,7 @@ object LlmQueries {
     "q390_tokenizer_census" -> ((s, d) =>
       graft.operators.TextPrep.tokenizerCompressionCensusFrom(
         table(s, d, "documents"), "text", "source",
-        bpeDictShared(s, d), wpDictShared(s, d), unigramDpShared(s, d))),
+        bpeTrained(s, d)._2, wpTrained(s, d)._2, unigramDpShared(s, d))),
 
     // Character-trigram profile (n-gram analysis surface). The distinct
     // count runs through the native single-pass NgramDistinctCount
@@ -1430,7 +1253,7 @@ object LlmQueries {
     // nlist grows with the corpus); the pairwise compare never leaves its
     // cluster. See Similarity.semanticDedup.
     "q142_semantic_dedup" -> ((s, d) =>
-      Similarity.semanticDedupFrom(semAssignShared(s, d), "vec_id",
+      Similarity.semanticDedupFrom(semFrames(s, d)._2, "vec_id",
         threshold = 0.3)),
 
     // Embedding-based semantic decontamination: vectors with vec_id % 10
@@ -1439,7 +1262,7 @@ object LlmQueries {
     // the paraphrase-robust stage exact-span q361 cannot express. See
     // Similarity.semanticDecontam.
     "q387_semantic_decontam" -> ((s, d) =>
-      Similarity.semanticDecontamFrom(semAssignShared(s, d), "vec_id",
+      Similarity.semanticDecontamFrom(semFrames(s, d)._2, "vec_id",
         col("vec_id") % 10 === 0, threshold = 0.3)),
 
     // Per-source dedup attrition over the q91 retention worklist — the
@@ -1835,7 +1658,7 @@ object LlmQueries {
     // Similarity.prototypicalityBand.
     "q362_proto_band" -> ((s, d) =>
       Similarity.prototypicalityBandFrom(
-        semAssignShared(s, d), semCentsShared(s, d), "vec_id")),
+        semFrames(s, d)._2, semFrames(s, d)._1, "vec_id")),
 
     // Held-out KN cross-entropy per source — train the KN model on the
     // md5-carve train split, score ONLY the held-out eighth with the
@@ -2160,7 +1983,7 @@ object LlmQueries {
       val fert = docs.select(explode(split(col("text"), " ")).as("w"))
         .where(length(col("w")) >= 1 && length(col("w")) <= 16)
         .groupBy(col("w")).agg(count(lit(1)).as("__cnt"))
-        .join(bpeDictShared(s, d).select(col("w"),
+        .join(bpeTrained(s, d)._2.select(col("w"),
           size(split(col("sym"), " ")).cast("long").as("__np")), Seq("w"))
         .agg(sum(col("__cnt")).as("__nw"),
           sum(col("__cnt") * col("__np")).as("__p"))

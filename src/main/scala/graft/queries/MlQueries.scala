@@ -38,15 +38,10 @@ object MlQueries {
     * inventory + prefix-filtered candidate join is the cost; what
     * persists is only the qualifying pair set. Standalone semantics: a
     * cold call rebuilds identically (RoundThirteenOpsSpec pins it). */
-  private val ppjoinCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def ppjoinPairsShared(s: SparkSession, d: String): DataFrame = {
-    ppjoinCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    ppjoinCache.getOrElseUpdate((s, d),
+  private[queries] val ppjoinPairsShared = SharedCache("ppjoin_pairs") {
+    (s, d) =>
       graft.operators.TextDedup.ppjoinPairs(
         table(s, d, "documents"), "doc_id", "text", n = 12, threshold = 0.7)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
   val queries: Map[String, Q] = Map(

@@ -35,34 +35,21 @@ object ScaleQueries {
     * Session-shared like the LlmQueries caches; standalone semantics: a
     * cold call rebuilds identically (RoundNineteenOptSpec pins it). The
     * persisted frame is the RUNS (tiny — pairs × diagonals above l). */
-  private val exactRunsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def exactRunsShared(s: SparkSession, d: String): DataFrame = {
-    exactRunsCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    exactRunsCache.getOrElseUpdate((s, d),
-      CacheScope.pin(
-        TextDedup.exactSubstringRuns(table(s, d, "documents"),
-          "doc_id", "text", l = 20, maxDf = 10)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+  private[queries] val exactRunsShared = SharedCache("exact_runs_l20") {
+    (s, d) =>
+      TextDedup.exactSubstringRuns(table(s, d, "documents"),
+        "doc_id", "text", l = 20, maxDf = 10)
   }
 
   /** The per-doc exact-substring dedup frame (doc_id, n_tokens,
     * n_tokens_removed, clean_md5) at the same point — q377's whole
-    * output, consumed again by q391 and q398's dedup leg. Memoizes
-    * THROUGH [[exactRunsShared]], so it registers AFTER it in
-    * SharedCaches (the dedup_worklist ordering precedent). */
-  private val exactDocCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def exactSubstrDocShared(s: SparkSession, d: String): DataFrame = {
-    exactDocCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-    exactDocCache.getOrElseUpdate((s, d),
-      CacheScope.pin(
-        TextDedup.exactSubstringDedupFrom(table(s, d, "documents"),
-          "doc_id", "text", exactRunsShared(s, d))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-  }
+    * output, consumed again by q391 and q398's dedup leg. Built from
+    * [[exactRunsShared]]. */
+  private[queries] val exactSubstrDocShared =
+    SharedCache("exact_substr_doc", exactRunsShared) { (s, d) =>
+      TextDedup.exactSubstringDedupFrom(table(s, d, "documents"),
+        "doc_id", "text", exactRunsShared(s, d))
+    }
 
   val queries: Map[String, Q] = Map(
 

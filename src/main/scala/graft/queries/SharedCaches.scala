@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Registry of the SESSION-SHARED persisted intermediates — the cross-query
-  * caches that deliberately survive [[graft.operators.CacheScope.drain]]
-  * because several queries consume one expensive build (the production
-  * shape: one candidate graph feeds every dedup consumer).
+/** Registry of the SESSION-SHARED persisted intermediates — the
+  * [[SharedCache]]s that deliberately survive
+  * [[graft.operators.CacheScope.drain]] because several queries consume one
+  * expensive build (the production shape: one candidate graph feeds every
+  * dedup consumer).
   *
   * Why a registry: per-query bench times must not depend on RUN ORDER.
   * Before this existed, whichever consumer ran first paid the whole build
@@ -14,61 +15,56 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * each time. `graft.Bench` now pre-materializes every entry here before
   * the timed pass and reports the build cost as its own summary line, so
   * consumers always measure steady-state cost. Queries stay standalone in
-  * SEMANTICS: each builder memoizes per (session, sf dir) and a cold call
+  * SEMANTICS: each cache memoizes per (session, sf dir) and a cold call
   * rebuilds identically (specs pin this).
   *
   * Adding a shared cache without registering it here re-opens the
   * order-attribution hole — BenchCacheSpec asserts the registry covers
-  * every TrieMap-memoized builder in graft.queries.
+  * every SharedCache of the query modules.
   */
 object SharedCaches {
 
-  /** name -> builder returning the session-shared persisted frame.
-    * DECLARED IN DEPENDENCY ORDER — a builder that memoizes through
-    * another registered builder (dedup_worklist → minhash_pair_graph)
-    * comes AFTER it, and Bench builds in THIS order (not alphabetical),
-    * so each breakdown line prices exactly its own build. Alphabetical
-    * order put dedup_worklist first and silently charged it minhash's
-    * whole pair-graph build while minhash reported a near-zero hit. */
-  val builders: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "minhash_pair_graph" -> (LlmQueries.nearDupPairs _),
-    "ngram_jaccard_pairs" -> (LlmQueries.ngramPairs _),
-    "winnow_pairs" -> (LlmQueries.winnowPairs _),
-    "ppjoin_pairs" -> (MlQueries.ppjoinPairsShared _),
-    "brand_lift" -> (InferQueries.brandLift _),
-    // the q142 Lloyd assignment pair (q142/q362/q387 + the worklist's
-    // semantic stage): cents FIRST (its line prices the Lloyd training;
-    // assign then prices the broadcast assignment on top — the twin
-    // attribution contract), both installed by one build
-    "sem_cents" -> (LlmQueries.semCentsShared _),
-    "sem_assign" -> (LlmQueries.semAssignShared _),
-    "dedup_worklist" -> (LlmQueries.dedupWorklist _),
-    "kn_doc_bigrams" -> (LlmQueries.knDocBigrams _),
-    "kn_bigram_model" -> (LlmQueries.knModelShared _),
-    "lang_kn_scored" -> (LlmQueries.langKnScored _),
-    // SoftDeDup weights memoize THROUGH kn_doc_bigrams (q388/q394/q398)
-    "softdedup_weights" -> (LlmQueries.softDedupWeightsShared _),
-    // exact-substring shelf: the l=20 run inventory (q300/q377/q384/q391/
-    // q398), then the per-doc dedup frame that memoizes THROUGH it
-    "exact_runs_l20" -> (ScaleQueries.exactRunsShared _),
-    "exact_substr_doc" -> (ScaleQueries.exactSubstrDocShared _),
-    // per-k memorization window inventories (q389/q393/q397 + q395's
-    // leg): ONE corpus pass mints the multi-k parent (r20); the per-k
-    // children filter+persist it, so their lines price the cheap copy
-    "mem_windows" -> (LlmQueries.memWindowsAllShared _),
-    "mem_windows_k5" -> (LlmQueries.memWindows5Shared _),
-    "mem_windows_k10" -> (LlmQueries.memWindows10Shared _),
-    "mem_windows_k20" -> (LlmQueries.memWindows20Shared _),
-    "gopher_micro" -> (LlmQueries.gopherMicroShared _),
-    "gopher_quality" -> (LlmQueries.gopherQualityShared _),
-    // the tokenizer shelf: one corpus word scan (tok_word_seed), then the
-    // three trainer families; each *_dict registers right after its
-    // *_merges twin (same eager merge-loop build installs both, so the
-    // dict line prices ~0 — the declared-order attribution contract)
-    "tok_word_seed" -> (LlmQueries.tokSeedShared _),
-    "bpe_merges" -> (LlmQueries.bpeMergesShared _),
-    "bpe_dict" -> (LlmQueries.bpeDictShared _),
-    "wordpiece_merges" -> (LlmQueries.wpMergesShared _),
-    "wordpiece_dict" -> (LlmQueries.wpDictShared _),
-    "unigram_dp" -> (LlmQueries.unigramDpShared _))
+  /** name -> builder returning the session-shared persisted frame, in
+    * Bench's build order: each cache comes after the caches it DECLARES
+    * as deps ([[SharedCache.dependencyOrder]], stable over the list
+    * below), so each breakdown line prices exactly its own build. A twin
+    * contributes both names, first then second: the first's line prices
+    * the one build, the second's only materializing its own frame. A
+    * cache whose build reads another must declare it — BenchCacheSpec
+    * builds each cache alone and checks that it installs exactly its
+    * declared dependency closure. */
+  val builders: Seq[(String, (SparkSession, String) => DataFrame)] =
+    SharedCache.dependencyOrder(Seq(
+      LlmQueries.nearDupPairs,
+      LlmQueries.ngramPairs,
+      LlmQueries.winnowPairs,
+      MlQueries.ppjoinPairsShared,
+      InferQueries.brandLift,
+      // the q142 Lloyd pair: sem_cents prices the Lloyd training,
+      // sem_assign the broadcast assignment on top
+      LlmQueries.semFrames,
+      LlmQueries.dedupWorklist,
+      LlmQueries.knDocBigrams,
+      LlmQueries.knModelShared,
+      LlmQueries.langKnScored,
+      LlmQueries.softDedupWeightsShared,
+      // exact-substring shelf: the l=20 run inventory (q300/q377/q384/
+      // q391/q398), then the per-doc dedup frame built from it
+      ScaleQueries.exactRunsShared,
+      ScaleQueries.exactSubstrDocShared,
+      // per-k memorization window inventories (q389/q393/q397 + q395's
+      // leg): ONE corpus pass mints the multi-k parent; the per-k children
+      // filter+persist it, so their lines price the cheap copy
+      LlmQueries.memWindowsAllShared,
+      LlmQueries.memWindows5Shared,
+      LlmQueries.memWindows10Shared,
+      LlmQueries.memWindows20Shared,
+      LlmQueries.gopherMicroShared,
+      LlmQueries.gopherQualityShared,
+      // the tokenizer shelf: one corpus word scan (tok_word_seed), then
+      // the three trainer families
+      LlmQueries.tokSeedShared,
+      LlmQueries.bpeTrained,
+      LlmQueries.wpTrained,
+      LlmQueries.unigramDpShared)).flatMap(_.entries)
 }

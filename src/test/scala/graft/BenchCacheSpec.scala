@@ -1,43 +1,71 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{CacheScope, Similarity, TextDedup}
+import graft.queries.{SharedCache, SharedCaches}
 
 /** Guards the Bench order-independence contract: every session-shared
-  * (TrieMap-memoized) builder in graft.queries must be registered in
-  * [[graft.queries.SharedCaches]], and each builder must actually memoize
-  * per (session, dir) — otherwise Bench's pre-materialization pass can't
-  * keep per-query times free of order-dependent build attribution.
+  * [[SharedCache]] in graft.queries must be registered in
+  * [[graft.queries.SharedCaches]], must declare every cache its build reads
+  * (the registry is ordered by those declarations), and must actually
+  * memoize per (session, dir) — otherwise Bench's pre-materialization pass
+  * can't keep per-query times free of order-dependent build attribution.
+  * Also pins the install contract: one build per (session, dir) under
+  * concurrent first calls, and every shared frame pinned against a
+  * standalone operator's drain.
   */
 class BenchCacheSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  test("SharedCaches registry covers every TrieMap-memoized builder in graft.queries") {
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
-    assert(java.nio.file.Files.isDirectory(dir), s"expected sources at $dir")
-    import scala.jdk.CollectionConverters._
-    val caches = java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      .map(src => "TrieMap\\.empty\\[\\(SparkSession, String\\), DataFrame\\]".r
-        .findAllIn(src).size)
-      .sum
-    assert(caches == graft.queries.SharedCaches.builders.size,
-      s"$caches TrieMap-memoized caches in graft.queries but " +
-        s"${graft.queries.SharedCaches.builders.size} registered in " +
-        "SharedCaches.builders — register the new cache (see scaladoc)")
+  /** Every SharedCache held by a field of a module object of graft.queries
+    * (caches a test builds for itself are not module fields). */
+  private lazy val moduleCaches: Seq[SharedCache[_]] = {
+    val dir = java.nio.file.Paths.get(getClass.getResource("/graft/queries").toURI)
+    java.nio.file.Files.list(dir).iterator().asScala.toSeq
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith("$.class") && n.count(_ == '$') == 1)
+      .sorted
+      .flatMap { n =>
+        val c = Class.forName("graft.queries." + n.stripSuffix(".class"))
+        val module = c.getField("MODULE$").get(null)
+        c.getDeclaredFields.toSeq
+          .filter(f => classOf[SharedCache[_]].isAssignableFrom(f.getType))
+          .map { f => f.setAccessible(true); f.get(module).asInstanceOf[SharedCache[_]] }
+      }
   }
 
-  test("registry is dependency-ordered: dedup_worklist builds AFTER minhash_pair_graph") {
-    // dedup_worklist memoizes THROUGH nearDupPairs; if it built first it
-    // would absorb minhash's whole pair-graph build and the bench
-    // breakdown would misattribute the cost (Bench builds in Seq order).
-    val names = graft.queries.SharedCaches.builders.map(_._1)
-    assert(names.indexOf("minhash_pair_graph") < names.indexOf("dedup_worklist"),
-      s"dependency order violated in SharedCaches.builders: $names")
-    // kn_bigram_model memoizes THROUGH kn_doc_bigrams — same rule
-    assert(names.indexOf("kn_doc_bigrams") < names.indexOf("kn_bigram_model"),
-      s"dependency order violated in SharedCaches.builders: $names")
+  private def closure(c: SharedCache[_]): Set[SharedCache[_]] =
+    c.deps.flatMap(closure).toSet + c
+
+  test("SharedCaches registry covers every SharedCache of the query modules") {
+    val names = SharedCaches.builders.map(_._1)
+    assert(names.distinct == names, s"duplicate registry names: $names")
+    val declared = moduleCaches.flatMap(_.names)
+    assert(declared.toSet == names.toSet,
+      s"SharedCaches of graft.queries ${declared.sorted} vs registered " +
+        s"${names.sorted} — register the new cache (see scaladoc)")
+  }
+
+  test("each cache built alone installs exactly its declared dependency closure") {
+    val names = SharedCaches.builders.map(_._1)
+    moduleCaches.foreach { c =>
+      val fresh = spark.newSession()
+      c(fresh, sf)
+      val want = closure(c).flatMap(_.names)
+      val got = moduleCaches.filter(_.installed(fresh, sf)).flatMap(_.names).toSet
+      assert(got == want, s"${c.names} installed $got, declares closure $want")
+      // Bench builds in registry order: the closure must come first
+      val last = c.names.map(names.indexOf).min
+      assert((want -- c.names).forall(names.indexOf(_) < last),
+        s"${c.names} registered before one of its dependencies: $names")
+    }
+    CacheScope.drain()
   }
 
   test("each registered builder memoizes: second call returns the same plan instance") {
@@ -47,6 +75,63 @@ class BenchCacheSpec extends AnyFunSuite {
       assert(first eq second, s"builder $name did not memoize per (session, dir)")
       assert(first.storageLevel.useMemory || first.storageLevel.useDisk,
         s"builder $name result is not persisted")
+    }
+  }
+
+  test("concurrent first calls on a twin cache: one build, same frames, no orphan pin") {
+    val builds = new AtomicInteger()
+    val inBuild = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    // the sem_cents/sem_assign build, held open until the second caller waits
+    val twin = SharedCache.twin("test_cents", "test_assign") { (s, d) =>
+      builds.incrementAndGet()
+      inBuild.countDown()
+      release.await(60, TimeUnit.SECONDS)
+      val (assign, cents) = Similarity.semAssignmentFrames(
+        Graft.table(s, d, "embeddings"), "vec_id", "embedding",
+        nlist = 8, lloydIters = 2)
+      (cents, assign)
+    }
+    val s = spark.newSession()
+    val pins = CacheScope.pinnedCount
+    val got = new ConcurrentLinkedQueue[(DataFrame, DataFrame)]()
+    def caller() = new Thread(() => { got.add(twin(s, sf)); () })
+    val first = caller()
+    first.start()
+    assert(inBuild.await(60, TimeUnit.SECONDS), "first build never started")
+    val second = caller()
+    second.start()
+    // the second caller overlaps the first build: it waits on the key's
+    // install (or, were the install not atomic, inside its own build)
+    while (second.getState == Thread.State.NEW ||
+      second.getState == Thread.State.RUNNABLE) Thread.sleep(5)
+    release.countDown()
+    first.join()
+    second.join()
+    assert(builds.get == 1, s"${builds.get} builds for one key")
+    val Seq(a, b) = got.asScala.toSeq
+    assert((a._1 eq b._1) && (a._2 eq b._2), "the two callers got different frames")
+    assert(CacheScope.pinnedCount - pins == 2, "a pinned frame was orphaned")
+    assert(a._1.storageLevel != StorageLevel.NONE && a._2.storageLevel != StorageLevel.NONE)
+  }
+
+  test("a shared frame survives a standalone persist + drain of its identical plan") {
+    // a private copy of the corpus, so no earlier build has cached this plan
+    val dir = java.nio.file.Files.createTempDirectory("shared-cache-pin")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"),
+      dir.resolve("documents.parquet"))
+    val s = spark.newSession()
+    CacheScope.persist(TextDedup.ngramJaccardPairs(
+      Graft.table(s, dir.toString, "documents"), "doc_id", "text",
+      n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2))
+    val shared = SharedCaches.builders.toMap.apply("ngram_jaccard_pairs")(s, dir.toString)
+    CacheScope.drain()
+    try assert(shared.storageLevel != StorageLevel.NONE,
+      "the standalone drain evicted the shared ngram_jaccard_pairs frame")
+    finally {
+      shared.unpersist()
+      java.nio.file.Files.delete(dir.resolve("documents.parquet"))
+      java.nio.file.Files.delete(dir)
     }
   }
 }

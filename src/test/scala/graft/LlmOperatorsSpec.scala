@@ -1158,6 +1158,24 @@ class LlmOperatorsSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)), s"got $pairs")
   }
 
+  test("winnowNearDupPairs: an id that cannot pack into 32 bits fails the query") {
+    import spark.implicits._
+    val text = (1 to 30).map(i => s"tok$i").mkString(" ")
+    val bad = Seq(
+      "non-numeric" -> Seq(("1", text), ("x7", text)).toDF("doc_id", "text"),
+      "negative" -> Seq((1L, text), (-3L, text)).toDF("doc_id", "text"),
+      "2^32" -> Seq((1L, text), (1L << 32, text)).toDF("doc_id", "text"))
+    bad.foreach { case (kind, df) =>
+      val e = intercept[Exception](graft.operators.TextDedup
+        .winnowNearDupPairs(df, "doc_id", "text", k = 5, w = 4,
+          minShared = 1, maxDf = 10).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("must be an integer in [0, 2^32)")),
+        s"$kind id: unexpected failure $e")
+    }
+  }
+
   test("semanticDedup: within-cluster near-dups drop against the earliest member") {
     import spark.implicits._
     // iters=0 keeps the seed centroids (= vectors 0 and 1): cluster A ~ [1,0],
