@@ -36,12 +36,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/JIT/shuffle machinery so the first timed query doesn't
     // absorb one-time JVM costs (observed ~2-4 s on whichever query ran first).

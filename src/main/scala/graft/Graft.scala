@@ -19,33 +19,32 @@ object Graft {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  def session(appName: String = "graft"): SparkSession = {
-    val cores = defaultCores
+  /** The runtime SQL confs of every graft engine: applied at build time by
+    * [[session]] and to an already-running session by [[tune]]. */
+  def sqlConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> defaultCores.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.parquet.compression.codec" -> "zstd",
+    "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  def session(appName: String = "graft"): SparkSession =
     SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cores]")
+      .master(s"local[$defaultCores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(sqlConfs.toMap)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-  }
 
-  /** Configure an externally-built session the same way (used by Verify/Bench
-    * whose SparkSession is owned by the driver contract). */
+  /** Configure the driver-owned session passed to `SparkEntry.entry` the
+    * same way: apply [[sqlConfs]], then register the native SQL functions
+    * post-hoc (that session is built without `withExtensions`; idempotent). */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // driver-owned sessions are built without withExtensions; register the
-    // native SQL functions post-hoc (idempotent)
+    sqlConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.functions.GraftFunctions.register(spark)
     spark
   }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   *     `spark.sql.extensions` conf) — the clean path when graft owns the
   *     session build;
   *   - [[GraftFunctions.register]] on an already-running session — the path
-  *     for driver-owned sessions (Verify/Bench contract), through the
-  *     `GraftShims` seam because `sessionState` is `private[sql]`.
+  *     for the driver-owned session passed to `SparkEntry.entry`, through
+  *     the `GraftShims` seam because `sessionState` is `private[sql]`.
   */
 object GraftFunctions {
 

@@ -380,7 +380,7 @@ object TextDedup {
     * built from other docs or another maxDf silently yields wrong sweep
     * rows. The schema is asserted below; provenance is the caller's
     * responsibility (the only caller passes the session-shared l=20
-    * inventory built with the same arguments, RoundNineteenOptSpec-pinned). */
+    * inventory built with the same arguments, SharedFormsSpec-pinned). */
   def exactSubstringSweep(docs: DataFrame, idCol: String, textCol: String,
                           ls: Seq[Int] = Seq(10, 20, 40),
                           maxDf: Int = 10,
@@ -2195,7 +2195,7 @@ object TextDedup {
     * Int MUST be the k the paired frame was built with — the label is
     * trusted, and a mismatched pair mislabels every output row's k with
     * no error. The only callers pass the session-shared mem_windows_k<k>
-    * caches, each keyed by its own k (RoundNineteenOptSpec-pinned). */
+    * caches, each keyed by its own k (SharedFormsSpec-pinned). */
   def extractableMemorizationFrom(ks: Seq[(Int, DataFrame)]): DataFrame = {
     require(ks.nonEmpty, "need at least one window length")
     val perK = ks.map { case (k, pw) =>

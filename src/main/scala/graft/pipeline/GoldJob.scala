@@ -27,7 +27,6 @@ object GoldJob {
         avg(col("humidity_pct")).as("avg_humidity_pct"))
 
   def run(spark: SparkSession, cfg: AppConfig, date: LocalDate): DataFrame = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val silver = spark.read
       .parquet(s"${cfg.storage.silver.stripSuffix("/")}/openmeteo/")
       .where(col("y") === date.getYear &&
@@ -35,6 +34,7 @@ object GoldJob {
     val out = aggregate(silver)
     out.coalesce(1)
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("y", "m", "d")
       .parquet(s"${cfg.storage.gold.stripSuffix("/")}/openmeteo/")
     out

@@ -88,10 +88,10 @@ object SilverJob {
 
   /** Transform + partitioned write (reference: spark_jobs/silver_openmeteo.py:63-69). */
   def run(spark: SparkSession, cfg: AppConfig, date: LocalDate): DataFrame = {
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val out = transform(spark, cfg.storage.bronze, date, cfg.source.hourlyVars)
     out.coalesce(1)
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("y", "m", "d")
       .parquet(s"${cfg.storage.silver.stripSuffix("/")}/openmeteo/")
     out

@@ -76,7 +76,7 @@ object LlmQueries {
     * semantic pair stage; each previously re-ran the norms scan + Lloyd
     * rounds + assignment (~1–2.5 s apiece at sf0.1). ONE build installs
     * both frames. Standalone semantics: a cold call rebuilds identically
-    * (RoundTwentyOptSpec pins shared == standalone for all four
+    * (SharedFormsSpec pins shared == standalone for all four
     * consumers). */
   private[queries] val semFrames = SharedCache.twin("sem_cents", "sem_assign") {
     (s, d) =>
@@ -106,7 +106,7 @@ object LlmQueries {
     * (q342/q343/q344/q347/q348/q349/q354), and before r16 each rebuilt
     * it (~1.5–4.7 s apiece at sf0.1). |rows| ≈ corpus bigram instances
     * collapsed to per-doc types. Standalone semantics: a cold call
-    * rebuilds identically (TextLmSharedSpec pins shared == standalone). */
+    * rebuilds identically (SharedFormsSpec pins shared == standalone). */
   private[queries] val knDocBigrams = SharedCache("kn_doc_bigrams") { (s, d) =>
     graft.operators.TextLm.docBigrams(table(s, d, "documents"), "doc_id", "text")
   }
@@ -125,7 +125,7 @@ object LlmQueries {
     * bigram type) with lp_mu under the doc's OWN language model) — feeds
     * q369 (pooled) and q374 (per-doc + tercile mix). Built from
     * [[knDocBigrams]]. Standalone semantics: a cold call rebuilds
-    * identically (TextLmSharedSpec pins shared == standalone). */
+    * identically (SharedFormsSpec pins shared == standalone). */
   private[queries] val langKnScored =
     SharedCache("lang_kn_scored", knDocBigrams) { (s, d) =>
       graft.operators.TextLm.groupedKnScoredFrom(
@@ -155,7 +155,7 @@ object LlmQueries {
     * soft leg), each previously re-running the commonness model + per-doc
     * score over the shared KN inventory (~1.5–1.9 s apiece at sf0.1).
     * Built from [[knDocBigrams]]. Standalone semantics: a cold call
-    * rebuilds identically (RoundNineteenOptSpec pins it). */
+    * rebuilds identically (SharedFormsSpec pins it). */
   private[queries] val softDedupWeightsShared =
     SharedCache("softdedup_weights", knDocBigrams) { (s, d) =>
       graft.operators.TextLm.softDedupWeights(knDocBigrams(s, d), "doc_id")
@@ -166,7 +166,7 @@ object LlmQueries {
     * (k=5/10/20), q393 (k=10), q397 (k=5/10/20) and the q395 card's
     * k=10 leg all consume [[TextDedup.memWindowInventory]] frames.
     * Standalone semantics: a cold call rebuilds identically
-    * (RoundNineteenOptSpec pins shared == standalone).
+    * (SharedFormsSpec pins shared == standalone).
     *
     * r20: the three per-k builds each re-paid the parquet scan + token
     * split (guide §2.4 — one corpus pass instead of three). The parent
@@ -421,7 +421,6 @@ object LlmQueries {
     // with a predicate, aggregate. Oracle computes the same directly — equal
     // results prove the layout round-trips losslessly.
     "q35_partitioned_roundtrip" -> ((s, d) => {
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // stable per-sf-dir path + overwrite mode: repeated runs reuse one
       // directory instead of leaking a fresh temp copy of events each call
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_part_" +
@@ -430,7 +429,8 @@ object LlmQueries {
         .withColumn("y", year(col("ts")))
         .withColumn("m", month(col("ts")))
         .withColumn("d", dayofmonth(col("ts")))
-        .write.mode("overwrite").partitionBy("y", "m", "d").parquet(out)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("y", "m", "d").parquet(out)
       s.read.option("basePath", out).parquet(out)
         .where(col("d") <= 7)                       // partition-pruned scan
         .groupBy(col("y"), col("m"), col("d"))

@@ -33,7 +33,7 @@ object ScaleQueries {
     * allocation), each previously re-paying the window-fingerprint +
     * pair-join + island-stitch chain (~1.1–1.6 s apiece at sf0.1).
     * Session-shared like the LlmQueries caches; standalone semantics: a
-    * cold call rebuilds identically (RoundNineteenOptSpec pins it). The
+    * cold call rebuilds identically (SharedFormsSpec pins it). The
     * persisted frame is the RUNS (tiny — pairs × diagonals above l). */
   private[queries] val exactRunsShared = SharedCache("exact_runs_l20") {
     (s, d) =>

@@ -19,8 +19,8 @@ object GraftShims {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Register a native expression as a SQL function on an EXISTING session —
-    * the path for driver-owned sessions that were built without
-    * `withExtensions` (Verify/Bench contract). `sessionState` is
+    * the path for the driver-owned session passed to `SparkEntry.entry`,
+    * which is built without `withExtensions`. `sessionState` is
     * `private[sql]`, hence this lives in the seam. Idempotent: re-registering
     * the same name just replaces the builder. */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Graft.session("graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -37,6 +30,31 @@ class CoreQueriesSpec extends AnyFunSuite {
 
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("one engine configuration: the test session and Graft.tune carry Graft.sqlConfs") {
+    // the build-time conf: suites may retune the shared session at run
+    // time (the pipeline applies its configured shuffle width)
+    val built = spark.sparkContext.getConf
+    Graft.sqlConfs.foreach { case (k, v) =>
+      assert(built.getOption(k).contains(v), s"test session built without $k=$v")
+    }
+    val others = Map(
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "America/New_York",
+      "spark.sql.parquet.compression.codec" -> "snappy",
+      "spark.sql.sources.partitionOverwriteMode" -> "static",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "false")
+    assert(others.keySet == Graft.sqlConfs.map(_._1).toSet)
+    val s = spark.newSession()
+    others.foreach { case (k, v) => s.conf.set(k, v) }
+    Graft.tune(s)
+    Graft.sqlConfs.foreach { case (k, v) =>
+      assert(s.conf.get(k) == v, s"tune left $k=${s.conf.get(k)}, want $v")
+    }
   }
 
   test("q03 global agg invariants: min <= avg <= max") {

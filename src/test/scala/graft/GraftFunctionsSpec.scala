@@ -8,10 +8,21 @@ import graft.functions.{GraftFunctions, MinHashSigs, TextHashes, VectorFunctions
   * GraftExtensions at build or GraftFunctions.register post-hoc) and agree
   * bit-for-bit with their Column-API wrappers. */
 class GraftFunctionsSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = SparkTestSession.spark
-    GraftFunctions.register(s) // the post-hoc (driver-session) path
-    s
+  lazy val spark = SparkTestSession.spark
+
+  test("register installs every native function on a session that lacks them") {
+    // the driver-owned session passed to SparkEntry.entry is built without
+    // GraftExtensions; a fresh session stripped of the injected functions
+    // stands in for it
+    val fresh = spark.newSession()
+    val names = GraftFunctions.all.map(_._1)
+    names.foreach(n => fresh.sql(s"DROP TEMPORARY FUNCTION $n"))
+    val call = "SELECT dot_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d"
+    intercept[org.apache.spark.sql.AnalysisException](fresh.sql(call).head())
+    assert(names.forall(n => !fresh.catalog.functionExists(n)))
+    GraftFunctions.register(fresh)
+    assert(names.forall(n => fresh.catalog.functionExists(n)))
+    assert(fresh.sql(call).head().getDouble(0) == 11.0)
   }
 
   test("dot_d via SQL: sequential fold over array<double>") {

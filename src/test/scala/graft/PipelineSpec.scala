@@ -110,6 +110,20 @@ class PipelineSpec extends AnyFunSuite {
     assert(finalRows(cfg).size == 2)
   }
 
+  test("replay contract lives in the write: a static-overwrite session keeps day 1 and stays static") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    val cfg = mkCfg(Files.createTempDirectory("graft_static"))
+    for (day <- Seq("2025-09-15", "2025-09-16"); st <- Seq("bronze", "silver", "gold"))
+      Pipeline.runStage(s, cfg, st, LocalDate.parse(day), _ => fixture24h(day))
+    def perDay(layer: String) = s.read.parquet(s"$layer/openmeteo/")
+      .groupBy("d").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(perDay(cfg.storage.silver) == Map(15 -> 24L, 16 -> 24L), "silver day 1 lost to day 2's write")
+    assert(perDay(cfg.storage.gold) == Map(15 -> 1L, 16 -> 1L), "gold day 1 lost to day 2's write")
+    assert(s.conf.get("spark.sql.sources.partitionOverwriteMode") == "static",
+      "silver/gold rewrote the caller's session conf")
+  }
+
   test("dedup-AVG replay semantics: duplicate stage rows collapse by average") {
     val root = Files.createTempDirectory("graft_avg")
     val cfg = mkCfg(root)

@@ -199,7 +199,7 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
   test("gopher shared-cache forms == standalone operators (the SharedCaches rule)") {
     // the r18 gopher_micro / gopher_quality session caches must be pure
     // cost optimizations — every consumer returns exactly its standalone
-    // operator's rows (the TextLmSharedSpec discipline)
+    // operator's rows (the SharedFormsSpec discipline)
     val sf = "/root/testdata/sf0.001"
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] = {
       val cols = df.columns.sorted

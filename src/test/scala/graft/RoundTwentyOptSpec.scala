@@ -188,43 +188,6 @@ class RoundTwentyOptSpec extends AnyFunSuite {
     }
   }
 
-  test("shared Lloyd assignment consumers == standalone operator forms") {
-    import graft.operators.Similarity
-    import org.apache.spark.sql.functions.col
-    val emb = graft.Graft.table(spark, sf, "embeddings")
-    val shared = graft.SparkEntry.queries
-    val standalone: Map[String, org.apache.spark.sql.DataFrame] = Map(
-      "q142_semantic_dedup" -> Similarity.semanticDedup(
-        emb, "vec_id", "embedding", threshold = 0.3, nlist = 8,
-        lloydIters = 2),
-      "q362_proto_band" -> Similarity.prototypicalityBand(
-        emb, "vec_id", "embedding"),
-      "q387_semantic_decontam" -> Similarity.semanticDecontam(
-        emb, "vec_id", "embedding", col("vec_id") % 10 === 0,
-        threshold = 0.3, nlist = 8, lloydIters = 2))
-    standalone.foreach { case (name, solo) =>
-      val viaCache = shared(name)(spark, sf)
-      assert(viaCache.columns.toSeq == solo.columns.toSeq,
-        s"$name column drift")
-      val (a, b) = (rows(viaCache), rows(solo))
-      assert(a == b, s"$name shared-assignment rows != standalone rows")
-      graft.operators.CacheScope.drain()
-    }
-    // the worklist consumer (q345) against a fully self-building pipeline
-    // (fresh minhash pairs + fresh semantic pairs — nothing shared)
-    val soloWorklist = graft.operators.TextDedup.dedupPipeline(
-      docs, "doc_id", "text",
-      graft.operators.TextDedup.minhashNearDupPairs(
-        docs, "doc_id", "text", threshold = 0.5),
-      Similarity.semanticDupPairs(
-        emb, "vec_id", "embedding", threshold = 0.3, nlist = 8,
-        lloydIters = 2))
-    val viaWorklist = shared("q345_dedup_pipeline")(spark, sf)
-    assert(rows(viaWorklist) == rows(soloWorklist),
-      "worklist rows drift under the shared semantic assignment")
-    graft.operators.CacheScope.drain()
-  }
-
   test("memWindowInventoryMulti k-slice == single-k memWindowInventory") {
     import graft.operators.TextDedup
     import org.apache.spark.sql.functions.col
