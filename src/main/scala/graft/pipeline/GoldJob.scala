@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * (reference: spark_jobs/gold_openmeteo.py:12-36).
   *
   * Two deliberate upgrades (SURVEY.md §2.5, §4.1):
-  *  - read the Silver ROOT and select the day with a predicate, so Catalyst
-  *    partition-prunes (identical I/O to the reference's path-encoding, but
-  *    schema-stable and multi-day-safe);
+  *  - read only the day's Silver partition with its schema: no root listing,
+  *    no inference job, and a missing day fails instead of writing nothing,
+  *    which would leave a stale Gold partition for the stage load to publish;
   *  - groupBy(y,m,d) instead of a global agg — identical output for one day,
   *    correct (not accidentally global) for multi-day input.
   */
@@ -27,11 +27,8 @@ object GoldJob {
         avg(col("humidity_pct")).as("avg_humidity_pct"))
 
   def run(spark: SparkSession, cfg: AppConfig, date: LocalDate): DataFrame = {
-    val silver = spark.read
-      .parquet(s"${cfg.storage.silver.stripSuffix("/")}/openmeteo/")
-      .where(col("y") === date.getYear &&
-        col("m") === date.getMonthValue && col("d") === date.getDayOfMonth)
-    val out = aggregate(silver)
+    val out = aggregate(StageLoadJob.read(spark, cfg.storage.silver,
+      Schemas.silver(cfg.source.hourlyVars), date))
     out.coalesce(1)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")

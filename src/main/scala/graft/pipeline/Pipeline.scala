@@ -21,8 +21,10 @@ object Pipeline {
     * dags/weather_transform_silver.py:21-47), which re-run one layer without
     * replaying the whole day. Stage idempotency (partition overwrite, keyed
     * bronze put, stage-table delete-before-read, ON-CONFLICT upsert) is what
-    * makes single-stage re-runs safe. Returns the upsert's staged-row count
-    * (the reference's diagnostic K8); other stages return 0. */
+    * makes single-stage re-runs safe. Returns a row count: `"stage"` the rows
+    * it appended to the stage table, `"upsert"` (and so `"day"`) the staged
+    * rows the merge consumed (the reference's diagnostic K8); bronze, silver
+    * and gold return 0. */
   def runStage(spark: SparkSession, cfg: AppConfig, stage: String, date: LocalDate,
                fetch: AppConfig => String = HttpSource.fetchForecast(_)): Long = {
     // Y3: actually apply the configured shuffle width (the reference declares

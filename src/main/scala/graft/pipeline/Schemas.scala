@@ -24,18 +24,24 @@ object Schemas {
           hourlyVars.map(v => StructField(v, ArrayType(DoubleType))))),
       StructField("_corrupt_record", StringType)))
 
-  /** One row per hour (reference: spark_jobs/silver_openmeteo.py:38-57). */
-  final case class HourlyObservation(
-      lat: Double, lon: Double, tz: String,
-      temperature_c: Option[Double], humidity_pct: Option[Double],
-      precip_mm: Option[Double],
-      event_ts: java.sql.Timestamp,
-      y: Int, m: Int, d: Int)
+  /** Silver's names for the standard hourly variables
+    * (reference: spark_jobs/silver_openmeteo.py:43-45); unknown vars keep theirs. */
+  val silverNames: Map[String, String] = Map(
+    "temperature_2m" -> "temperature_c",
+    "relative_humidity_2m" -> "humidity_pct",
+    "precipitation" -> "precip_mm").withDefault(identity)
 
-  /** One row per day (reference: spark_jobs/gold_openmeteo.py:20-29). */
-  final case class DailyMetrics(
-      min_temp_c: Option[Double], max_temp_c: Option[Double],
-      avg_temp_c: Option[Double], precip_mm_sum: Option[Double],
-      avg_humidity_pct: Option[Double],
-      y: Int, m: Int, d: Int)
+  /** One row per hour (reference: spark_jobs/silver_openmeteo.py:38-57). */
+  def silver(hourlyVars: Seq[String]): StructType = StructType(
+    Seq(StructField("lat", DoubleType), StructField("lon", DoubleType),
+      StructField("tz", StringType)) ++
+      hourlyVars.map(v => StructField(silverNames(v), DoubleType)) ++
+      (StructField("event_ts", TimestampType) +: dayKey))
+
+  /** One row per day, in stage-table column order
+    * (reference: spark_jobs/gold_openmeteo.py:20-29). */
+  val gold: StructType = StructType(dayKey ++ Seq("min_temp_c", "max_temp_c",
+    "avg_temp_c", "precip_mm_sum", "avg_humidity_pct").map(StructField(_, DoubleType)))
+
+  private def dayKey = Seq("y", "m", "d").map(StructField(_, IntegerType))
 }

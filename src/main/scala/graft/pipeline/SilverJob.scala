@@ -21,13 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object SilverJob {
 
-  /** Reference's output names for the standard hourly variables
-    * (spark_jobs/silver_openmeteo.py:43-45); unknown vars keep their name. */
-  private val renames = Map(
-    "temperature_2m" -> "temperature_c",
-    "relative_humidity_2m" -> "humidity_pct",
-    "precipitation" -> "precip_mm")
-
   /** The Silver pivot shared by the batch and streaming paths: filter corrupt
     * docs, arrays_zip + explode the parallel hourly arrays, cast + rename the
     * values, parse event_ts. Output: lat, lon, tz, <renamed vars>, event_ts. */
@@ -41,7 +34,7 @@ object SilverJob {
         explode(arrays_zip(
           (col("hourly.time") +: hourlyVars.map(v => col(s"hourly.$v"))): _*)).as("h"))
     val valueCols = hourlyVars.map { v =>
-      col(s"h.$v").cast("double").as(renames.getOrElse(v, v))
+      col(s"h.$v").cast("double").as(Schemas.silverNames(v))
     }
     zipped.select(
       (Seq(col("lat"), col("lon"), col("tz")) ++ valueCols :+
@@ -68,17 +61,16 @@ object SilverJob {
 
     // Deterministic single-doc selection: the lexicographically last file in
     // the partition wins (vs the reference's arbitrary limit(1),
-    // spark_jobs/silver_openmeteo.py:28). Implemented as a 1-row max
-    // aggregate + broadcast join rather than an unpartitioned window: a
-    // global Window.orderBy funnels every row through one partition, which
-    // is exactly the shape that dies on a fat day-partition at scale.
-    val withFile = raw
+    // spark_jobs/silver_openmeteo.py:28). One scan and a global max_by, never
+    // an unpartitioned window (which funnels every row through one partition
+    // — the shape that dies on a fat day-partition at scale). Corrupt docs
+    // are dropped first; an all-corrupt day leaves one null doc, filtered out.
+    val doc = raw
       .where(col("_corrupt_record").isNull && col("hourly").isNotNull)
-      .withColumn("_src_file", input_file_name())
-    val latest = withFile.agg(max(col("_src_file")).as("_latest_file"))
-    val doc = withFile
-      .join(broadcast(latest), col("_src_file") === col("_latest_file"))
-      .drop("_latest_file")
+      .select(struct(raw.columns.map(col): _*).as("doc"),
+        input_file_name().as("_src_file"))
+      .agg(max_by(col("doc"), col("_src_file")).as("doc"))
+      .select("doc.*")
 
     flattenHourly(doc, hourlyVars)
       .withColumn("y", lit(date.getYear))

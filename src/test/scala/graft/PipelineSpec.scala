@@ -124,6 +124,62 @@ class PipelineSpec extends AnyFunSuite {
       "silver/gold rewrote the caller's session conf")
   }
 
+  test("job budget per day: silver <= 2, gold <= 2, stage = 1 Spark jobs, no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val cfg = mkCfg(Files.createTempDirectory("graft_jobs"))
+    Pipeline.runDay(spark, cfg, LocalDate.parse("2025-09-15"), _ => fixture24h("2025-09-15"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+    }
+    val sc = spark.sparkContext
+    val perStage = try {
+      sc.addSparkListener(listener)
+      Pipeline.stages.map { st =>
+        org.apache.spark.ListenerBusDrain(sc)
+        jobs.clear()
+        Pipeline.runStage(spark, cfg, st, LocalDate.parse("2025-09-16"), _ => fixture24h("2025-09-16"))
+        org.apache.spark.ListenerBusDrain(sc)
+        import scala.jdk.CollectionConverters._
+        st -> jobs.asScala.toSeq
+      }.toMap
+    } finally sc.removeSparkListener(listener)
+    def names(st: String) = perStage(st).map(_.stageInfos.map(_.name).mkString(","))
+    val counts = perStage.map { case (st, js) => st -> js.size }
+    assert(counts("silver") <= 2, s"silver jobs: ${names("silver")}")
+    assert(counts("gold") <= 2, s"gold jobs: ${names("gold")}")
+    assert(counts("stage") == 1, s"stage jobs: ${names("stage")}")
+    assert(counts("bronze") == 0 && counts("upsert") == 0, counts.toString)
+    // A schema-inference (footer merge) or parallel-listing job runs outside
+    // any SQL execution; every job of the day must belong to one.
+    val orphans = perStage.values.flatten
+      .filter(_.properties.getProperty("spark.sql.execution.id") == null)
+    assert(orphans.isEmpty, s"jobs outside a query: ${orphans.map(_.stageInfos.map(_.name))}")
+  }
+
+  test("gold fails loudly on a missing silver day; the stale gold row is not published") {
+    val cfg = mkCfg(Files.createTempDirectory("graft_missing_silver"))
+    val date = LocalDate.parse("2025-09-16")
+    for (day <- Seq("2025-09-15", "2025-09-16"))
+      Pipeline.runDay(spark, cfg, LocalDate.parse(day), _ => fixture24h(day))
+    val rows1 = finalRows(cfg)
+    val silverDay = StageLoadJob.partitionPath(cfg.storage.silver, date)
+    val hc = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(silverDay)
+    assert(p.getFileSystem(hc).delete(p, true))
+    // Replay from gold: gold must stop the day before the stage load can
+    // publish the surviving gold partition.
+    val err = intercept[Exception] {
+      Seq("gold", "stage", "upsert").foreach(Pipeline.runStage(spark, cfg, _, date))
+    }
+    assert(err.getMessage.contains(silverDay.stripPrefix("file:")), err.getMessage)
+    assert(stageCount(cfg) == 0, "stale gold reached the stage table")
+    assert(finalRows(cfg) == rows1)
+    // The full-day replay rebuilds silver from bronze and converges again.
+    assert(Pipeline.runDay(spark, cfg, date, _ => fixture24h("2025-09-16")) == 1)
+    assert(finalRows(cfg) == rows1)
+  }
+
   test("dedup-AVG replay semantics: duplicate stage rows collapse by average") {
     val root = Files.createTempDirectory("graft_avg")
     val cfg = mkCfg(root)
@@ -157,13 +213,39 @@ class PipelineSpec extends AnyFunSuite {
       payload(Seq("2025-09-15T00:00", "2025-09-15T01:00"), Seq(2.0, 3.0),
         Seq(60.0, 61.0), Seq(0.1, 0.2)))
     val silver = SilverJob.transform(spark, cfg.storage.bronze, date, cfg.source.hourlyVars)
-    val temps = silver.select("temperature_c").collect().map(_.getDouble(0)).sorted
-    assert(temps.sameElements(Array(2.0, 3.0)), "doc _b (latest name) must be selected")
-    // Scale regression guard: latest-file selection must be the 1-row max
-    // aggregate + broadcast join, never an unpartitioned window (which
-    // funnels the whole day-partition through one task).
+    // Scale regression guard: latest-file selection is one scan and one
+    // max_by aggregate — never an unpartitioned window (which funnels the
+    // whole day-partition through one task), and no second scan broadcast
+    // back into a join. Read off the initial plan, before execution.
     val p = silver.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), s"Silver plan must not contain a window:\n$p")
+    assert("FileScan json".r.findAllIn(p).size == 1, s"Silver must scan bronze once:\n$p")
+    assert(!p.contains("BroadcastExchange"), s"Silver plan must not broadcast:\n$p")
+    val temps = silver.select("temperature_c").collect().map(_.getDouble(0)).sorted
+    assert(temps.sameElements(Array(2.0, 3.0)), "doc _b (latest name) must be selected")
+    assert(silver.schema.map(f => f.name -> f.dataType) ==
+      Schemas.silver(cfg.source.hourlyVars).map(f => f.name -> f.dataType),
+      "silver output must match Schemas.silver")
+  }
+
+  test("latest-file rule skips corrupt docs: an older valid doc wins; an all-corrupt day writes nothing") {
+    val cfg = mkCfg(Files.createTempDirectory("graft_corrupt_latest"))
+    val hc = spark.sparkContext.hadoopConfiguration
+    def put(day: String, name: String, body: String): Unit =
+      ObjectStore.put(hc, cfg.storage.bronze, s"openmeteo/y=2025/m=09/d=$day/$name.json", body)
+    put("15", "openmeteo_2025-09-15_a", payload(Seq("2025-09-15T00:00"), Seq(7.0), Seq(50.0), Seq(0.0)))
+    put("15", "openmeteo_2025-09-15_b", "{not json at all")
+    val d15 = LocalDate.parse("2025-09-15")
+    val temps = SilverJob.transform(spark, cfg.storage.bronze, d15, cfg.source.hourlyVars)
+      .select("temperature_c").collect().map(_.getDouble(0))
+    assert(temps.sameElements(Array(7.0)), "the corrupt latest doc must not hide the valid one")
+    Pipeline.runStage(spark, cfg, "silver", d15)
+    put("16", "openmeteo_2025-09-16_a", "{\"latitude\": ")
+    put("16", "openmeteo_2025-09-16_b", "[1, 2")
+    Pipeline.runStage(spark, cfg, "silver", LocalDate.parse("2025-09-16"))
+    val perDay = spark.read.parquet(s"${cfg.storage.silver}/openmeteo/")
+      .groupBy("d").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(perDay == Map(15 -> 1L), s"an all-corrupt day must add no silver rows: $perDay")
   }
 
   test("null values in hourly arrays pass through casts (API emits nulls)") {
