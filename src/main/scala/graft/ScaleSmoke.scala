@@ -1,1840 +1,96 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-trend smoke: replicate the documents corpus `factor`x in memory
-  * (id-shifted copies — every doc gains factor-1 exact duplicates, the shape
-  * of real crawl data) and time the dedup pipelines end-to-end. The point is
-  * the GROWTH CURVE, not the absolute number: a pipeline whose cost explodes
-  * superlinearly here would melt at 100 TB regardless of constants.
+/** Writes an id-shifted ×`factor` replica of an sf directory, the larger
+  * data that scale curves are measured on (`$T` holds the sf dirs):
   *
-  *   sbt "runMain graft.ScaleSmoke /root/testdata/sf0.1 10"
+  * {{{
+  *   sbt "runMain graft.ScaleSmoke $T/sf0.01 2 /tmp/sf0.01x2"
+  *   SPARK_GRAFT_SF_DIR=$T/sf0.01 SPARK_GRAFT_BENCH_OUT=a.json \
+  *     SPARK_GRAFT_WARM_DIR=$T/sf0.001 sbt "runMain graft.Bench"
+  *   SPARK_GRAFT_SF_DIR=/tmp/sf0.01x2 SPARK_GRAFT_BENCH_OUT=b.json \
+  *     SPARK_GRAFT_WARM_DIR=$T/sf0.001 sbt "runMain graft.Bench"
+  *   python3 tools/bench_diff.py a.json b.json
+  * }}}
   *
-  * Prints one line per pipeline: rows found and wall seconds at 1x and at
-  * `factor`x. Exact replicas are the adversarial case for near-dup dedup:
-  * every replica pair is a true J=1.0 pair, so the candidate volume scales
-  * with factor^2 per original document — the df-capped / banded candidate
-  * generation must absorb that without a cross product.
-  *
-  * Measured (sf0.1 x10 = 50k docs, local[32], 2026-08-12; dedup numbers
-  * vary run-to-run with machine load — compare shapes, not points):
-  * {{{
-  *   ngram_jaccard  1x rows=256     9.3-9.7 s   10x rows=250,555  111-180 s
-  *   minhash_lsh    1x rows=256     2.3-4.0 s   10x rows=250,600   70-90 s
-  *   exact_dedup    1x rows=4,992   0.4 s       10x rows=4,992     1.2-1.4 s
-  *   tfidf_topk     1x rows=15      1.1 s       10x rows=15        2.5 s
-  *   bm25_topk      1x rows=15      1.0 s       10x rows=15        2.6 s
-  *   source_overlap 1x rows=190     1.5 s       10x rows=190       1.7 s
-  * }}}
-  * (source_overlap re-measured 2026-08-13 after the switch to native FNV
-  * shingle hashes — pre-switch it was 5.3-5.5 s flat across factors; the
-  * shape is unchanged, the constant is 3x smaller.)
-  *
-  * Round-9 additions, measured 2026-08-13 on a quiet box (same run:
-  * minhash_lsh 2.6 s 1x / 27.8 s 10x — the earlier 70-90 s 10x numbers
-  * carried background load; the SHAPE matched):
-  * {{{
-  *   lm_xent        1x rows=5,000  1.3 s   10x rows=50,000  4.6 s
-  *   cluster_retain 1x rows=3     3.1 s   10x rows=4      35.7 s
-  *   funnel         1x rows=3     0.5 s   10x rows=3       1.8 s
-  * }}}
-  * Reading: lm_xent is 3.5x cost for 10x input — the observed-bigram model
-  * is CONSTANT across factors (replicas add occurrences, not types), so
-  * cost tracks the corpus scan, exactly the q101 scale claim.
-  *
-  * Late-round-9 additions, measured 2026-08-13 on the post-reboot box
-  * (absolute numbers ~2x the quiet-box band that day — e.g. ngram_jaccard
-  * 10x measured 338 s vs its earlier 111-180 s — compare SHAPES):
-  * {{{
-  *   dsir_weights   1x rows=20      1.3 s   10x rows=20       4.3 s
-  *   edit_blocked   1x rows=256     0.5 s   10x rows=248,030  3.5 s
-  *   length_ks      1x rows=20      0.8 s   10x rows=20       1.5 s
-  * }}}
-  * Reading: dsir_weights is 3.3x for 10x input — BOTH bigram models are
-  * constant across factors (the lm_xent argument twice over), so cost is
-  * the tokenize + doc-keyed aggregates, the q151 claim. length_ks is
-  * ~flat: replicas add no new lengths and no new sources, so the
-  * distinct-value grid (and its windows) never grows — only the first
-  * count pass does. edit_blocked returns 968x MORE TRUE PAIRS (every
-  * replica group lands in one block; pairs within maxBlock-sized blocks
-  * are genuine dist-0 duplicates) for 7x cost — per-block work is capped
-  * at maxBlock^2 fixed-length comparisons, and blocks the replication
-  * pushes past maxBlock DROP (template families belong to the exact /
-  * MinHash passes), which is the documented trade. funnel is
-  * 3.6x for 10x users — frontier joins stay user-keyed and shrink
-  * stage-over-stage. cluster_retain is 11.5x while returning a graph with
-  * ~1000x more true pairs (every replica 10-clique is 45 J=1.0 pairs):
-  * the cost is the shared candidate-graph build + connected components
-  * absorbing the clique blowup (the adversarial case by construction);
-  * the q116/q121 consumers themselves add two keyed aggs + two equi-joins
-  * on top (~8 s at 10x). Growth tracks input + answer size, not a
-  * wasted-candidate explosion.
-  * Round-10 additions, measured 2026-08-14 (run partly overlapped an sbt
-  * test JVM — ngram_jaccard 10x read 314 s vs its quiet 111–180 band, the
-  * documented concurrent-JVM inflation; compare SHAPES):
-  * {{{
-  *   nb_confusion   1x rows=100    1.7 s   10x rows=100    5.0 s
-  *   covariance     1x rows=2080   0.4 s   10x rows=2080   0.2 s
-  * }}}
-  * Reading: naive Bayes is ~3x cost for 10x input with CONSTANT output —
-  * replicas add token occurrences, never token TYPES, so the (class, token)
-  * model is constant across factors and cost tracks the tokenize +
-  * token-keyed joins (the lm_xent argument). Covariance is FLAT at 10x —
-  * the GramMatrixAgg buffer is O(d^2) per partition regardless of rows, so
-  * the whole job is one embarrassingly-parallel scan whose merge traffic
-  * (one 17 KB buffer per partition) does not grow with the corpus.
-  *
-  * Late-round-10 additions, measured 2026-08-14 on a quiet box:
-  * {{{
-  *   kruskal_wallis  1x rows=1     3.2 s   10x rows=1      1.8 s
-  *   scd2_apply      1x rows=5470  1.0 s   10x rows=54706  2.5 s
-  *   brand_lift      1x rows=176   3.2 s   10x rows=176   25.2 s
-  *   interevent_gaps 1x rows=5     1.4 s   10x rows=5      2.1 s
-  *   cum_uniques     1x rows=30    0.4 s   10x rows=30     1.1 s
-  *   kaplan_meier    1x rows=4     3.6 s   10x rows=4      2.1 s
-  *   auc_roc         1x rows=1     0.3 s   10x rows=1      0.4 s
-  *   gains_table     1x rows=10    1.2 s   10x rows=10     1.5 s
-  * }}}
-  * KM/AUC/gains are FLAT at 10x: per-user spans collapse to a constant
-  * duration grid (replicas add users, never durations) and the score
-  * grid is (distinct lengths) — the rank-family argument; cost is the
-  * first keyed aggregate, the windows never grow.
-  * Reading: the rank-statistic grid is FLAT across factors (replicas add
-  * counts at existing lengths, never new grid points — the length_ks
-  * argument for the whole rank family; the 10x run is faster only because
-  * the JVM is warm). scd2_apply is 2.5x cost for 10x rows in BOTH
-  * snapshots and 10x output — the linear outer-join contract. brand_lift
-  * is ~8x for 10x pair INSTANCES with constant pair TYPES and constant
-  * output (support shares are scale-invariant by construction): cost
-  * tracks the bounded per-basket pair expansion, the linear floor for
-  * co-occurrence counting. Gap census and cumulative uniques are ~flat:
-  * user-partitioned frames and a calendar-bounded grid never grow with
-  * replicas.
-  *
-  * q251-q264 batch, measured 2026-08-14 on a quiet box:
-  * {{{
-  *   item_pairs      1x rows=3,569  4.3 s   10x rows=1,195,189  6.7 s
-  *   event_paths     1x rows=125    1.8 s   10x rows=125        2.7 s
-  *   ewma_daily      1x rows=150    0.8 s   10x rows=150        1.2 s
-  *   equidepth       1x rows=8      1.0 s   10x rows=8          1.9 s
-  *   expectations    1x rows=3      0.3 s   10x rows=3          0.7 s
-  * }}}
-  * Reading: item_pairs returns 335x MORE true pairs (replica baskets
-  * repeat every pair, pushing support past the threshold) for 1.6x cost —
-  * the capped in-row expansion is answer-bound, never a basket self-join
-  * blowup. event_paths and ewma_daily are ~1.5x for 10x input with
-  * CONSTANT output (path types and the calendar grid don't grow with
-  * users); equidepth and the expectation suite are pure scan shapes
-  * (~2x for 10x rows, constant outputs) — the single-agg designs hold.
-  *
-  * Late-session additions (quiet box, 2026-08-14; 1x numbers are
-  * cold-JVM, 10x warm — compare shapes):
-  * {{{
-  *   holt_linear     1x rows=150  3.6 s   10x rows=150  1.9 s
-  *   weighted_resv   1x rows=100  1.1 s   10x rows=100  1.3 s
-  *   hill_tail       1x rows=20   0.4 s   10x rows=20   0.8 s
-  *   link_predict    1x rows=124  5.8 s   10x rows=124  9.4 s
-  *   kcore_peel      1x rows=24   8.5 s   10x rows=24   7.0 s
-  * }}}
-  * Holt/reservoir/Hill are FLAT — calendar grid and O(k) TopKAgg state
-  * never grow with rows. Link prediction is 1.6x for 10x input: the
-  * brand EDGE SET is identical across factors (replicas shift basket
-  * ids, support shares are scale-invariant), so only the first
-  * co-occurrence count pass scales. kcore_peel went flat once the
-  * initial symmetric edge set was checkpointed before the peel loop —
-  * round 1's degree filter and edge join had been recomputing the
-  * upstream co-occurrence twice (3.4x growth before, ≤1x after).
-  *
-  * Attribution / new-vs-returning (same quiet run, 2026-08-14):
-  * {{{
-  *   attribution     1x rows=9   4.1 s   10x rows=9   3.4 s
-  *   new_vs_return   1x rows=30  0.7 s   10x rows=30  1.0 s
-  * }}}
-  * Both FLAT-to-sublinear at 10x users: the touch expansion is
-  * user-keyed (per-conversion frames never grow — replicas add
-  * conversions, not touches per conversion), channel×model output is
-  * constant, and the DAU split is two keyed aggs over a constant day
-  * grid.
-  *
-  * Round-11 curves, measured 2026-08-14 on a quiet box (1x cold-JVM,
-  * 10x warm — compare shapes):
-  * {{{
-  *   bootstrap_ci  1x rows=5     8.1 s   10x rows=5     7.2 s
-  *   markov_stat   1x rows=5     5.2 s   10x rows=5     4.9 s
-  *   dp_noisy      1x rows=125   0.3 s   10x rows=125   0.6 s
-  *   er_match      1x rows=4755  0.7 s   10x rows=4755  1.2 s
-  *   mmr_rerank    1x rows=100   2.4 s   10x rows=100   3.8 s
-  * }}}
-  * Batch-2 round-11 curves (same quiet box, 2026-08-14):
-  * {{{
-  *   ransac_fit    1x rows=1      5.8 s   10x rows=1       4.0 s
-  *   simpson_audit 1x rows=12     0.8 s   10x rows=12      0.9 s
-  *   ppr_seeded    1x rows=31     4.5 s   10x rows=31      4.5 s
-  *   asof_nearest  1x rows=19863  0.3 s   10x rows=198630  0.6 s
-  * }}}
-  * Batch-3 (same quiet box):
-  * {{{
-  *   w1_drift        1x rows=190  4.6 s   10x rows=190  2.2 s
-  *   split_conformal 1x rows=1    1.4 s   10x rows=1    1.4 s
-  * }}}
-  * W1 is FLAT (faster warm at 10x): replicas add neither lengths nor
-  * sources, so the value grid, the pair join and the 190-row answer are
-  * constant — the length_ks argument extended to the transport metric.
-  * Conformal is flat: three narrow scans into 1-row aggregates.
-  * Experimentation pair (same run): cuped 1.8→0.5 s (one user-keyed agg
-  * + a 1-row moment aggregate — pure scan), aa_calibration 1.5→1.6 s
-  * for 10x users (the unit×20-split expansion combines map-side into
-  * 40 groups — the bootstrap-shape argument observed flat).
-  * Batch-5 (same run): seq_monitor 2.6→1.6 s (calendar-grid windows
-  * never grow), capture_recap 0.3→0.3 s, vocab_coverage 0.5→0.6 s
-  * (Zipf-bounded type table — replicas add occurrences, never types).
-  *
-  * Round-13 curves (quiet box, 2026-08-14 — the two r12 checklist
-  * stragglers, measured after the q316 shuffle-free rework):
-  * {{{
-  *   ct_langid     1x rows=25   2.4 s   10x rows=25   2.9 s
-  *   kish_ess      1x rows=5    0.2 s   10x rows=5    0.3 s
-  * }}}
-  * CT lang-ID is FLAT-to-sublinear at 10x docs: replicas add gram
-  * counts, never grams, so the mergeable profile state and the 1-row
-  * broadcast are constant and cost tracks the two text scans (the doc
-  * side is shuffle-free — in-row profile slice + in-row scoring).
-  * Kish ESS is one keyed (n, Σw, Σw²) aggregate — pure scan.
-  * {{{
-  *   sketch_quantile 1x rows=5   2.3 s   10x rows=5   2.1 s
-  * }}}
-  * The q317 rank sketch is FLAT at 10x events: per-(group, task) state
-  * is the k=1024 bottom-k buffer and the audit pass broadcasts the
-  * |groups|×5 estimate table, so both passes are pure scans whose
-  * fixed overhead still dominates at sf0.01×10 — event volume moves
-  * only the scan term.
-  * {{{
-  *   cross_run_dedup 1x rows=333  4.2 s   10x rows=3333  2.9 s
-  *   classifier_gate 1x rows=250  3.2 s   10x rows=2500  5.2 s
-  * }}}
-  * q318 is flat-to-sublinear (1x pays session warmup): signature scans
-  * grow linearly but every join stays (band, sig)-keyed. q319 grows
-  * ~1.6x at 10x docs — the three token scans and per-doc score rows are
-  * linear while the NB/LID/LM models stay vocab-/class-bounded.
-  *
-  * Round-14 curves (quiet box, 2026-08-15, sf0.1×10):
-  * {{{
-  *   kn_xent         1x rows=5000   4.3 s   10x rows=50000  5.7 s
-  *   kn_dsir         1x rows=20     1.7 s   10x rows=20     4.3 s
-  *   kn3_xent        1x rows=5000   6.9 s   10x rows=50000  11.0 s
-  *   dedup_pipeline  1x rows=5000   8.9 s   10x rows=50000  39.2 s
-  * }}}
-  * Round-15 curves (quiet box, 2026-08-15, sf0.1×10):
-  * {{{
-  *   mkn_xent        1x rows=5000   4.7 s   10x rows=50000  5.7 s
-  *   mink_prob       1x rows=5000   4.3 s   10x rows=50000  5.7 s
-  *   unigram_lm      1x rows=43     3.0 s   10x rows=43     2.0 s
-  *   unigram_fert    1x rows=20     5.6 s   10x rows=20     3.8 s
-  *   unigram_prune   1x rows=1      10.5 s  10x rows=1      4.7 s
-  *   line_dedup      1x rows=5000   1.1 s   10x rows=50000  2.4 s
-  *   unimax_mix      1x rows=20     0.6 s   10x rows=20     0.8 s
-  * }}}
-  * Modified-KN rides the kn_xent curve (1.2x at 10x: the TYPE-table
-  * model is constant; the count-of-counts shift under replication but
-  * stay a 1-row broadcast). unigram_lm is the flattest curve in the
-  * file by design — replicas scale word-type frequencies uniformly, so
-  * the seed model, every Viterbi DP, and the 43-piece answer are
-  * IDENTICAL across factors; only the word-type aggregate's scan grows.
-  * line_dedup is scan-linear (2.2x at 10x; replicas push every line
-  * over the minDocs threshold, so the 10x run drops more while the
-  * line-TYPE df table stays bounded).
-  *
-  * Round-16 curves (2026-08-15, sf0.1×10):
-  * {{{
-  *   doremi_weights  1x rows=100    9.0 s   10x rows=100    12.2 s
-  *   wordpiece_train 1x rows=10     3.9 s   10x rows=10      2.8 s
-  *   wordpiece_enc   1x rows=5000   3.3 s   10x rows=50000   4.7 s
-  *   para_minhash    1x rows=100    3.3 s   10x rows=0       3.6 s
-  *   dsir_resample   1x rows=100    4.9 s   10x rows=100     5.2 s
-  *   decontam        1x rows=4707   0.7 s   10x rows=46911   1.3 s
-  *   proto_band      1x rows=24     9.3 s   10x rows=24      7.2 s
-  *   intradoc_dedup  1x rows=5000   5.7 s   10x rows=50000   4.8 s
-  *   heldout_xent    1x rows=20     2.5 s   10x rows=20      6.1 s
-  * }}}
-  * doremi rides the excess_select dual-model floor (both LM TYPE tables
-  * constant across factors; the round ladder is |sources|-bounded and
-  * localCheckpointed — 1.35x at 10x). wordpiece_train is flat like
-  * bpe_train: replication scales every count uniformly, so the
-  * likelihood ratios shrink by 1/factor UNIFORMLY and the merge table is
-  * replication-invariant. para_minhash COLLAPSES at 10x by design: exact
-  * replicas push every line's df over minDocs, all text strips, and the
-  * pair stage sees empty docs (0 pairs, scan-bounded cost) — the
-  * composition absorbs the factor^2 raw-pair volume instead of paying
-  * it.
-  *
-  * The KN curves repeat the lm_xent/dsir_weights argument: replicas add
-  * occurrences, never bigram TYPES, so the whole KN model (history sums,
-  * continuation type counts, T, V) is constant across factors — 1.3x /
-  * 2.5x cost at 10x input is tokenize + doc-keyed aggregation. The
-  * pipeline's 4.4x at 10x is the minhash stage's own adversarial
-  * replica curve (every replica pair is a true J=1.0 pair; candidates
-  * grow ~factor² per original) — the exact stage then removes 90% of
-  * the corpus, so components + semantic run on a survivor set constant
-  * across factors, exactly the funnel design. MEASURED attribution
-  * (r15, same box, same run): pipeline 8.2→43.8 s vs minhash_lsh alone
-  * 6.1→28.4 s and exact_dedup 0.7→0.9 s — the pair-graph build is ~65%
-  * of the 10x total and carries the whole slope; the ~14 s remainder
-  * (semantic pairs + CC + stage joins) is the flat survivor-set part.
-  * See TextDedup.dedupPipeline's scaladoc for the envelope.
-  *
-  * Round-17 curves (2026-08-16, sf0.1×10, SMOKE_ONLY subset with the
-  * discarded warm pass — closes the r16 verdict's missing-curve finding
-  * for q365–q374 and prices the five r17 additions):
-  * {{{
-  *   char_coverage   1x rows=20     1.0 s   10x rows=20      1.8 s
-  *   bloom_census    1x rows=3      1.9 s   10x rows=3       2.5 s
-  *   pair_bleu       1x rows=256    0.6 s   10x rows=250600 12.4 s
-  *   scaling_fit     1x rows=4      5.7 s   10x rows=4      10.7 s
-  *   lang_kn_xent    1x rows=5      1.8 s   10x rows=5       6.5 s
-  *   jm_lambda_em    1x rows=3      2.4 s   10x rows=3       5.4 s
-  *   minkpp          1x rows=5000   2.2 s   10x rows=50000   7.3 s
-  *   t_closeness     1x rows=20     0.3 s   10x rows=20      0.7 s
-  *   lang_kn_mix     1x rows=15     3.4 s   10x rows=15     10.4 s
-  *   gopher_census   1x rows=5000   0.5 s   10x rows=50000   1.6 s
-  *   exact_substr_rm 1x rows=5000   0.3 s   10x rows=50000   0.7 s
-  *   lang_unimax     1x rows=5      3.8 s   10x rows=5      15.4 s
-  *   kn_quant        1x rows=3      3.7 s   10x rows=3       5.5 s
-  *   jl_recall       1x rows=100    0.9 s   10x rows=1000    4.9 s
-  *   gopher_quality  1x rows=5000   0.6 s   10x rows=50000   1.6 s
-  *   xent_ablation   1x rows=8      3.5 s   10x rows=8      15.8 s
-  *   cluster_census  1x rows=4      1.1 s   10x rows=5       3.9 s
-  *   self_bleu       1x rows=5000   0.3 s   10x rows=50000   0.8 s
-  *   substr_sweep    1x rows=3      2.8 s   10x rows=3      12.9 s
-  *   gopher_gate     1x rows=20     7.3 s   10x rows=20     22.2 s
-  * }}}
-  * (gopher_gate's absolutes were measured inside the r17 close-out's
-  * CONTENDED window — its isolated warmed anchor is 2.7 s at sf0.1 —
-  * read the 3.0x shape, which matches its two census constituents.)
-  * Reading: char_coverage/bloom_census/t_closeness/kn_quant are the
-  * grid-bounded family — their char-type / line-type / value grids are
-  * CONSTANT across replicas, so 10x input costs 1.3–1.9x (the scan).
-  * pair_bleu is output-bound like the other pair consumers: ~1000x more
-  * TRUE pairs (replica cliques) for 21x cost, with the minhash build
-  * priced outside the timer (the shared-cache shape its q367 consumer
-  * runs). The five KN-family curves (scaling_fit 1.9x, lang_kn_xent
-  * 3.6x, jm_lambda_em 2.3x, minkpp 3.3x, lang_kn_mix 3.1x) repeat the
-  * lm_xent argument — replicas add occurrences, never bigram types, so
-  * models/grids are constant and cost is tokenize + doc-keyed
-  * aggregation. gopher_census (3.2x, 10x rows out) and exact_substr_rm
-  * (10x rows for 2.3x) are doc-keyed scans; removal stays linear in
-  * duplicated mass inside the df cap. lang_unimax's 4.1x is the
-  * standalone scored-chain build twice-referenced (vals + keep) — the
-  * q378 consumer rides the session-shared lang_kn_scored cache, where
-  * the marginal cost is the grid waterfill. jl_recall scales BOTH query
-  * count (100/replica) and corpus: 100x work for 5.4x cost — the
-  * broadcast-scan floor. gopher_quality is a pure doc-keyed scan (10x
-  * rows out for 2.7x). xent_ablation's 4.5x is the STANDALONE shape
-  * (census + its own KN model build; the q381 consumer rides the shared
-  * kn caches — 2.9 s warmed isolated at sf0.1). cluster_census's 3.5x
-  * is the CC rounds over the replica-clique graph; the census itself is
-  * two keyed aggregates on the cluster map (component count constant,
-  * sizes shift 2,3,4 → 10k-cliques — visible in the 10x row count).
-  * self_bleu rides the gram TYPE tables (constant across replicas —
-  * only C shifts, uniformly) at 2.7x for 10x rows out; substr_sweep is
-  * three q300 window passes at 4.6x — replica cliques grow the df-capped
-  * pair volume inside each pass, the documented q300 adversarial case.
-  *
-  * Round-13 shelf curves (quiet box, 2026-08-14, sf0.001×10):
-  * {{{
-  *   fs_linkage      1x rows=752  3.9 s   10x rows=79920  2.4 s
-  *   fd_profile      1x rows=1    0.4 s   10x rows=1      0.3 s
-  *   ind_discovery   1x rows=1    0.2 s   10x rows=1      0.5 s
-  *   ips_eval        1x rows=1    0.8 s   10x rows=1      1.0 s
-  *   forecast_bt     1x rows=1    0.7 s   10x rows=1      1.7 s
-  * }}}
-  * fs_linkage's 10x is FASTER warm than the 1x cold run while emitting
-  * 100x the pairs — the pair space tracks Σ_b min(|b|,cap)² (blocks of
-  * 8 → 80 under the id-shifted replicas, still under the cap), and the
-  * u-stats are keyed scans. FD/IND/IPS are flat: their cell grids,
-  * distinct sets and (context, action) cells are data-bounded, so 10x
-  * rows only move the scan term. forecast_bt is scan-linear on the
-  * daily aggregate; the day-grid self-joins and metric reduce are
-  * calendar-constant.
-  * {{{
-  *   hits            1x rows=31   9.7 s   10x rows=31   4.7 s
-  *   join_size_est   1x rows=1    0.5 s   10x rows=1    0.6 s
-  *   holt_winters    1x rows=150  0.9 s   10x rows=150  0.8 s
-  * }}}
-  * HITS is flat (1x pays the 16 checkpointed half-steps' fixed
-  * overhead cold): replicas multiply edge weights, never the
-  * Zipf-bounded node/edge tables, so every round runs on the identical
-  * graph. join_size_est and holt_winters are flat-to-scan — key sets
-  * and the calendar day grid are data-bounded.
-  *
-  * RANSAC and Simpson are flat — broadcast 32-model consensus scan and
-  * two keyed aggregates respectively. PPR is EXACTLY flat: replicas add
-  * bigram occurrences, never token types, so the graph and its 8 rounds
-  * are constant (the q181 vocabulary argument with teleport). Nearest
-  * as-of returns 10x the rows for 2x the cost — two key-partitioned
-  * O(1)-state windows, the linear floor.
-  *
-  * Reading: bootstrap's n×B expansion combines map-side into a constant
-  * |groups|·B shuffle, so 10x input rides the scan (warm 10x beat the
-  * cold 1x). Markov's transition table is |types|²-bounded — the lead
-  * window is the whole cost. DP release is one keyed count. er_match
-  * returns the IDENTICAL 4755 pairs at 10x: replicas inflate every brand
-  * block tenfold and the cap keeps the same 100 smallest ids — the
-  * blocking-cap contract observed directly. MMR's greedy rounds are
-  * m²-bounded per query; only the broadcast-query relevance scan grows
-  * (1.6x for 10x corpus).
-  *
-  * Reading: exact dedup is sublinear (3.5x cost for 10x input). The
-  * near-dup pipelines return 1000x MORE TRUE PAIRS (every 10-clique is 45
-  * real J=1.0 pairs) for 12x / 30x cost — growth tracks input + answer
-  * size, the floor for pair-output dedup, not a wasted-candidate blowup.
-  * The production order at crawl scale follows directly: run exactDedup
-  * FIRST to collapse replica cliques, then near-dup on the survivors.
-  * Inverted-index retrieval (q83/q84: fixed query vocabulary, growing
-  * corpus) is ~2.5x cost for 10x corpus: the term-keyed equi-joins touch
-  * only postings for query terms, and the per-doc stats pass (dlen, N,
-  * avgdl) is an embarrassingly-parallel scan + 1-row aggregate — the
-  * growth an inverted index is supposed to have (index-scan bound, never
-  * corpus x terms). The cross-source overlap matrix is FLAT at 10x: exact
-  * replicas stay within their source, so they add zero new (group, gram)
-  * pairs and the map-side collect_set partials absorb them before the
-  * shuffle — group-keyed output is |groups|²-bounded at any corpus size. */
+  * `region` and `nation` are copied unchanged. Every other table is the
+  * union of `factor` copies: copy 0 is the original, and copy i shifts each
+  * key family by i × (the smallest power of ten above the family's max key).
+  * Keys stay distinct across copies, every foreign key of copy i points into
+  * copy i, and so each key join returns exactly `factor`× its 1× rows. Every
+  * document, vector, event and user gains factor-1 exact duplicates: the
+  * shape of crawl data, and the adversarial case for near-dup dedup. Tables
+  * are read through [[Graft.table]], so `events.ts` is written normalised.
+  * Prints the row count written for each table. */
 object ScaleSmoke {
+
+  /** Each key family as its (table, column) members. */
+  private val families: Seq[Seq[(String, String)]] = Seq(
+    Seq("customer" -> "c_custkey", "orders" -> "o_custkey"),
+    Seq("orders" -> "o_orderkey", "lineitem" -> "l_orderkey"),
+    Seq("part" -> "p_partkey", "lineitem" -> "l_partkey"),
+    Seq("supplier" -> "s_suppkey", "lineitem" -> "l_suppkey"),
+    Seq("documents" -> "doc_id"),
+    Seq("embeddings" -> "vec_id"),
+    Seq("events" -> "event_id"),
+    Seq("events" -> "user_id"))
+
+  private val copied = Seq("region", "nation")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(1).map(_.toInt).getOrElse(10)
+    require(args.length == 3, "usage: ScaleSmoke <sfDir> <factor> <outDir>")
     val spark = Graft.session("graft-scale-smoke")
-    val base = Graft.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("source"))
-    val big = (0 until factor)
-      .map(i => base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
+    spark.sparkContext.setLogLevel("WARN")
+    try write(spark, args(0), args(1).toInt, args(2))
+      .foreach { case (t, n) => println(s"$t rows=$n") }
+    finally spark.stop()
+  }
 
-    // SPARK_GRAFT_SMOKE_ONLY=kruskal,brand_lift runs a comma-separated
-    // subset of curves (prefix match) — fresh operators get measured on a
-    // quiet box without re-paying the whole suite.
-    val only: Seq[String] = sys.env.get("SPARK_GRAFT_SMOKE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    def time(name: String)(f: => Long): Unit = {
-      if (only.nonEmpty && !only.exists(p => name.trim.startsWith(p))) return
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"SMOKE $name%-28s rows=$rows%-9d ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      operators.CacheScope.drain()
-    }
+  /** Write the replica of `sfDir` to `outDir`; returns (table, rows written). */
+  def write(spark: SparkSession, sfDir: String, factor: Int,
+            outDir: String): Seq[(String, Long)] = {
+    require(factor >= 1, s"factor must be >= 1, got $factor")
+    val replicated = families.flatten.map(_._1).distinct
+    val tables = (copied ++ replicated).map(t => t -> Graft.table(spark, sfDir, t)).toMap
 
-    // Retrieval query terms are held CONSTANT across factors (the >= 6-char
-    // tokens of docs 0-2, the q83/q84 vocabulary) so the curve isolates
-    // corpus growth — the realistic shape: a fixed query workload over an
-    // ever-larger index.
-    val terms = base.where(col("doc_id") < 3)
-      .select(explode(split(col("text"), " ")).as("term"))
-      .where(length(col("term")) >= 6)
+    // (min, max) of every key column: one aggregate job per table
+    val bounds: Map[String, (Long, Long)] = families.flatten.groupBy(_._1).toSeq
+      .flatMap { case (t, members) =>
+        val cols = members.map(_._2)
+        val r = tables(t).select(cols.flatMap(c => Seq(min(c), max(c))): _*).head()
+        def at(j: Int) = if (r.isNullAt(j)) 0L else r.getAs[Number](j).longValue
+        cols.zipWithIndex.map { case (c, i) => c -> (at(2 * i), at(2 * i + 1)) }
+      }.toMap
+    val stride: Map[String, Long] = families.flatMap { fam =>
+      val cols = fam.map(_._2)
+      require(cols.forall(bounds(_)._1 >= 0),
+        s"key family ${cols.mkString("/")} holds a negative key; copies would collide")
+      val hi = cols.map(bounds(_)._2).max
+      val p = Iterator.iterate(BigInt(1))(_ * 10).find(_ > hi).get
+      require(p * factor <= Long.MaxValue,
+        s"key family ${cols.mkString("/")}: $factor copies overflow a 64-bit key")
+      cols.map(_ -> p.toLong)
+    }.toMap
 
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"ngram_jaccard  $label") {
-        operators.TextDedup.ngramJaccardPairs(df, "doc_id", "text",
-          n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2).count()
-      }
-      time(s"minhash_lsh    $label") {
-        operators.TextDedup.minhashNearDupPairs(df, "doc_id", "text",
-          threshold = 0.5).count()
-      }
-      time(s"exact_dedup    $label") {
-        operators.TextDedup.exactDedup(df, "doc_id", "text").count()
-      }
-      time(s"tfidf_topk     $label") {
-        operators.TextRank.tfidfTopK(df, "doc_id", "text", terms, "term", k = 15).count()
-      }
-      time(s"bm25_topk      $label") {
-        operators.TextRank.bm25TopK(df, "doc_id", "text", terms, "term", k = 15).count()
-      }
-      time(s"phrase_search  $label") {
-        operators.TextSearch.phraseSearch(df, "doc_id", "text",
-          Seq("slow", "hash", "batch")).count()
-      }
-      // replicas keep their source, so the group count is CONSTANT across
-      // factors — the curve shows the per-gram inverted lists growing with
-      // the corpus while the output stays |groups|² -bounded
-      time(s"source_overlap $label") {
-        operators.TextDedup.crossGroupOverlap(df, "source", "text", k = 5).count()
-      }
-      // exact replicas add occurrences but no new bigram TYPES: the model
-      // (observed-bigram table) stays CONSTANT across factors, so cost
-      // tracks the corpus scan + doc-keyed aggregates, never model growth
-      time(s"lm_xent         $label") {
-        operators.TextLm.bigramCrossEntropy(df, "doc_id", "text").count()
-      }
-      // the q116/q121 shape: candidate graph -> connected components ->
-      // histogram + keep-longest retention. Replica cliques are the
-      // adversarial case (every 10-clique is 45 true pairs), so this curve
-      // is dominated by the SHARED pair-graph build already measured above
-      // as minhash_lsh; the consumers add two keyed aggs + two equi-joins
-      time(s"cluster_retain  $label") {
-        val clusters = operators.TextDedup.connectedComponents(
-          operators.TextDedup.minhashNearDupPairs(df, "doc_id", "text",
-            threshold = 0.5))
-        val members = df.select(col("doc_id"),
-            length(col("text")).cast("bigint").as("n_chars"))
-          .join(clusters, Seq("doc_id"))
-        val best = members.groupBy(col("cluster_id"))
-          .agg(max(struct(col("n_chars"), (-col("doc_id")).as("nid"))).as("m"))
-          .select(col("cluster_id"), (-col("m.nid")).as("keep_id"))
-        members.join(best, Seq("cluster_id"))
-          .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
-          .groupBy(col("sz")).count().count()
-      }
-      // replicas add occurrences, not bigram types: BOTH DSIR models stay
-      // constant across factors (the q151 scale claim — cost tracks the
-      // tokenize + doc-keyed aggregates, never model growth)
-      time(s"dsir_weights    $label") {
-        operators.TextLm.importanceWeights(
-          df.withColumn("lang", when(col("doc_id") % 2 === 0, "en").otherwise("de")),
-          "doc_id", "text", "source", col("lang") === "en").count()
-      }
-      // exact replicas share their original's prefix block: every replica
-      // k-clique lands in one block, the adversarial case for blocked ED —
-      // the maxBlock cap must absorb it (oversized blocks DROP, so cost
-      // stays bounded while the answer shrinks; that trade is the point)
-      time(s"edit_blocked    $label") {
-        operators.TextDedup.blockedEditDistance(df, "doc_id", "text",
-          blockChars = 16, cmpChars = 64, maxDist = 20, maxBlock = 50).count()
-      }
-      // the KS grid is (distinct n_chars) x |sources| — replicas add zero
-      // new lengths and zero new sources, so the grid (and the windows
-      // over it) are CONSTANT across factors; only the first count scales
-      time(s"length_ks       $label") {
-        operators.CorpusStats.ksDrift(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "source", "n_chars").count()
-      }
-    }
-
-    // Round-10 curves. NB: replicas add token OCCURRENCES, never token
-    // TYPES — the (class, token) model table is CONSTANT across factors
-    // (the lm_xent argument), so cost tracks tokenize + token-keyed joins.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"nb_confusion    $label") {
-        operators.MlOps.naiveBayesConfusion(df, "doc_id", "text", "source").count()
-      }
-    }
-    // Covariance: the Aggregator's O(d^2) buffer is constant across factors
-    // by construction — the curve must be a pure linear scan (one buffer per
-    // partition shuffled regardless of rows).
-    val emb = Graft.table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val embBig = (0 until factor)
-      .map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", emb), (s"${factor}x", embBig))) {
-      time(s"covariance      $label") {
-        operators.MlOps.embeddingCovariance(edf, "embedding", 64).count()
-      }
-    }
-
-    // Funnel curve runs on the EVENTS table (user journeys): replicas are
-    // id-shifted user populations, so frontiers grow linearly with factor
-    // while per-stage joins stay user-keyed — the shrinking-frontier shape
-    val ev = Graft.table(spark, sfDir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"))
-    val evBig = (0 until factor)
-      .map(i => ev.withColumn("user_id", col("user_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", ev), (s"${factor}x", evBig))) {
-      time(s"funnel          $label") {
-        operators.Temporal.funnelSteps(edf, "user_id", "ts", "event_type",
-          Seq("view", "click", "purchase"), stepWithinSec = 86400).count()
-      }
-    }
-
-    // Late-round-10 curves.
-    // Rank statistics: the value GRID is (distinct lengths) — replicas add
-    // counts at existing grid points, never new lengths, so the grid (and
-    // every window over it) is CONSTANT across factors; only the first
-    // count pass scales (the length_ks argument, now for the rank family).
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"kruskal_wallis  $label") {
-        operators.Inference.kruskalWallis(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "source", "n_chars").count()
-      }
-      // SCD2 apply: linear in both snapshots by construction — one
-      // key-shuffled outer join + two projections, no history sort
-      time(s"scd2_apply      $label") {
-        val next = df.where(pmod(col("doc_id"), lit(17)) =!= 0)
-          .withColumn("text", when(pmod(col("doc_id"), lit(10)) === 0,
-            concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        operators.Relational.scd2Apply(df, next, "doc_id",
-          Seq("text", "source"), 1L, 2L).count()
-      }
-    }
-    // Association: replicas shift the BASKET id, so pair TYPES (brand
-    // pairs) are constant while pair instances scale linearly — support
-    // SHARES are invariant, the output table is constant, and cost tracks
-    // the bounded per-basket pair expansion.
-    val li = Graft.table(spark, sfDir, "lineitem")
-      .join(Graft.table(spark, sfDir, "part"),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey"), col("p_brand"))
-    val liBig = (0 until factor)
-      .map(i => li.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, ldf) <- Seq(("1x", li), (s"${factor}x", liBig))) {
-      time(s"brand_lift      $label") {
-        operators.Graphs.cooccurrenceLift(ldf, "l_orderkey", "p_brand",
-          11L, 500L).count()
-      }
-    }
-    // Per-user cadence: replicas are new user populations — the lag
-    // windows stay user-partitioned (frames never grow), the gap-bucket
-    // output is constant, cost is the one user-keyed sort-shuffle.
-    val ev2 = Graft.table(spark, sfDir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val ev2Big = (0 until factor)
-      .map(i => ev2.withColumn("user_id", col("user_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", ev2), (s"${factor}x", ev2Big))) {
-      time(s"interevent_gaps $label") {
-        operators.Temporal.interEventGaps(edf, "user_id", "ts", "event_id").count()
-      }
-      // cumulative uniques: per-user min is one keyed agg; the grid
-      // cumulative runs over the CALENDAR (constant across factors)
-      time(s"cum_uniques     $label") {
-        operators.Temporal.cumulativeUniques(edf, "user_id", "ts").count()
-      }
-      // KM: per-user spans (one keyed agg) collapse onto the DURATION
-      // grid — replicas add users, never durations, so the grid windows
-      // and the curve length are constant across factors
-      time(s"kaplan_meier    $label") {
-        operators.Survival.kaplanMeier(edf, "user_id", "ts").count()
-      }
-    }
-    // Eval curves: the score GRID is (distinct lengths) — constant across
-    // factors (the kruskal argument): AUC cost is one grid aggregate +
-    // grid window regardless of row count; gains bins likewise.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"auc_roc         $label") {
-        operators.ModelEval.aucRoc(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "n_chars", col("doc_id") % 2 === 0).count()
-      }
-      time(s"gains_table     $label") {
-        operators.ModelEval.gainsTable(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "n_chars", col("doc_id") % 2 === 0).count()
-      }
-    }
-    // q251-q264 curves.
-    // Co-occurrence: replicas shift BASKET ids (order keys), so pair TYPES
-    // are constant while instances scale — the brand_lift argument at part
-    // granularity, with the basket cap bounding in-row expansion.
-    val li2 = Graft.table(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-    val li2Big = (0 until factor)
-      .map(i => li2.withColumn("l_orderkey",
-        col("l_orderkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, ldf) <- Seq(("1x", li2), (s"${factor}x", li2Big))) {
-      time(s"item_pairs      $label") {
-        operators.Affinity.itemPairs(ldf, "l_orderkey", "l_partkey",
-          cap = 12, minSupport = 2).count()
-      }
-    }
-    // Event paths: replicas are new USER populations — per-user TopKAgg
-    // state is O(cap) per map task, path TYPES are constant, so cost is
-    // the one user-keyed shuffle and output never grows.
-    for ((label, edf) <- Seq(("1x", ev2), (s"${factor}x", ev2Big))) {
-      time(s"event_paths     $label") {
-        operators.Affinity.eventPaths(
-          edf.withColumn("event_type",
-            concat(lit("t"), pmod(col("event_id"), lit(5)))),
-          "user_id", "ts", "event_id", "event_type", cap = 20).count()
-      }
-      // EWMA: the fold runs over the CALENDAR-bounded day series per key
-      // (constant across factors); only the daily aggregate pass scales.
-      time(s"ewma_daily      $label") {
-        operators.Temporal.ewmaDaily(
-          edf.withColumn("event_type",
-              concat(lit("t"), pmod(col("event_id"), lit(5))))
-            .withColumn("value", (col("event_id") % 100).cast("double")),
-          "event_type", "ts", "value", alpha = 0.3).count()
-      }
-    }
-    // Equi-depth + expectation suite: pure scan shapes — a 1-row
-    // percentile aggregate (edges) + one conditional-sum agg; both must
-    // track the scan linearly with constant-size outputs.
-    // Holt/reservoir/Hill: the same constant-grid arguments — Holt folds
-    // the calendar-bounded day series (state two doubles per key);
-    // the reservoir and Hill keep O(k) TopKAgg state per (group, task)
-    // no matter how many rows a group gains.
-    for ((label, edf) <- Seq(("1x", ev2), (s"${factor}x", ev2Big))) {
-      time(s"holt_linear     $label") {
-        operators.Temporal.holtLinear(
-          edf.withColumn("event_type",
-              concat(lit("t"), pmod(col("event_id"), lit(5))))
-            .withColumn("value", (col("event_id") % 100).cast("double")),
-          "event_type", "ts", "value", alpha = 0.5, beta = 0.3).count()
-      }
-    }
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"weighted_resv   $label") {
-        operators.Scale.weightedReservoir(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "source", "doc_id", col("n_chars"), k = 5).count()
-      }
-      time(s"hill_tail       $label") {
-        operators.Stats.hillTailIndex(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "source", "n_chars", "doc_id", k = 50).count()
-      }
-    }
-    // Link prediction / k-core on the brand graph: replicas shift basket
-    // ids, so the EDGE SET (brand pairs above the rational support) is
-    // IDENTICAL across factors — both curves must be flat after the
-    // first co-occurrence count pass.
-    for ((label, ldf) <- Seq(("1x", li2), (s"${factor}x", li2Big))) {
-      def brandEdges = operators.Graphs.cooccurrenceLift(
-        ldf.join(Graft.table(spark, sfDir, "part"),
-            col("l_partkey") === col("p_partkey"))
-          .select(col("l_orderkey"), col("p_brand")),
-        "l_orderkey", "p_brand", 11L, 500L)
-        .select(col("item_a"), col("item_b"))
-      time(s"link_predict    $label") {
-        operators.Graphs.linkPrediction(brandEdges, "item_a", "item_b",
-          100).count()
-      }
-      time(s"kcore_peel      $label") {
-        operators.Graphs.kCorePeel(brandEdges, "item_a", "item_b",
-          3, 6).count()
-      }
-    }
-    // Attribution / new-vs-returning: replicas are new USER populations,
-    // so conversions and touches scale linearly while per-conversion
-    // frames and the day grid stay constant — both must track the one
-    // user-keyed shuffle.
-    val ev3 = Graft.table(spark, sfDir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val ev3Big = (0 until factor)
-      .map(i => ev3.withColumn("user_id", col("user_id") + lit(i * 10000000L))
-        .withColumn("event_id", col("event_id") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", ev3), (s"${factor}x", ev3Big))) {
-      time(s"attribution     $label") {
-        operators.Temporal.attribution(edf, "user_id", "ts", "event_id",
-          "event_type",
-          concat(lit("ch"), pmod(col("event_id"), lit(3))),
-          "purchase", Seq("view", "click"), lookbackSec = 7L * 86400).count()
-      }
-      time(s"new_vs_return   $label") {
-        operators.Temporal.newVsReturning(edf, "user_id", "ts").count()
-      }
-    }
-    val ord = Graft.table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-    val ordBig = (0 until factor)
-      .map(i => ord.withColumn("o_orderkey",
-        col("o_orderkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, odf) <- Seq(("1x", ord), (s"${factor}x", ordBig))) {
-      time(s"equidepth       $label") {
-        operators.Features.equidepthProfile(
-          odf.select("o_totalprice"), "o_totalprice", 8).count()
-      }
-      time(s"expectations    $label") {
-        operators.Expectations.evaluate(odf, Seq(
-          operators.Expectations.Completeness("o_orderkey", 1.0),
-          operators.Expectations.Bounds("o_totalprice", 0.0, 1e6, 0.999),
-          operators.Expectations.Membership("o_orderstatus",
-            Seq("O", "F", "P"), 1.0))).count()
-      }
-    }
-    // Round-11 curves.
-    // Bootstrap: replicas are new order ids with the SAME priorities —
-    // the replicate grid is constant (B rows) and the per-(group,
-    // replicate) sums combine map-side, so the shuffle is |groups|·B rows
-    // at any factor; cost must track the n×B scan linearly.
-    // Markov: replicas are new USER populations over the same event
-    // types — the transition table is |types|²-bounded (constant), so
-    // cost is the one per-user lead-window pass.
-    val ord2 = Graft.table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    val ord2Big = (0 until factor)
-      .map(i => ord2.withColumn("o_orderkey",
-        col("o_orderkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, odf) <- Seq(("1x", ord2), (s"${factor}x", ord2Big))) {
-      time(s"bootstrap_ci    $label") {
-        operators.Inference.bootstrapCi(odf, "o_orderpriority",
-          "o_orderkey", "o_totalprice", b = 32).count()
-      }
-    }
-    for ((label, edf) <- Seq(("1x", ev3), (s"${factor}x", ev3Big))) {
-      time(s"markov_stat     $label") {
-        operators.Temporal.markovStationary(edf, "user_id", "ts",
-          "event_type", "event_id", iters = 12).count()
-      }
-    }
-    // DP release: replicas multiply per-group counts, never groups — one
-    // keyed count + per-ROW closed-form noise, so the curve is the scan.
-    val cust = Graft.table(spark, sfDir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
-    val custBig = (0 until factor)
-      .map(i => cust.withColumn("c_custkey",
-        col("c_custkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, cdf) <- Seq(("1x", cust), (s"${factor}x", custBig))) {
-      time(s"dp_noisy        $label") {
-        operators.MlOps.dpNoisyCounts(cdf,
-          Seq("c_mktsegment", "c_nationkey"), epsilon = 0.5).count()
-      }
-    }
-    // ER: replicas land in their original's brand block, pushing block
-    // sizes ×factor — the ADVERSARIAL case the cap exists for: capped
-    // blocks keep their `cap` smallest ids, so the pair expansion (and
-    // the answer) stays CONSTANT while only the rank-window pass scales.
-    val prt = Graft.table(spark, sfDir, "part")
-      .select(col("p_partkey"), col("p_name"), col("p_brand"))
-    val prtBig = (0 until factor)
-      .map(i => prt.withColumn("p_partkey",
-        col("p_partkey") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, pdf) <- Seq(("1x", prt), (s"${factor}x", prtBig))) {
-      time(s"er_match        $label") {
-        operators.EntityRes.blockedNameMatch(pdf, "p_partkey", "p_name",
-          Seq("p_brand"), cap = 100, threshold = 0.88).count()
-      }
-    }
-    // RANSAC: seed selection is O(nModels) TopKAgg state per task and
-    // the inlier pass scans against the broadcast 32-model table — the
-    // whole fit must track the scan with a constant-size answer.
-    // Simpson: two keyed aggregates — pure scan shape.
-    for ((label, odf) <- Seq(("1x", ord2), (s"${factor}x", ord2Big))) {
-      time(s"ransac_fit      $label") {
-        operators.Robust.ransacLine(odf, "o_orderkey",
-          pmod(col("o_orderkey"), lit(1000L)),
-          col("o_totalprice"), nModels = 32, tol = 10000.0).count()
-      }
-      time(s"simpson_audit   $label") {
-        operators.Stats.simpsonAudit(
-          odf.withColumn("g", pmod(col("o_orderkey"), lit(12L))),
-          "g", "o_orderkey", "o_totalprice").count()
-      }
-    }
-    // PPR: the bigram graph is vocab-bounded (replicas add occurrences,
-    // never token types), so the 8 rounds are constant — only the bigram
-    // count pass scales. Nearest as-of: two key-partitioned windows.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"ppr_seeded      $label") {
-        val toks = df.select(split(col("text"), " ").as("t"))
-          .where(size(col("t")) >= 2)
-        val bigrams = toks
-          .select(posexplode(col("t")).as(Seq("__i", "__a")), col("t"))
-          .where(col("__i") < size(col("t")) - 1)
-          .select(col("__a").as("src"),
-            col("t").getItem(col("__i") + 1).as("dst"))
-          .where(col("src") =!= "" && col("dst") =!= "")
-          .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        val seeds = df.where(col("doc_id") % 10000000L === 0)
-          .select(explode(split(col("text"), " ")).as("node"))
-          .where(col("node") =!= "")
-        operators.Graphs.personalizedPageRank(bigrams, "src", "dst", "w",
-          seeds, iters = 8).count()
-      }
-    }
-    for ((label, edf) <- Seq(("1x", ev3), (s"${factor}x", ev3Big))) {
-      time(s"asof_nearest    $label") {
-        operators.Temporal.asofNearest(
-          edf.where(col("event_type") === "click")
-            .select(col("event_id"), col("user_id"), col("ts")),
-          edf.where(col("event_type") === "purchase")
-            .select(col("user_id"), col("ts")),
-          "user_id", "ts", Seq("ts")).count()
-      }
-    }
-    // W1 drift: the grid is (distinct n_chars) × |sources| — replicas
-    // add neither lengths nor sources, so the grid, the pair join and
-    // the output are CONSTANT; only the first count pass scales (the
-    // length_ks argument for the whole drift family). Conformal: three
-    // narrow scans ending in 1-row aggregates + one calibration-split
-    // quantile.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"w1_drift        $label") {
-        operators.CorpusStats.wassersteinDrift(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "source", "n_chars").count()
-      }
-      time(s"split_conformal $label") {
-        operators.ModelEval.splitConformal(
-          df.withColumn("n_chars", length(col("text")).cast("bigint")),
-          "doc_id", size(split(col("text"), " ")), col("n_chars")).count()
-      }
-    }
-    // CUPED is one 1-row moment aggregate over per-user sums; AA
-    // calibration is the q282 bootstrap shape (unit×splits in-row
-    // expansion, map-side combined into |splits|×2 groups) — both must
-    // track the user-keyed scan with constant outputs.
-    val evv = Graft.table(spark, sfDir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"), col("value"),
-        col("event_id"))
-    val evvBig = (0 until factor)
-      .map(i => evv.withColumn("user_id",
-        col("user_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", evv), (s"${factor}x", evvBig))) {
-      time(s"cuped           $label") {
-        val z = lit(0).cast(org.apache.spark.sql.types.DecimalType(12, 2))
-        val pu = edf
-          .groupBy(col("user_id"))
-          .agg(sum(when(dayofmonth(col("ts")) <= 15,
-              col("value").cast(
-                org.apache.spark.sql.types.DecimalType(12, 2)))
-            .otherwise(z)).cast("double").as("pre"),
-            sum(when(dayofmonth(col("ts")) >= 16,
-              col("value").cast(
-                org.apache.spark.sql.types.DecimalType(12, 2)))
-            .otherwise(z)).cast("double").as("post"))
-        operators.Stats.cuped(pu, "pre", "post").count()
-      }
-      time(s"aa_calibration  $label") {
-        val pu = edf.groupBy(col("user_id"))
-          .agg((sum(when(col("event_type") === "purchase", 1L)
-            .otherwise(0L)) > 0).as("conv"))
-        operators.Stats.aaCalibration(pu, "user_id", col("conv"),
-          nSplits = 20, zCrit = 1.959964).count()
-      }
-      // Jackknife: |days| replicate rows over exact block sums — the
-      // leave-one-out grid is calendar-bounded, cost is the scan.
-      time(s"jackknife       $label") {
-        operators.Inference.jackknifeRatio(edf,
-          datediff(col("ts").cast("date"),
-            lit("1970-01-01").cast("date")).cast("bigint"),
-          when(col("event_type") === "purchase", col("value"))
-            .otherwise(lit(0.0)), lit(1L)).count()
-      }
-      // Stratified CUPED: same user-keyed moment scan, |strata| output
-      // rows — the grouped aggregate must track cuped's curve exactly.
-      time(s"cuped_strat     $label") {
-        val z = lit(0).cast(org.apache.spark.sql.types.DecimalType(12, 2))
-        val pu = edf
-          .groupBy(col("user_id"))
-          .agg(sum(when(dayofmonth(col("ts")) <= 15,
-              col("value").cast(
-                org.apache.spark.sql.types.DecimalType(12, 2)))
-            .otherwise(z)).cast("double").as("pre"),
-            sum(when(dayofmonth(col("ts")) >= 16,
-              col("value").cast(
-                org.apache.spark.sql.types.DecimalType(12, 2)))
-            .otherwise(z)).cast("double").as("post"))
-          .select(pmod(col("user_id"), lit(4)).as("cohort"),
-            col("pre"), col("post"))
-        operators.Stats.cupedStratified(pu, "cohort", "pre", "post").count()
-      }
-    }
-    // Sequential monitor: cumulative windows over the CALENDAR grid
-    // (constant across factors); only the (user, day) aggregate scales.
-    // Capture-recapture: one multi-distinct aggregate — the documented
-    // Expand pricing (q205), with the production path keeping only the
-    // capture counts.
-    for ((label, edf) <- Seq(("1x", ev3), (s"${factor}x", ev3Big))) {
-      time(s"seq_monitor     $label") {
-        operators.Stats.sequentialMonitor(edf, "user_id", "ts",
-          col("event_type") === "purchase", zCrit = 1.959964).count()
-      }
-      time(s"capture_recap   $label") {
-        operators.Sketches.captureRecapture(edf, "user_id",
-          rate = 4).count()
-      }
-      // SPRT shares seq_monitor's (user, day) grain; the LLR fold is
-      // per-day arithmetic over the constant calendar grid.
-      time(s"sprt            $label") {
-        operators.Stats.sprt(edf, "user_id", "ts",
-          col("event_type") === "purchase", p0 = 0.10, p1 = 0.15,
-          alpha = 0.05, beta = 0.2).count()
-      }
-      // CMH: 7 strata of exact counts; EB shrink: one entity-keyed
-      // aggregate + a broadcast 1-row prior — both scan-bound.
-      time(s"cmh_test        $label") {
-        val grain = edf.groupBy(col("user_id"),
-            pmod(datediff(col("ts").cast("date"),
-              lit("1970-01-01").cast("date")).cast("bigint"), lit(7L))
-              .as("__dow"))
-          .agg(max(when(col("event_type") === "purchase", 1L)
-            .otherwise(0L)).as("__conv"))
-        operators.Inference.cmhTest(grain, col("__dow"),
-          pmod(col("user_id"), lit(2)) === 0, col("__conv") === 1L).count()
-      }
-      time(s"eb_shrink       $label") {
-        operators.Inference.ebBetaShrink(edf, "user_id", lit(1L),
-          when(col("event_type") === "purchase", 1L).otherwise(0L)).count()
-      }
-    }
-    // RFM / cohort LTV: user-keyed aggregates + broadcast cutoffs or a
-    // calendar-bounded week grid — scan-bound, output tracks users.
-    // SRM: one exact-count aggregate over distinct units.
-    for ((label, edf) <- Seq(("1x", evv), (s"${factor}x", evvBig))) {
-      time(s"rfm_segments    $label") {
-        operators.Temporal.rfmSegments(edf, "user_id", "ts",
-          when(col("event_type") === "purchase", col("value"))
-            .otherwise(lit(0.0))).count()
-      }
-      time(s"cohort_ltv      $label") {
-        operators.Temporal.cohortLtv(edf, "user_id", "ts",
-          when(col("event_type") === "purchase", col("value"))
-            .otherwise(lit(0.0))).count()
-      }
-      time(s"srm_check       $label") {
-        operators.Stats.srmCheck(edf.select(col("user_id")).distinct(),
-          pmod(col("user_id"), lit(2))).count()
-      }
-      // Markov attribution: the chain is a |channels|+3 grid regardless
-      // of users — cost is the journey windows + a constant number of
-      // in-row matvec steps on ≤ |channels|+1 scenario rows.
-      time(s"markov_attrib   $label") {
-        operators.Temporal.markovRemovalAttribution(edf, "user_id", "ts",
-          "event_type", "event_id", "purchase", iters = 12).count()
-      }
-    }
-    // q311 incremental-agg maintenance is three keyed aggregates + two
-    // tiny joins over the SAME scan shapes as q76/q05 — bounded by
-    // construction, no separate replication curve needed.
-    // DiD: four broadcast cells + a calendar-bounded slope grid — the
-    // (user, day) grain aggregate is the whole cost.
-    for ((label, edf) <- Seq(("1x", evv), (s"${factor}x", evvBig))) {
-      time(s"diff_in_diff    $label") {
-        val grain = edf.groupBy(col("user_id"),
-            dayofmonth(col("ts")).cast("bigint").as("__day"))
-          .agg(sum(col("value")
-              .cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-            .cast("double").as("__val"))
-        operators.Stats.diffInDiff(grain,
-          pmod(col("user_id"), lit(2)) === 0,
-          col("__day") >= 16, col("__day"), col("__val")).count()
-      }
-    }
-    // Vocab coverage: the type table is Zipf-bounded — replicas add
-    // occurrences, never types, so the panel is constant and cost is
-    // the tokenize + (group, token) count.
-    // Heaps curve: same tokenize; the grid is a CONSTANT `buckets` rows
-    // and the (token → min bucket) aggregate is type-bounded.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"vocab_coverage  $label") {
-        operators.CorpusStats.vocabCoverage(df, "source", "text").count()
-      }
-      time(s"heaps_law       $label") {
-        operators.CorpusStats.heapsLaw(df, "doc_id", "text",
-          buckets = 50).count()
-      }
-    }
-    // Exact-substring runs: the replica construction multiplies every
-    // cross-doc window fingerprint's df by the factor, so the honest
-    // knob is raising maxDf with the factor (production tunes it to the
-    // replication floor); growth then tracks the window inventory plus
-    // true pair output (every replica clique is a real run set) — the
-    // same answer-bound floor as the other pair-output dedups.
-    for ((label, df, cap) <- Seq(("1x", base, 10), (s"${factor}x", big, 10 * factor))) {
-      time(s"exact_substring $label") {
-        operators.TextDedup.exactSubstringRuns(df, "doc_id", "text",
-          l = 20, maxDf = cap).count()
-      }
-    }
-    // MMR: the query batch and candidate count are FIXED (20 queries ×
-    // m=20), so the m²-pair greedy rounds are constant across factors —
-    // only the broadcast-query relevance scan grows with the corpus.
-    val emb2 = Graft.table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val emb2Big = (0 until factor)
-      .map(i => emb2.withColumn("vec_id",
-        col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", emb2), (s"${factor}x", emb2Big))) {
-      time(s"mmr_rerank      $label") {
-        operators.Similarity.mmrRerank(edf, "vec_id", "embedding",
-          col("vec_id") < 20, m = 20, k = 5).count()
-      }
-    }
-    // aHash media dedup: one mapPartitions pass mints 4 band sigs per
-    // payload; candidates are band-bucket collisions (replica cliques
-    // are real pairs — the same answer-bound floor as q31/q75/q300).
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"media_ahash     $label") {
-        operators.Multimodal.ahashNearDup(
-          operators.Multimodal.fromText(spark, df, "doc_id", "text",
-            "image"), maxHamming = 12).count()
-      }
-    }
-    // MMD drift: the state is the (|labels| x dim) mean table — scan-
-    // bound, pair stage constant. Labels ride along in emb2Big replicas.
-    val emb3 = Graft.table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"), col("label"))
-    val emb3Big = (0 until factor)
-      .map(i => emb3.withColumn("vec_id",
-        col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", emb3), (s"${factor}x", emb3Big))) {
-      time(s"embedding_mmd   $label") {
-        operators.Similarity.linearMmdDrift(edf, "label",
-          "embedding").count()
-      }
-    }
-    // CT lang-ID: doc side is shuffle-free (native per-doc profile +
-    // in-row scoring against the 1-row broadcast of lang profiles);
-    // lang profiles are a mergeable gram-map aggregate whose state is
-    // the Zipf-bounded trigram vocabulary — replicas add counts, never
-    // grams, so growth tracks the two text scans.
-    val docL = Graft.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-    val docLBig = (0 until factor)
-      .map(i => docL.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, df) <- Seq(("1x", docL), (s"${factor}x", docLBig))) {
-      time(s"ct_langid       $label") {
-        operators.MlOps.ctLangIdConfusion(df, "doc_id", "text", "lang",
-          k = 20).count()
-      }
-      // Kish ESS: one exact keyed aggregate (n, Σw, Σw²) per group —
-      // pure scan, output bounded by |groups|.
-      time(s"kish_ess        $label") {
-        operators.Scale.kishEss(df, "lang", col("n_chars")).count()
-      }
-    }
-    // q317 rank-sketch quantile: the bottom-k sample rides the partial-agg
-    // tree (k-bounded buffer per (group, task)) and the rank audit is one
-    // broadcast-joined conditional-count scan — two pure scans, constant
-    // output, so growth must track input size with no shuffle inflation.
-    // Replicas shift event_id so sample keys stay row-unique.
-    val evQ = Graft.table(spark, sfDir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    val evQBig = (0 until factor)
-      .map(i => evQ.withColumn("event_id",
-        col("event_id") + lit(i * 100000000L)))
-      .reduce(_ unionByName _)
-    for ((label, df) <- Seq(("1x", evQ), (s"${factor}x", evQBig))) {
-      time(s"sketch_quantile $label") {
-        operators.Sketches.rankSketchQuantiles(df, "event_type",
-          "event_id", "value", k = 1024).count()
-      }
-    }
-    // q318 cross-run dedup: signature generation is one native MinHash
-    // pass; the store probe and bucket minima are (band, sig)-keyed —
-    // replicas multiply rows per bucket but never widen any join beyond
-    // its key, so growth must track the two signature scans.
-    // q319 classifier gate: three bounded-model stages (vocab/class/|langs|
-    // broadcasts) composed by id-keyed joins — replicas grow the token
-    // scans and the per-doc score rows linearly, the models stay fixed.
-    val docG = Graft.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    val docGBig = (0 until factor)
-      .map(i => docG.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, df) <- Seq(("1x", docG), (s"${factor}x", docGBig))) {
-      time(s"cross_run_dedup $label") {
-        operators.TextDedup.crossRunVerdicts(
-          operators.TextDedup.bandSignatureRows(
-            df.where(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text"),
-          df.where(pmod(col("doc_id"), lit(3)) =!= 0),
-          "doc_id", "text").count()
-      }
-      time(s"classifier_gate $label") {
-        operators.MlOps.classifierEnsembleGate(
-          df, "doc_id", "text", "lang", "source").count()
-      }
-    }
-    // q320 sketch profiler: one Expand-free scan, 11 constant 4 KB
-    // register buffers per task — growth must track the single scan
-    // (its exact twin q205 replicates every row 11x through Expand).
-    val liP = Graft.table(spark, sfDir, "lineitem")
-    val liPBig = (0 until factor).map(_ => liP).reduce(_ unionByName _)
-    for ((label, ldf) <- Seq(("1x", liP), (s"${factor}x", liPBig))) {
-      time(s"profile_sketch  $label") {
-        operators.Relational.columnProfileSketch(ldf).count()
-      }
-    }
-    // Benford: a |groups|x9 digit grid off one keyed count — pure scan.
-    val ordP = Graft.table(spark, sfDir, "orders")
-      .select(col("o_orderpriority"), col("o_totalprice"))
-    val ordPBig = (0 until factor).map(_ => ordP).reduce(_ unionByName _)
-    for ((label, odf) <- Seq(("1x", ordP), (s"${factor}x", ordPBig))) {
-      time(s"benford         $label") {
-        operators.Inference.benfordByGroup(odf, "o_orderpriority",
-          col("o_totalprice")).count()
-      }
-    }
-    // r13 shelf. fs_linkage: replicas shift partkeys so brand blocks grow
-    // 10x — the cap must keep the pair space at Σ_b cap² (the er_match
-    // argument), leaving only the u-stat scans to grow.
-    val partF = Graft.table(spark, sfDir, "part")
-    val partFBig = (0 until factor)
-      .map(i => partF.withColumn("p_partkey",
-        col("p_partkey") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, pdf) <- Seq(("1x", partF), (s"${factor}x", partFBig))) {
-      time(s"fs_linkage      $label") {
-        operators.EntityRes.fsLinkage(pdf, "p_partkey", "p_name",
-          "p_brand", "p_type", "p_size", "p_retailprice", cap = 100,
-          jwThreshold = 0.92, mType = 0.95, mSize = 0.85, mBand = 0.80,
-          mName = 0.90, upperMicro = 4000000L, lowerMicro = 0L).count()
-      }
-      // fd_profile: cost ∝ distinct (det, dep) cells — replicas multiply
-      // per-cell counts, never cells, so the curve must be flat-to-scan.
-      time(s"fd_profile      $label") {
-        operators.SchemaDiscovery.fdStrength(pdf,
-          "part.p_brand->p_type", "p_brand", "p_type").count()
-      }
-    }
-    // ind_discovery: distinct-projections never grow under replication —
-    // only the two scans do.
-    val liD = Graft.table(spark, sfDir, "lineitem")
-      .select(col("l_partkey"))
-    val liDBig = (0 until factor).map(_ => liD).reduce(_ unionByName _)
-    for ((label, ldf) <- Seq(("1x", liD), (s"${factor}x", liDBig))) {
-      time(s"ind_discovery   $label") {
-        operators.SchemaDiscovery.indContainment(ldf, "l_partkey",
-          partF, "p_partkey", "li.l_partkey<part.p_partkey").count()
-      }
-    }
-    // ips_eval: everything collapses to the (context, action) cell grid
-    // before any double exists — replicas multiply cell counts, never
-    // cells, so the estimate is one keyed aggregate riding the scan.
-    val evI = Graft.table(spark, sfDir, "events")
-      .select(col("user_id"), col("event_type"), col("value"))
-    val evIBig = (0 until factor).map(_ => evI).reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", evI), (s"${factor}x", evIBig))) {
-      time(s"ips_eval        $label") {
-        operators.ModelEval.ipsEval(edf, pmod(col("user_id"), lit(8)),
-          "event_type", "value",
-          Seq("purchase" -> 0.4, "signup" -> 0.2, "click" -> 0.2,
-            "view" -> 0.1, "error" -> 0.1), clip = 1.5).count()
-      }
-    }
-    // forecast_backtest: the day grid is CALENDAR-bounded — replicas
-    // scale daily cents, never days, so both self-joins and the metric
-    // reduce stay constant while the daily aggregate rides the scan.
-    val ordF = Graft.table(spark, sfDir, "orders")
-      .select(col("o_orderdate"), col("o_totalprice"))
-    val ordFBig = (0 until factor).map(_ => ordF).reduce(_ unionByName _)
-    for ((label, odf) <- Seq(("1x", ordF), (s"${factor}x", ordFBig))) {
-      time(s"forecast_bt     $label") {
-        operators.Temporal.forecastBacktest(odf, "o_orderdate",
-          "o_totalprice",
-          java.time.LocalDate.of(2001, 5, 1).toEpochDay).count()
-      }
-    }
-    // hits: the bigram graph is Zipf-bounded — replicas multiply edge
-    // WEIGHTS, never nodes or edges, so all 16 half-steps run on a
-    // constant graph and cost tracks the one tokenizing scan.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"hits            $label") {
-        operators.Graphs.hits(
-          operators.Graphs.tokenBigramEdges(df, "text"),
-          "src", "dst", "w", iters = 8).count()
-      }
-    }
-    // join_size_estimate: per-key counts grow, the key set doesn't —
-    // the audit join and 1-row reduce are key-bounded, cost is the scans.
-    val liJ = Graft.table(spark, sfDir, "lineitem").select(col("l_orderkey"))
-    val liJBig = (0 until factor).map(_ => liJ).reduce(_ unionByName _)
-    val ordJ = Graft.table(spark, sfDir, "orders").select(col("o_orderkey"))
-    for ((label, ldf) <- Seq(("1x", liJ), (s"${factor}x", liJBig))) {
-      time(s"join_size_est   $label") {
-        operators.SchemaDiscovery.joinSizeEstimate(ldf, "l_orderkey",
-          ordJ, "o_orderkey", "li=ord").count()
-      }
-    }
-    // holt_winters: the fold state is (2 + period) doubles per key and
-    // the day series is calendar-bounded — replicas move daily sums,
-    // never the series length, so the smoother rides the scan.
-    val evH = Graft.table(spark, sfDir, "events")
-      .select(col("event_type"), col("ts"), col("value"))
-    val evHBig = (0 until factor).map(_ => evH).reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", evH), (s"${factor}x", evHBig))) {
-      time(s"holt_winters    $label") {
-        operators.Temporal.holtWinters(edf, "event_type", "ts", "value",
-          alpha = 0.4, beta = 0.2, gamma = 0.3, period = 7).count()
-      }
-    }
-    // c4_span_dedup: replicas duplicate every tile, so the keeper
-    // aggregate's GROUP count is CONSTANT across factors while the tile
-    // inventory (and removal count) grows linearly — cost must track the
-    // two tile-keyed shuffles + per-doc rebuild, never pairs.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"c4_span_dedup   $label") {
-        operators.TextDedup.c4SpanDedup(df, "doc_id", "text",
-          tileTokens = 4).count()
-      }
-    }
-    // logistic_gate: 7 constant-width aggregate passes over the cached
-    // feature projection; state per pass is 8 longs. Cost is steps x scan
-    // — the flattest curve on this list by construction.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"logistic_gate   $label") {
-        operators.MlOps.logisticTeacherGate(df, "text").count()
-      }
-    }
-    // logistic_calibration: q330's training passes + ONE scoring
-    // aggregate into a <= 10-row bin table — flat like the trainer.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"logistic_calib  $label") {
-        operators.MlOps.logisticCalibration(df, "text").count()
-      }
-    }
-    // shapley_attrib: replicas add USERS (ids shifted), so the mask
-    // table's key space and the 2^n coalition grid stay constant while
-    // journey windows and mask counts scale — cost is the per-user cut,
-    // never the Shapley algebra.
-    val evSh = Graft.table(spark, sfDir, "events")
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val evShBig = (0 until factor).map(i => evSh
-        .withColumn("user_id", col("user_id") + lit(i * 10000000L))
-        .withColumn("event_id", col("event_id") + lit(i * 1000000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", evSh), (s"${factor}x", evShBig))) {
-      time(s"shapley_attrib  $label") {
-        operators.Temporal.shapleyAttribution(edf, "user_id", "ts",
-          "event_type", "event_id", convType = "purchase").count()
-      }
-    }
-    // isotonic_calib: training + one scoring aggregate, then everything
-    // is G²-bounded on the ≤321-value LUT grid — flat by construction.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"isotonic_calib  $label") {
-        operators.MlOps.isotonicCalibration(df, "text").count()
-      }
-    }
-    // bpe_train: the only corpus-scale step is the word-type aggregate;
-    // exact replicas scale every pair count uniformly, so all 10 merge
-    // decisions are IDENTICAL and round cost stays vocab-bounded — the
-    // curve is the one scan.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"bpe_train       $label") {
-        operators.TextPrep.bpeTrain(df, "text", merges = 10).count()
-      }
-    }
-    // uplift_qini: replicated users multiply every grid count uniformly;
-    // the distinct-score grid and the bin grid stay CONSTANT, so the
-    // curve is the per-user aggregate scan.
-    for ((label, edf) <- Seq(("1x", evSh), (s"${factor}x", evShBig))) {
-      time(s"uplift_qini     $label") {
-        val units = edf.groupBy(col("user_id"))
-          .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("score"),
-            sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-              .as("np"),
-            sum(when(col("event_type") === "view", 1L).otherwise(0L))
-              .as("nv"))
-        operators.ModelEval.upliftQini(
-          units.withColumn("conv",
-            when(col("np") > col("nv"), 1L).otherwise(0L)),
-          "score", pmod(col("user_id"), lit(2)) === 1,
-          col("conv") === 1).count()
-      }
-    }
-    // bpe_encode: training plus ONE word-keyed dictionary join — the
-    // join's build side is the Heaps-bounded word-type table, so the
-    // apply pass rides the corpus scan.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"bpe_encode      $label") {
-        operators.TextPrep.bpeEncode(df, "doc_id", "text",
-          merges = 10).count()
-      }
-    }
-    // sampled top terms: the occurrence stream collapses map-side into
-    // one <=k buffer per (source, task) — growth is the token explode,
-    // the shuffle stays k-bounded per key.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"sampled_topk    $label") {
-        operators.Sketches.sampledTopTerms(
-          df.select(col("source"), col("doc_id"),
-            posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
-            .select(col("source"),
-              concat(col("doc_id").cast("string"), lit("#"),
-                col("pos").cast("string")).as("occ_id"), col("term")),
-          "source", "occ_id", "term", k = 64, topN = 3).count()
-      }
-    }
-    // pii census: one codegen regexp pass + a (source, type)-keyed
-    // aggregate over a constant detector battery — pure scan growth.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"pii_census      $label") {
-        operators.TextPrep.piiCensus(df, "text", "source").count()
-      }
-    }
-    // join-IVM audit: one flagged equi-join + conditional DECIMAL cells —
-    // growth is the join itself; replicate ORDERS (and let lineitem fan
-    // out against it) by shifting both keys.
-    val ordIvm = Graft.table(spark, sfDir, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority"))
-    val liIvm = Graft.table(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
-    val ordIvmBig = (0 until factor).map(i => ordIvm.withColumn("o_orderkey",
-      col("o_orderkey") + lit(i * 1000000000L))).reduce(_ unionByName _)
-    val liIvmBig = (0 until factor).map(i => liIvm.withColumn("l_orderkey",
-      col("l_orderkey") + lit(i * 1000000000L))).reduce(_ unionByName _)
-    for ((label, oj, lj) <- Seq(("1x", ordIvm, liIvm),
-        (s"${factor}x", ordIvmBig, liIvmBig))) {
-      time(s"join_ivm        $label") {
-        val dt = org.apache.spark.sql.types.DecimalType(12, 2)
-        val z = lit(0).cast(dt)
-        def cell(p: org.apache.spark.sql.Column) =
-          sum(when(p, col("__v")).otherwise(z))
-        oj.select(col("o_orderkey"), col("o_orderpriority"),
-            (pmod(col("o_orderkey"), lit(7)) === 0).as("__do"))
-          .join(lj.select(col("l_orderkey"),
-            col("l_extendedprice").cast(dt).as("__v"),
-            (col("l_linenumber") >= 5).as("__dl")),
-            col("o_orderkey") === col("l_orderkey"))
-          .groupBy(col("o_orderpriority"))
-          .agg(cell(!col("__do") && !col("__dl")).as("vb"),
-            cell(col("__do") && !col("__dl")).as("vdo"),
-            cell(!col("__do") && col("__dl")).as("vdl"),
-            cell(col("__do") && col("__dl")).as("vdd"),
-            sum(col("__v")).as("vf"))
-          .count()
-      }
-    }
-    // max-coverage greedy: k rounds of one item-keyed anti-join + per-doc
-    // count + 1-row argmax — growth is the trigram pair build; the
-    // covered side stays bounded by the picks' items.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"max_coverage    $label") {
-        val pairs = df
-          .select(col("doc_id"), split(col("text"), " ").as("w"))
-          .where(size(col("w")) >= 3)
-          .select(col("doc_id"), explode(expr(
-            "transform(sequence(0, size(w) - 3), i -> " +
-              "concat_ws(' ', w[i], w[i+1], w[i+2]))")).as("gram"))
-        operators.Scale.maxCoverageSelect(pairs, "doc_id", "gram",
-          k = 6).count()
-      }
-    }
-    // kcenter coreset: k checkpointed narrow passes over the point set
-    // (literal-vector dmin updates + 1-row argmax trees) — cost is
-    // k scans, so growth tracks the replicated point count linearly.
-    val embK = Graft.table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val embKBig = (0 until factor)
-      .map(i => embK.withColumn("vec_id",
-        col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, edf) <- Seq(("1x", embK), (s"${factor}x", embKBig))) {
-      time(s"kcenter_coreset $label") {
-        operators.Similarity.kcenterCoreset(edf, "vec_id", "embedding",
-          k = 8).count()
-      }
-    }
-    // KN LM curves: like lm_xent/dsir_weights, exact replicas add
-    // occurrences but no bigram TYPES, so the whole KN model (history
-    // sums, continuation type counts, T, V) is constant across factors —
-    // cost must track the tokenize + doc-keyed aggregates only.
-    for ((label, df) <- Seq(("1x", base), (s"${factor}x", big))) {
-      time(s"kn_xent         $label") {
-        operators.TextLm.knCrossEntropy(df, "doc_id", "text").count()
-      }
-      time(s"kn_dsir         $label") {
-        operators.TextLm.knImportanceWeights(df, "doc_id", "text",
-          "source", col("doc_id") % 5 === 0).count()
-      }
-      time(s"kn3_xent        $label") {
-        operators.TextLm.kn3CrossEntropy(df, "doc_id", "text").count()
-      }
-      // excess-loss select: BOTH models constant across replicas (no new
-      // bigram types), the cut grid is (groups x distinct-excess)-bounded
-      // — cost must track the shared tokenize + doc-keyed aggregates.
-      time(s"excess_select   $label") {
-        operators.TextLm.excessLossSelect(df, "doc_id", "text",
-          "source").count()
-      }
-      // min-k% prob: the KN model is constant across replicas (the
-      // kn_xent argument); the per-doc (lp, occ) arrays are doc-bounded
-      // — cost must track tokenize + the doc-keyed collect.
-      time(s"mink_prob       $label") {
-        operators.TextLm.minKProb(df, "doc_id", "text").count()
-      }
-      // modified-KN: the count-of-counts n1..n4 SHIFT under replication
-      // (a count-1 type at 1x is a count-factor type at factor-x) so the
-      // discounts differ — but the model stays the constant TYPE table
-      // and cost must track tokenize + doc-keyed aggregation, the
-      // kn_xent curve.
-      time(s"mkn_xent        $label") {
-        operators.TextLm.mknCrossEntropy(df, "doc_id", "text").count()
-      }
-      // unigram-LM EM: replicas multiply word-type frequencies uniformly
-      // — the seed model, every Viterbi DP, and the piece table are
-      // IDENTICAL across factors; only the one corpus-scale word-type
-      // aggregate sees more rows. The flattest curve in the file by
-      // design.
-      time(s"unigram_lm      $label") {
-        operators.TextPrep.unigramLmTrainStep(df, "text").count()
-      }
-      // fertility apply-pass: the DP side is identical across factors
-      // (same TYPE table); the apply join is one word-keyed equi-join on
-      // the exploded corpus — scan-linear like bpe_encode.
-      time(s"unigram_fert    $label") {
-        operators.TextPrep.unigramLmFertility(df, "text", "source").count()
-      }
-      // prune step: TWO type-table DP passes + grid cut — like
-      // unigram_lm, everything after the word-type aggregate is
-      // identical across factors (usage counts scale uniformly, so the
-      // cut keeps the same pieces).
-      time(s"unigram_prune   $label") {
-        operators.TextPrep.unigramLmPrune(df, "text").count()
-      }
-      // line dedup: line inventory is scan-linear; replicas push every
-      // line's doc-frequency over minDocs (each line gains factor-1
-      // exact copies), so the 10x run drops MORE — the df table stays
-      // line-TYPE-bounded either way.
-      time(s"line_dedup      $label") {
-        operators.TextDedup.lineDedup(df, "doc_id", "text").count()
-      }
-      // unimax: ONE source-keyed aggregate + grid arithmetic — pure scan
-      time(s"unimax_mix      $label") {
-        operators.Scale.unimaxMix(df, "source", "text").count()
-      }
-      // DoReMi: both LM models are constant across replicas (the lm_xent
-      // argument twice over) and the round ladder is |sources|-bounded —
-      // cost must track tokenize + the doc-keyed aggregates.
-      time(s"doremi_weights  $label") {
-        operators.TextLm.doremiWeights(df, "doc_id", "text", "source").count()
-      }
-      // WordPiece: replication scales every count uniformly, so the
-      // likelihood ratio c_ab/(c_a*c_b) shrinks by 1/factor UNIFORMLY —
-      // argmax order (and the merge table) is replication-invariant;
-      // cost tracks the one word-type aggregate, the bpe_train curve.
-      time(s"wordpiece_train $label") {
-        operators.TextPrep.wordpieceTrain(df, "text").count()
-      }
-      time(s"wordpiece_enc   $label") {
-        operators.TextPrep.wordpieceEncode(df, "doc_id", "text").count()
-      }
-      // paragraph minhash: exact replicas are the dedup-adversarial AND
-      // line-strip-degenerate case — at factor x every line's df crosses
-      // minDocs, ALL text strips, and the pair stage sees empty docs: the
-      // composition must COLLAPSE (0 pairs, scan-bounded cost), never
-      // explode into the factor^2 raw-pair volume minhash_lsh absorbs.
-      time(s"para_minhash    $label") {
-        operators.TextDedup.paragraphMinhashPairs(df, "doc_id", "text").count()
-      }
-      // Gumbel-top-k resample: both add-one models constant across
-      // replicas (the dsir_weights argument); per-doc sums + one
-      // TakeOrdered(100) — cost tracks tokenize + doc-keyed aggregates.
-      time(s"dsir_resample   $label") {
-        operators.TextLm.dsirResample(df, "doc_id", "text",
-          col("source") === "src1", k = 100).count()
-      }
-      // span decontamination: eval tile set is |eval|-bounded (1/16 of
-      // docs); the train side is the linear tile inventory + one keyed
-      // join — scan-linear like line_dedup.
-      time(s"decontam        $label") {
-        operators.TextDedup.decontaminateSpans(df, "doc_id", "text",
-          operators.Sketches.hash60(concat_ws("#", lit("ev"),
-            col("doc_id").cast("string"))) < lit(72057594037927936L)).count()
-      }
-      // intra-doc dedup: zero corpus-global state (every shuffle carries
-      // the doc id) — must be the flattest dedup curve in the file.
-      time(s"intradoc_dedup  $label") {
-        operators.TextDedup.intraDocLineDedup(df, "doc_id", "text").count()
-      }
-      // held-out xent: both model and ladder are filtered re-aggregates
-      // of one doc-bigram frame — the kn_xent curve on a 7/8 slice.
-      time(s"heldout_xent    $label") {
-        operators.TextLm.heldoutKnXent(df, "doc_id", "text", "source")
-          .count()
-      }
-    }
-    // ---- q365–q379 curves (round 17): lang-keyed ops need the lang
-    // column, so this block replicates its own projection. When run as a
-    // SPARK_GRAFT_SMOKE_ONLY subset the block lacks the file's warm-up
-    // prefix, so a discarded "warm" pass at 1x absorbs JIT/codegen cold
-    // start — read the 1x/10x rows, ignore warm. ----
-    val baseL = Graft.table(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("source"), col("lang"))
-    val bigL = (0 until factor)
-      .map(i => baseL.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    val r17Passes =
-      if (only.nonEmpty) Seq(("warm", baseL), ("1x", baseL), (s"${factor}x", bigL))
-      else Seq(("1x", baseL), (s"${factor}x", bigL))
-    for ((label, df) <- r17Passes) {
-      // char coverage: the char-type grid is CONSTANT across replicas
-      // (no new code points) — cost must track the one tokenize pass.
-      time(s"char_coverage   $label") {
-        operators.TextPrep.charCoverage(df, "text", "source").count()
-      }
-      // bloom census: the line-TYPE table is constant across replicas
-      // (replicas add occurrences, not types) and every downstream table
-      // is mBits·maxK-bounded — the n_dup_occ column is the only thing
-      // that grows.
-      time(s"bloom_census    $label") {
-        operators.TextDedup.bloomDedupCensus(df, "doc_id", "text").count()
-      }
-      // ONE prebuilt pair graph feeds pair_bleu AND cluster_census (the
-      // shared-cache shape their q367/q382 consumers actually run):
-      // persisted outside the timers so each curve prices its own stage,
-      // not the minhash build it rides — and built only when one of its
-      // two consumers is selected (a SMOKE_ONLY subset naming neither
-      // must not pay the most expensive build in the block).
-      // NOT CacheScope.persist: time() drains the scope after EVERY
-      // timed op, so pair_bleu's drain would unpersist the graph and
-      // cluster_census would re-pay the whole MinHash build inside its
-      // timer — persist directly, unpersist after the last consumer.
-      val pairsOpt =
-        if (only.nonEmpty && !Seq("pair_bleu", "cluster_census")
-            .exists(n => only.exists(n.startsWith))) None
-        else {
-          val p = operators.TextDedup.minhashNearDupPairs(df, "doc_id",
-              "text", threshold = 0.5).select(col("doc_a"), col("doc_b"))
-            .persist()
-          p.count()
-          Some(p)
+    def replica(t: String): DataFrame = {
+      val df = tables(t)
+      val keys = families.flatten.collect { case (`t`, c) => c }
+      (0 until factor).map { i =>
+        if (i == 0) df
+        else keys.foldLeft(df) { (d, c) =>
+          d.withColumn(c, (col(c) + lit(i * stride(c))).cast(df.schema(c).dataType))
         }
-      // at factor x the replica cliques multiply TRUE pairs ~factor^2,
-      // so pair_bleu is output-bound like the other pair consumers.
-      pairsOpt.foreach { pairs =>
-        time(s"pair_bleu       $label") {
-          operators.TextDedup.pairBleu(pairs, df, "doc_id", "text").count()
-        }
-      }
-      // scaling fit: all four carve models are filtered re-aggregates of
-      // one doc-bigram frame (the heldout_xent argument x4) and the OLS
-      // runs on a 4-row grid — the kn_xent curve with a 4x constant.
-      time(s"scaling_fit     $label") {
-        operators.TextLm.dataScalingFit(df, "doc_id", "text").count()
-      }
-      // per-lang KN: every join carries the lang key — the kn_xent curve
-      // sharded by language (models constant across replicas per lang).
-      time(s"lang_kn_xent    $label") {
-        operators.TextLm.groupedKnXent(df, "doc_id", "text", "lang").count()
-      }
-      // JM EM: component probabilities are TYPE-table re-aggregates,
-      // rounds are 1-row lambda ladders — the kn_xent curve + 3 cheap
-      // type-table passes.
-      time(s"jm_lambda_em    $label") {
-        operators.TextLm.jmDeletedInterpolation(df, "doc_id", "text").count()
-      }
-      // Min-K%++: the (nc+1)-value moment grid is constant across
-      // replicas; per-history observed sums ride the bigram TYPE table —
-      // cost tracks tokenize + the doc-keyed bottom-k fold.
-      time(s"minkpp          $label") {
-        operators.TextLm.minKppProb(df, "doc_id", "text").count()
-      }
-      // t-closeness: the ordered value grid and the (group x value)
-      // aggregate are type-bounded; replicas scale every count uniformly
-      // so t is IDENTICAL across factors — near-flat by design.
-      time(s"t_closeness     $label") {
-        operators.MlOps.tClosenessProfile(
-          df.select(col("source"), col("lang")), Seq("source"), "lang")
-          .count()
-      }
-      // full CCNet mix: per-doc scores off ONE persisted grouped-scored
-      // frame (the q374 shape), tercile cuts on per-lang value grids.
-      time(s"lang_kn_mix     $label") {
-        val pd = operators.CacheScope.persist(
-          operators.TextLm.groupedKnXentPerDocFrom(
-            operators.TextLm.docBigrams(df, "doc_id", "text"),
-            df, "doc_id", "text", "lang"))
-        operators.TextLm.knMixFrom(pd, df, "doc_id", "lang").count()
-      }
-      // Gopher census: every aggregate/join is doc-keyed (the intradoc
-      // argument); the n-gram argmax adds two more doc-keyed shuffles.
-      time(s"gopher_census   $label") {
-        operators.TextDedup.gopherRepetition(df, "doc_id", "text").count()
-      }
-      // exact-substring removal: the q300 run inventory (df-capped) plus
-      // covered-position explode LINEAR in duplicated mass — at factor x
-      // the replica cliques multiply runs ~factor^2 within the df cap,
-      // but removal stays bounded by corpus token count.
-      time(s"exact_substr_rm $label") {
-        operators.TextDedup.exactSubstringDedup(df, "doc_id", "text")
-          .count()
-      }
-      // per-lang UniMax: the scored frame + per-lang grid cuts + a
-      // |langs|-row waterfill — the lang_kn_mix curve with grid tails.
-      time(s"lang_unimax     $label") {
-        operators.TextLm.langUnimaxFromScored(
-          operators.TextLm.groupedKnXentPerDocFrom(
-            operators.TextLm.docBigrams(df, "doc_id", "text"),
-            df, "doc_id", "text", "lang"),
-          df, "doc_id", "text", "lang").count()
-      }
-      // quantization audit: everything after the shared doc-bigram
-      // aggregate runs on the lp_mu VALUE grid (constant across
-      // replicas) — the flattest LM curve here by design.
-      time(s"kn_quant        $label") {
-        val db = operators.CacheScope.persist(
-          operators.TextLm.docBigrams(df, "doc_id", "text"))
-        operators.TextLm.knQuantAudit(
-          operators.TextLm.knBigramModel(db, df, "text"), db).count()
-      }
-      // quality census: one tokenize pass + doc-keyed aggregates — the
-      // gopher_census shape minus the n-gram argmax.
-      time(s"gopher_quality  $label") {
-        operators.TextDedup.gopherQualityRules(df, "doc_id", "text").count()
-      }
-      // rule-vs-xent ablation: the census (doc-keyed) + one id-keyed
-      // join to KN scores + ONE aggregate row — the kn_xent curve plus
-      // the census's.
-      time(s"xent_ablation   $label") {
-        operators.TextDedup.gopherXentAblation(df, "doc_id", "text",
-          operators.TextLm.knCrossEntropy(df, "doc_id", "text")).count()
-      }
-      // cluster census: two keyed aggregates + one anti-join on the CC
-      // map over the SAME prebuilt pair graph; replicas turn every doc
-      // into a factor-clique, so the component count is constant while
-      // sizes shift 2,3,4 -> factor·k.
-      pairsOpt.foreach { pairs =>
-        time(s"cluster_census  $label") {
-          operators.TextDedup.dupClusterCensus(df, "doc_id", pairs).count()
-        }
-        pairs.unpersist()
-      }
-      // self-BLEU: per-doc gram tables joined to corpus TYPE tables —
-      // replicas multiply both c and C uniformly, so clipped mass and
-      // the precisions CHANGE meaningfully (rest-of-corpus grows), but
-      // cost is tokenize + type-keyed joins, the lm_xent curve.
-      time(s"self_bleu       $label") {
-        operators.TextDedup.selfBleu(df, "doc_id", "text").count()
-      }
-      // granularity sweep: |ls| df-capped window passes — the q300
-      // curve three times, covered-position explode linear in dup mass.
-      time(s"substr_sweep    $label") {
-        operators.TextDedup.exactSubstringSweep(df, "doc_id", "text")
-          .count()
-      }
-      // full gate: both censuses (each doc-keyed) + one id join + one
-      // source roll-up — the gopher_census + gopher_quality curves
-      // summed, nothing new.
-      time(s"gopher_gate     $label") {
-        operators.TextDedup.gopherFullGate(df, "doc_id", "text", "source")
-          .count()
-      }
-      // ---- round-18 curves ----
-      // data-constrained mix: one source-keyed token aggregate + the
-      // q355 grid waterfill + an (epochCap+1)-row broadcast — scan-flat
-      // like unimax (replicas scale every source uniformly, so the
-      // level and all epoch splits are IDENTICAL across factors).
-      time(s"data_constr     $label") {
-        operators.Scale.dataConstrainedMix(df, "source", "text").count()
-      }
-      // SoftDeDup weights: one Zipf-bounded TYPE table + model join +
-      // two doc-keyed aggregates — the kn_xent curve without the KN
-      // ladder (replicas scale c2 and T uniformly: identical lp_mu).
-      time(s"softdedup_wts   $label") {
-        operators.TextLm.softDedupWeights(
-          operators.TextLm.docBigrams(df, "doc_id", "text"), "doc_id")
-          .count()
-      }
-      // extractable-memorization census: 3 window inventories (k =
-      // 5/10/20) + fingerprint-keyed aggregates, NO pair join — the
-      // linear half of the q300 curve; replicas multiply every
-      // prefix's occ uniformly (3 rows out at every factor).
-      time(s"extract_mem     $label") {
-        operators.TextDedup.extractableMemorization(df, "doc_id", "text")
-          .count()
-      }
-      // tokenizer census: three Heaps-bounded trainer loops (flat
-      // across factors — replica corpora make identical merges) + one
-      // persisted word scan joined three times — bpe_train +
-      // wordpiece_train + unigram curves summed.
-      time(s"tok_census      $label") {
-        operators.TextPrep.tokenizerCompressionCensus(df, "text", "source")
-          .count()
-      }
-      // dedup-aware mix: the q377 removal price (replica cliques
-      // multiply covered mass ~linearly) + one source rollup + the
-      // grid-bounded q386 chain — the substr_rm curve plus a constant.
-      time(s"dedup_aware_mix $label") {
-        operators.Scale.dedupAwareMix(df, "doc_id", "text", "source")
-          .count()
-      }
-      // dedup x quality interaction: both doc-keyed gopher censuses (the
-      // gopher_gate curve) + an id join against an injected worklist —
-      // exact-dup replicas all land in the 'exact' stage.
-      time(s"dedup_quality   $label") {
-        val fp = df.select(col("doc_id"),
-          md5(coalesce(col("text"), lit(""))).as("__f"))
-        val k1 = fp.groupBy(col("__f"))
-          .agg(min(col("doc_id")).as("__keep"))
-        val wl = fp.join(k1, "__f").select(col("doc_id"),
-          when(col("doc_id") === col("__keep"), "retained")
-            .otherwise("exact").as("stage"))
-        operators.TextDedup.dedupQualityInteraction(
-          df, "doc_id", "text", wl).count()
-      }
-      // ---- round-19 curves ----
-      // per-doc memorization risk: ONE k=10 window inventory (a third of
-      // the extract_mem build) + a fingerprint-keyed join back + doc
-      // roll-up; replicas multiply occ per fingerprint TYPE, so the
-      // aggregate side stays type-bounded while the join side is linear.
-      time(s"mem_risk        $label") {
-        operators.TextDedup.memorizationRisk(df, "doc_id", "text").count()
-      }
-      // soft-weighted mix: the softdedup_wts curve (weights are rebuilt
-      // here — in the suite they ride the shared KN inventory) + one
-      // doc-keyed join + the grid-bounded q386 chain, a constant.
-      time(s"soft_wt_mix     $label") {
-        operators.Scale.softWeightedMix(df, "doc_id", "source", "text",
-          operators.TextLm.softDedupWeights(
-            operators.TextLm.docBigrams(df, "doc_id", "text"), "doc_id"))
-          .count()
-      }
-      // per-source memorization census: the mem_risk chain x3 ks + an
-      // id-keyed source join — aggregate side type-bounded, join side
-      // linear (the mem_risk argument three times over).
-      time(s"mem_risk_src    $label") {
-        operators.TextDedup.memorizationRiskBySource(
-          df, "doc_id", "text", "source").count()
-      }
-      // cross-snapshot substr dedup (parity carve): one fp-keyed store
-      // DISTINCT + semi-join + covered explode LINEAR in the duplicated
-      // mass — replicas make every odd doc a store hit, so the covered
-      // side approaches the whole snapshot (the q377 envelope).
-      time(s"snap_dedup      $label") {
-        operators.TextDedup.snapshotSubstrDedup(
-          df.where(col("doc_id") % 2 === 1),
-          df.where(col("doc_id") % 2 === 0),
-          "doc_id", "text").count()
-      }
+      }.reduce(_ unionByName _)
     }
-    // End-to-end pipeline: replicas are exact dups, so the EXACT stage
-    // absorbs (factor-1)/factor of the corpus and the near-dup/semantic
-    // stages run on a survivor set that is CONSTANT across factors — the
-    // designed funnel shape (each stage shrinks the next stage's input).
-    val embP = Graft.table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val embPBig = (0 until factor)
-      .map(i => embP.withColumn("vec_id",
-        col("vec_id") + lit(i * 10000000L)))
-      .reduce(_ unionByName _)
-    for ((label, df, edf) <- Seq(("1x", base, embP),
-        (s"${factor}x", big, embPBig))) {
-      time(s"dedup_pipeline  $label") {
-        operators.TextDedup.dedupPipeline(df, "doc_id", "text",
-          operators.TextDedup.minhashNearDupPairs(df, "doc_id", "text",
-            threshold = 0.5).select(col("doc_a"), col("doc_b")),
-          operators.Similarity.semanticDupPairs(edf, "vec_id", "embedding",
-            threshold = 0.3, nlist = 8, lloydIters = 2)).count()
-      }
-      // prototypicality bands: the q142 assignment curve (nlist-row
-      // broadcast x one scan) + per-cluster VALUE-grid cuts — replicas
-      // multiply counts on the same grid, so the cut stage is constant.
-      time(s"proto_band      $label") {
-        operators.Similarity.prototypicalityBand(edf, "vec_id", "embedding")
-          .count()
-      }
-      // JL recall: the sign matrix is one broadcast row; both rankings
-      // are bounded-query broadcast scans — queries scale with the
-      // corpus here (100 per replica) so the curve is |Q| x |corpus|.
-      time(s"jl_recall       $label") {
-        operators.Similarity.jlRecall(edf, "vec_id", "embedding",
-          col("vec_id") % 10000000L < 100, k = 5, dOut = 16).count()
-      }
-      // semantic decontam: the q142 assignment curve + a cell-confined
-      // train x eval join whose eval side is 10% of the corpus here
-      // (production: a KB-scale benchmark) — output rows track the
-      // train side linearly.
-      time(s"sem_decontam    $label") {
-        operators.Similarity.semanticDecontam(edf, "vec_id", "embedding",
-          col("vec_id") % 10 === 0, threshold = 0.3).count()
-      }
+
+    (copied ++ replicated).map { t =>
+      val written = Observation(t)
+      val out = if (copied.contains(t)) tables(t) else replica(t)
+      out.observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
+      t -> written.get("rows").asInstanceOf[Long]
     }
-    spark.stop()
   }
 }

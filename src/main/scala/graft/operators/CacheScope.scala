@@ -62,6 +62,16 @@ object CacheScope {
     } else df
   }
 
+  /** Materialize `df` and truncate its lineage, so an iterative
+    * operator's round N does not re-plan rounds 1..N-1: a reliable
+    * `checkpoint` when the session's SparkContext has a checkpoint dir
+    * (`sc.setCheckpointDir`; survives executor loss on a cluster), else
+    * `localCheckpoint` (executor-local blocks, lost with the executor). */
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
   /** Unpersist (non-blocking) everything registered since the last drain —
     * except frames whose plan is [[pin]]ned (their cache entry belongs to
     * a session-shared builder). */

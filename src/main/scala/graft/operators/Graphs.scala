@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import CacheScope.checkpoint
 
 /** Graph centrality over DataFrame edge lists — corpus-level link analysis.
   * The canonical LLM-data use: PageRank over a link/co-occurrence graph as a
@@ -45,23 +46,19 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
                iters: Int = 8, scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
-    val e = save(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("bigint").as("w")))
-    val nodes = save(e.select(col("src").as("node"))
+    val nodes = checkpoint(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
     // out-weight per source, pre-joined once — the loop reuses this table
-    val outW = save(e.groupBy(col("src")).agg(sum(col("w")).as("out_w")))
-    val ew = save(e.join(outW, "src"))
-    val nNodes = save(nodes.agg(count(lit(1)).as("__n")))
+    val outW = checkpoint(e.groupBy(col("src")).agg(sum(col("w")).as("out_w")))
+    val ew = checkpoint(e.join(outW, "src"))
+    val nNodes = checkpoint(nodes.agg(count(lit(1)).as("__n")))
 
     // teleport floor: (15·scale) div (100·n). BIGINT `div`, never `/`:
     // Spark's `/` on integers is DOUBLE division, and rank_mu·w exceeds
     // 2^53 where floor(double) silently loses exactness.
-    var ranks = save(nodes.crossJoin(broadcast(nNodes))
+    var ranks = checkpoint(nodes.crossJoin(broadcast(nNodes))
       .select(col("node"), expr(s"${scale}L div __n").as("rank_mu")))
 
     for (_ <- 1 to iters) {
@@ -69,7 +66,7 @@ object Graphs {
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("(rank_mu * w) div out_w")).as("__in"))
-      ranks = save(nodes.join(contrib, Seq("node"), "left")
+      ranks = checkpoint(nodes.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(nNodes))
         .select(col("node"),
           expr(s"(15 * ${scale}L) div (100 * __n) + " +
@@ -96,15 +93,11 @@ object Graphs {
                            iters: Int = 8,
                            scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
-    val e = save(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("bigint").as("w")))
-    val nodes = save(e.select(col("src").as("node"))
+    val nodes = checkpoint(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
-    val seeds = save(nodes.join(
+    val seeds = checkpoint(nodes.join(
       seedCol.toDF("node").distinct(), Seq("node"), "left_semi"))
     // An empty seed∩nodes intersection would make the teleport mass
     // `scale div __s` null-divide downstream (and a SQL mirror would
@@ -112,14 +105,14 @@ object Graphs {
     // `iters >= 1` require above).
     require(!seeds.isEmpty,
       "personalizedPageRank: no seed id intersects the graph's nodes")
-    val outW = save(e.groupBy(col("src")).agg(sum(col("w")).as("out_w")))
-    val ew = save(e.join(outW, "src"))
-    val nSeeds = save(seeds.agg(count(lit(1)).as("__s")))
+    val outW = checkpoint(e.groupBy(col("src")).agg(sum(col("w")).as("out_w")))
+    val ew = checkpoint(e.join(outW, "src"))
+    val nSeeds = checkpoint(seeds.agg(count(lit(1)).as("__s")))
 
-    val marked = save(nodes.join(
+    val marked = checkpoint(nodes.join(
         seeds.select(col("node"), lit(1).as("__seed")), Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed")))
-    var ranks = save(marked.crossJoin(broadcast(nSeeds))
+    var ranks = checkpoint(marked.crossJoin(broadcast(nSeeds))
       .select(col("node"), col("__seed"),
         when(col("__seed") === 1, expr(s"${scale}L div __s"))
           .otherwise(lit(0L)).as("rank_mu")))
@@ -128,7 +121,7 @@ object Graphs {
         .join(ranks.select(col("node").as("src"), col("rank_mu")), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(expr("(rank_mu * w) div out_w")).as("__in"))
-      ranks = save(marked.join(contrib, Seq("node"), "left")
+      ranks = checkpoint(marked.join(contrib, Seq("node"), "left")
         .crossJoin(broadcast(nSeeds))
         .select(col("node"), col("__seed"),
           (when(col("__seed") === 1,
@@ -183,26 +176,22 @@ object Graphs {
   def hits(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
            iters: Int = 8, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
-    val e = save(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("bigint").as("w")))
-    val nodes = save(e.select(col("src").as("node"))
+    val nodes = checkpoint(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct())
-    val nNodes = save(nodes.agg(count(lit(1)).as("__n")))
+    val nNodes = checkpoint(nodes.agg(count(lit(1)).as("__n")))
 
     def normalize(raw: DataFrame, outCol: String): DataFrame = {
       val full = nodes.join(raw, Seq("node"), "left")
         .select(col("node"), coalesce(col("__raw"), lit(0L)).as("__raw"))
       val s = full.agg(sum(col("__raw")).as("__s"))
-      save(full.crossJoin(broadcast(s))
+      checkpoint(full.crossJoin(broadcast(s))
         .select(col("node"),
           expr(s"(__raw * ${scale}L) div greatest(__s, 1L)").as(outCol)))
     }
 
-    var auth = save(nodes.crossJoin(broadcast(nNodes))
+    var auth = checkpoint(nodes.crossJoin(broadcast(nNodes))
       .select(col("node"), expr(s"${scale}L div __n").as("a_mu")))
     // hub derives purely from auth each round (iters >= 1): no initial
     // hub mass exists in the data flow
@@ -210,7 +199,7 @@ object Graphs {
     // each half-step is checkpointed: a round-boundary-only variant was
     // measured SLOWER (the un-saved half-step's sub-plan re-evaluates
     // inside the next materialization job, deepening every stage) — the
-    // per-half-step save keeps each of the 2·iters jobs shallow.
+    // per-half-step checkpoint keeps each of the 2·iters jobs shallow.
     for (_ <- 1 to iters) {
       hub = normalize(
         e.join(auth.withColumnRenamed("node", "dst"), "dst")
@@ -255,18 +244,14 @@ object Graphs {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        wCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(wCol).cast("bigint").as("w"))
-    val sym = save(dir.unionByName(
+    val sym = checkpoint(dir.unionByName(
         dir.select(col("b").as("a"), col("a").as("b"), col("w")))
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w")))
-    val nodes = save(sym.select(col("a").as("node")).distinct())
+    val nodes = checkpoint(sym.select(col("a").as("node")).distinct())
 
-    var labels = save(nodes.select(col("node"), col("node").as("community")))
+    var labels = checkpoint(nodes.select(col("node"), col("node").as("community")))
     for (_ <- 1 to iters) {
       val gathered = sym
         .join(labels.select(col("node").as("b"), col("community")), "b")
@@ -276,7 +261,7 @@ object Graphs {
         .orderBy(col("__sw").desc, col("community").asc)
       val best = gathered.withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).select(col("node"), col("community"))
-      labels = save(nodes.join(best, Seq("node"), "left")
+      labels = checkpoint(nodes.join(best, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("community"), col("node")).as("community")))
     }
@@ -298,23 +283,19 @@ object Graphs {
   def treeDepths(edges: DataFrame, childCol: String, parentCol: String,
                  roots: DataFrame, rootCol: String,
                  maxIters: Int = 100): DataFrame = {
-    val reliable = edges.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-
-    val e = save(edges.select(col(childCol).as("__c"), col(parentCol).as("__p")))
-    var frontier = save(roots.select(col(rootCol).as("node"),
+    val e = checkpoint(edges.select(col(childCol).as("__c"), col(parentCol).as("__p")))
+    var frontier = checkpoint(roots.select(col(rootCol).as("node"),
       lit(0L).as("depth")))
     var acc = frontier
     var iter = 0
     var done = frontier.isEmpty
     while (!done && iter < maxIters) {
-      val next = save(
+      val next = checkpoint(
         e.join(frontier.withColumnRenamed("node", "__p"), "__p")
           .select(col("__c").as("node"), (col("depth") + 1).as("depth"))
           .groupBy(col("node")).agg(min(col("depth")).as("depth")))
       if (next.isEmpty) done = true
-      else { acc = save(acc.unionByName(next)); frontier = next; iter += 1 }
+      else { acc = checkpoint(acc.unionByName(next)); frontier = next; iter += 1 }
     }
     // DAG safety: keep the first (minimum) depth per node
     acc.groupBy(col("node")).agg(min(col("depth")).as("depth"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import CacheScope.checkpoint
 
 /** Temporal join operators Spark has no built-in for — composed from
   * window/equi-join primitives (SURVEY.md §2.9 "range/as-of" row), per the
@@ -242,10 +243,6 @@ object Temporal {
                        typeCol: String, tieCol: String,
                        iters: Int = 12): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    val reliable =
-      events.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val counts = events
       .select(col(typeCol).as("src"), lead(col(typeCol), 1).over(w).as("dst"))
@@ -253,12 +250,12 @@ object Temporal {
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
     val outw = counts.groupBy(col("src")).agg(sum(col("w")).as("out_w"))
       .toDF("__s", "out_w")
-    val e = save(counts.join(broadcast(outw), col("src") === col("__s"))
+    val e = checkpoint(counts.join(broadcast(outw), col("src") === col("__s"))
       .select(col("src"), col("dst"), col("w"), col("out_w")))
-    val states = save(e.select(col("src").as("state"))
+    val states = checkpoint(e.select(col("src").as("state"))
       .unionByName(e.select(col("dst").as("state"))).distinct())
     val n1 = states.agg(count(lit(1)).as("__n"))
-    var pi = save(states.crossJoin(broadcast(n1))
+    var pi = checkpoint(states.crossJoin(broadcast(n1))
       .select(col("state"),
         expr("CAST(1000000000 AS BIGINT) DIV __n").as("pi_mu")))
     for (_ <- 1 to iters) {
@@ -267,7 +264,7 @@ object Temporal {
         .groupBy(col("dst"))
         .agg(sum(expr("(__pi * w) DIV out_w")).as("in_mu"))
         .toDF("__dst", "in_mu")
-      pi = save(states.join(in, col("state") === col("__dst"), "left")
+      pi = checkpoint(states.join(in, col("state") === col("__dst"), "left")
         .select(col("state"), coalesce(col("in_mu"), lit(0L)).as("pi_mu")))
     }
     pi.select(col("state"), col("pi_mu"),
@@ -381,10 +378,6 @@ object Temporal {
                                tieCol: String, convType: String,
                                iters: Int = 12): DataFrame = {
     require(iters >= 1, "need at least one absorption step")
-    val reliable =
-      events.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
     val w = Window.partitionBy(col("__u")).orderBy(col("__ts"), col("__tie"))
     val ev0 = events.select(col(userCol).as("__u"), col(tsCol).as("__ts"),
       col(tieCol).as("__tie"), col(typeCol).as("__t"))
@@ -445,12 +438,12 @@ object Temporal {
     var cur = rows.withColumn("dist", expr(
       "transform(sequence(0, n_states - 1), " +
         "j -> CAST(IF(j = start_idx, 1000000000, 0) AS BIGINT))"))
-    // one save per step: an un-checkpointed chain lets Catalyst inline
+    // one checkpoint per step: an un-checkpointed chain lets Catalyst inline
     // each dist into the next lambda, and the nested HOF re-evaluates
     // the whole prior level per (state, edge) — measured 2x SLOWER at
     // a 4-step checkpoint stride than per-step materialization
     for (_ <- 1 to iters)
-      cur = save(cur).withColumn("dist", expr(
+      cur = checkpoint(cur).withColumn("dist", expr(
         "transform(sequence(0, n_states - 1), " +
           "j -> aggregate(filter(M, e -> e.di = j), CAST(0 AS BIGINT), " +
           "(s, e) -> s + (element_at(dist, e.si + 1) * e.w) DIV e.out_w))"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import CacheScope.checkpoint
 
 /** Deduplication operators for large-scale document corpora.
   *
@@ -179,21 +180,15 @@ object TextDedup {
     *
     * Checkpointing: each round's state is materialized AND its lineage
     * truncated, so iteration N's plan doesn't embed plans 1..N-1 (plain
-    * persist keeps the whole chain and planning cost grows superlinearly).
-    * When the session has a reliable checkpoint dir configured
-    * (`sc.setCheckpointDir`), state goes through `checkpoint` — which
-    * survives executor loss on a real cluster; otherwise `localCheckpoint`
-    * (executor-local blocks, fine for single-JVM runs but lost with the
-    * executor) is used. */
+    * persist keeps the whole chain and planning cost grows superlinearly),
+    * through [[CacheScope.checkpoint]]: reliable when the session has a
+    * checkpoint dir, else local. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
                           bCol: String = "doc_b", maxIter: Int = 50): DataFrame = {
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def save(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    val edges = save(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val edges = checkpoint(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct())
-    var labels = save(edges.select(col("src").as("id")).distinct()
+    var labels = checkpoint(edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
     var converged = false
     var iter = 0
@@ -201,7 +196,7 @@ object TextDedup {
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("label", "nl"), "dst")
         .groupBy(col("src").as("id")).agg(min(col("nl")).as("nmin"))
-      val next = save(labels.join(neighborMin, "id")
+      val next = checkpoint(labels.join(neighborMin, "id")
         .select(col("id"), least(col("label"), col("nmin")).as("label")))
       converged = next.join(labels.withColumnRenamed("label", "old"), "id")
         .where(col("label") =!= col("old")).isEmpty

@@ -33,7 +33,13 @@ object Pipeline {
     // (reference ships it as spark-defaults, docker/spark/spark-defaults.conf:1-5).
     spark.conf.set("spark.sql.shuffle.partitions", cfg.spark.shufflePartitions.toString)
     cfg.applyHadoop(spark)
-    stage match {
+    // Every Spark job of the stage carries "<stage> <date>" as its job
+    // description (AQE's query-stage jobs copy the caller's local properties),
+    // so a listener record or the UI ties each job to its stage and day.
+    val sc = spark.sparkContext
+    val outerDescription = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"$stage $date")
+    try stage match {
       case "bronze" => ObjectStore.putBronze(                      // O1 stage 1: bronze extract
         spark.sparkContext.hadoopConfiguration, cfg.storage.bronze, date, fetch(cfg)); 0L
       case "silver" => SilverJob.run(spark, cfg, date); 0L         // stage 2: silver
@@ -44,7 +50,7 @@ object Pipeline {
       case "day"    => stages.map(runStage(spark, cfg, _, date, fetch)).last
       case other => throw new IllegalArgumentException(
         s"unknown stage '$other' (expected one of: ${stages.mkString(", ")}, day)")
-    }
+    } finally sc.setJobDescription(outerDescription)
   }
 
   /** One day end-to-end. `fetch` is injectable (tests use a fixture payload;

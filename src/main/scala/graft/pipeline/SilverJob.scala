@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Silver transform: one day's raw bronze JSON → flattened hourly Parquet
@@ -78,14 +78,23 @@ object SilverJob {
       .withColumn("d", lit(date.getDayOfMonth))
   }
 
-  /** Transform + partitioned write (reference: spark_jobs/silver_openmeteo.py:63-69). */
+  /** Transform + partitioned write (reference: spark_jobs/silver_openmeteo.py:63-69).
+    * Fails when the day has no valid bronze doc: the write then adds no rows,
+    * dynamic overwrite keeps the day's old silver partition, and gold, stage
+    * and upsert would republish the old day as if the replay had succeeded.
+    * The row count is observed on the write itself (no extra job). */
   def run(spark: SparkSession, cfg: AppConfig, date: LocalDate): DataFrame = {
+    val written = Observation("silver")
     val out = transform(spark, cfg.storage.bronze, date, cfg.source.hourlyVars)
-    out.coalesce(1)
+    out.observe(written, count(lit(1)).as("rows")).coalesce(1)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("y", "m", "d")
       .parquet(s"${cfg.storage.silver.stripSuffix("/")}/openmeteo/")
+    if (written.get("rows").asInstanceOf[Long] == 0L)
+      throw new IllegalStateException(
+        s"silver: no valid bronze doc in ${dayPath(cfg.storage.bronze, date)}; " +
+          "the day's silver partition is left as it was")
     out
   }
 }

@@ -155,6 +155,13 @@ class PipelineSpec extends AnyFunSuite {
     val orphans = perStage.values.flatten
       .filter(_.properties.getProperty("spark.sql.execution.id") == null)
     assert(orphans.isEmpty, s"jobs outside a query: ${orphans.map(_.stageInfos.map(_.name))}")
+    // Every job, the AQE-submitted ones included, names its stage and day.
+    for ((st, js) <- perStage; j <- js)
+      assert(j.properties.getProperty("spark.job.description") == s"$st 2025-09-16",
+        s"$st job ${j.stageInfos.map(_.name)} has description " +
+          j.properties.getProperty("spark.job.description"))
+    assert(sc.getLocalProperty("spark.job.description") == null,
+      "runStage left its description on the calling thread")
   }
 
   test("gold fails loudly on a missing silver day; the stale gold row is not published") {
@@ -177,6 +184,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(finalRows(cfg) == rows1)
     // The full-day replay rebuilds silver from bronze and converges again.
     assert(Pipeline.runDay(spark, cfg, date, _ => fixture24h("2025-09-16")) == 1)
+    assert(finalRows(cfg) == rows1)
+  }
+
+  test("a replay with no valid bronze doc fails at silver; no layer republishes the old day") {
+    val cfg = mkCfg(Files.createTempDirectory("graft_corrupt_replay"))
+    val date = LocalDate.parse("2025-09-15")
+    assert(Pipeline.runDay(spark, cfg, date, _ => fixture24h("2025-09-15")) == 1)
+    def layer(root: String) = spark.read.parquet(s"$root/openmeteo/")
+      .collect().map(_.toString).sorted.toSeq
+    val (silver1, gold1, rows1) = (layer(cfg.storage.silver), layer(cfg.storage.gold), finalRows(cfg))
+    // The corrupt payload overwrites the day's only bronze key.
+    val err = intercept[IllegalStateException] {
+      Pipeline.runDay(spark, cfg, date, _ => "{truncated")
+    }
+    assert(err.getMessage.contains(SilverJob.dayPath(cfg.storage.bronze, date)), err.getMessage)
+    assert(layer(cfg.storage.silver) == silver1)
+    assert(layer(cfg.storage.gold) == gold1)
+    assert(stageCount(cfg) == 0, "the old day reached the stage table")
+    assert(finalRows(cfg) == rows1)
+    // A valid replay converges again.
+    assert(Pipeline.runDay(spark, cfg, date, _ => fixture24h("2025-09-15")) == 1)
+    assert(layer(cfg.storage.silver) == silver1)
     assert(finalRows(cfg) == rows1)
   }
 
@@ -242,7 +271,9 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.runStage(spark, cfg, "silver", d15)
     put("16", "openmeteo_2025-09-16_a", "{\"latitude\": ")
     put("16", "openmeteo_2025-09-16_b", "[1, 2")
-    Pipeline.runStage(spark, cfg, "silver", LocalDate.parse("2025-09-16"))
+    intercept[IllegalStateException] {
+      Pipeline.runStage(spark, cfg, "silver", LocalDate.parse("2025-09-16"))
+    }
     val perDay = spark.read.parquet(s"${cfg.storage.silver}/openmeteo/")
       .groupBy("d").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(perDay == Map(15 -> 1L), s"an all-corrupt day must add no silver rows: $perDay")

@@ -102,6 +102,40 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
+  test("ScaleSmoke replica: x3 row counts, distinct keys, per-copy joins, copy 0 is the original") {
+    import org.apache.spark.sql.types.TimestampType
+    val out = java.nio.file.Files.createTempDirectory("graft_replica").toString
+    val factor = 3
+    val written = ScaleSmoke.write(spark, sf, factor, out).toMap
+    def src(t: String) = Graft.table(spark, sf, t)
+    def rep(t: String) = Graft.table(spark, out, t)
+    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem", "documents", "embeddings", "events")
+    assert(written.keySet == tables.toSet)
+    for (t <- tables) {
+      val k = if (t == "region" || t == "nation") 1 else factor
+      val n = src(t).count()
+      assert(n > 0, s"$t: empty source table")
+      assert(written(t) == k * n && rep(t).count() == k * n, s"$t: wrote ${written(t)}, source $n")
+      assert(src(t).exceptAll(rep(t)).isEmpty, s"$t: the replica lost rows of the original")
+    }
+    for ((t, key) <- Seq("customer" -> "c_custkey", "supplier" -> "s_suppkey",
+        "part" -> "p_partkey", "orders" -> "o_orderkey", "documents" -> "doc_id",
+        "embeddings" -> "vec_id", "events" -> "event_id"))
+      assert(rep(t).select(key).distinct().count() == rep(t).count(), s"$t.$key repeats")
+    def joins(read: String => org.apache.spark.sql.DataFrame): Seq[Long] = Seq(
+      read("orders").join(read("customer"), col("o_custkey") === col("c_custkey")),
+      read("lineitem").join(read("orders"), col("l_orderkey") === col("o_orderkey")),
+      read("lineitem").join(read("part"), col("l_partkey") === col("p_partkey")),
+      read("lineitem").join(read("supplier"), col("l_suppkey") === col("s_suppkey"))
+    ).map(_.count())
+    val one = joins(src)
+    assert(one.forall(_ > 0), one.toString)
+    assert(joins(rep) == one.map(_ * factor))
+    assert(rep("events").schema("ts").dataType == TimestampType)
+    assert(SparkEntry.queries("q100_flagship")(spark, out).count() > 0)
+  }
+
   test("streaming dedup drops within-watermark duplicate keys") {
     import spark.implicits._
     import graft.streaming.StreamingAgg
