@@ -718,9 +718,8 @@ object MlOps {
     * 1e6, an exact integer-over-1e6 double both engines) plus that weight
     * vector's n_pred_pos / n_correct over the corpus.
     *
-    * ScaleSmoke 10x (sf0.1, local[32]): 3.6 s at 1x -> 2.3 s at 10x —
-    * flat by construction (7 constant-width aggregate passes over the
-    * cached feature projection; session warm-up dominates at this SF).
+    * Cost is 7 constant-width aggregate passes over the cached feature
+    * projection.
     */
   /** The q330/q332 feature projection: integer features + teacher label
     * (see logisticTeacherGate's scaladoc), cached — training makes
@@ -827,9 +826,6 @@ object MlOps {
     *
     * Scale: training passes as q330, then ONE scoring aggregate to the
     * ≤10-row bin table; the global joins broadcast 1-row artifacts.
-    *
-    * ScaleSmoke 10x (sf0.1, local[32]): 5.9 s at 1x -> 2.6 s at 10x —
-    * flat like the trainer (warm-up dominated).
     */
   def logisticCalibration(docs: DataFrame, textCol: String,
                           steps: Int = 6, lrNum: Long = 3, lrDen: Long = 2)
@@ -882,8 +878,7 @@ object MlOps {
     * (≤321² ≈ 103k interval rows) regardless of corpus size; the only
     * corpus-scale work is training + one scan.
     *
-    * ScaleSmoke 10x (sf0.1, local[32]): 6.8 s at 1x -> 2.8 s at 10x —
-    * flat (the grid and interval table are constant across factors).
+    * The grid and interval table do not grow with the corpus.
     */
   def isotonicCalibration(docs: DataFrame, textCol: String,
                           steps: Int = 6, lrNum: Long = 3, lrDen: Long = 2)

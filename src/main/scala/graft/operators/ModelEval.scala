@@ -373,9 +373,8 @@ object ModelEval {
     * formulas over them. Windows ride AGGREGATED grids (distinct scores,
     * then ≤ nBins rows), never unit rows.
     *
-    * ScaleSmoke 10x (sf0.1, local[32], users replicated): 5.7 s at 1x ->
-    * 3.3 s at 10x — flat (both grids constant; cost is the unit
-    * aggregate).
+    * Both grids stay constant on replicated units; cost is the unit
+    * aggregate.
     */
   def upliftQini(units: DataFrame, scoreCol: String, treatCol: Column,
                  outcomeCol: Column, nBins: Int = 10): DataFrame = {

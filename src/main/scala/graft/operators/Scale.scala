@@ -638,7 +638,7 @@ object Scale {
   }
 
   /** [[dataConstrainedMix]] over a prebuilt (source, s) token-mass frame
-    * — the form [[dedupAwareMix]] feeds with DEDUPLICATED masses. */
+    * — the form [[dedupAwareMixFrom]] feeds with DEDUPLICATED masses. */
   def dataConstrainedFrom(per: DataFrame, epochCap: Int, budgetNum: Int,
                           budgetDen: Int, rStar: Double): DataFrame = {
     require(rStar > 0.0, "need rStar > 0")
@@ -672,7 +672,7 @@ object Scale {
 
   /** Dedup-DISCOUNTED data-constrained allocation — the shelf closure:
     * how many epochs is each source worth AFTER exact-substring dedup?
-    * [[graft.operators.TextDedup.exactSubstringDedup]] (Lee et al. 2022)
+    * [[graft.operators.TextDedup.exactSubstringDedupFrom]] (Lee et al. 2022)
     * prices each source's duplicated token mass; the UNIQUE mass
     * U_s = raw − removed is what Muennighoff et al. 2023's repeat-value
     * decay actually applies to (repeating a corpus whose duplicates were
@@ -691,20 +691,10 @@ object Scale {
     * column set computed on the unique mass (n_tokens = U_s, cap,
     * allocation, epochs, eff_tokens, eff_epochs, repeat_efficiency).
     * Scale: the q377 removal price (linear in duplicated mass) + one
-    * source-keyed rollup + the grid-bounded q386 chain. */
-  def dedupAwareMix(docs: DataFrame, idCol: String, textCol: String,
-                    srcCol: String, l: Int = 20, maxDf: Int = 10,
-                    epochCap: Int = 4, budgetNum: Int = 2,
-                    budgetDen: Int = 1, rStar: Double = 15.4): DataFrame =
-    dedupAwareMixFrom(docs, idCol, srcCol,
-      graft.operators.TextDedup.exactSubstringDedup(
-        docs, idCol, textCol, l, maxDf),
-      epochCap, budgetNum, budgetDen, rStar)
-
-  /** [[dedupAwareMix]] over a PREBUILT per-doc exact-substring frame
-    * ([[graft.operators.TextDedup.exactSubstringDedup]]'s output — the
-    * shared-cache form; q391/q398 consume one session-shared build;
-    * spec-pinned identical to the self-building overload). */
+    * source-keyed rollup + the grid-bounded q386 chain.
+    *
+    * `perDoc` is [[graft.operators.TextDedup.exactSubstringDedupFrom]]'s
+    * output (q391/q398 consume one session-shared build). */
   def dedupAwareMixFrom(docs: DataFrame, idCol: String, srcCol: String,
                         perDoc: DataFrame, epochCap: Int = 4,
                         budgetNum: Int = 2, budgetDen: Int = 1,
@@ -754,11 +744,9 @@ object Scale {
     * source-keyed aggregate + the grid-bounded q386 chain — nothing
     * new touches text beyond the token count.
     *
-    * ScaleSmoke 10x (sf0.1, local[32], `soft_wt_mix`, weights rebuilt
-    * in-curve): 4.2 s at 1x -> 10.7 s at 10x — the softDedupWeights/
-    * KN-inventory curve (type-bounded model, corpus-linear scan) plus
-    * a grid constant; in the suite the weights ride the session-shared
-    * KN doc-bigram inventory. */
+    * Building the weights costs the softDedupWeights/KN-inventory pass
+    * (type-bounded model, corpus-linear scan); in the suite they ride
+    * the session-shared KN doc-bigram inventory. */
   def softWeightedMix(docs: DataFrame, idCol: String, srcCol: String,
                       textCol: String, weights: DataFrame,
                       epochCap: Int = 4, budgetNum: Int = 2,
@@ -787,7 +775,7 @@ object Scale {
   /** Allocation ABLATION across the three discount paths — the decision
     * table a mixing run consults before picking its recipe: per source,
     * the [[dataConstrainedMix]] allocation on the RAW mass, the
-    * [[dedupAwareMix]] allocation on the post-dedup UNIQUE mass (Lee et
+    * [[dedupAwareMixFrom]] allocation on the post-dedup UNIQUE mass (Lee et
     * al. 2022 × Muennighoff et al. 2023), and the [[softWeightedMix]]
     * allocation on the SoftDedup-weighted mass (Xia et al. 2024) — each
     * chain run VERBATIM as it would standalone (each waterfills its own
@@ -803,22 +791,10 @@ object Scale {
     * Scale: pure composition — the q386 source aggregate + grid chain,
     * the q391 removal chain (linear in duplicated mass), the q394
     * weights join; the final assembly is two source-keyed left joins
-    * over |sources|-row frames. Priced by its constituents' curves
-    * (q386 flat / q391 the q377 curve / q394 the KN curve). */
-  def allocationAblation(docs: DataFrame, idCol: String, textCol: String,
-                         srcCol: String, weights: DataFrame,
-                         l: Int = 20, maxDf: Int = 10, epochCap: Int = 4,
-                         budgetNum: Int = 2, budgetDen: Int = 1,
-                         rStar: Double = 15.4): DataFrame =
-    allocationAblationFrom(docs, idCol, textCol, srcCol, weights,
-      graft.operators.TextDedup.exactSubstringDedup(
-        docs, idCol, textCol, l, maxDf),
-      epochCap, budgetNum, budgetDen, rStar)
-
-  /** [[allocationAblation]] over a PREBUILT per-doc exact-substring frame
-    * — the shared-cache form (the dedup leg consumes the session-shared
-    * q377 build instead of re-running the removal chain; spec-pinned
-    * identical to the self-building overload). */
+    * over |sources|-row frames. Priced by its constituents (q386 / the
+    * q377 removal / the KN inventory). `perDoc` is
+    * [[graft.operators.TextDedup.exactSubstringDedupFrom]]'s output (the
+    * dedup leg consumes the session-shared q377 build). */
   def allocationAblationFrom(docs: DataFrame, idCol: String,
                              textCol: String, srcCol: String,
                              weights: DataFrame, perDoc: DataFrame,

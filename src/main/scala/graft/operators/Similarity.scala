@@ -572,16 +572,11 @@ object Similarity {
     * a bounded unit of work; the parameter IS the knob, the operator shape
     * doesn't change. Centroid training cost is linear (see
     * [[kmeansCentroids]]); the final keep/drop is one k-bounded anti-join
-    * equivalent (left join + null test) on the vector id. */
-  def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nlist: Int = 8,
-                    lloydIters: Int = 2): DataFrame =
-    semanticDedupFrom(
-      semAssignment(emb, idCol, vecCol, nlist, lloydIters), idCol, threshold)
-
-  /** [[semanticDedup]] over a PREBUILT assignment frame
-    * ([[semAssignmentFrames]] — the shared-cache form; spec-pinned
-    * identical to the self-building overload). */
+    * equivalent (left join + null test) on the vector id.
+    *
+    * `assign` is the first frame of [[semAssignmentFrames]] (the
+    * shared-cache form; SharedFormsSpec compares it against a fresh
+    * `semAssignmentFrames` build). */
   def semanticDedupFrom(assign: DataFrame, idCol: String,
                         threshold: Double): DataFrame = {
     val dropped = semPairsFromAssignment(assign, idCol, threshold)
@@ -593,36 +588,42 @@ object Similarity {
         when(col("__drop").isNull, 1L).otherwise(0L).as("keep"))
   }
 
-  /** The q142 Lloyd assignment lineage EXPOSED for session sharing (r20):
-    * (assign, cents) where assign = (idCol, cid, emb, nrm) and cents =
-    * the trained nlist-row centroid frame. FOUR consumers derive this
-    * identical pair at identical parameters (q142 semanticDedup, q362
-    * prototypicalityBand, q387 semanticDecontam, and the dedup-worklist
-    * builder's semanticDupPairs) — each previously re-ran the norms scan
-    * + Lloyd rounds + assignment. CONTRACT: the caller must pass frames
-    * built from the same emb/idCol/vecCol/nlist/lloydIters the consumer
-    * advertises (the exactSubstringSweep prebuilt rule). */
+  /** The q142 Lloyd assignment lineage (norms, seed centroids, Lloyd
+    * rounds, min-(d2, cid) assignment): (assign, cents) where assign =
+    * (idCol, cid, emb, nrm) and cents = the trained nlist-row centroid
+    * frame. FOUR consumers derive this identical pair at identical
+    * parameters (q142 [[semanticDedupFrom]], q362
+    * [[prototypicalityBandFrom]], q387 [[semanticDecontamFrom]], and the
+    * dedup-worklist builder's [[semanticDupPairsFrom]]) — the session
+    * shares one build, so the tie-break/quantization semantics can never
+    * drift. CONTRACT: the caller must pass frames built from the same
+    * emb/idCol/vecCol/nlist/lloydIters the consumer advertises (the
+    * exactSubstringSweep prebuilt rule). */
   def semAssignmentFrames(emb: DataFrame, idCol: String, vecCol: String,
                           nlist: Int = 8, lloydIters: Int = 2)
-  : (DataFrame, DataFrame) =
-    semAssignmentWithCents(emb, idCol, vecCol, nlist, lloydIters)
+  : (DataFrame, DataFrame) = {
+    val n = CacheScope.persist(withNorm(emb, idCol, vecCol))
+    val cents = kmeansCentroids(n, idCol, nlist, lloydIters)
+    val dist2 = dot_d(col("emb"), col("emb")) -
+      lit(2.0) * dot_d(col("emb"), col("c_emb")) +
+      dot_d(col("c_emb"), col("c_emb"))
+    val assign = n.crossJoin(broadcast(cents)).withColumn("d2", dist2)
+      .groupBy(col(idCol))
+      .agg(min(struct(col("d2"), col("cid"), col("emb"), col("nrm"))).as("b"))
+      .select(col(idCol), col("b.cid").as("cid"),
+        col("b.emb").as("emb"), col("b.nrm").as("nrm"))
+    (assign, cents)
+  }
 
-  /** The semantic duplicate PAIR set behind [[semanticDedup]]'s keep/drop
+  /** The semantic duplicate PAIR set behind [[semanticDedupFrom]]'s keep/drop
     * verdicts: within-cell pairs (id_a > id_b) whose cosine reaches
     * `threshold`, one row per pair. This is the composable form the
     * end-to-end dedup pipeline consumes (filter the pair graph to the
     * stage's survivors, then apply the anchor-greedy policy) — computed
     * once on the FULL corpus, like every pair graph in the lineage.
-    * Output: id_a, id_b, cid. Same plan shape as [[semanticDedup]]
-    * (cell-confined equi-join, never corpus x corpus). */
-  def semanticDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, nlist: Int = 8,
-                       lloydIters: Int = 2): DataFrame =
-    semanticDupPairsFrom(
-      semAssignment(emb, idCol, vecCol, nlist, lloydIters), idCol, threshold)
-
-  /** [[semanticDupPairs]] over a PREBUILT assignment frame — the
-    * shared-cache form (spec-pinned identical). */
+    * Output: id_a, id_b, cid. Same plan shape as [[semanticDedupFrom]]
+    * (cell-confined equi-join, never corpus x corpus). `assign` is the
+    * first frame of [[semAssignmentFrames]]. */
   def semanticDupPairsFrom(assign: DataFrame, idCol: String,
                            threshold: Double): DataFrame =
     semPairsFromAssignment(assign, idCol, threshold)
@@ -654,17 +655,11 @@ object Similarity {
     * an nlist-row broadcast against one scan; the join is cell-confined
     * with the eval side tiny (eval benchmarks are KBs against a 100 TB
     * corpus — broadcastable); nlist grows with the corpus exactly as
-    * [[semanticDedup]] prescribes. */
-  def semanticDecontam(emb: DataFrame, idCol: String, vecCol: String,
-                       evalPred: Column, threshold: Double,
-                       nlist: Int = 8, lloydIters: Int = 2): DataFrame =
-    semanticDecontamFrom(CacheScope.persist(
-      semAssignment(emb, idCol, vecCol, nlist, lloydIters)),
-      idCol, evalPred, threshold)
-
-  /** [[semanticDecontam]] over a PREBUILT assignment frame — the
-    * shared-cache form (the shared frame arrives persisted; the
-    * self-building overload persists its own). Spec-pinned identical. */
+    * [[semanticDedupFrom]] prescribes.
+    *
+    * `assign` is the first frame of [[semAssignmentFrames]]; the
+    * session-shared frame arrives persisted (the train and eval sides
+    * both read it). */
   def semanticDecontamFrom(assign: DataFrame, idCol: String,
                            evalPred: Column, threshold: Double): DataFrame = {
     // NULL-coalesced predicate (the q373 convention): a row where
@@ -697,7 +692,7 @@ object Similarity {
     * points CLOSEST to their cluster centroid are templated/prototypical
     * (redundant — D4 drops them), the FARTHEST are outliers, and the
     * middle band carries the diverse signal. The band-selection dual of
-    * [[semanticDedup]] (pairwise redundancy) and the q337 k-center
+    * [[semanticDedupFrom]] (pairwise redundancy) and the q337 k-center
     * coreset (global diversity picks).
     *
     * Mechanics: the q142 assignment lineage verbatim (norms, nlist seed
@@ -713,20 +708,8 @@ object Similarity {
     * Scale: the assignment is an nlist-row broadcast against one corpus
     * scan (the q142 contract); the cut windows run over per-cluster
     * distinct-value grids, never data rows.
-    * Output: (cid, band, n_vecs, mean_cos — 6 dp). */
-  def prototypicalityBand(emb: DataFrame, idCol: String, vecCol: String,
-                          nlist: Int = 8, lloydIters: Int = 2,
-                          loNum: Int = 1, loDen: Int = 4,
-                          hiNum: Int = 1, hiDen: Int = 4): DataFrame = {
-    val (assign, cents) = semAssignmentWithCents(emb, idCol, vecCol,
-      nlist, lloydIters)
-    prototypicalityBandFrom(assign, cents, idCol, loNum, loDen, hiNum,
-      hiDen)
-  }
-
-  /** [[prototypicalityBand]] over a PREBUILT (assignment, centroids)
-    * pair ([[semAssignmentFrames]] — the shared-cache form; spec-pinned
-    * identical to the self-building overload). */
+    * Output: (cid, band, n_vecs, mean_cos — 6 dp). `(assign, cents)` is
+    * the [[semAssignmentFrames]] pair (the shared-cache form). */
   def prototypicalityBandFrom(assign: DataFrame, cents: DataFrame,
                               idCol: String,
                               loNum: Int = 1, loDen: Int = 4,
@@ -766,33 +749,6 @@ object Similarity {
       .select(col("cid"), col("band"), col("n_vecs"),
         round((col("__s").cast("double") / lit(1e6))
           / col("n_vecs").cast("double"), 6).as("mean_cos"))
-  }
-
-  /** Shared [[semanticDedup]]/[[semanticDupPairs]] stage 1: Lloyd-trained
-    * cell assignment with each vector's embedding + norm attached. */
-  private def semAssignment(emb: DataFrame, idCol: String, vecCol: String,
-                            nlist: Int, lloydIters: Int): DataFrame =
-    semAssignmentWithCents(emb, idCol, vecCol, nlist, lloydIters)._1
-
-  /** The ONE assignment lineage (norms, seed centroids, Lloyd rounds,
-    * min-(d2, cid) assignment), also returning the trained centroid
-    * frame — shared by [[semAssignment]] and [[prototypicalityBand]] so
-    * the tie-break/quantization semantics can never drift. */
-  private def semAssignmentWithCents(emb: DataFrame, idCol: String,
-                                     vecCol: String, nlist: Int,
-                                     lloydIters: Int)
-  : (DataFrame, DataFrame) = {
-    val n = CacheScope.persist(withNorm(emb, idCol, vecCol))
-    val cents = kmeansCentroids(n, idCol, nlist, lloydIters)
-    val dist2 = dot_d(col("emb"), col("emb")) -
-      lit(2.0) * dot_d(col("emb"), col("c_emb")) +
-      dot_d(col("c_emb"), col("c_emb"))
-    val assign = n.crossJoin(broadcast(cents)).withColumn("d2", dist2)
-      .groupBy(col(idCol))
-      .agg(min(struct(col("d2"), col("cid"), col("emb"), col("nrm"))).as("b"))
-      .select(col(idCol), col("b.cid").as("cid"),
-        col("b.emb").as("emb"), col("b.nrm").as("nrm"))
-    (assign, cents)
   }
 
   /** Shared stage 2: the within-cell qualifying pairs (id_a > id_b,
@@ -1245,8 +1201,7 @@ object Similarity {
     * PCA power iteration uses). localCheckpoint each round caps lineage
     * the way the HITS half-steps do, so cost is k scans of the point
     * set — the textbook k-center cost model — with no shuffle beyond
-    * the k map-side-combined argmax trees. ScaleSmoke 10× at sf0.1
-    * (5k → 50k points, k=8): 6.3 → 3.6 s — flat, bounded by the 2k
+    * the k map-side-combined argmax trees. Cost is bounded by the 2k
     * fixed per-round job launches, not by data. */
   def kcenterCoreset(emb: DataFrame, idCol: String, vecCol: String,
                      k: Int): DataFrame = {

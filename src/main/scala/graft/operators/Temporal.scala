@@ -1295,9 +1295,8 @@ object Temporal {
     * sorted channel list is a driver-side model artifact (1-row-stats
     * pattern).
     *
-    * ScaleSmoke 10x (sf0.1, local[32], users replicated with shifted
-    * ids): 7.1 s at 1x -> 3.3 s at 10x — flat (warm-up dominated): the
-    * coalition algebra never grows, only the journey cut scans more.
+    * On replicated users the coalition algebra never grows; only the
+    * journey cut scans more.
     */
   def shapleyAttribution(events: DataFrame, userCol: String, tsCol: String,
                          typeCol: String, tieCol: String, convType: String,

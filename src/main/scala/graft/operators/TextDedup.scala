@@ -358,7 +358,7 @@ object TextDedup {
   /** Dedup-granularity sweep (the Lee et al. 2022 §4 tuning artifact):
     * [[exactSubstringRuns]] at several window lengths l, each reduced to
     * the numbers the threshold decision needs — run count, distinct
-    * duplicated tokens (doc_b side, the [[exactSubstringDedup]] removal
+    * duplicated tokens (doc_b side, the [[exactSubstringDedupFrom]] removal
     * mass) and the duplicated fraction of the corpus (half-up 6-dp).
     * Short l over-matches (natural collocations), long l under-matches
     * (misses short boilerplate); the sweep shows where the curve bends
@@ -1076,8 +1076,8 @@ object TextDedup {
     * inventory → **1.2 s** after token_window_hashes minted the
     * fingerprints natively (one codegen'd pass, 8-byte join keys, no
     * window strings); inventory persisted once for its three consumers.
-    * The 10× ScaleSmoke curve is output-bound (~1000× more TRUE pairs
-    * from replica cliques) — the same answer-size floor as the other
+    * On replica corpora the cost is output-bound (replica cliques
+    * multiply the TRUE pairs) — the same answer-size floor as the other
     * pair-output dedups.
     *
     * Output: one row per maximal run — (doc_a, doc_b, a_start, b_start,
@@ -1208,16 +1208,11 @@ object TextDedup {
     * Output per doc: n_tokens, n_tokens_removed, clean_md5 (md5 of the
     * kept tokens space-joined — md5("") when everything was removed) —
     * the [[lineDedup]] narrow contract. [[exactSubstringRebuild]] is the
-    * TEXT form downstream composition consumes. */
-  def exactSubstringDedup(docs: DataFrame, idCol: String, textCol: String,
-                          l: Int = 20, maxDf: Int = 10): DataFrame =
-    exactSubstringDedupFrom(docs, idCol, textCol,
-      exactSubstringRuns(docs, idCol, textCol, l, maxDf))
-
-  /** [[exactSubstringDedup]] over a PREBUILT run inventory — the shared-
-    * cache form (q377/q391/q398 consume one session-shared
-    * [[exactSubstringRuns]] build; spec-pinned identical to the
-    * self-building overload). */
+    * TEXT form downstream composition consumes.
+    *
+    * `runs` is an [[exactSubstringRuns]] inventory (q377/q391/q398
+    * consume one session-shared l = 20, maxDf = 10 build; SharedFormsSpec
+    * compares it against a fresh `exactSubstringRuns` build). */
   def exactSubstringDedupFrom(docs: DataFrame, idCol: String,
                               textCol: String, runs: DataFrame): DataFrame =
     exactSubstrFlagged(docs, idCol, textCol, runs)
@@ -1230,7 +1225,7 @@ object TextDedup {
               when(col("__keep"), struct(col("pos"), col("tok"))))),
             t => t.getField("tok")), " ")).as("clean_md5"))
 
-  /** [[exactSubstringDedup]]'s rebuild in TEXT form — (doc_id,
+  /** [[exactSubstringDedupFrom]]'s rebuild in TEXT form — (doc_id,
     * clean_text, "" when every token was removed); exists for
     * composition (the idempotence spec re-runs the operator on it). */
   def exactSubstringRebuild(docs: DataFrame, idCol: String, textCol: String,
@@ -1293,10 +1288,8 @@ object TextDedup {
     * single-empty-token tile, the shared [[tileInventory]] rule since the
     * q351 landing): a NULL-text doc competes for the "" span like any
     * other instead of vanishing — the oracle mirrors with coalesce.
-    *
-    * ScaleSmoke 10x (sf0.1, local[32]): 5.3 s at 1x -> 4.1 s at 10x —
-    * sub-linear because the 10x corpus is exact replicas (constant keeper
-    * group count); cost rides the tile shuffles, never pairs.
+    * On replica corpora the keeper group count stays constant; cost
+    * rides the tile shuffles, never pairs.
     */
   def c4SpanDedup(docs: DataFrame, idCol: String, textCol: String,
                   tileTokens: Int = 4): DataFrame = {
@@ -1341,7 +1334,7 @@ object TextDedup {
     *     to it;
     *  3. semantic — `semPairs` (id_a > id_b, the full-corpus within-cell
     *     cosine pairs) restricted to surviving endpoints; the
-    *     [[graft.operators.Similarity.semanticDedup]] anchor-greedy rule
+    *     [[graft.operators.Similarity.semanticDedupFrom]] anchor-greedy rule
     *     (drop id_a if ANY surviving smaller id qualifies), survivor
     *     attribution = the smallest such anchor (which, anchor-greedy,
     *     need not itself survive the stage — the documented q142 policy).
@@ -1731,7 +1724,7 @@ object TextDedup {
     * — ALL thirteen Table A1 repetition rules — and `pass` = 1 iff every
     * rule holds. q87/q148 gate on single rules;
     * this is the COMPOSED rule table (the per-source roll-up is
-    * [[gopherPassReport]]). "Lines"/"paragraphs" are the house tile
+    * [[gopherPassReportFrom]]). "Lines"/"paragraphs" are the house tile
     * proxies ([[tileInventory]], `lineTokens`/`paraTokens`-token
     * non-overlapping tiles) — same rule as q351/q363, so the census can
     * never drift from the dedup operators. Top-gram ties break to the
@@ -1748,14 +1741,9 @@ object TextDedup {
     * Scale: every aggregate and join is doc-keyed (tile counts, type
     * counts, n-gram argmax) — embarrassingly doc-parallel, zero
     * corpus-global state; the n-gram stage is linear in token count.
-    * The 100 TB shape is the q363 one: shuffles carry the doc id. */
-  def gopherRepetition(docs: DataFrame, idCol: String, textCol: String,
-                       lineTokens: Int = 3, paraTokens: Int = 10): DataFrame =
-    gopherRepetitionFrom(gopherMicro(docs, idCol, textCol, lineTokens,
-      paraTokens))
-
-  /** [[gopherRepetition]] over a prebuilt [[gopherMicro]] census — the
-    * shared-cache consumer form (five queries ride one census build:
+    * The 100 TB shape is the q363 one: shuffles carry the doc id.
+    *
+    * `micro` is the [[gopherMicro]] census (five queries ride one build:
     * q375/q376/q381/q385/q392, the `gopher_micro` SharedCaches entry). */
   def gopherRepetitionFrom(micro: DataFrame): DataFrame =
     micro.select(col("doc_id") +: col("n_lines") +:
@@ -1763,20 +1751,12 @@ object TextDedup {
         (col(s"${n}_mu").cast("double") / lit(1e6)).as(n)
       } :+ col("pass"): _*)
 
-  /** [[gopherRepetition]] rolled up per source: one row per (source,
+  /** [[gopherRepetitionFrom]] rolled up per source: one row per (source,
     * rule) with the doc count, failure count and 6-dp failure rate,
     * plus an 'all' row per source for the full-census pass rate — the
     * corpus-card table a curation run reports. Rule thresholds are the
-    * Rae et al. 2021 Table A1 values, compared in micro-units. */
-  def gopherPassReport(docs: DataFrame, idCol: String, textCol: String,
-                       srcCol: String, lineTokens: Int = 3,
-                       paraTokens: Int = 10): DataFrame =
-    gopherPassReportFrom(
-      gopherMicro(docs, idCol, textCol, lineTokens, paraTokens),
-      docs, idCol, srcCol)
-
-  /** [[gopherPassReport]] over a prebuilt census — the shared-cache
-    * consumer form. */
+    * Rae et al. 2021 Table A1 values, compared in micro-units. `micro`
+    * is the [[gopherMicro]] census. */
   def gopherPassReportFrom(micro: DataFrame, docs: DataFrame,
                            idCol: String, srcCol: String): DataFrame = {
     val census = micro
@@ -1800,7 +1780,7 @@ object TextDedup {
 
   /** Gopher QUALITY-rule census (Rae et al. 2021 §A1.1, first block —
     * public paper): the non-repetition half of the Table A1 gate,
-    * completing [[gopherRepetition]]'s rule table. Per document:
+    * completing [[gopherRepetitionFrom]]'s rule table. Per document:
     *
     *  - n_words ∈ [50, 100000]
     *  - mean word length ∈ [3, 10] characters (exact half-up 6-dp)
@@ -1875,7 +1855,7 @@ object TextDedup {
 
   /** The COMPLETE Gopher document gate (Rae et al. 2021 §A1.1, both
     * blocks): a document is kept iff it passes EVERY repetition rule
-    * ([[gopherRepetition]]) AND every quality rule
+    * ([[gopherRepetitionFrom]]) AND every quality rule
     * ([[gopherQualityRules]]) — the conjunction production pipelines
     * actually apply, rolled up per source with the retention rate a
     * corpus card leads with. Pure composition of the two shared-rule
@@ -1885,17 +1865,9 @@ object TextDedup {
     * Output per source: n_docs, n_pass_repetition, n_pass_quality,
     * n_pass_all (≤ min of the two — the conjunction), retention_rate
     * (half-up 6-dp of n_pass_all/n_docs). Scale: two doc-keyed census
-    * passes + one id-keyed join + one source-keyed roll-up. */
-  def gopherFullGate(docs: DataFrame, idCol: String, textCol: String,
-                     srcCol: String, lineTokens: Int = 3,
-                     paraTokens: Int = 10): DataFrame =
-    gopherFullGateFrom(
-      gopherMicro(docs, idCol, textCol, lineTokens, paraTokens),
-      gopherQualityRules(docs, idCol, textCol, lineTokens),
-      docs, idCol, srcCol)
-
-  /** [[gopherFullGate]] over prebuilt census + quality frames — the
-    * shared-cache consumer form (`gopher_micro` + `gopher_quality`). */
+    * passes + one id-keyed join + one source-keyed roll-up. `micro` is
+    * the [[gopherMicro]] census and `quality` the [[gopherQualityRules]]
+    * frame (session-shared as `gopher_micro` + `gopher_quality`). */
   def gopherFullGateFrom(micro: DataFrame, quality: DataFrame,
                          docs: DataFrame, idCol: String,
                          srcCol: String): DataFrame = {
@@ -1956,16 +1928,8 @@ object TextDedup {
     * out at the end (round(·, 6), the tercileMix mean contract; NULL
     * when a side is empty). One joined frame, ONE aggregate row, one
     * stack — no per-rule passes. Scale: the census is doc-keyed (q375),
-    * the join is id-keyed, the stack is one row per rule + 'all'. */
-  def gopherXentAblation(docs: DataFrame, idCol: String, textCol: String,
-                         scoredDocs: DataFrame, lineTokens: Int = 3,
-                         paraTokens: Int = 10): DataFrame =
-    gopherXentAblationFrom(
-      gopherMicro(docs, idCol, textCol, lineTokens, paraTokens),
-      scoredDocs, idCol)
-
-  /** [[gopherXentAblation]] over a prebuilt census — the shared-cache
-    * consumer form. */
+    * the join is id-keyed, the stack is one row per rule + 'all'.
+    * `micro` is the [[gopherMicro]] census. */
   def gopherXentAblationFrom(micro: DataFrame, scoredDocs: DataFrame,
                              idCol: String): DataFrame = {
     val j = micro
@@ -1995,8 +1959,8 @@ object TextDedup {
             / col("n_fail").cast("double"), 6)).as("mean_xent_fail"))
   }
 
-  /** The micro-unit census behind [[gopherRepetition]] /
-    * [[gopherPassReport]] / the ablation / both gates: doc_id, n_lines,
+  /** The micro-unit census behind [[gopherRepetitionFrom]] /
+    * [[gopherPassReportFrom]] / the ablation / both gates: doc_id, n_lines,
     * one `<rule>_mu` BIGINT per rule, pass ∈ {0,1}. Exposed to the
     * query layer so ONE session-shared build (`gopher_micro`) can feed
     * its five consumers. */
@@ -2101,41 +2065,6 @@ object TextDedup {
         .reduce(_ && _).cast("bigint"))
   }
 
-  /** Extractable-memorization census (Carlini et al. 2021 "Extracting
-    * Training Data from Large Language Models" / 2023 "Quantifying
-    * Memorization Across Neural Language Models" — public papers): for
-    * each prompt length k, how much of the corpus is DETERMINISTICALLY
-    * continuable — a k-token context is deterministic when every one of
-    * its corpus occurrences is followed by the SAME next token, the
-    * corpus-side proxy for "a k-token prompt extracts the continuation
-    * verbatim". The memorization-relevant slice is the REPEATED
-    * contexts (occ ≥ 2): a unique context is trivially deterministic,
-    * while a repeated-and-still-deterministic one is exactly the
-    * duplicated string the papers show LMs regurgitate (and the q300 /
-    * q377 dedup shelf exists to remove).
-    *
-    * Mechanics: per k, the [[exactSubstringRuns]] native window
-    * fingerprints ([[graft.functions.TokenNgrams.token_window_hashes]] —
-    * fingerprints are GROUP identity only, the q75/q300 hashed-identity
-    * precedent; the oracle keys on md5(window), the same partition)
-    * paired with the following token, one fingerprint-keyed aggregate
-    * (occurrences, distinct continuations), then ONE census row:
-    * n_prefix_types, n_det_types, n_occ, n_det_occ, n_rep_types,
-    * n_rep_det_types, extractable_frac (half-up 6-dp n_det_occ/n_occ;
-    * 0 when the corpus has no k+1-token window). Windows at document
-    * end carry no continuation and are excluded on both engines.
-    *
-    * Scale: the window inventory is ~tokens × |ks| rows (the q300
-    * envelope), every aggregate fingerprint- then 1-row-keyed — no
-    * pair join at all, strictly cheaper than q300. */
-  def extractableMemorization(docs: DataFrame, idCol: String,
-                              textCol: String,
-                              ks: Seq[Int] = Seq(5, 10, 20)): DataFrame = {
-    require(ks.nonEmpty && ks.forall(_ >= 1), "need window lengths >= 1")
-    extractableMemorizationFrom(
-      ks.map(k => k -> memWindowInventory(docs, idCol, textCol, k)))
-  }
-
   /** The (doc_id, fp, nxt) prompt-window inventory behind the
     * memorization shelf (q389/q393/q397 and the q395 card leg): one row
     * per k-token window CARRYING a continuation (windows at document end
@@ -2180,19 +2109,46 @@ object TextDedup {
         element_at(col("ts"), col("p") + col("k") + 1).as("nxt"))
   }
 
-  /** [[extractableMemorization]] over PREBUILT per-k window inventories
-    * (`ks` pairs each k with its [[memWindowInventory]] frame — the
+  /** Extractable-memorization census (Carlini et al. 2021 "Extracting
+    * Training Data from Large Language Models" / 2023 "Quantifying
+    * Memorization Across Neural Language Models" — public papers): for
+    * each prompt length k, how much of the corpus is DETERMINISTICALLY
+    * continuable — a k-token context is deterministic when every one of
+    * its corpus occurrences is followed by the SAME next token, the
+    * corpus-side proxy for "a k-token prompt extracts the continuation
+    * verbatim". The memorization-relevant slice is the REPEATED
+    * contexts (occ ≥ 2): a unique context is trivially deterministic,
+    * while a repeated-and-still-deterministic one is exactly the
+    * duplicated string the papers show LMs regurgitate (and the q300 /
+    * q377 dedup shelf exists to remove).
+    *
+    * Mechanics: per k, the [[exactSubstringRuns]] native window
+    * fingerprints ([[graft.functions.TokenNgrams.token_window_hashes]] —
+    * fingerprints are GROUP identity only, the q75/q300 hashed-identity
+    * precedent; the oracle keys on md5(window), the same partition)
+    * paired with the following token, one fingerprint-keyed aggregate
+    * (occurrences, distinct continuations), then ONE census row:
+    * n_prefix_types, n_det_types, n_occ, n_det_occ, n_rep_types,
+    * n_rep_det_types, extractable_frac (half-up 6-dp n_det_occ/n_occ;
+    * 0 when the corpus has no k+1-token window). Windows at document
+    * end carry no continuation and are excluded on both engines.
+    *
+    * Scale: the window inventory is ~tokens × |ks| rows (the q300
+    * envelope), every aggregate fingerprint- then 1-row-keyed — no
+    * pair join at all, strictly cheaper than q300.
+    *
+    * `ks` pairs each k with its [[memWindowInventory]] frame (the
     * shared-cache form; the doc_id column rides along unused, so the
-    * fingerprint-keyed aggregate is unchanged; spec-pinned identical to
-    * the self-building overload).
+    * fingerprint-keyed aggregate is unchanged). SharedFormsSpec compares
+    * the shared inventories against fresh `memWindowInventory` builds.
     *
     * CONTRACT (r19 ADVICE, also [[memorizationRiskBySourceFrom]]): each
     * Int MUST be the k the paired frame was built with — the label is
     * trusted, and a mismatched pair mislabels every output row's k with
     * no error. The only callers pass the session-shared mem_windows_k<k>
-    * caches, each keyed by its own k (SharedFormsSpec-pinned). */
+    * caches, each keyed by its own k. */
   def extractableMemorizationFrom(ks: Seq[(Int, DataFrame)]): DataFrame = {
-    require(ks.nonEmpty, "need at least one window length")
+    require(ks.nonEmpty && ks.forall(_._1 >= 1), "need window lengths >= 1")
     val perK = ks.map { case (k, pw) =>
       val byPrefix = pw.groupBy(col("fp"))
         .agg(count(lit(1)).as("occ"), countDistinct(col("nxt")).as("ncont"))
@@ -2237,7 +2193,7 @@ object TextDedup {
     * some window over it has its fingerprint IN THE STORE (shared with
     * a previous snapshot) or shared with a SMALLER doc_id inside the
     * snapshot itself (the doc_a < doc_b removal-from-later policy of
-    * [[exactSubstringDedup]], applied intra-snapshot). */
+    * [[exactSubstringDedupFrom]], applied intra-snapshot). */
   private[graft] def snapshotCovered(inv: DataFrame, storeFps: DataFrame,
                                      l: Int): DataFrame = {
     val storeHit = inv.join(storeFps.select(col("fp")), Seq("fp"),
@@ -2280,11 +2236,9 @@ object TextDedup {
     * parquet); the snapshot side is one semi-join + one snapshot-local
     * fingerprint aggregate + a covered-position explode linear in the
     * duplicated mass (the q377 envelope) + one doc-keyed rebuild.
-    *
-    * ScaleSmoke 10x (sf0.1, local[32], `snap_dedup`, parity carve):
-    * 0.4 s at 1x -> 0.9 s at 10x — fingerprint TYPES are constant
-    * across replicas (the store DISTINCT and the per-fp aggregate never
-    * grow); the covered explode tracks the duplicated mass. */
+    * Fingerprint TYPES are constant across replicas (the store DISTINCT
+    * and the per-fp aggregate never grow); the covered explode tracks the
+    * duplicated mass. */
   def snapshotSubstrDedup(newDocs: DataFrame, oldDocs: DataFrame,
                           idCol: String, textCol: String, l: Int = 20)
   : DataFrame = {
@@ -2311,7 +2265,7 @@ object TextDedup {
   }
 
   /** Per-document memorization-RISK drill-down (Carlini et al. 2021 /
-    * 2023 — public papers): [[extractableMemorization]] reports the
+    * 2023 — public papers): [[extractableMemorizationFrom]] reports the
     * corpus-level census; the actionable artifact is per-doc — for each
     * document, the fraction of its `k`-token windows (those carrying a
     * continuation) that are REPEATED-AND-DETERMINISTIC corpus-wide, i.e.
@@ -2334,21 +2288,12 @@ object TextDedup {
     * Scale: the inventory is ~tokens rows (the q300 envelope); the
     * aggregate and the join are fingerprint-keyed, the roll-up
     * doc-keyed — NO pair join, strictly cheaper than q300 and one
-    * fp-keyed join over q389's cost.
+    * fp-keyed join over q389's cost. Replica corpora multiply each
+    * fingerprint's occ, not the fingerprint TYPES, so the aggregate side
+    * stays constant and only the doc-keyed join side grows.
     *
-    * ScaleSmoke 10x (sf0.1, local[32], `mem_risk`): 3.3 s at 1x ->
-    * 3.9 s at 10x — strongly sub-linear because replica corpora
-    * multiply each fingerprint's occ, not the fingerprint TYPES, so
-    * the aggregate side is constant and only the doc-keyed join side
-    * grows with the corpus. */
-  def memorizationRisk(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 10): DataFrame =
-    memorizationRiskFrom(CacheScope.persist(
-      memWindowInventory(docs, idCol, textCol, k)))
-
-  /** [[memorizationRisk]] over a PREBUILT window inventory
-    * ([[memWindowInventory]] — the shared-cache form; spec-pinned
-    * identical to the self-building overload). */
+    * `pw` is a [[memWindowInventory]] frame (the shared-cache form;
+    * SharedFormsSpec compares it against a fresh build). */
   def memorizationRiskFrom(pw: DataFrame): DataFrame = {
     val byPrefix = pw.groupBy(col("fp"))
       .agg(count(lit(1)).as("occ"), countDistinct(col("nxt")).as("ncont"))
@@ -2364,7 +2309,7 @@ object TextDedup {
   }
 
   /** Per-SOURCE memorization-risk census over the prompt-length grid —
-    * the curation table [[memorizationRisk]]'s per-doc drill-down rolls
+    * the curation table [[memorizationRiskFrom]]'s per-doc drill-down rolls
     * up to (Carlini et al. 2023 report discoverable extraction as a
     * function of prompt length k; a curation run acts per SOURCE): for
     * each k and source, the pooled repeated-and-deterministic window
@@ -2379,33 +2324,18 @@ object TextDedup {
     *
     * Scale: the q393 chain per k (fingerprint-keyed aggregate + join,
     * NO pair join) + one id-keyed source join + a source-keyed roll-up
-    * — |ks| passes over the window inventory, the q389 envelope.
+    * — |ks| passes over the window inventory, the q389 envelope. The
+    * fingerprint-keyed aggregate is type-bounded on replica corpora;
+    * only the join sides grow.
     *
-    * ScaleSmoke 10x (sf0.1, local[32], `mem_risk_src`): 3.8 s at 1x ->
-    * 7.9 s at 10x — sub-linear ×|ks| over the mem_risk curve: the
-    * fingerprint-keyed aggregate is type-bounded on replica corpora,
-    * only the join sides grow. */
-  def memorizationRiskBySource(docs: DataFrame, idCol: String,
-                               textCol: String, srcCol: String,
-                               ks: Seq[Int] = Seq(5, 10, 20),
-                               highNum: Int = 1, highDen: Int = 2)
-  : DataFrame = {
-    require(ks.nonEmpty && ks.forall(_ >= 1), "need window lengths >= 1")
-    memorizationRiskBySourceFrom(
-      ks.map(k => k -> CacheScope.persist(
-        memWindowInventory(docs, idCol, textCol, k))),
-      docs.select(col(idCol).cast("long").as("doc_id"),
-        col(srcCol).as("source")),
-      highNum, highDen)
-  }
-
-  /** [[memorizationRiskBySource]] over PREBUILT per-k window inventories
-    * plus a (doc_id, source) map — the shared-cache form (spec-pinned
-    * identical to the self-building overload). */
+    * `ks` pairs each k with its [[memWindowInventory]] frame (the
+    * [[extractableMemorizationFrom]] label contract) and `src` is a
+    * (doc_id, source) map — the shared-cache form (SharedFormsSpec
+    * compares it against fresh inventories). */
   def memorizationRiskBySourceFrom(ks: Seq[(Int, DataFrame)],
                                    src: DataFrame, highNum: Int = 1,
                                    highDen: Int = 2): DataFrame = {
-    require(ks.nonEmpty, "need at least one window length")
+    require(ks.nonEmpty && ks.forall(_._1 >= 1), "need window lengths >= 1")
     require(highNum > 0 && highDen > 0, "need a positive high-risk ratio")
     val perK = ks.map { case (k, pw) =>
       val byPrefix = pw.groupBy(col("fp"))
@@ -2467,7 +2397,7 @@ object TextDedup {
     * table: for every [[dedupPipeline]] worklist stage (exact /
     * near_dup / semantic removals and the retained survivors), how many
     * documents pass vs fail the complete Gopher gate
-    * ([[gopherFullGate]]'s conjunction — repetition AND quality), and
+    * ([[gopherFullGateFrom]]'s conjunction — repetition AND quality), and
     * each stage's gate-pass rate. If dedup removals fail the gate at a
     * higher rate than the retained set, dedup is doing quality work for
     * free (the FineWeb finding); if not, the two gates are independent
@@ -2478,17 +2408,8 @@ object TextDedup {
     * Output: (stage_order, stage, gate_pass ∈ {0,1}, n_docs,
     * stage_frac — half-up 6-dp share of the stage). Both censuses are
     * doc-keyed scans (the q385 price); the join is id-keyed; the
-    * roll-up is ≤ 8 rows. */
-  def dedupQualityInteraction(docs: DataFrame, idCol: String,
-                              textCol: String, worklist: DataFrame,
-                              lineTokens: Int = 3, paraTokens: Int = 10)
-  : DataFrame =
-    dedupQualityInteractionFrom(
-      gopherMicro(docs, idCol, textCol, lineTokens, paraTokens),
-      gopherQualityRules(docs, idCol, textCol, lineTokens), worklist)
-
-  /** [[dedupQualityInteraction]] over prebuilt census + quality frames —
-    * the shared-cache consumer form. */
+    * roll-up is ≤ 8 rows. `micro` is the [[gopherMicro]] census and
+    * `quality` the [[gopherQualityRules]] frame. */
   def dedupQualityInteractionFrom(micro: DataFrame, quality: DataFrame,
                                   worklist: DataFrame): DataFrame = {
     val rep = micro.select(col("doc_id"), col("pass").as("__rp"))

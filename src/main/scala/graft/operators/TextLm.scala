@@ -69,6 +69,55 @@ object TextLm {
           / lit(1e6)).as("xent"))
   }
 
+  /** Shared tokenize + per-doc bigram aggregate — (idCol, w1, w2, occ),
+    * one row per (document, observed bigram TYPE): the frame every
+    * bigram-LM operator here starts from. Scoring joins consume it
+    * directly and every model is a RE-AGGREGATE of it — never a second
+    * corpus pass. Exposed so the query layer can build it once per
+    * session (the SharedCaches `kn_doc_bigrams` entry) and feed all the
+    * KN-family consumers (q342/q343/q344/q347/q348/q349/q354). */
+  def docBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol), split(col(textCol), " ").as("t"))
+      .select(col(idCol),
+        explode(arrays_zip(
+          expr("slice(t, 1, size(t) - 1)").as("w1"),
+          expr("slice(t, 2, size(t) - 1)").as("w2"))).as("p"))
+      .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"))
+      .groupBy(col(idCol), col("w1"), col("w2"))
+      .agg(count(lit(1)).as("occ"))
+
+  /** The interpolated-KN per-bigram-type log-probability in micro-nats —
+    * [[knCrossEntropyFrom]]'s D = 3/4 closed form over columns
+    * c2/c1/n1p/nc/t_types/v. ONE constant so its three Spark consumers
+    * ([[knBigramModel]], and the reference/general sides
+    * [[excessLossSelectFrom]]/[[knImportanceWeightsFrom]] inherit through
+    * the shared model) can never drift. */
+  private[graft] val knLpSql: String =
+    """CAST(round(ln(
+      |  CAST((4 * c2 - 3) * (t_types + v) + 3 * n1p * (nc + 1) AS DOUBLE)
+      |  / CAST(4 * c1 * (t_types + v) AS DOUBLE)) * 1e6) AS BIGINT)"""
+      .stripMargin
+
+  /** Interpolated-KN bigram model TYPE table (w1, w2, lp_mu micro-nats)
+    * from a prebuilt [[docBigrams]] aggregate; `docs` supplies only the
+    * vocabulary count (a 1-row broadcast — a single-token document
+    * carries a word but no bigram, so V is not derivable from the bigram
+    * table). Zipf-bounded: one row per OBSERVED bigram type. Session-
+    * shared as SharedCaches `kn_bigram_model`. */
+  def knBigramModel(docBig: DataFrame, docs: DataFrame, textCol: String): DataFrame = {
+    val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
+    val hist = big.groupBy(col("w1"))
+      .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p"))
+    val cont = big.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
+    val sizes = big.agg(count(lit(1)).as("t_types")).crossJoin(
+      docs.select(explode(split(col(textCol), " ")).as("w"))
+        .agg(countDistinct(col("w")).as("v")))
+    big.join(hist, "w1").join(cont, "w2")
+      .crossJoin(broadcast(sizes))
+      .withColumn("lp_mu", expr(knLpSql))
+      .select(col("w1"), col("w2"), col("lp_mu"))
+  }
+
   /** Interpolated Kneser-Ney bigram cross-entropy — the production upgrade
     * of [[bigramCrossEntropy]]: CCNet/DSIR-style pipelines score with
     * KN-smoothed n-gram models, not add-one. Absolute discounting with the
@@ -102,65 +151,12 @@ object TextLm {
     * ~1e8 types); beyond that widen num/den to DECIMAL(38,0) in BOTH
     * engines before the ln.
     *
+    * Inputs: `docBig` from [[docBigrams]] and `model` from
+    * [[knBigramModel]] (the session shares both); the scoring stage is one
+    * model equi-join + one per-doc aggregate.
+    *
     * Output: doc_id, n_bigrams, xent (nats, exact-integer half-up 6 dp) —
     * the [[bigramCrossEntropy]] contract. */
-  def knCrossEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val docBig = docBigrams(docs, idCol, textCol)
-    knCrossEntropyFrom(docBig, knBigramModel(docBig, docs, textCol), idCol)
-  }
-
-  /** Shared tokenize + per-doc bigram aggregate — (idCol, w1, w2, occ),
-    * one row per (document, observed bigram TYPE): the frame every
-    * bigram-LM operator here starts from. Scoring joins consume it
-    * directly and every model is a RE-AGGREGATE of it — never a second
-    * corpus pass. Exposed so the query layer can build it once per
-    * session (the SharedCaches `kn_doc_bigrams` entry) and feed all the
-    * KN-family consumers (q342/q343/q344/q347/q348/q349/q354). */
-  def docBigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol), split(col(textCol), " ").as("t"))
-      .select(col(idCol),
-        explode(arrays_zip(
-          expr("slice(t, 1, size(t) - 1)").as("w1"),
-          expr("slice(t, 2, size(t) - 1)").as("w2"))).as("p"))
-      .select(col(idCol), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .groupBy(col(idCol), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("occ"))
-
-  /** The interpolated-KN per-bigram-type log-probability in micro-nats —
-    * [[knCrossEntropy]]'s D = 3/4 closed form over columns
-    * c2/c1/n1p/nc/t_types/v. ONE constant so its three Spark consumers
-    * ([[knBigramModel]], and the reference/general sides the *From
-    * variants of [[excessLossSelect]]/[[knImportanceWeights]] inherit
-    * through the shared model) can never drift. */
-  private[graft] val knLpSql: String =
-    """CAST(round(ln(
-      |  CAST((4 * c2 - 3) * (t_types + v) + 3 * n1p * (nc + 1) AS DOUBLE)
-      |  / CAST(4 * c1 * (t_types + v) AS DOUBLE)) * 1e6) AS BIGINT)"""
-      .stripMargin
-
-  /** Interpolated-KN bigram model TYPE table (w1, w2, lp_mu micro-nats)
-    * from a prebuilt [[docBigrams]] aggregate; `docs` supplies only the
-    * vocabulary count (a 1-row broadcast — a single-token document
-    * carries a word but no bigram, so V is not derivable from the bigram
-    * table). Zipf-bounded: one row per OBSERVED bigram type. Session-
-    * shared as SharedCaches `kn_bigram_model`. */
-  def knBigramModel(docBig: DataFrame, docs: DataFrame, textCol: String): DataFrame = {
-    val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
-    val hist = big.groupBy(col("w1"))
-      .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p"))
-    val cont = big.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
-    val sizes = big.agg(count(lit(1)).as("t_types")).crossJoin(
-      docs.select(explode(split(col(textCol), " ")).as("w"))
-        .agg(countDistinct(col("w")).as("v")))
-    big.join(hist, "w1").join(cont, "w2")
-      .crossJoin(broadcast(sizes))
-      .withColumn("lp_mu", expr(knLpSql))
-      .select(col("w1"), col("w2"), col("lp_mu"))
-  }
-
-  /** [[knCrossEntropy]]'s scoring stage over prebuilt inputs: one model
-    * equi-join + one per-doc aggregate — the marginal cost a consumer
-    * pays when the session shares the model build. */
   def knCrossEntropyFrom(docBig: DataFrame, model: DataFrame,
                          idCol: String): DataFrame =
     docBig.join(model, Seq("w1", "w2"))
@@ -220,7 +216,7 @@ object TextLm {
   }
 
   /** Interpolated Kneser-Ney TRIGRAM cross-entropy — the full KN
-    * recursion [[knCrossEntropy]]'s bigram form is the base case of
+    * recursion [[knCrossEntropyFrom]]'s bigram form is the base case of
     * (production LM-quality pipelines run KN-smoothed higher-order
     * models; the recursion below is Chen & Goodman 1998's interpolated
     * form at order 3, D = 3/4 at every level):
@@ -252,23 +248,14 @@ object TextLm {
     *
     * Scale: the model is three Zipf-bounded TYPE tables (trigram, its two
     * marginal projections, bigram) joined on trigram/bigram/word keys plus
-    * one broadcast (T2, V) row — same shape class as [[knCrossEntropy]],
+    * one broadcast (T2, V) row — same shape class as [[knCrossEntropyFrom]],
     * one order deeper. Docs with fewer than three tokens have no trigrams
-    * and are omitted. Output: doc_id, n_trigrams, xent. */
-  def kn3CrossEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    kn3CrossEntropyImpl(docs, idCol, textCol, None)
-
-  /** [[kn3CrossEntropy]] with the bottom level's bigram TYPE table derived
-    * from a prebuilt [[docBigrams]] aggregate (its distinct (w1, w2)
-    * projection — the same type set) instead of a second corpus tokenize:
-    * the shared-cache consumer form. */
+    * and are omitted. The bottom level's bigram TYPE table is the
+    * distinct (w1, w2) projection of the prebuilt [[docBigrams]] aggregate
+    * `docBig` (the same type set, no second corpus tokenize). Output:
+    * doc_id, n_trigrams, xent. */
   def kn3CrossEntropyFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
-                          textCol: String): DataFrame =
-    kn3CrossEntropyImpl(docs, idCol, textCol, Some(docBig))
-
-  private def kn3CrossEntropyImpl(docs: DataFrame, idCol: String,
-                                  textCol: String,
-                                  docBigPre: Option[DataFrame]): DataFrame = {
+                          textCol: String): DataFrame = {
     val toks = docs.select(col(idCol), split(col(textCol), " ").as("t"))
     // the >= 3 guard keeps slice's length argument non-negative (Spark
     // slice THROWS on negative length; a 1-token doc would pass -1)
@@ -296,18 +283,8 @@ object TextLm {
     // counting it would supernormalize the p2 layer (mass > 1)
     val mid2 = sub23.groupBy(col("w2"))
       .agg(sum(col("ns")).as("nm"), count(lit(1)).as("npb"))
-    // bigram TYPE table for the BOTTOM level's continuation stats — the
-    // distinct (w1, w2) projection of the shared doc-bigram aggregate
-    // when one is supplied (identical type set, one corpus pass saved)
-    val big = docBigPre match {
-      case Some(db) =>
-        db.select(col("w1").as("b1"), col("w2").as("b2")).distinct()
-      case None => toks.select(
-          explode(arrays_zip(
-            expr("slice(t, 1, size(t) - 1)").as("b1"),
-            expr("slice(t, 2, size(t) - 1)").as("b2"))).as("p"))
-        .select(col("p.b1").as("b1"), col("p.b2").as("b2")).distinct()
-    }
+    // bigram TYPE table for the BOTTOM level's continuation stats
+    val big = docBig.select(col("w1").as("b1"), col("w2").as("b2")).distinct()
     val cont = big.groupBy(col("b2")).agg(count(lit(1)).as("nc"))
       .withColumnRenamed("b2", "w3")
     val sizes = big.agg(count(lit(1)).as("t2")).crossJoin(
@@ -350,7 +327,7 @@ object TextLm {
     * discounted numerator (c − D(c))⁺ and the backoff weight γ stay
     * nonnegative on adversarial corpora; if any of n1/n2/n3 is zero the
     * estimator is undefined and all three fall back to the fixed D = 3/4
-    * of [[knCrossEntropy]] (mirrored verbatim in the oracle). */
+    * of [[knCrossEntropyFrom]] (mirrored verbatim in the oracle). */
   val mknProbSql: String = {
     val y = "(CAST(n1 AS DOUBLE) / CAST(n1 + 2 * n2 AS DOUBLE))"
     def clamp(raw: String, hi: Int) =
@@ -373,7 +350,7 @@ object TextLm {
   }
 
   /** MODIFIED Kneser-Ney bigram cross-entropy — the production form of
-    * [[knCrossEntropy]] (Chen & Goodman 1998 §: "modified Kneser-Ney", the
+    * [[knCrossEntropyFrom]] (Chen & Goodman 1998 §: "modified Kneser-Ney", the
     * smoothing every production LM toolkit defaults to): instead of one
     * fixed discount D, three count-specific discounts D1/D2/D3+ are
     * ESTIMATED FROM THE CORPUS'S OWN COUNT-OF-COUNTS n1..n4 (the number
@@ -396,18 +373,14 @@ object TextLm {
     * shared VERBATIM between engines, then micro-nat quantized once;
     * per-doc sums are exact occ-weighted BIGINT sums with the house
     * half-up terminal division. Scale: identical plan shape to
-    * [[knCrossEntropy]] — one extra conditional count triple on the
+    * [[knCrossEntropyFrom]] — one extra conditional count triple on the
     * history aggregate and four on the 1-row sizes aggregate; the model
     * stays the Zipf-bounded observed-bigram TYPE table.
     *
-    * Output: doc_id, n_bigrams, xent — the [[bigramCrossEntropy]]
-    * contract. */
-  def mknCrossEntropy(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    mknCrossEntropyFrom(docBigrams(docs, idCol, textCol), docs, idCol, textCol)
-
-  /** [[mknCrossEntropy]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form (the MKN model itself stays query-local:
-    * its count-specific discounts are not the shared KN model's). */
+    * Input: a prebuilt [[docBigrams]] aggregate (the MKN model itself
+    * stays query-local: its count-specific discounts are not the shared
+    * KN model's). Output: doc_id, n_bigrams, xent — the
+    * [[bigramCrossEntropy]] contract. */
   def mknCrossEntropyFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
     val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
@@ -441,7 +414,7 @@ object TextLm {
     * "Detecting Pretraining Data from Large Language Models" — public
     * paper): score each document by the mean negative log-probability of
     * its k% LEAST LIKELY tokens under the corpus LM (here the
-    * [[knCrossEntropy]] interpolated-KN bigram model — formula reused
+    * [[knCrossEntropyFrom]] interpolated-KN bigram model — formula reused
     * verbatim). A LOW score means even the document's most surprising
     * n-grams are well explained — the memorized/contaminated signature;
     * the mean over ALL tokens (plain xent) washes that signal out, which
@@ -455,20 +428,13 @@ object TextLm {
     * type exactly); instances sharing an lp value are interchangeable, so
     * the take is order-free. All arithmetic BIGINT micro-nats; one house
     * half-up 6-dp division per doc at the end. Plan shape =
-    * [[knCrossEntropy]] plus one per-doc collect_list of the doc's OWN
+    * [[knCrossEntropyFrom]] plus one per-doc collect_list of the doc's OWN
     * distinct bigram types (doc-bounded arrays, no windows).
     *
+    * Inputs: `docBig` from [[docBigrams]] and `model` from
+    * [[knBigramModel]] (one model join + one per-doc aggregate here).
     * Output: doc_id, n_bigrams, mink_xent (nats, 6 dp; docs with <2
     * tokens omitted — the [[bigramCrossEntropy]] contract). */
-  def minKProb(docs: DataFrame, idCol: String, textCol: String,
-               kNum: Int = 1, kDen: Int = 5): DataFrame = {
-    val docBig = docBigrams(docs, idCol, textCol)
-    minKProbFrom(docBig, knBigramModel(docBig, docs, textCol), idCol,
-      kNum, kDen)
-  }
-
-  /** [[minKProb]]'s bottom-k fold over prebuilt inputs — the shared-cache
-    * consumer form (one model join + one per-doc aggregate). */
   def minKProbFrom(docBig: DataFrame, model: DataFrame, idCol: String,
                    kNum: Int = 1, kDen: Int = 5): DataFrame = {
     require(kNum > 0 && kDen >= kNum, "need 0 < kNum <= kDen")
@@ -513,21 +479,6 @@ object TextLm {
                       groupCol: String): DataFrame =
     tercileMix(bigramCrossEntropy(docs, idCol, textCol), docs, idCol, groupCol)
 
-  /** [[crossEntropyMix]] on the [[knCrossEntropy]] scores — the same
-    * head/middle/tail integer-order-statistic terciles, driven by the
-    * KN-smoothed model (the CCNet production pairing: KN perplexity +
-    * tercile mix). Output contract identical to [[crossEntropyMix]]. */
-  def knMix(docs: DataFrame, idCol: String, textCol: String,
-            groupCol: String): DataFrame =
-    tercileMix(knCrossEntropy(docs, idCol, textCol), docs, idCol, groupCol)
-
-  /** [[knMix]] over an already-scored (idCol, n_bigrams, xent) frame —
-    * the shared-cache consumer form (the scores come from
-    * [[knCrossEntropyFrom]] on the session-shared model). */
-  def knMixFrom(scoredDocs: DataFrame, docs: DataFrame, idCol: String,
-                groupCol: String): DataFrame =
-    tercileMix(scoredDocs, docs, idCol, groupCol)
-
   /** RHO-style excess-loss selection (Mindermann et al. 2022, "Prioritized
     * Training on Points that are Learnable, Worth Learning, and Not Yet
     * Learnt"; Lin et al. 2024, RHO-1 — public papers): score each document
@@ -538,12 +489,12 @@ object TextLm {
     * learnable signal, not noise (noise scores high under BOTH models and
     * cancels). In-engine proxy for the two models: the add-one bigram LM
     * ([[bigramCrossEntropy]], the weak "current" model) and the
-    * interpolated-KN bigram LM ([[knCrossEntropy]], the strong reference)
+    * interpolated-KN bigram LM ([[knCrossEntropyFrom]], the strong reference)
     * — same corpus, same tokenization, so the excess isolates what better
     * smoothing explains.
     *
-    * Plan: ONE tokenize + per-doc bigram aggregate (persisted — it feeds
-    * both models and the scoring join); both models are observed-bigram
+    * Plan: ONE tokenize + per-doc bigram aggregate (it feeds both models
+    * and the scoring join); both models are observed-bigram
     * TYPE tables (Zipf-bounded) derived from the SAME type-count frame;
     * per-doc scoring is one double model join + one aggregate. The
     * per-group cut is an integer order statistic over the (group,
@@ -557,19 +508,10 @@ object TextLm {
     * micro-nat images ((2·(−mu)+m) div (2·m) — the house form), so the
     * excess is a BIGINT difference, the cut is integer arithmetic, and
     * the only doubles are the final 6-dp group means.
+    * Inputs: a prebuilt [[docBigrams]] aggregate and the
+    * [[knBigramModel]] reference model; only the weak add-one model (one
+    * token-count aggregate + one type-table join) is built here.
     * Output: (groupCol, selected, n_docs, mean_excess — nats, 6 dp). */
-  def excessLossSelect(docs: DataFrame, idCol: String, textCol: String,
-                       groupCol: String, keepNum: Int = 1,
-                       keepDen: Int = 4): DataFrame = {
-    val docBig = CacheScope.persist(docBigrams(docs, idCol, textCol))
-    excessLossSelectFrom(docBig, knBigramModel(docBig, docs, textCol),
-      docs, idCol, textCol, groupCol, keepNum, keepDen)
-  }
-
-  /** [[excessLossSelect]] over a prebuilt [[docBigrams]] aggregate and
-    * shared KN reference model — the shared-cache consumer form; only the
-    * weak add-one model (one token-count aggregate + one type-table join)
-    * is built locally. */
   def excessLossSelectFrom(docBig: DataFrame, knModel: DataFrame,
                            docs: DataFrame, idCol: String, textCol: String,
                            groupCol: String, keepNum: Int = 1,
@@ -650,18 +592,9 @@ object TextLm {
     *
     * Output: (round, source, n_docs, excess, weight) for round 0..rounds
     * — the weight trajectory a mixing stage consumes (excess in nats,
-    * 6 dp; weight on the 6-dp probability grid). */
-  def doremiWeights(docs: DataFrame, idCol: String, textCol: String,
-                    srcCol: String, rounds: Int = 4, smoothNum: Int = 1,
-                    smoothDen: Int = 5): DataFrame = {
-    val docBig = CacheScope.persist(docBigrams(docs, idCol, textCol))
-    doremiWeightsFrom(docBig, knBigramModel(docBig, docs, textCol),
-      docs, idCol, textCol, srcCol, rounds, smoothNum, smoothDen)
-  }
-
-  /** [[doremiWeights]] over the shared doc-bigram aggregate and KN model
-    * — the shared-cache consumer form (only the weak add-one model and
-    * the |domains|-row round ladder are built locally). */
+    * 6 dp; weight on the 6-dp probability grid). Inputs: the
+    * [[docBigrams]] aggregate and [[knBigramModel]] (only the weak add-one
+    * model and the |domains|-row round ladder are built here). */
   def doremiWeightsFrom(docBig: DataFrame, knModel: DataFrame,
                         docs: DataFrame, idCol: String, textCol: String,
                         srcCol: String, rounds: Int = 4, smoothNum: Int = 1,
@@ -730,10 +663,14 @@ object TextLm {
       }.reduce(_.unionByName(_))
   }
 
-  /** Shared tercile stage over a (idCol, n_bigrams, xent) scored frame —
-    * see [[crossEntropyMix]] for the exact-integer cutoff semantics. */
-  private def tercileMix(scoredDocs: DataFrame, docs: DataFrame,
-                         idCol: String, groupCol: String): DataFrame = {
+  /** The tercile stage over an already-scored (idCol, n_bigrams, xent)
+    * frame — see [[crossEntropyMix]] for the exact-integer cutoff
+    * semantics; output contract identical to it. On the
+    * [[knCrossEntropyFrom]] scores it is the CCNet production pairing
+    * (KN perplexity + tercile mix, q343); on
+    * [[groupedKnXentPerDocFromScored]] the per-language mix (q374). */
+  def tercileMix(scoredDocs: DataFrame, docs: DataFrame,
+                 idCol: String, groupCol: String): DataFrame = {
     val scored = scoredDocs
       .join(docs.select(col(idCol), col(groupCol).as("__g")), idCol)
       // xent is rounded to 6 dp, so this recovers its exact integer image
@@ -850,16 +787,10 @@ object TextLm {
     * omitted (the q101 contract); requires a non-empty target (the q151
     * contract). Scale: the q151 model plan + one per-doc aggregate +
     * TakeOrdered(k) — the only window orders the k selected rows.
+    * Input: a prebuilt [[docBigrams]] aggregate (target flags rejoin by
+    * id, the [[knImportanceWeightsFrom]] discipline; only the token-count
+    * aggregates and the |docs|-row draw are built here).
     * Output: (rnk, idCol, log_weight, gumbel, score) — nats, 6 dp. */
-  def dsirResample(docs: DataFrame, idCol: String, textCol: String,
-                   targetPred: Column, k: Int = 100): DataFrame =
-    dsirResampleFrom(docBigrams(docs, idCol, textCol), docs, idCol, textCol,
-      targetPred, k)
-
-  /** [[dsirResample]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form (target flags rejoin by id, the
-    * [[knImportanceWeightsFrom]] discipline; only the token-count
-    * aggregates and the |docs|-row draw are built locally). */
   def dsirResampleFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                        textCol: String, targetPred: Column,
                        k: Int = 100): DataFrame = {
@@ -907,7 +838,7 @@ object TextLm {
   }
 
   /** HELD-OUT interpolated-KN cross-entropy per source — the
-    * self-scoring-bias-free form of [[knCrossEntropy]]: every LM-quality
+    * self-scoring-bias-free form of [[knCrossEntropyFrom]]: every LM-quality
     * signal in this shelf trains on the corpus it scores, which
     * systematically favors duplicated/templated text (the model has seen
     * it); the proper evaluation trains on a TRAIN carve and scores only
@@ -927,14 +858,8 @@ object TextLm {
     * (token-weighted pooled nats, exact half-up 6 dp). Scale: the q342
     * model plan on the train slice + one left-ladder join over the
     * held-out slice — both filtered re-aggregates of the ONE shared
-    * doc-bigram frame; no second corpus pass. */
-  def heldoutKnXent(docs: DataFrame, idCol: String, textCol: String,
-                    srcCol: String): DataFrame =
-    heldoutKnXentFrom(docBigrams(docs, idCol, textCol), docs, idCol,
-      textCol, srcCol)
-
-  /** [[heldoutKnXent]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form. */
+    * doc-bigram frame (`docBig`, from [[docBigrams]]); no second corpus
+    * pass. */
   def heldoutKnXentFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                         textCol: String, srcCol: String): DataFrame = {
     val hoExpr = Sketches.hash60(concat_ws("#", lit("ho"),
@@ -974,7 +899,7 @@ object TextLm {
   }
 
   /** DSIR importance weights with BOTH models Kneser-Ney smoothed — the
-    * [[importanceWeights]] upgrade matching [[knCrossEntropy]]'s model
+    * [[importanceWeights]] upgrade matching [[knCrossEntropyFrom]]'s model
     * form (D = 3/4 absolute discounting, add-one-floored continuation).
     * The production recipe scores with KN-smoothed models on both sides
     * of the ratio; add-one's over-flat unseen mass systematically shrinks
@@ -983,7 +908,7 @@ object TextLm {
     * A scored bigram is always observed in the GENERAL model (trained on
     * the scoring corpus) but can be target-unseen, so the target side
     * runs the full interpolation ladder, every rung a BIGINT rational:
-    *  - bigram observed: the [[knCrossEntropy]] formula;
+    *  - bigram observed: the [[knCrossEntropyFrom]] formula;
     *  - history observed, bigram unseen: the discounted term is
     *    max(4·c2−3, 0) = 0, leaving λ(w1)·p_cont(w2) — SAME formula with
     *    c2 = 0 clamped;
@@ -994,22 +919,14 @@ object TextLm {
     * micro-nat quantization of both log-probs, exact occ-weighted integer
     * sums, bigram-/history-/continuation-keyed joins over Zipf-bounded
     * model tables, one broadcast (T_g, V_g, T_t, V_t) row.
-    * Output: group, n_bigrams, avg_logratio (nats, 6 dp). */
-  def knImportanceWeights(docs: DataFrame, idCol: String, textCol: String,
-                          groupCol: String, targetPred: Column): DataFrame = {
-    val docBig = docBigrams(docs, idCol, textCol)
-    knImportanceWeightsFrom(docBig, knBigramModel(docBig, docs, textCol),
-      docs, idCol, textCol, groupCol, targetPred)
-  }
-
-  /** [[knImportanceWeights]] over a prebuilt [[docBigrams]] aggregate and
-    * shared KN model — the shared-cache consumer form. The GENERAL side
-    * of the ratio IS the shared model (same corpus, same [[knLpSql]]
-    * closed form, so its quantized log-prob is reused as-is); only the
-    * target-filtered model is built locally, from a filtered re-aggregate
-    * of the shared doc-bigram frame — still no second corpus pass. Group
+    * Inputs: a prebuilt [[docBigrams]] aggregate and [[knBigramModel]].
+    * The GENERAL side of the ratio IS that model (same corpus, same
+    * [[knLpSql]] closed form, so its quantized log-prob is reused as-is);
+    * only the target-filtered model is built here, from a filtered
+    * re-aggregate of the doc-bigram frame — no second corpus pass. Group
     * and target flags rejoin by id (they are per-document attributes;
-    * the join is id-keyed and exact). */
+    * the join is id-keyed and exact).
+    * Output: group, n_bigrams, avg_logratio (nats, 6 dp). */
   def knImportanceWeightsFrom(docBig: DataFrame, knModel: DataFrame,
                               docs: DataFrame, idCol: String, textCol: String,
                               groupCol: String, targetPred: Column)
@@ -1060,7 +977,7 @@ object TextLm {
     * the interpolated-KN bigram LM at NESTED train-data fractions, plus
     * the log-linear slope — the measurement a data-curation team runs to
     * ask "is more of THIS corpus still buying loss?". The held-out eighth
-    * is [[heldoutKnXent]]'s md5 carve (salt 'ho', h < 2^57 — deliberately
+    * is [[heldoutKnXentFrom]]'s md5 carve (salt 'ho', h < 2^57 — deliberately
     * THE SAME carve, so the k = 7 point is q364's model evaluated pooled);
     * train set k uses the docs with h >= (8−k)·2^57, k ∈ ks — nested by
     * construction (train_1 ⊂ train_2 ⊂ … ), the way a real scaling sweep
@@ -1082,14 +999,8 @@ object TextLm {
     * filtered re-aggregate of those two frames — Zipf-bounded TYPE
     * tables, no second corpus pass, |ks| small and fixed. Output per k:
     * train_eighths, n_train_tokens, n_bigrams (held-out scored), xent,
-    * slope (the fit, repeated — it IS the result). */
-  def dataScalingFit(docs: DataFrame, idCol: String, textCol: String,
-                     ks: Seq[Int] = Seq(1, 2, 4, 7)): DataFrame =
-    dataScalingFitFrom(docBigrams(docs, idCol, textCol), docs, idCol,
-      textCol, ks)
-
-  /** [[dataScalingFit]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form.
+    * slope (the fit, repeated — it IS the result). `docBig` is a
+    * prebuilt [[docBigrams]] aggregate.
     *
     * Per-carve models are NOT per-k corpus re-aggregates: the shared
     * frames are collapsed ONCE to per-eighth-BUCKET type tables
@@ -1230,14 +1141,8 @@ object TextLm {
     * corpus gets more multilingual. One corpus pass (the doc-bigram
     * aggregate); everything downstream is Zipf-bounded per group.
     * Output per group: grpCol, n_docs, n_bigrams, xent (pooled
-    * token-weighted nats, exact half-up 6 dp). */
-  def groupedKnXent(docs: DataFrame, idCol: String, textCol: String,
-                    grpCol: String): DataFrame =
-    groupedKnXentFrom(docBigrams(docs, idCol, textCol), docs, idCol,
-      textCol, grpCol)
-
-  /** [[groupedKnXent]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form (the group flag rejoins by id). */
+    * token-weighted nats, exact half-up 6 dp). `docBig` is a prebuilt
+    * [[docBigrams]] aggregate (the group flag rejoins by id). */
   def groupedKnXentFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                         textCol: String, grpCol: String): DataFrame =
     groupedKnXentFromScored(
@@ -1259,7 +1164,7 @@ object TextLm {
   /** PER-DOCUMENT cross-entropy under the per-group models — the
     * [[knCrossEntropyFrom]] output contract (idCol, n_bigrams, xent),
     * each document scored by ITS OWN group's KN model. The frame the
-    * multilingual CCNet mix composes with [[knMixFrom]] (per-language
+    * multilingual CCNet mix composes with [[tercileMix]] (per-language
     * terciles over per-language models — q374). */
   def groupedKnXentPerDocFrom(docBig: DataFrame, docs: DataFrame,
                               idCol: String, textCol: String,
@@ -1341,14 +1246,8 @@ object TextLm {
     * rounding differ by ≤1 pico-unit per row — a defined, deterministic
     * approximation both engines share). σ = 0 → NULL z (excluded, with
     * n_bigrams counting scored instances only). Output: doc_id,
-    * n_bigrams, minkpp (mean bottom-k z, 6 dp — typically negative). */
-  def minKppProb(docs: DataFrame, idCol: String, textCol: String,
-                 kNum: Int = 1, kDen: Int = 5): DataFrame =
-    minKppProbFrom(docBigrams(docs, idCol, textCol), docs, idCol, textCol,
-      kNum, kDen)
-
-  /** [[minKppProb]] over a prebuilt [[docBigrams]] aggregate — the
-    * shared-cache consumer form. */
+    * n_bigrams, minkpp (mean bottom-k z, 6 dp — typically negative).
+    * `docBig` is a prebuilt [[docBigrams]] aggregate. */
   def minKppProbFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                      textCol: String, kNum: Int = 1,
                      kDen: Int = 5): DataFrame = {
@@ -1470,14 +1369,8 @@ object TextLm {
     * tables; each round is one broadcast of the 1-row λ + one aggregate
     * over the held-out TYPE table — constant rounds, no corpus re-scan.
     * Output per round r = 1..rounds: round, lambda (λ_r, 6 dp),
-    * n_bigrams (held-out instances), heldout_xent (under λ_r). */
-  def jmDeletedInterpolation(docs: DataFrame, idCol: String, textCol: String,
-                             rounds: Int = 3): DataFrame =
-    jmDeletedInterpolationFrom(docBigrams(docs, idCol, textCol), docs,
-      idCol, textCol, rounds)
-
-  /** [[jmDeletedInterpolation]] over a prebuilt [[docBigrams]] aggregate —
-    * the shared-cache consumer form. */
+    * n_bigrams (held-out instances), heldout_xent (under λ_r). `docBig`
+    * is a prebuilt [[docBigrams]] aggregate. */
   def jmDeletedInterpolationFrom(docBig: DataFrame, docs: DataFrame,
                                  idCol: String, textCol: String,
                                  rounds: Int = 3): DataFrame = {
@@ -1561,7 +1454,7 @@ object TextLm {
     * are never scored, and do not participate (the q374 contract).
     * xent's exact integer image is recovered via round(xent·1e6) — the
     * tercile stage is the same value-grid integer order statistic as
-    * [[knMix]], partitioned by language.
+    * [[tercileMix]], partitioned by language.
     *
     * Scale: tercile cuts on the per-language (xmu) VALUE GRID (grid
     * window, never a window over doc rows); the keep join broadcasts

@@ -78,39 +78,10 @@ object TextPrep {
     tf.join(dfreq, "token").select(col(idCol), col("token"), col("tf"), col("df"))
   }
 
-  /** Byte-pair-encoding vocabulary TRAINER (Sennrich et al. 2016): `merges`
-    * greedy merge rounds over the corpus word-type table, returning the
-    * merge table — (round, pair, merged, pair_count, vocab_size) — the
-    * tokenizer-training step upstream of every token-counting operator
-    * here.
-    *
-    * Semantics pinned for cross-engine exactness: words are whitespace
-    * tokens, a word's initial symbol string is its characters space-joined
-    * plus a trailing `</w>` marker; each round counts adjacent symbol
-    * pairs weighted by word frequency, picks argmax with the total
-    * (count DESC, pair ASC) order, and rewrites every word by LEFT-TO-RIGHT
-    * NON-OVERLAPPING replacement of the pair (both engines' `replace`
-    * semantics — so `a a a` merges to `aa a`, never `a aa`; the spec pins
-    * this on a fixture). All arithmetic is integer — no libm, no doubles
-    * anywhere.
-    *
-    * Scale design: the ONLY corpus-scale step is the one word-type
-    * aggregate (token-keyed, map-side combinable); every merge round runs
-    * on the word-TYPE table — Heaps-bounded vocabulary, not corpus rows —
-    * as a bigram explode + keyed sum + 1-row argmax broadcast back. Rounds
-    * are localCheckpointed (the q326 HITS cadence: 3·merges tiny jobs beat
-    * one 3·merges-deep lazy plan).
-    *
-    * ScaleSmoke 10x (sf0.1, local[32]): 6.7 s at 1x -> 2.9 s at 10x —
-    * flat (warm-up dominated): exact replicas scale every pair count
-    * uniformly, so all merge decisions are identical and round cost never
-    * leaves the vocabulary table.
-    */
-  def bpeTrain(docs: DataFrame, textCol: String, merges: Int = 10)
-  : DataFrame = bpeMergeLoop(docs, textCol, merges)._1
-
-  /** Encode the corpus with its own trained BPE vocabulary ([[bpeTrain]]'s
-    * `merges` rounds) and report per-document compression: word count,
+  /** Encode the corpus with its own trained BPE or WordPiece vocabulary
+    * (`dict`: the final word-type table of [[bpeMergeLoopFrom]] /
+    * [[wordpieceMergeLoopFrom]], session-shared as `bpe_dict` /
+    * `wordpiece_dict`) and report per-document compression: word count,
     * initial symbol count (chars + one `</w>` per word), encoded symbol
     * count, and the compression ratio — the train→apply round trip that
     * proves the merge table actually tokenizes.
@@ -120,68 +91,27 @@ object TextPrep {
     * OOV words; an open-vocab encode would fall back to character
     * symbols). Scale: the dictionary is the Heaps-bounded word-type
     * table — ONE word-keyed join + per-doc aggregate on top of training.
-    *
-    * ScaleSmoke 10x (sf0.1, local[32]): see bpe_encode — flat like
-    * bpe_train (identical merges on replicas, one extra keyed join).
     */
-  def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
-                merges: Int = 10): DataFrame =
-    encodeWithDict(docs, idCol, textCol, bpeMergeLoop(docs, textCol, merges)._2)
-
-  /** WordPiece vocabulary TRAINER (Schuster & Nakajima 2012, "Japanese
-    * and Korean Voice Search"; the BERT tokenizer — Devlin et al. 2019 —
-    * as specified in Wu et al. 2016 §3.1): the third tokenizer family
-    * beside [[bpeTrain]] (count-greedy) and [[unigramLmTrainStep]]
-    * (prune-from-large). Same greedy merge loop as BPE over the same
-    * word-type table, but each round merges the adjacent pair with the
-    * highest LIKELIHOOD-RATIO score
-    *
-    *   score(a, b) = count(ab) / (count(a) · count(b))
-    *
-    * — the merge that most increases the corpus likelihood under a
-    * unigram symbol model, so rare-but-collocated symbol pairs win over
-    * merely frequent ones (the defining WordPiece/BERT property).
-    *
-    * Determinism: count(ab), count(a), count(b) are exact BIGINTs from
-    * freq-weighted aggregates; the score is ONE IEEE division of two
-    * exactly-representable integers (count(a)·count(b) computed in
-    * BIGINT, exact in a double below 2^53) — deterministic on any IEEE
-    * engine, no libm anywhere. Argmax order is (score DESC, pair_count
-    * DESC, pair ASC) — the two-level tie-break the spec pins: equal
-    * scores fall to the more frequent pair, then lexicographic.
-    * Envelope: count(a)·count(b) must stay < 2^53 for the double to be
-    * exact (~9.4e7 occurrences per symbol side at the boundary); beyond
-    * that compare cross-products in DECIMAL(38,0) on both engines.
-    *
-    * Scale design identical to [[bpeTrain]]: one corpus-scale word-type
-    * aggregate, then Heaps-bounded rounds (pair explode + TWO keyed
-    * sums — pairs and symbol counts — + 1-row argmax), rounds
-    * localCheckpointed. Output adds the score column:
-    * (round, pair, merged, pair_count, score, vocab_size). */
-  def wordpieceTrain(docs: DataFrame, textCol: String, merges: Int = 10)
-  : DataFrame = wordpieceMergeLoop(docs, textCol, merges)._1
-
-  /** Encode the corpus with its own trained WordPiece vocabulary — the
-    * train→apply round trip, contract identical to [[bpeEncode]]
-    * (closed-vocab dictionary join + per-doc compression report). */
-  def wordpieceEncode(docs: DataFrame, idCol: String, textCol: String,
-                      merges: Int = 10): DataFrame =
-    encodeWithDict(docs, idCol, textCol,
-      wordpieceMergeLoop(docs, textCol, merges)._2)
-
-  /** [[bpeEncode]] / [[wordpieceEncode]] over a prebuilt trained
-    * word-type dictionary (`bpe_dict` / `wordpiece_dict`) — the
-    * session-shared consumer form: one closed-vocab dictionary join +
-    * the per-doc compression aggregate, the trainer priced by its own
-    * shared build. */
   def encodeFromDict(docs: DataFrame, idCol: String, textCol: String,
-                     dict: DataFrame): DataFrame =
-    encodeWithDict(docs, idCol, textCol, dict)
+                     dict: DataFrame): DataFrame = {
+    val dictNs = dict.select(col("w"),
+      size(split(col("sym"), " ")).cast("long").as("__ns"))
+    docs.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
+      .where(length(col("w")) > 0)
+      .join(dictNs, Seq("w"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_words"),
+        sum(length(col("w")) + 1).cast("long").as("n_syms_init"),
+        sum(col("__ns")).as("n_syms"))
+      .select(col(idCol), col("n_words"), col("n_syms_init"), col("n_syms"),
+        (col("n_syms_init").cast("double") / col("n_syms").cast("double"))
+          .as("compression"))
+  }
 
   /** Per-source tokenizer COMPRESSION census — the corpus-card table a
     * tokenizer choice is justified with: for each trained family (BPE
-    * [[bpeTrain]], WordPiece [[wordpieceTrain]], unigram-LM
-    * [[unigramLmTrainStep]]'s Viterbi segmenter) and each source, the
+    * [[bpeMergeLoopFrom]], WordPiece [[wordpieceMergeLoopFrom]], unigram-LM
+    * [[unigramLmTrainStepFrom]]'s Viterbi segmenter) and each source, the
     * word/char/piece masses and the two rates every tokenizer report
     * leads with — fertility (pieces per word) and chars-per-piece (the
     * bytes-per-token proxy; `</w>` is an emitted symbol carrying zero
@@ -199,21 +129,12 @@ object TextPrep {
     * Scale: three Heaps-bounded dictionary builds (each priced by its
     * own trainer row) + ONE persisted corpus word scan joined
     * word-keyed three times + |sources|-row aggregates — the q352
-    * shape × 3. */
-  def tokenizerCompressionCensus(docs: DataFrame, textCol: String,
-                                 srcCol: String, merges: Int = 10,
-                                 maxPieceLen: Int = 4, maxWordLen: Int = 16)
-  : DataFrame =
-    tokenizerCompressionCensusFrom(docs, textCol, srcCol,
-      bpeMergeLoop(docs, textCol, merges)._2,
-      wordpieceMergeLoop(docs, textCol, merges)._2,
-      unigramDp(docs, textCol, maxPieceLen, maxWordLen), maxWordLen)
-
-  /** [[tokenizerCompressionCensus]] over the three prebuilt trained
-    * dictionaries (`bpe_dict` / `wordpiece_dict` / `unigram_dp` — the
-    * session-shared forms): the census pays only its own corpus word
-    * scan plus three word-keyed joins; each trainer's floor is priced
-    * by its own shared build. */
+    * shape × 3.
+    *
+    * Inputs: the three trained dictionaries (`bpe_dict` /
+    * `wordpiece_dict` / `unigram_dp` — the session-shared forms), so the
+    * census pays only its own corpus word scan plus three word-keyed
+    * joins; each trainer's floor is priced by its own shared build. */
   def tokenizerCompressionCensusFrom(docs: DataFrame, textCol: String,
                                      srcCol: String, bpeDict: DataFrame,
                                      wpDict: DataFrame, ugDp: DataFrame,
@@ -247,15 +168,37 @@ object TextPrep {
       .unionByName(roll(ugD, "unigram"))
   }
 
-  /** The shared merge loop: returns (merge-table rows, final word-type
-    * table with each word's post-merge symbol string). */
-  private def bpeMergeLoop(docs: DataFrame, textCol: String, merges: Int)
-  : (DataFrame, DataFrame) =
-    bpeMergeLoopFrom(seedWordTypes(docs, textCol), merges)
-
-  /** [[bpeMergeLoop]] over a prebuilt word-type seed ([[seedWordTypesPlan]]
-    * rows) — the session-shared form (`tok_word_seed` feeds the three
-    * trainer families one corpus scan). */
+  /** Byte-pair-encoding vocabulary TRAINER (Sennrich et al. 2016): `merges`
+    * greedy merge rounds over the corpus word-type table, returning the
+    * merge table — (round, pair, merged, pair_count, vocab_size) — the
+    * tokenizer-training step upstream of every token-counting operator
+    * here.
+    *
+    * Semantics pinned for cross-engine exactness: words are whitespace
+    * tokens, a word's initial symbol string is its characters space-joined
+    * plus a trailing `</w>` marker; each round counts adjacent symbol
+    * pairs weighted by word frequency, picks argmax with the total
+    * (count DESC, pair ASC) order, and rewrites every word by LEFT-TO-RIGHT
+    * NON-OVERLAPPING replacement of the pair (both engines' `replace`
+    * semantics — so `a a a` merges to `aa a`, never `a aa`; the spec pins
+    * this on a fixture). All arithmetic is integer — no libm, no doubles
+    * anywhere.
+    *
+    * Scale design: the ONLY corpus-scale step is the one word-type
+    * aggregate (token-keyed, map-side combinable); every merge round runs
+    * on the word-TYPE table — Heaps-bounded vocabulary, not corpus rows —
+    * as a bigram explode + keyed sum + 1-row argmax broadcast back. Rounds
+    * are localCheckpointed (the q326 HITS cadence: 3·merges tiny jobs beat
+    * one 3·merges-deep lazy plan). Exact replicas scale every pair count
+    * uniformly, so all merge decisions are identical and round cost never
+    * leaves the vocabulary table.
+    *
+    * Input: a word-type seed ([[seedWordTypesPlan]] rows — the
+    * session-shared `tok_word_seed` feeds the three trainer families one
+    * corpus scan). Returns (merge-table rows, final word-type table with
+    * each word's post-merge symbol string — the [[encodeFromDict]]
+    * dictionary).
+    */
   private[graft] def bpeMergeLoopFrom(seed: DataFrame, merges: Int)
   : (DataFrame, DataFrame) = {
     require(merges >= 1, "need at least one merge round")
@@ -303,15 +246,37 @@ object TextPrep {
     (merged, wt)
   }
 
-  /** [[wordpieceTrain]]'s loop — [[bpeMergeLoop]] with the argmax driven
-    * by the likelihood-ratio score (count(ab)/(count(a)·count(b)), one
-    * exact IEEE division) instead of the raw pair count. */
-  private def wordpieceMergeLoop(docs: DataFrame, textCol: String,
-                                 merges: Int): (DataFrame, DataFrame) =
-    wordpieceMergeLoopFrom(seedWordTypes(docs, textCol), merges)
-
-  /** [[wordpieceMergeLoop]] over a prebuilt word-type seed — the
-    * session-shared form (the [[bpeMergeLoopFrom]] contract). */
+  /** WordPiece vocabulary TRAINER (Schuster & Nakajima 2012, "Japanese
+    * and Korean Voice Search"; the BERT tokenizer — Devlin et al. 2019 —
+    * as specified in Wu et al. 2016 §3.1): the third tokenizer family
+    * beside [[bpeMergeLoopFrom]] (count-greedy) and [[unigramLmTrainStepFrom]]
+    * (prune-from-large). Same greedy merge loop as BPE over the same
+    * word-type table, but each round merges the adjacent pair with the
+    * highest LIKELIHOOD-RATIO score
+    *
+    *   score(a, b) = count(ab) / (count(a) · count(b))
+    *
+    * — the merge that most increases the corpus likelihood under a
+    * unigram symbol model, so rare-but-collocated symbol pairs win over
+    * merely frequent ones (the defining WordPiece/BERT property).
+    *
+    * Determinism: count(ab), count(a), count(b) are exact BIGINTs from
+    * freq-weighted aggregates; the score is ONE IEEE division of two
+    * exactly-representable integers (count(a)·count(b) computed in
+    * BIGINT, exact in a double below 2^53) — deterministic on any IEEE
+    * engine, no libm anywhere. Argmax order is (score DESC, pair_count
+    * DESC, pair ASC) — the two-level tie-break the spec pins: equal
+    * scores fall to the more frequent pair, then lexicographic.
+    * Envelope: count(a)·count(b) must stay < 2^53 for the double to be
+    * exact (~9.4e7 occurrences per symbol side at the boundary); beyond
+    * that compare cross-products in DECIMAL(38,0) on both engines.
+    *
+    * Scale design identical to [[bpeMergeLoopFrom]]: one corpus-scale word-type
+    * aggregate, then Heaps-bounded rounds (pair explode + TWO keyed
+    * sums — pairs and symbol counts — + 1-row argmax), rounds
+    * localCheckpointed. Input and return contract as [[bpeMergeLoopFrom]];
+    * the merge table adds the score column:
+    * (round, pair, merged, pair_count, score, vocab_size). */
   private[graft] def wordpieceMergeLoopFrom(seed: DataFrame, merges: Int)
   : (DataFrame, DataFrame) = {
     require(merges >= 1, "need at least one merge round")
@@ -368,8 +333,7 @@ object TextPrep {
     * with sym the space-joined characters + `</w>` marker. Chars via
     * substr (split-on-empty-regex trails an empty string on some
     * engines; substr is unambiguous). The PLAN form — the session-shared
-    * `tok_word_seed` builder persists it; standalone loops checkpoint
-    * via [[seedWordTypes]]. */
+    * `tok_word_seed` builder persists it. */
   private[graft] def seedWordTypesPlan(docs: DataFrame, textCol: String)
   : DataFrame =
     docs.select(explode(split(col(textCol), " ")).as("w"))
@@ -378,9 +342,6 @@ object TextPrep {
       .select(col("w"), col("freq"),
         concat(array_join(transform(sequence(lit(1), length(col("w"))),
           i => col("w").substr(i, lit(1))), " "), lit(" </w>")).as("sym"))
-
-  private def seedWordTypes(docs: DataFrame, textCol: String): DataFrame =
-    seedWordTypesPlan(docs, textCol).localCheckpoint()
 
   /** The ONE boundary-safe pair rewrite, shared by both merge loops:
     * each symbol is matched with BOTH its delimiters by doubling the
@@ -402,31 +363,13 @@ object TextPrep {
     wt.select(explode(split(col("sym"), " ")).as("s"))
       .agg(countDistinct(col("s")).as("vocab_size"))
 
-  /** Closed-vocab encode against a trained word-type dictionary — the
-    * shared apply stage of [[bpeEncode]] / [[wordpieceEncode]]. */
-  private def encodeWithDict(docs: DataFrame, idCol: String,
-                             textCol: String, wt: DataFrame): DataFrame = {
-    val dict = wt.select(col("w"),
-      size(split(col("sym"), " ")).cast("long").as("__ns"))
-    docs.select(col(idCol), explode(split(col(textCol), " ")).as("w"))
-      .where(length(col("w")) > 0)
-      .join(dict, Seq("w"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("w")) + 1).cast("long").as("n_syms_init"),
-        sum(col("__ns")).as("n_syms"))
-      .select(col(idCol), col("n_words"), col("n_syms_init"), col("n_syms"),
-        (col("n_syms_init").cast("double") / col("n_syms").cast("double"))
-          .as("compression"))
-  }
-
   /** Unigram-LM (SentencePiece) tokenizer training step — one hard-EM
     * iteration over a seeded subword vocabulary with Viterbi segmentation
     * (Kudo 2018, "Subword Regularization", public paper; Kudo's full EM
     * uses forward–backward expected counts — the Viterbi/hard-EM variant
     * here assigns each word type its single best segmentation, the
     * standard deterministic approximation). The missing half of the
-    * tokenizer shelf beside [[bpeTrain]]: BPE grows a vocabulary by
+    * tokenizer shelf beside [[bpeMergeLoopFrom]]: BPE grows a vocabulary by
     * merging, unigram-LM starts from a large seed vocabulary and
     * re-estimates piece probabilities (pruning then iterates — one
     * iteration is the oracled unit here).
@@ -464,18 +407,14 @@ object TextPrep {
     *
     * Output: (piece, em_count, lp0, lp1) for every piece with em_count >
     * 0 — piece, its Viterbi usage count, seed and re-estimated log-probs
-    * (nats, 6 dp). */
-  def unigramLmTrainStep(docs: DataFrame, textCol: String,
-                         maxPieceLen: Int = 4, maxWordLen: Int = 16)
-  : DataFrame =
-    unigramLmTrainStepFrom(unigramDp(docs, textCol, maxPieceLen, maxWordLen))
-
-  /** [[unigramLmTrainStep]] over a prebuilt Viterbi DP frame (the
-    * session-shared `unigram_dp`): the piece inventory AND the seed
-    * log-prob table are both recovered from the DP's own candidate
-    * structs (every piece's seed lp rides every (word, position)
-    * candidate — min per piece TYPE is exact recovery, all copies
-    * equal), so ONE shared frame serves the whole unigram shelf. */
+    * (nats, 6 dp).
+    *
+    * Input: the [[unigramDpFrom]] Viterbi DP frame (the session-shared
+    * `unigram_dp`): the piece inventory AND the seed log-prob table are
+    * both recovered from the DP's own candidate structs (every piece's
+    * seed lp rides every (word, position) candidate — min per piece TYPE
+    * is exact recovery, all copies equal), so ONE shared frame serves the
+    * whole unigram shelf. */
   def unigramLmTrainStepFrom(dp0: DataFrame): DataFrame = {
     val dp = CacheScope.persist(dp0)
     val em = dp.select(col("freq"), explode(col("pieces")).as("piece"))
@@ -489,9 +428,9 @@ object TextPrep {
   }
 
   /** Per-source segmentation FERTILITY under the unigram-LM seed model —
-    * the train→apply round trip for [[unigramLmTrainStep]], exactly as
-    * [[bpeEncode]] is to [[bpeTrain]]: segment every word type with the
-    * Viterbi DP (same model, same min-start tie-break), then charge each
+    * the train→apply round trip for [[unigramLmTrainStepFrom]], exactly
+    * as [[encodeFromDict]] is to [[bpeMergeLoopFrom]]: segment every word
+    * type with the Viterbi DP (same model, same min-start tie-break), then charge each
     * source its occurrence-weighted piece count. Fertility
     * (pieces/word) is THE tokenizer-quality number a corpus report
     * tracks per language/source (high fertility = the vocabulary fits
@@ -500,19 +439,12 @@ object TextPrep {
     * Scale: the DP runs ONCE per word TYPE (Heaps-bounded); the apply
     * side is one word-keyed join from the exploded corpus onto the
     * |types|-row piece-count table plus a per-source aggregate — the
-    * bpeEncode shape. Words over `maxWordLen` are excluded from both
+    * encodeFromDict shape. Words over `maxWordLen` are excluded from both
     * the model and the count (mirrored in the oracle).
     *
     * Output: (source, n_words, n_pieces, fertility) with fertility the
-    * house exact-integer half-up 6-dp rational. */
-  def unigramLmFertility(docs: DataFrame, textCol: String, srcCol: String,
-                         maxPieceLen: Int = 4, maxWordLen: Int = 16)
-  : DataFrame =
-    unigramLmFertilityFrom(unigramDp(docs, textCol, maxPieceLen, maxWordLen),
-      docs, textCol, srcCol, maxWordLen)
-
-  /** [[unigramLmFertility]] over a prebuilt Viterbi DP frame — the
-    * session-shared consumer form (`unigram_dp`). */
+    * house exact-integer half-up 6-dp rational. `dp` is the
+    * [[unigramDpFrom]] frame (session-shared as `unigram_dp`). */
   def unigramLmFertilityFrom(dp: DataFrame, docs: DataFrame,
                              textCol: String, srcCol: String,
                              maxWordLen: Int): DataFrame = {
@@ -554,17 +486,10 @@ object TextPrep {
     * (occurrence-weighted Viterbi piece totals under seed vs pruned
     * model), fertility_before/fertility_after (house exact half-up
     * 6 dp). Scale: two TYPE-table Viterbi passes + three 1-row
-    * aggregates — nothing new touches the corpus. */
-  def unigramLmPrune(docs: DataFrame, textCol: String,
-                     keepNum: Int = 1, keepDen: Int = 2,
-                     maxPieceLen: Int = 4, maxWordLen: Int = 16)
-  : DataFrame =
-    unigramLmPruneFrom(unigramDp(docs, textCol, maxPieceLen, maxWordLen),
-      keepNum, keepDen)
-
-  /** [[unigramLmPrune]] over a prebuilt Viterbi DP frame — the
-    * session-shared consumer form; the piece-position inventory is
-    * recovered from the DP's candidate structs ([[invFromDp]]). */
+    * aggregates — nothing new touches the corpus. `dp0` is the
+    * [[unigramDpFrom]] frame (session-shared as `unigram_dp`); the
+    * piece-position inventory is recovered from its candidate structs
+    * ([[invFromDp]]). */
   def unigramLmPruneFrom(dp0: DataFrame, keepNum: Int, keepDen: Int)
   : DataFrame = {
     require(keepNum > 0 && keepDen > keepNum, "need 0 < keepNum < keepDen")
@@ -613,7 +538,7 @@ object TextPrep {
       .select(col("seed_vocab"), col("active_vocab"), col("kept_vocab"),
         col("n_words"), col("pieces_before"), col("pieces_after"),
         // DECIMAL(38,0): same >~4.6e12-piece BIGINT-wrap guard as
-        // unigramLmFertility (q353's oracle widens with CAST(2 AS
+        // unigramLmFertilityFrom (q353's oracle widens with CAST(2 AS
         // HUGEINT) — its agg CTE pre-casts the piece sums to BIGINT)
         (expr("CAST((CAST(2 AS DECIMAL(38,0)) * pieces_before * 1000000 + n_words)" +
             " DIV (2 * n_words) AS BIGINT)")
@@ -623,24 +548,15 @@ object TextPrep {
           .cast("double") / lit(1e6)).as("fertility_after"))
   }
 
-  /** Shared seed-model + Viterbi chain for [[unigramLmTrainStep]] /
-    * [[unigramLmFertility]] / [[unigramLmPrune]]: one row per word type
-    * with its DP `best` array, backtrace `bounds`, decoded `pieces`, and
-    * the candidate structs `cands` (s, e, lp) the seed model and piece
-    * inventory are recoverable from ([[lp0FromDp]] / [[invFromDp]]) —
-    * the ONE frame the session shares as `unigram_dp`. */
-  private[graft] def unigramDp(docs: DataFrame, textCol: String,
-                               maxPieceLen: Int, maxWordLen: Int)
-  : DataFrame =
-    unigramDpFrom(
-      docs.select(explode(split(col(textCol), " ")).as("w"))
-        .where(length(col("w")) > 0 && length(col("w")) <= maxWordLen)
-        .groupBy(col("w")).agg(count(lit(1)).as("freq")),
-      maxPieceLen, maxWordLen)
-
-  /** [[unigramDp]] over a prebuilt (w, freq) word-type table — the
-    * session-shared form (the `tok_word_seed` scan, maxWordLen-filtered,
-    * feeds it so all three trainer families share one corpus scan). */
+  /** Shared seed-model + Viterbi chain for [[unigramLmTrainStepFrom]] /
+    * [[unigramLmFertilityFrom]] / [[unigramLmPruneFrom]]: one row per
+    * word type with its DP `best` array, backtrace `bounds`, decoded
+    * `pieces`, and the candidate structs `cands` (s, e, lp) the seed
+    * model and piece inventory are recoverable from ([[lp0FromDp]] /
+    * [[invFromDp]]) — the ONE frame the session shares as `unigram_dp`.
+    * Input: a (w, freq) word-type table of non-empty words of at most
+    * `maxWordLen` chars (the `tok_word_seed` scan, maxWordLen-filtered,
+    * so all three trainer families share one corpus scan). */
   private[graft] def unigramDpFrom(words: DataFrame, maxPieceLen: Int,
                                    maxWordLen: Int): DataFrame = {
     require(maxPieceLen >= 1 && maxWordLen >= maxPieceLen,
@@ -689,7 +605,7 @@ object TextPrep {
     * 0-based positions; Spark's [] array access is 0-based, element_at
     * is 1-based with -1 = last). bounds descends len -> ... -> 0; pieces
     * re-derive from the boundary pairs by substr, so the fold carries
-    * only ints. Shared by the seed pass and [[unigramLmPrune]]'s second
+    * only ints. Shared by the seed pass and [[unigramLmPruneFrom]]'s second
     * pass over the restricted vocabulary. */
   private def viterbiFold(cands: DataFrame): DataFrame =
     cands

@@ -74,13 +74,6 @@ object Pipeline {
       .map(d => d -> runStage(spark, cfg, stage, d, fetch))
       .toSeq
 
-  /** Sequential full-DAG backfill in date order — max_active_runs=1 parity
-    * (reference: dags/weather_daily_etl.py:66; README.md:88-102). */
-  def runRange(spark: SparkSession, cfg: AppConfig,
-               start: LocalDate, endInclusive: LocalDate,
-               fetch: AppConfig => String = HttpSource.fetchForecast(_)): Seq[(LocalDate, Long)] =
-    runStageRange(spark, cfg, "day", start, endInclusive, fetch)
-
   /** CLI: `[day|bronze|silver|gold|stage|upsert] --config path
     * --date YYYY-MM-DD [--end YYYY-MM-DD]` (reference: O2 — Jinja `{{ ds }}`
     * → argv; subcommands mirror the standalone per-stage DAGs). `day` (the

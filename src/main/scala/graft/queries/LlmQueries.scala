@@ -60,8 +60,8 @@ object LlmQueries {
   /** q141's winnowed-fingerprint pair set, shared the same way (the r12
     * verdict's last ≥4 s dedup heavies): the fingerprint inventory +
     * df-capped inverted-list self-join is the cost; what persists is
-    * only the verified pair set — tiny. Standalone semantics: a cold
-    * call rebuilds identically (RoundThirteenOpsSpec pins it). */
+    * only the verified pair set — tiny. RoundThirteenOpsSpec compares the
+    * cached pairs against a fresh `winnowNearDupPairs` build. */
   private[queries] val winnowPairs = SharedCache("winnow_pairs") { (s, d) =>
     TextDedup.winnowNearDupPairs(
       table(s, d, "documents"), "doc_id", "text",
@@ -71,13 +71,12 @@ object LlmQueries {
   /** The q142 Lloyd ASSIGNMENT over the embeddings table (vec_id, cid,
     * emb, nrm) plus its trained centroid frame, as (cents, assign) — FOUR
     * consumers derive this identical pair at identical parameters
-    * (nlist=8, lloydIters=2): q142 semanticDedup, q362
-    * prototypicalityBand, q387 semanticDecontam, and [[dedupWorklist]]'s
-    * semantic pair stage; each previously re-ran the norms scan + Lloyd
+    * (nlist=8, lloydIters=2): q142 semanticDedupFrom, q362
+    * prototypicalityBandFrom, q387 semanticDecontamFrom, and
+    * [[dedupWorklist]]'s semantic pair stage; each previously re-ran the norms scan + Lloyd
     * rounds + assignment (~1–2.5 s apiece at sf0.1). ONE build installs
-    * both frames. Standalone semantics: a cold call rebuilds identically
-    * (SharedFormsSpec pins shared == standalone for all four
-    * consumers). */
+    * both frames. SharedFormsSpec compares all four consumers against
+    * their `*From` forms over a fresh `semAssignmentFrames` build. */
   private[queries] val semFrames = SharedCache.twin("sem_cents", "sem_assign") {
     (s, d) =>
       val (assign, cents) = Similarity.semAssignmentFrames(
@@ -90,8 +89,9 @@ object LlmQueries {
     * semantic, per-doc fate + survivor): the worklist query and its
     * funnel both consume one build, and the persisted result is |docs|
     * rows. The near-dup stage reuses the shared MinHash pair graph; the
-    * semantic pair set is the q142 cell lineage's pair form. Standalone
-    * semantics: a cold call rebuilds identically. */
+    * semantic pair set is the q142 cell lineage's pair form.
+    * SharedFormsSpec compares it against `dedupPipeline` over fresh
+    * MinHash and semantic pair builds. */
   private[queries] val dedupWorklist =
     SharedCache("dedup_worklist", nearDupPairs, semFrames) { (s, d) =>
       TextDedup.dedupPipeline(
@@ -105,8 +105,8 @@ object LlmQueries {
     * w1, w2, occ) — SEVEN queries start from this one frame
     * (q342/q343/q344/q347/q348/q349/q354), and before r16 each rebuilt
     * it (~1.5–4.7 s apiece at sf0.1). |rows| ≈ corpus bigram instances
-    * collapsed to per-doc types. Standalone semantics: a cold call
-    * rebuilds identically (SharedFormsSpec pins shared == standalone). */
+    * collapsed to per-doc types. SharedFormsSpec compares its consumers
+    * against their `*From` forms over a fresh `docBigrams` build. */
   private[queries] val knDocBigrams = SharedCache("kn_doc_bigrams") { (s, d) =>
     graft.operators.TextLm.docBigrams(table(s, d, "documents"), "doc_id", "text")
   }
@@ -124,8 +124,8 @@ object LlmQueries {
   /** The per-language KN scored TYPE frame (one row per (doc, lang,
     * bigram type) with lp_mu under the doc's OWN language model) — feeds
     * q369 (pooled) and q374 (per-doc + tercile mix). Built from
-    * [[knDocBigrams]]. Standalone semantics: a cold call rebuilds
-    * identically (SharedFormsSpec pins shared == standalone). */
+    * [[knDocBigrams]]. SharedFormsSpec compares q369/q374 against a
+    * fresh `groupedKnScoredFrom(docBigrams(docs))` chain. */
   private[queries] val langKnScored =
     SharedCache("lang_kn_scored", knDocBigrams) { (s, d) =>
       graft.operators.TextLm.groupedKnScoredFrom(
@@ -135,8 +135,9 @@ object LlmQueries {
   /** The 13-rule Gopher repetition MICRO census (doc_id, n_lines,
     * <rule>_mu x13, pass) — FIVE queries consume one build
     * (q375/q376/q381/q385/q392; ~4-5 s apiece at sf0.1 rebuilt, the
-    * single most-shared frame after the KN caches). Standalone
-    * semantics: a cold call rebuilds identically. */
+    * single most-shared frame after the KN caches). RoundEighteenShelfSpec
+    * compares its consumers against their `*From` forms over a fresh
+    * `gopherMicro` build. */
   private[queries] val gopherMicroShared = SharedCache("gopher_micro") {
     (s, d) =>
       TextDedup.gopherMicro(table(s, d, "documents"), "doc_id", "text",
@@ -154,8 +155,8 @@ object LlmQueries {
     * THREE consumers (q388 verbatim, q394's allocation input, q398's
     * soft leg), each previously re-running the commonness model + per-doc
     * score over the shared KN inventory (~1.5–1.9 s apiece at sf0.1).
-    * Built from [[knDocBigrams]]. Standalone semantics: a cold call
-    * rebuilds identically (SharedFormsSpec pins it). */
+    * Built from [[knDocBigrams]]. SharedFormsSpec compares q388/q394/q398
+    * against a fresh `softDedupWeights(docBigrams(docs))` build. */
   private[queries] val softDedupWeightsShared =
     SharedCache("softdedup_weights", knDocBigrams) { (s, d) =>
       graft.operators.TextLm.softDedupWeights(knDocBigrams(s, d), "doc_id")
@@ -165,8 +166,8 @@ object LlmQueries {
     * EIGHT builds per suite pass collapsed to three priced ones: q389
     * (k=5/10/20), q393 (k=10), q397 (k=5/10/20) and the q395 card's
     * k=10 leg all consume [[TextDedup.memWindowInventory]] frames.
-    * Standalone semantics: a cold call rebuilds identically
-    * (SharedFormsSpec pins shared == standalone).
+    * SharedFormsSpec compares those consumers against their `*From`
+    * forms over fresh single-k `memWindowInventory` builds.
     *
     * r20: the three per-k builds each re-paid the parquet scan + token
     * split (guide §2.4 — one corpus pass instead of three). The parent
@@ -196,9 +197,9 @@ object LlmQueries {
     * feeding all three trainer families (bpe/wordpiece merge loops
     * directly; unigram via the maxWordLen-filtered projection). Eight
     * consumers ride it transitively (q331/q334/q357/q358/q350/q352/
-    * q353/q390 — far past the house 3+ rule). Standalone semantics: a
-    * cold call rebuilds identically (TextPrepSpec pins shared ==
-    * standalone). */
+    * q353/q390 — far past the house 3+ rule). RoundNineteenShelfSpec
+    * compares the eight consumers against the trainer `*From` forms over
+    * a fresh `seedWordTypesPlan` build. */
   private[queries] val tokSeedShared = SharedCache("tok_word_seed") { (s, d) =>
     graft.operators.TextPrep.seedWordTypesPlan(table(s, d, "documents"), "text")
   }
@@ -288,13 +289,13 @@ object LlmQueries {
     // operators downstream would load. One corpus-scale aggregate; every
     // round is vocab-bounded. All-integer; the oracle re-derives the
     // whole training loop (unrolled materialized CTEs). See
-    // TextPrep.bpeTrain.
+    // TextPrep.bpeMergeLoopFrom.
     "q331_bpe_train" -> ((s, d) => bpeTrained(s, d)._1),
 
     // BPE ENCODE — the train->apply round trip: q331's 10 merges, then
     // every doc re-tokenized through the trained word-type dictionary;
     // per-doc symbol counts and compression ratio. One word-keyed join
-    // on top of training. See TextPrep.bpeEncode.
+    // on top of training. See TextPrep.encodeFromDict.
     "q334_bpe_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
         "doc_id", "text", bpeTrained(s, d)._2)),
@@ -303,12 +304,12 @@ object LlmQueries {
     // third tokenizer family: q331's merge loop with the argmax driven
     // by the likelihood-ratio score count(ab)/(count(a)*count(b)) (one
     // exact IEEE division of exact BIGINTs — no libm), tie-break
-    // (score, pair_count, pair). See TextPrep.wordpieceTrain.
+    // (score, pair_count, pair). See TextPrep.wordpieceMergeLoopFrom.
     "q357_wordpiece_train" -> ((s, d) => wpTrained(s, d)._1),
 
     // WordPiece ENCODE — the train->apply round trip over q357's merge
     // table, same closed-vocab dictionary-join contract as q334. See
-    // TextPrep.wordpieceEncode.
+    // TextPrep.encodeFromDict.
     "q358_wordpiece_encode" -> ((s, d) =>
       graft.operators.TextPrep.encodeFromDict(table(s, d, "documents"),
         "doc_id", "text", wpTrained(s, d)._2)),
@@ -317,7 +318,7 @@ object LlmQueries {
     // (q357) and unigram-LM (q350) apply passes rolled up per source —
     // fertility and chars-per-piece per (tokenizer, source), the
     // corpus-card table a tokenizer choice is justified with. See
-    // TextPrep.tokenizerCompressionCensus.
+    // TextPrep.tokenizerCompressionCensusFrom.
     "q390_tokenizer_census" -> ((s, d) =>
       graft.operators.TextPrep.tokenizerCompressionCensusFrom(
         table(s, d, "documents"), "text", "source",
@@ -1251,7 +1252,7 @@ object LlmQueries {
     // space — within each Lloyd cluster, drop vectors cosine-close to an
     // earlier member. The cluster count is the scale knob (at web scale
     // nlist grows with the corpus); the pairwise compare never leaves its
-    // cluster. See Similarity.semanticDedup.
+    // cluster. See Similarity.semanticDedupFrom.
     "q142_semantic_dedup" -> ((s, d) =>
       Similarity.semanticDedupFrom(semFrames(s, d)._2, "vec_id",
         threshold = 0.3)),
@@ -1260,7 +1261,7 @@ object LlmQueries {
     // = 0 stand in for the eval benchmark; training vectors cosine-close
     // (>= 0.3) to ANY eval vector inside their Lloyd cell are dropped —
     // the paraphrase-robust stage exact-span q361 cannot express. See
-    // Similarity.semanticDecontam.
+    // Similarity.semanticDecontamFrom.
     "q387_semantic_decontam" -> ((s, d) =>
       Similarity.semanticDecontamFrom(semFrames(s, d)._2, "vec_id",
         col("vec_id") % 10 === 0, threshold = 0.3)),
@@ -1526,7 +1527,7 @@ object LlmQueries {
     // upgrade of q101's add-one model — same per-TYPE micro-nat
     // quantization and exact integer per-doc sums, model derived
     // entirely from the observed-bigram type table. See
-    // TextLm.knCrossEntropy.
+    // TextLm.knCrossEntropyFrom.
     "q342_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.knCrossEntropyFrom(
         knDocBigrams(s, d), knModelShared(s, d), "doc_id")),
@@ -1540,9 +1541,9 @@ object LlmQueries {
 
     // q140's CCNet tercile mix driven by the KN scores: identical exact
     // integer order-statistic cutoffs, production smoothing. See
-    // TextLm.knMix.
+    // TextLm.tercileMix.
     "q343_kn_ppl_mix" -> ((s, d) =>
-      graft.operators.TextLm.knMixFrom(
+      graft.operators.TextLm.tercileMix(
         graft.operators.TextLm.knCrossEntropyFrom(
           knDocBigrams(s, d), knModelShared(s, d), "doc_id"),
         table(s, d, "documents"), "doc_id", "source")),
@@ -1550,7 +1551,7 @@ object LlmQueries {
     // q151's DSIR importance weights with BOTH models KN-smoothed; the
     // target side runs the full interpolation ladder (bigram observed /
     // history-only / continuation-only), every rung a BIGINT rational.
-    // See TextLm.knImportanceWeights.
+    // See TextLm.knImportanceWeightsFrom.
     "q344_kn_importance_weights" -> ((s, d) =>
       graft.operators.TextLm.knImportanceWeightsFrom(
         knDocBigrams(s, d), knModelShared(s, d),
@@ -1575,7 +1576,7 @@ object LlmQueries {
     // backing into CONTINUATION-count bigram and unigram layers (the
     // defining KN property), fixed-order double evaluation per trigram
     // TYPE, micro-nat quantization, exact per-doc sums. See
-    // TextLm.kn3CrossEntropy.
+    // TextLm.kn3CrossEntropyFrom.
     "q347_kn3_xent" -> ((s, d) =>
       graft.operators.TextLm.kn3CrossEntropyFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
@@ -1583,7 +1584,7 @@ object LlmQueries {
     // RHO-style excess-loss selection: per-doc xent under the weak
     // add-one bigram LM minus xent under the strong KN reference, top
     // quarter per source kept by an integer-order-statistic cut (ties
-    // fall to the unselected side). See TextLm.excessLossSelect.
+    // fall to the unselected side). See TextLm.excessLossSelectFrom.
     "q348_excess_loss_select" -> ((s, d) =>
       graft.operators.TextLm.excessLossSelectFrom(
         knDocBigrams(s, d), knModelShared(s, d),
@@ -1593,7 +1594,7 @@ object LlmQueries {
     // D1/D2/D3+ estimated from the corpus's own count-of-counts n1..n4
     // (Chen & Goodman 1998) — the smoothing production LM toolkits
     // default to; formula text shared verbatim with the oracle. See
-    // TextLm.mknCrossEntropy.
+    // TextLm.mknCrossEntropyFrom.
     "q349_mkn_xent" -> ((s, d) =>
       graft.operators.TextLm.mknCrossEntropyFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
@@ -1601,7 +1602,7 @@ object LlmQueries {
     // Unigram-LM (SentencePiece) tokenizer training step: seed subword
     // vocabulary (all substrings <= 4 chars), one hard-EM iteration with
     // exact-integer Viterbi segmentation per word TYPE, min-start
-    // tie-break. See TextPrep.unigramLmTrainStep.
+    // tie-break. See TextPrep.unigramLmTrainStepFrom.
     "q350_unigram_lm_em" -> ((s, d) =>
       graft.operators.TextPrep.unigramLmTrainStepFrom(unigramDpShared(s, d))),
 
@@ -1625,7 +1626,7 @@ object LlmQueries {
     // actual deterministic sample: Gumbel-top-k over per-doc SUM
     // log-ratios (sampling without replacement ∝ exp(log-weight)); the
     // Gumbel comes from the house md5-fold uniform, quantized once. See
-    // TextLm.dsirResample.
+    // TextLm.dsirResampleFrom.
     "q360_dsir_resample" -> ((s, d) =>
       graft.operators.TextLm.dsirResampleFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text",
@@ -1655,7 +1656,7 @@ object LlmQueries {
     // q142 cluster lineage, cos(point, own centroid) micro-quantized
     // once, quartile band cuts as exact integer order statistics over
     // each cluster's value grid — outlier_drop / kept / proto_drop. See
-    // Similarity.prototypicalityBand.
+    // Similarity.prototypicalityBandFrom.
     "q362_proto_band" -> ((s, d) =>
       Similarity.prototypicalityBandFrom(
         semFrames(s, d)._2, semFrames(s, d)._1, "vec_id")),
@@ -1664,7 +1665,7 @@ object LlmQueries {
     // md5-carve train split, score ONLY the held-out eighth with the
     // full interpolation ladder: the self-scoring-bias-free quality
     // signal (q342 scores the corpus with itself). Rides the shared
-    // doc-bigram cache. See TextLm.heldoutKnXent.
+    // doc-bigram cache. See TextLm.heldoutKnXentFrom.
     "q364_heldout_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.heldoutKnXentFrom(
         knDocBigrams(s, d), table(s, d, "documents"),
@@ -1700,7 +1701,7 @@ object LlmQueries {
     // carves (1/8, 2/8, 4/8, 7/8 of the corpus — q364's md5 carve) plus
     // the integer-hardened OLS slope of xent on ln(train tokens) — "is
     // more of THIS corpus still buying loss?". Rides the shared
-    // doc-bigram cache. See TextLm.dataScalingFit.
+    // doc-bigram cache. See TextLm.dataScalingFitFrom.
     "q368_scaling_fit" -> ((s, d) =>
       graft.operators.TextLm.dataScalingFitFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
@@ -1709,7 +1710,7 @@ object LlmQueries {
     // multilingual CCNet shape (a corpus-global model makes minority
     // languages look uniformly "bad"); every join carries the lang key,
     // so the whole computation shards by language. Rides the shared
-    // doc-bigram cache. See TextLm.groupedKnXent.
+    // doc-bigram cache. See TextLm.groupedKnXentFrom.
     "q369_lang_kn_xent" -> ((s, d) =>
       graft.operators.TextLm.groupedKnXentFromScored(
         langKnScored(s, d), "doc_id", "lang")),
@@ -1719,7 +1720,7 @@ object LlmQueries {
     // (the house 'ho' carve) over 3 exactly-replayable integer EM
     // rounds — the classic smoothing-weight estimation beside KN's
     // fixed D = 3/4. Rides the shared doc-bigram cache. See
-    // TextLm.jmDeletedInterpolation.
+    // TextLm.jmDeletedInterpolationFrom.
     "q370_jm_lambda_em" -> ((s, d) =>
       graft.operators.TextLm.jmDeletedInterpolationFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
@@ -1730,9 +1731,9 @@ object LlmQueries {
     // language (q343's integer order-statistic mix) — per-language
     // models + per-language cuts, so no language's distribution skews
     // another's buckets. Rides the shared doc-bigram cache. See
-    // TextLm.groupedKnXentPerDocFrom + knMixFrom.
+    // TextLm.groupedKnXentPerDocFrom + tercileMix.
     "q374_lang_kn_mix" -> ((s, d) =>
-      graft.operators.TextLm.knMixFrom(
+      graft.operators.TextLm.tercileMix(
         // per-doc scores off the shared lang_kn_scored frame, persisted:
         // the tercile stage references the scored docs three times
         // (value grid, totals, bucket join) — unpersisted, Spark rebuilt
@@ -1756,7 +1757,7 @@ object LlmQueries {
     // (mu = -entropy, sigma over the FULL vocab — closed-form via the
     // (nc+1)-value grid minus per-history observed sums, never
     // |histories|x|V| work). Rides the shared doc-bigram cache. See
-    // TextLm.minKppProb.
+    // TextLm.minKppProbFrom.
     "q371_minkpp_prob" -> ((s, d) =>
       graft.operators.TextLm.minKppProbFrom(
         knDocBigrams(s, d), table(s, d, "documents"), "doc_id", "text")),
@@ -1764,7 +1765,7 @@ object LlmQueries {
     // Per-source segmentation fertility under the unigram-LM seed model
     // — the train->apply round trip for q350 (as q334 is to q331's BPE):
     // Viterbi piece counts per word TYPE, occurrence-weighted per
-    // source. See TextPrep.unigramLmFertility.
+    // source. See TextPrep.unigramLmFertilityFrom.
     "q352_unigram_fertility" -> ((s, d) =>
       graft.operators.TextPrep.unigramLmFertilityFrom(unigramDpShared(s, d),
         table(s, d, "documents"), "text", "source", maxWordLen = 16)),
@@ -1774,7 +1775,7 @@ object LlmQueries {
     // single chars always kept), re-normalize with an add-one floor,
     // re-segment, report vocab + fertility deltas. Completes the
     // SentencePiece trio q350 (train) / q352 (apply) / q353 (prune).
-    // See TextPrep.unigramLmPrune.
+    // See TextPrep.unigramLmPruneFrom.
     "q353_unigram_prune" -> ((s, d) =>
       graft.operators.TextPrep.unigramLmPruneFrom(unigramDpShared(s, d),
         keepNum = 1, keepDen = 2)),
@@ -1782,7 +1783,7 @@ object LlmQueries {
     // Min-K% Prob membership/contamination score (Shi et al. 2023): mean
     // xent of each doc's 20% least-likely bigram instances under the KN
     // model — low = memorized/contaminated signature. The model-side
-    // audit beside the q85/q118/q135 overlap checks. See TextLm.minKProb.
+    // audit beside the q85/q118/q135 overlap checks. See TextLm.minKProbFrom.
     "q354_mink_prob" -> ((s, d) =>
       graft.operators.TextLm.minKProbFrom(
         knDocBigrams(s, d), knModelShared(s, d), "doc_id")),
@@ -1792,7 +1793,7 @@ object LlmQueries {
     // shelf) drives 4 Group-DRO multiplicative-update rounds with 1/5
     // uniform smoothing, every round exact integer arithmetic on the
     // |sources|-row grid. Output = the round-by-round weight trajectory.
-    // See TextLm.doremiWeights.
+    // See TextLm.doremiWeightsFrom.
     "q356_doremi_weights" -> ((s, d) =>
       graft.operators.TextLm.doremiWeightsFrom(
         knDocBigrams(s, d), knModelShared(s, d),
@@ -1804,14 +1805,14 @@ object LlmQueries {
     // top-2/3/4-gram char coverage, and the duplicate-5..10-gram
     // covered-character fractions, each an exact half-up 6-dp
     // rational, with the all-rules pass flag at the paper's
-    // thresholds. See TextDedup.gopherRepetition.
+    // thresholds. See TextDedup.gopherRepetitionFrom.
     "q375_gopher_repetition" -> ((s, d) =>
       TextDedup.gopherRepetitionFrom(gopherMicroShared(s, d))),
 
     // The q375 census rolled up per source: one row per (source, rule)
     // with failure count + 6-dp failure rate, plus the 'all' row — the
     // corpus-card table a curation run reports. See
-    // TextDedup.gopherPassReport.
+    // TextDedup.gopherPassReportFrom.
     "q376_gopher_report" -> ((s, d) =>
       TextDedup.gopherPassReportFrom(gopherMicroShared(s, d),
         table(s, d, "documents"), "doc_id", "source")),
@@ -1847,7 +1848,7 @@ object LlmQueries {
     // mean KN xent of passing vs failing docs over the scored
     // population — is each repetition threshold actually separating by
     // LM quality on THIS corpus? Rides the shared KN caches. See
-    // TextDedup.gopherXentAblation.
+    // TextDedup.gopherXentAblationFrom.
     "q381_gopher_xent_ablation" -> ((s, d) =>
       TextDedup.gopherXentAblationFrom(gopherMicroShared(s, d),
         graft.operators.TextLm.knCrossEntropyFrom(
@@ -1871,7 +1872,7 @@ object LlmQueries {
     // The COMPLETE Gopher gate: repetition rules (q375) AND quality
     // rules (q380) conjoined per document, rolled up per source with
     // the retention rate — the keep/drop artifact the two censuses
-    // feed. See TextDedup.gopherFullGate.
+    // feed. See TextDedup.gopherFullGateFrom.
     "q385_gopher_full_gate" -> ((s, d) =>
       TextDedup.gopherFullGateFrom(gopherMicroShared(s, d),
         gopherQualityShared(s, d),
@@ -1882,7 +1883,7 @@ object LlmQueries {
     // how much occurrence mass) deterministically fix their next token
     // — the repeated-and-deterministic slice is the regurgitation risk
     // the dedup shelf exists to remove. See
-    // TextDedup.extractableMemorization.
+    // TextDedup.extractableMemorizationFrom.
     "q389_extractable_memorization" -> ((s, d) =>
       TextDedup.extractableMemorizationFrom(Seq(
         5 -> memWindows5Shared(s, d), 10 -> memWindows10Shared(s, d),
@@ -1892,7 +1893,7 @@ object LlmQueries {
     // question): per dedup-pipeline stage, Gopher-gate pass/fail doc
     // counts and the stage's pass rate — rides the session-shared
     // worklist + the two shared-rule censuses. See
-    // TextDedup.dedupQualityInteraction.
+    // TextDedup.dedupQualityInteractionFrom.
     "q392_dedup_quality_interaction" -> ((s, d) =>
       TextDedup.dedupQualityInteractionFrom(gopherMicroShared(s, d),
         gopherQualityShared(s, d), dedupWorklist(s, d))),
@@ -1901,7 +1902,7 @@ object LlmQueries {
     // fraction of each doc's 10-token windows that are repeated-and-
     // deterministic corpus-wide — the docs a dedup pass should kill
     // first. Fingerprint-keyed aggregate + join, no pair join. See
-    // TextDedup.memorizationRisk.
+    // TextDedup.memorizationRiskFrom.
     "q393_memorization_risk" -> ((s, d) =>
       TextDedup.memorizationRiskFrom(memWindows10Shared(s, d))),
 
@@ -1909,7 +1910,7 @@ object LlmQueries {
     // al. 2023's discoverable-extraction-vs-prompt-length curve, rolled
     // to the curation-actionable unit): per (k, source), pooled risky-
     // window fraction + high-risk doc count (majority rule, exact
-    // integer compare). See TextDedup.memorizationRiskBySource.
+    // integer compare). See TextDedup.memorizationRiskBySourceFrom.
     "q397_memorization_by_source" -> ((s, d) =>
       TextDedup.memorizationRiskBySourceFrom(Seq(
           5 -> memWindows5Shared(s, d), 10 -> memWindows10Shared(s, d),
@@ -1931,7 +1932,7 @@ object LlmQueries {
     // dedup-discounted (q391, Lee x Muennighoff) and soft-weighted
     // (q394, Xia) allocations side by side per source — each chain run
     // verbatim as it would standalone; the decision table a mixing run
-    // consults. See Scale.allocationAblation.
+    // consults. See Scale.allocationAblationFrom.
     "q398_allocation_ablation" -> ((s, d) =>
       graft.operators.Scale.allocationAblationFrom(table(s, d, "documents"),
         "doc_id", "text", "source", softDedupWeightsShared(s, d),
@@ -2116,7 +2117,7 @@ object LlmQueries {
     * q343): doc-level bigram counts `db`, observed-type table `big`,
     * history sums/continuation-type counts, the (T, V) size row, and the
     * per-TYPE micro-nat `model` from the exact D = 3/4 rational — the
-    * verbatim mirror of TextLm.knCrossEntropy's model. Multiply-
+    * verbatim mirror of TextLm.knCrossEntropyFrom's model. Multiply-
     * referenced CTEs are MATERIALIZED (DuckDB re-executes plain CTEs per
     * reference — the r13 lesson). */
   /** The per-language KN model + scored-types chain shared by the q369
@@ -2179,7 +2180,7 @@ object LlmQueries {
       |  FROM big JOIN hist USING (w1) JOIN cont USING (w2) CROSS JOIN tv)"""
       .stripMargin
 
-  /** Unrolled-CTE mirror of TextLm.doremiWeights: the q348 per-doc
+  /** Unrolled-CTE mirror of TextLm.doremiWeightsFrom: the q348 per-doc
     * excess chain (shared knModelCte + add-one model), clamped at 0 and
     * bigram-weighted into per-source λ, the single quantized exp boost,
     * then `rounds` materialized CTE levels w1..wR — each ONE
@@ -2243,7 +2244,7 @@ object LlmQueries {
        |$stack""".stripMargin
   }
 
-  /** Unrolled-CTE mirror of TextPrep.unigramLmTrainStep: the Viterbi DP
+  /** Unrolled-CTE mirror of TextPrep.unigramLmTrainStepFrom: the Viterbi DP
     * (best[i] = max over candidate pieces ending at i of best[start] +
     * lp) runs as `maxWord` per-position levels b1..bN — each level ONE
     * keyed aggregate over the previous levels' rows, every b_i/s_i
@@ -2708,7 +2709,7 @@ object LlmQueries {
         |                  = (b.shu // (1::HUGEINT << (band*16))) % 65536)
         |  AND bit_count(xor(a.sh64, b.sh64)) <= 8""".stripMargin
 
-  /** Unrolled-CTE mirror of TextPrep.bpeTrain: per round, bigram pair
+  /** Unrolled-CTE mirror of TextPrep.bpeMergeLoopFrom: per round, bigram pair
     * counts over the word-type table, (count DESC, pair ASC) argmax, and
     * the left-to-right non-overlapping replace rewrite — the same integer
     * loop DuckDB re-derives end to end. Word and best-pair CTEs are
@@ -2761,7 +2762,7 @@ object LlmQueries {
        |${(1 to merges).map(round).mkString(",\n")}""".stripMargin
   }
 
-  /** Mirrors TextPrep.bpeEncode: the shared training chain through
+  /** Mirrors TextPrep.encodeFromDict: the shared training chain through
     * w_merges, then one word-keyed dictionary join + per-doc aggregate. */
   private def bpeEncodeSql(merges: Int): String =
     bpePrefixSql(merges) +
@@ -2857,7 +2858,7 @@ object LlmQueries {
          |    AS compression
          |FROM tok JOIN dict USING (w) GROUP BY doc_id""".stripMargin
 
-  /** Mirrors TextPrep.tokenizerCompressionCensus: the three trained-
+  /** Mirrors TextPrep.tokenizerCompressionCensusFrom: the three trained-
     * tokenizer chains composed in ONE query via disjoint CTE prefixes
     * (g = BPE, y = WordPiece, u = unigram — each chain byte-equivalent
     * to its own q331/q357/q350 oracle), one shared modeled-word scan
@@ -2936,7 +2937,7 @@ object LlmQueries {
     "q358_wordpiece_encode" -> wordpieceEncodeSql(10),
     "q390_tokenizer_census" -> tokenizerCensusSql(10, 4, 16),
 
-    // Mirrors TextDedup.memorizationRisk: the q389 k=10 window+next
+    // Mirrors TextDedup.memorizationRiskFrom: the q389 k=10 window+next
     // inventory WITH doc_id, fingerprint-keyed (occ, ncont) aggregate,
     // join back on the fingerprint, doc-keyed roll-up, HUGEINT half-up
     // risk fraction.
@@ -2960,7 +2961,7 @@ object LlmQueries {
         |    / 1e6 AS risk_frac
         |FROM xpw JOIN xbp USING (fp) GROUP BY 1""".stripMargin,
 
-    // Mirrors TextDedup.memorizationRiskBySource: the q393 chain per k
+    // Mirrors TextDedup.memorizationRiskBySourceFrom: the q393 chain per k
     // (window+next inventory, fingerprint aggregate, join back, per-doc
     // counts), id-joined to the source and rolled up; high-risk via the
     // exact integer majority rule 2*nr >= nw.
@@ -3037,7 +3038,7 @@ object LlmQueries {
         |SELECT per.n_raw_tokens, ${ScaleQueries.dataConstrainedSelectSql()}
         |FROM dm JOIN per USING (source)""".stripMargin,
 
-    // Mirrors Scale.allocationAblation: the q386 chain (r-prefix) on
+    // Mirrors Scale.allocationAblationFrom: the q386 chain (r-prefix) on
     // raw masses, the q391 chain (x/e-prefix: exact-substring runs ->
     // per-source unique mass) and the q394 chain (w-prefix: SoftDedup
     // weights -> soft mass) composed in ONE WITH via the prefixed
@@ -4766,7 +4767,7 @@ object LlmQueries {
         |FROM ff a JOIN ff b ON a.fp = b.fp AND a.doc_id < b.doc_id
         |GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin,
 
-    // Mirrors Similarity.semanticDedup(threshold=0.3, nlist=8, lloydIters=2):
+    // Mirrors Similarity.semanticDedupFrom(threshold=0.3, nlist=8, lloydIters=2):
     // the q50 Lloyd chain verbatim (seed = first 8 vectors, 2 rounds,
     // micro-unit exact means, emptied centroids carried forward), then
     // within-cluster pairs against earlier ids at the same sequential-fold
@@ -4783,7 +4784,7 @@ object LlmQueries {
         |  CAST(CASE WHEN dr.id_a IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
         |FROM assign a LEFT JOIN dr ON a.vec_id = dr.id_a""".stripMargin),
 
-    // Mirrors Similarity.semanticDecontam: the shared semAssignCte cells,
+    // Mirrors Similarity.semanticDecontamFrom: the shared semAssignCte cells,
     // train x eval join confined to the cell, zero-norm rows excluded,
     // cosine micro-quantized ONCE (round(1e6*cos), the q142 fold order),
     // threshold on the integer image, left join back to all train rows.
@@ -5408,7 +5409,7 @@ object LlmQueries {
          |FROM rr WHERE rnk <= 5""".stripMargin
     },
 
-    // Mirrors TextLm.knCrossEntropy: model counts all derived from the
+    // Mirrors TextLm.knCrossEntropyFrom: model counts all derived from the
     // observed-bigram TYPE table (c1 = history sums, n1p/nc = distinct
     // continuation/history type counts, T = types, V = distinct tokens),
     // the exact D = 3/4 rational [(4c2-3)(T+V) + 3*n1p*(nc+1)] /
@@ -5447,7 +5448,7 @@ object LlmQueries {
         |      // (2 * mmu) AS BIGINT) AS DOUBLE) / 1e6 END AS loss_weight
         |FROM pd CROSS JOIN mm""".stripMargin,
 
-    // Mirrors TextLm.knMix: the q342 scores through the q140 tercile
+    // Mirrors TextLm.tercileMix: the q342 scores through the q140 tercile
     // stage (integer micro-unit order statistics, ties to the lower
     // bucket).
     "q343_kn_ppl_mix" ->
@@ -5477,7 +5478,7 @@ object LlmQueries {
         |    AS mean_xent
         |FROM bk GROUP BY 1, 2""".stripMargin,
 
-    // Mirrors TextLm.knImportanceWeights: both models KN-smoothed from
+    // Mirrors TextLm.knImportanceWeightsFrom: both models KN-smoothed from
     // the shared doc-level bigram counts; the target side replays the
     // interpolation ladder (observed bigram / history-only via the
     // clamped discount / continuation-only when the history is
@@ -5559,7 +5560,7 @@ object LlmQueries {
         |SELECT CAST(3 AS BIGINT), 'semantic', total - r1 - r2, r3,
         |  total - r1 - r2 - r3 FROM agg""".stripMargin),
 
-    // Mirrors TextLm.kn3CrossEntropy: trigram/bigram TYPE tables and
+    // Mirrors TextLm.kn3CrossEntropyFrom: trigram/bigram TYPE tables and
     // their marginals, the identical fixed-order double formula per
     // trigram type (operand-for-operand — IEEE ops at fixed order are
     // engine-deterministic), micro-nat quantization, exact per-doc sums.
@@ -5607,7 +5608,7 @@ object LlmQueries {
         |FROM dt JOIN model USING (w1, w2, w3)
         |GROUP BY doc_id""".stripMargin,
 
-    // Mirrors TextLm.excessLossSelect: the shared knModelCte reference
+    // Mirrors TextLm.excessLossSelectFrom: the shared knModelCte reference
     // model + the q101 add-one model from the SAME type counts, per-doc
     // integer half-up xent images for both, excess = xa - xk, top-quarter
     // cut per source by ascending cumulative counts (cum*4 >= n*3; ties
@@ -5647,13 +5648,13 @@ object LlmQueries {
         |FROM ex JOIN cuts USING (g)
         |GROUP BY 1, 2""".stripMargin,
 
-    // Mirrors TextLm.doremiWeights: q348's excess chain clamped at 0,
+    // Mirrors TextLm.doremiWeightsFrom: q348's excess chain clamped at 0,
     // bigram-weighted per-source lambda, one quantized exp boost, then
     // four materialized normalize-and-smooth rounds (HUGEINT products),
     // stacked to the (rnd, source, ...) trajectory.
     "q356_doremi_weights" -> doremiOracle(4, 1, 5),
 
-    // Mirrors TextLm.mknCrossEntropy: same db/big lineage as knModelCte,
+    // Mirrors TextLm.mknCrossEntropyFrom: same db/big lineage as knModelCte,
     // history aggregate widened with exact-count-1/2/>=3 continuation
     // type counts, the global count-of-counts row, and the per-TYPE
     // probability evaluated from TextLm.mknProbSql — the IDENTICAL
@@ -5695,7 +5696,7 @@ object LlmQueries {
         |FROM db JOIN model USING (w1, w2)
         |GROUP BY doc_id""".stripMargin,
 
-    // Mirrors TextLm.minKProb: the shared KN model, occurrence-expanded
+    // Mirrors TextLm.minKProbFrom: the shared KN model, occurrence-expanded
     // per-doc instances (generate_series), bottom ceil(m/5) by lp rank
     // (instances sharing an lp are interchangeable, so rank tie order is
     // value-free), house half-up mean.
@@ -5718,14 +5719,14 @@ object LlmQueries {
         |WHERE rn <= (m * 1 + 4) // 5
         |GROUP BY 1, 2""".stripMargin,
 
-    // Mirrors TextPrep.unigramLmTrainStep — see unigramLmOracle.
+    // Mirrors TextPrep.unigramLmTrainStepFrom — see unigramLmOracle.
     "q350_unigram_lm_em" -> unigramLmOracle(4, 16),
 
-    // Mirrors TextPrep.unigramLmFertility over the SAME unrolled-DP
+    // Mirrors TextPrep.unigramLmFertilityFrom over the SAME unrolled-DP
     // chain — see unigramLmFertilityOracle.
     "q352_unigram_fertility" -> unigramLmFertilityOracle(4, 16),
 
-    // Mirrors TextPrep.unigramLmPrune: seed DP pass + order-statistic
+    // Mirrors TextPrep.unigramLmPruneFrom: seed DP pass + order-statistic
     // prune + SECOND unrolled DP pass over the restricted vocabulary.
     "q353_unigram_prune" -> unigramLmPruneOracle(4, 16, 1, 2),
 
@@ -5762,7 +5763,7 @@ object LlmQueries {
 
     "q359_paragraph_minhash" -> paragraphMinhashSql,
 
-    // Mirrors TextLm.dsirResample: q151's per-doc chain summed (not
+    // Mirrors TextLm.dsirResampleFrom: q151's per-doc chain summed (not
     // meaned), the q286 uniform (h+0.5)/2^60 salted 'rs', one quantized
     // Gumbel, exact-integer perturbed score, top-100 by (score, doc_id).
     "q360_dsir_resample" -> {
@@ -5878,7 +5879,7 @@ object LlmQueries {
         |FROM lns JOIN k USING (doc_id, line)
         |GROUP BY doc_id""".stripMargin,
 
-    // Mirrors TextLm.heldoutKnXent: db split by the 'ho' md5 carve
+    // Mirrors TextLm.heldoutKnXentFrom: db split by the 'ho' md5 carve
     // (h < 2^60/8 exact integer compare), KN model from the train side
     // only, the q344 target-side ladder over held-out bigrams, pooled
     // per-source half-up xent.
@@ -6060,7 +6061,7 @@ object LlmQueries {
          |    AS DOUBLE) / 1e6 AS log_bleu2
          |FROM sc""".stripMargin,
 
-    // Mirrors TextLm.dataScalingFit: q364's 'ho' carve, per-k nested
+    // Mirrors TextLm.dataScalingFitFrom: q364's 'ho' carve, per-k nested
     // train models as filtered re-aggregates of the ONE db/uni pair, the
     // full ladder over the fixed held-out eighth, integer-hardened OLS
     // slope over the non-NULL points.
@@ -6140,7 +6141,7 @@ object LlmQueries {
          |FROM curve, fit""".stripMargin
     },
 
-    // Mirrors TextLm.groupedKnXent: the knModelCte chain with the lang
+    // Mirrors TextLm.groupedKnXentFrom: the knModelCte chain with the lang
     // key prepended to every model table; self-scoring per group, so
     // every scored bigram is observed in its own group's model (no
     // ladder). Shares langKnScoredCte with q374.
@@ -6152,7 +6153,7 @@ object LlmQueries {
          |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
          |FROM sc GROUP BY 1""".stripMargin,
 
-    // Mirrors TextLm.groupedKnXentPerDocFrom |> knMixFrom: the SAME
+    // Mirrors TextLm.groupedKnXentPerDocFrom |> tercileMix: the SAME
     // per-lang scored chain collapsed per doc, then the q343 tercile
     // stage partitioned by lang.
     "q374_lang_kn_mix" ->
@@ -6181,7 +6182,7 @@ object LlmQueries {
          |    / CAST(count(*) AS DOUBLE), 6) AS mean_xent
          |FROM bk GROUP BY 1, 2""".stripMargin,
 
-    // Mirrors TextDedup.gopherRepetition: the shared census chain's
+    // Mirrors TextDedup.gopherRepetitionFrom: the shared census chain's
     // micro columns divided out to 6-dp doubles, pass decided on the
     // micro integers at the Rae et al. Table A1 thresholds.
     "q375_gopher_repetition" ->
@@ -6203,7 +6204,7 @@ object LlmQueries {
          |  CAST(CASE WHEN $gopherPassSql THEN 1 ELSE 0 END AS BIGINT) AS pass
          |FROM mc""".stripMargin,
 
-    // Mirrors TextDedup.gopherPassReport: per-(source, rule) failure
+    // Mirrors TextDedup.gopherPassReportFrom: per-(source, rule) failure
     // counts off the same census chain, stacked by 8-way UNION ALL,
     // fail_rate as the HUGEINT half-up rational.
     "q376_gopher_report" -> {
@@ -6331,7 +6332,7 @@ object LlmQueries {
          |    AS pass
          |FROM r""".stripMargin,
 
-    // Mirrors TextDedup.gopherFullGate: the two shared census chains
+    // Mirrors TextDedup.gopherFullGateFrom: the two shared census chains
     // joined per doc (gtoks/toks never clash), conjunction + per-source
     // roll-up with the HUGEINT half-up retention rate.
     "q385_gopher_full_gate" ->
@@ -6351,7 +6352,7 @@ object LlmQueries {
          |    AS retention_rate
          |FROM j GROUP BY 1""".stripMargin,
 
-    // Mirrors TextDedup.extractableMemorization: per k the md5(window)
+    // Mirrors TextDedup.extractableMemorizationFrom: per k the md5(window)
     // prefix identity (the same window partition as Spark's native
     // fingerprints — the q300 hashed-identity precedent), following
     // token from the 1-based slice, fingerprint-keyed aggregate, one
@@ -6394,7 +6395,7 @@ object LlmQueries {
          |FROM ($stack)""".stripMargin
     },
 
-    // Mirrors TextDedup.dedupQualityInteraction: the full pipeline
+    // Mirrors TextDedup.dedupQualityInteractionFrom: the full pipeline
     // worklist chain (wl) + BOTH gopher census chains composed in one
     // WITH (gtoks/qtoks/toks and gm2/m2 disjoint by design — the
     // composition contract), conjunction per doc, per-(stage, pass)
@@ -6418,7 +6419,7 @@ object LlmQueries {
         |    // (2 * tot) AS BIGINT) AS DOUBLE) / 1e6 AS stage_frac
         |FROM cells JOIN tots USING (stage)""".stripMargin),
 
-    // Mirrors TextDedup.gopherXentAblation: the shared census chain's
+    // Mirrors TextDedup.gopherXentAblationFrom: the shared census chain's
     // micro columns joined to the per-doc KN xmu off the SHARED
     // knModelCte (gopherCensusCte's tokenizer is named gtoks exactly so
     // the two chains compose in one WITH), one aggregate row, the
@@ -6523,7 +6524,7 @@ object LlmQueries {
         |FROM (SELECT * FROM hist UNION ALL SELECT * FROM sing)"""
       .stripMargin),
 
-    // Mirrors TextLm.jmDeletedInterpolation: train-side ML bigram +
+    // Mirrors TextLm.jmDeletedInterpolationFrom: train-side ML bigram +
     // add-one unigram components computed once per held-out TYPE, three
     // unrolled EM rounds, each a 1-row lambda CTE feeding a
     // micro-quantized posterior aggregate, xent under each round's
@@ -6656,7 +6657,7 @@ object LlmQueries {
         .stripMargin
     },
 
-    // Mirrors TextLm.minKppProb: pico-quantized per-row moment terms
+    // Mirrors TextLm.minKppProbFrom: pico-quantized per-row moment terms
     // summed as BIGINTs, per-history mu/sigma from the grid-minus-
     // observed closed form, z-scored types, the q354 bottom-k take.
     "q371_minkpp_prob" -> {
@@ -6751,7 +6752,7 @@ object LlmQueries {
          |GROUP BY 1, 2""".stripMargin
     },
 
-    // Mirrors Similarity.prototypicalityBand: the shared semAssignCte
+    // Mirrors Similarity.prototypicalityBandFrom: the shared semAssignCte
     // (assignment + final centroids c2), cos-to-own-centroid quantized
     // once, per-cluster quartile cuts over the (cid, cmu) grid, band
     // aggregate.

@@ -36,8 +36,8 @@ object MlQueries {
   /** q213's PPJoin pair set, session-keyed like LlmQueries.ngramPairs
     * (the r12 verdict's other ≥4 s dedup heavy): the n=12 gram-set
     * inventory + prefix-filtered candidate join is the cost; what
-    * persists is only the qualifying pair set. Standalone semantics: a
-    * cold call rebuilds identically (RoundThirteenOpsSpec pins it). */
+    * persists is only the qualifying pair set. RoundThirteenOpsSpec
+    * compares the cached pairs against a fresh `ppjoinPairs` build. */
   private[queries] val ppjoinPairsShared = SharedCache("ppjoin_pairs") {
     (s, d) =>
       graft.operators.TextDedup.ppjoinPairs(

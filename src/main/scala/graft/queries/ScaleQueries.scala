@@ -32,8 +32,8 @@ object ScaleQueries {
     * removal, q384's l=20 leg, q391/q398 through the dedup-discounted
     * allocation), each previously re-paying the window-fingerprint +
     * pair-join + island-stitch chain (~1.1–1.6 s apiece at sf0.1).
-    * Session-shared like the LlmQueries caches; standalone semantics: a
-    * cold call rebuilds identically (SharedFormsSpec pins it). The
+    * Session-shared like the LlmQueries caches; SharedFormsSpec compares
+    * its consumers against a fresh `exactSubstringRuns` build. The
     * persisted frame is the RUNS (tiny — pairs × diagonals above l). */
   private[queries] val exactRunsShared = SharedCache("exact_runs_l20") {
     (s, d) =>
@@ -109,7 +109,7 @@ object ScaleQueries {
     // 2022): q300's run inventory applied — every matched range removed
     // from the later doc of its pair (keep-first-in-corpus-order), docs
     // rebuilt from surviving tokens. Anchor-keep; idempotent on its own
-    // output (spec-pinned). See TextDedup.exactSubstringDedup.
+    // output (spec-pinned). See TextDedup.exactSubstringDedupFrom.
     "q377_exact_substr_dedup" -> ((s, d) => exactSubstrDocShared(s, d)),
 
     // Dedup-granularity sweep (Lee et al. 2022 §4): the q300/q377 run
@@ -596,7 +596,7 @@ object ScaleQueries {
     // dedup (q377, Lee et al. 2022) prices each source's duplicated
     // mass; the q386 Muennighoff machinery allocates epochs on the
     // UNIQUE mass — how many epochs each source is worth AFTER dedup.
-    // See Scale.dedupAwareMix.
+    // See Scale.dedupAwareMixFrom.
     "q391_dedup_aware_mix" -> ((s, d) =>
       graft.operators.Scale.dedupAwareMixFrom(
         table(s, d, "documents"), "doc_id", "source",
@@ -988,7 +988,7 @@ object ScaleQueries {
          |SELECT doc_a, doc_b, a_start, b_start, run_tokens
          |FROM runs""".stripMargin,
 
-    // Mirrors TextDedup.exactSubstringDedup: the shared runs chain, each
+    // Mirrors TextDedup.exactSubstringDedupFrom: the shared runs chain, each
     // run's doc_b range exploded to DISTINCT covered positions, one
     // position-keyed left join against the full token inventory, ordered
     // rebuild md5 (coalesce '' when every token is removed).
@@ -1705,7 +1705,7 @@ object ScaleQueries {
          |${dataConstrainedChainSql("per")}
          |SELECT ${dataConstrainedSelectSql()} FROM dm""".stripMargin,
 
-    // Mirrors Scale.dedupAwareMix: the shared q377 removal chain rolled
+    // Mirrors Scale.dedupAwareMixFrom: the shared q377 removal chain rolled
     // up per source (unique mass = raw - removed, zero-mass sources
     // excluded — the documented s = 0 divergence guard), then the q386
     // decay/waterfill chain VERBATIM on the unique masses.

@@ -15,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * each time. `graft.Bench` now pre-materializes every entry here before
   * the timed pass and reports the build cost as its own summary line, so
   * consumers always measure steady-state cost. Queries stay standalone in
-  * SEMANTICS: each cache memoizes per (session, sf dir) and a cold call
-  * rebuilds identically (specs pin this).
+  * SEMANTICS: each cache memoizes per (session, sf dir), and specs
+  * (SharedFormsSpec and its siblings) compare each consumer's cached
+  * frame against the same `*From` operator run on a fresh build of its
+  * input.
   *
   * Adding a shared cache without registering it here re-opens the
   * order-attribution hole — BenchCacheSpec asserts the registry covers

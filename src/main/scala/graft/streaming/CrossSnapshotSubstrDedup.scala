@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * covered by a window whose fingerprint is already IN THE STORE
   * (shared with any previous snapshot) or shared with a SMALLER doc_id
   * in the same batch (the doc_a < doc_b removal-from-later policy of
-  * [[graft.operators.TextDedup.exactSubstringDedup]], applied
+  * [[graft.operators.TextDedup.exactSubstringDedupFrom]], applied
   * intra-batch). The cleaned doc is rebuilt from its surviving tokens
   * in order; docs shorter than `l` tokens carry no window and pass
   * through verbatim.

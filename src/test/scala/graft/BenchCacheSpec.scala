@@ -134,4 +134,13 @@ class BenchCacheSpec extends AnyFunSuite {
       java.nio.file.Files.delete(dir)
     }
   }
+
+  test("SPARK_GRAFT_ONLY selects a query by its full name or its `<entry>_` prefix") {
+    val only = Some(Set("q31"))
+    assert(Bench.selected(only, "q31_minhash_lsh_pairs"))
+    assert(!Bench.selected(only, "q310_diff_in_diff"))
+    assert(Bench.selected(Some(Set("q310_diff_in_diff")), "q310_diff_in_diff"))
+    assert(!Bench.selected(Some(Set("q310_diff_in_diff")), "q31_minhash_lsh_pairs"))
+    assert(Bench.selected(None, "q310_diff_in_diff"), "no list selects every query")
+  }
 }

@@ -63,9 +63,10 @@ class DedupPipelineSpec extends AnyFunSuite {
     val docs = Graft.table(spark, sf, "documents")
     val near = TextDedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.5)
       .select(col("doc_a"), col("doc_b"))
-    val sem = Similarity.semanticDupPairs(
-      Graft.table(spark, sf, "embeddings"), "vec_id", "embedding",
-      threshold = 0.3, nlist = 8, lloydIters = 2)
+    val sem = Similarity.semanticDupPairsFrom(
+      Similarity.semAssignmentFrames(Graft.table(spark, sf, "embeddings"),
+        "vec_id", "embedding", nlist = 8, lloydIters = 2)._1,
+      "vec_id", threshold = 0.3)
     val w = TextDedup.dedupPipeline(docs, "doc_id", "text", near, sem)
       .persist()
     val rows = w.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))

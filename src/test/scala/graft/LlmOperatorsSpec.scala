@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextHashes
-import graft.operators.{Similarity, TextDedup}
+import graft.operators.{Similarity, TextDedup, TextLm}
 
 /** Pins the operators the DuckDB oracle cannot express (SimHash/RollingHash
   * use unsigned 64-bit wraparound arithmetic) and the dedup/similarity
@@ -13,6 +14,12 @@ class LlmOperatorsSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def docs = Graft.table(spark, sf, "documents")
+
+  /** The (docBig, KN model) inputs the `TextLm.*From` LM forms take. */
+  private def knInputs(corpus: DataFrame): (DataFrame, DataFrame) = {
+    val docBig = TextLm.docBigrams(corpus, "doc_id", "text")
+    (docBig, TextLm.knBigramModel(docBig, corpus, "text"))
+  }
 
   test("simhash64: codegen and interpreted modes agree") {
     val df = docs.select(col("doc_id"),
@@ -483,7 +490,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // d1 "a b a b": (2*287682 + 980829)/3 = 1556193/3 = 518731 exactly
     // d2 "b c": 980829
     val tiny = Seq(1L -> "a b a b", 2L -> "b c").toDF("doc_id", "text")
-    val out = graft.operators.TextLm.knCrossEntropy(tiny, "doc_id", "text")
+    val (docBig, model) = knInputs(tiny)
+    val out = TextLm.knCrossEntropyFrom(docBig, model, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(out.toSeq == Seq((1L, 3L, 0.518731), (2L, 1L, 0.980829)))
   }
@@ -502,7 +510,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // s1: (405465)/1e6 = 0.405465 ; s2: (-405465 + 64539)/2e6 = -0.170463
     val df = Seq((1L, "s1", "en", "a b"), (2L, "s2", "de", "a c b"))
       .toDF("doc_id", "source", "lang", "text")
-    val out = graft.operators.TextLm.knImportanceWeights(
+    val (docBig, model) = knInputs(df)
+    val out = TextLm.knImportanceWeightsFrom(docBig, model,
         df, "doc_id", "text", "source", col("lang") === "en")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(out.toSeq == Seq(("s1", 1L, 0.405465), ("s2", 2L, -0.170463)))
@@ -515,7 +524,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // yield Long.MaxValue) — n_bigrams still counts the scored bigrams.
     val df = Seq((1L, "s1", "en", "a b"), (2L, "s2", "de", "a c b"))
       .toDF("doc_id", "source", "lang", "text")
-    val out = graft.operators.TextLm.knImportanceWeights(
+    val (docBig, model) = knInputs(df)
+    val out = TextLm.knImportanceWeightsFrom(docBig, model,
         df, "doc_id", "text", "source", col("lang") === "zz")
       .collect().map(r => (r.getString(0), r.getLong(1), r.isNullAt(2))).sortBy(_._1)
     assert(out.toSeq == Seq(("s1", 1L, true), ("s2", 2L, true)))
@@ -532,12 +542,14 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // (b,a,b): p2(b|a)=1/4 + (3/4)*(1/3) = 0.5, p3 = 0.625 -> -470004
     // d1: (470004+470004)/2 = 470004; d2 "b c" has no trigrams
     val tiny = Seq(1L -> "a b a b", 2L -> "b c").toDF("doc_id", "text")
-    val out = graft.operators.TextLm.kn3CrossEntropy(tiny, "doc_id", "text")
+    val out = TextLm.kn3CrossEntropyFrom(
+        TextLm.docBigrams(tiny, "doc_id", "text"), tiny, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.toList == List((1L, 2L, 0.470004)))
     // 1-token docs must not reach slice with a negative length
     val one = Seq(1L -> "x", 2L -> "p q r").toDF("doc_id", "text")
-    assert(graft.operators.TextLm.kn3CrossEntropy(one, "doc_id", "text")
+    assert(TextLm.kn3CrossEntropyFrom(
+        TextLm.docBigrams(one, "doc_id", "text"), one, "doc_id", "text")
       .collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
@@ -554,7 +566,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // d2: 70618 (8); d3: 318454 (1)
     val tiny = Seq(1L -> "a b a b a b", 2L -> "c d c d c d c d c",
       3L -> "e f").toDF("doc_id", "text")
-    val out = graft.operators.TextLm.mknCrossEntropy(tiny, "doc_id", "text")
+    val out = TextLm.mknCrossEntropyFrom(
+        TextLm.docBigrams(tiny, "doc_id", "text"), tiny, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(out.toList == List((1L, 5L, 0.267623), (2L, 8L, 0.070618),
       (3L, 1L, 0.318454)))
@@ -562,9 +575,10 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // discounts fall back to the fixed D = 3/4 => identical to the
     // interpolated-KN scorer on the same corpus
     val deg = Seq(1L -> "p q r", 2L -> "r p").toDF("doc_id", "text")
-    val mkn = graft.operators.TextLm.mknCrossEntropy(deg, "doc_id", "text")
+    val (docBig, model) = knInputs(deg)
+    val mkn = TextLm.mknCrossEntropyFrom(docBig, deg, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
-    val kn = graft.operators.TextLm.knCrossEntropy(deg, "doc_id", "text")
+    val kn = TextLm.knCrossEntropyFrom(docBig, model, "doc_id")
       .collect().map(r => (r.getLong(0), r.getDouble(2))).sortBy(_._1)
     assert(mkn.toList == kn.toList)
   }
@@ -576,13 +590,15 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // the lowest type (a,b) even though its occ=2 (the least() split);
     // d2 m=1 -> its single bigram
     val docs = Seq(1L -> "a b a b a", 2L -> "a c").toDF("doc_id", "text")
-    val out = graft.operators.TextLm.minKProb(docs, "doc_id", "text")
+    val (docBig, model) = knInputs(docs)
+    val out = TextLm.minKProbFrom(docBig, model, "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(out.toList == List((1L, 4L, 0.538997), (2L, 1L, 1.386294)))
     // cross-type take: m=6 -> kk=2 spans the occ-1 lowest type (c,a)
     // AND one instance of the next ((b,a)): (470004+207639)/2 -> 338822
     val d3 = Seq(1L -> "c a b a b a b").toDF("doc_id", "text")
-    val out3 = graft.operators.TextLm.minKProb(d3, "doc_id", "text")
+    val (docBig3, model3) = knInputs(d3)
+    val out3 = TextLm.minKProbFrom(docBig3, model3, "doc_id")
       .collect().map(r => (r.getLong(1), r.getDouble(2)))
     assert(out3.toList == List((6L, 0.338822)))
   }
@@ -1189,8 +1205,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (4L, Array(0.5f, 0.9f), 0))
       .toDF("vec_id", "embedding", "label")
     val got = Similarity
-      .semanticDedup(emb, "vec_id", "embedding",
-        threshold = 0.9, nlist = 2, lloydIters = 0)
+      .semanticDedupFrom(Similarity.semAssignmentFrames(emb, "vec_id",
+        "embedding", nlist = 2, lloydIters = 0)._1, "vec_id", threshold = 0.9)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(
       0L -> ((0L, 1L)), 2L -> ((0L, 0L)), 3L -> ((0L, 0L)),
@@ -1575,8 +1591,9 @@ class LlmOperatorsSpec extends AnyFunSuite {
     def xmu(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) ->
         math.round(r.getDouble(2) * 1e6)).toMap
-    val xa = xmu(graft.operators.TextLm.bigramCrossEntropy(docs, "doc_id", "text"))
-    val xk = xmu(graft.operators.TextLm.knCrossEntropy(docs, "doc_id", "text"))
+    val (docBig, model) = knInputs(docs)
+    val xa = xmu(TextLm.bigramCrossEntropy(docs, "doc_id", "text"))
+    val xk = xmu(TextLm.knCrossEntropyFrom(docBig, model, "doc_id"))
     val exc = xa.keys.map(k => k -> (xa(k) - xk(k))).toMap
     // top-half (1/2): ascending cut = min e with cum*2 >= n*1; selected
     // are the docs with e strictly above the cut.
@@ -1584,7 +1601,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val cut = sortedE((sortedE.size + 1) / 2 - 1)
     val expSel = exc.filter(_._2 > cut)
     assert(expSel.nonEmpty && expSel.size < exc.size, "fixture must split")
-    val out = graft.operators.TextLm.excessLossSelect(
+    val out = TextLm.excessLossSelectFrom(docBig, model,
         docs, "doc_id", "text", "source", keepNum = 1, keepDen = 2)
       .collect().map(r => r.getBoolean(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(out(true)._1 == expSel.size)
@@ -1599,7 +1616,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // the broadcast 1-row (vocab / T,V) and |groups|-row cut frames, and
     // the cut window runs over the (group, excess) value GRID, never data
     // rows — a cartesian here is the all-pairs degeneration.
-    val p = graft.operators.TextLm.excessLossSelect(
+    val p = TextLm.excessLossSelectFrom(docBig, model,
         docs, "doc_id", "text", "source")
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), "excess-loss must not go cartesian")
@@ -1616,7 +1633,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // the whole 5-round trajectory is uniform at weight 0.5.
     val docs = Seq((1L, "X", "a b"), (2L, "Y", "c d"))
       .toDF("doc_id", "source", "text")
-    val out = graft.operators.TextLm.doremiWeights(
+    val (docBig, model) = knInputs(docs)
+    val out = TextLm.doremiWeightsFrom(docBig, model,
         docs, "doc_id", "text", "source")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).sortBy(x => (x._1, x._2)).toList
@@ -1639,8 +1657,9 @@ class LlmOperatorsSpec extends AnyFunSuite {
     def comp(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
       df.collect().map(r => r.getLong(0) ->
         ((r.getLong(1), math.round(r.getDouble(2) * 1e6)))).toMap
-    val xa = comp(graft.operators.TextLm.bigramCrossEntropy(docs, "doc_id", "text"))
-    val xk = comp(graft.operators.TextLm.knCrossEntropy(docs, "doc_id", "text"))
+    val (docBig, model) = knInputs(docs)
+    val xa = comp(TextLm.bigramCrossEntropy(docs, "doc_id", "text"))
+    val xk = comp(TextLm.knCrossEntropyFrom(docBig, model, "doc_id"))
     def halfUp(a: BigInt, b: BigInt): Long = ((2 * a + b) / (2 * b)).toLong
     val lam = src.values.toSeq.distinct.sorted.map { g =>
       val ds = src.filter(_._2 == g).keys
@@ -1664,7 +1683,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     }
     // the fixture must actually be asymmetric, or the test proves nothing
     assert(lam.map(_._2).distinct.size > 1, "fixture lambdas must differ")
-    val out = graft.operators.TextLm.doremiWeights(
+    val out = TextLm.doremiWeightsFrom(docBig, model,
         docs, "doc_id", "text", "source")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(4)))
       .sortBy(x => (x._1, x._2)).toList
@@ -1679,7 +1698,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       val sumW = out.filter(_._1 == t).map(_._3).sum
       assert(math.abs(sumW - 1.0) <= k * 1e-6 + 1e-9)
     }
-    val p = graft.operators.TextLm.doremiWeights(
+    val p = TextLm.doremiWeightsFrom(docBig, model,
         docs, "doc_id", "text", "source")
       .queryExecution.executedPlan.toString
     graft.operators.CacheScope.drain()
@@ -1696,8 +1715,9 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val de = (("zeta eta ") * 40).trim
     val docs = ((1L to 6L).map(i => (i, "en", en)) ++
       (7L to 12L).map(i => (i, "de", de))).toDF("doc_id", "lang", "text")
-    val out = graft.operators.TextLm.dsirResample(
-        docs, "doc_id", "text", col("lang") === "en", k = 6)
+    val docBig = TextLm.docBigrams(docs, "doc_id", "text")
+    val out = TextLm.dsirResampleFrom(
+        docBig, docs, "doc_id", "text", col("lang") === "en", k = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toList
     assert(out.map(_._2).toSet == (1L to 6L).toSet,
@@ -1710,8 +1730,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
       assert(math.round(s * 1e6) == math.round(lw * 1e6) + math.round(g * 1e6))
     }
     // the draw is a pure function of the corpus: bit-identical on re-run
-    val again = graft.operators.TextLm.dsirResample(
-        docs, "doc_id", "text", col("lang") === "en", k = 6)
+    val again = TextLm.dsirResampleFrom(
+        docBig, docs, "doc_id", "text", col("lang") === "en", k = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3), r.getDouble(4))).toList
     assert(again == out, "resample must be deterministic")

@@ -70,9 +70,11 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
       (0L, Seq(3.0, 4.0)), (1L, Seq(0.0, 1.0)), (2L, Seq(0.0, 0.0)),
       (100L, Seq(1.0, 0.0)), (101L, Seq(-1.0, -1.0)))
       .toDF("vec_id", "embedding")
-    val out = graft.operators.Similarity.semanticDecontam(
-        emb, "vec_id", "embedding", col("vec_id") >= 100L,
-        threshold = 0.5, nlist = 1, lloydIters = 1)
+    val sim = graft.operators.Similarity
+    val out = sim.semanticDecontamFrom(
+        sim.semAssignmentFrames(emb, "vec_id", "embedding", nlist = 1,
+          lloydIters = 1)._1,
+        "vec_id", col("vec_id") >= 100L, threshold = 0.5)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(2), Option(r.get(3)).map(_.asInstanceOf[Double]),
           r.getLong(4)))).toMap
@@ -112,8 +114,9 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
     // k=10: no 11-token window -> all-zero row with frac 0 (the guard).
     val docs = Seq((1L, "a b c X"), (2L, "a b c Y"), (3L, "a b c X"))
       .toDF("doc_id", "text")
-    val out = graft.operators.TextDedup.extractableMemorization(
-        docs, "doc_id", "text", ks = Seq(2, 3, 10))
+    val out = graft.operators.TextDedup.extractableMemorizationFrom(
+        Seq(2, 3, 10).map(k => k -> graft.operators.TextDedup
+          .memWindowInventory(docs, "doc_id", "text", k)))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getLong(5), r.getLong(6), r.getDouble(7)))).toMap
@@ -132,8 +135,14 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
     // Unigram (maxPiece 4): whole-word pieces win (ln p vs 2 ln p) ->
     //   1 piece per word -> 3.
     val docs = Seq((1L, "ab ab cd", "s")).toDF("doc_id", "text", "source")
-    val out = graft.operators.TextPrep.tokenizerCompressionCensus(
-        docs, "text", "source", merges = 1)
+    val tp = graft.operators.TextPrep
+    val seed = tp.seedWordTypesPlan(docs, "text")
+    val out = tp.tokenizerCompressionCensusFrom(docs, "text", "source",
+        tp.bpeMergeLoopFrom(seed, merges = 1)._2,
+        tp.wordpieceMergeLoopFrom(seed, merges = 1)._2,
+        tp.unigramDpFrom(seed.where(length(col("w")) <= 16)
+            .select(col("w"), col("freq")),
+          maxPieceLen = 4, maxWordLen = 16))
       .collect().map(r => r.getString(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5), r.getDouble(6)))).toMap
@@ -154,8 +163,10 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
       (2L, "c1 c2 b1 b2 b3 b4 b5 b6 c3 c4", "A"),
       (3L, "d1 d2 d3 d4 d5 d6 d7 d8 d9 d10", "B"))
       .toDF("doc_id", "text", "src")
-    val out = graft.operators.Scale.dedupAwareMix(
-        docs, "doc_id", "text", "src", l = 4, maxDf = 10)
+    val td = graft.operators.TextDedup
+    val out = graft.operators.Scale.dedupAwareMixFrom(docs, "doc_id", "src",
+        td.exactSubstringDedupFrom(docs, "doc_id", "text",
+          td.exactSubstringRuns(docs, "doc_id", "text", l = 4, maxDf = 10)))
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(5),
           r.getDouble(6), r.getLong(7), r.getDouble(8), r.getDouble(9))))
@@ -185,8 +196,10 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
       (3L, "x1 x2 x3"), (4L, dPass)).toDF("doc_id", "text")
     val wl = Seq((1L, "retained"), (2L, "exact"), (3L, "near_dup"),
       (4L, "exact")).toDF("doc_id", "stage")
-    val out = graft.operators.TextDedup.dedupQualityInteraction(
-        docs, "doc_id", "text", wl)
+    val td = graft.operators.TextDedup
+    val out = td.dedupQualityInteractionFrom(
+        td.gopherMicro(docs, "doc_id", "text", lineTokens = 3, paraTokens = 10),
+        td.gopherQualityRules(docs, "doc_id", "text"), wl)
       .collect().map(r => (r.getString(1), r.getLong(2)) ->
         ((r.getLong(0), r.getLong(3), r.getDouble(4)))).toMap
     assert(out(("exact", 0L)) == ((1L, 1L, 0.5)))
@@ -209,15 +222,17 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
     val docs = graft.Graft.table(spark, sf, "documents")
     val td = graft.operators.TextDedup
     val shared = graft.queries.LlmQueries.queries
+    def micro = td.gopherMicro(docs, "doc_id", "text", lineTokens = 3,
+      paraTokens = 10)
     val standalone = Map(
-      "q375_gopher_repetition" ->
-        td.gopherRepetition(docs, "doc_id", "text"),
+      "q375_gopher_repetition" -> td.gopherRepetitionFrom(micro),
       "q376_gopher_report" ->
-        td.gopherPassReport(docs, "doc_id", "text", "source"),
+        td.gopherPassReportFrom(micro, docs, "doc_id", "source"),
       "q380_gopher_quality" ->
         td.gopherQualityRules(docs, "doc_id", "text"),
-      "q385_gopher_full_gate" ->
-        td.gopherFullGate(docs, "doc_id", "text", "source"))
+      "q385_gopher_full_gate" -> td.gopherFullGateFrom(micro,
+        td.gopherQualityRules(docs, "doc_id", "text"), docs, "doc_id",
+        "source"))
     standalone.foreach { case (name, solo) =>
       val viaCache = shared(name)(spark, sf)
       assert(viaCache.columns.toSeq == solo.columns.toSeq,

@@ -27,8 +27,9 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
       (4L, "z1 z2 z3 z4 z5"),
       (5L, "u1 u2 u3 u4 u5"),
       (6L, "v1 v2 v3")).toDF("doc_id", "text")
-    val out = graft.operators.TextDedup
-      .memorizationRisk(docs, "doc_id", "text", k = 3)
+    val td = graft.operators.TextDedup
+    val out = td.memorizationRiskFrom(
+        td.memWindowInventory(docs, "doc_id", "text", k = 3))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     graft.operators.CacheScope.drain()
@@ -56,9 +57,10 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
       (4L, "B", "x1 x2 x3 x4 x5"),
       (5L, "B", "x1 x2 x3 x4 y5"),
       (6L, "B", "v1 v2 v3")).toDF("doc_id", "src", "text")
-    val out = graft.operators.TextDedup
-      .memorizationRiskBySource(docs, "doc_id", "text", "src",
-        ks = Seq(3))
+    val td = graft.operators.TextDedup
+    val out = td.memorizationRiskBySourceFrom(
+        Seq(3 -> td.memWindowInventory(docs, "doc_id", "text", 3)),
+        docs.select(col("doc_id"), col("src").as("source")))
       .collect().map(r => (r.getLong(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5),
           r.getLong(6)))).toMap
@@ -185,31 +187,38 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
     val q = SparkEntry.queries
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.mkString("|")).toSet
-    // q331/q357: shared merge tables == cold standalone trainers
-    assert(rows(q("q331_bpe_train")(spark, sf)) ==
-      rows(graft.operators.TextPrep.bpeTrain(docs, "text", merges = 10)))
-    assert(rows(q("q357_wordpiece_train")(spark, sf)) ==
-      rows(graft.operators.TextPrep.wordpieceTrain(docs, "text",
-        merges = 10)))
-    // q334/q358: shared-dict encodes == standalone train->apply
+    // the fixed recipe trained fresh: BPE and WordPiece at 10 merges over
+    // a word-type seed, the unigram DP over a direct (w, freq) count of
+    // the 1..16-char words
+    val tp = graft.operators.TextPrep
+    val seed = tp.seedWordTypesPlan(docs, "text")
+    val (bpeMerges, bpeDict) = tp.bpeMergeLoopFrom(seed, merges = 10)
+    val (wpMerges, wpDict) = tp.wordpieceMergeLoopFrom(seed, merges = 10)
+    val ugDp = tp.unigramDpFrom(
+      docs.select(explode(split(col("text"), " ")).as("w"))
+        .where(length(col("w")) > 0 && length(col("w")) <= 16)
+        .groupBy(col("w")).agg(count(lit(1)).as("freq")),
+      maxPieceLen = 4, maxWordLen = 16)
+    // q331/q357: shared merge tables == freshly trained merge tables
+    assert(rows(q("q331_bpe_train")(spark, sf)) == rows(bpeMerges))
+    assert(rows(q("q357_wordpiece_train")(spark, sf)) == rows(wpMerges))
+    // q334/q358: shared-dict encodes == fresh train->apply
     assert(rows(q("q334_bpe_encode")(spark, sf)) ==
-      rows(graft.operators.TextPrep.bpeEncode(docs, "doc_id", "text",
-        merges = 10)))
+      rows(tp.encodeFromDict(docs, "doc_id", "text", bpeDict)))
     assert(rows(q("q358_wordpiece_encode")(spark, sf)) ==
-      rows(graft.operators.TextPrep.wordpieceEncode(docs, "doc_id",
-        "text", merges = 10)))
-    // q350/q352/q353: shared-DP forms == standalone unigram chain
+      rows(tp.encodeFromDict(docs, "doc_id", "text", wpDict)))
+    // q350/q352/q353: shared-DP forms == fresh unigram chain
     assert(rows(q("q350_unigram_lm_em")(spark, sf)) ==
-      rows(graft.operators.TextPrep.unigramLmTrainStep(docs, "text")))
+      rows(tp.unigramLmTrainStepFrom(ugDp)))
     assert(rows(q("q352_unigram_fertility")(spark, sf)) ==
-      rows(graft.operators.TextPrep.unigramLmFertility(docs, "text",
-        "source")))
+      rows(tp.unigramLmFertilityFrom(ugDp, docs, "text", "source",
+        maxWordLen = 16)))
     assert(rows(q("q353_unigram_prune")(spark, sf)) ==
-      rows(graft.operators.TextPrep.unigramLmPrune(docs, "text")))
-    // q390: shared-dict census == standalone census
+      rows(tp.unigramLmPruneFrom(ugDp, keepNum = 1, keepDen = 2)))
+    // q390: shared-dict census == fresh-dict census
     assert(rows(q("q390_tokenizer_census")(spark, sf)) ==
-      rows(graft.operators.TextPrep.tokenizerCompressionCensus(
-        docs, "text", "source", merges = 10)))
+      rows(tp.tokenizerCompressionCensusFrom(docs, "text", "source",
+        bpeDict, wpDict, ugDp)))
     graft.operators.CacheScope.drain()
   }
 

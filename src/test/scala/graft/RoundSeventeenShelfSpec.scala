@@ -11,6 +11,12 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** The Gopher micro census at the house (3, 10) tile sizes — the input
+    * the `TextDedup.gopher*From` forms take. */
+  private def micro(docs: org.apache.spark.sql.DataFrame) =
+    graft.operators.TextDedup.gopherMicro(docs, "doc_id", "text",
+      lineTokens = 3, paraTokens = 10)
+
   test("gopherRepetition: hand-computed fractions, tie-breaks, pass flag") {
     // doc 1: "a b c a b c d e f" — 3-token lines (a b c)x2 + (d e f);
     //   dup_line_frac = 1/3 = .333333, dup chars 5/15 = .333333;
@@ -30,7 +36,7 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
     val d4 = "p q r s t p q r s t " + (1 to 10).map(i => s"u$i").mkString(" ")
     val docs = Seq((1L, "a b c a b c d e f"), (2L, d2), (3L, ""), (4L, d4))
       .toDF("doc_id", "text")
-    val out = graft.operators.TextDedup.gopherRepetition(docs, "doc_id", "text")
+    val out = graft.operators.TextDedup.gopherRepetitionFrom(micro(docs))
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out(1L).getLong(1) == 3L)
     assert((2 to 8).map(out(1L).getDouble) ==
@@ -54,8 +60,8 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
     val d2 = (1 to 30).map(i => f"t$i%02d").mkString(" ")
     val docs = Seq((1L, "a b c a b c d e f", "s"), (2L, d2, "s"))
       .toDF("doc_id", "text", "src")
-    val out = graft.operators.TextDedup.gopherPassReport(
-        docs, "doc_id", "text", "src")
+    val out = graft.operators.TextDedup.gopherPassReportFrom(
+        micro(docs), docs, "doc_id", "src")
       .collect().map(r => r.getString(3) ->
         ((r.getLong(1), r.getLong(2), r.getLong(4), r.getDouble(5)))).toMap
     // doc 1 fails rules 1, 2, 5, 6, 7 and 'all' (no 5..10-gram repeats
@@ -87,8 +93,9 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
       (2L, "x1 s1 s2 s3 s4 s5 x2 x3"),
       (3L, "s1 s2 s3 s4 t1 t2 t3 t4"),
       (4L, "y1 t1 t2 t3 t4 y2 y3 y4")).toDF("doc_id", "text")
-    val out = graft.operators.TextDedup.exactSubstringDedup(
-        docs, "doc_id", "text", l = 4, maxDf = 10)
+    val out = graft.operators.TextDedup.exactSubstringDedupFrom(
+        docs, "doc_id", "text", graft.operators.TextDedup.exactSubstringRuns(
+          docs, "doc_id", "text", l = 4, maxDf = 10))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     // doc 1 is the smallest id everywhere -> untouched
@@ -215,8 +222,8 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val scored = Seq((1L, 8L, 1.0), (2L, 29L, 3.0))
       .toDF("doc_id", "n_bigrams", "xent")
-    val out = graft.operators.TextDedup.gopherXentAblation(
-        docs, "doc_id", "text", scored)
+    val out = graft.operators.TextDedup.gopherXentAblationFrom(
+        micro(docs), scored, "doc_id")
       .collect().map(r => r.getString(1) ->
         ((r.getLong(2), r.getLong(3),
           Option(r.get(4)).map(_.asInstanceOf[Double]),
@@ -283,8 +290,9 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
     val d1 = "the be to of and that have with " + Seq.fill(52)("word").mkString(" ")
     val d3 = "the and " + (1 to 48).map(i => f"w$i%02d").mkString(" ")
     val docs = Seq((1L, d1, "s"), (3L, d3, "s")).toDF("doc_id", "text", "src")
-    val r = graft.operators.TextDedup.gopherFullGate(
-        docs, "doc_id", "text", "src")
+    val r = graft.operators.TextDedup.gopherFullGateFrom(micro(docs),
+        graft.operators.TextDedup.gopherQualityRules(docs, "doc_id", "text"),
+        docs, "doc_id", "src")
       .collect().head
     assert((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4), r.getDouble(5)) == (("s", 2L, 1L, 2L, 1L, 0.5)))

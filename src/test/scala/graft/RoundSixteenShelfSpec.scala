@@ -12,6 +12,11 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** A corpus's [[graft.operators.TextLm.docBigrams]] frame — the input
+    * every `TextLm.*From` form below takes. */
+  private def bigramsOf(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.TextLm.docBigrams(df, "doc_id", "text")
+
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -179,15 +184,17 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
       val m = rows.map(_._2).sum
       (docs.size.toLong, m, ((2L * -mu + m) / (2L * m)).toDouble / 1e6)
     }
-    val out = graft.operators.TextLm.groupedKnXent(df, "doc_id", "text", "lang")
+    val out = graft.operators.TextLm.groupedKnXentFrom(
+        bigramsOf(df), df, "doc_id", "text", "lang")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(out("a") == replay(aDocs) && out("b") == replay(bDocs),
       s"engine $out vs replay ${(replay(aDocs), replay(bDocs))}")
     // isolation: group a's row is IDENTICAL when group b is absent —
     // per-group models share nothing (unlike the corpus-global q342)
-    val alone = graft.operators.TextLm.groupedKnXent(
-        aDocs.toDF("doc_id", "lang", "text"), "doc_id", "text", "lang")
+    val aDf = aDocs.toDF("doc_id", "lang", "text")
+    val alone = graft.operators.TextLm.groupedKnXentFrom(
+        bigramsOf(aDf), aDf, "doc_id", "text", "lang")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(alone("a") == out("a"), "per-group models must be isolated")
@@ -243,7 +250,8 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
       }.sum
       (r.toLong, lmu.toDouble / 1e6, m, ((2L * -mu + m) / (2L * m)).toDouble / 1e6)
     }.toSet
-    val out = graft.operators.TextLm.jmDeletedInterpolation(df, "doc_id", "text")
+    val out = graft.operators.TextLm.jmDeletedInterpolationFrom(
+        bigramsOf(df), df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
         r.getDouble(3))).toSet
     graft.operators.CacheScope.drain()
@@ -383,7 +391,8 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
       val v = if (s >= 0) (2 * s + kk) / (2 * kk) else -((2 * -s + kk) / (2 * kk))
       (id, m, v.toDouble / 1e6)
     }.toSet
-    val out = graft.operators.TextLm.minKppProb(df, "doc_id", "text")
+    val out = graft.operators.TextLm.minKppProbFrom(
+        bigramsOf(df), df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     graft.operators.CacheScope.drain()
     assert(out == expected, s"engine $out vs replay $expected")
@@ -448,7 +457,8 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val expected = pts.map(p =>
       (p._1, p._2, p._3, p._4.toDouble / 1e6, slope)).toSet
-    val out = graft.operators.TextLm.dataScalingFit(df, "doc_id", "text")
+    val out = graft.operators.TextLm.dataScalingFitFrom(
+        bigramsOf(df), df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toSet
     graft.operators.CacheScope.drain()

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{EntityRes, Graphs, ModelEval, SchemaDiscovery, Temporal}
+import graft.operators.{EntityRes, Graphs, ModelEval, SchemaDiscovery, Temporal,
+  TextPrep}
 
 /** Round-13 additive shelf: schema discovery (FD strength, IND
   * containment), Fellegi-Sunter probabilistic linkage, off-policy IPS
@@ -14,6 +15,10 @@ import graft.operators.{EntityRes, Graphs, ModelEval, SchemaDiscovery, Temporal}
 class RoundThirteenShelfSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** The corpus word-type seed the BPE / WordPiece merge loops train on. */
+  private def seed(docs: org.apache.spark.sql.DataFrame) =
+    TextPrep.seedWordTypesPlan(docs, "text")
 
   test("fdStrength: g3 violations and strength on a known table") {
     val df = Seq(("a", "x"), ("a", "x"), ("a", "y"), ("b", "z"))
@@ -368,7 +373,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
 
   test("bpeTrain: classic low/lower merges and left-to-right non-overlapping replacement") {
     val docs = Seq((1L, "low low lower")).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep.bpeTrain(docs, "text", merges = 3)
+    val r = TextPrep.bpeMergeLoopFrom(seed(docs), merges = 3)._1
       .collect().sortBy(_.getAs[Long]("round"))
     // round 1: 'l o' (3) beats 'o w' (3) on the pair-ASC tie-break
     assert(r(0).getAs[String]("pair") == "l o" &&
@@ -383,8 +388,9 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // left-to-right non-overlapping -> 'aa a </w>' (never 'a aa </w>'),
     // so round 2's argmax over the survivors is 'a </w>' and round 3
     // stitches the whole word
-    val t = graft.operators.TextPrep
-      .bpeTrain(Seq((1L, "aaa")).toDF("doc_id", "text"), "text", merges = 3)
+    val t = TextPrep
+      .bpeMergeLoopFrom(seed(Seq((1L, "aaa")).toDF("doc_id", "text")),
+        merges = 3)._1
       .collect().sortBy(_.getAs[Long]("round"))
     assert(t(0).getAs[String]("pair") == "a a" &&
       t(0).getAs[Long]("pair_count") == 2L)
@@ -394,13 +400,13 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
 
   test("bpeTrain: empty corpus yields an empty, correctly-schema'd merge table") {
     val docs = Seq((1L, ""), (2L, " ")).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep.bpeTrain(docs, "text", merges = 3)
+    val r = TextPrep.bpeMergeLoopFrom(seed(docs), merges = 3)._1
     assert(r.columns.toSeq ==
       Seq("round", "pair", "merged", "pair_count", "vocab_size"))
     assert(r.count() == 0L)
     // and a truly empty frame too (zero input rows)
-    val e = graft.operators.TextPrep.bpeTrain(
-      docs.where(lit(false)), "text", merges = 2)
+    val e = TextPrep.bpeMergeLoopFrom(seed(docs.where(lit(false))),
+      merges = 2)._1
     assert(e.count() == 0L)
   }
 
@@ -452,8 +458,8 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // after 3 merges on "low low lower": 'low' -> one symbol 'low</w>',
     // 'lower' -> 'low e r </w>' (4 symbols)
     val docs = Seq((7L, "low low lower")).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep
-      .bpeEncode(docs, "doc_id", "text", merges = 3).collect()
+    val r = TextPrep.encodeFromDict(docs, "doc_id", "text",
+      TextPrep.bpeMergeLoopFrom(seed(docs), merges = 3)._2).collect()
     assert(r.length == 1)
     val row = r.head
     assert(row.getAs[Long]("doc_id") == 7L)
@@ -469,8 +475,8 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // SUBSTRING ('b' is the suffix of symbol 'ab') but not as adjacent
     // symbols — the rewrite must leave it at 2 symbols
     val docs = Seq((1L, "bd bd abd ab ab ab")).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep
-      .bpeEncode(docs, "doc_id", "text", merges = 4).collect().head
+    val r = TextPrep.encodeFromDict(docs, "doc_id", "text",
+      TextPrep.bpeMergeLoopFrom(seed(docs), merges = 4)._2).collect().head
     assert(r.getAs[Long]("n_words") == 6L)
     assert(r.getAs[Long]("n_syms_init") == 19L)
     // bd -> 'bd</w>' (1) x2, ab -> 'ab</w>' (1) x3, abd -> 'ab d</w>' (2)
@@ -482,8 +488,8 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // 'aaa' is one symbol after 3 merges; round 4 has no pairs and must
     // STOP, not empty the word table (which returned zero rows)
     val docs = Seq((1L, "aaa")).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep
-      .bpeEncode(docs, "doc_id", "text", merges = 4).collect()
+    val r = TextPrep.encodeFromDict(docs, "doc_id", "text",
+      TextPrep.bpeMergeLoopFrom(seed(docs), merges = 4)._2).collect()
     assert(r.length == 1)
     assert(r.head.getAs[Long]("n_syms") == 1L)
     assert(r.head.getAs[Double]("compression") == 4.0)
@@ -560,7 +566,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     val text = (Seq.fill(4)("ab") ++ Seq.fill(2)("cd") ++
       Seq.fill(6)("a") ++ Seq.fill(6)("b")).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    val r = graft.operators.TextPrep.wordpieceTrain(docs, "text", merges = 3)
+    val r = TextPrep.wordpieceMergeLoopFrom(seed(docs), merges = 3)._1
       .collect().map(x => (x.getLong(0), x.getString(1), x.getString(2),
         x.getLong(3), x.getDouble(4), x.getLong(5))).sortBy(_._1).toList
     assert(r == List(
@@ -568,7 +574,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       (2L, "b </w>", "b</w>", 10L, 10.0 / 180.0, 4L),
       (3L, "cd </w>", "cd</w>", 2L, 0.125, 4L)))
     // the BPE trainer on the same corpus picks the raw-count argmax
-    val bpe1 = graft.operators.TextPrep.bpeTrain(docs, "text", merges = 1)
+    val bpe1 = TextPrep.bpeMergeLoopFrom(seed(docs), merges = 1)._1
       .collect().head
     assert(bpe1.getString(1) == "b </w>" && bpe1.getLong(3) == 10L)
   }
@@ -581,8 +587,8 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     val text = (Seq.fill(4)("ab") ++ Seq.fill(2)("cd") ++
       Seq.fill(6)("a") ++ Seq.fill(6)("b")).mkString(" ")
     val docs = Seq((1L, text)).toDF("doc_id", "text")
-    val e = graft.operators.TextPrep.wordpieceEncode(
-        docs, "doc_id", "text", merges = 3)
+    val e = TextPrep.encodeFromDict(docs, "doc_id", "text",
+        TextPrep.wordpieceMergeLoopFrom(seed(docs), merges = 3)._2)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
         x.getLong(3), x.getDouble(4))).toList
     assert(e == List((1L, 18L, 42L, 28L, 1.5)))
@@ -679,9 +685,11 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       (i.toLong, Array(math.cos(math.toRadians(t)).toFloat,
         math.sin(math.toRadians(t)).toFloat))
     }
-    val out = graft.operators.Similarity.prototypicalityBand(
-        vecs.toDF("vec_id", "embedding"), "vec_id", "embedding",
-        nlist = 1, lloydIters = 2)
+    val (assign, cents) = graft.operators.Similarity.semAssignmentFrames(
+      vecs.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      nlist = 1, lloydIters = 2)
+    val out = graft.operators.Similarity.prototypicalityBandFrom(
+        assign, cents, "vec_id")
       .collect().map(r => r.getString(1) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
     graft.operators.CacheScope.drain()
@@ -778,8 +786,9 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       src -> ((ds.size.toLong, mm,
         ((2L * -mu + mm) / (2L * mm)).toDouble / 1e6))
     }
-    val out = graft.operators.TextLm.heldoutKnXent(
-        df, "doc_id", "text", "source")
+    val out = graft.operators.TextLm.heldoutKnXentFrom(
+        graft.operators.TextLm.docBigrams(df, "doc_id", "text"), df,
+        "doc_id", "text", "source")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     graft.operators.CacheScope.drain()

@@ -3,11 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the session-shared query forms against their standalone operator
-  * forms: every query routed through a `SharedCache` builder returns
-  * EXACTLY the rows its self-building operator form returns — the sharing
-  * is a cost optimization, never a semantics change (the SharedCaches
-  * "standalone in SEMANTICS" rule).
+/** Pins the session-shared query forms against fresh builds: every query
+  * routed through a `SharedCache` builder returns EXACTLY the rows of the
+  * same `*From` operator run on its input built fresh (`xFrom(input,
+  * builder(input))`, nothing shared) — the sharing is a cost
+  * optimization, never a semantics change (the SharedCaches "standalone
+  * in SEMANTICS" rule). Also guards the one-form-per-operator rule: no
+  * operator module keeps a self-building `x` beside its `xFrom`.
   */
 class SharedFormsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -39,49 +41,62 @@ class SharedFormsSpec extends AnyFunSuite {
   test("q342/q343/q344/q347/q348/q349/q354 shared-cache forms == standalone operators") {
     import graft.operators.TextLm
     import org.apache.spark.sql.functions.col
+    // fresh inputs, built without any SharedCache
+    val docBig = TextLm.docBigrams(docs, "doc_id", "text")
+    val model = TextLm.knBigramModel(docBig, docs, "text")
     assertSharedEqualsStandalone(Map(
-      "q342_kn_xent" -> TextLm.knCrossEntropy(docs, "doc_id", "text"),
-      "q343_kn_ppl_mix" -> TextLm.knMix(docs, "doc_id", "text", "source"),
-      "q344_kn_importance_weights" -> TextLm.knImportanceWeights(
-        docs, "doc_id", "text", "source", col("lang") === "en"),
-      "q347_kn3_xent" -> TextLm.kn3CrossEntropy(docs, "doc_id", "text"),
-      "q348_excess_loss_select" -> TextLm.excessLossSelect(
-        docs, "doc_id", "text", "source"),
-      "q349_mkn_xent" -> TextLm.mknCrossEntropy(docs, "doc_id", "text"),
-      "q354_mink_prob" -> TextLm.minKProb(docs, "doc_id", "text"),
-      "q369_lang_kn_xent" -> TextLm.groupedKnXent(
-        docs, "doc_id", "text", "lang"),
-      "q374_lang_kn_mix" -> TextLm.knMixFrom(
-        TextLm.groupedKnXentPerDocFrom(
-          TextLm.docBigrams(docs, "doc_id", "text"), docs,
+      "q342_kn_xent" -> TextLm.knCrossEntropyFrom(docBig, model, "doc_id"),
+      "q343_kn_ppl_mix" -> TextLm.tercileMix(
+        TextLm.knCrossEntropyFrom(docBig, model, "doc_id"), docs,
+        "doc_id", "source"),
+      "q344_kn_importance_weights" -> TextLm.knImportanceWeightsFrom(
+        docBig, model, docs, "doc_id", "text", "source",
+        col("lang") === "en"),
+      "q347_kn3_xent" -> TextLm.kn3CrossEntropyFrom(
+        docBig, docs, "doc_id", "text"),
+      "q348_excess_loss_select" -> TextLm.excessLossSelectFrom(
+        docBig, model, docs, "doc_id", "text", "source"),
+      "q349_mkn_xent" -> TextLm.mknCrossEntropyFrom(
+        docBig, docs, "doc_id", "text"),
+      "q354_mink_prob" -> TextLm.minKProbFrom(docBig, model, "doc_id"),
+      "q369_lang_kn_xent" -> TextLm.groupedKnXentFrom(
+        docBig, docs, "doc_id", "text", "lang"),
+      "q374_lang_kn_mix" -> TextLm.tercileMix(
+        TextLm.groupedKnXentPerDocFrom(docBig, docs,
           "doc_id", "text", "lang"),
         docs, "doc_id", "lang")))
   }
 
   test("exact-substring / memorization / soft-weight shared forms == standalone operators") {
     import graft.operators.{Scale, TextDedup, TextLm}
+    import org.apache.spark.sql.functions.col
     def softWeights = TextLm.softDedupWeights(
       TextLm.docBigrams(docs, "doc_id", "text"), "doc_id")
+    def perDoc = TextDedup.exactSubstringDedupFrom(docs, "doc_id", "text",
+      TextDedup.exactSubstringRuns(docs, "doc_id", "text", l = 20, maxDf = 10))
+    def windows(ks: Seq[Int]) =
+      ks.map(k => k -> TextDedup.memWindowInventory(docs, "doc_id", "text", k))
     assertSharedEqualsStandalone(Map(
       "q300_exact_substring" -> TextDedup.exactSubstringRuns(
         docs, "doc_id", "text", l = 20, maxDf = 10),
-      "q377_exact_substr_dedup" -> TextDedup.exactSubstringDedup(
-        docs, "doc_id", "text", l = 20, maxDf = 10),
+      "q377_exact_substr_dedup" -> perDoc,
       "q384_exact_substr_sweep" -> TextDedup.exactSubstringSweep(
         docs, "doc_id", "text"),
-      "q391_dedup_aware_mix" -> Scale.dedupAwareMix(
-        docs, "doc_id", "text", "source"),
+      "q391_dedup_aware_mix" -> Scale.dedupAwareMixFrom(
+        docs, "doc_id", "source", perDoc),
       "q388_softdedup_weights" -> softWeights,
       "q394_soft_weighted_mix" -> Scale.softWeightedMix(
         docs, "doc_id", "source", "text", softWeights),
-      "q398_allocation_ablation" -> Scale.allocationAblation(
-        docs, "doc_id", "text", "source", softWeights),
-      "q389_extractable_memorization" -> TextDedup.extractableMemorization(
-        docs, "doc_id", "text"),
-      "q393_memorization_risk" -> TextDedup.memorizationRisk(
-        docs, "doc_id", "text", k = 10),
-      "q397_memorization_by_source" -> TextDedup.memorizationRiskBySource(
-        docs, "doc_id", "text", "source")))
+      "q398_allocation_ablation" -> Scale.allocationAblationFrom(
+        docs, "doc_id", "text", "source", softWeights, perDoc),
+      "q389_extractable_memorization" ->
+        TextDedup.extractableMemorizationFrom(windows(Seq(5, 10, 20))),
+      "q393_memorization_risk" ->
+        TextDedup.memorizationRiskFrom(windows(Seq(10)).head._2),
+      "q397_memorization_by_source" -> TextDedup.memorizationRiskBySourceFrom(
+        windows(Seq(5, 10, 20)),
+        docs.select(col("doc_id").cast("long").as("doc_id"),
+          col("source")))))
   }
 
   test("q395 corpus card via the shared k=10 inventory == the self-building census leg") {
@@ -89,8 +104,8 @@ class SharedFormsSpec extends AnyFunSuite {
     // the card's extractable_frac_k10 column must equal the standalone
     // census's k=10 row — the one leg the r19 rewire changed
     val card = SparkEntry.queries("q395_corpus_card_v2")(spark, sf)
-    val solo = TextDedup.extractableMemorization(docs, "doc_id", "text",
-        ks = Seq(10))
+    val solo = TextDedup.extractableMemorizationFrom(
+        Seq(10 -> TextDedup.memWindowInventory(docs, "doc_id", "text", 10)))
       .select(org.apache.spark.sql.functions.col("extractable_frac"))
       .collect().head.getDouble(0)
     val viaCard = card.select("extractable_frac_k10").collect().head.getDouble(0)
@@ -103,26 +118,45 @@ class SharedFormsSpec extends AnyFunSuite {
     import graft.operators.{Similarity, TextDedup}
     import org.apache.spark.sql.functions.col
     val emb = Graft.table(spark, sf, "embeddings")
+    // a fresh Lloyd build — nothing shared with the caches
+    val (assign, cents) = Similarity.semAssignmentFrames(emb, "vec_id",
+      "embedding", nlist = 8, lloydIters = 2)
     assertSharedEqualsStandalone(Map(
-      "q142_semantic_dedup" -> Similarity.semanticDedup(
-        emb, "vec_id", "embedding", threshold = 0.3, nlist = 8,
-        lloydIters = 2),
-      "q362_proto_band" -> Similarity.prototypicalityBand(
-        emb, "vec_id", "embedding"),
-      "q387_semantic_decontam" -> Similarity.semanticDecontam(
-        emb, "vec_id", "embedding", col("vec_id") % 10 === 0,
-        threshold = 0.3, nlist = 8, lloydIters = 2)))
+      "q142_semantic_dedup" -> Similarity.semanticDedupFrom(
+        assign, "vec_id", threshold = 0.3),
+      "q362_proto_band" -> Similarity.prototypicalityBandFrom(
+        assign, cents, "vec_id"),
+      "q387_semantic_decontam" -> Similarity.semanticDecontamFrom(
+        assign, "vec_id", col("vec_id") % 10 === 0, threshold = 0.3)))
     // the worklist consumer (q345) against a fully self-building pipeline
     // (fresh minhash pairs + fresh semantic pairs — nothing shared)
     val soloWorklist = TextDedup.dedupPipeline(
       docs, "doc_id", "text",
       TextDedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.5),
-      Similarity.semanticDupPairs(
-        emb, "vec_id", "embedding", threshold = 0.3, nlist = 8,
-        lloydIters = 2))
+      Similarity.semanticDupPairsFrom(assign, "vec_id", threshold = 0.3))
     val viaWorklist = SparkEntry.queries("q345_dedup_pipeline")(spark, sf)
     assert(rows(viaWorklist) == rows(soloWorklist),
       "worklist rows drift under the shared semantic assignment")
     graft.operators.CacheScope.drain()
+  }
+
+  test("one form per operator: no graft.operators module has a public x beside xFrom") {
+    // every operator module object compiled into the classes directory
+    val root = new java.io.File(getClass.getClassLoader
+      .getResource("graft/operators").toURI)
+    val modules = root.listFiles().map(_.getName).toSeq
+      .filter(n => n.endsWith("$.class") && n.count(_ == '$') == 1)
+      .map(n => Class.forName("graft.operators." + n.stripSuffix(".class")))
+    assert(modules.exists(_.getSimpleName == "TextLm$"), "module scan found no operators")
+    val pairs = modules.flatMap { m =>
+      val names = m.getDeclaredMethods.toSeq
+        .filter(x => java.lang.reflect.Modifier.isPublic(x.getModifiers) &&
+          !x.isSynthetic && !x.getName.contains('$'))
+        .map(_.getName).toSet
+      names.filter(x => names(x + "From"))
+        .map(x => m.getSimpleName.stripSuffix("$") + "." + x)
+    }.sorted
+    assert(pairs.isEmpty, s"${pairs.size} self-building overloads beside " +
+      s"their *From form: ${pairs.mkString(", ")}")
   }
 }

@@ -120,12 +120,23 @@ class TextPrepSpec extends AnyFunSuite {
     assert(both("hex_secret") == 1L && both("digit_run") == 1L)
   }
 
+  /** The unigram-LM Viterbi DP of a corpus: the (w, freq) counts of its
+    * 1..maxWord-char words through [[TextPrep.unigramDpFrom]] — the input
+    * the `unigramLm*From` forms take. */
+  private def unigramDp(docs: org.apache.spark.sql.DataFrame, maxPiece: Int,
+                        maxWord: Int = 16) =
+    TextPrep.unigramDpFrom(
+      docs.select(explode(split(col("text"), " ")).as("w"))
+        .where(length(col("w")) > 0 && length(col("w")) <= maxWord)
+        .groupBy(col("w")).agg(count(lit(1)).as("freq")),
+      maxPiece, maxWord)
+
   private def unigramRows(texts: Seq[String], maxPiece: Int = 4,
                           maxWord: Int = 16): List[(String, Long, Double, Double)] = {
     import spark.implicits._
-    val out = TextPrep.unigramLmTrainStep(
+    val out = TextPrep.unigramLmTrainStepFrom(unigramDp(
         texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text"),
-        "text", maxPiece, maxWord)
+        maxPiece, maxWord))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
         r.getDouble(3))).sortBy(_._1).toList
     graft.operators.CacheScope.drain()
@@ -171,8 +182,8 @@ class TextPrepSpec extends AnyFunSuite {
     // one dropped), 2 pieces -> 2.0
     val docs = Seq((1L, "aaaa cc", "s1"), (2L, "aaaa abcdefghijklmnopq", "s2"))
       .toDF("doc_id", "text", "source")
-    val out = TextPrep.unigramLmFertility(docs, "text", "source",
-        maxPieceLen = 2).collect()
+    val out = TextPrep.unigramLmFertilityFrom(unigramDp(docs, maxPiece = 2),
+        docs, "text", "source", maxWordLen = 16).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1).toList
     graft.operators.CacheScope.drain()
@@ -182,9 +193,9 @@ class TextPrepSpec extends AnyFunSuite {
   private def pruneRow(texts: Seq[String], maxPiece: Int = 4)
   : (Long, Long, Long, Long, Long, Long, Double, Double) = {
     import spark.implicits._
-    val out = TextPrep.unigramLmPrune(
+    val out = TextPrep.unigramLmPruneFrom(unigramDp(
         texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text"),
-        "text", maxPieceLen = maxPiece).collect().head
+        maxPiece), keepNum = 1, keepDen = 2).collect().head
     graft.operators.CacheScope.drain()
     (out.getLong(0), out.getLong(1), out.getLong(2), out.getLong(3),
       out.getLong(4), out.getLong(5), out.getDouble(6), out.getDouble(7))
