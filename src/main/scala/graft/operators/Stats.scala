@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import Relational.dec
 
 /** Inferential statistics over corpus/stream metrics — the measurement side
   * of a data pipeline: is source A's quality distribution actually different
@@ -23,7 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Stats {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(12, 2))
   private def d(c: Column): Column = c.cast("double")
 
   /** Welch's unequal-variance two-sample t-test between `groupA` and

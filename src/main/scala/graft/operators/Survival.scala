@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Temporal.dayIdx
 
 /** Survival analysis over event logs — the churn/retention estimator a
   * product warehouse reports: how long do users stay active, with the
@@ -28,8 +29,6 @@ object Survival {
     * risk sets without ever counting as events — the whole point. */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
                   churnGapDays: Int = 7): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val spans = events.groupBy(col(userCol))
       .agg(min(dayIdx(col(tsCol))).as("__first"),
         max(dayIdx(col(tsCol))).as("__last"))

@@ -18,6 +18,11 @@ import CacheScope.checkpoint
   */
 object Temporal {
 
+  /** Days since 1970-01-01 of a timestamp/date column, as BIGINT — the day
+    * index every daily operator here and in Survival groups by. */
+  private[operators] def dayIdx(c: Column): Column =
+    datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
+
   /** As-of join: for every left row, the LATEST right row with
     * `right.ts <= left.ts` in the same key group (ties at equal ts match,
     * i.e. `>=` semantics — DuckDB's `ASOF JOIN ... ON l.ts >= r.ts`).
@@ -685,8 +690,6 @@ object Temporal {
     * sums; the interpolation formula is the single double expression. */
   def gapFill(events: DataFrame, keyCol: String, tsCol: String,
               valueCol: String): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val daily = events
       .groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
       .agg(count(lit(1)).as("n"),
@@ -762,8 +765,6 @@ object Temporal {
     * full day grid, cumulative over that CALENDAR-bounded grid. */
   def cumulativeUniques(events: DataFrame, userCol: String,
                         tsCol: String): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val firstDay = events.groupBy(col(userCol))
       .agg(min(dayIdx(col(tsCol))).as("day_idx"))
       .groupBy(col("day_idx")).agg(count(lit(1)).as("n_new"))
@@ -786,8 +787,6 @@ object Temporal {
     * Output: (day_idx, n_active, n_new, n_returning, new_share). */
   def newVsReturning(events: DataFrame, userCol: String,
                      tsCol: String): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val firstDay = events.groupBy(col(userCol))
       .agg(min(dayIdx(col(tsCol))).as("day_idx"))
       .groupBy(col("day_idx")).agg(count(lit(1)).as("n_new"))
@@ -813,8 +812,6 @@ object Temporal {
     * weekdays absent from the data still divide correctly. */
   def dowSeasonality(events: DataFrame, keyCol: String,
                      tsCol: String): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val cnt = events.groupBy(col(keyCol),
         pmod(dayIdx(col(tsCol)), lit(7L)).as("dow"))
       .agg(count(lit(1)).as("n_events"))
@@ -848,8 +845,6 @@ object Temporal {
     * DAILY table (calendar-bounded), never events. */
   def cusumChangepoint(events: DataFrame, keyCol: String,
                        tsCol: String): DataFrame = {
-    def dayIdx(c: Column) =
-      datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
     val daily = events
       .groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
       .agg(count(lit(1)).as("c"))

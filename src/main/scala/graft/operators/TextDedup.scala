@@ -429,20 +429,13 @@ object TextDedup {
           / lit(1e6))
   }
 
-  /** Distinct character n-grams of `textCol` as ONE array per document (rows
-    * shorter than n chars are dropped) — the set representation for
-    * [[ngramJaccardPairs]]. */
-  def charNgramSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.where(length(col(textCol)) >= n)
-      .select(col(idCol),
-        expr(s"array_distinct(transform(sequence(1, length($textCol)-${n - 1}), " +
-          s"i -> substring($textCol, i, $n)))").as("gs"))
-
-  /** Hashed form of [[charNgramSets]]: one native single-pass expression
-    * ([[graft.functions.NgramDistinctHashes]]) emitting the distinct grams
-    * as 64-bit hashes — byte-exact distinctness (so `size(gs)` is the true
-    * set size), hashed identity (so every downstream shuffle moves longs,
-    * not n-char strings). */
+  /** Distinct character n-grams of `textCol` as ONE array `gs` of 64-bit
+    * hashes per document (rows shorter than n chars are dropped) — the set
+    * representation for [[ngramJaccardPairs]]. One native single-pass
+    * expression ([[graft.functions.NgramDistinctHashes]]) emits them:
+    * byte-exact distinctness (so `size(gs)` is the true set size), hashed
+    * identity (so every downstream shuffle moves longs, not n-char
+    * strings). */
   def charNgramHashSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.where(length(col(textCol)) >= n)
       .select(col(idCol),

@@ -13,11 +13,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object ObjectStore {
 
-  /** Hive-partitioned bronze key for a run date
+  /** Hive-partitioned bronze prefix of a run date, `openmeteo/y=/m=/d=/` —
+    * the one spelling of the bronze layout (silver reads this directory). */
+  def bronzeDayPrefix(date: LocalDate): String =
+    f"openmeteo/y=${date.getYear}%04d/m=${date.getMonthValue}%02d/d=${date.getDayOfMonth}%02d/"
+
+  /** Bronze key for a run date
     * (reference: dags/weather_daily_etl.py:35-36). */
   def bronzeKey(date: LocalDate): String =
-    f"openmeteo/y=${date.getYear}%04d/m=${date.getMonthValue}%02d/d=${date.getDayOfMonth}%02d/" +
-      s"openmeteo_$date.json"
+    bronzeDayPrefix(date) + s"openmeteo_$date.json"
 
   /** Store the payload VERBATIM (the reference re-serializes with json.dumps,
     * dags/weather_daily_etl.py:48; storing the raw body is lossless and keeps

@@ -41,9 +41,9 @@ object SilverJob {
         to_timestamp(col("h.time")).as("event_ts")): _*)
   }
 
+  /** The day's bronze directory under `root` ([[ObjectStore.bronzeDayPrefix]]). */
   def dayPath(root: String, date: LocalDate): String =
-    f"${root.stripSuffix("/")}/openmeteo/y=${date.getYear}%04d/" +
-      f"m=${date.getMonthValue}%02d/d=${date.getDayOfMonth}%02d/"
+    s"${root.stripSuffix("/")}/${ObjectStore.bronzeDayPrefix(date)}"
 
   /** Flatten the day's bronze doc to hourly rows (no write). */
   def transform(spark: SparkSession, bronzeRoot: String, date: LocalDate,

@@ -48,22 +48,29 @@ object AffinityQueries {
         .orderBy(col("n").desc, col("path"))
         .limit(20)))
 
+  /** The basket item-pair counts of q257/q258 (no WITH): each order's
+    * first 12 distinct parts as baskets `cb`, co-occurring pairs `p` seen
+    * in at least 2 baskets, per-item basket counts `ic` and the basket
+    * total `nb`. */
+  private val itemPairsCte =
+    """bi AS (
+      |  SELECT l_orderkey AS b, l_partkey AS i,
+      |    row_number() OVER (PARTITION BY l_orderkey
+      |      ORDER BY l_partkey) AS rn
+      |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)),
+      |cb AS (SELECT b, i FROM bi WHERE rn <= 12),
+      |p AS (
+      |  SELECT a.i AS item_a, b2.i AS item_b,
+      |    CAST(count(*) AS BIGINT) AS n_pair
+      |  FROM cb a JOIN cb b2 ON a.b = b2.b AND a.i < b2.i
+      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      |ic AS (SELECT i, CAST(count(*) AS BIGINT) AS n FROM cb GROUP BY 1),
+      |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS t FROM cb)""".stripMargin
+
   val oracle: Map[String, String] = Map(
 
     "q257_item_cooccurrence" ->
-      """WITH bi AS (
-        |  SELECT l_orderkey AS b, l_partkey AS i,
-        |    row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn
-        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)),
-        |cb AS (SELECT b, i FROM bi WHERE rn <= 12),
-        |p AS (
-        |  SELECT a.i AS item_a, b2.i AS item_b,
-        |    CAST(count(*) AS BIGINT) AS n_pair
-        |  FROM cb a JOIN cb b2 ON a.b = b2.b AND a.i < b2.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |ic AS (SELECT i, CAST(count(*) AS BIGINT) AS n FROM cb GROUP BY 1),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS t FROM cb)
+      s"""WITH $itemPairsCte
         |SELECT item_a, item_b, n_pair, ia.n AS n_a, ib.n AS n_b,
         |  CAST(n_pair AS DOUBLE) / (ia.n + ib.n - n_pair) AS jaccard,
         |  CAST(n_pair AS DOUBLE) * nb.t
@@ -73,19 +80,7 @@ object AffinityQueries {
         |ORDER BY n_pair DESC, item_a, item_b LIMIT 20""".stripMargin,
 
     "q258_similar_items" ->
-      """WITH bi AS (
-        |  SELECT l_orderkey AS b, l_partkey AS i,
-        |    row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn
-        |  FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)),
-        |cb AS (SELECT b, i FROM bi WHERE rn <= 12),
-        |p AS (
-        |  SELECT a.i AS item_a, b2.i AS item_b,
-        |    CAST(count(*) AS BIGINT) AS n_pair
-        |  FROM cb a JOIN cb b2 ON a.b = b2.b AND a.i < b2.i
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |ic AS (SELECT i, CAST(count(*) AS BIGINT) AS n FROM cb GROUP BY 1),
-        |nb AS (SELECT CAST(count(DISTINCT b) AS BIGINT) AS t FROM cb),
+      s"""WITH $itemPairsCte,
         |pl AS (
         |  SELECT item_a, item_b,
         |    CAST(n_pair AS DOUBLE) * nb.t

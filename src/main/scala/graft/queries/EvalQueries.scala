@@ -381,17 +381,7 @@ object EvalQueries {
         |FROM g""".stripMargin,
 
     "q241_auc" ->
-      """WITH grid AS (
-        |  SELECT n_chars AS v,
-        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM documents GROUP BY 1),
-        |c AS (
-        |  SELECT v, ca, cnt,
-        |    CAST(coalesce(sum(cnt) OVER (ORDER BY v ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS below
-        |  FROM grid),
+      s"""WITH ${OracleSql.enRankGridCte("")},
         |a AS (
         |  SELECT CAST(sum(ca) AS BIGINT) AS n_pos,
         |    CAST(sum(cnt - ca) AS BIGINT) AS n_neg,

@@ -169,12 +169,64 @@ object ExperimentQueries {
         nSplits = 20, zCrit = 1.959964)
     }))
 
+  /** The q294 CUPED oracle (q301 when `stratified`: the same stages per
+    * `user_id % 4` cohort): per-user pre/post DECIMAL sums, exact moment
+    * sums, the centered co-moments, and Stats.cuped's final formulas. */
+  private def cupedOracle(stratified: Boolean): String = {
+    val (unit, k, byUser, byK) =
+      if (stratified) ("user_id % 4 AS cohort", "cohort, ", "user_id", " GROUP BY 1")
+      else ("user_id", "", "1", "")
+    s"""WITH pu AS (
+       |  SELECT $unit,
+       |    CAST(sum(CASE WHEN day(ts) <= 15
+       |      THEN CAST(value AS DECIMAL(12,2))
+       |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS pre,
+       |    CAST(sum(CASE WHEN day(ts) >= 16
+       |      THEN CAST(value AS DECIMAL(12,2))
+       |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS post
+       |  FROM events GROUP BY $byUser),
+       |a AS (
+       |  SELECT ${k}CAST(count(*) AS BIGINT) AS n,
+       |    sum(CAST(pre AS DECIMAL(12,2))) AS sx,
+       |    sum(CAST(post AS DECIMAL(12,2))) AS sy,
+       |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
+       |      AS sxy,
+       |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(pre AS DECIMAL(12,2)))
+       |      AS sxx,
+       |    sum(CAST(post AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
+       |      AS syy
+       |  FROM pu$byK),
+       |m AS (SELECT ${k}n,
+       |    ${OracleSql.centeredMoments}
+       |  FROM a)
+       |SELECT ${k}n,
+       |  CASE WHEN dxx = 0.0 THEN NULL ELSE dxy / dxx END AS theta,
+       |  dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_post,
+       |  CASE WHEN dxx = 0.0
+       |    THEN dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
+       |    ELSE (dyy - (dxy / dxx) * dxy)
+       |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) END AS var_cuped,
+       |  CASE WHEN dxx = 0.0 OR dyy = 0.0 THEN CAST(0.0 AS DOUBLE)
+       |    ELSE (dxy / dxx) * dxy / dyy END AS var_reduction
+       |FROM m""".stripMargin
+  }
+
+  /** The q246 two-proportion z over arm counts n_a, k_a, n_b, k_b and the
+    * pooled rate `pp` (NULL when pp is 0 or 1), in one operation order. */
+  private val pooledZ =
+    """CASE WHEN pp = 0.0 OR pp = 1.0 THEN NULL
+      |      ELSE (CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE)
+      |          - CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE))
+      |        / sqrt(pp * (1.0 - pp)
+      |          * (1.0 / CAST(n_a AS DOUBLE)
+      |            + 1.0 / CAST(n_b AS DOUBLE))) END AS z""".stripMargin
+
   val oracle: Map[String, String] = Map(
 
     // Mirrors Stats.sequentialMonitor: calendar-grid cumulative counts,
     // the q246 z operation order, exact day integers under one sqrt.
     "q296_sequential_monitor" ->
-      """WITH daily AS (
+      s"""WITH daily AS (
         |  SELECT user_id AS u,
         |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
         |      AS BIGINT) AS day_idx,
@@ -205,12 +257,7 @@ object ExperimentQueries {
         |      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS pp
         |  FROM c, tm),
         |zz AS (SELECT *,
-        |    CASE WHEN pp = 0.0 OR pp = 1.0 THEN NULL
-        |      ELSE (CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-        |          - CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-        |        / sqrt(pp * (1.0 - pp)
-        |          * (1.0 / CAST(n_a AS DOUBLE)
-        |            + 1.0 / CAST(n_b AS DOUBLE))) END AS z,
+        |    $pooledZ,
         |    '1.959964'::DOUBLE
         |      * sqrt(CAST(tmx AS DOUBLE) / CAST(t AS DOUBLE)) AS boundary
         |  FROM p)
@@ -221,91 +268,24 @@ object ExperimentQueries {
 
     // Mirrors Stats.cuped: exact decimal moments over the per-user
     // pre/post sums, identical final-formula operation order.
-    "q294_cuped" ->
-      """WITH pu AS (
-        |  SELECT user_id,
-        |    CAST(sum(CASE WHEN day(ts) <= 15
-        |      THEN CAST(value AS DECIMAL(12,2))
-        |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS pre,
-        |    CAST(sum(CASE WHEN day(ts) >= 16
-        |      THEN CAST(value AS DECIMAL(12,2))
-        |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS post
-        |  FROM events GROUP BY 1),
-        |a AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(pre AS DECIMAL(12,2))) AS sx,
-        |    sum(CAST(post AS DECIMAL(12,2))) AS sy,
-        |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
-        |      AS sxy,
-        |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(pre AS DECIMAL(12,2)))
-        |      AS sxx,
-        |    sum(CAST(post AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
-        |      AS syy
-        |  FROM pu),
-        |m AS (SELECT n,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS dxx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS dyy,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS dxy
-        |  FROM a)
-        |SELECT n,
-        |  CASE WHEN dxx = 0.0 THEN NULL ELSE dxy / dxx END AS theta,
-        |  dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_post,
-        |  CASE WHEN dxx = 0.0
-        |    THEN dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-        |    ELSE (dyy - (dxy / dxx) * dxy)
-        |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) END AS var_cuped,
-        |  CASE WHEN dxx = 0.0 OR dyy = 0.0 THEN CAST(0.0 AS DOUBLE)
-        |    ELSE (dxy / dxx) * dxy / dyy END AS var_reduction
-        |FROM m""".stripMargin,
+    "q294_cuped" -> cupedOracle(stratified = false),
 
     // Mirrors q294 stage for stage with the cohort key threaded through.
-    "q301_cuped_stratified" ->
-      """WITH pu AS (
-        |  SELECT user_id % 4 AS cohort,
-        |    CAST(sum(CASE WHEN day(ts) <= 15
-        |      THEN CAST(value AS DECIMAL(12,2))
-        |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS pre,
-        |    CAST(sum(CASE WHEN day(ts) >= 16
-        |      THEN CAST(value AS DECIMAL(12,2))
-        |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS DOUBLE) AS post
-        |  FROM events GROUP BY user_id),
-        |a AS (
-        |  SELECT cohort, CAST(count(*) AS BIGINT) AS n,
-        |    sum(CAST(pre AS DECIMAL(12,2))) AS sx,
-        |    sum(CAST(post AS DECIMAL(12,2))) AS sy,
-        |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
-        |      AS sxy,
-        |    sum(CAST(pre AS DECIMAL(12,2)) * CAST(pre AS DECIMAL(12,2)))
-        |      AS sxx,
-        |    sum(CAST(post AS DECIMAL(12,2)) * CAST(post AS DECIMAL(12,2)))
-        |      AS syy
-        |  FROM pu GROUP BY 1),
-        |m AS (SELECT cohort, n,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS dxx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS dyy,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS dxy
-        |  FROM a)
-        |SELECT cohort, n,
-        |  CASE WHEN dxx = 0.0 THEN NULL ELSE dxy / dxx END AS theta,
-        |  dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS var_post,
-        |  CASE WHEN dxx = 0.0
-        |    THEN dyy / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))
-        |    ELSE (dyy - (dxy / dxx) * dxy)
-        |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) END AS var_cuped,
-        |  CASE WHEN dxx = 0.0 OR dyy = 0.0 THEN CAST(0.0 AS DOUBLE)
-        |    ELSE (dxy / dxx) * dxy / dyy END AS var_reduction
-        |FROM m""".stripMargin,
-
+    "q301_cuped_stratified" -> cupedOracle(stratified = true),
     // Mirrors Stats.srmCheck: exact distinct-unit counts, the identical
     // fixed-order two-term chi-square.
-    "q313_srm_check" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
+    "q313_srm_check" -> {
+      val chi2 = """(CAST(n_a AS DOUBLE)
+        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |    * (CAST(n_a AS DOUBLE)
+        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |  + (CAST(n_b AS DOUBLE)
+        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |    * (CAST(n_b AS DOUBLE)
+        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)""".stripMargin
+      s"""WITH u AS (SELECT DISTINCT user_id FROM events),
         |a AS (SELECT
         |    CAST(count(CASE WHEN user_id % 2 = 0 THEN 1 END) AS BIGINT)
         |      AS n_a,
@@ -313,29 +293,12 @@ object ExperimentQueries {
         |      AS n_b
         |  FROM u)
         |SELECT n_a, n_b,
-        |  (CAST(n_a AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    * (CAST(n_a AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |  + (CAST(n_b AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    * (CAST(n_b AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |  $chi2
         |    AS chi2,
-        |  (CAST(n_a AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    * (CAST(n_a AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |  + (CAST(n_b AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    * (CAST(n_b AS DOUBLE)
-        |      - (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
-        |    / ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) / 2.0)
+        |  $chi2
         |    > '3.841459'::DOUBLE AS srm
-        |FROM a""".stripMargin,
+        |FROM a""".stripMargin
+    },
 
     // Mirrors Stats.diffInDiff: exact DECIMAL cell sums, one fixed-order
     // mean division per cell, micro-quantized pre-day means feeding
@@ -444,12 +407,7 @@ object ExperimentQueries {
          |      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) AS pp
          |  FROM a),
          |zz AS (SELECT *,
-         |    CASE WHEN pp = 0.0 OR pp = 1.0 THEN NULL
-         |      ELSE (CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-         |          - CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-         |        / sqrt(pp * (1.0 - pp)
-         |          * (1.0 / CAST(n_a AS DOUBLE)
-         |            + 1.0 / CAST(n_b AS DOUBLE))) END AS z
+         |    $pooledZ
          |  FROM p)
          |SELECT split, n_a, k_a, n_b, k_b, z,
          |  CASE WHEN z IS NULL THEN false

@@ -2,9 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.Graft.table
 import graft.operators.{Graphs, Inference, Temporal}
+import graft.operators.Relational.dec
 
 /** Round-10 inference + association batch: the nonparametric test bench
   * (Mann-Whitney, Kruskal-Wallis, Kendall, BH-FDR), information measures
@@ -21,7 +21,6 @@ object InferQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private def dec(c: Column): Column = c.cast(DecimalType(12, 2))
   private def d(c: Column): Column = c.cast("double")
 
   /** q221/q222 support threshold: a brand pair must co-occur in at least
@@ -271,17 +270,7 @@ object InferQueries {
     "q268_kcore" -> kcoreSql,
 
     "q216_mann_whitney" ->
-      """WITH grid AS (
-        |  SELECT n_chars AS v,
-        |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |    CAST(count(*) AS BIGINT) AS cnt
-        |  FROM documents WHERE lang IN ('en', 'de') GROUP BY 1),
-        |c AS (
-        |  SELECT v, ca, cnt,
-        |    CAST(coalesce(sum(cnt) OVER (ORDER BY v ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |      AS below
-        |  FROM grid),
+      s"""WITH ${OracleSql.enRankGridCte("WHERE lang IN ('en', 'de') ")},
         |a AS (
         |  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
         |    CAST(sum(cnt - ca) AS BIGINT) AS n_b,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Graft.table
 import graft.operators.{Similarity, TextDedup}
+import OracleSql.embNormsCte
 
 /** LLM-training-data pipeline operators over the driver's `documents` and
   * `embeddings` tables: text statistics, quality scoring, language-ID,
@@ -1996,68 +1997,67 @@ object LlmQueries {
     })
   )
 
-  /** Shared CTE chain replaying the MinHash-LSH candidate graph + connected
-    * components (the same `nearDupPairs` -> `connectedComponents` lineage the
-    * Spark side shares between q61 and q91): ends at `reach(id, r)`. */
+  /** Squared Euclidean distance between list columns `v` and `c` as the
+    * three sequential folds |v|² − 2·v·c + |c|² (Similarity's fold order). */
+  private def d2(v: String, c: String) =
+    s"""list_reduce(list_transform($v, x -> x*x), (a,x) -> a+x)
+       |        - 2.0 * list_reduce(list_transform(range(1, len($v)+1), i -> $v[i]*$c[i]), (a,x) -> a+x)
+       |        + list_reduce(list_transform($c, x -> x*x), (a,x) -> a+x)""".stripMargin
+
+  /** Lloyd round `r` of Similarity.kmeansCentroids: each `e` vector to its
+    * nearest centroid of c(r-1) (d2 asc, cid asc), integer-quantized
+    * coordinate means (round(x*1e7) summed as BIGINT — exact, order-free —
+    * then one double division), and c(r) = the means with the classic-Lloyd
+    * carry-forward (LEFT JOIN + coalesce) for a centroid that lost all
+    * members, so nlist stays constant every round. */
+  private def lloydRound(r: Int): String = {
+    val p = s"c${r - 1}"
+    s"""a$r AS (
+       |  SELECT vec_id, emb, cid,
+       |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
+       |  FROM (
+       |    SELECT e.vec_id, e.emb, c.cid,
+       |      ${d2("e.emb", "c.c_emb")} AS d2
+       |    FROM e, $p c)),
+       |m$r AS (
+       |  SELECT cid, i,
+       |    CAST(sum(CAST(round(x * 1e7) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e7 AS m
+       |  FROM (SELECT cid, unnest(range(1, len(emb)+1)) AS i, unnest(emb) AS x
+       |        FROM a$r WHERE crn = 1)
+       |  GROUP BY cid, i),
+       |c$r AS (SELECT $p.cid, coalesce(nc.c_emb, $p.c_emb) AS c_emb
+       |       FROM $p LEFT JOIN
+       |         (SELECT cid, list(m ORDER BY i) AS c_emb FROM m$r GROUP BY cid) nc
+       |       ON $p.cid = nc.cid)""".stripMargin
+  }
+
+  /** [[OracleSql.embNormsCte]] plus each vector's LSH `bucket`: the sign
+    * bits of its first four coordinates (the q34/q45/q112 buckets). */
+  private val lshBucketNormsCte = embNormsCte(",\n        " +
+    "list_sum([CASE WHEN emb[j] > 0 THEN 1 << (j-1) ELSE 0 END for j in range(1, 5)]) AS bucket")
+
+  /** Shared CTE chain (no WITH keyword) of the q50 IVF cells: embeddings
+    * `e`, norms `n`, 2 Lloyd rounds from the vec_id<8 seeds, then every
+    * vector's centroids `ranked` by distance (crn = 1 is its cell). */
+  private lazy val lloydRankedCte =
+    s"""${embNormsCte()},
+       |c0 AS (SELECT vec_id AS cid, emb AS c_emb FROM e WHERE vec_id < 8),
+       |${lloydRound(1)},
+       |${lloydRound(2)},
+       |dists AS (
+       |  SELECT n.vec_id, n.emb, n.nrm, c.cid,
+       |    ${d2("n.emb", "c.c_emb")} AS d2
+       |  FROM n, c2 c),
+       |ranked AS (
+       |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
+       |  FROM dists)""".stripMargin
+
   /** Shared CTE chain (no WITH keyword) deriving the q142 SemDeDup cell
-    * ASSIGNMENT — embeddings, norms, 2 Lloyd rounds from the vec_id<8
-    * seeds, final cell + emb + nrm per vector as `assign`. Reused by the
-    * q142 oracle and the q345/q346 pipeline composition. */
-  private lazy val semAssignCte =
-    """e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-        |      FROM e),
-        |c0 AS (SELECT vec_id AS cid, emb AS c_emb FROM e WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, emb, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM (
-        |    SELECT e.vec_id, e.emb, c.cid,
-        |      list_reduce(list_transform(e.emb, x -> x*x), (a,x) -> a+x)
-        |        - 2.0 * list_reduce(list_transform(range(1, len(e.emb)+1), i -> e.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |        + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |    FROM e, c0 c)),
-        |m1 AS (
-        |  SELECT cid, i,
-        |    CAST(sum(CAST(round(x * 1e7) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e7 AS m
-        |  FROM (SELECT cid, unnest(range(1, len(emb)+1)) AS i, unnest(emb) AS x
-        |        FROM a1 WHERE crn = 1)
-        |  GROUP BY cid, i),
-        |c1 AS (SELECT c0.cid, coalesce(nc.c_emb, c0.c_emb) AS c_emb
-        |       FROM c0 LEFT JOIN
-        |         (SELECT cid, list(m ORDER BY i) AS c_emb FROM m1 GROUP BY cid) nc
-        |       ON c0.cid = nc.cid),
-        |a2 AS (
-        |  SELECT vec_id, emb, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM (
-        |    SELECT e.vec_id, e.emb, c.cid,
-        |      list_reduce(list_transform(e.emb, x -> x*x), (a,x) -> a+x)
-        |        - 2.0 * list_reduce(list_transform(range(1, len(e.emb)+1), i -> e.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |        + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |    FROM e, c1 c)),
-        |m2 AS (
-        |  SELECT cid, i,
-        |    CAST(sum(CAST(round(x * 1e7) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e7 AS m
-        |  FROM (SELECT cid, unnest(range(1, len(emb)+1)) AS i, unnest(emb) AS x
-        |        FROM a2 WHERE crn = 1)
-        |  GROUP BY cid, i),
-        |c2 AS (SELECT c1.cid, coalesce(nc.c_emb, c1.c_emb) AS c_emb
-        |       FROM c1 LEFT JOIN
-        |         (SELECT cid, list(m ORDER BY i) AS c_emb FROM m2 GROUP BY cid) nc
-        |       ON c1.cid = nc.cid),
-        |dists AS (
-        |  SELECT n.vec_id, n.emb, n.nrm, c.cid,
-        |    list_reduce(list_transform(n.emb, x -> x*x), (a,x) -> a+x)
-        |      - 2.0 * list_reduce(list_transform(range(1, len(n.emb)+1), i -> n.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |      + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |  FROM n, c2 c),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM dists),
-        |assign AS MATERIALIZED (SELECT vec_id, cid, emb, nrm FROM ranked WHERE crn = 1)"""
-      .stripMargin
+    * ASSIGNMENT — [[lloydRankedCte]]'s cells, final cell + emb + nrm per
+    * vector as `assign`. Reused by the q142 oracle and the q345/q346
+    * pipeline composition. */
+  private lazy val semAssignCte = lloydRankedCte +
+    ",\nassign AS MATERIALIZED (SELECT vec_id, cid, emb, nrm FROM ranked WHERE crn = 1)"
 
   /** Full q345/q346 pipeline CTE chain ending in the worklist `wl`:
     * the exact-fingerprint stage, components over the MinHash pairs
@@ -2113,13 +2113,6 @@ object LlmQueries {
       |       UNION ALL SELECT * FROM sem UNION ALL SELECT * FROM ret)"""
       .stripMargin
 
-  /** Shared CTE chain deriving the interpolated-KN bigram model (q342 +
-    * q343): doc-level bigram counts `db`, observed-type table `big`,
-    * history sums/continuation-type counts, the (T, V) size row, and the
-    * per-TYPE micro-nat `model` from the exact D = 3/4 rational — the
-    * verbatim mirror of TextLm.knCrossEntropyFrom's model. Multiply-
-    * referenced CTEs are MATERIALIZED (DuckDB re-executes plain CTEs per
-    * reference — the r13 lesson). */
   /** The per-language KN model + scored-types chain shared by the q369
     * and q374 oracles — knModelCte's shape with the lang key prepended
     * to every model table. Ends at `sc` (one row per (doc, lang, bigram
@@ -2156,8 +2149,11 @@ object LlmQueries {
       |  JOIN tt ON tt.lang = d.lang
       |  JOIN vv ON vv.lang = d.lang)""".stripMargin
 
-  private val knModelCte =
-    """WITH toks AS MATERIALIZED (
+  /** Doc-level bigram counts `db` and the observed-type table `big` over
+    * MATERIALIZED tokens `toks` (no WITH) — the lineage knModelCte and the
+    * q349 modified-KN model share. */
+  private val knBigramsCte =
+    """toks AS MATERIALIZED (
       |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       |db AS MATERIALIZED (
       |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
@@ -2165,20 +2161,113 @@ object LlmQueries {
       |    FROM toks)
       |  GROUP BY 1, 2, 3),
       |big AS MATERIALIZED (
-      |  SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
-      |hist AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1,
-      |    CAST(count(*) AS BIGINT) AS n1p FROM big GROUP BY 1),
-      |cont AS (SELECT w2, CAST(count(*) AS BIGINT) AS nc FROM big GROUP BY 1),
-      |tv AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM big) AS t_types,
-      |    (SELECT CAST(count(DISTINCT w1) AS BIGINT)
-      |       FROM (SELECT unnest(t) AS w1 FROM toks)) AS v),
+      |  SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2)"""
+      .stripMargin
+
+  /** Shared CTE chain deriving the interpolated-KN bigram model (q342 +
+    * q343): [[knBigramsCte]], history sums/continuation-type counts, the
+    * (T, V) size row, and the per-TYPE micro-nat `model` from the exact
+    * D = 3/4 rational — the verbatim mirror of TextLm.knCrossEntropyFrom's
+    * model. Multiply-referenced CTEs are MATERIALIZED (DuckDB re-executes
+    * plain CTEs per reference — the r13 lesson). */
+  private val knModelCte =
+    s"""WITH $knBigramsCte,
+       |hist AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1,
+       |    CAST(count(*) AS BIGINT) AS n1p FROM big GROUP BY 1),
+       |cont AS (SELECT w2, CAST(count(*) AS BIGINT) AS nc FROM big GROUP BY 1),
+       |tv AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM big) AS t_types,
+       |    (SELECT CAST(count(DISTINCT w1) AS BIGINT)
+       |       FROM (SELECT unnest(t) AS w1 FROM toks)) AS v),
+       |model AS (
+       |  SELECT big.w1, big.w2,
+       |    CAST(round(ln(
+       |      CAST((4 * c2 - 3) * (t_types + v) + 3 * n1p * (nc + 1) AS DOUBLE)
+       |      / CAST(4 * c1 * (t_types + v) AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
+       |  FROM big JOIN hist USING (w1) JOIN cont USING (w2) CROSS JOIN tv)"""
+      .stripMargin
+
+  /** The unsmoothed corpus log-frequency per bigram TYPE over `big`,
+    * `fmodel(w1, w2, flp)` = round(ln(c2/T)·1e6) (the q388/q394 rarity). */
+  private val freqModelCte =
+    """ttl AS (SELECT CAST(sum(c2) AS BIGINT) AS tt FROM big),
+      |fmodel AS (SELECT w1, w2,
+      |    CAST(round(ln(CAST(c2 AS DOUBLE) / CAST(tt AS DOUBLE)) * 1e6)
+      |      AS BIGINT) AS flp
+      |  FROM big CROSS JOIN ttl)""".stripMargin
+
+  /** [[knModelCte]] plus the q101 add-one model `amodel` (lpa) from the
+    * SAME type counts — the reference/target pair of q348 and q356. */
+  private val knAddOneCte =
+    s"""$knModelCte,
+       |uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1u
+       |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
+       |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
+       |amodel AS (
+       |  SELECT big.w1, big.w2,
+       |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE)
+       |      / CAST(uni.c1u + vv.v AS DOUBLE)) * 1e6) AS BIGINT) AS lpa
+       |  FROM big JOIN uni USING (w1) CROSS JOIN vv)""".stripMargin
+
+  /** The q101 add-one-smoothed bigram LM (no WITH): per-bigram-TYPE
+    * log-prob quantized to integer micro-units in `model`, over the
+    * doc-level counts `db`. */
+  private val addOneLmCte =
+    """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      |db AS (
+      |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
+      |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
+      |    FROM toks)
+      |  GROUP BY 1, 2, 3),
+      |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
+      |uni AS (SELECT w1, count(*) AS c1
+      |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
+      |v AS (SELECT count(*) AS v FROM uni),
       |model AS (
       |  SELECT big.w1, big.w2,
-      |    CAST(round(ln(
-      |      CAST((4 * c2 - 3) * (t_types + v) + 3 * n1p * (nc + 1) AS DOUBLE)
-      |      / CAST(4 * c1 * (t_types + v) AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
-      |  FROM big JOIN hist USING (w1) JOIN cont USING (w2) CROSS JOIN tv)"""
-      .stripMargin
+      |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
+      |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v)""".stripMargin
+
+  /** Per-doc tail of the LM oracles: `n` tokens and the token-weighted
+    * cross-entropy over `from` (occ, lp_mu) as the house exact-integer
+    * half-up 6 dp mean. */
+  private def docXentSql(n: String, from: String): String =
+    s"""SELECT doc_id, CAST(sum(occ) AS BIGINT) AS $n,
+       |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
+       |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
+       |FROM $from
+       |GROUP BY doc_id""".stripMargin
+
+  private val bigramXentSql =
+    docXentSql("n_bigrams", "db JOIN model USING (w1, w2)")
+
+  /** The q140 tercile stage over a bigram `model` ⋈ `db`: per-doc micro-nat
+    * xent `xmu`, per-source integer order-statistic cutoffs (cum*3 >= j*n),
+    * head/middle/tail buckets and exact micro-unit bucket means. */
+  private val tercileMixSql =
+    """sc AS (SELECT db.doc_id,
+      |    CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
+      |      // (2 * sum(occ)) AS BIGINT) AS xmu
+      |  FROM db JOIN model USING (w1, w2) GROUP BY doc_id),
+      |sg AS (SELECT sc.doc_id, d.source AS g, sc.xmu
+      |       FROM sc JOIN documents d USING (doc_id)),
+      |vals AS (SELECT g, xmu, CAST(count(*) AS BIGINT) AS c FROM sg GROUP BY 1, 2),
+      |cum AS (SELECT g, xmu, c,
+      |    CAST(sum(c) OVER (PARTITION BY g ORDER BY xmu) AS BIGINT) AS cm
+      |  FROM vals),
+      |tt AS (SELECT g, CAST(sum(c) AS BIGINT) AS n FROM vals GROUP BY 1),
+      |cuts AS (SELECT cum.g,
+      |    min(CASE WHEN cm * 3 >= n THEN xmu END) AS cut1,
+      |    min(CASE WHEN cm * 3 >= n * 2 THEN xmu END) AS cut2
+      |  FROM cum JOIN tt USING (g) GROUP BY 1),
+      |bk AS (SELECT sg.g, sg.xmu,
+      |    CASE WHEN sg.xmu <= cuts.cut1 THEN 'head'
+      |         WHEN sg.xmu <= cuts.cut2 THEN 'middle'
+      |         ELSE 'tail' END AS bucket
+      |  FROM sg JOIN cuts USING (g))
+      |SELECT g AS source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
+      |  round((CAST(sum(xmu) AS DOUBLE) / 1e6) / CAST(count(*) AS DOUBLE), 6)
+      |    AS mean_xent
+      |FROM bk GROUP BY 1, 2""".stripMargin
 
   /** Unrolled-CTE mirror of TextLm.doremiWeightsFrom: the q348 per-doc
     * excess chain (shared knModelCte + add-one model), clamped at 0 and
@@ -2207,15 +2296,7 @@ object LlmQueries {
          |  CAST(lam_mu AS DOUBLE) / 1e6 AS excess,
          |  CAST(w AS DOUBLE) / 1e6 AS weight FROM w$t""".stripMargin
     }.mkString("\nUNION ALL ")
-    s"""$knModelCte,
-       |uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1u
-       |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
-       |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-       |amodel AS (
-       |  SELECT big.w1, big.w2,
-       |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE)
-       |      / CAST(uni.c1u + vv.v AS DOUBLE)) * 1e6) AS BIGINT) AS lpa
-       |  FROM big JOIN uni USING (w1) CROSS JOIN vv),
+    s"""$knAddOneCte,
        |pd AS (SELECT db.doc_id,
        |    greatest(
        |      CAST((2 * (-sum(occ * a.lpa)) + sum(occ))
@@ -2401,59 +2482,12 @@ object LlmQueries {
        |    // (2 * n_words) AS BIGINT) AS DOUBLE) / 1e6 AS fertility_after
        |FROM sv CROSS JOIN av CROSS JOIN kv CROSS JOIN agg""".stripMargin
 
-  /** Shared CTE chain (no WITH) from tokenized docs to the verified
-    * MinHash near-dup pair set `pairs` — the q31 lineage. Composed by
-    * [[clusterCte]] (components over ALL pairs) and by the q345/q346
-    * pipeline oracle (components over the exact-stage survivors only). */
-  private lazy val minhashPairsCte =
-    """toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
-      |  WHERE len(string_split(text,' ')) >= 3),
-      |sh AS MATERIALIZED (
-      |  SELECT DISTINCT doc_id, sh FROM (
-      |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS sh
-      |    FROM toks)),
-      |sig AS (
-      |  SELECT doc_id, band,
-      |    min(substr(md5(sh), band*8+1, 4)) || min(substr(md5(sh), band*8+5, 4)) AS sig
-      |  FROM sh, (SELECT unnest([0,1,2,3]) AS band)
-      |  GROUP BY doc_id, band),
-      |cand AS (
-      |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-      |inter AS (
-      |  SELECT doc_a, doc_b, count(*) AS n_inter
-      |  FROM cand
-      |  JOIN sh sa ON sa.doc_id = doc_a
-      |  JOIN sh sb ON sb.doc_id = doc_b AND sb.sh = sa.sh
-      |  GROUP BY doc_a, doc_b),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-      |pairs AS MATERIALIZED (
-      |  SELECT doc_a, doc_b FROM (
-      |    SELECT doc_a, doc_b,
-      |      CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter) AS jaccard
-      |    FROM inter
-      |    JOIN sizes na ON na.doc_id = doc_a
-      |    JOIN sizes nb ON nb.doc_id = doc_b)
-      |  WHERE jaccard >= 0.5)""".stripMargin
-
-  private lazy val clusterCte = "WITH RECURSIVE " + minhashPairsCte + """,
-      |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-      |          UNION SELECT doc_b, doc_a FROM pairs),
-      |reach(id, r) AS (
-      |  SELECT src, src FROM edges
-      |  UNION
-      |  SELECT e.src, r.r FROM edges e JOIN reach r ON r.id = e.dst)""".stripMargin
-
-  /** q31/q32 oracle texts as shared vals: q291 composes all three
-    * pair-method oracles into one agreement matrix. */
-  /** The q31 MinHash-LSH chain body over an arbitrary (doc_id, text)
-    * relation — shared by the raw-corpus q31 oracle and the q359
-    * clean-text composition so the two can never drift. */
-  private def minhashChainSql(rel: String): String =
-    s"""toks AS (
-       |  SELECT doc_id, string_split(text,' ') AS t FROM $rel
-       |  WHERE len(string_split(text,' ')) >= 3),
-       |sh AS (
+  /** The MinHash-LSH band chain (no WITH) from tokenized docs `toks(doc_id,
+    * t)` to the candidate pairs' shared-shingle counts `inter` and the
+    * shingle-set `sizes`: word-3-shingles, 4 bands of two md5-prefix mins,
+    * band-equal candidates. `mat` ("MATERIALIZED " or "") hints `sh`. */
+  private def minhashBandsSql(mat: String): String =
+    s"""sh AS $mat(
        |  SELECT DISTINCT doc_id, sh FROM (
        |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS sh
        |    FROM toks)),
@@ -2473,14 +2507,55 @@ object LlmQueries {
        |  GROUP BY doc_a, doc_b),
        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
 
+  /** The verified pairs (Jaccard >= 0.5) of [[minhashBandsSql]], as a
+    * SELECT of `cols` over (doc_a, doc_b, jaccard). */
+  private def minhashVerifiedSql(cols: String): String =
+    s"""SELECT $cols FROM (
+       |  SELECT doc_a, doc_b,
+       |    CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter) AS jaccard
+       |  FROM inter
+       |  JOIN sizes na ON na.doc_id = doc_a
+       |  JOIN sizes nb ON nb.doc_id = doc_b)
+       |WHERE jaccard >= 0.5""".stripMargin
+
+  /** Shared CTE chain (no WITH) from the documents to the verified
+    * MinHash near-dup pair set `pairs` — the q31 lineage. `mat` ("" or
+    * "MATERIALIZED ") hints `sh` and `pairs`. */
+  private def minhashDocPairsCte(mat: String): String =
+    s"""toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
+       |  WHERE len(string_split(text,' ')) >= 3),
+       |${minhashBandsSql(mat)},
+       |pairs AS $mat(
+       |${minhashVerifiedSql("doc_a, doc_b")})""".stripMargin
+
+  /** [[minhashDocPairsCte]] materialized, composed by [[clusterCte]]
+    * (components over ALL pairs) and by the q345/q346 pipeline oracle
+    * (components over the exact-stage survivors only). */
+  private lazy val minhashPairsCte = minhashDocPairsCte("MATERIALIZED ")
+
+  /** Shared CTE chain replaying the MinHash-LSH candidate graph + connected
+    * components (the same `nearDupPairs` -> `connectedComponents` lineage the
+    * Spark side shares between q61 and q91): ends at `reach(id, r)`. */
+  private lazy val clusterCte = "WITH RECURSIVE " + minhashPairsCte + """,
+      |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+      |          UNION SELECT doc_b, doc_a FROM pairs),
+      |reach(id, r) AS (
+      |  SELECT src, src FROM edges
+      |  UNION
+      |  SELECT e.src, r.r FROM edges e JOIN reach r ON r.id = e.dst)""".stripMargin
+
+  /** The q31 MinHash-LSH chain body over an arbitrary (doc_id, text)
+    * relation — shared by the raw-corpus q31 oracle and the q359
+    * clean-text composition so the two can never drift. q291 composes
+    * q31's oracle text (`minhashPairsSql`) into its agreement matrix. */
+  private def minhashChainSql(rel: String): String =
+    s"""toks AS (
+       |  SELECT doc_id, string_split(text,' ') AS t FROM $rel
+       |  WHERE len(string_split(text,' ')) >= 3),
+       |${minhashBandsSql("")}""".stripMargin
+
   private val minhashFinalSelect: String =
-    """SELECT doc_a, doc_b, jaccard FROM (
-      |  SELECT doc_a, doc_b,
-      |    CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter) AS jaccard
-      |  FROM inter
-      |  JOIN sizes na ON na.doc_id = doc_a
-      |  JOIN sizes nb ON nb.doc_id = doc_b)
-      |WHERE jaccard >= 0.5""".stripMargin
+    minhashVerifiedSql("doc_a, doc_b, jaccard")
 
   private[queries] val minhashPairsSql: String =
     "WITH " + minhashChainSql("documents") + "\n" + minhashFinalSelect
@@ -2655,6 +2730,142 @@ object LlmQueries {
     (13, "dup10gram_char_frac", "r13 > 100000"),
     (14, "all", s"NOT ($gopherPassSql)"))
 
+  /** The q351 line inventory (no WITH): 3-token non-overlapping tiles of
+    * each doc as `lns(doc_id, lpos, line, ntoks)`, one empty line for an
+    * empty doc. */
+  private val lineTilesCte =
+    """toks AS (
+      |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
+      |  FROM documents),
+      |lns AS MATERIALIZED (
+      |  SELECT doc_id, i AS lpos,
+      |    array_to_string(ts[i*3+1 : i*3+3], ' ') AS line,
+      |    CAST(len(ts[i*3+1 : i*3+3]) AS BIGINT) AS ntoks
+      |  FROM (SELECT doc_id, ts,
+      |      unnest(generate_series(0,
+      |        greatest((len(ts) + 2) // 3, 1) - 1)) AS i
+      |    FROM toks))""".stripMargin
+
+  /** The held-out interpolated-KN log-prob (micro-nats) of a `db d`
+    * instance over LEFT-joined `b` (big), `h1` (hist), `cn` (cont) and the
+    * `tv` size row: the observed-bigram rational with the clamped
+    * discount, continuation-only when the history is unseen, NULL on an
+    * empty model. */
+  private val heldoutKnLpMu =
+    """CAST(round(ln(CASE WHEN tv.t_types + tv.v = 0 THEN NULL
+      |        WHEN h1.c1 IS NULL
+      |        THEN CAST(coalesce(cn.nc, 0) + 1 AS DOUBLE)
+      |          / CAST(tv.t_types + tv.v AS DOUBLE)
+      |        ELSE CAST(greatest(4 * coalesce(b.c2, 0) - 3, 0)
+      |              * (tv.t_types + tv.v)
+      |              + 3 * h1.n1p * (coalesce(cn.nc, 0) + 1) AS DOUBLE)
+      |          / CAST(4 * h1.c1 * (tv.t_types + tv.v) AS DOUBLE)
+      |      END) * 1e6) AS BIGINT) AS lp_mu""".stripMargin
+
+  /** Doc-level bigram counts `docbig(doc_id, source, tgt, w1, w2, occ)` of
+    * the q151/q344 importance weights (no WITH); `tgt` marks English docs. */
+  private val sourceDocBigramsCte =
+    """base AS (SELECT doc_id, source, lang = 'en' AS tgt,
+      |    string_split(text,' ') AS t FROM documents),
+      |pairs AS (
+      |  SELECT doc_id, source, tgt, t[i] AS w1, t[i+1] AS w2
+      |  FROM base, LATERAL (SELECT unnest(range(1, len(t))) AS i)),
+      |docbig AS (SELECT doc_id, source, tgt, w1, w2,
+      |    CAST(count(*) AS BIGINT) AS occ
+      |  FROM pairs GROUP BY 1, 2, 3, 4, 5)""".stripMargin
+
+  /** Per-source token-weighted mean of the `scored` log-ratio `lr_mu`
+    * (micro-nats), 6 dp — the q151/q344 output. */
+  private val avgLogRatioSql =
+    """SELECT source, CAST(sum(occ) AS BIGINT) AS n_bigrams,
+      |  round((CAST(sum(occ * lr_mu) AS DOUBLE) / 1e6)
+      |    / CAST(sum(occ) AS DOUBLE), 6) AS avg_logratio
+      |FROM scored GROUP BY 1""".stripMargin
+
+  /** Per-bigram log-ratio (micro-nats) of the add-one target model over the
+    * add-one general model, from [[importanceCountsCte]] joined as
+    * [[importanceJoinSql]]. */
+  private val importanceLogRatioMu =
+    """CAST(round(ln(CAST(coalesce(tb.tc2, 0) + 1 AS DOUBLE)
+      |      / CAST(coalesce(tu.tc1, 0) + sizes.tv AS DOUBLE)) * 1e6) AS BIGINT)
+      |    - CAST(round(ln(CAST(gb.gc2 + 1 AS DOUBLE)
+      |      / CAST(gu.gc1 + sizes.gv AS DOUBLE)) * 1e6) AS BIGINT)""".stripMargin
+
+  /** Each `docbig d` instance joined to its general (gb, gu) and target
+    * (tb, tu) counts and the `sizes` row. */
+  private val importanceJoinSql =
+    """FROM docbig d
+      |  JOIN gbig gb ON gb.w1 = d.w1 AND gb.w2 = d.w2
+      |  JOIN guni gu ON gu.w1 = d.w1
+      |  LEFT JOIN tbig tb ON tb.w1 = d.w1 AND tb.w2 = d.w2
+      |  LEFT JOIN tuni tu ON tu.w1 = d.w1
+      |  CROSS JOIN sizes""".stripMargin
+
+  /** The q151 importance-weight counts over `docbig(tgt, w1, w2, occ)`
+    * and `base(tgt, t)`: general (g*) and target-only (t*) bigram and
+    * unigram counts and the two vocabulary sizes (no WITH). */
+  private val importanceCountsCte =
+    """gbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS gc2
+      |  FROM docbig GROUP BY 1, 2),
+      |guni AS (SELECT w1, CAST(count(*) AS BIGINT) AS gc1
+      |  FROM (SELECT unnest(t) AS w1 FROM base) GROUP BY 1),
+      |tbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS tc2
+      |  FROM docbig WHERE tgt GROUP BY 1, 2),
+      |tuni AS (SELECT w1, CAST(count(*) AS BIGINT) AS tc1
+      |  FROM (SELECT unnest(t) AS w1 FROM base WHERE tgt) GROUP BY 1),
+      |sizes AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM guni) AS gv,
+      |                 (SELECT CAST(count(*) AS BIGINT) FROM tuni) AS tv)"""
+      .stripMargin
+
+  /** Per-label embedding centroids in integer micro-units (no WITH):
+    * quantized coordinates `mu`, exploded `e(vec_id, label, x, i)`, and
+    * `cen(lc, i, c)` = the exact BIGINT per-dim sum over one double
+    * division, rounded. */
+  private val labelCentroidsCte =
+    """mu AS (
+      |  SELECT vec_id, label,
+      |    list_transform(embedding,
+      |      x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT)) AS xmu
+      |  FROM embeddings),
+      |e AS (SELECT vec_id, label, unnest(xmu) AS x,
+      |        unnest(range(0, len(xmu))) AS i FROM mu),
+      |cen AS (
+      |  SELECT label AS lc, i,
+      |    CAST(round(CAST(CAST(sum(x) AS BIGINT) AS DOUBLE)
+      |               / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c
+      |  FROM e GROUP BY 1, 2)""".stripMargin
+
+  /** One token's Jensen-Shannon term in half-micro-nats `mu` from counts
+    * ca/cb over totals ta/tb (0 · ln 0 = 0), as CorpusStats.jsDivergence
+    * sums it. */
+  private val jsHalfMu =
+    """CAST(round((
+      |    CASE WHEN ca > 0 THEN (CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) *
+      |      ln((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) /
+      |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
+      |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END +
+      |    CASE WHEN cb > 0 THEN (CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) *
+      |      ln((CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) /
+      |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
+      |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END
+      |  ) * 5e5) AS BIGINT) AS mu""".stripMargin
+
+  /** The PQ re-rank shared by q165 and q168 (no WITH): the 30 best ADC
+    * candidates per query from `adc(query_id, neighbor_id, adc_mu)`, then
+    * their exact sequential-fold cosine over the norms `n` as `scored`. */
+  private val adcRerankCte =
+    """cand AS (SELECT query_id, neighbor_id FROM (
+      |    SELECT query_id, neighbor_id,
+      |      row_number() OVER (PARTITION BY query_id ORDER BY adc_mu ASC, neighbor_id ASC) AS crn
+      |    FROM adc) WHERE crn <= 30),
+      |scored AS (
+      |  SELECT ca.query_id, ca.neighbor_id,
+      |    list_reduce(list_transform(range(1, len(qn.emb)+1), i -> qn.emb[i]*nn.emb[i]), (x,y) -> x+y)
+      |      / (qn.nrm * nn.nrm) AS cos
+      |  FROM cand ca
+      |  JOIN n qn ON qn.vec_id = ca.query_id
+      |  JOIN n nn ON nn.vec_id = ca.neighbor_id)""".stripMargin
+
   /** Mirrors TextDedup.paragraphMinhashPairs: the q351 line inventory +
     * document-frequency drop + ordered rebuild (clean text, "" when all
     * lines dropped), then the SHARED q31 MinHash chain over the rebuilt
@@ -2681,20 +2892,27 @@ object LlmQueries {
        |${minhashChainSql("clean")}
        |$minhashFinalSelect""".stripMargin
 
+  /** SimHash64 of every doc (no WITH): per-token FNV-1a with its
+    * unsigned-64-bit wraparound mirrored as HUGEINT arithmetic mod 2^64
+    * (ASCII corpus, so unicode(char) == the UTF-8 byte hashed), bit votes,
+    * and the unsigned fingerprint `sh(doc_id, shu)`. */
+  private val simhashVotesCte =
+    """th AS (
+      |  SELECT doc_id, list_reduce(
+      |    list_prepend(14695981039346656037::HUGEINT,
+      |      [unicode(substr(tok, i, 1))::HUGEINT for i in range(1, length(tok)+1)]),
+      |    (acc, b) -> (xor(acc, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT) AS h
+      |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
+      |votes AS (
+      |  SELECT doc_id, j, sum(CASE WHEN (h // (1::HUGEINT << j)) % 2 = 1 THEN 1 ELSE -1 END) AS v
+      |  FROM th, (SELECT unnest(range(0, 64)) AS j)
+      |  GROUP BY doc_id, j),
+      |sh AS (
+      |  SELECT doc_id, sum(CASE WHEN v > 0 THEN 1::HUGEINT << j ELSE 0::HUGEINT END) AS shu
+      |  FROM votes GROUP BY doc_id)""".stripMargin
+
   private[queries] val simhashPairsSql: String =
-      """WITH th AS (
-        |  SELECT doc_id, list_reduce(
-        |    list_prepend(14695981039346656037::HUGEINT,
-        |      [unicode(substr(tok, i, 1))::HUGEINT for i in range(1, length(tok)+1)]),
-        |    (acc, b) -> (xor(acc, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT) AS h
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
-        |votes AS (
-        |  SELECT doc_id, j, sum(CASE WHEN (h // (1::HUGEINT << j)) % 2 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, (SELECT unnest(range(0, 64)) AS j)
-        |  GROUP BY doc_id, j),
-        |sh AS (
-        |  SELECT doc_id, sum(CASE WHEN v > 0 THEN 1::HUGEINT << j ELSE 0::HUGEINT END) AS shu
-        |  FROM votes GROUP BY doc_id),
+      "WITH " + simhashVotesCte + """,
         |sg AS (
         |  SELECT doc_id, shu,
         |    CAST(CASE WHEN shu >= (1::HUGEINT << 63)
@@ -2725,12 +2943,14 @@ object LlmQueries {
     bpePrefixSql(merges) + "\n" + rows
   }
 
-  /** The q331/q334 shared WITH-chain: word-type table w0 and the `merges`
-    * unrolled rounds (pair counts, argmax, rewrite, vocab count).
-    * `pfx` renames every CTE (default "" = the historical names) so the
-    * q390 census can compose this chain beside the WordPiece and
-    * unigram chains in ONE query without name collisions. */
-  private def bpePrefixSql(merges: Int, pfx: String = ""): String = {
+  /** The merge-loop WITH-chain BPE and WordPiece share: word-type table w0
+    * and the `merges` unrolled rounds — pair counts p$k, the round's
+    * argmax CTEs `best(k)` (ending at b$k), the left-to-right
+    * non-overlapping rewrite w$k and the vocab count v$k. `pfx` renames
+    * every CTE (default "" = the historical names) so the q390 census can
+    * compose the chains in ONE query without name collisions. */
+  private def mergeLoopSql(merges: Int, pfx: String,
+                           best: Int => String): String = {
     def round(k: Int) =
       s"""${pfx}p$k AS (
          |  SELECT pair, CAST(sum(freq) AS BIGINT) AS pair_count
@@ -2739,9 +2959,7 @@ object LlmQueries {
          |        AS pair
          |    FROM (SELECT freq, split(sym, ' ') AS s FROM ${pfx}w${k - 1}))
          |  GROUP BY pair),
-         |${pfx}b$k AS MATERIALIZED (
-         |  SELECT pair, pair_count FROM ${pfx}p$k
-         |  ORDER BY pair_count DESC, pair LIMIT 1),
+         |${best(k)},
          |${pfx}w$k AS MATERIALIZED (
          |  SELECT w, freq,
          |    CASE WHEN b.pair IS NULL THEN sym ELSE
@@ -2762,43 +2980,24 @@ object LlmQueries {
        |${(1 to merges).map(round).mkString(",\n")}""".stripMargin
   }
 
-  /** Mirrors TextPrep.encodeFromDict: the shared training chain through
-    * w_merges, then one word-keyed dictionary join + per-doc aggregate. */
-  private def bpeEncodeSql(merges: Int): String =
-    bpePrefixSql(merges) +
-      s""",
-         |tok AS (
-         |  SELECT doc_id, w FROM (
-         |    SELECT doc_id, unnest(split(text, ' ')) AS w FROM documents)
-         |  WHERE len(w) > 0),
-         |dict AS MATERIALIZED (
-         |  SELECT w, CAST(len(split(sym, ' ')) AS BIGINT) AS ns
-         |  FROM w$merges)
-         |SELECT doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(sum(len(w) + 1) AS BIGINT) AS n_syms_init,
-         |  CAST(sum(ns) AS BIGINT) AS n_syms,
-         |  CAST(sum(len(w) + 1) AS DOUBLE) / CAST(sum(ns) AS DOUBLE)
-         |    AS compression
-         |FROM tok JOIN dict USING (w) GROUP BY doc_id""".stripMargin
+  /** The q331/q334 shared WITH-chain: [[mergeLoopSql]] with the BPE
+    * (pair_count DESC, pair ASC) argmax. */
+  private def bpePrefixSql(merges: Int, pfx: String = ""): String =
+    mergeLoopSql(merges, pfx, k =>
+      s"""${pfx}b$k AS MATERIALIZED (
+         |  SELECT pair, pair_count FROM ${pfx}p$k
+         |  ORDER BY pair_count DESC, pair LIMIT 1)""".stripMargin)
 
-  /** The q357/q358 shared WITH-chain — [[bpePrefixSql]]'s loop with the
+  /** The q357/q358 shared WITH-chain — [[mergeLoopSql]] with the
     * WordPiece likelihood-ratio argmax: per round, pair counts p$k PLUS
     * freq-weighted symbol counts c$k (MATERIALIZED — referenced twice),
     * best = max (score DESC, pair_count DESC, pair ASC) where score is
     * the one exact IEEE division CAST(pair_count AS DOUBLE) /
     * CAST(cnt_a * cnt_b AS DOUBLE) — both engines divide the same two
     * exactly-representable integers, so the doubles are bit-identical. */
-  private def wordpiecePrefixSql(merges: Int, pfx: String = ""): String = {
-    def round(k: Int) =
-      s"""${pfx}p$k AS (
-         |  SELECT pair, CAST(sum(freq) AS BIGINT) AS pair_count
-         |  FROM (SELECT freq,
-         |      unnest([s[i] || ' ' || s[i+1] for i in range(1, len(s))])
-         |        AS pair
-         |    FROM (SELECT freq, split(sym, ' ') AS s FROM ${pfx}w${k - 1}))
-         |  GROUP BY pair),
-         |${pfx}c$k AS MATERIALIZED (
+  private def wordpiecePrefixSql(merges: Int, pfx: String = ""): String =
+    mergeLoopSql(merges, pfx, k =>
+      s"""${pfx}c$k AS MATERIALIZED (
          |  SELECT s, CAST(sum(freq) AS BIGINT) AS cnt
          |  FROM (SELECT freq, unnest(split(sym, ' ')) AS s FROM ${pfx}w${k - 1})
          |  GROUP BY s),
@@ -2809,39 +3008,12 @@ object LlmQueries {
          |  FROM ${pfx}p$k
          |  JOIN ${pfx}c$k ca ON ca.s = string_split(pair, ' ')[1]
          |  JOIN ${pfx}c$k cb ON cb.s = string_split(pair, ' ')[2]
-         |  ORDER BY score DESC, pair_count DESC, pair LIMIT 1),
-         |${pfx}w$k AS MATERIALIZED (
-         |  SELECT w, freq,
-         |    CASE WHEN b.pair IS NULL THEN sym ELSE
-         |      trim(replace(replace(' ' || replace(sym, ' ', '  ') || ' ',
-         |        ' ' || replace(b.pair, ' ', '  ') || ' ',
-         |        ' ' || replace(b.pair, ' ', '') || ' '), '  ', ' '))
-         |    END AS sym
-         |  FROM ${pfx}w${k - 1} LEFT JOIN ${pfx}b$k b ON TRUE),
-         |${pfx}v$k AS MATERIALIZED (
-         |  SELECT CAST(count(DISTINCT s) AS BIGINT) AS vocab_size
-         |  FROM (SELECT unnest(split(sym, ' ')) AS s FROM ${pfx}w$k))"""
-        .stripMargin
-    s"""WITH ${pfx}w0 AS MATERIALIZED (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS freq,
-       |    array_to_string(split(w, ''), ' ') || ' </w>' AS sym
-       |  FROM (SELECT unnest(split(text, ' ')) AS w FROM documents)
-       |  WHERE len(w) > 0 GROUP BY w),
-       |${(1 to merges).map(round).mkString(",\n")}""".stripMargin
-  }
+         |  ORDER BY score DESC, pair_count DESC, pair LIMIT 1)""".stripMargin)
 
-  private def wordpieceTrainSql(merges: Int): String = {
-    val rows = (1 to merges).map(k =>
-      s"""SELECT CAST($k AS BIGINT) AS round, b.pair,
-         |  replace(b.pair, ' ', '') AS merged, b.pair_count, b.score,
-         |  v.vocab_size
-         |FROM b$k b, v$k v""".stripMargin)
-      .mkString("\nUNION ALL\n")
-    wordpiecePrefixSql(merges) + "\n" + rows
-  }
-
-  private def wordpieceEncodeSql(merges: Int): String =
-    wordpiecePrefixSql(merges) +
+  /** Mirrors TextPrep.encodeFromDict: a trained merge `chain` through
+    * w_merges, then one word-keyed dictionary join + per-doc aggregate. */
+  private def mergeEncodeSql(chain: String, merges: Int): String =
+    chain +
       s""",
          |tok AS (
          |  SELECT doc_id, w FROM (
@@ -2858,6 +3030,15 @@ object LlmQueries {
          |    AS compression
          |FROM tok JOIN dict USING (w) GROUP BY doc_id""".stripMargin
 
+  private def wordpieceTrainSql(merges: Int): String = {
+    val rows = (1 to merges).map(k =>
+      s"""SELECT CAST($k AS BIGINT) AS round, b.pair,
+         |  replace(b.pair, ' ', '') AS merged, b.pair_count, b.score,
+         |  v.vocab_size
+         |FROM b$k b, v$k v""".stripMargin)
+      .mkString("\nUNION ALL\n")
+    wordpiecePrefixSql(merges) + "\n" + rows
+  }
   /** Mirrors TextPrep.tokenizerCompressionCensusFrom: the three trained-
     * tokenizer chains composed in ONE query via disjoint CTE prefixes
     * (g = BPE, y = WordPiece, u = unigram — each chain byte-equivalent
@@ -2932,9 +3113,9 @@ object LlmQueries {
 
   val oracle: Map[String, String] = Map(
     "q331_bpe_train" -> bpeTrainSql(10),
-    "q334_bpe_encode" -> bpeEncodeSql(10),
+    "q334_bpe_encode" -> mergeEncodeSql(bpePrefixSql(10), 10),
     "q357_wordpiece_train" -> wordpieceTrainSql(10),
-    "q358_wordpiece_encode" -> wordpieceEncodeSql(10),
+    "q358_wordpiece_encode" -> mergeEncodeSql(wordpiecePrefixSql(10), 10),
     "q390_tokenizer_census" -> tokenizerCensusSql(10, 4, 16),
 
     // Mirrors TextDedup.memorizationRiskFrom: the q389 k=10 window+next
@@ -3007,11 +3188,7 @@ object LlmQueries {
     // decay/waterfill chain VERBATIM on the soft masses.
     "q394_soft_weighted_mix" ->
       s"""$knModelCte,
-        |ttl AS (SELECT CAST(sum(c2) AS BIGINT) AS tt FROM big),
-        |fmodel AS (SELECT w1, w2,
-        |    CAST(round(ln(CAST(c2 AS DOUBLE) / CAST(tt AS DOUBLE)) * 1e6)
-        |      AS BIGINT) AS flp
-        |  FROM big CROSS JOIN ttl),
+        |$freqModelCte,
         |spd AS MATERIALIZED (
         |  SELECT doc_id,
         |    CAST((2 * (-sum(occ * flp)) + sum(occ))
@@ -3623,19 +3800,7 @@ object LlmQueries {
     // Rolling hash (h = h*1000003 + byte mod 2^64) and SimHash via the same
     // HUGEINT-mod-2^64 mirror as q32.
     "q41_native_fingerprints" ->
-      """WITH th AS (
-        |  SELECT doc_id, list_reduce(
-        |    list_prepend(14695981039346656037::HUGEINT,
-        |      [unicode(substr(tok, i, 1))::HUGEINT for i in range(1, length(tok)+1)]),
-        |    (acc, b) -> (xor(acc, b) * 1099511628211::HUGEINT) % 18446744073709551616::HUGEINT) AS h
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)),
-        |votes AS (
-        |  SELECT doc_id, j, sum(CASE WHEN (h // (1::HUGEINT << j)) % 2 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM th, (SELECT unnest(range(0, 64)) AS j)
-        |  GROUP BY doc_id, j),
-        |sh AS (
-        |  SELECT doc_id, sum(CASE WHEN v > 0 THEN 1::HUGEINT << j ELSE 0::HUGEINT END) AS shu
-        |  FROM votes GROUP BY doc_id),
+      ("WITH " + simhashVotesCte + """,
         |ch AS (
         |  SELECT doc_id, list_reduce(
         |    list_prepend(1469598103934665603::HUGEINT,
@@ -3647,7 +3812,7 @@ object LlmQueries {
         |    THEN chu - 18446744073709551616::HUGEINT ELSE chu END AS BIGINT) AS content_hash,
         |  CAST(CASE WHEN shu >= (1::HUGEINT << 63)
         |    THEN shu - 18446744073709551616::HUGEINT ELSE shu END AS BIGINT) AS simhash
-        |FROM ch JOIN sh ON ch.doc_id = sh.doc_id""".stripMargin,
+        |FROM ch JOIN sh ON ch.doc_id = sh.doc_id""".stripMargin),
 
     // The media stub derives width/height from fnv1a(payload bytes) —
     // unsigned mod/shift replayed as HUGEINT % and // (ASCII corpus, so
@@ -3668,10 +3833,7 @@ object LlmQueries {
         |FROM h""".stripMargin,
 
     "q33_knn_bruteforce" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-        |      FROM e),
+      s"""WITH ${embNormsCte()},
         |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |        list_reduce(list_transform(range(1, len(q.emb)+1), i -> q.emb[i]*c.emb[i]), (a,x) -> a+x)
         |          / (q.nrm * c.nrm) AS cos
@@ -3684,11 +3846,7 @@ object LlmQueries {
         |FROM r WHERE rnk <= 10""".stripMargin,
 
     "q34_knn_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm,
-        |        list_sum([CASE WHEN emb[j] > 0 THEN 1 << (j-1) ELSE 0 END for j in range(1, 5)]) AS bucket
-        |      FROM e),
+      s"""WITH ${lshBucketNormsCte},
         |p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |        list_reduce(list_transform(range(1, len(q.emb)+1), i -> q.emb[i]*c.emb[i]), (a,x) -> a+x)
         |          / (q.nrm * c.nrm) AS cos
@@ -3777,12 +3935,7 @@ object LlmQueries {
         |FROM d""".stripMargin,
 
     "q43_asof_join" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id,
-        |  CAST(epoch(date_trunc('second', p.ts)) AS BIGINT) AS purchase_sec,
-        |  p.value AS purchase_value
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts""".stripMargin,
+      OracleSql.asofPurchaseSql(">="),
 
     "q44_range_join" ->
       """WITH c AS (
@@ -3796,11 +3949,7 @@ object LlmQueries {
         |  AND b.sec - a.sec <= 1800""".stripMargin,
 
     "q45_embedding_neardup" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm,
-        |        list_sum([CASE WHEN emb[j] > 0 THEN 1 << (j-1) ELSE 0 END for j in range(1, 5)]) AS bucket
-        |      FROM e),
+      s"""WITH ${lshBucketNormsCte},
         |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
         |        list_reduce(list_transform(range(1, len(a.emb)+1), i -> a.emb[i]*b.emb[i]), (x,y) -> x+y)
         |          / (a.nrm * b.nrm) AS cos
@@ -3832,65 +3981,11 @@ object LlmQueries {
       """SELECT event_type, median(value) AS med_value, count(*) AS n
         |FROM events GROUP BY event_type""".stripMargin,
 
-    // Mirrors Similarity.kmeansCentroids: two Lloyd rounds (a1/m1/c1 then
-    // a2/m2/c2) with integer-quantized coordinate means (round(x*1e7) summed
-    // as BIGINT — exact, order-free — then one double division), so trained
-    // centroids are bit-identical to Spark's regardless of partitioning.
-    // c1/c2 LEFT JOIN + coalesce = classic-Lloyd carry-forward for a
-    // centroid that lost all members (nlist stays constant every round).
+    // Mirrors Similarity.kmeansCentroids: the two `lloydRound`s of
+    // `lloydRankedCte`, so trained centroids are bit-identical to Spark's
+    // regardless of partitioning; probes search their 2 nearest cells.
     "q50_ivf_ann" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-        |      FROM e),
-        |c0 AS (SELECT vec_id AS cid, emb AS c_emb FROM e WHERE vec_id < 8),
-        |a1 AS (
-        |  SELECT vec_id, emb, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM (
-        |    SELECT e.vec_id, e.emb, c.cid,
-        |      list_reduce(list_transform(e.emb, x -> x*x), (a,x) -> a+x)
-        |        - 2.0 * list_reduce(list_transform(range(1, len(e.emb)+1), i -> e.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |        + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |    FROM e, c0 c)),
-        |m1 AS (
-        |  SELECT cid, i,
-        |    CAST(sum(CAST(round(x * 1e7) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e7 AS m
-        |  FROM (SELECT cid, unnest(range(1, len(emb)+1)) AS i, unnest(emb) AS x
-        |        FROM a1 WHERE crn = 1)
-        |  GROUP BY cid, i),
-        |c1 AS (SELECT c0.cid, coalesce(nc.c_emb, c0.c_emb) AS c_emb
-        |       FROM c0 LEFT JOIN
-        |         (SELECT cid, list(m ORDER BY i) AS c_emb FROM m1 GROUP BY cid) nc
-        |       ON c0.cid = nc.cid),
-        |a2 AS (
-        |  SELECT vec_id, emb, cid,
-        |    row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM (
-        |    SELECT e.vec_id, e.emb, c.cid,
-        |      list_reduce(list_transform(e.emb, x -> x*x), (a,x) -> a+x)
-        |        - 2.0 * list_reduce(list_transform(range(1, len(e.emb)+1), i -> e.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |        + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |    FROM e, c1 c)),
-        |m2 AS (
-        |  SELECT cid, i,
-        |    CAST(sum(CAST(round(x * 1e7) AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 1e7 AS m
-        |  FROM (SELECT cid, unnest(range(1, len(emb)+1)) AS i, unnest(emb) AS x
-        |        FROM a2 WHERE crn = 1)
-        |  GROUP BY cid, i),
-        |c2 AS (SELECT c1.cid, coalesce(nc.c_emb, c1.c_emb) AS c_emb
-        |       FROM c1 LEFT JOIN
-        |         (SELECT cid, list(m ORDER BY i) AS c_emb FROM m2 GROUP BY cid) nc
-        |       ON c1.cid = nc.cid),
-        |dists AS (
-        |  SELECT n.vec_id, n.emb, n.nrm, c.cid,
-        |    list_reduce(list_transform(n.emb, x -> x*x), (a,x) -> a+x)
-        |      - 2.0 * list_reduce(list_transform(range(1, len(n.emb)+1), i -> n.emb[i]*c.c_emb[i]), (a,x) -> a+x)
-        |      + list_reduce(list_transform(c.c_emb, x -> x*x), (a,x) -> a+x) AS d2
-        |  FROM n, c2 c),
-        |ranked AS (
-        |  SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2 ASC, cid ASC) AS crn
-        |  FROM dists),
+      ("WITH " + lloydRankedCte + """,
         |assign AS (SELECT vec_id AS neighbor_id, cid, emb AS n_emb, nrm AS n_nrm
         |           FROM ranked WHERE crn = 1),
         |probes AS (SELECT vec_id AS query_id, cid, emb AS q_emb, nrm AS q_nrm
@@ -3905,7 +4000,7 @@ object LlmQueries {
         |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
         |      FROM scored)
         |SELECT query_id, rnk, neighbor_id, round(cos, 6) AS cos_sim
-        |FROM r WHERE rnk <= 3""".stripMargin,
+        |FROM r WHERE rnk <= 3""".stripMargin),
 
     "q52_text_normalize" ->
       """SELECT doc_id,
@@ -3979,41 +4074,12 @@ object LlmQueries {
         |    AS corr_qty_price
         |FROM c""".stripMargin,
 
-    "q60_levenshtein" ->
-      """WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
-        |  WHERE len(string_split(text,' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, sh FROM (
-        |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS sh
-        |    FROM toks)),
-        |sig AS (
-        |  SELECT doc_id, band,
-        |    min(substr(md5(sh), band*8+1, 4)) || min(substr(md5(sh), band*8+5, 4)) AS sig
-        |  FROM sh, (SELECT unnest([0,1,2,3]) AS band)
-        |  GROUP BY doc_id, band),
-        |cand AS (
-        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        |  FROM sig a JOIN sig b ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id),
-        |inter AS (
-        |  SELECT doc_a, doc_b, count(*) AS n_inter
-        |  FROM cand
-        |  JOIN sh sa ON sa.doc_id = doc_a
-        |  JOIN sh sb ON sb.doc_id = doc_b AND sb.sh = sa.sh
-        |  GROUP BY doc_a, doc_b),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM (
-        |    SELECT doc_a, doc_b,
-        |      CAST(n_inter AS DOUBLE) / (na.n + nb.n - n_inter) AS jaccard
-        |    FROM inter
-        |    JOIN sizes na ON na.doc_id = doc_a
-        |    JOIN sizes nb ON nb.doc_id = doc_b)
-        |  WHERE jaccard >= 0.5)
+    "q60_levenshtein" -> ("WITH " + minhashDocPairsCte("") + """
         |SELECT doc_a, doc_b,
         |  levenshtein(substring(ta.text, 1, 60), substring(tb.text, 1, 60)) AS edit_dist
         |FROM pairs
         |JOIN documents ta ON ta.doc_id = doc_a
-        |JOIN documents tb ON tb.doc_id = doc_b""".stripMargin,
+        |JOIN documents tb ON tb.doc_id = doc_b""".stripMargin),
 
     "q64_listagg" ->
       """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations
@@ -4180,25 +4246,8 @@ object LlmQueries {
     // 6 dp round at the end. sum(occ)/sum(occ*lp_mu) are BIGINT-cast per
     // the HUGEINT discipline.
     "q101_lm_xent" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |db AS (
-        |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
-        |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-        |    FROM toks)
-        |  GROUP BY 1, 2, 3),
-        |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
-        |uni AS (SELECT w1, count(*) AS c1
-        |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
-        |v AS (SELECT count(*) AS v FROM uni),
-        |model AS (
-        |  SELECT big.w1, big.w2,
-        |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
-        |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v)
-        |SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_bigrams,
-        |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-        |FROM db JOIN model USING (w1, w2)
-        |GROUP BY doc_id""".stripMargin,
+      s"""WITH $addOneLmCte
+        |$bigramXentSql""".stripMargin,
 
     // Mirrors TextSearch.phraseSearch("slow hash batch"): positional
     // postings (zipped unnest), one CTE per phrase token, adjacency by
@@ -4238,18 +4287,7 @@ object LlmQueries {
     // one double division + round per centroid dim, integer squared
     // distances, argmin by (dist, label).
     "q106_label_purity" ->
-      """WITH mu AS (
-        |  SELECT vec_id, label,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT)) AS xmu
-        |  FROM embeddings),
-        |e AS (SELECT vec_id, label, unnest(xmu) AS x,
-        |        unnest(range(0, len(xmu))) AS i FROM mu),
-        |cen AS (
-        |  SELECT label AS lc, i,
-        |    CAST(round(CAST(CAST(sum(x) AS BIGINT) AS DOUBLE)
-        |               / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c
-        |  FROM e GROUP BY 1, 2),
+      ("WITH " + labelCentroidsCte + """,
         |d AS (
         |  SELECT e.vec_id, e.label, cen.lc,
         |    CAST(sum((e.x - cen.c) * (e.x - cen.c)) AS BIGINT) AS dist
@@ -4259,7 +4297,7 @@ object LlmQueries {
         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist ASC, lc ASC) AS rn
         |  FROM d)
         |SELECT label, lc AS pred_label, CAST(count(*) AS BIGINT) AS n
-        |FROM a WHERE rn = 1 GROUP BY 1, 2""".stripMargin,
+        |FROM a WHERE rn = 1 GROUP BY 1, 2""".stripMargin),
 
     // Mirrors Temporal.funnelSteps: per-step earliest-qualifying min(ts)
     // chained through user-keyed joins, same strict > / within-interval
@@ -4341,11 +4379,7 @@ object LlmQueries {
     // chain at k=3/nBits=4 (ANN), hits counted via an IN-subquery semi
     // join, recall = double division of small exact counts.
     "q112_ann_recall" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm,
-        |        list_sum([CASE WHEN emb[j] > 0 THEN 1 << (j-1) ELSE 0 END for j in range(1, 5)]) AS bucket
-        |      FROM e),
+      s"""WITH ${lshBucketNormsCte},
         |xp AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |        list_reduce(list_transform(range(1, len(q.emb)+1), i -> q.emb[i]*c.emb[i]), (a,x) -> a+x)
         |          / (q.nrm * c.nrm) AS cos
@@ -4507,18 +4541,7 @@ object LlmQueries {
         |FROM r WHERE rank <= 5""".stripMargin,
 
     "q129_centroid_distances" ->
-      """WITH mu AS (
-        |  SELECT vec_id, label,
-        |    list_transform(embedding,
-        |      x -> CAST(round(CAST(x AS DOUBLE) * 1e6) AS BIGINT)) AS xmu
-        |  FROM embeddings),
-        |e AS (SELECT vec_id, label, unnest(xmu) AS x,
-        |        unnest(range(0, len(xmu))) AS i FROM mu),
-        |cen AS (
-        |  SELECT label AS lc, i,
-        |    CAST(round(CAST(CAST(sum(x) AS BIGINT) AS DOUBLE)
-        |               / CAST(count(*) AS DOUBLE)) AS BIGINT) AS c
-        |  FROM e GROUP BY 1, 2),
+      ("WITH " + labelCentroidsCte + """,
         |d AS (
         |  SELECT a.lc AS label_a, b.lc AS label_b,
         |    CAST(sum(a.c * b.c) AS BIGINT) AS dot,
@@ -4529,7 +4552,7 @@ object LlmQueries {
         |SELECT label_a, label_b,
         |  round(CAST(dot AS DOUBLE)
         |    / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))), 6) AS cos_sim
-        |FROM d""".stripMargin,
+        |FROM d""".stripMargin),
 
     "q131_ngram_novelty" ->
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
@@ -4592,13 +4615,7 @@ object LlmQueries {
         |GROUP BY 1, 2, 3""".stripMargin,
 
     "q135_eval_containment" ->
-      """WITH cs AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct(
-        |      [array_to_string(toks[i : i + 12], ' ') for i in range(1, len(toks) - 11)])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 13),
-        |es AS (SELECT doc_id AS eval_id, sh FROM cs WHERE doc_id < 10),
+      s"""WITH ${OracleSql.evalShinglesCte},
         |en AS (SELECT eval_id, CAST(count(*) AS BIGINT) AS n_eval_shingles
         |  FROM es GROUP BY 1),
         |p AS (
@@ -4632,7 +4649,7 @@ object LlmQueries {
     // total order), identical per-token contribution expression, micro-unit
     // exact sums.
     "q137_source_divergence" ->
-      """WITH cnt AS (SELECT source AS g, tok, CAST(count(*) AS BIGINT) AS c
+      s"""WITH cnt AS (SELECT source AS g, tok, CAST(count(*) AS BIGINT) AS c
         |  FROM (SELECT source, unnest(string_split(text,' ')) AS tok FROM documents)
         |  GROUP BY 1, 2),
         |top AS (SELECT tok FROM (SELECT tok, sum(c) AS ct FROM cnt GROUP BY 1)
@@ -4647,16 +4664,7 @@ object LlmQueries {
         |      FROM grid a JOIN grid b ON a.tok = b.tok AND a.g < b.g),
         |m AS (SELECT group_a, group_b,
         |  CASE WHEN ca > 0 AND cb > 0 THEN 1 ELSE 0 END AS common,
-        |  CAST(round((
-        |    CASE WHEN ca > 0 THEN (CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) *
-        |      ln((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) /
-        |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
-        |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END +
-        |    CASE WHEN cb > 0 THEN (CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) *
-        |      ln((CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) /
-        |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
-        |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END
-        |  ) * 5e5) AS BIGINT) AS mu
+        |  $jsHalfMu
         |  FROM p)
         |SELECT group_a, group_b, CAST(sum(common) AS BIGINT) AS n_common,
         |  round(CAST(sum(mu) AS DOUBLE) / 1e6, 6) AS js_divergence
@@ -4705,44 +4713,8 @@ object LlmQueries {
     // integer order-statistic cutoffs on the micro-unit scale (cum*3 >= j*n)
     // and exact micro-unit bucket means — no percentile interpolation.
     "q140_ppl_mix" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |db AS (
-        |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
-        |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-        |    FROM toks)
-        |  GROUP BY 1, 2, 3),
-        |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
-        |uni AS (SELECT w1, count(*) AS c1
-        |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
-        |v AS (SELECT count(*) AS v FROM uni),
-        |model AS (
-        |  SELECT big.w1, big.w2,
-        |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
-        |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v),
-        |sc AS (SELECT db.doc_id,
-        |    CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |      // (2 * sum(occ)) AS BIGINT) AS xmu
-        |  FROM db JOIN model USING (w1, w2) GROUP BY doc_id),
-        |sg AS (SELECT sc.doc_id, d.source AS g, sc.xmu
-        |       FROM sc JOIN documents d USING (doc_id)),
-        |vals AS (SELECT g, xmu, CAST(count(*) AS BIGINT) AS c FROM sg GROUP BY 1, 2),
-        |cum AS (SELECT g, xmu, c,
-        |    CAST(sum(c) OVER (PARTITION BY g ORDER BY xmu) AS BIGINT) AS cm
-        |  FROM vals),
-        |tt AS (SELECT g, CAST(sum(c) AS BIGINT) AS n FROM vals GROUP BY 1),
-        |cuts AS (SELECT cum.g,
-        |    min(CASE WHEN cm * 3 >= n THEN xmu END) AS cut1,
-        |    min(CASE WHEN cm * 3 >= n * 2 THEN xmu END) AS cut2
-        |  FROM cum JOIN tt USING (g) GROUP BY 1),
-        |bk AS (SELECT sg.g, sg.xmu,
-        |    CASE WHEN sg.xmu <= cuts.cut1 THEN 'head'
-        |         WHEN sg.xmu <= cuts.cut2 THEN 'middle'
-        |         ELSE 'tail' END AS bucket
-        |  FROM sg JOIN cuts USING (g))
-        |SELECT g AS source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  round((CAST(sum(xmu) AS DOUBLE) / 1e6) / CAST(count(*) AS DOUBLE), 6)
-        |    AS mean_xent
-        |FROM bk GROUP BY 1, 2""".stripMargin,
+      s"""WITH $addOneLmCte,
+        |$tercileMixSql""".stripMargin,
 
     // Mirrors TextDedup.winnowNearDupPairs(k=5, w=4, minShared=2, maxDf=20):
     // identical md5 gram hashes, per-doc min windows over full windows only
@@ -4972,40 +4944,13 @@ object LlmQueries {
     // per-TYPE micro-unit quantization of BOTH log-probs, exact integer
     // occ-weighted sums, one division + 6 dp round per group.
     "q151_importance_weights" ->
-      """WITH base AS (SELECT doc_id, source, lang = 'en' AS tgt,
-        |    string_split(text,' ') AS t FROM documents),
-        |pairs AS (
-        |  SELECT doc_id, source, tgt, t[i] AS w1, t[i+1] AS w2
-        |  FROM base, LATERAL (SELECT unnest(range(1, len(t))) AS i)),
-        |docbig AS (SELECT doc_id, source, tgt, w1, w2,
-        |    CAST(count(*) AS BIGINT) AS occ
-        |  FROM pairs GROUP BY 1, 2, 3, 4, 5),
-        |gbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS gc2
-        |  FROM docbig GROUP BY 1, 2),
-        |guni AS (SELECT w1, CAST(count(*) AS BIGINT) AS gc1
-        |  FROM (SELECT unnest(t) AS w1 FROM base) GROUP BY 1),
-        |tbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS tc2
-        |  FROM docbig WHERE tgt GROUP BY 1, 2),
-        |tuni AS (SELECT w1, CAST(count(*) AS BIGINT) AS tc1
-        |  FROM (SELECT unnest(t) AS w1 FROM base WHERE tgt) GROUP BY 1),
-        |sizes AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM guni) AS gv,
-        |                 (SELECT CAST(count(*) AS BIGINT) FROM tuni) AS tv),
+      s"""WITH $sourceDocBigramsCte,
+        |$importanceCountsCte,
         |scored AS (
         |  SELECT d.source, d.occ,
-        |    CAST(round(ln(CAST(coalesce(tb.tc2, 0) + 1 AS DOUBLE)
-        |      / CAST(coalesce(tu.tc1, 0) + sizes.tv AS DOUBLE)) * 1e6) AS BIGINT)
-        |    - CAST(round(ln(CAST(gb.gc2 + 1 AS DOUBLE)
-        |      / CAST(gu.gc1 + sizes.gv AS DOUBLE)) * 1e6) AS BIGINT) AS lr_mu
-        |  FROM docbig d
-        |  JOIN gbig gb ON gb.w1 = d.w1 AND gb.w2 = d.w2
-        |  JOIN guni gu ON gu.w1 = d.w1
-        |  LEFT JOIN tbig tb ON tb.w1 = d.w1 AND tb.w2 = d.w2
-        |  LEFT JOIN tuni tu ON tu.w1 = d.w1
-        |  CROSS JOIN sizes)
-        |SELECT source, CAST(sum(occ) AS BIGINT) AS n_bigrams,
-        |  round((CAST(sum(occ * lr_mu) AS DOUBLE) / 1e6)
-        |    / CAST(sum(occ) AS DOUBLE), 6) AS avg_logratio
-        |FROM scored GROUP BY 1""".stripMargin,
+        |    $importanceLogRatioMu AS lr_mu
+        |  $importanceJoinSql)
+        |$avgLogRatioSql""".stripMargin,
 
     // Mirrors TextDedup.blockedEditDistance: identical block key, prefix
     // lengths, block-size cap, and distance threshold.
@@ -5044,7 +4989,7 @@ object LlmQueries {
     // bucket totals), identical per-category JS contribution expression,
     // micro-unit exact sums.
     "q154_ingest_drift" ->
-      """WITH cnt AS (SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS b,
+      s"""WITH cnt AS (SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS b,
         |    event_type AS cat, CAST(count(*) AS BIGINT) AS c
         |  FROM events GROUP BY 1, 2),
         |tt AS (SELECT b, CAST(sum(c) AS BIGINT) AS t FROM cnt GROUP BY 1),
@@ -5057,16 +5002,7 @@ object LlmQueries {
         |  FROM grid p JOIN grid q
         |    ON q.b = p.b + INTERVAL 1 DAY AND q.cat = p.cat),
         |m AS (SELECT b, cat, ca, cb,
-        |  CAST(round((
-        |    CASE WHEN ca > 0 THEN (CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) *
-        |      ln((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE)) /
-        |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
-        |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END +
-        |    CASE WHEN cb > 0 THEN (CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) *
-        |      ln((CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) /
-        |        ((CAST(ca AS DOUBLE) / CAST(ta AS DOUBLE) +
-        |          CAST(cb AS DOUBLE) / CAST(tb AS DOUBLE)) / 2)) ELSE 0.0 END
-        |  ) * 5e5) AS BIGINT) AS mu
+        |  $jsHalfMu
         |  FROM j)
         |SELECT b AS bucket,
         |  CAST(sum(CASE WHEN ca > 0 AND cb > 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -5190,10 +5126,6 @@ object LlmQueries {
     // ADC sums exact BIGINT micro-units, identical candidate and re-rank
     // total orders.
     "q165_pq_ann" -> {
-      def d2(v: String, c: String) =
-        s"""list_reduce(list_transform($v, x -> x*x), (a,x) -> a+x)
-           |        - 2.0 * list_reduce(list_transform(range(1, len($v)+1), i -> $v[i]*$c[i]), (a,x) -> a+x)
-           |        + list_reduce(list_transform($c, x -> x*x), (a,x) -> a+x)""".stripMargin
       val blocks = (0 until 4).map { s =>
         val lo = s * 16 + 1; val hi = s * 16 + 16
         s"""sub$s AS (SELECT vec_id,
@@ -5235,10 +5167,7 @@ object LlmQueries {
       val dqUnion = (0 until 4)
         .map(s => s"SELECT $s AS sp, query_id, cid, dmu FROM dq$s")
         .mkString("\n        UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |n AS (SELECT vec_id, emb,
-         |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-         |      FROM e),
+      s"""WITH ${embNormsCte()},
          |$blocks,
          |codes AS ($codeUnion),
          |dqa AS ($dqUnion),
@@ -5247,17 +5176,7 @@ object LlmQueries {
          |  FROM codes c JOIN dqa d ON d.sp = c.sp AND d.cid = c.cid
          |  WHERE d.query_id <> c.neighbor_id
          |  GROUP BY 1, 2),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc_mu ASC, neighbor_id ASC) AS crn
-         |    FROM adc) WHERE crn <= 30),
-         |scored AS (
-         |  SELECT ca.query_id, ca.neighbor_id,
-         |    list_reduce(list_transform(range(1, len(qn.emb)+1), i -> qn.emb[i]*nn.emb[i]), (x,y) -> x+y)
-         |      / (qn.nrm * nn.nrm) AS cos
-         |  FROM cand ca
-         |  JOIN n qn ON qn.vec_id = ca.query_id
-         |  JOIN n nn ON nn.vec_id = ca.neighbor_id),
+         |$adcRerankCte,
          |r AS (SELECT query_id, neighbor_id, cos,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
          |      FROM scored)
@@ -5295,10 +5214,6 @@ object LlmQueries {
     // per-subspace residual-Lloyd + per-(query, list) ADC + exact re-rank
     // replay, all on the same deterministic seeds and total orders.
     "q168_ivfpq_ann" -> {
-      def d2(v: String, c: String) =
-        s"""list_reduce(list_transform($v, x -> x*x), (a,x) -> a+x)
-           |        - 2.0 * list_reduce(list_transform(range(1, len($v)+1), i -> $v[i]*$c[i]), (a,x) -> a+x)
-           |        + list_reduce(list_transform($c, x -> x*x), (a,x) -> a+x)""".stripMargin
       val pqBlocks = (0 until 4).map { s =>
         val lo = s * 16 + 1; val hi = s * 16 + 16
         s"""sub$s AS (SELECT vec_id, r[$lo:$hi] AS semb FROM resid),
@@ -5338,10 +5253,7 @@ object LlmQueries {
       val dqUnion = (0 until 4)
         .map(s => s"SELECT $s AS sp, query_id, lcid, cid, dmu FROM dq$s")
         .mkString("\n        UNION ALL ")
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         |n AS (SELECT vec_id, emb,
-         |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-         |      FROM e),
+      s"""WITH ${embNormsCte()},
          |u AS (SELECT vec_id,
          |        list_transform(emb, x -> x / greatest(nrm, 1e-30)) AS emb
          |      FROM n),
@@ -5391,17 +5303,7 @@ object LlmQueries {
          |  JOIN dqa d ON d.lcid = c.lcid AND d.sp = c.sp AND d.cid = c.cid
          |  WHERE d.query_id <> c.neighbor_id
          |  GROUP BY 1, 2),
-         |cand AS (SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY adc_mu ASC, neighbor_id ASC) AS crn
-         |    FROM adc) WHERE crn <= 30),
-         |scored AS (
-         |  SELECT ca.query_id, ca.neighbor_id,
-         |    list_reduce(list_transform(range(1, len(qn.emb)+1), i -> qn.emb[i]*nn.emb[i]), (x,y) -> x+y)
-         |      / (qn.nrm * nn.nrm) AS cos
-         |  FROM cand ca
-         |  JOIN n qn ON qn.vec_id = ca.query_id
-         |  JOIN n nn ON nn.vec_id = ca.neighbor_id),
+         |$adcRerankCte,
          |rr AS (SELECT query_id, neighbor_id, cos,
          |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
          |      FROM scored)
@@ -5417,11 +5319,7 @@ object LlmQueries {
     // exact-integer half-up 6 dp division.
     "q342_kn_xent" ->
       s"""$knModelCte
-        |SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_bigrams,
-        |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-        |FROM db JOIN model USING (w1, w2)
-        |GROUP BY doc_id""".stripMargin,
+        |$bigramXentSql""".stripMargin,
 
     // Mirrors TextLm.softDedupWeights: the shared doc-bigram chain's
     // db/big tables, unsmoothed corpus log-frequency per TYPE
@@ -5430,11 +5328,7 @@ object LlmQueries {
     // rarity degenerates to 0).
     "q388_softdedup_weights" ->
       s"""$knModelCte,
-        |ttl AS (SELECT CAST(sum(c2) AS BIGINT) AS tt FROM big),
-        |fmodel AS (SELECT w1, w2,
-        |    CAST(round(ln(CAST(c2 AS DOUBLE) / CAST(tt AS DOUBLE)) * 1e6)
-        |      AS BIGINT) AS flp
-        |  FROM big CROSS JOIN ttl),
+        |$freqModelCte,
         |pd AS MATERIALIZED (
         |  SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_grams,
         |    CAST((2 * (-sum(occ * flp)) + sum(occ))
@@ -5453,30 +5347,7 @@ object LlmQueries {
     // bucket).
     "q343_kn_ppl_mix" ->
       s"""$knModelCte,
-        |sc AS (SELECT db.doc_id,
-        |    CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |      // (2 * sum(occ)) AS BIGINT) AS xmu
-        |  FROM db JOIN model USING (w1, w2) GROUP BY doc_id),
-        |sg AS (SELECT sc.doc_id, d.source AS g, sc.xmu
-        |       FROM sc JOIN documents d USING (doc_id)),
-        |vals AS (SELECT g, xmu, CAST(count(*) AS BIGINT) AS c FROM sg GROUP BY 1, 2),
-        |cum AS (SELECT g, xmu, c,
-        |    CAST(sum(c) OVER (PARTITION BY g ORDER BY xmu) AS BIGINT) AS cm
-        |  FROM vals),
-        |tt AS (SELECT g, CAST(sum(c) AS BIGINT) AS n FROM vals GROUP BY 1),
-        |cuts AS (SELECT cum.g,
-        |    min(CASE WHEN cm * 3 >= n THEN xmu END) AS cut1,
-        |    min(CASE WHEN cm * 3 >= n * 2 THEN xmu END) AS cut2
-        |  FROM cum JOIN tt USING (g) GROUP BY 1),
-        |bk AS (SELECT sg.g, sg.xmu,
-        |    CASE WHEN sg.xmu <= cuts.cut1 THEN 'head'
-        |         WHEN sg.xmu <= cuts.cut2 THEN 'middle'
-        |         ELSE 'tail' END AS bucket
-        |  FROM sg JOIN cuts USING (g))
-        |SELECT g AS source, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  round((CAST(sum(xmu) AS DOUBLE) / 1e6) / CAST(count(*) AS DOUBLE), 6)
-        |    AS mean_xent
-        |FROM bk GROUP BY 1, 2""".stripMargin,
+        |$tercileMixSql""".stripMargin,
 
     // Mirrors TextLm.knImportanceWeightsFrom: both models KN-smoothed from
     // the shared doc-level bigram counts; the target side replays the
@@ -5484,14 +5355,7 @@ object LlmQueries {
     // clamped discount / continuation-only when the history is
     // target-unseen) with the identical BIGINT rationals.
     "q344_kn_importance_weights" ->
-      """WITH base AS (SELECT doc_id, source, lang = 'en' AS tgt,
-        |    string_split(text,' ') AS t FROM documents),
-        |pairs AS (
-        |  SELECT doc_id, source, tgt, t[i] AS w1, t[i+1] AS w2
-        |  FROM base, LATERAL (SELECT unnest(range(1, len(t))) AS i)),
-        |docbig AS (SELECT doc_id, source, tgt, w1, w2,
-        |    CAST(count(*) AS BIGINT) AS occ
-        |  FROM pairs GROUP BY 1, 2, 3, 4, 5),
+      s"""WITH $sourceDocBigramsCte,
         |gbig AS MATERIALIZED (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS gc2
         |  FROM docbig GROUP BY 1, 2),
         |ghist AS (SELECT w1, CAST(sum(gc2) AS BIGINT) AS gc1,
@@ -5533,10 +5397,7 @@ object LlmQueries {
         |  LEFT JOIN thist th ON th.w1 = d.w1
         |  LEFT JOIN tcont tc ON tc.w2 = d.w2
         |  CROSS JOIN sizes)
-        |SELECT source, CAST(sum(occ) AS BIGINT) AS n_bigrams,
-        |  round((CAST(sum(occ * lr_mu) AS DOUBLE) / 1e6)
-        |    / CAST(sum(occ) AS DOUBLE), 6) AS avg_logratio
-        |FROM scored GROUP BY 1""".stripMargin,
+        |$avgLogRatioSql""".stripMargin,
 
     // Mirrors TextDedup.dedupPipeline over the composed lineage (minhash
     // pairs + semantic cells + the exact/near/semantic worklist chain).
@@ -5565,7 +5426,7 @@ object LlmQueries {
     // trigram type (operand-for-operand — IEEE ops at fixed order are
     // engine-deterministic), micro-nat quantization, exact per-doc sums.
     "q347_kn3_xent" ->
-      """WITH toks AS MATERIALIZED (
+      s"""WITH toks AS MATERIALIZED (
         |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |dt AS MATERIALIZED (
         |  SELECT doc_id, w1, w2, w3, count(*) AS occ FROM (
@@ -5602,11 +5463,7 @@ object LlmQueries {
         |  FROM tri JOIN h12 USING (w1, w2) JOIN s23 USING (w2, w3)
         |  JOIN m2 USING (w2) JOIN cont USING (w3)
         |  CROSS JOIN tv)
-        |SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_trigrams,
-        |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-        |FROM dt JOIN model USING (w1, w2, w3)
-        |GROUP BY doc_id""".stripMargin,
+        |${docXentSql("n_trigrams", "dt JOIN model USING (w1, w2, w3)")}""".stripMargin,
 
     // Mirrors TextLm.excessLossSelectFrom: the shared knModelCte reference
     // model + the q101 add-one model from the SAME type counts, per-doc
@@ -5614,15 +5471,7 @@ object LlmQueries {
     // cut per source by ascending cumulative counts (cum*4 >= n*3; ties
     // at the cut fall to the unselected side).
     "q348_excess_loss_select" ->
-      s"""$knModelCte,
-        |uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1u
-        |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
-        |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-        |amodel AS (
-        |  SELECT big.w1, big.w2,
-        |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE)
-        |      / CAST(uni.c1u + vv.v AS DOUBLE)) * 1e6) AS BIGINT) AS lpa
-        |  FROM big JOIN uni USING (w1) CROSS JOIN vv),
+      s"""$knAddOneCte,
         |sc AS (SELECT db.doc_id,
         |    CAST((2 * (-sum(occ * a.lpa)) + sum(occ))
         |      // (2 * sum(occ)) AS BIGINT)
@@ -5661,15 +5510,7 @@ object LlmQueries {
     // character string Spark's expr parses, so the fixed-order double
     // arithmetic cannot diverge.
     "q349_mkn_xent" ->
-      s"""WITH toks AS MATERIALIZED (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |db AS MATERIALIZED (
-        |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
-        |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-        |    FROM toks)
-        |  GROUP BY 1, 2, 3),
-        |big AS MATERIALIZED (
-        |  SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
+      s"""WITH $knBigramsCte,
         |hist AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1,
         |    CAST(count(CASE WHEN c2 = 1 THEN 1 END) AS BIGINT) AS m1,
         |    CAST(count(CASE WHEN c2 = 2 THEN 1 END) AS BIGINT) AS m2c,
@@ -5690,11 +5531,7 @@ object LlmQueries {
         |      AS lp_mu
         |  FROM big JOIN hist USING (w1) JOIN cont USING (w2)
         |  CROSS JOIN sizes CROSS JOIN vv)
-        |SELECT doc_id, CAST(sum(occ) AS BIGINT) AS n_bigrams,
-        |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-        |FROM db JOIN model USING (w1, w2)
-        |GROUP BY doc_id""".stripMargin,
+        |$bigramXentSql""".stripMargin,
 
     // Mirrors TextLm.minKProbFrom: the shared KN model, occurrence-expanded
     // per-doc instances (generate_series), bottom ceil(m/5) by lp rank
@@ -5735,17 +5572,7 @@ object LlmQueries {
     // per-doc rebuild via ORDER BY line position (string_agg skips the
     // dropped NULLs; coalesce('') matches Spark's empty-array join).
     "q351_line_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
-        |  FROM documents),
-        |lns AS MATERIALIZED (
-        |  SELECT doc_id, i AS lpos,
-        |    array_to_string(ts[i*3+1 : i*3+3], ' ') AS line,
-        |    CAST(len(ts[i*3+1 : i*3+3]) AS BIGINT) AS ntoks
-        |  FROM (SELECT doc_id, ts,
-        |      unnest(generate_series(0,
-        |        greatest((len(ts) + 2) // 3, 1) - 1)) AS i
-        |    FROM toks)),
+      ("WITH " + lineTilesCte + """,
         |df AS (
         |  SELECT line, CAST(count(DISTINCT doc_id) AS BIGINT) AS ldf
         |  FROM lns GROUP BY 1)
@@ -5759,7 +5586,7 @@ object LlmQueries {
         |    string_agg(CASE WHEN ldf < 3 THEN line END, ' ' ORDER BY lpos),
         |    '')) AS clean_md5
         |FROM lns JOIN df USING (line)
-        |GROUP BY doc_id""".stripMargin,
+        |GROUP BY doc_id""".stripMargin),
 
     "q359_paragraph_minhash" -> paragraphMinhashSql,
 
@@ -5777,29 +5604,12 @@ object LlmQueries {
          |docbig AS (SELECT doc_id, tgt, w1, w2,
          |    CAST(count(*) AS BIGINT) AS occ
          |  FROM pairs GROUP BY 1, 2, 3, 4),
-         |gbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS gc2
-         |  FROM docbig GROUP BY 1, 2),
-         |guni AS (SELECT w1, CAST(count(*) AS BIGINT) AS gc1
-         |  FROM (SELECT unnest(t) AS w1 FROM base) GROUP BY 1),
-         |tbig AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS tc2
-         |  FROM docbig WHERE tgt GROUP BY 1, 2),
-         |tuni AS (SELECT w1, CAST(count(*) AS BIGINT) AS tc1
-         |  FROM (SELECT unnest(t) AS w1 FROM base WHERE tgt) GROUP BY 1),
-         |sizes AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM guni) AS gv,
-         |                 (SELECT CAST(count(*) AS BIGINT) FROM tuni) AS tv),
+         |$importanceCountsCte,
          |lwt AS MATERIALIZED (
          |  SELECT d.doc_id, CAST(sum(d.occ *
-         |    (CAST(round(ln(CAST(coalesce(tb.tc2, 0) + 1 AS DOUBLE)
-         |      / CAST(coalesce(tu.tc1, 0) + sizes.tv AS DOUBLE)) * 1e6) AS BIGINT)
-         |    - CAST(round(ln(CAST(gb.gc2 + 1 AS DOUBLE)
-         |      / CAST(gu.gc1 + sizes.gv AS DOUBLE)) * 1e6) AS BIGINT))) AS BIGINT)
+         |    ($importanceLogRatioMu)) AS BIGINT)
          |    AS lw_mu
-         |  FROM docbig d
-         |  JOIN gbig gb ON gb.w1 = d.w1 AND gb.w2 = d.w2
-         |  JOIN guni gu ON gu.w1 = d.w1
-         |  LEFT JOIN tbig tb ON tb.w1 = d.w1 AND tb.w2 = d.w2
-         |  LEFT JOIN tuni tu ON tu.w1 = d.w1
-         |  CROSS JOIN sizes
+         |  $importanceJoinSql
          |  GROUP BY 1),
          |g AS (SELECT d2.doc_id, d2.lw_mu,
          |    CAST(round(1e6 * (-ln(-ln((CAST($h AS DOUBLE) + 0.5)
@@ -5854,17 +5664,7 @@ object LlmQueries {
     // Mirrors TextDedup.intraDocLineDedup: the q351 line inventory, a
     // (doc, line)-keyed min(lpos), keep-first flag, ordered rebuild.
     "q363_intradoc_line_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
-        |  FROM documents),
-        |lns AS MATERIALIZED (
-        |  SELECT doc_id, i AS lpos,
-        |    array_to_string(ts[i*3+1 : i*3+3], ' ') AS line,
-        |    CAST(len(ts[i*3+1 : i*3+3]) AS BIGINT) AS ntoks
-        |  FROM (SELECT doc_id, ts,
-        |      unnest(generate_series(0,
-        |        greatest((len(ts) + 2) // 3, 1) - 1)) AS i
-        |    FROM toks)),
+      ("WITH " + lineTilesCte + """,
         |k AS (SELECT doc_id, line, CAST(min(lpos) AS BIGINT) AS kpos
         |  FROM lns GROUP BY 1, 2)
         |SELECT doc_id,
@@ -5877,7 +5677,7 @@ object LlmQueries {
         |    string_agg(CASE WHEN lpos = kpos THEN line END, ' ' ORDER BY lpos),
         |    '')) AS clean_md5
         |FROM lns JOIN k USING (doc_id, line)
-        |GROUP BY doc_id""".stripMargin,
+        |GROUP BY doc_id""".stripMargin),
 
     // Mirrors TextLm.heldoutKnXentFrom: db split by the 'ho' md5 carve
     // (h < 2^60/8 exact integer compare), KN model from the train side
@@ -5907,15 +5707,7 @@ object LlmQueries {
          |       FROM (SELECT unnest(t) AS w1 FROM base WHERE NOT ho)) AS v),
          |sc AS (
          |  SELECT d.doc_id, d.source, d.occ,
-         |    CAST(round(ln(CASE WHEN tv.t_types + tv.v = 0 THEN NULL
-         |        WHEN h1.c1 IS NULL
-         |        THEN CAST(coalesce(cn.nc, 0) + 1 AS DOUBLE)
-         |          / CAST(tv.t_types + tv.v AS DOUBLE)
-         |        ELSE CAST(greatest(4 * coalesce(b.c2, 0) - 3, 0)
-         |              * (tv.t_types + tv.v)
-         |              + 3 * h1.n1p * (coalesce(cn.nc, 0) + 1) AS DOUBLE)
-         |          / CAST(4 * h1.c1 * (tv.t_types + tv.v) AS DOUBLE)
-         |      END) * 1e6) AS BIGINT) AS lp_mu
+         |    $heldoutKnLpMu
          |  FROM db d
          |  LEFT JOIN big b ON b.w1 = d.w1 AND b.w2 = d.w2
          |  LEFT JOIN hist h1 ON h1.w1 = d.w1
@@ -6086,15 +5878,7 @@ object LlmQueries {
            |    (SELECT CAST(coalesce(sum(uocc), 0) AS BIGINT) FROM uni
            |     WHERE h >= $lo) AS n_train_tokens),
            |sc$k AS (SELECT d.occ, tv.n_train_tokens,
-           |    CAST(round(ln(CASE WHEN tv.t_types + tv.v = 0 THEN NULL
-           |        WHEN h1.c1 IS NULL
-           |        THEN CAST(coalesce(cn.nc, 0) + 1 AS DOUBLE)
-           |          / CAST(tv.t_types + tv.v AS DOUBLE)
-           |        ELSE CAST(greatest(4 * coalesce(b.c2, 0) - 3, 0)
-           |              * (tv.t_types + tv.v)
-           |              + 3 * h1.n1p * (coalesce(cn.nc, 0) + 1) AS DOUBLE)
-           |          / CAST(4 * h1.c1 * (tv.t_types + tv.v) AS DOUBLE)
-           |      END) * 1e6) AS BIGINT) AS lp_mu
+           |    $heldoutKnLpMu
            |  FROM db d
            |  LEFT JOIN big$k b ON b.w1 = d.w1 AND b.w2 = d.w2
            |  LEFT JOIN hist$k h1 ON h1.w1 = d.w1

@@ -818,6 +818,78 @@ object MlQueries {
        |FROM sel, fr""".stripMargin
   }
 
+  /** The q193 multinomial naive-Bayes source classifier (no WITH):
+    * add-one token likelihoods trained on even doc_ids, integer micro-nat
+    * log-prior + likelihood scores for every odd doc and class, ranked as
+    * `pick(doc_id, actual, mcls, rn)` (score DESC, mcls ASC). */
+  private val nbPickCte =
+    """tok AS (
+      |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
+      |  FROM documents),
+      |train AS (SELECT * FROM tok WHERE doc_id % 2 = 0),
+      |cnt AS (SELECT source AS mcls, token, count(*) AS c
+      |  FROM train GROUP BY 1, 2),
+      |tot AS (SELECT mcls, CAST(sum(c) AS BIGINT) AS tot FROM cnt GROUP BY 1),
+      |pri AS (SELECT source AS mcls, count(*) AS nd
+      |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
+      |gl AS (SELECT (SELECT count(DISTINCT token) FROM cnt) AS v,
+      |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0) AS td),
+      |classes AS (SELECT t.mcls, t.tot, p.nd, g.v, g.td
+      |  FROM tot t JOIN pri p ON t.mcls = p.mcls CROSS JOIN gl g),
+      |ttf AS (SELECT doc_id, source AS actual, token, count(*) AS tf
+      |  FROM tok WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
+      |ttfv AS (SELECT * FROM ttf
+      |  WHERE token IN (SELECT DISTINCT token FROM cnt)),
+      |lik AS (SELECT t.doc_id, t.actual, cl.mcls,
+      |    sum(t.tf * CAST(round(ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
+      |      / CAST(cl.tot + cl.v AS DOUBLE)) * 1e6) AS BIGINT)) AS lk
+      |  FROM ttfv t CROSS JOIN classes cl
+      |  LEFT JOIN cnt c ON c.mcls = cl.mcls AND c.token = t.token
+      |  GROUP BY 1, 2, 3),
+      |base AS (SELECT dd.doc_id, dd.source AS actual, cl.mcls,
+      |    CAST(round(ln(CAST(cl.nd AS DOUBLE) / CAST(cl.td AS DOUBLE)) * 1e6)
+      |      AS BIGINT) AS prior
+      |  FROM documents dd CROSS JOIN classes cl WHERE dd.doc_id % 2 = 1),
+      |sc AS (SELECT b.doc_id, b.actual, b.mcls,
+      |    b.prior + coalesce(l.lk, 0) AS score
+      |  FROM base b LEFT JOIN lik l
+      |    ON l.doc_id = b.doc_id AND l.mcls = b.mcls),
+      |pick AS (SELECT doc_id, actual, mcls,
+      |    row_number() OVER (PARTITION BY doc_id
+      |      ORDER BY score DESC, mcls ASC) AS rn
+      |  FROM sc)""".stripMargin
+
+  /** The q316 Cavnar-Trenkle language-ID distances (no WITH): char
+    * trigram rank profiles (count DESC, gram ASC, top 20) per language
+    * and per doc, and the out-of-place `dist(doc_id, cand, dist)` with the
+    * k=20 penalty. */
+  private val ctLangIdCte =
+    """g AS (
+      |  SELECT doc_id, lang, u.g AS g
+      |  FROM (SELECT doc_id, lang,
+      |      [substr(text, i, 3) for i in range(1, length(text) - 1)]
+      |        AS gs
+      |    FROM documents WHERE length(text) >= 3) t,
+      |    unnest(gs) AS u(g)),
+      |dc AS (SELECT doc_id, lang, g, CAST(count(*) AS BIGINT) AS c
+      |  FROM g GROUP BY 1, 2, 3),
+      |lp AS (SELECT lang AS pl, g, rnk FROM (
+      |  SELECT lang, g, CAST(row_number() OVER (PARTITION BY lang
+      |      ORDER BY sum(c) DESC, g ASC) AS BIGINT) AS rnk
+      |  FROM dc GROUP BY lang, g) WHERE rnk <= 20),
+      |dp AS (SELECT doc_id, g, rnk FROM (
+      |  SELECT doc_id, g, CAST(row_number() OVER (PARTITION BY doc_id
+      |      ORDER BY c DESC, g ASC) AS BIGINT) AS rnk
+      |  FROM dc) WHERE rnk <= 20),
+      |langs AS (SELECT DISTINCT lang AS cand FROM documents),
+      |dist AS (
+      |  SELECT dp.doc_id, langs.cand,
+      |    CAST(sum(coalesce(abs(dp.rnk - lp.rnk), 20)) AS BIGINT)
+      |      AS dist
+      |  FROM dp CROSS JOIN langs
+      |  LEFT JOIN lp ON lp.pl = langs.cand AND lp.g = dp.g
+      |  GROUP BY 1, 2)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q332_model_calibration" -> logisticCalibrationSql(6, 3, 2),
     "q336_isotonic_calibration" -> isotonicSql(6, 3, 2),
@@ -829,31 +901,7 @@ object MlQueries {
     // rank windows, out-of-place distance with the k=20 penalty, ties to
     // the lexicographically first language.
     "q316_ct_langid" ->
-      """WITH g AS (
-        |  SELECT doc_id, lang, u.g AS g
-        |  FROM (SELECT doc_id, lang,
-        |      [substr(text, i, 3) for i in range(1, length(text) - 1)]
-        |        AS gs
-        |    FROM documents WHERE length(text) >= 3) t,
-        |    unnest(gs) AS u(g)),
-        |dc AS (SELECT doc_id, lang, g, CAST(count(*) AS BIGINT) AS c
-        |  FROM g GROUP BY 1, 2, 3),
-        |lp AS (SELECT lang AS pl, g, rnk FROM (
-        |  SELECT lang, g, CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY sum(c) DESC, g ASC) AS BIGINT) AS rnk
-        |  FROM dc GROUP BY lang, g) WHERE rnk <= 20),
-        |dp AS (SELECT doc_id, g, rnk FROM (
-        |  SELECT doc_id, g, CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY c DESC, g ASC) AS BIGINT) AS rnk
-        |  FROM dc) WHERE rnk <= 20),
-        |langs AS (SELECT DISTINCT lang AS cand FROM documents),
-        |dist AS (
-        |  SELECT dp.doc_id, langs.cand,
-        |    CAST(sum(coalesce(abs(dp.rnk - lp.rnk), 20)) AS BIGINT)
-        |      AS dist
-        |  FROM dp CROSS JOIN langs
-        |  LEFT JOIN lp ON lp.pl = langs.cand AND lp.g = dp.g
-        |  GROUP BY 1, 2),
+      s"""WITH $ctLangIdCte,
         |pred AS (SELECT doc_id, cand AS predicted FROM (
         |  SELECT doc_id, cand, row_number() OVER (PARTITION BY doc_id
         |      ORDER BY dist ASC, cand ASC) AS rn
@@ -890,41 +938,7 @@ object MlQueries {
         |FROM pr GROUP BY 1, 2, 3, 4""".stripMargin,
 
     "q193_nb_source_confusion" ->
-      """WITH tok AS (
-        |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |train AS (SELECT * FROM tok WHERE doc_id % 2 = 0),
-        |cnt AS (SELECT source AS mcls, token, count(*) AS c
-        |  FROM train GROUP BY 1, 2),
-        |tot AS (SELECT mcls, CAST(sum(c) AS BIGINT) AS tot FROM cnt GROUP BY 1),
-        |pri AS (SELECT source AS mcls, count(*) AS nd
-        |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |gl AS (SELECT (SELECT count(DISTINCT token) FROM cnt) AS v,
-        |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0) AS td),
-        |classes AS (SELECT t.mcls, t.tot, p.nd, g.v, g.td
-        |  FROM tot t JOIN pri p ON t.mcls = p.mcls CROSS JOIN gl g),
-        |ttf AS (SELECT doc_id, source AS actual, token, count(*) AS tf
-        |  FROM tok WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
-        |ttfv AS (SELECT * FROM ttf
-        |  WHERE token IN (SELECT DISTINCT token FROM cnt)),
-        |lik AS (SELECT t.doc_id, t.actual, cl.mcls,
-        |    sum(t.tf * CAST(round(ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-        |      / CAST(cl.tot + cl.v AS DOUBLE)) * 1e6) AS BIGINT)) AS lk
-        |  FROM ttfv t CROSS JOIN classes cl
-        |  LEFT JOIN cnt c ON c.mcls = cl.mcls AND c.token = t.token
-        |  GROUP BY 1, 2, 3),
-        |base AS (SELECT dd.doc_id, dd.source AS actual, cl.mcls,
-        |    CAST(round(ln(CAST(cl.nd AS DOUBLE) / CAST(cl.td AS DOUBLE)) * 1e6)
-        |      AS BIGINT) AS prior
-        |  FROM documents dd CROSS JOIN classes cl WHERE dd.doc_id % 2 = 1),
-        |sc AS (SELECT b.doc_id, b.actual, b.mcls,
-        |    b.prior + coalesce(l.lk, 0) AS score
-        |  FROM base b LEFT JOIN lik l
-        |    ON l.doc_id = b.doc_id AND l.mcls = b.mcls),
-        |pick AS (SELECT doc_id, actual, mcls,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score DESC, mcls ASC) AS rn
-        |  FROM sc)
+      s"""WITH $nbPickCte
         |SELECT actual, mcls AS predicted, CAST(count(*) AS BIGINT) AS n_docs
         |FROM pick WHERE rn = 1 GROUP BY 1, 2""".stripMargin,
 
@@ -933,68 +947,10 @@ object MlQueries {
     // q140 bigram-LM scorer to its 6-dp per-doc xent, composed by doc_id
     // left-joins with the same coalesce(false) missing-evidence rule.
     "q319_classifier_gate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
-        |  FROM documents),
-        |train AS (SELECT * FROM tok WHERE doc_id % 2 = 0),
-        |cnt AS (SELECT source AS mcls, token, count(*) AS c
-        |  FROM train GROUP BY 1, 2),
-        |tot AS (SELECT mcls, CAST(sum(c) AS BIGINT) AS tot FROM cnt GROUP BY 1),
-        |pri AS (SELECT source AS mcls, count(*) AS nd
-        |  FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-        |gl AS (SELECT (SELECT count(DISTINCT token) FROM cnt) AS v,
-        |  (SELECT count(*) FROM documents WHERE doc_id % 2 = 0) AS td),
-        |classes AS (SELECT t.mcls, t.tot, p.nd, g.v, g.td
-        |  FROM tot t JOIN pri p ON t.mcls = p.mcls CROSS JOIN gl g),
-        |ttf AS (SELECT doc_id, source AS actual, token, count(*) AS tf
-        |  FROM tok WHERE doc_id % 2 = 1 GROUP BY 1, 2, 3),
-        |ttfv AS (SELECT * FROM ttf
-        |  WHERE token IN (SELECT DISTINCT token FROM cnt)),
-        |lik AS (SELECT t.doc_id, t.actual, cl.mcls,
-        |    sum(t.tf * CAST(round(ln(CAST(coalesce(c.c, 0) + 1 AS DOUBLE)
-        |      / CAST(cl.tot + cl.v AS DOUBLE)) * 1e6) AS BIGINT)) AS lk
-        |  FROM ttfv t CROSS JOIN classes cl
-        |  LEFT JOIN cnt c ON c.mcls = cl.mcls AND c.token = t.token
-        |  GROUP BY 1, 2, 3),
-        |base AS (SELECT dd.doc_id, dd.source AS actual, cl.mcls,
-        |    CAST(round(ln(CAST(cl.nd AS DOUBLE) / CAST(cl.td AS DOUBLE)) * 1e6)
-        |      AS BIGINT) AS prior
-        |  FROM documents dd CROSS JOIN classes cl WHERE dd.doc_id % 2 = 1),
-        |sc AS (SELECT b.doc_id, b.actual, b.mcls,
-        |    b.prior + coalesce(l.lk, 0) AS score
-        |  FROM base b LEFT JOIN lik l
-        |    ON l.doc_id = b.doc_id AND l.mcls = b.mcls),
-        |pick AS (SELECT doc_id, actual, mcls,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score DESC, mcls ASC) AS rn
-        |  FROM sc),
+      s"""WITH $nbPickCte,
         |nbp AS (SELECT doc_id, (mcls = actual) AS source_ok
         |  FROM pick WHERE rn = 1),
-        |g AS (
-        |  SELECT doc_id, lang, u.g AS g
-        |  FROM (SELECT doc_id, lang,
-        |      [substr(text, i, 3) for i in range(1, length(text) - 1)]
-        |        AS gs
-        |    FROM documents WHERE length(text) >= 3) t,
-        |    unnest(gs) AS u(g)),
-        |dc AS (SELECT doc_id, lang, g, CAST(count(*) AS BIGINT) AS c
-        |  FROM g GROUP BY 1, 2, 3),
-        |lp AS (SELECT lang AS pl, g, rnk FROM (
-        |  SELECT lang, g, CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY sum(c) DESC, g ASC) AS BIGINT) AS rnk
-        |  FROM dc GROUP BY lang, g) WHERE rnk <= 20),
-        |dp AS (SELECT doc_id, g, rnk FROM (
-        |  SELECT doc_id, g, CAST(row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY c DESC, g ASC) AS BIGINT) AS rnk
-        |  FROM dc) WHERE rnk <= 20),
-        |langs AS (SELECT DISTINCT lang AS cand FROM documents),
-        |dist AS (
-        |  SELECT dp.doc_id, langs.cand,
-        |    CAST(sum(coalesce(abs(dp.rnk - lp.rnk), 20)) AS BIGINT)
-        |      AS dist
-        |  FROM dp CROSS JOIN langs
-        |  LEFT JOIN lp ON lp.pl = langs.cand AND lp.g = dp.g
-        |  GROUP BY 1, 2),
+        |$ctLangIdCte,
         |lidp AS (SELECT doc_id, cand AS predicted FROM (
         |  SELECT doc_id, cand, row_number() OVER (PARTITION BY doc_id
         |      ORDER BY dist ASC, cand ASC) AS rn

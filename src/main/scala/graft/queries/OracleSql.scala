@@ -1,8 +1,12 @@
 package graft.queries
 
-/** Shared DuckDB-oracle SQL fragments — the cross-engine numeric
-  * workarounds that more than one oracle needs, kept in ONE place so a
-  * scale-dependent divergence class gets fixed (and re-diagnosed) once.
+/** Shared DuckDB-oracle SQL fragments used by more than one query module,
+  * kept in ONE place: the cross-engine numeric workarounds (so a
+  * scale-dependent divergence class gets fixed, and re-diagnosed, once)
+  * and the CTE chains and expressions that oracles in different modules
+  * spell identically. A fragment that one module alone uses stays private
+  * to that module. Every fragment is plain DuckDB SQL, written
+  * independently of the Spark operators it checks.
   */
 object OracleSql {
 
@@ -18,4 +22,66 @@ object OracleSql {
     * ~7e15 around sf10): the cheap insurance beats re-diagnosing the
     * 1-ulp gate failure. */
   def decToDouble(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
+
+  /** The opening CTEs of the vector-search oracles (no WITH): embeddings
+    * `e(vec_id, emb)` as DOUBLE lists and `n(vec_id, emb, nrm)` with the
+    * sequential-fold L2 norm; `extra` appends columns to `n` (",\n" +
+    * column text). */
+  def embNormsCte(extra: String = ""): String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+       |n AS (SELECT vec_id, emb,
+       |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm$extra
+       |      FROM e)""".stripMargin
+
+  /** The centered co-moments dxx = n·Σxx − (Σx)², dyy = n·Σyy − (Σy)² and
+    * dxy = n·Σxy − Σx·Σy over exact sums n, sx, sy, sxx, syy, sxy, in
+    * Stats' double operation order (the q170 OLS and q294/q301 CUPED
+    * oracles). */
+  val centeredMoments: String =
+    """CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS dxx,
+      |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+      |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS dyy,
+      |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+      |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS dxy""".stripMargin
+
+  /** Contamination shingles (no WITH): each doc's distinct 12-token
+    * shingles `cs(doc_id, sh)` (docs of >= 13 tokens) and the eval set's
+    * `es(eval_id, sh)` = those of docs 0..9 (the q85/q135 oracles). */
+  val evalShinglesCte: String =
+    """cs AS (
+      |  SELECT doc_id,
+      |    unnest(list_distinct(
+      |      [array_to_string(toks[i : i + 12], ' ') for i in range(1, len(toks) - 11)])) AS sh
+      |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
+      |  WHERE len(toks) >= 13),
+      |es AS (SELECT doc_id AS eval_id, sh FROM cs WHERE doc_id < 10)""".stripMargin
+
+  /** Every click's as-of purchase by the same user, `cmp` being the
+    * ASOF inequality `c.ts <cmp> p.ts`: ">=" the latest purchase at or
+    * before the click (q43), "<=" the earliest at or after it (q97). */
+  def asofPurchaseSql(cmp: String): String =
+    s"""WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+       |p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
+       |SELECT c.event_id, c.user_id,
+       |  CAST(epoch(date_trunc('second', p.ts)) AS BIGINT) AS purchase_sec,
+       |  p.value AS purchase_value
+       |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts $cmp p.ts""".stripMargin
+
+  /** The rank-sum grid of the q216/q241 oracles (no WITH): per distinct
+    * n_chars value `v` of the documents passing `where` ("" or
+    * "WHERE ... "), the English count `ca`, the total `cnt` and the count
+    * `below` it, so mid-ranks are exact integers (2·below + cnt + 1). */
+  def enRankGridCte(where: String): String =
+    s"""grid AS (
+       |  SELECT n_chars AS v,
+       |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+       |    CAST(count(*) AS BIGINT) AS cnt
+       |  FROM documents ${where}GROUP BY 1),
+       |c AS (
+       |  SELECT v, ca, cnt,
+       |    CAST(coalesce(sum(cnt) OVER (ORDER BY v ASC
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+       |      AS below
+       |  FROM grid)""".stripMargin
 }

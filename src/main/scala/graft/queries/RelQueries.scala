@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Graft.table
-import graft.operators.Relational
+import graft.operators.Relational.dec
 
 /** Round-9 relational batch two: the remaining classic TPC-H optimizer
   * shapes the suite had not yet exercised, each re-grounded on the tables
@@ -39,8 +39,6 @@ import graft.operators.Relational
 object RelQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: org.apache.spark.sql.Column) = Relational.dec(c)
 
   /** q182's selectivity knob: a lineitem is a "small order" when its
     * quantity is below this fraction of its part's average. */

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Graft.table
-import graft.operators.Relational
+import graft.operators.Relational.dec
 
 /** Round-9 relational batch three: the last five classic TPC-H optimizer
   * shapes (Q4, Q9, Q12, Q16, Q20), re-grounded on this corpus's tables —
@@ -42,8 +42,6 @@ import graft.operators.Relational
 object RelQueries3 {
 
   type Q = (SparkSession, String) => DataFrame
-
-  private def dec(c: org.apache.spark.sql.Column) = Relational.dec(c)
 
   /** q188/q190 lateness thresholds, in days after the order date. */
   private val semiLateDays  = 60

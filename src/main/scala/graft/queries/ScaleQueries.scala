@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Graft.table
 import graft.operators.{CacheScope, Relational, Scale, Sketches, Temporal, TextDedup, TextRank}
+import OracleSql.embNormsCte
 
 /** Round-5 scale operators: sketch-based cardinality estimation, bloom-filter
   * join pruning, n-gram Jaccard dedup, deterministic stratified/weighted
@@ -948,6 +949,56 @@ object ScaleQueries {
       |      // (2 * CAST(allocation AS HUGEINT)) AS BIGINT) AS DOUBLE) / 1e6
       |    END AS repeat_efficiency""".stripMargin
 
+  /** The q377 rebuild over tokens `tk(doc_id, pos, tok)` and covered
+    * positions `cov(doc_id, pos)`: per-doc token and removed counts and
+    * the md5 of the uncovered tokens in order ('' when all are removed). */
+  private val coveredRebuildSql =
+    """SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+      |  CAST(sum(CASE WHEN cov.pos IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+      |    AS n_tokens_removed,
+      |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok END,
+      |    ' ' ORDER BY tk.pos), '')) AS clean_md5
+      |FROM tk LEFT JOIN cov ON cov.doc_id = tk.doc_id
+      |  AND cov.pos = tk.pos
+      |GROUP BY tk.doc_id""".stripMargin
+
+  /** The q83/q84 query terms (no WITH): the distinct >= 6-char tokens
+    * of docs 0..2. */
+  private val queryTermsCte =
+    """qt AS (
+      |  SELECT DISTINCT term FROM (
+      |    SELECT unnest(string_split(text, ' ')) AS term
+      |    FROM documents WHERE doc_id < 3)
+      |  WHERE length(term) >= 6)""".stripMargin
+
+  /** The q84 BM25 chain (k1 = 1.2, b = 0.75, no WITH) through per-(doc,
+    * query term) micro-unit scores (doc_id, mu) in the CTE named `mu`, in
+    * one fixed double operation order. */
+  private def bm25MuCte(mu: String): String =
+    s"""$queryTermsCte,
+       |toks AS (
+       |  SELECT doc_id, len(string_split(text, ' ')) AS dlen,
+       |    unnest(string_split(text, ' ')) AS term
+       |  FROM documents),
+       |tf AS (
+       |  SELECT doc_id, term, count(*) AS tf, min(dlen) AS dlen
+       |  FROM toks JOIN qt USING (term) GROUP BY 1, 2),
+       |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |st AS (
+       |  SELECT count(*) AS n_docs,
+       |    sum(len(string_split(text, ' '))) AS total_toks
+       |  FROM documents),
+       |$mu AS (
+       |  SELECT doc_id, CAST(round((
+       |    ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
+       |       (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1 AS DOUBLE)) *
+       |    (CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)) /
+       |    (CAST(tf AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
+       |      CAST(0.75 AS DOUBLE) * CAST(dlen AS DOUBLE) /
+       |      (CAST(total_toks AS DOUBLE) / CAST(n_docs AS DOUBLE))))
+       |    ) * 1e6) AS BIGINT) AS mu
+       |  FROM tf JOIN dfs USING (term), st)""".stripMargin
+
   val oracle: Map[String, String] = Map(
 
     // Mirrors Sketches.captureRecapture: same md5 capture draws, the
@@ -1004,14 +1055,7 @@ object ScaleQueries {
          |  FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
          |    FROM documents),
          |    LATERAL (SELECT unnest(range(1, len(ts) + 1)) AS i))
-         |SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN cov.pos IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-         |    AS n_tokens_removed,
-         |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok END,
-         |    ' ' ORDER BY tk.pos), '')) AS clean_md5
-         |FROM tk LEFT JOIN cov ON cov.doc_id = tk.doc_id
-         |  AND cov.pos = tk.pos
-         |GROUP BY tk.doc_id""".stripMargin,
+         |$coveredRebuildSql""".stripMargin,
 
     // Mirrors TextDedup.snapshotSubstrDedup: even-id docs' distinct
     // window fingerprints are the store; odd-id (new-snapshot) windows
@@ -1019,7 +1063,7 @@ object ScaleQueries {
     // smaller odd doc (anchor-keep); covered positions DISTINCT, q377's
     // rebuild form.
     "q396_snapshot_dedup" ->
-      """WITH ntk AS MATERIALIZED (
+      s"""WITH ntk AS MATERIALIZED (
         |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
         |  FROM documents WHERE doc_id % 2 = 1),
         |otk AS (
@@ -1044,14 +1088,7 @@ object ScaleQueries {
         |tk AS (
         |  SELECT doc_id, CAST(i AS BIGINT) AS pos, ts[i] AS tok
         |  FROM ntk, LATERAL (SELECT unnest(range(1, len(ts) + 1)) AS i))
-        |SELECT tk.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-        |  CAST(sum(CASE WHEN cov.pos IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-        |    AS n_tokens_removed,
-        |  md5(coalesce(string_agg(CASE WHEN cov.pos IS NULL THEN tok END,
-        |    ' ' ORDER BY tk.pos), '')) AS clean_md5
-        |FROM tk LEFT JOIN cov ON cov.doc_id = tk.doc_id
-        |  AND cov.pos = tk.pos
-        |GROUP BY tk.doc_id""".stripMargin,
+        |$coveredRebuildSql""".stripMargin,
 
     // Mirrors TextDedup.exactSubstringSweep: the q300 chain with the
     // window length l as a DATA column (one comprehension parameterized
@@ -1298,11 +1335,7 @@ object ScaleQueries {
     },
 
     "q83_tfidf_retrieval" ->
-      """WITH qt AS (
-        |  SELECT DISTINCT term FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term
-        |    FROM documents WHERE doc_id < 3)
-        |  WHERE length(term) >= 6),
+      s"""WITH $queryTermsCte,
         |toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |tf AS (
@@ -1321,33 +1354,7 @@ object ScaleQueries {
         |LIMIT 15""".stripMargin,
 
     "q84_bm25_retrieval" ->
-      """WITH qt AS (
-        |  SELECT DISTINCT term FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term
-        |    FROM documents WHERE doc_id < 3)
-        |  WHERE length(term) >= 6),
-        |toks AS (
-        |  SELECT doc_id, len(string_split(text, ' ')) AS dlen,
-        |    unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf, min(dlen) AS dlen
-        |  FROM toks JOIN qt USING (term) GROUP BY 1, 2),
-        |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (
-        |  SELECT count(*) AS n_docs,
-        |    sum(len(string_split(text, ' '))) AS total_toks
-        |  FROM documents),
-        |mu AS (
-        |  SELECT doc_id, CAST(round((
-        |    ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-        |       (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1 AS DOUBLE)) *
-        |    (CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)) /
-        |    (CAST(tf AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-        |      CAST(0.75 AS DOUBLE) * CAST(dlen AS DOUBLE) /
-        |      (CAST(total_toks AS DOUBLE) / CAST(n_docs AS DOUBLE))))
-        |    ) * 1e6) AS BIGINT) AS mu
-        |  FROM tf JOIN dfs USING (term), st),
+      s"""WITH ${bm25MuCte("mu")},
         |sc AS (SELECT doc_id, sum(mu) AS mu FROM mu GROUP BY 1)
         |SELECT doc_id, CAST(mu AS DOUBLE) / 1e6 AS score FROM sc
         |ORDER BY mu DESC, doc_id
@@ -1357,41 +1364,12 @@ object ScaleQueries {
     // cosine chain against vec 0 (top-50): reciprocals quantized to BIGINT
     // micro-units per list, summed (BIGINT-cast out of HUGEINT), ties on id.
     "q109_hybrid_rrf" ->
-      """WITH qt AS (
-        |  SELECT DISTINCT term FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term
-        |    FROM documents WHERE doc_id < 3)
-        |  WHERE length(term) >= 6),
-        |toks AS (
-        |  SELECT doc_id, len(string_split(text, ' ')) AS dlen,
-        |    unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf, min(dlen) AS dlen
-        |  FROM toks JOIN qt USING (term) GROUP BY 1, 2),
-        |dfs AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |st AS (
-        |  SELECT count(*) AS n_docs,
-        |    sum(len(string_split(text, ' '))) AS total_toks
-        |  FROM documents),
-        |bmu AS (
-        |  SELECT doc_id, CAST(round((
-        |    ln((CAST(n_docs AS DOUBLE) - CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) /
-        |       (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1 AS DOUBLE)) *
-        |    (CAST(tf AS DOUBLE) * CAST(2.2 AS DOUBLE)) /
-        |    (CAST(tf AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(0.25 AS DOUBLE) +
-        |      CAST(0.75 AS DOUBLE) * CAST(dlen AS DOUBLE) /
-        |      (CAST(total_toks AS DOUBLE) / CAST(n_docs AS DOUBLE))))
-        |    ) * 1e6) AS BIGINT) AS mu
-        |  FROM tf JOIN dfs USING (term), st),
+      s"""WITH ${bm25MuCte("bmu")},
         |bsc AS (SELECT doc_id, CAST(sum(mu) AS BIGINT) AS mu FROM bmu GROUP BY 1),
         |sp AS (SELECT doc_id,
         |         row_number() OVER (ORDER BY mu DESC, doc_id ASC) AS r
         |       FROM bsc ORDER BY mu DESC, doc_id ASC LIMIT 50),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm
-        |      FROM e),
+        |${embNormsCte()},
         |p AS (SELECT c.vec_id AS doc_id,
         |        list_reduce(list_transform(range(1, len(q.emb)+1), i -> q.emb[i]*c.emb[i]), (a,x) -> a+x)
         |          / (q.nrm * c.nrm) AS cos
@@ -1415,13 +1393,7 @@ object ScaleQueries {
         |LIMIT 15""".stripMargin,
 
     "q85_decontamination" ->
-      """WITH cs AS (
-        |  SELECT doc_id,
-        |    unnest(list_distinct(
-        |      [array_to_string(toks[i : i + 12], ' ') for i in range(1, len(toks) - 11)])) AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-        |  WHERE len(toks) >= 13),
-        |es AS (SELECT doc_id AS eval_id, sh FROM cs WHERE doc_id < 10)
+      s"""WITH ${OracleSql.evalShinglesCte}
         |SELECT cs.doc_id, es.eval_id, count(*) AS n_shared
         |FROM cs JOIN es USING (sh)
         |WHERE cs.doc_id <> es.eval_id
@@ -1559,12 +1531,9 @@ object ScaleQueries {
         |GROUP BY token, total
         |HAVING CAST(count(*) AS DOUBLE) >= CAST(0.01 AS DOUBLE) * CAST(total AS DOUBLE)""".stripMargin,
 
-    "q90_quantized_rerank" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb,
-        |        sqrt(list_reduce(list_transform(emb, x -> x*x), (a,x) -> a+x)) AS nrm,
-        |        list_reduce(list_transform(emb, x -> abs(x)), (a,x) -> greatest(a,x)) AS scale
-        |      FROM e),
+    "q90_quantized_rerank" -> {
+      val maxAbs = ",\n        list_reduce(list_transform(emb, x -> abs(x)), (a,x) -> greatest(a,x)) AS scale"
+      s"""WITH ${embNormsCte(maxAbs)},
         |qn AS (SELECT vec_id, emb, nrm, scale,
         |        list_transform(emb, x ->
         |          CAST(round(x * CAST(127 AS DOUBLE) / greatest(scale, 1e-30)) AS BIGINT)) AS qv
@@ -1589,7 +1558,8 @@ object ScaleQueries {
         |rr AS (SELECT query_id, neighbor_id, cos,
         |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rnk
         |      FROM r)
-        |SELECT query_id, rnk, neighbor_id, round(cos, 6) AS cos_sim FROM rr WHERE rnk <= 10""".stripMargin,
+        |SELECT query_id, rnk, neighbor_id, round(cos, 6) AS cos_sim FROM rr WHERE rnk <= 10""".stripMargin
+    },
 
     "q100_flagship" ->
       """SELECT c_mktsegment,
@@ -1627,12 +1597,7 @@ object ScaleQueries {
         |FROM fp GROUP BY doc_id""".stripMargin,
 
     "q97_asof_forward" ->
-      """WITH c AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id,
-        |  CAST(epoch(date_trunc('second', p.ts)) AS BIGINT) AS purchase_sec,
-        |  p.value AS purchase_value
-        |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts""".stripMargin,
+      OracleSql.asofPurchaseSql("<="),
 
     "q95_sliding_window" ->
       """WITH t AS (

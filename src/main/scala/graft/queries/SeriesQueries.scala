@@ -204,6 +204,39 @@ object SeriesQueries {
       Temporal.forecastBacktest(table(s, d, "orders"), "o_orderdate",
         "o_totalprice", fcCutoffDay)))
 
+  /** Per-(event_type, day) exact DECIMAL value sums `daily(event_type,
+    * day_idx, v)` (no WITH) — the input of the daily-series oracles. */
+  private val dailyValueCte =
+    """daily AS (
+      |  SELECT event_type,
+      |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
+      |      AS BIGINT) AS day_idx,
+      |    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS v
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** [[dailyValueCte]] plus each day's 1-based position `rn` within its
+    * event_type as `r` — the fold order of the recursive smoothers. */
+  private val dailyRankedCte = dailyValueCte + """,
+      |r AS (
+      |  SELECT event_type, day_idx, v,
+      |    row_number() OVER (PARTITION BY event_type
+      |      ORDER BY day_idx) AS rn
+      |  FROM daily)""".stripMargin
+
+  /** Each user's touchpoints (no WITH): events as `ev(u, ts, tie, t)` and
+    * `o` adding the purchase flag `isc` and the running purchase count
+    * `ccum` in (ts, event_id) order — the q315/q333 attribution input. */
+  private val touchpointsCte =
+    """ev AS (
+      |  SELECT user_id AS u, ts, event_id AS tie, event_type AS t
+      |  FROM events),
+      |o AS (SELECT *,
+      |    CASE WHEN t = 'purchase' THEN 1 ELSE 0 END AS isc,
+      |    sum(CASE WHEN t = 'purchase' THEN 1 ELSE 0 END)
+      |      OVER (PARTITION BY u ORDER BY ts, tie
+      |        ROWS UNBOUNDED PRECEDING) AS ccum
+      |  FROM ev)""".stripMargin
+
   /** The q285 oracle: transition-chain CTEs + `iters` unrolled integer
     * power-iteration rounds, mirroring Temporal.markovStationary µ for µ
     * (per-edge floor division, BIGINT mass — the q181 pageRankSql
@@ -258,17 +291,7 @@ object SeriesQueries {
       s"+ CAST($ng AS DOUBLE) * $prevS"
     val fc = s"($newL) + ($newB) + " +
       s"h.s[CAST((((r.day_idx + 1) % 7) + 7) % 7 AS INT) + 1]"
-    s"""WITH RECURSIVE daily AS (
-       |  SELECT event_type,
-       |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-       |      AS BIGINT) AS day_idx,
-       |    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS v
-       |  FROM events GROUP BY 1, 2),
-       |r AS (
-       |  SELECT event_type, day_idx, v,
-       |    row_number() OVER (PARTITION BY event_type
-       |      ORDER BY day_idx) AS rn
-       |  FROM daily),
+    s"""WITH RECURSIVE $dailyRankedCte,
        |h AS (
        |  SELECT event_type, day_idx, v, rn, v AS l,
        |    CAST(0.0 AS DOUBLE) AS b,
@@ -358,15 +381,7 @@ object SeriesQueries {
     // running >12 channels at warehouse conversion volume.
     "q333_shapley_attribution" -> {
       val f = graft.operators.Temporal.Factorials.mkString("[", ", ", "]")
-      s"""WITH ev AS (
-         |  SELECT user_id AS u, ts, event_id AS tie, event_type AS t
-         |  FROM events),
-         |o AS (SELECT *,
-         |    CASE WHEN t = 'purchase' THEN 1 ELSE 0 END AS isc,
-         |    sum(CASE WHEN t = 'purchase' THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY u ORDER BY ts, tie
-         |        ROWS UNBOUNDED PRECEDING) AS ccum
-         |  FROM ev),
+      s"""WITH $touchpointsCte,
          |cut AS MATERIALIZED (SELECT * FROM o
          |  WHERE ccum = 0 OR (ccum = 1 AND isc = 1)),
          |chan AS MATERIALIZED (
@@ -419,15 +434,7 @@ object SeriesQueries {
     // integer matvec absorption (per-edge div then order-free integer
     // sums — list order cannot matter).
     "q315_markov_attribution" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id AS u, ts, event_id AS tie, event_type AS t
-        |  FROM events),
-        |o AS (SELECT *,
-        |    CASE WHEN t = 'purchase' THEN 1 ELSE 0 END AS isc,
-        |    sum(CASE WHEN t = 'purchase' THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY u ORDER BY ts, tie
-        |        ROWS UNBOUNDED PRECEDING) AS ccum
-        |  FROM ev),
+      s"""WITH RECURSIVE $touchpointsCte,
         |cut AS (SELECT * FROM o
         |  WHERE ccum = 0 OR (ccum = 1 AND isc = 1)),
         |s2 AS (SELECT *,
@@ -685,17 +692,7 @@ object SeriesQueries {
     // Mirrors Temporal.holtLinear: the recursive CTE recomputes newL
     // inside the trend column exactly as the Spark fold writes it twice.
     "q270_holt_linear" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |      AS BIGINT) AS day_idx,
-        |    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT event_type, day_idx, v,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY day_idx) AS rn
-        |  FROM daily),
+      s"""WITH RECURSIVE $dailyRankedCte,
         |h AS (
         |  SELECT event_type, day_idx, v, rn, v AS l,
         |    CAST(0.0 AS DOUBLE) AS b
@@ -713,12 +710,7 @@ object SeriesQueries {
         |FROM h""".stripMargin,
 
     "q272_rolling_extremes" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |      AS BIGINT) AS day_idx,
-        |    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH $dailyValueCte,
         |w AS (
         |  SELECT event_type, day_idx, v,
         |    min(v) OVER f AS lo, max(v) OVER f AS hi,
@@ -731,17 +723,7 @@ object SeriesQueries {
         |FROM w WHERE n = 7""".stripMargin,
 
     "q259_ewma_daily" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-        |      AS BIGINT) AS day_idx,
-        |    CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS v
-        |  FROM events GROUP BY 1, 2),
-        |r AS (
-        |  SELECT event_type, day_idx, v,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY day_idx) AS rn
-        |  FROM daily),
+      s"""WITH RECURSIVE $dailyRankedCte,
         |ew AS (
         |  SELECT event_type, day_idx, v, rn, v AS ewma FROM r WHERE rn = 1
         |  UNION ALL

@@ -233,6 +233,39 @@ object StatQueries {
       Stats.acfByKey(daily, "event_type", "day_idx", "n_events", maxLag = 3)
     }))
 
+  /** The word-bigram graph of the q181/q289/q326 oracles (no WITH): edges
+    * `bi(src, dst, w)` between adjacent non-empty tokens of docs with at
+    * least 2 tokens; `mat` ("" or "MATERIALIZED ") hints `bi`. */
+  private def bigramGraphCte(mat: String): String =
+    s"""toks AS (
+       |  SELECT string_split(text, ' ') AS t FROM documents
+       |  WHERE len(string_split(text, ' ')) >= 2),
+       |pairs AS (
+       |  SELECT unnest([[t[i], t[i+1]] for i in range(1, len(t))]) AS p FROM toks),
+       |bi AS $mat(
+       |  SELECT p[1] AS src, p[2] AS dst, count(*) AS w FROM pairs
+       |  WHERE p[1] <> '' AND p[2] <> '' GROUP BY 1, 2)""".stripMargin
+
+  /** The exact DECIMAL moment sums sx, sy, sxy, sxx of lineitem's
+    * (quantity, extendedprice) — the q170/q288 regression inputs. */
+  private val qtyPriceSums =
+    """sum(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
+      |    sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sy,
+      |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
+      |        CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy,
+      |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
+      |        CAST(l_quantity AS DECIMAL(12,2))) AS sxx""".stripMargin
+
+  /** The q170 closed-form OLS slope over n, sx, sy, sxy, sxx (NULL when
+    * the x spread is 0), in Stats' operation order. */
+  private val olsSlope =
+    """CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN NULL
+      |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+      |          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+      |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+      |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END""".stripMargin
+
   /** The q181 oracle: bigram graph CTEs + eight unrolled integer PageRank
     * iterations (r1..r8), each `(15·S) // (100·n) + (85·in) // 100` with
     * BIGINT `//` — bit-identical to the Spark loop. */
@@ -250,14 +283,7 @@ object StatQueries {
          |    JOIN outw o ON o.src = e.src
          |    GROUP BY e.dst) c ON c.node = nd.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT string_split(text, ' ') AS t FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 2),
-       |pairs AS (
-       |  SELECT unnest([[t[i], t[i+1]] for i in range(1, len(t))]) AS p FROM toks),
-       |bi AS (
-       |  SELECT p[1] AS src, p[2] AS dst, count(*) AS w FROM pairs
-       |  WHERE p[1] <> '' AND p[2] <> '' GROUP BY 1, 2),
+    s"""WITH ${bigramGraphCte("")},
        |nodes AS (SELECT src AS node FROM bi UNION SELECT dst FROM bi),
        |outw AS (SELECT src, sum(w) AS out_w FROM bi GROUP BY src),
        |n AS (SELECT count(*) AS nn FROM nodes),
@@ -297,14 +323,7 @@ object StatQueries {
          |    // greatest((SELECT s FROM sa$k), 1) AS BIGINT) AS a
          |  FROM af$k)""".stripMargin
     }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT string_split(text, ' ') AS t FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 2),
-       |pairs AS (
-       |  SELECT unnest([[t[i], t[i+1]] for i in range(1, len(t))]) AS p FROM toks),
-       |bi AS MATERIALIZED (
-       |  SELECT p[1] AS src, p[2] AS dst, count(*) AS w FROM pairs
-       |  WHERE p[1] <> '' AND p[2] <> '' GROUP BY 1, 2),
+    s"""WITH ${bigramGraphCte("MATERIALIZED ")},
        |nodes AS MATERIALIZED (
        |  SELECT src AS node FROM bi UNION SELECT dst FROM bi),
        |n AS (SELECT count(*) AS nn FROM nodes),
@@ -338,15 +357,7 @@ object StatQueries {
          |    JOIN outw o ON o.src = e.src
          |    GROUP BY e.dst) c ON c.node = m.node)""".stripMargin
     }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT string_split(text, ' ') AS t FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 2),
-       |pairs AS (
-       |  SELECT unnest([[t[i], t[i+1]] for i in range(1, len(t))]) AS p
-       |  FROM toks),
-       |bi AS (
-       |  SELECT p[1] AS src, p[2] AS dst, count(*) AS w FROM pairs
-       |  WHERE p[1] <> '' AND p[2] <> '' GROUP BY 1, 2),
+    s"""WITH ${bigramGraphCte("")},
        |nodes AS (SELECT src AS node FROM bi UNION SELECT dst FROM bi),
        |outw AS (SELECT src, sum(w) AS out_w FROM bi GROUP BY src),
        |seeds0 AS (
@@ -434,41 +445,21 @@ object StatQueries {
     // Mirrors Stats.simpsonAudit: the q170 closed form per stratum and
     // pooled, sign comparison on the identical final doubles.
     "q288_simpson_audit" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT CAST(month(l_shipdate) AS INTEGER) AS ship_month,
         |    count(*) AS n,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
-        |    sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_quantity AS DECIMAL(12,2))) AS sxx
+        |    $qtyPriceSums
         |  FROM lineitem GROUP BY 1),
         |per AS (
         |  SELECT ship_month, n,
-        |    CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN NULL
-        |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope
+        |    $olsSlope AS slope
         |  FROM a),
         |ap AS (
         |  SELECT count(*) AS n,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
-        |    sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_quantity AS DECIMAL(12,2))) AS sxx
+        |    $qtyPriceSums
         |  FROM lineitem),
         |pool AS (
-        |  SELECT CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0.0 THEN NULL
-        |      ELSE (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END
+        |  SELECT $olsSlope
         |      AS pooled_slope
         |  FROM ap)
         |SELECT per.ship_month, per.n, per.slope, pool.pooled_slope,
@@ -478,25 +469,15 @@ object StatQueries {
         |FROM per CROSS JOIN pool""".stripMargin,
 
     "q170_price_qty_ols" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT l_returnflag, count(*) AS n,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2))) AS sx,
-        |    sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS sy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_extendedprice AS DECIMAL(12,2))) AS sxy,
-        |    sum(CAST(l_quantity AS DECIMAL(12,2)) *
-        |        CAST(l_quantity AS DECIMAL(12,2))) AS sxx,
+        |    $qtyPriceSums,
         |    sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
         |        CAST(l_extendedprice AS DECIMAL(12,2))) AS syy
         |  FROM lineitem GROUP BY 1),
         |m AS (
         |  SELECT l_returnflag, n,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS dxx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS dyy,
-        |    CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS dxy,
+        |    ${OracleSql.centeredMoments},
         |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
         |  FROM a)
         |SELECT l_returnflag, n,
@@ -665,8 +646,20 @@ object StatQueries {
          |  capped
          |FROM fin""".stripMargin,
 
-    "q177_rater_kappa" ->
-      """WITH c AS (
+    "q177_rater_kappa" -> {
+      // Cohen's kappa from the 2x2 rater table: observed agreement po and
+      // chance agreement pe (both raters' marginals), one fixed order.
+      val po = """(CAST(n_yy AS DOUBLE) + CAST(n_nn AS DOUBLE))
+        |    / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)""".stripMargin
+      val pe = """(CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
+        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
+        |    * ((CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
+        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
+        |  + (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
+        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
+        |    * (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
+        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))""".stripMargin
+      s"""WITH c AS (
         |  SELECT
         |    count(*) FILTER (n_chars >= 300
         |      AND len(string_split(text, ' ')) >= 52) AS n_yy,
@@ -678,45 +671,16 @@ object StatQueries {
         |      AND len(string_split(text, ' ')) < 52) AS n_nn
         |  FROM documents)
         |SELECT n_yy, n_yn, n_ny, n_nn,
-        |  (CAST(n_yy AS DOUBLE) + CAST(n_nn AS DOUBLE))
-        |    / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE) AS po,
-        |  (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
-        |    * ((CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |  + (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |    * (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)) AS pe,
-        |  CASE WHEN (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
-        |    * ((CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |  + (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |    * (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)) = 1.0
+        |  $po AS po,
+        |  $pe AS pe,
+        |  CASE WHEN $pe = 1.0
         |  THEN NULL
-        |  ELSE ((CAST(n_yy AS DOUBLE) + CAST(n_nn AS DOUBLE))
-        |      / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
-        |    - ((CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |        / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
-        |      * ((CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |        / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |      + (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |          / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |        * (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |          / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))))
-        |    / (1.0 - ((CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |        / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE)
-        |      * ((CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |        / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |      + (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_yn AS DOUBLE))
-        |          / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))
-        |        * (1.0 - (CAST(n_yy AS DOUBLE) + CAST(n_ny AS DOUBLE))
-        |          / CAST(n_yy + n_yn + n_ny + n_nn AS DOUBLE))))
+        |  ELSE ($po
+        |    - ($pe))
+        |    / (1.0 - ($pe))
         |  END AS kappa
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin
+    },
 
     "q178_jackknife_source" ->
       """WITH per AS (

@@ -28,6 +28,30 @@ class CoreQueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
+  test("no oracle SQL block is pasted twice") {
+    // The DuckDB oracles are the suite's reference implementation: SQL two
+    // oracles share is written once (a module-private fragment, or OracleSql
+    // across modules). Scan every `|`-margin line of the query modules,
+    // trimmed with whitespace runs collapsed; no 8-line window may occur at
+    // two places.
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    assert(java.nio.file.Files.isDirectory(dir), s"$dir not found from the working directory")
+    val files = dir.toFile.listFiles().filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    val windows = files.toSeq.flatMap { f =>
+      val margin = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
+        .zipWithIndex.collect {
+          case (l, i) if l.trim.startsWith("|") => (l.trim.replaceAll("\\s+", " "), i + 1)
+        }
+      margin.sliding(8).filter(_.length == 8)
+        .map(w => w.map(_._1).mkString("\n") -> s"${f.getName}:${w.head._2}")
+    }
+    assert(windows.size > 1000, s"only ${windows.size} windows scanned in $dir")
+    val pasted = windows.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    if (pasted.nonEmpty)
+      fail(s"${pasted.size} 8-line oracle blocks occur twice:\n${pasted.mkString("\n")}")
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

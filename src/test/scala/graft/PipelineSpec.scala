@@ -91,6 +91,12 @@ class PipelineSpec extends AnyFunSuite {
     assert(ah == (0 until 24).map(h => 60.0 + h).sum / 24)
     assert(stageCount(cfg) == 0, "stage rows deleted after merge (K7)")
 
+    // bronze lands where silver reads it: the key putBronze writes lies
+    // under SilverJob.dayPath (the replay below rewrites the same bytes)
+    val bronzeFile = ObjectStore.putBronze(spark.sparkContext.hadoopConfiguration,
+      cfg.storage.bronze, date, fetch(cfg))
+    assert(bronzeFile.startsWith(SilverJob.dayPath(cfg.storage.bronze, date)), bronzeFile)
+
     // replay the same day: converges, no duplicates (O6)
     Pipeline.runDay(spark, cfg, date, fetch)
     assert(finalRows(cfg) == rows1)
