@@ -41,48 +41,13 @@ object BottomKSampleAgg {
         org.apache.spark.sql.Encoders.scalaDouble))
 }
 
-class BottomKSampleAgg(k: Int)
-  extends Aggregator[(Long, Double), Array[(Long, Double)], Array[(Long, Double)]] {
+class BottomKSampleAgg(k: Int) extends SortedKAgg[(Long, Double)](k) {
   require(k >= 1, "bottom-k sample needs k >= 1")
 
-  private def norm(v: Double): Double = if (v == 0.0) 0.0 else v
-
-  /** true if (ha, va) orders strictly before (hb, vb): smaller hash
-    * first, then Spark SQL double ASC order on the payload. */
-  private def before(ha: Long, va: Double, hb: Long, vb: Double): Boolean =
-    ha < hb || (ha == hb && java.lang.Double.compare(norm(va), norm(vb)) < 0)
-
-  override def zero: Array[(Long, Double)] = Array.empty
-
-  override def reduce(buf: Array[(Long, Double)],
-                      v: (Long, Double)): Array[(Long, Double)] = {
-    if (buf.length == k && !before(v._1, v._2, buf(k - 1)._1, buf(k - 1)._2)) buf
-    else {
-      var ins = buf.length
-      while (ins > 0 && before(v._1, v._2, buf(ins - 1)._1, buf(ins - 1)._2)) ins -= 1
-      val n = math.min(buf.length + 1, k)
-      val out = new Array[(Long, Double)](n)
-      System.arraycopy(buf, 0, out, 0, ins)
-      out(ins) = v
-      System.arraycopy(buf, ins, out, ins + 1, n - ins - 1)
-      out
-    }
-  }
-
-  override def merge(a: Array[(Long, Double)],
-                     b: Array[(Long, Double)]): Array[(Long, Double)] = {
-    val out = new Array[(Long, Double)](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var n = 0
-    while (n < out.length) {
-      val takeA = j >= b.length ||
-        (i < a.length && before(a(i)._1, a(i)._2, b(j)._1, b(j)._2))
-      if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
-      n += 1
-    }
-    out
-  }
-
-  override def finish(buf: Array[(Long, Double)]): Array[(Long, Double)] = buf
+  /** true if a orders strictly before b: smaller hash first, then Spark
+    * SQL double ASC order on the payload. */
+  override protected def before(a: (Long, Double), b: (Long, Double)): Boolean =
+    a._1 < b._1 || (a._1 == b._1 && java.lang.Double.compare(norm(a._2), norm(b._2)) < 0)
 
   override def bufferEncoder: Encoder[Array[(Long, Double)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Long, Double)]]()

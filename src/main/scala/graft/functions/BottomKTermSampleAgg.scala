@@ -36,46 +36,13 @@ object BottomKTermSampleAgg {
         org.apache.spark.sql.Encoders.STRING))
 }
 
-class BottomKTermSampleAgg(k: Int)
-  extends Aggregator[(Long, String), Array[(Long, String)], Array[(Long, String)]] {
+class BottomKTermSampleAgg(k: Int) extends SortedKAgg[(Long, String)](k) {
   require(k >= 1, "bottom-k sample needs k >= 1")
 
-  /** true if (ha, ta) orders strictly before (hb, tb): smaller hash
-    * first, then lexicographic (UTF-8 binary) order on the term. */
-  private def before(ha: Long, ta: String, hb: Long, tb: String): Boolean =
-    ha < hb || (ha == hb && ta.compareTo(tb) < 0)
-
-  override def zero: Array[(Long, String)] = Array.empty
-
-  override def reduce(buf: Array[(Long, String)],
-                      v: (Long, String)): Array[(Long, String)] = {
-    if (buf.length == k && !before(v._1, v._2, buf(k - 1)._1, buf(k - 1)._2)) buf
-    else {
-      var ins = buf.length
-      while (ins > 0 && before(v._1, v._2, buf(ins - 1)._1, buf(ins - 1)._2)) ins -= 1
-      val n = math.min(buf.length + 1, k)
-      val out = new Array[(Long, String)](n)
-      System.arraycopy(buf, 0, out, 0, ins)
-      out(ins) = v
-      System.arraycopy(buf, ins, out, ins + 1, n - ins - 1)
-      out
-    }
-  }
-
-  override def merge(a: Array[(Long, String)],
-                     b: Array[(Long, String)]): Array[(Long, String)] = {
-    val out = new Array[(Long, String)](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var n = 0
-    while (n < out.length) {
-      val takeA = j >= b.length ||
-        (i < a.length && before(a(i)._1, a(i)._2, b(j)._1, b(j)._2))
-      if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
-      n += 1
-    }
-    out
-  }
-
-  override def finish(buf: Array[(Long, String)]): Array[(Long, String)] = buf
+  /** true if a orders strictly before b: smaller hash first, then
+    * lexicographic (UTF-8 binary) order on the term. */
+  override protected def before(a: (Long, String), b: (Long, String)): Boolean =
+    a._1 < b._1 || (a._1 == b._1 && a._2.compareTo(b._2) < 0)
 
   override def bufferEncoder: Encoder[Array[(Long, String)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Long, String)]]()

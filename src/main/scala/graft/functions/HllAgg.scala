@@ -27,17 +27,11 @@ import org.apache.spark.sql.expressions.Aggregator
 class HllAgg(p: Int) extends Aggregator[Long, Array[Byte], Long] {
   require(p >= 7 && p <= 16, "precision must be in [7, 16]")
   private val m = 1 << p
-  private val suffixBits = 60 - p
 
   override def zero: Array[Byte] = new Array[Byte](m)
 
   override def reduce(buf: Array[Byte], v: Long): Array[Byte] = {
-    val idx = (v >>> suffixBits).toInt & (m - 1)
-    val rest = v & ((1L << suffixBits) - 1)
-    val rank =
-      if (rest == 0L) (suffixBits + 1).toByte
-      else (suffixBits - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1).toByte
-    if (rank > buf(idx)) buf(idx) = rank
+    HllAgg.update(buf, 0, p, v)
     buf
   }
 
@@ -47,11 +41,32 @@ class HllAgg(p: Int) extends Aggregator[Long, Array[Byte], Long] {
     a
   }
 
-  override def finish(buf: Array[Byte]): Long = {
+  override def finish(buf: Array[Byte]): Long = HllAgg.estimate(buf, 0, p)
+
+  override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
+}
+
+/** The register update and estimate [[HllAgg]] and [[HllBankAgg]] share;
+  * a sketch is the `2^p` registers of a buffer starting at `base`. */
+private[functions] object HllAgg {
+  /** Fold the 60-bit hash `v` into its register. */
+  def update(buf: Array[Byte], base: Int, p: Int, v: Long): Unit = {
+    val suffixBits = 60 - p
+    val idx = base + ((v >>> suffixBits).toInt & ((1 << p) - 1))
+    val rest = v & ((1L << suffixBits) - 1)
+    val rank =
+      if (rest == 0L) (suffixBits + 1).toByte
+      else (suffixBits - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1).toByte
+    if (rank > buf(idx)) buf(idx) = rank
+  }
+
+  def estimate(buf: Array[Byte], base: Int, p: Int): Long = {
+    val m = 1 << p
     var s = BigInt(0)
     var zeros = 0
-    var i = 0
-    while (i < m) {
+    var i = base
+    while (i < base + m) {
       s += BigInt(1) << (62 - buf(i))
       if (buf(i) == 0) zeros += 1
       i += 1
@@ -69,7 +84,4 @@ class HllAgg(p: Int) extends Aggregator[Long, Array[Byte], Long] {
       else raw
     math.floor(est).toLong
   }
-
-  override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  override def outputEncoder: Encoder[Long] = Encoders.scalaLong
 }

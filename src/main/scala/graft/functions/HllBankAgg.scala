@@ -25,22 +25,12 @@ class HllBankAgg(p: Int, k: Int)
   require(p >= 7 && p <= 16, "precision must be in [7, 16]")
   require(k >= 1, "need at least one bank")
   private val m = 1 << p
-  private val suffixBits = 60 - p
 
   override def zero: Array[Byte] = new Array[Byte](k * m)
 
   override def reduce(buf: Array[Byte], vs: Seq[Long]): Array[Byte] = {
     var j = 0
-    while (j < k) {
-      val v = vs(j)
-      val idx = j * m + ((v >>> suffixBits).toInt & (m - 1))
-      val rest = v & ((1L << suffixBits) - 1)
-      val rank =
-        if (rest == 0L) (suffixBits + 1).toByte
-        else (suffixBits - (64 - java.lang.Long.numberOfLeadingZeros(rest)) + 1).toByte
-      if (rank > buf(idx)) buf(idx) = rank
-      j += 1
-    }
+    while (j < k) { HllAgg.update(buf, j * m, p, vs(j)); j += 1 }
     buf
   }
 
@@ -50,29 +40,8 @@ class HllBankAgg(p: Int, k: Int)
     a
   }
 
-  override def finish(buf: Array[Byte]): Seq[Long] = {
-    val out = new Array[Long](k)
-    var j = 0
-    while (j < k) {
-      var s = BigInt(0)
-      var zeros = 0
-      var i = 0
-      while (i < m) {
-        s += BigInt(1) << (62 - buf(j * m + i))
-        if (buf(j * m + i) == 0) zeros += 1
-        i += 1
-      }
-      val alpha = 0.7213 / (1.0 + 1.079 / m)
-      val raw = alpha * m.toDouble * m.toDouble * (1L << 62).toDouble / s.toDouble
-      val est =
-        if (raw <= 2.5 * m && zeros > 0)
-          m.toDouble * math.log(m.toDouble / zeros.toDouble)
-        else raw
-      out(j) = math.floor(est).toLong
-      j += 1
-    }
-    out.toSeq
-  }
+  override def finish(buf: Array[Byte]): Seq[Long] =
+    Array.tabulate(k)(j => HllAgg.estimate(buf, j * m, p)).toSeq
 
   override def bufferEncoder: Encoder[Array[Byte]] =
     org.apache.spark.sql.Encoders.BINARY

@@ -116,12 +116,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
 object SimHash64 {
   /** FNV-1a 64-bit — trivial, stable, and callable from generated code. */
-  def fnv1a(bytes: Array[Byte]): Long = {
-    var h = -3750763034362895579L // 0xcbf29ce484222325
-    var i = 0
-    while (i < bytes.length) { h = (h ^ (bytes(i) & 0xffL)) * 1099511628211L; i += 1 }
-    h
-  }
+  def fnv1a(bytes: Array[Byte]): Long = WindowSet.fnv(bytes, 0, bytes.length)
 }
 
 /** EXACT count of distinct character `n`-grams of a string, in one pass with
@@ -161,49 +156,10 @@ object NgramDistinctCount {
     * generated code can call it — the body is plain JVM loops either way,
     * so an inline codegen expansion would buy nothing. */
   def count(s: UTF8String, n: Int): Long = {
-    val bytes = s.getBytes
-    // char-start byte offsets (UTF-8 sequence starts), one pass
-    val nChars = s.numChars()
-    if (nChars < n) return 0L
-    val off = new Array[Int](nChars + 1)
-    var i = 0; var ci = 0
-    while (i < bytes.length) {
-      if ((bytes(i) & 0xc0) != 0x80) { off(ci) = i; ci += 1 }
-      i += 1
-    }
-    off(nChars) = bytes.length
-    val windows = nChars - n + 1
-    // open addressing, power-of-two capacity >= 2x windows
-    var cap = 4
-    while (cap < windows * 2) cap <<= 1
-    val slots = new Array[Int](cap) // 0 = empty, else (window index + 1)
-    val mask = cap - 1
-    var distinct = 0L
-    var w = 0
-    while (w < windows) {
-      val b0 = off(w); val b1 = off(w + n)
-      // FNV-1a over the window's bytes
-      var h = -3750763034362895579L
-      var j = b0
-      while (j < b1) { h = (h ^ (bytes(j) & 0xffL)) * 1099511628211L; j += 1 }
-      var slot = (h.toInt ^ (h >>> 32).toInt) & mask
-      var done = false
-      while (!done) {
-        val e = slots(slot)
-        if (e == 0) { slots(slot) = w + 1; distinct += 1; done = true }
-        else {
-          val ew = e - 1
-          val e0 = off(ew); val e1 = off(ew + n)
-          var same = (e1 - e0) == (b1 - b0)
-          var k = 0
-          while (same && k < b1 - b0) { same = bytes(e0 + k) == bytes(b0 + k); k += 1 }
-          if (same) done = true // already seen
-          else slot = (slot + 1) & mask
-        }
-      }
-      w += 1
-    }
-    distinct
+    val off = WindowSet.charStarts(s)
+    if (off.length <= n) return 0L // fewer than n chars
+    val slots = new Array[Int](WindowSet.capacity(off.length - n))
+    WindowSet.probe(s.getBytes, off, n, 0, slots, null, null).toLong
   }
 }
 
@@ -248,47 +204,12 @@ object NgramDistinctHashes {
     * Same byte-offset walk + open-addressed dedup as
     * [[NgramDistinctCount.count]]; static so generated code can call it. */
   def hashes(s: UTF8String, n: Int): ArrayData = {
-    val bytes = s.getBytes
-    val nChars = s.numChars()
-    if (nChars < n) return new GenericArrayData(Array.empty[Long])
-    val off = new Array[Int](nChars + 1)
-    var i = 0; var ci = 0
-    while (i < bytes.length) {
-      if ((bytes(i) & 0xc0) != 0x80) { off(ci) = i; ci += 1 }
-      i += 1
-    }
-    off(nChars) = bytes.length
-    val windows = nChars - n + 1
-    var cap = 4
-    while (cap < windows * 2) cap <<= 1
-    val slots = new Array[Int](cap) // 0 = empty, else (window index + 1)
-    val mask = cap - 1
+    val off = WindowSet.charStarts(s)
+    if (off.length <= n) return new GenericArrayData(Array.empty[Long])
+    val windows = off.length - n
     val out = new Array[Long](windows)
-    var distinct = 0
-    var w = 0
-    while (w < windows) {
-      val b0 = off(w); val b1 = off(w + n)
-      var h = -3750763034362895579L // FNV-1a over the window's bytes
-      var j = b0
-      while (j < b1) { h = (h ^ (bytes(j) & 0xffL)) * 1099511628211L; j += 1 }
-      var slot = (h.toInt ^ (h >>> 32).toInt) & mask
-      var done = false
-      while (!done) {
-        val e = slots(slot)
-        if (e == 0) {
-          slots(slot) = w + 1; out(distinct) = h; distinct += 1; done = true
-        } else {
-          val ew = e - 1
-          val e0 = off(ew); val e1 = off(ew + n)
-          var same = (e1 - e0) == (b1 - b0)
-          var k = 0
-          while (same && k < b1 - b0) { same = bytes(e0 + k) == bytes(b0 + k); k += 1 }
-          if (same) done = true // already seen
-          else slot = (slot + 1) & mask
-        }
-      }
-      w += 1
-    }
+    val distinct = WindowSet.probe(
+      s.getBytes, off, n, 0, new Array[Int](WindowSet.capacity(windows)), null, out)
     new GenericArrayData(java.util.Arrays.copyOf(out, distinct))
   }
 }

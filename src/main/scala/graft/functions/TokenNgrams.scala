@@ -50,62 +50,30 @@ object TokenNgrams {
     starts
   }
 
-  /** Single pass over the k-token windows (token boundaries precomputed by
-    * the caller): returns the distinct count, and fills `outHashes` (FNV-1a
-    * of each distinct window, first-seen order) and/or `outTop` (max
-    * multiplicity of any window) when non-null. */
+  /** Distinct k-token windows of `bytes` ([[WindowSet.probe]]), filling
+    * `outHashes` when non-null; 0 when the row has fewer than k tokens. */
   private def scan(bytes: Array[Byte], starts: Array[Int], k: Int,
-                   outHashes: Array[Long], outTop: Array[Long]): Int = {
-    val nTokens = starts.length - 1
-    val windows = nTokens - k + 1
+                   outHashes: Array[Long]): Int = {
+    val windows = starts.length - k
     if (windows <= 0) return 0
-    var cap = 4
-    while (cap < windows * 2) cap <<= 1
-    val slots = new Array[Int](cap) // 0 = empty, else (window index + 1)
-    val counts = if (outTop != null) new Array[Int](cap) else null
-    val mask = cap - 1
-    var distinct = 0
-    var top = 0L
-    var w = 0
-    while (w < windows) {
-      val b0 = starts(w); val b1 = starts(w + k) - 1
-      var h = -3750763034362895579L // FNV-1a over the window's bytes
-      var j = b0
-      while (j < b1) { h = (h ^ (bytes(j) & 0xffL)) * 1099511628211L; j += 1 }
-      var slot = (h.toInt ^ (h >>> 32).toInt) & mask
-      var done = false
-      while (!done) {
-        val e = slots(slot)
-        if (e == 0) {
-          slots(slot) = w + 1
-          if (outHashes != null) outHashes(distinct) = h
-          if (counts != null) { counts(slot) = 1; if (top < 1) top = 1 }
-          distinct += 1
-          done = true
-        } else {
-          val ew = e - 1
-          val e0 = starts(ew); val e1 = starts(ew + k) - 1
-          var same = (e1 - e0) == (b1 - b0)
-          var m = 0
-          while (same && m < b1 - b0) { same = bytes(e0 + m) == bytes(b0 + m); m += 1 }
-          if (same) {
-            if (counts != null) {
-              counts(slot) += 1
-              if (counts(slot) > top) top = counts(slot)
-            }
-            done = true
-          } else slot = (slot + 1) & mask
-        }
-      }
-      w += 1
-    }
-    if (outTop != null) outTop(0) = top
-    distinct
+    WindowSet.probe(bytes, starts, k, 1,
+      new Array[Int](WindowSet.capacity(windows)), null, outHashes)
+  }
+
+  /** Per-slot multiplicities of the k-token windows, with the slot table
+    * they index; null when the row has fewer than k tokens. */
+  private def windowCounts(bytes: Array[Byte], starts: Array[Int], k: Int): Array[Array[Int]] = {
+    val windows = starts.length - k
+    if (windows <= 0) return null
+    val slots = new Array[Int](WindowSet.capacity(windows))
+    val counts = new Array[Int](slots.length)
+    WindowSet.probe(bytes, starts, k, 1, slots, counts, null)
+    Array(slots, counts)
   }
 
   def count(s: UTF8String, k: Int): Long = {
     val bytes = s.getBytes
-    scan(bytes, tokenStarts(bytes), k, null, null).toLong
+    scan(bytes, tokenStarts(bytes), k, null).toLong
   }
 
   /** Per-row stats over the NON-OVERLAPPING `tileN`-token tiles (the
@@ -124,10 +92,8 @@ object TokenNgrams {
     val starts = tokenStarts(bytes)
     val nTokens = starts.length - 1
     val nTiles = math.max((nTokens + tileN - 1) / tileN, 1)
-    var cap = 4
-    while (cap < nTiles * 2) cap <<= 1
-    val slots = new Array[Int](cap) // 0 = empty, else (tile index + 1)
-    val mask = cap - 1
+    val slots = new Array[Int](WindowSet.capacity(nTiles)) // 0 = empty, else (tile index + 1)
+    val mask = slots.length - 1
     var nt = 0L
     var ch = 0L
     var dch = 0L
@@ -180,40 +146,10 @@ object TokenNgrams {
   def topNgramMass(s: UTF8String, k: Int): Long = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
-    val nTokens = starts.length - 1
-    val windows = nTokens - k + 1
-    if (windows <= 0) return 0L
-    var cap = 4
-    while (cap < windows * 2) cap <<= 1
-    val slots = new Array[Int](cap) // 0 = empty, else (window index + 1)
-    val counts = new Array[Int](cap)
-    val mask = cap - 1
-    var w = 0
-    while (w < windows) {
-      val b0 = starts(w); val b1 = starts(w + k) - 1
-      var h = -3750763034362895579L
-      var j = b0
-      while (j < b1) { h = (h ^ (bytes(j) & 0xffL)) * 1099511628211L; j += 1 }
-      var slot = (h.toInt ^ (h >>> 32).toInt) & mask
-      var done = false
-      while (!done) {
-        val e = slots(slot)
-        if (e == 0) {
-          slots(slot) = w + 1
-          counts(slot) = 1
-          done = true
-        } else {
-          val ew = e - 1
-          val e0 = starts(ew); val e1 = starts(ew + k) - 1
-          var same = (e1 - e0) == (b1 - b0)
-          var m = 0
-          while (same && m < b1 - b0) { same = bytes(e0 + m) == bytes(b0 + m); m += 1 }
-          if (same) { counts(slot) += 1; done = true }
-          else slot = (slot + 1) & mask
-        }
-      }
-      w += 1
-    }
+    val table = windowCounts(bytes, starts, k)
+    if (table == null) return 0L
+    val slots = table(0); val counts = table(1)
+    val cap = slots.length
     // winner: max count, then byte-order-smallest span among the maxima
     var best = -1   // winning window index
     var bestCnt = 0
@@ -251,17 +187,20 @@ object TokenNgrams {
   def hashes(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
-    val windows = math.max(starts.length - 1 - k + 1, 0)
-    val out = new Array[Long](windows)
-    val n = scan(bytes, starts, k, out, null)
+    val out = new Array[Long](math.max(starts.length - k, 0))
+    val n = scan(bytes, starts, k, out)
     new GenericArrayData(java.util.Arrays.copyOf(out, n))
   }
 
   def topCount(s: UTF8String, k: Int): Long = {
     val bytes = s.getBytes
-    val top = new Array[Long](1)
-    scan(bytes, tokenStarts(bytes), k, null, top)
-    top(0)
+    val table = windowCounts(bytes, tokenStarts(bytes), k)
+    if (table == null) return 0L
+    val counts = table(1)
+    var top = 0
+    var i = 0
+    while (i < counts.length) { if (counts(i) > top) top = counts(i); i += 1 }
+    top.toLong
   }
 
   /** ALL k-token windows (positional, NOT deduplicated) as FNV-1a hashes
@@ -274,17 +213,9 @@ object TokenNgrams {
   def windowHashes(s: UTF8String, k: Int): ArrayData = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
-    val windows = math.max(starts.length - 1 - k + 1, 0)
-    val out = new Array[Long](windows)
+    val out = new Array[Long](math.max(starts.length - k, 0))
     var w = 0
-    while (w < windows) {
-      val b0 = starts(w); val b1 = starts(w + k) - 1
-      var h = -3750763034362895579L // FNV-1a offset basis
-      var j = b0
-      while (j < b1) { h = (h ^ (bytes(j) & 0xffL)) * 1099511628211L; j += 1 }
-      out(w) = h
-      w += 1
-    }
+    while (w < out.length) { out(w) = WindowSet.fnv(bytes, starts(w), starts(w + k) - 1); w += 1 }
     new GenericArrayData(out)
   }
 

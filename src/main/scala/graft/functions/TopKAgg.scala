@@ -29,47 +29,15 @@ object TopKAgg {
         org.apache.spark.sql.Encoders.scalaDouble, org.apache.spark.sql.Encoders.scalaLong))
 }
 
-class TopKAgg(k: Int) extends Aggregator[(Double, Long), Array[(Double, Long)], Array[(Double, Long)]] {
+class TopKAgg(k: Int) extends SortedKAgg[(Double, Long)](k) {
   require(k >= 1, "top-k needs k >= 1")
 
-  private def norm(s: Double): Double = if (s == 0.0) 0.0 else s
-
-  /** true if (sa, ia) orders strictly before (sb, ib): higher score first,
-    * then smaller id. */
-  private def before(sa: Double, ia: Long, sb: Double, ib: Long): Boolean = {
-    val c = java.lang.Double.compare(norm(sb), norm(sa)) // DESC on score
-    c < 0 || (c == 0 && ia < ib)
+  /** true if a orders strictly before b: higher score first, then
+    * smaller id. */
+  override protected def before(a: (Double, Long), b: (Double, Long)): Boolean = {
+    val c = java.lang.Double.compare(norm(b._1), norm(a._1)) // DESC on score
+    c < 0 || (c == 0 && a._2 < b._2)
   }
-
-  override def zero: Array[(Double, Long)] = Array.empty
-
-  override def reduce(buf: Array[(Double, Long)], v: (Double, Long)): Array[(Double, Long)] = {
-    if (buf.length == k && !before(v._1, v._2, buf(k - 1)._1, buf(k - 1)._2)) buf
-    else {
-      var ins = buf.length
-      while (ins > 0 && before(v._1, v._2, buf(ins - 1)._1, buf(ins - 1)._2)) ins -= 1
-      val n = math.min(buf.length + 1, k)
-      val out = new Array[(Double, Long)](n)
-      System.arraycopy(buf, 0, out, 0, ins)
-      out(ins) = v
-      System.arraycopy(buf, ins, out, ins + 1, n - ins - 1)
-      out
-    }
-  }
-
-  override def merge(a: Array[(Double, Long)], b: Array[(Double, Long)]): Array[(Double, Long)] = {
-    val out = new Array[(Double, Long)](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var n = 0
-    while (n < out.length) {
-      val takeA = j >= b.length ||
-        (i < a.length && before(a(i)._1, a(i)._2, b(j)._1, b(j)._2))
-      if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
-      n += 1
-    }
-    out
-  }
-
-  override def finish(buf: Array[(Double, Long)]): Array[(Double, Long)] = buf
 
   override def bufferEncoder: Encoder[Array[(Double, Long)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Double, Long)]]()

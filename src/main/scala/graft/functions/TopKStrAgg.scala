@@ -23,50 +23,15 @@ object TopKStrAgg {
         org.apache.spark.sql.Encoders.scalaDouble, org.apache.spark.sql.Encoders.STRING))
 }
 
-class TopKStrAgg(k: Int)
-    extends Aggregator[(Double, String), Array[(Double, String)], Array[(Double, String)]] {
+class TopKStrAgg(k: Int) extends SortedKAgg[(Double, String)](k) {
   require(k >= 1, "top-k needs k >= 1")
 
-  private def norm(s: Double): Double = if (s == 0.0) 0.0 else s
-
-  /** true if (sa, ka) orders strictly before (sb, kb): higher score first,
-    * then lexicographically smaller key. */
-  private def before(sa: Double, ka: String, sb: Double, kb: String): Boolean = {
-    val c = java.lang.Double.compare(norm(sb), norm(sa)) // DESC on score
-    c < 0 || (c == 0 && ka.compareTo(kb) < 0)
+  /** true if a orders strictly before b: higher score first, then
+    * lexicographically smaller key. */
+  override protected def before(a: (Double, String), b: (Double, String)): Boolean = {
+    val c = java.lang.Double.compare(norm(b._1), norm(a._1)) // DESC on score
+    c < 0 || (c == 0 && a._2.compareTo(b._2) < 0)
   }
-
-  override def zero: Array[(Double, String)] = Array.empty
-
-  override def reduce(buf: Array[(Double, String)],
-                      v: (Double, String)): Array[(Double, String)] = {
-    if (buf.length == k && !before(v._1, v._2, buf(k - 1)._1, buf(k - 1)._2)) buf
-    else {
-      var ins = buf.length
-      while (ins > 0 && before(v._1, v._2, buf(ins - 1)._1, buf(ins - 1)._2)) ins -= 1
-      val n = math.min(buf.length + 1, k)
-      val out = new Array[(Double, String)](n)
-      System.arraycopy(buf, 0, out, 0, ins)
-      out(ins) = v
-      System.arraycopy(buf, ins, out, ins + 1, n - ins - 1)
-      out
-    }
-  }
-
-  override def merge(a: Array[(Double, String)],
-                     b: Array[(Double, String)]): Array[(Double, String)] = {
-    val out = new Array[(Double, String)](math.min(a.length + b.length, k))
-    var i = 0; var j = 0; var n = 0
-    while (n < out.length) {
-      val takeA = j >= b.length ||
-        (i < a.length && before(a(i)._1, a(i)._2, b(j)._1, b(j)._2))
-      if (takeA) { out(n) = a(i); i += 1 } else { out(n) = b(j); j += 1 }
-      n += 1
-    }
-    out
-  }
-
-  override def finish(buf: Array[(Double, String)]): Array[(Double, String)] = buf
 
   override def bufferEncoder: Encoder[Array[(Double, String)]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[(Double, String)]]()

@@ -97,17 +97,7 @@ object Relational {
     * shape. Output: (column_name, n_rows, n_null, n_distinct, min_num,
     * max_num). */
   def columnProfile(df: DataFrame, approx: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
     val fields = df.schema.fields
-    def numView(f: org.apache.spark.sql.types.StructField): Column =
-      f.dataType match {
-        case _: NumericType => col(f.name).cast("double")
-        // NTZ first to plain TIMESTAMP (identical wall time under the
-        // pinned UTC session), then to epoch seconds
-        case _: TimestampType | _: TimestampNTZType =>
-          col(f.name).cast("timestamp").cast("long").cast("double")
-        case _ => lit(null).cast("double")
-      }
     def distinctOf(f: org.apache.spark.sql.types.StructField): Column =
       if (approx) approx_count_distinct(col(f.name), 0.016)
       else countDistinct(col(f.name))
@@ -128,6 +118,20 @@ object Relational {
         .as(Seq("column_name", "n_null", "n_distinct", "min_num", "max_num")))
       .select(col("column_name"), col("n_rows"), col("n_null"),
         col("n_distinct"), col("min_num"), col("max_num"))
+  }
+
+  /** A profiled column's min/max view: numerics as double, timestamps as
+    * epoch seconds, other types null. */
+  private def numView(f: org.apache.spark.sql.types.StructField): Column = {
+    import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
+    f.dataType match {
+      case _: NumericType => col(f.name).cast("double")
+      // NTZ first to plain TIMESTAMP (identical wall time under the
+      // pinned UTC session), then to epoch seconds
+      case _: TimestampType | _: TimestampNTZType =>
+        col(f.name).cast("timestamp").cast("long").cast("double")
+      case _ => lit(null).cast("double")
+    }
   }
 
   /** The Expand-free scale form of [[columnProfile]] — the documented
@@ -152,13 +156,6 @@ object Relational {
   def columnProfileSketch(df: DataFrame, p: Int = 12): DataFrame = {
     import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType, StringType, TimestampNTZType, TimestampType}
     val fields = df.schema.fields
-    def numView(f: org.apache.spark.sql.types.StructField): Column =
-      f.dataType match {
-        case _: NumericType => col(f.name).cast("double")
-        case _: TimestampType | _: TimestampNTZType =>
-          col(f.name).cast("timestamp").cast("long").cast("double")
-        case _ => lit(null).cast("double")
-      }
     def canon(f: org.apache.spark.sql.types.StructField): Column =
       f.dataType match {
         case DoubleType | FloatType =>

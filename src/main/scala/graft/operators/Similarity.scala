@@ -30,6 +30,49 @@ object Similarity {
 
   private val dot = dot_d(col("q_emb"), col("c_emb"))
 
+  /** The k best (query_id, neighbor_id) pairs per query by cosine, ties to
+    * the smaller neighbor, as (query_id, rnk, neighbor_id, cos_sim). */
+  private def rankedCosine(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
+    pairs.where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("rnk", row_number().over(w).cast("bigint"))
+      .where(col("rnk") <= k)
+      .select(col("query_id"), col("rnk"), col("neighbor_id"),
+        round(col("cos"), 6).as("cos_sim"))
+  }
+
+  /** The window-free form of [[rankedCosine]] over pairs already without
+    * self-pairs: one bounded [[graft.functions.TopKAgg]] per query. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .groupBy(col("query_id"))
+      .agg(graft.functions.TopKAgg.columnAgg(k)(col("cos"), col("neighbor_id").cast("long")).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")))
+      .select(col("query_id"), (col("pos") + 1).cast("bigint").as("rnk"),
+        col("col._2").as("neighbor_id"), round(col("col._1"), 6).as("cos_sim"))
+
+  /** The `n` highest-`score` neighbor_ids per query_id: a re-rank pool. */
+  private def candidatePool(scored: DataFrame, score: Column, n: Int): DataFrame =
+    scored.groupBy(col("query_id"))
+      .agg(graft.functions.TopKAgg.columnAgg(n)(score, col("neighbor_id").cast("long")).as("tk"))
+      .select(col("query_id"), explode(col("tk")).as("t"))
+      .select(col("query_id"), col("t._2").as("neighbor_id"))
+
+  /** The product-quantization re-rank: the `nCandidates` smallest summed
+    * ADC distances (`adc_mu`) per query, re-scored by exact cosine over
+    * `n`, the [[withNorm]] frame. */
+  private def adcRerank(adc: DataFrame, n: DataFrame, idCol: String,
+                        queryPred: Column, k: Int, nCandidates: Int): DataFrame = {
+    // smaller ADC distance = better: negate for the max-first aggregate
+    val cands = candidatePool(adc, (-col("adc_mu")).cast("double"), nCandidates)
+    val q = n.where(queryPred).select(col(idCol).as("query_id"),
+      col("emb").as("q_emb"), col("nrm").as("q_nrm"))
+    val c = n.select(col(idCol).as("neighbor_id"),
+      col("emb").as("c_emb"), col("nrm").as("c_nrm"))
+    cosineTopK(cands.join(broadcast(q), "query_id").join(c, "neighbor_id"), k)
+  }
+
   /** Exact top-k cosine neighbors for each query vector (queries = rows of
     * `emb` matching `queryPred`). Output: query_id, rnk, neighbor_id, cos_sim
     * (rounded to 6 dp). Query side is broadcast: |Q| must be small/bounded. */
@@ -39,14 +82,7 @@ object Similarity {
     val q = n.where(queryPred)
       .select(col(idCol).as("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
     val c = n.select(col(idCol).as("neighbor_id"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    broadcast(q).crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos_sim"))
+    rankedCosine(broadcast(q).crossJoin(c), k)
   }
 
   /** Deterministic sign-LSH bucket id over the first `nBits` dimensions —
@@ -302,23 +338,12 @@ object Similarity {
       "aggregate(zip_with(q_qv, c_qv, (x, y) -> x * y), CAST(0 AS BIGINT), (a, x) -> a + x)")
     val approx = qdot.cast("double") * col("q_scale") * col("c_scale") /
       lit(16129.0) / (col("q_nrm") * col("c_nrm"))
-    def topkOf(kk: Int) = graft.functions.TopKAgg.columnAgg(kk)
-    val cands = broadcast(q.drop("q_emb")).crossJoin(c)
+    val cands = candidatePool(broadcast(q.drop("q_emb")).crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx", approx)
-      .groupBy(col("query_id"))
-      .agg(topkOf(nCandidates)(col("approx"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t._2").as("neighbor_id"))
-    cands
+      .withColumn("approx", approx), col("approx"), nCandidates)
+    cosineTopK(cands
       .join(broadcast(q.select(col("query_id"), col("q_emb"), col("q_nrm"))), "query_id")
-      .join(c.select(col("neighbor_id"), col("c_emb"), col("c_nrm")), "neighbor_id")
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .groupBy(col("query_id"))
-      .agg(topkOf(k)(col("cos"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).cast("bigint").as("rnk"),
-        col("col._2").as("neighbor_id"), round(col("col._1"), 6).as("cos_sim"))
+      .join(c.select(col("neighbor_id"), col("c_emb"), col("c_nrm")), "neighbor_id"), k)
   }
 
   /** Bucketed approximate top-k: deterministic sign-LSH on the first `nBits`
@@ -333,14 +358,7 @@ object Similarity {
         col("emb").as("q_emb"), col("nrm").as("q_nrm"))
     val c = n.select(col("bucket"), col(idCol).as("neighbor_id"),
       col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    q.join(c, "bucket")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rnk", row_number().over(w).cast("bigint"))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("rnk"), col("neighbor_id"),
-        round(col("cos"), 6).as("cos_sim"))
+    rankedCosine(q.join(c, "bucket"), k)
   }
 
   /** Label-centroid confusion matrix — the embedding-quality report run
@@ -788,15 +806,7 @@ object Similarity {
       col("emb").as("q_emb"), col("nrm").as("q_nrm"), col("__lbl").as("q_lbl"))
     val c = n.select(col(idCol).as("neighbor_id"),
       col("emb").as("c_emb"), col("nrm").as("c_nrm"), col("__lbl").as("c_lbl"))
-    val topk = graft.functions.TopKAgg.columnAgg(k)
-    broadcast(q).crossJoin(c)
-      .where(col("q_lbl") =!= col("c_lbl"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .groupBy(col("query_id"))
-      .agg(topk(col("cos"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).cast("bigint").as("rnk"),
-        col("col._2").as("neighbor_id"), round(col("col._1"), 6).as("cos_sim"))
+    cosineTopK(broadcast(q).crossJoin(c).where(col("q_lbl") =!= col("c_lbl")), k)
       .join(emb.select(col(idCol).as("neighbor_id"),
         col(labelCol).cast("long").as("neighbor_label")), "neighbor_id")
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
@@ -946,34 +956,16 @@ object Similarity {
       .withColumn("d2", sd2)
       .select(col("query_id"), col("lcid"), col("sp"), col("cid"),
         expr("CAST(round(d2 * 1e6) AS BIGINT)").as("dmu"))
-    def topkOf(kk: Int) = graft.functions.TopKAgg.columnAgg(kk)
     // the IVF restriction: candidates are ONLY vectors whose list was
     // probed — the join is keyed on (list, subspace, code)
-    val cands = codes.join(broadcast(dq), Seq("lcid", "sp", "cid"))
+    val adc = codes.join(broadcast(dq), Seq("lcid", "sp", "cid"))
       .where(col("query_id") =!= col("neighbor_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("dmu")).as("adc_mu"), count(lit(1)).as("__m"))
       // a candidate scores only if all m subspace lookups landed (always
       // true by construction; the guard documents the invariant)
       .where(col("__m") === m)
-      .groupBy(col("query_id"))
-      .agg(topkOf(nCandidates)((-col("adc_mu")).cast("double"),
-        col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t._2").as("neighbor_id"))
-    val q = n.where(queryPred).select(col(idCol).as("query_id"),
-      col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-    val c = n.select(col(idCol).as("neighbor_id"),
-      col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    cands
-      .join(broadcast(q), "query_id")
-      .join(c, "neighbor_id")
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .groupBy(col("query_id"))
-      .agg(topkOf(k)(col("cos"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).cast("bigint").as("rnk"),
-        col("col._2").as("neighbor_id"), round(col("col._1"), 6).as("cos_sim"))
+    adcRerank(adc, n, idCol, queryPred, k, nCandidates)
   }
 
   def pqKnn(emb: DataFrame, idCol: String, vecCol: String,
@@ -1010,30 +1002,11 @@ object Similarity {
     val dq = scored.where(queryPred)
       .select(col(idCol).as("query_id"), col("sp"), col("cid"),
         expr("CAST(round(d2 * 1e6) AS BIGINT)").as("dmu"))
-    def topkOf(kk: Int) = graft.functions.TopKAgg.columnAgg(kk)
-    val cands = codes.join(broadcast(dq), Seq("sp", "cid"))
+    val adc = codes.join(broadcast(dq), Seq("sp", "cid"))
       .where(col("query_id") =!= col("neighbor_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("dmu")).as("adc_mu"))
-      // smaller ADC distance = better: negate for the max-first aggregate
-      .groupBy(col("query_id"))
-      .agg(topkOf(nCandidates)((-col("adc_mu")).cast("double"),
-        col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("t"))
-      .select(col("query_id"), col("t._2").as("neighbor_id"))
-    val q = n.where(queryPred).select(col(idCol).as("query_id"),
-      col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-    val c = n.select(col(idCol).as("neighbor_id"),
-      col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-    cands
-      .join(broadcast(q), "query_id")
-      .join(c, "neighbor_id")
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
-      .groupBy(col("query_id"))
-      .agg(topkOf(k)(col("cos"), col("neighbor_id").cast("long")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), (col("pos") + 1).cast("bigint").as("rnk"),
-        col("col._2").as("neighbor_id"), round(col("col._1"), 6).as("cos_sim"))
+    adcRerank(adc, n, idCol, queryPred, k, nCandidates)
   }
 
   /** Matryoshka-style dimension-truncation recall: for each query, the

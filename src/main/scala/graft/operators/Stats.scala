@@ -26,6 +26,53 @@ object Stats {
 
   private def d(c: Column): Column = c.cast("double")
 
+  private val rateA = d(col("k_a")) / d(col("n_a"))
+  private val rateB = d(col("k_b")) / d(col("n_b"))
+
+  /** The pooled two-proportion z over the count columns n_a, k_a, n_b,
+    * k_b (the q246 operation order); null when the pooled rate is 0 or 1. */
+  private val pooledZ: Column = {
+    val pp = (d(col("k_a")) + d(col("k_b"))) / (d(col("n_a")) + d(col("n_b")))
+    when(pp === 0.0 || pp === 1.0, lit(null).cast("double"))
+      .otherwise((rateA - rateB) /
+        sqrt(pp * (lit(1.0) - pp) *
+          (lit(1.0) / d(col("n_a")) + lit(1.0) / d(col("n_b")))))
+  }
+
+  /** Per-(user, day_idx) conversion flag `__conv` (1 when any of the
+    * user's events that day is a `success`), the user as `__u`. */
+  private def userDayConversions(events: DataFrame, userCol: String, tsCol: String,
+                                 success: Column): DataFrame =
+    events.groupBy(col(userCol).as("__u"), Temporal.dayIdx(col(tsCol)).as("day_idx"))
+      .agg(max(when(success, 1L).otherwise(0L)).as("__conv"))
+
+  /** The exact DECIMAL one-pass moments CUPED reads: n and the sums of
+    * x, y, xy, xx, yy over the pre (x) and post (y) columns. */
+  private def cupedMoments(preCol: String, postCol: String): Seq[Column] = {
+    val x = dec(col(preCol))
+    val y = dec(col(postCol))
+    Seq(count(lit(1)).as("n"),
+      sum(x).as("__sx"), sum(y).as("__sy"), sum(x * y).as("__sxy"),
+      sum(x * x).as("__sxx"), sum(y * y).as("__syy"))
+  }
+
+  /** CUPED's closed forms over [[cupedMoments]]: (n, theta, var_post,
+    * var_cuped, var_reduction). */
+  private val cupedCols: Seq[Column] = {
+    val n = d(col("n"))
+    val dxx = n * d(col("__sxx")) - d(col("__sx")) * d(col("__sx"))
+    val dyy = n * d(col("__syy")) - d(col("__sy")) * d(col("__sy"))
+    val dxy = n * d(col("__sxy")) - d(col("__sx")) * d(col("__sy"))
+    Seq(col("n"),
+      when(dxx === 0.0, lit(null).cast("double"))
+        .otherwise(dxy / dxx).as("theta"),
+      (dyy / (n * n)).as("var_post"),
+      when(dxx === 0.0, dyy / (n * n))
+        .otherwise((dyy - (dxy / dxx) * dxy) / (n * n)).as("var_cuped"),
+      when(dxx === 0.0 || dyy === 0.0, lit(0.0))
+        .otherwise((dxy / dxx) * dxy / dyy).as("var_reduction"))
+  }
+
   /** Welch's unequal-variance two-sample t-test between `groupA` and
     * `groupB` of `groupCol`, over `valueCol` (2dp money-like doubles).
     * Output: one row — n/mean/var per side, the t statistic, and the
@@ -199,11 +246,7 @@ object Stats {
     * (day_idx, n_a, k_a, n_b, k_b, z, boundary, crossed). */
   def sequentialMonitor(events: DataFrame, userCol: String, tsCol: String,
                         success: Column, zCrit: Double): DataFrame = {
-    val daily = events
-      .groupBy(col(userCol).as("__u"),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(max(when(success, 1L).otherwise(0L)).as("__conv"))
+    val daily = userDayConversions(events, userCol, tsCol, success)
       .select(col("day_idx"), pmod(col("__u"), lit(2)).as("__arm"),
         col("__conv"))
     val perDay = daily.groupBy(col("day_idx")).agg(
@@ -221,18 +264,11 @@ object Stats {
       .withColumn("__t", row_number().over(Window.orderBy(col("day_idx")))
         .cast("bigint"))
     val tMax = cum.agg(max(col("__t")).as("__tm"))
-    val pa = d(col("k_a")) / d(col("n_a"))
-    val pb = d(col("k_b")) / d(col("n_b"))
-    val pp = (d(col("k_a")) + d(col("k_b"))) / (d(col("n_a")) + d(col("n_b")))
-    val z = when(pp === 0.0 || pp === 1.0, lit(null).cast("double"))
-      .otherwise((pa - pb) /
-        sqrt(pp * (lit(1.0) - pp) *
-          (lit(1.0) / d(col("n_a")) + lit(1.0) / d(col("n_b")))))
     val boundary = lit(zCrit) * sqrt(d(col("__tm")) / d(col("__t")))
     cum.crossJoin(broadcast(tMax))
       .select(col("day_idx"), col("n_a"), col("k_a"), col("n_b"),
-        col("k_b"), z.as("z"), boundary.as("boundary"),
-        when(z.isNull, lit(false)).otherwise(abs(z) > boundary)
+        col("k_b"), pooledZ.as("z"), boundary.as("boundary"),
+        when(pooledZ.isNull, lit(false)).otherwise(abs(pooledZ) > boundary)
           .as("crossed"))
   }
 
@@ -250,23 +286,8 @@ object Stats {
     * (zero variance) yields null θ and var_cuped = var_post. Output:
     * (n, theta, var_post, var_cuped, var_reduction). */
   def cuped(perUser: DataFrame, preCol: String, postCol: String): DataFrame = {
-    val x = dec(col(preCol))
-    val y = dec(col(postCol))
-    val agg = perUser.agg(count(lit(1)).as("n"),
-      sum(x).as("__sx"), sum(y).as("__sy"), sum(x * y).as("__sxy"),
-      sum(x * x).as("__sxx"), sum(y * y).as("__syy"))
-    val n = d(col("n"))
-    val dxx = n * d(col("__sxx")) - d(col("__sx")) * d(col("__sx"))
-    val dyy = n * d(col("__syy")) - d(col("__sy")) * d(col("__sy"))
-    val dxy = n * d(col("__sxy")) - d(col("__sx")) * d(col("__sy"))
-    agg.select(col("n"),
-      when(dxx === 0.0, lit(null).cast("double"))
-        .otherwise(dxy / dxx).as("theta"),
-      (dyy / (n * n)).as("var_post"),
-      when(dxx === 0.0, dyy / (n * n))
-        .otherwise((dyy - (dxy / dxx) * dxy) / (n * n)).as("var_cuped"),
-      when(dxx === 0.0 || dyy === 0.0, lit(0.0))
-        .otherwise((dxy / dxx) * dxy / dyy).as("var_reduction"))
+    val m = cupedMoments(preCol, postCol)
+    perUser.agg(m.head, m.tail: _*).select(cupedCols: _*)
   }
 
   /** Stratified CUPED: the q294 audit per stratum — θ_s fitted WITHIN
@@ -280,24 +301,9 @@ object Stats {
     * var_post, var_cuped, var_reduction). */
   def cupedStratified(perUser: DataFrame, strataCol: String,
                       preCol: String, postCol: String): DataFrame = {
-    val x = dec(col(preCol))
-    val y = dec(col(postCol))
-    val agg = perUser.groupBy(col(strataCol))
-      .agg(count(lit(1)).as("n"),
-        sum(x).as("__sx"), sum(y).as("__sy"), sum(x * y).as("__sxy"),
-        sum(x * x).as("__sxx"), sum(y * y).as("__syy"))
-    val n = d(col("n"))
-    val dxx = n * d(col("__sxx")) - d(col("__sx")) * d(col("__sx"))
-    val dyy = n * d(col("__syy")) - d(col("__sy")) * d(col("__sy"))
-    val dxy = n * d(col("__sxy")) - d(col("__sx")) * d(col("__sy"))
-    agg.select(col(strataCol), col("n"),
-      when(dxx === 0.0, lit(null).cast("double"))
-        .otherwise(dxy / dxx).as("theta"),
-      (dyy / (n * n)).as("var_post"),
-      when(dxx === 0.0, dyy / (n * n))
-        .otherwise((dyy - (dxy / dxx) * dxy) / (n * n)).as("var_cuped"),
-      when(dxx === 0.0 || dyy === 0.0, lit(0.0))
-        .otherwise((dxy / dxx) * dxy / dyy).as("var_reduction"))
+    val m = cupedMoments(preCol, postCol)
+    perUser.groupBy(col(strataCol)).agg(m.head, m.tail: _*)
+      .select(col(strataCol) +: cupedCols: _*)
   }
 
   /** Sample-ratio-mismatch check (the FIRST sanity gate of any A/B
@@ -405,11 +411,7 @@ object Stats {
     val c2 = math.log((1.0 - p1) / (1.0 - p0))
     val upper = math.log((1.0 - beta) / alpha)
     val lower = math.log(beta / (1.0 - alpha))
-    val perDay = events
-      .groupBy(col(userCol).as("__u"),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(max(when(success, 1L).otherwise(0L)).as("__conv"))
+    val perDay = userDayConversions(events, userCol, tsCol, success)
       .groupBy(col("day_idx"))
       .agg(count(lit(1)).as("__dn"), sum(col("__conv")).as("__dk"))
     val w = Window.orderBy(col("day_idx"))
@@ -454,16 +456,9 @@ object Stats {
       count(when(col("__arm") === 0 && col("__s"), 1)).as("k_a"),
       count(when(col("__arm") === 1, 1)).as("n_b"),
       count(when(col("__arm") === 1 && col("__s"), 1)).as("k_b"))
-    val pa = d(col("k_a")) / d(col("n_a"))
-    val pb = d(col("k_b")) / d(col("n_b"))
-    val pp = (d(col("k_a")) + d(col("k_b"))) / (d(col("n_a")) + d(col("n_b")))
-    val z = when(pp === 0.0 || pp === 1.0, lit(null).cast("double"))
-      .otherwise((pa - pb) /
-        sqrt(pp * (lit(1.0) - pp) *
-          (lit(1.0) / d(col("n_a")) + lit(1.0) / d(col("n_b")))))
     agg.select(col("split"), col("n_a"), col("k_a"), col("n_b"), col("k_b"),
-      z.as("z"),
-      when(z.isNull, lit(false)).otherwise(abs(z) > lit(zCrit))
+      pooledZ.as("z"),
+      when(pooledZ.isNull, lit(false)).otherwise(abs(pooledZ) > lit(zCrit))
         .as("false_positive"))
   }
 
@@ -708,17 +703,8 @@ object Stats {
   def weightedQuantile(df: DataFrame, groupCol: String, valueCol: String,
                        weightCol: String, num: Long, den: Long): DataFrame = {
     require(num > 0 && num < den, "need 0 < num/den < 1")
-    val w = Window.partitionBy(groupCol).orderBy(col(valueCol).asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = df.groupBy(col(groupCol))
-      .agg(sum(col(weightCol).cast("bigint")).as("__tot"))
-    df.select(col(groupCol), col(valueCol),
-        col(weightCol).cast("bigint").as("__w"))
-      .withColumn("__cum", sum(col("__w")).over(w))
-      .join(tot, Seq(groupCol))
-      .where(col("__cum") * den >= col("__tot") * num)
-      .groupBy(col(groupCol))
-      .agg(min(col(valueCol)).as("w_quantile"))
+    weightedCrossing(df, groupCol, valueCol, weightCol,
+      col("__cum") * den >= col("__tot") * num, "w_quantile")
   }
 
   /** Exact weighted median per group: the smallest value whose cumulative
@@ -728,7 +714,17 @@ object Stats {
     * answer (the threshold crossing lands inside the tied block, whose
     * value is shared), so no id tie-break is needed. */
   def weightedMedian(df: DataFrame, groupCol: String, valueCol: String,
-                     weightCol: String): DataFrame = {
+                     weightCol: String): DataFrame =
+    weightedCrossing(df, groupCol, valueCol, weightCol,
+      col("__cum") * 2 >= col("__tot"), "w_median")
+
+  /** Per group, the smallest value at which `reached` holds over its
+    * cumulative weight `__cum` (ascending value) and the group total
+    * `__tot` — the shared body of [[weightedQuantile]] and
+    * [[weightedMedian]], its value column named `out`. */
+  private def weightedCrossing(df: DataFrame, groupCol: String, valueCol: String,
+                               weightCol: String, reached: Column,
+                               out: String): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy(col(valueCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = df.groupBy(col(groupCol))
@@ -737,9 +733,9 @@ object Stats {
         col(weightCol).cast("bigint").as("__w"))
       .withColumn("__cum", sum(col("__w")).over(w))
       .join(tot, Seq(groupCol))
-      .where(col("__cum") * 2 >= col("__tot"))
+      .where(reached)
       .groupBy(col(groupCol))
-      .agg(min(col(valueCol)).as("w_median"))
+      .agg(min(col(valueCol)).as(out))
   }
 
   /** Benford first-digit screen over a positive money-like (2dp) column:
@@ -885,16 +881,8 @@ object Stats {
       count(when(g === groupA && success, 1)).as("k_a"),
       count(when(g === groupB, 1)).as("n_b"),
       count(when(g === groupB && success, 1)).as("k_b"))
-    val pa = d(col("k_a")) / d(col("n_a"))
-    val pb = d(col("k_b")) / d(col("n_b"))
-    val pp = (d(col("k_a")) + d(col("k_b"))) / (d(col("n_a")) + d(col("n_b")))
     agg.select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
-      pa.as("rate_a"), pb.as("rate_b"),
-      when(pp === 0.0 || pp === 1.0, lit(null).cast("double"))
-        .otherwise((pa - pb) /
-          sqrt(pp * (lit(1.0) - pp) *
-            (lit(1.0) / d(col("n_a")) + lit(1.0) / d(col("n_b")))))
-        .as("z"))
+      rateA.as("rate_a"), rateB.as("rate_b"), pooledZ.as("z"))
   }
 
   /** Pareto coverage of a money-like measure: the smallest top slice of

@@ -23,6 +23,21 @@ object Temporal {
   private[operators] def dayIdx(c: Column): Column =
     datediff(c.cast("date"), lit("1970-01-01").cast("date")).cast("bigint")
 
+  /** Per-(key, day_idx) exact decimal sum of `valueCol`, cast to double
+    * once as `v`: the calendar-bounded daily series the smoothing folds
+    * and detectors read. */
+  private def dailySums(events: DataFrame, keyCol: String, tsCol: String,
+                        valueCol: String): DataFrame =
+    events.groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
+      .agg(sum(col(valueCol).cast(DecimalType(12, 2))).cast("double").as("v"))
+
+  /** Each key's daily series as one day-sorted array `__arr` of (day, v),
+    * the input of the in-row `aggregate` folds. */
+  private def daySeries(daily: DataFrame, keyCol: String): DataFrame =
+    daily.groupBy(col(keyCol))
+      .agg(sort_array(collect_list(struct(col("day_idx").as("day"),
+        col("v").as("v")))).as("__arr"))
+
   /** As-of join: for every left row, the LATEST right row with
     * `right.ts <= left.ts` in the same key group (ties at equal ts match,
     * i.e. `>=` semantics — DuckDB's `ASOF JOIN ... ON l.ts >= r.ts`).
@@ -516,8 +531,7 @@ object Temporal {
     * r_score, f_score, m_score, segment). */
   def rfmSegments(events: DataFrame, userCol: String, tsCol: String,
                   monetary: Column): DataFrame = {
-    val day = datediff(col(tsCol).cast("date"),
-      lit("1970-01-01").cast("date")).cast("bigint")
+    val day = dayIdx(col(tsCol))
     val per = events.groupBy(col(userCol))
       .agg(max(day).as("__last"), count(lit(1)).as("frequency"),
         (sum(monetary.cast(DecimalType(12, 2))) * lit(100)).cast("bigint")
@@ -660,9 +674,7 @@ object Temporal {
                k: Int = 7): DataFrame = {
     require(k >= 2, "window k must be >= 2")
     val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
+      .groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
       .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(col(keyCol)).orderBy(col("day_idx"))
     val terms = (0 until k).map { j =>
@@ -905,19 +917,10 @@ object Temporal {
     * IEEE operation order, identical bits. */
   def ewmaDaily(events: DataFrame, keyCol: String, tsCol: String,
                 valueCol: String, alpha: Double): DataFrame = {
-    val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(sum(col(valueCol)
-          .cast(DecimalType(12, 2)))
-        .cast("double").as("v"))
+    val daily = dailySums(events, keyCol, tsCol, valueCol)
     val a = alpha
     val b = 1.0 - alpha
-    daily
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(col("day_idx").as("day"),
-        col("v").as("v")))).as("__arr"))
+    daySeries(daily, keyCol)
       .select(col(keyCol), explode(expr(
         s"""aggregate(
            |  __arr,
@@ -945,22 +948,13 @@ object Temporal {
     * state per key), same bit-identical-order oracle contract. */
   def holtLinear(events: DataFrame, keyCol: String, tsCol: String,
                  valueCol: String, alpha: Double, beta: Double): DataFrame = {
-    val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(sum(col(valueCol)
-          .cast(DecimalType(12, 2)))
-        .cast("double").as("v"))
+    val daily = dailySums(events, keyCol, tsCol, valueCol)
     val (a, b) = (alpha, beta)
     val (na, nb) = (1.0 - alpha, 1.0 - beta)
     // newL appears twice (in 'l' and inside 'b') — written out identically
     // both times, exactly as the oracle's recursive CTE recomputes it
     val newL = s"${a}D * x.v + ${na}D * (acc.l + acc.b)"
-    daily
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(col("day_idx").as("day"),
-        col("v").as("v")))).as("__arr"))
+    daySeries(daily, keyCol)
       .select(col(keyCol), explode(expr(
         s"""aggregate(
            |  __arr,
@@ -1004,13 +998,7 @@ object Temporal {
                   valueCol: String, alpha: Double, beta: Double,
                   gamma: Double, period: Int = 7): DataFrame = {
     require(period >= 2, "period must be >= 2")
-    val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(sum(col(valueCol)
-          .cast(DecimalType(12, 2)))
-        .cast("double").as("v"))
+    val daily = dailySums(events, keyCol, tsCol, valueCol)
     val (a, b, g, m) = (alpha, beta, gamma, period)
     val (na, nb, ng) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
     // floor-mod: a pre-1970 timestamp makes day negative, and % would
@@ -1028,10 +1016,7 @@ object Temporal {
     val newSe = s"${g}D * (x.v - ($newL)) + ${ng}D * $prevS"
     val fcNext = s"($newL) + ($newB) + " +
       s"element_at(acc.s, CAST(pmod(x.day + 1, $m) AS INT) + 1)"
-    daily
-      .groupBy(col(keyCol))
-      .agg(sort_array(collect_list(struct(col("day_idx").as("day"),
-        col("v").as("v")))).as("__arr"))
+    daySeries(daily, keyCol)
       .select(col(keyCol), explode(expr(
         s"""aggregate(
            |  __arr,
@@ -1131,9 +1116,7 @@ object Temporal {
   def seasonalResiduals(events: DataFrame, keyCol: String, tsCol: String,
                         madK: Double): DataFrame = {
     val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
+      .groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
       .agg(count(lit(1)).as("n"))
     val w7 = Window.partitionBy(col(keyCol)).orderBy(col("day_idx"))
       .rowsBetween(-3, 3)
@@ -1174,13 +1157,7 @@ object Temporal {
     * is_new_high, is_new_low). */
   def rollingExtremes(events: DataFrame, keyCol: String, tsCol: String,
                       valueCol: String, win: Int): DataFrame = {
-    val daily = events
-      .groupBy(col(keyCol),
-        datediff(col(tsCol).cast("date"), lit("1970-01-01").cast("date"))
-          .cast("bigint").as("day_idx"))
-      .agg(sum(col(valueCol)
-          .cast(DecimalType(12, 2)))
-        .cast("double").as("v"))
+    val daily = dailySums(events, keyCol, tsCol, valueCol)
     val w = Window.partitionBy(col(keyCol)).orderBy(col("day_idx"))
       .rowsBetween(-win, -1)
     daily
@@ -1211,8 +1188,7 @@ object Temporal {
                        amountCol: String, cutoffDay: Long,
                        season: Int = 7): DataFrame = {
     val daily = orders
-      .groupBy(datediff(col(dateCol).cast("date"),
-          lit("1970-01-01").cast("date")).cast("bigint").as("day"))
+      .groupBy(dayIdx(col(dateCol)).as("day"))
       .agg(sum((col(amountCol).cast(DecimalType(12, 2)) * 100)
           .cast(DecimalType(18, 0))).cast("long").as("cents"))
     val a = daily.toDF("day", "ac").where(col("day") >= cutoffDay)

@@ -50,18 +50,6 @@ object TextDedup {
       df.withColumn("fingerprint", md5(col(textCol))),
       Seq(col("fingerprint")), Seq(col(idCol).asc))
 
-  /** MinHash-LSH near-duplicate pairs with exact Jaccard verification.
-    *
-    * Classic (b bands) x (r=2 rows) scheme: each of the 8 minhash draws is an
-    * independent 4-hex-char slice of the shingle's md5; band i's signature
-    * concatenates the minima of draws 2i and 2i+1, so a pair is a candidate
-    * iff BOTH minhashes of some band agree — collision probability
-    * 1-(1-s^2)^bands at Jaccard s, a much sharper threshold curve than
-    * single-row bands (far fewer low-similarity candidates to verify at
-    * scale). md5 is the hash so a SQL oracle reproduces it bit-for-bit.
-    * Candidates come from a self-join on (band, sig) — bucketed, never
-    * all-pairs; the exact Jaccard filter then removes false positives.
-    */
   /** The (id, band, sig) signature vocabulary of the persistent cross-run
     * dedup store: per-band MinHash rows (band 0..bands-1, one native
     * [[graft.functions.MinHashSigs]] pass) plus one exact-md5 SENTINEL row
@@ -72,13 +60,7 @@ object TextDedup {
   def bandSignatureRows(docs: DataFrame, idCol: String, textCol: String,
                         bands: Int = 4, shingleK: Int = 3): DataFrame = {
     require(bands <= 4, "2 draws/band x 4-hex-char slices must fit one md5 digest")
-    val stacked = (0 until bands)
-      .map(b => s"$b, concat(mh[${2 * b}], mh[${2 * b + 1}])").mkString(", ")
-    val banded = docs
-      .select(col(idCol), graft.functions.MinHashSigs.minhash_sigs(
-        split(col(textCol), " "), shingleK, 2 * bands).as("mh"))
-      .where(col("mh").isNotNull)
-      .select(col(idCol), expr(s"stack($bands, $stacked) AS (band, sig)"))
+    val banded = stackBands(minhashSigs(docs, idCol, textCol, shingleK, bands), idCol, bands)
     val sentinels = docs.select(col(idCol),
       lit(-1).as("band"), md5(col(textCol)).as("sig"))
     banded.unionByName(sentinels)
@@ -125,6 +107,54 @@ object TextDedup {
         col("store_hits") === lit(0L) && col("batch_prior_hits") === lit(0L))
   }
 
+  /** Each doc's 2·bands-draw MinHash signature `mh`, one native
+    * [[graft.functions.MinHashSigs]] pass; docs with no shingles drop. */
+  private def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
+                          shingleK: Int, bands: Int): DataFrame =
+    docs.select(col(idCol), graft.functions.MinHashSigs.minhash_sigs(
+        split(col(textCol), " "), shingleK, 2 * bands).as("mh"))
+      .where(col("mh").isNotNull)
+
+  /** The (idCol, band, sig) rows of a [[minhashSigs]] frame: band b
+    * concatenates the minima of draws 2b and 2b+1. */
+  private def stackBands(sigs: DataFrame, idCol: String, bands: Int): DataFrame = {
+    val stacked = (0 until bands)
+      .map(b => s"$b, concat(mh[${2 * b}], mh[${2 * b + 1}])").mkString(", ")
+    sigs.select(col(idCol), expr(s"stack($bands, $stacked) AS (band, sig)"))
+  }
+
+  /** The candidate pairs (doc_a < doc_b) sharing a (band, sig) bucket of
+    * `sig`, with the shingle sets of the docs in them: exact verification
+    * builds shingle ARRAYS only for docs that appear in some candidate
+    * pair (a semi-join — typically a tiny fraction of the corpus), then
+    * intersects in-row. */
+  private def bandCandidates(sig: DataFrame, docs: DataFrame, idCol: String,
+                             textCol: String, shingleK: Int): (DataFrame, DataFrame) = {
+    val a = sig.select(col("band"), col("sig"), col(idCol).as("doc_a"))
+    val b = sig.select(col("band"), col("sig"), col(idCol).as("doc_b"))
+    val cand = a.join(b, Seq("band", "sig"))
+      .where(col("doc_a") < col("doc_b"))
+      .select("doc_a", "doc_b").distinct()
+    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cand_id"))
+      .distinct()
+    val sets = shingleSets(
+      docs.join(candIds, col(idCol) === col("cand_id"), "left_semi"),
+      idCol, textCol, shingleK)
+    (cand, sets)
+  }
+
+  /** MinHash-LSH near-duplicate pairs with exact Jaccard verification.
+    *
+    * Classic (b bands) x (r=2 rows) scheme: each of the 8 minhash draws is an
+    * independent 4-hex-char slice of the shingle's md5; band i's signature
+    * concatenates the minima of draws 2i and 2i+1, so a pair is a candidate
+    * iff BOTH minhashes of some band agree — collision probability
+    * 1-(1-s^2)^bands at Jaccard s, a much sharper threshold curve than
+    * single-row bands (far fewer low-similarity candidates to verify at
+    * scale). md5 is the hash so a SQL oracle reproduces it bit-for-bit.
+    * Candidates come from a self-join on (band, sig) — bucketed, never
+    * all-pairs; the exact Jaccard filter then removes false positives.
+    */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           shingleK: Int = 3, bands: Int = 4,
                           threshold: Double = 0.5): DataFrame = {
@@ -134,29 +164,9 @@ object TextDedup {
     // concatenates the minima of draws 2b and 2b+1. The sig table is tiny
     // (bands rows per doc) and consumed by both sides of the self-join, so
     // it is persisted; at cluster scale a checkpoint plays this role.
-    val sigs = docs
-      .select(col(idCol), graft.functions.MinHashSigs.minhash_sigs(
-        split(col(textCol), " "), shingleK, 2 * bands).as("mh"))
-      .where(col("mh").isNotNull)
-    val stacked = (0 until bands)
-      .map(b => s"$b, concat(mh[${2 * b}], mh[${2 * b + 1}])").mkString(", ")
-    val sig = CacheScope.persist(sigs
-      .select(col(idCol), expr(s"stack($bands, $stacked) AS (band, sig)")))
-
-    val a = sig.select(col("band"), col("sig"), col(idCol).as("doc_a"))
-    val b = sig.select(col("band"), col("sig"), col(idCol).as("doc_b"))
-    val cand = a.join(b, Seq("band", "sig"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-
-    // Exact verification: build shingle ARRAYS only for docs that appear in
-    // some candidate pair (a semi-join — typically a tiny fraction of the
-    // corpus), then intersect in-row.
-    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cand_id"))
-      .distinct()
-    val sets = shingleSets(
-      docs.join(candIds, col(idCol) === col("cand_id"), "left_semi"),
-      idCol, textCol, shingleK)
+    val sig = CacheScope.persist(
+      stackBands(minhashSigs(docs, idCol, textCol, shingleK, bands), idCol, bands))
+    val (cand, sets) = bandCandidates(sig, docs, idCol, textCol, shingleK)
     cand
       .join(sets.toDF("doc_a", "sh_a"), "doc_a")
       .join(sets.toDF("doc_b", "sh_b"), "doc_b")
@@ -871,23 +881,9 @@ object TextDedup {
                          shingleK: Int = 3, bands: Int = 4): DataFrame = {
     require(bands <= 4, "2 draws/band x 4-hex-char slices must fit one md5 digest")
     val nDraws = 2 * bands
-    val sigs = CacheScope.persist(docs
-      .select(col(idCol), graft.functions.MinHashSigs.minhash_sigs(
-        split(col(textCol), " "), shingleK, nDraws).as("mh"))
-      .where(col("mh").isNotNull))
-    val stacked = (0 until bands)
-      .map(b => s"$b, concat(mh[${2 * b}], mh[${2 * b + 1}])").mkString(", ")
-    val sig = sigs.select(col(idCol), expr(s"stack($bands, $stacked) AS (band, sig)"))
-    val a = sig.select(col("band"), col("sig"), col(idCol).as("doc_a"))
-    val b = sig.select(col("band"), col("sig"), col(idCol).as("doc_b"))
-    val cand = a.join(b, Seq("band", "sig"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cand_id"))
-      .distinct()
-    val sets = shingleSets(
-      docs.join(candIds, col(idCol) === col("cand_id"), "left_semi"),
-      idCol, textCol, shingleK)
+    val sigs = CacheScope.persist(minhashSigs(docs, idCol, textCol, shingleK, bands))
+    val (cand, sets) =
+      bandCandidates(stackBands(sigs, idCol, bands), docs, idCol, textCol, shingleK)
     cand
       .join(sigs.toDF("doc_a", "mh_a"), "doc_a")
       .join(sigs.toDF("doc_b", "mh_b"), "doc_b")
@@ -2240,21 +2236,32 @@ object TextDedup {
       .select(col("fp")).distinct()
     val inv = CacheScope.persist(
       windowFpInventory(newDocs, idCol, textCol, l))
-    val covered = snapshotCovered(inv, store, l).withColumn("__hit", lit(1L))
-    newDocs.select(col(idCol).cast("long").as("doc_id"),
+    rebuildUncovered(newDocs, idCol, textCol, snapshotCovered(inv, store, l))(
+      kept => md5(kept).as("clean_md5"))
+  }
+
+  /** Per doc_id of `docs`: n_tokens, n_tokens_removed (the 1-based
+    * positions listed in `covered` (doc_id, pos)) and `clean` of the kept
+    * tokens re-joined in order — the rebuild [[snapshotSubstrDedup]] and
+    * its streaming twin [[graft.streaming.CrossSnapshotSubstrDedup]]
+    * share. */
+  private[graft] def rebuildUncovered(docs: DataFrame, idCol: String, textCol: String,
+                                      covered: DataFrame)(clean: Column => Column): DataFrame = {
+    val hits = covered.withColumn("__hit", lit(1L))
+    docs.select(col(idCol).cast("long").as("doc_id"),
         posexplode(split(coalesce(col(textCol), lit("")), " "))
           .as(Seq("__p0", "tok")))
       .select(col("doc_id"), (col("__p0") + 1).cast("long").as("pos"),
         col("tok"))
-      .join(covered, Seq("doc_id", "pos"), "left")
+      .join(hits, Seq("doc_id", "pos"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("__hit").isNull, 0L).otherwise(1L))
           .as("n_tokens_removed"),
-        md5(array_join(transform(
+        clean(array_join(transform(
           array_sort(collect_list(when(col("__hit").isNull,
             struct(col("pos"), col("tok"))))),
-          t => t.getField("tok")), " ")).as("clean_md5"))
+          t => t.getField("tok")), " ")))
   }
 
   /** Per-document memorization-RISK drill-down (Carlini et al. 2021 /

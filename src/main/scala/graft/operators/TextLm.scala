@@ -56,18 +56,28 @@ object TextLm {
       .withColumn("lp_mu", expr(
         "CAST(round(ln(CAST(c2 + 1 AS DOUBLE) / CAST(c1 + v AS DOUBLE)) * 1e6) AS BIGINT)"))
       .select(col("w1"), col("w2"), col("lp_mu"))
-    docBig.join(model, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      // 6-dp xent via EXACT integer half-up rounding of the rational
-      // (−mu)/m — round-half-up(a/b) = (2a+b) div (2b) for a,b > 0 —
-      // never a float round(x, 6): the r13 sf0.1 gate caught a doc whose
-      // FP xent sat ON a …5 boundary where Spark's decimal-string round
-      // and DuckDB's FP round disagree; the integer image is engine-proof.
-      .select(col(idCol), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+    knCrossEntropyFrom(docBig, model, idCol)
   }
+
+  /** The exact integer half-up micro-nat image of the rational (−mu)/m —
+    * round-half-up(a/b) = (2a+b) div (2b) for a,b > 0 — over the columns
+    * `mu` and `m`. Never a float round(x, 6): the r13 sf0.1 gate caught a
+    * doc whose FP xent sat ON a …5 boundary where Spark's decimal-string
+    * round and DuckDB's FP round disagree; the integer image is
+    * engine-proof. */
+  private def halfUpMu(mu: String): Column =
+    expr(s"CAST((2 * (-$mu) + m) DIV (2 * m) AS BIGINT)")
+
+  /** [[halfUpMu]] as 6-dp nats. */
+  private def halfUpXent(mu: String): Column = halfUpMu(mu).cast("double") / lit(1e6)
+
+  /** Per-doc cross-entropy over scored n-gram rows (idCol, occ, lp_mu):
+    * (idCol, `nCol` = n-gram count, xent) — the [[bigramCrossEntropy]]
+    * contract. */
+  private def xentPerDoc(scored: DataFrame, idCol: String, nCol: String): DataFrame =
+    scored.groupBy(col(idCol))
+      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
+      .select(col(idCol), col("m").as(nCol), halfUpXent("mu").as("xent"))
 
   /** Shared tokenize + per-doc bigram aggregate — (idCol, w1, w2, occ),
     * one row per (document, observed bigram TYPE): the frame every
@@ -159,12 +169,7 @@ object TextLm {
     * the [[bigramCrossEntropy]] contract. */
   def knCrossEntropyFrom(docBig: DataFrame, model: DataFrame,
                          idCol: String): DataFrame =
-    docBig.join(model, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col(idCol), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+    xentPerDoc(docBig.join(model, Seq("w1", "w2")), idCol, "n_bigrams")
 
   /** SoftDeDup commonness reweighting (Xia et al. 2024, "SoftDedup: an
     * Efficient Data Reweighting Method for Speeding Up Language Model
@@ -202,8 +207,7 @@ object TextLm {
     val pd = docBig.join(model, Seq("w1", "w2"))
       .groupBy(col(idCol))
       .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col(idCol), col("m").as("n_grams"),
-        expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").as("rmu"))
+      .select(col(idCol), col("m").as("n_grams"), halfUpMu("mu").as("rmu"))
     val mean = pd.agg(expr(
       "CAST((2 * sum(rmu) + count(1)) DIV (2 * count(1)) AS BIGINT)").as("mmu"))
     pd.crossJoin(broadcast(mean))
@@ -305,12 +309,7 @@ object TextLm {
           |         * (CAST(nc + 1 AS DOUBLE) / CAST(t2 + v AS DOUBLE)))
           |) * 1e6) AS BIGINT)""".stripMargin))
       .select(col("w1"), col("w2"), col("w3"), col("lp_mu"))
-    docTri.join(model, Seq("w1", "w2", "w3"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col(idCol), col("m").as("n_trigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+    xentPerDoc(docTri.join(model, Seq("w1", "w2", "w3")), idCol, "n_trigrams")
   }
 
   /** Per-bigram-type MODIFIED Kneser-Ney probability as engine-shared SQL
@@ -402,12 +401,7 @@ object TextLm {
       .withColumn("lp_mu",
         expr(s"CAST(round(ln($mknProbSql) * 1e6) AS BIGINT)"))
       .select(col("w1"), col("w2"), col("lp_mu"))
-    docBig.join(model, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col(idCol), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+    knCrossEntropyFrom(docBig, model, idCol)
   }
 
   /** Min-K% Prob membership/contamination score (Shi et al. 2023,
@@ -438,22 +432,29 @@ object TextLm {
   def minKProbFrom(docBig: DataFrame, model: DataFrame, idCol: String,
                    kNum: Int = 1, kDen: Int = 5): DataFrame = {
     require(kNum > 0 && kDen >= kNum, "need 0 < kNum <= kDen")
-    docBig.join(model, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("lp_mu"), col("occ"))).as("lst"),
-        sum(col("occ")).as("m"))
-      .withColumn("kk", expr(s"(m * $kNum + ${kDen - 1}) DIV $kDen"))
-      .withColumn("agg", expr(
-        """aggregate(array_sort(lst), named_struct('t', CAST(0 AS BIGINT),
-          |    's', CAST(0 AS BIGINT)),
-          |  (acc, x) -> IF(acc.t >= kk, acc,
-          |    named_struct('t', acc.t + least(x.occ, kk - acc.t),
-          |      's', acc.s + least(x.occ, kk - acc.t) * x.lp_mu)))"""
-          .stripMargin))
+    bottomKFold(docBig.join(model, Seq("w1", "w2")), idCol, "lp_mu", kNum, kDen)
       .select(col(idCol), col("m").as("n_bigrams"),
         (expr("CAST((2 * (-agg.s) + agg.t) DIV (2 * agg.t) AS BIGINT)")
           .cast("double") / lit(1e6)).as("mink_xent"))
   }
+
+  /** Each doc's bottom ceil(m·kNum/kDen) bigram INSTANCES by `scoreCol`,
+    * taken by an in-row fold over the score-sorted (score, occ) array
+    * (`least(occ, kk − taken)` splits the boundary type exactly): adds
+    * (m, kk, agg = {t: instances taken, s: their score sum}) per idCol. */
+  private def bottomKFold(scored: DataFrame, idCol: String, scoreCol: String,
+                          kNum: Int, kDen: Int): DataFrame =
+    scored.groupBy(col(idCol))
+      .agg(collect_list(struct(col(scoreCol), col("occ"))).as("lst"),
+        sum(col("occ")).as("m"))
+      .withColumn("kk", expr(s"(m * $kNum + ${kDen - 1}) DIV $kDen"))
+      .withColumn("agg", expr(
+        s"""aggregate(array_sort(lst), named_struct('t', CAST(0 AS BIGINT),
+          |    's', CAST(0 AS BIGINT)),
+          |  (acc, x) -> IF(acc.t >= kk, acc,
+          |    named_struct('t', acc.t + least(x.occ, kk - acc.t),
+          |      's', acc.s + least(x.occ, kk - acc.t) * x.$scoreCol)))"""
+          .stripMargin))
 
   /** CCNet-style perplexity bucketing: score every document with
     * [[bigramCrossEntropy]], split each group's score distribution into
@@ -517,25 +518,8 @@ object TextLm {
                            groupCol: String, keepNum: Int = 1,
                            keepDen: Int = 4): DataFrame = {
     require(keepNum > 0 && keepDen > keepNum, "need 0 < keepNum < keepDen")
-    val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
-    // weak model: add-one bigram (bigramCrossEntropy's formula verbatim)
-    val uni = docs.select(explode(split(col(textCol), " ")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1u"))
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    val amodel = big.join(uni, "w1").crossJoin(broadcast(vocab))
-      .select(col("w1"), col("w2"), expr(
-        "CAST(round(ln(CAST(c2 + 1 AS DOUBLE) / CAST(c1u + v AS DOUBLE)) * 1e6) AS BIGINT)")
-        .as("lpa"))
-    // reference model: the shared interpolated-KN model (knLpSql)
-    val kmodel = knModel.select(col("w1"), col("w2"), col("lp_mu").as("lpk"))
-    val scored = docBig
-      .join(amodel, Seq("w1", "w2")).join(kmodel, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lpa")).as("mua"),
-        sum(col("occ") * col("lpk")).as("muk"), sum(col("occ")).as("m"))
-      .select(col(idCol),
-        (expr("CAST((2 * (-mua) + m) DIV (2 * m) AS BIGINT)")
-          - expr("CAST((2 * (-muk) + m) DIV (2 * m) AS BIGINT)")).as("__e"))
+    val scored = excessSums(docBig, knModel, docs, idCol, textCol)
+      .select(col(idCol), (halfUpMu("mua") - halfUpMu("muk")).as("__e"))
       .join(docs.select(col(idCol), col(groupCol).as("__g")), idCol)
     val vals = CacheScope.persist(scored.groupBy(col("__g"), col("__e"))
       .agg(count(lit(1)).as("__c")))
@@ -555,6 +539,28 @@ object TextLm {
       .select(col("__g").as(groupCol), col("selected"), col("n_docs"),
         round((col("__se").cast("double") / lit(1e6))
           / col("n_docs").cast("double"), 6).as("mean_excess"))
+  }
+
+  /** Per-doc micro-nat sums (idCol, mua, muk, m) under the weak add-one
+    * bigram model (`lpa`, bigramCrossEntropy's formula verbatim) and the
+    * shared interpolated-KN reference model (`lpk`, knLpSql) — the two
+    * sides of the per-doc excess loss. */
+  private def excessSums(docBig: DataFrame, knModel: DataFrame, docs: DataFrame,
+                         idCol: String, textCol: String): DataFrame = {
+    val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
+    val uni = docs.select(explode(split(col(textCol), " ")).as("w1"))
+      .groupBy(col("w1")).agg(count(lit(1)).as("c1u"))
+    val vocab = uni.agg(count(lit(1)).as("v"))
+    val amodel = big.join(uni, "w1").crossJoin(broadcast(vocab))
+      .select(col("w1"), col("w2"), expr(
+        "CAST(round(ln(CAST(c2 + 1 AS DOUBLE) / CAST(c1u + v AS DOUBLE)) * 1e6) AS BIGINT)")
+        .as("lpa"))
+    val kmodel = knModel.select(col("w1"), col("w2"), col("lp_mu").as("lpk"))
+    docBig
+      .join(amodel, Seq("w1", "w2")).join(kmodel, Seq("w1", "w2"))
+      .groupBy(col(idCol))
+      .agg(sum(col("occ") * col("lpa")).as("mua"),
+        sum(col("occ") * col("lpk")).as("muk"), sum(col("occ")).as("m"))
   }
 
   /** DoReMi-style domain reweighting (Xie et al. 2023, "DoReMi:
@@ -601,25 +607,9 @@ object TextLm {
                         smoothDen: Int = 5): DataFrame = {
     require(rounds >= 1 && smoothNum > 0 && smoothDen > smoothNum,
       "need rounds >= 1 and 0 < smoothNum < smoothDen")
-    val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
-    val uni = docs.select(explode(split(col(textCol), " ")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("c1u"))
-    val vocab = uni.agg(count(lit(1)).as("v"))
-    val amodel = big.join(uni, "w1").crossJoin(broadcast(vocab))
-      .select(col("w1"), col("w2"), expr(
-        "CAST(round(ln(CAST(c2 + 1 AS DOUBLE) / CAST(c1u + v AS DOUBLE)) * 1e6) AS BIGINT)")
-        .as("lpa"))
-    val kmodel = knModel.select(col("w1"), col("w2"), col("lp_mu").as("lpk"))
-    val perDoc = docBig
-      .join(amodel, Seq("w1", "w2")).join(kmodel, Seq("w1", "w2"))
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lpa")).as("mua"),
-        sum(col("occ") * col("lpk")).as("muk"), sum(col("occ")).as("m"))
+    val perDoc = excessSums(docBig, knModel, docs, idCol, textCol)
       .select(col(idCol), col("m"),
-        greatest(
-          expr("CAST((2 * (-mua) + m) DIV (2 * m) AS BIGINT)")
-            - expr("CAST((2 * (-muk) + m) DIV (2 * m) AS BIGINT)"),
-          lit(0L)).as("__e"))
+        greatest(halfUpMu("mua") - halfUpMu("muk"), lit(0L)).as("__e"))
     // lam is persisted because TWO subplans consume it (the boost frame
     // and the 1-row k count) — without the persist each would re-run the
     // whole two-model scoring pass
@@ -741,6 +731,20 @@ object TextLm {
       .groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("tc2"))
     val tUni = base.where(col("__tgt")).select(explode(col("t")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("tc1"))
+    logRatioScored(docBig, gBig, gUni, tBig, tUni)
+      .groupBy(col("__g"))
+      .agg(sum(col("occ") * col("lr_mu")).as("mu"), sum(col("occ")).as("m"))
+      .select(col("__g").as(groupCol), col("m").as("n_bigrams"),
+        round((col("mu").cast("double") / lit(1e6)) / col("m").cast("double"), 6)
+          .as("avg_logratio"))
+  }
+
+  /** Every row of `docBig` with its type's add-one target-vs-general
+    * log-ratio `lr_mu` (micro-nats) from the general (gBig, gUni) and
+    * target (tBig, tUni) counts; a type unseen in the target counts 0
+    * there. */
+  private def logRatioScored(docBig: DataFrame, gBig: DataFrame, gUni: DataFrame,
+                             tBig: DataFrame, tUni: DataFrame): DataFrame = {
     val sizes = gUni.agg(count(lit(1)).as("gv"))
       .crossJoin(tUni.agg(count(lit(1)).as("tv")))
     docBig
@@ -754,11 +758,6 @@ object TextLm {
           |  / CAST(coalesce(tc1, 0) + tv AS DOUBLE)) * 1e6) AS BIGINT)
           |- CAST(round(ln(CAST(gc2 + 1 AS DOUBLE)
           |  / CAST(gc1 + gv AS DOUBLE)) * 1e6) AS BIGINT)""".stripMargin))
-      .groupBy(col("__g"))
-      .agg(sum(col("occ") * col("lr_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col("__g").as(groupCol), col("m").as("n_bigrams"),
-        round((col("mu").cast("double") / lit(1e6)) / col("m").cast("double"), 6)
-          .as("avg_logratio"))
   }
 
   /** DSIR importance RESAMPLING draw — the selection step
@@ -805,19 +804,7 @@ object TextLm {
     val tUni = docs.where(targetPred)
       .select(explode(split(col(textCol), " ")).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("tc1"))
-    val sizes = gUni.agg(count(lit(1)).as("gv"))
-      .crossJoin(tUni.agg(count(lit(1)).as("tv")))
-    val lw = docBig
-      .join(gBig, Seq("w1", "w2"))
-      .join(gUni, Seq("w1"))
-      .join(tBig, Seq("w1", "w2"), "left")
-      .join(tUni, Seq("w1"), "left")
-      .crossJoin(broadcast(sizes))
-      .withColumn("lr_mu", expr(
-        """CAST(round(ln(CAST(coalesce(tc2, 0) + 1 AS DOUBLE)
-          |  / CAST(coalesce(tc1, 0) + tv AS DOUBLE)) * 1e6) AS BIGINT)
-          |- CAST(round(ln(CAST(gc2 + 1 AS DOUBLE)
-          |  / CAST(gc1 + gv AS DOUBLE)) * 1e6) AS BIGINT)""".stripMargin))
+    val lw = logRatioScored(docBig, gBig, gUni, tBig, tUni)
       .groupBy(col(idCol))
       .agg(sum(col("occ") * col("lr_mu")).as("lw_mu"))
     val u = (Sketches.hash60(concat_ws("#", lit("rs"),
@@ -894,8 +881,7 @@ object TextLm {
       .agg(countDistinct(col(idCol)).as("n_docs"),
         sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
       .select(col("source"), col("n_docs"), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+        halfUpXent("mu").as("xent"))
   }
 
   /** DSIR importance weights with BOTH models Kneser-Ney smoothed — the
@@ -1158,8 +1144,7 @@ object TextLm {
       .agg(countDistinct(col(idCol)).as("n_docs"),
         sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
       .select(col("__g").as(grpCol), col("n_docs"), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+        halfUpXent("mu").as("xent"))
 
   /** PER-DOCUMENT cross-entropy under the per-group models — the
     * [[knCrossEntropyFrom]] output contract (idCol, n_bigrams, xent),
@@ -1176,12 +1161,7 @@ object TextLm {
     * [[groupedKnScoredFrom]] frame — the shared-cache consumer form. */
   def groupedKnXentPerDocFromScored(scored: DataFrame,
                                     idCol: String): DataFrame =
-    scored
-      .groupBy(col(idCol))
-      .agg(sum(col("occ") * col("lp_mu")).as("mu"), sum(col("occ")).as("m"))
-      .select(col(idCol), col("m").as("n_bigrams"),
-        (expr("CAST((2 * (-mu) + m) DIV (2 * m) AS BIGINT)").cast("double")
-          / lit(1e6)).as("xent"))
+    xentPerDoc(scored, idCol, "n_bigrams")
 
   /** The ONE grouped-model scoring stage behind [[groupedKnXentFrom]]
     * and [[groupedKnXentPerDocFrom]] — group-keyed model aggregates, the
@@ -1318,19 +1298,8 @@ object TextLm {
         expr(s"""CASE WHEN sg_h > 0 THEN
           |CAST(round((ln($pf) - mu_h) / sg_h * 1e6) AS BIGINT) END"""
           .stripMargin).as("z_mu"))
-    docBig.join(scoredTypes, Seq("w1", "w2"))
-      .where(col("z_mu").isNotNull)
-      .groupBy(col(idCol))
-      .agg(collect_list(struct(col("z_mu"), col("occ"))).as("lst"),
-        sum(col("occ")).as("m"))
-      .withColumn("kk", expr(s"(m * $kNum + ${kDen - 1}) DIV $kDen"))
-      .withColumn("agg", expr(
-        """aggregate(array_sort(lst), named_struct('t', CAST(0 AS BIGINT),
-          |    's', CAST(0 AS BIGINT)),
-          |  (acc, x) -> IF(acc.t >= kk, acc,
-          |    named_struct('t', acc.t + least(x.occ, kk - acc.t),
-          |      's', acc.s + least(x.occ, kk - acc.t) * x.z_mu)))"""
-          .stripMargin))
+    bottomKFold(docBig.join(scoredTypes, Seq("w1", "w2"))
+      .where(col("z_mu").isNotNull), idCol, "z_mu", kNum, kDen)
       .select(col(idCol), col("m").as("n_bigrams"),
         // SIGNED half-up integer division (z sums can be negative; a
         // double round() hits decimal-boundary disagreements between

@@ -200,51 +200,9 @@ object TextPrep {
     * dictionary).
     */
   private[graft] def bpeMergeLoopFrom(seed: DataFrame, merges: Int)
-  : (DataFrame, DataFrame) = {
-    require(merges >= 1, "need at least one merge round")
-    var wt = seed
-    val rows = Seq.newBuilder[DataFrame]
-    var k = 1
-    var exhausted = false
-    while (k <= merges && !exhausted) {
-      val s = split(col("sym"), " ")
-      // zip_with over the two shifted slices is total: a fully-merged
-      // 1-symbol word yields empty slices -> no pairs (sequence(1, 0)
-      // would DESCEND; slices can't)
-      val pairs = wt.select(col("freq"),
-        explode(zip_with(
-          slice(s, lit(1), size(s) - 1), slice(s, lit(2), size(s) - 1),
-          (a, b) => concat(a, lit(" "), b))).as("pair"))
-      val best = pairs.groupBy(col("pair"))
-        .agg(sum(col("freq")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("pair").asc)
-        .limit(1)
-        .localCheckpoint()
-      // a corpus can fully merge before `merges` rounds: an empty best
-      // must STOP the loop, not cross-join the word table to nothing
-      if (best.isEmpty) exhausted = true
-      else {
-        wt = mergeRewritten(wt, best)
-        rows += best.crossJoin(vocabSize(wt))
-          .select(lit(k.toLong).as("round"), col("pair"),
-            expr("replace(pair, ' ', '')").as("merged"),
-            col("pair_count"), col("vocab_size"))
-        k += 1
-      }
-    }
-    // zero completed rounds (empty corpus / all-empty texts): return an
-    // explicitly-schema'd empty merge table instead of letting reduce()
-    // throw on the empty builder — the early-stop contract the greedy
-    // siblings (maxCoverageSelect / kcenterCoreset) already honor
-    val merged = rows.result() match {
-      case Seq() => wt.sparkSession.range(0)
-        .select(col("id").as("round"), lit("").as("pair"),
-          lit("").as("merged"), col("id").as("pair_count"),
-          col("id").as("vocab_size"))
-      case rs => rs.reduce(_ unionByName _)
-    }
-    (merged, wt)
-  }
+  : (DataFrame, DataFrame) =
+    mergeLoop(seed, merges)((_, pairs) =>
+      pairs.orderBy(col("pair_count").desc, col("pair").asc))
 
   /** WordPiece vocabulary TRAINER (Schuster & Nakajima 2012, "Japanese
     * and Korean Voice Search"; the BERT tokenizer — Devlin et al. 2019 —
@@ -278,25 +236,14 @@ object TextPrep {
     * the merge table adds the score column:
     * (round, pair, merged, pair_count, score, vocab_size). */
   private[graft] def wordpieceMergeLoopFrom(seed: DataFrame, merges: Int)
-  : (DataFrame, DataFrame) = {
-    require(merges >= 1, "need at least one merge round")
-    var wt = seed
-    val rows = Seq.newBuilder[DataFrame]
-    var k = 1
-    var exhausted = false
-    while (k <= merges && !exhausted) {
-      val s = split(col("sym"), " ")
-      val pairs = wt.select(col("freq"),
-          explode(zip_with(
-            slice(s, lit(1), size(s) - 1), slice(s, lit(2), size(s) - 1),
-            (a, b) => concat(a, lit(" "), b))).as("pair"))
-        .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+  : (DataFrame, DataFrame) =
+    mergeLoop(seed, merges) { (wt, pairs) =>
       // freq-weighted unigram symbol counts of the CURRENT segmentation —
       // the denominator model the likelihood ratio scores against
       val syms = wt
         .select(col("freq"), explode(split(col("sym"), " ")).as("s"))
         .groupBy(col("s")).agg(sum(col("freq")).as("cnt"))
-      val best = pairs
+      pairs
         .withColumn("__sa", expr("split(pair, ' ')[0]"))
         .withColumn("__sb", expr("split(pair, ' ')[1]"))
         .join(syms.select(col("s").as("__sa"), col("cnt").as("__ca")), "__sa")
@@ -307,27 +254,57 @@ object TextPrep {
           expr("CAST(pair_count AS DOUBLE) / CAST(__ca * __cb AS DOUBLE)")
             .as("score"))
         .orderBy(col("score").desc, col("pair_count").desc, col("pair").asc)
-        .limit(1)
-        .localCheckpoint()
+    }
+
+  /** The greedy loop both merge trainers run. Each round counts the
+    * freq-weighted adjacent symbol pairs of the current word types as
+    * (pair, pair_count); `argmax(wt, pairs)` orders them by the trainer's
+    * rule, and its first row is merged. The merge table is (round, pair,
+    * merged, the argmax row's other columns, vocab_size). */
+  private def mergeLoop(seed: DataFrame, merges: Int)(
+      argmax: (DataFrame, DataFrame) => DataFrame): (DataFrame, DataFrame) = {
+    require(merges >= 1, "need at least one merge round")
+    var wt = seed
+    val rows = Seq.newBuilder[DataFrame]
+    var best: DataFrame = null
+    var k = 1
+    var exhausted = false
+    while (k <= merges && !exhausted) {
+      val s = split(col("sym"), " ")
+      // zip_with over the two shifted slices is total: a fully-merged
+      // 1-symbol word yields empty slices -> no pairs (sequence(1, 0)
+      // would DESCEND; slices can't)
+      val pairs = wt.select(col("freq"),
+          explode(zip_with(
+            slice(s, lit(1), size(s) - 1), slice(s, lit(2), size(s) - 1),
+            (a, b) => concat(a, lit(" "), b))).as("pair"))
+        .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+      best = argmax(wt, pairs).limit(1).localCheckpoint()
+      // a corpus can fully merge before `merges` rounds: an empty best
+      // must STOP the loop, not cross-join the word table to nothing
       if (best.isEmpty) exhausted = true
       else {
         wt = mergeRewritten(wt, best)
-        rows += best.crossJoin(vocabSize(wt))
-          .select(lit(k.toLong).as("round"), col("pair"),
-            expr("replace(pair, ' ', '')").as("merged"),
-            col("pair_count"), col("score"), col("vocab_size"))
+        rows += mergeRow(best, wt, k)
         k += 1
       }
     }
+    // zero completed rounds (empty corpus / all-empty texts): the empty
+    // argmax row gives an explicitly-schema'd empty merge table instead of
+    // letting reduce() throw on the empty builder — the early-stop contract
+    // the greedy siblings (maxCoverageSelect / kcenterCoreset) already honor
     val merged = rows.result() match {
-      case Seq() => wt.sparkSession.range(0)
-        .select(col("id").as("round"), lit("").as("pair"),
-          lit("").as("merged"), col("id").as("pair_count"),
-          col("id").cast("double").as("score"), col("id").as("vocab_size"))
+      case Seq() => mergeRow(best, wt, 0)
       case rs => rs.reduce(_ unionByName _)
     }
     (merged, wt)
   }
+
+  private def mergeRow(best: DataFrame, wt: DataFrame, round: Int): DataFrame =
+    best.crossJoin(vocabSize(wt)).select(
+      Seq(lit(round.toLong).as("round"), col("pair"),
+        expr("replace(pair, ' ', '')").as("merged")) ++
+        best.columns.filter(_ != "pair").map(col) :+ col("vocab_size"): _*)
 
   /** Corpus word-TYPE seed shared by both merge loops: (w, freq, sym)
     * with sym the space-joined characters + `</w>` marker. Chars via

@@ -68,11 +68,40 @@ object Pipeline {
     * Date-order sequencing = max_active_runs=1 parity. */
   def runStageRange(spark: SparkSession, cfg: AppConfig, stage: String,
                     start: LocalDate, endInclusive: LocalDate,
-                    fetch: AppConfig => String = HttpSource.fetchForecast(_)): Seq[(LocalDate, Long)] =
+                    fetch: AppConfig => String = HttpSource.fetchForecast(_)): Seq[(LocalDate, Long)] = {
+    require(!endInclusive.isBefore(start), s"range end $endInclusive is before its start $start")
     Iterator.iterate(start)(_.plusDays(1))
       .takeWhile(!_.isAfter(endInclusive))
       .map(d => d -> runStage(spark, cfg, stage, d, fetch))
       .toSeq
+  }
+
+  private val usage =
+    "usage: Pipeline [day|bronze|silver|gold|stage|upsert] --config path" +
+      " --date YYYY-MM-DD [--end YYYY-MM-DD]"
+
+  /** The CLI's (stage, config path, first day, last day). Rejects, with the
+    * usage message, an unknown stage or flag, a flag without a value, a
+    * missing `--config`/`--date` and an `--end` before `--date` — before
+    * any config is read or session built. */
+  private def parseArgs(args: Array[String]): (String, String, LocalDate, LocalDate) = {
+    def fail(why: String) = throw new IllegalArgumentException(s"$why\n$usage")
+    val (cmd, rest) =
+      if (args.nonEmpty && !args(0).startsWith("--")) (args(0), args.drop(1))
+      else ("day", args)
+    if (!(stages :+ "day").contains(cmd)) fail(s"unknown stage '$cmd'")
+    val opts = rest.grouped(2).map {
+      case Array(k, v) if !v.startsWith("--") => k -> v
+      case kv => fail(s"flag ${kv(0)} has no value")
+    }.toMap
+    val unknown = opts.keySet -- Set("--config", "--date", "--end")
+    if (unknown.nonEmpty) fail(s"unknown flag ${unknown.toSeq.sorted.mkString(", ")}")
+    def required(k: String) = opts.getOrElse(k, fail(s"missing $k"))
+    val start = LocalDate.parse(required("--date"))
+    val end = opts.get("--end").map(LocalDate.parse).getOrElse(start)
+    if (end.isBefore(start)) fail(s"--end $end is before --date $start")
+    (cmd, required("--config"), start, end)
+  }
 
   /** CLI: `[day|bronze|silver|gold|stage|upsert] --config path
     * --date YYYY-MM-DD [--end YYYY-MM-DD]` (reference: O2 — Jinja `{{ ds }}`
@@ -81,13 +110,8 @@ object Pipeline {
     * alone. `--end` extends either form to an inclusive multi-day backfill
     * (per-layer catch-up parity, dags/weather_extract_bronze.py:51-58). */
   def main(args: Array[String]): Unit = {
-    val (cmd, rest) =
-      if (args.nonEmpty && !args(0).startsWith("--")) (args(0), args.drop(1))
-      else ("day", args)
-    val opts = rest.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val cfg = AppConfig.load(opts("--config"))
-    val start = LocalDate.parse(opts("--date"))
-    val end = opts.get("--end").map(LocalDate.parse).getOrElse(start)
+    val (cmd, configPath, start, end) = parseArgs(args)
+    val cfg = AppConfig.load(configPath)
     val spark = graft.Graft.session("graft-pipeline")
     try runStageRange(spark, cfg, cmd, start, end)
       .foreach { case (d, n) => println(s"[pipeline] $d $cmd staged=$n ok") }

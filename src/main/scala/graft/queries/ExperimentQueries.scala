@@ -85,31 +85,15 @@ object ExperimentQueries {
     // pre-experiment covariate for second-half value — theta and the
     // variance reduction the adjustment would buy (how much smaller the
     // q281 MDE could be). See Stats.cuped.
-    "q294_cuped" -> ((s, dir) => {
-      val z = lit(0).cast(org.apache.spark.sql.types.DecimalType(12, 2))
-      val perUser = table(s, dir, "events").groupBy(col("user_id"))
-        .agg(sum(when(dayofmonth(col("ts")) <= 15,
-            col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-          .otherwise(z)).cast("double").as("pre"),
-          sum(when(dayofmonth(col("ts")) >= 16,
-            col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-          .otherwise(z)).cast("double").as("post"))
-      Stats.cuped(perUser, "pre", "post")
-    }),
+    "q294_cuped" -> ((s, dir) =>
+      Stats.cuped(prePostPerUser(s, dir), "pre", "post")),
 
     // Stratified CUPED: q294's audit with theta fitted WITHIN each
     // user_id%4 cohort — the per-stratum variance reduction a covariate
     // with cohort-dependent slope earns (one pooled theta under-serves
     // every cohort, the q288 Simpson lesson). See Stats.cupedStratified.
     "q301_cuped_stratified" -> ((s, dir) => {
-      val z = lit(0).cast(org.apache.spark.sql.types.DecimalType(12, 2))
-      val perUser = table(s, dir, "events").groupBy(col("user_id"))
-        .agg(sum(when(dayofmonth(col("ts")) <= 15,
-            col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-          .otherwise(z)).cast("double").as("pre"),
-          sum(when(dayofmonth(col("ts")) >= 16,
-            col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-          .otherwise(z)).cast("double").as("post"))
+      val perUser = prePostPerUser(s, dir)
         .select(pmod(col("user_id"), lit(4)).as("cohort"),
           col("pre"), col("post"))
       Stats.cupedStratified(perUser, "cohort", "pre", "post")
@@ -168,6 +152,20 @@ object ExperimentQueries {
       Stats.aaCalibration(perUser, "user_id", col("converted"),
         nSplits = 20, zCrit = 1.959964)
     }))
+
+  /** Per user_id: the first-half-month (`pre`) and second-half-month
+    * (`post`) event value sums, exact DECIMAL(12,2) cast to double once —
+    * the q294/q301 CUPED input. */
+  private def prePostPerUser(s: SparkSession, dir: String): DataFrame = {
+    val z = lit(0).cast(org.apache.spark.sql.types.DecimalType(12, 2))
+    table(s, dir, "events").groupBy(col("user_id"))
+      .agg(sum(when(dayofmonth(col("ts")) <= 15,
+          col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+        .otherwise(z)).cast("double").as("pre"),
+        sum(when(dayofmonth(col("ts")) >= 16,
+          col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+        .otherwise(z)).cast("double").as("post"))
+  }
 
   /** The q294 CUPED oracle (q301 when `stratified`: the same stages per
     * `user_id % 4` cohort): per-user pre/post DECIMAL sums, exact moment

@@ -2208,38 +2208,6 @@ object LlmQueries {
        |      / CAST(uni.c1u + vv.v AS DOUBLE)) * 1e6) AS BIGINT) AS lpa
        |  FROM big JOIN uni USING (w1) CROSS JOIN vv)""".stripMargin
 
-  /** The q101 add-one-smoothed bigram LM (no WITH): per-bigram-TYPE
-    * log-prob quantized to integer micro-units in `model`, over the
-    * doc-level counts `db`. */
-  private val addOneLmCte =
-    """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-      |db AS (
-      |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
-      |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-      |    FROM toks)
-      |  GROUP BY 1, 2, 3),
-      |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
-      |uni AS (SELECT w1, count(*) AS c1
-      |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
-      |v AS (SELECT count(*) AS v FROM uni),
-      |model AS (
-      |  SELECT big.w1, big.w2,
-      |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
-      |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v)""".stripMargin
-
-  /** Per-doc tail of the LM oracles: `n` tokens and the token-weighted
-    * cross-entropy over `from` (occ, lp_mu) as the house exact-integer
-    * half-up 6 dp mean. */
-  private def docXentSql(n: String, from: String): String =
-    s"""SELECT doc_id, CAST(sum(occ) AS BIGINT) AS $n,
-       |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-       |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-       |FROM $from
-       |GROUP BY doc_id""".stripMargin
-
-  private val bigramXentSql =
-    docXentSql("n_bigrams", "db JOIN model USING (w1, w2)")
-
   /** The q140 tercile stage over a bigram `model` ⋈ `db`: per-doc micro-nat
     * xent `xmu`, per-source integer order-statistic cutoffs (cum*3 >= j*n),
     * head/middle/tail buckets and exact micro-unit bucket means. */
@@ -2482,15 +2450,20 @@ object LlmQueries {
        |    // (2 * n_words) AS BIGINT) AS DOUBLE) / 1e6 AS fertility_after
        |FROM sv CROSS JOIN av CROSS JOIN kv CROSS JOIN agg""".stripMargin
 
+  /** The distinct word-3-shingles `sh(doc_id, sh)` of tokenized docs
+    * `toks(doc_id, t)`, the q31 shingling; `mat` hints `sh`. */
+  private def minhashShinglesCte(mat: String): String =
+    s"""sh AS $mat(
+       |  SELECT DISTINCT doc_id, sh FROM (
+       |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS sh
+       |    FROM toks))""".stripMargin
+
   /** The MinHash-LSH band chain (no WITH) from tokenized docs `toks(doc_id,
     * t)` to the candidate pairs' shared-shingle counts `inter` and the
     * shingle-set `sizes`: word-3-shingles, 4 bands of two md5-prefix mins,
     * band-equal candidates. `mat` ("MATERIALIZED " or "") hints `sh`. */
   private def minhashBandsSql(mat: String): String =
-    s"""sh AS $mat(
-       |  SELECT DISTINCT doc_id, sh FROM (
-       |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ') for i in range(1, len(t)-1)]) AS sh
-       |    FROM toks)),
+    s"""${minhashShinglesCte(mat)},
        |sig AS (
        |  SELECT doc_id, band,
        |    min(substr(md5(sh), band*8+1, 4)) || min(substr(md5(sh), band*8+5, 4)) AS sig
@@ -3582,14 +3555,10 @@ object LlmQueries {
     // same md5(text) sentinels, store = doc_id % 3 == 0, batch-first
     // bucket minima, exact BIGINT hit counts.
     "q318_cross_run_dedup" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, string_split(text,' ') AS t FROM documents
         |  WHERE len(string_split(text,' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, sh FROM (
-        |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ')
-        |      for i in range(1, len(t)-1)]) AS sh
-        |    FROM toks)),
+        |${minhashShinglesCte("")},
         |sig AS (
         |  SELECT doc_id, band,
         |    min(substr(md5(sh), band*8+1, 4)) ||
@@ -4246,8 +4215,8 @@ object LlmQueries {
     // 6 dp round at the end. sum(occ)/sum(occ*lp_mu) are BIGINT-cast per
     // the HUGEINT discipline.
     "q101_lm_xent" ->
-      s"""WITH $addOneLmCte
-        |$bigramXentSql""".stripMargin,
+      s"""WITH ${OracleSql.addOneLmCte}
+        |${OracleSql.bigramXentSql}""".stripMargin,
 
     // Mirrors TextSearch.phraseSearch("slow hash batch"): positional
     // postings (zipped unnest), one CTE per phrase token, adjacency by
@@ -4713,7 +4682,7 @@ object LlmQueries {
     // integer order-statistic cutoffs on the micro-unit scale (cum*3 >= j*n)
     // and exact micro-unit bucket means — no percentile interpolation.
     "q140_ppl_mix" ->
-      s"""WITH $addOneLmCte,
+      s"""WITH ${OracleSql.addOneLmCte},
         |$tercileMixSql""".stripMargin,
 
     // Mirrors TextDedup.winnowNearDupPairs(k=5, w=4, minShared=2, maxDf=20):
@@ -4900,13 +4869,9 @@ object LlmQueries {
     // md5), candidates from band-sig collisions, estimate = agreeing draws
     // / 8, exact Jaccard over distinct shingle sets.
     "q150_lsh_calibration" ->
-      """WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
+      s"""WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents
         |              WHERE len(string_split(text,' ')) >= 3),
-        |sh AS (
-        |  SELECT DISTINCT doc_id, sh FROM (
-        |    SELECT doc_id, unnest([array_to_string(t[i:i+2], ' ')
-        |        for i in range(1, len(t)-1)]) AS sh
-        |    FROM toks)),
+        |${minhashShinglesCte("")},
         |mh AS (SELECT doc_id, j, min(substr(md5(sh), j*4+1, 4)) AS m
         |       FROM sh, (SELECT unnest([0,1,2,3,4,5,6,7]) AS j)
         |       GROUP BY doc_id, j),
@@ -5319,7 +5284,7 @@ object LlmQueries {
     // exact-integer half-up 6 dp division.
     "q342_kn_xent" ->
       s"""$knModelCte
-        |$bigramXentSql""".stripMargin,
+        |${OracleSql.bigramXentSql}""".stripMargin,
 
     // Mirrors TextLm.softDedupWeights: the shared doc-bigram chain's
     // db/big tables, unsmoothed corpus log-frequency per TYPE
@@ -5463,7 +5428,7 @@ object LlmQueries {
         |  FROM tri JOIN h12 USING (w1, w2) JOIN s23 USING (w2, w3)
         |  JOIN m2 USING (w2) JOIN cont USING (w3)
         |  CROSS JOIN tv)
-        |${docXentSql("n_trigrams", "dt JOIN model USING (w1, w2, w3)")}""".stripMargin,
+        |${OracleSql.docXentSql("n_trigrams", "dt JOIN model USING (w1, w2, w3)")}""".stripMargin,
 
     // Mirrors TextLm.excessLossSelectFrom: the shared knModelCte reference
     // model + the q101 add-one model from the SAME type counts, per-doc
@@ -5531,7 +5496,7 @@ object LlmQueries {
         |      AS lp_mu
         |  FROM big JOIN hist USING (w1) JOIN cont USING (w2)
         |  CROSS JOIN sizes CROSS JOIN vv)
-        |$bigramXentSql""".stripMargin,
+        |${OracleSql.bigramXentSql}""".stripMargin,
 
     // Mirrors TextLm.minKProbFrom: the shared KN model, occurrence-expanded
     // per-doc instances (generate_series), bottom ceil(m/5) by lp rank

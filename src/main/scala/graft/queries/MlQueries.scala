@@ -474,18 +474,24 @@ object MlQueries {
     ("l_discount", "num"), ("l_tax", "num"), ("l_returnflag", "str"),
     ("l_linestatus", "str"), ("l_shipdate", "ts"))
 
-  private def liProfileOracle: String = {
-    def numView(c: String, kind: String): String = kind match {
-      case "num" => s"CAST($c AS DOUBLE)"
-      case "ts" => s"CAST(CAST(epoch($c) AS BIGINT) AS DOUBLE)"
-      case _ => "CAST(NULL AS DOUBLE)"
-    }
-    val aggs = liProfile.map { case (c, k) =>
-      s"""CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nu_$c,
-         |    count(DISTINCT $c) AS nd_$c,
+  /** SQL twin of Relational's numView: a profiled column's min/max view. */
+  private def numView(c: String, kind: String): String = kind match {
+    case "num" => s"CAST($c AS DOUBLE)"
+    case "ts" => s"CAST(CAST(epoch($c) AS BIGINT) AS DOUBLE)"
+    case _ => "CAST(NULL AS DOUBLE)"
+  }
+
+  /** Each profiled column's exact null count and min/max view aggregates,
+    * with `extra(c)` after the null count. */
+  private def liProfileAggs(extra: String => String): String =
+    liProfile.map { case (c, k) =>
+      s"""CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nu_$c,${extra(c)}
          |    min(${numView(c, k)}) AS mn_$c, max(${numView(c, k)}) AS mx_$c"""
         .stripMargin
     }.mkString(",\n    ")
+
+  private def liProfileOracle: String = {
+    val aggs = liProfileAggs(c => s"\n    count(DISTINCT $c) AS nd_$c,")
     val rows = liProfile.map { case (c, _) =>
       s"SELECT '$c' AS column_name, n_rows, nu_$c AS n_null," +
         s" nd_$c AS n_distinct, mn_$c AS min_num, mx_$c AS max_num FROM w"
@@ -501,11 +507,6 @@ object MlQueries {
     * pipeline from the q202 HLL oracle, raw-Flajolet + linear-counting
     * estimate, exact nulls/min/max beside it. */
   private def liProfileSketchOracle: String = {
-    def numView(c: String, kind: String): String = kind match {
-      case "num" => s"CAST($c AS DOUBLE)"
-      case "ts" => s"CAST(CAST(epoch($c) AS BIGINT) AS DOUBLE)"
-      case _ => "CAST(NULL AS DOUBLE)"
-    }
     // canonical string form per column kind (doubles via DECIMAL(18,2) —
     // the lineitem doubles are currency/ratio columns, exact at 2dp)
     def canon(c: String, kind: String): String = kind match {
@@ -538,11 +539,7 @@ object MlQueries {
          |    END) AS BIGINT) AS nd FROM sm_$c)"""
         .stripMargin
     }.mkString(",\n")
-    val aggs = liProfile.map { case (c, k) =>
-      s"""CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nu_$c,
-         |    min(${numView(c, k)}) AS mn_$c, max(${numView(c, k)}) AS mx_$c"""
-        .stripMargin
-    }.mkString(",\n    ")
+    val aggs = liProfileAggs(_ => "")
     val rows = liProfile.map { case (c, _) =>
       s"SELECT '$c' AS column_name, n_rows, nu_$c AS n_null," +
         s" est_$c.nd AS hll_distinct, mn_$c AS min_num, mx_$c AS max_num" +
@@ -822,6 +819,19 @@ object MlQueries {
     * add-one token likelihoods trained on even doc_ids, integer micro-nat
     * log-prior + likelihood scores for every odd doc and class, ranked as
     * `pick(doc_id, actual, mcls, rn)` (score DESC, mcls ASC). */
+  /** q207/q215: per source the cumulative word-count weight `cum` of
+    * each doc in n_chars order (`c`) and the total weight `tw` (`tot`) —
+    * Stats.weightedQuantile's window and total join. */
+  private val weightedCumCte =
+    """t AS (SELECT source, n_chars,
+      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS w
+      |  FROM documents),
+      |c AS (SELECT source, n_chars, w,
+      |    sum(w) OVER (PARTITION BY source ORDER BY n_chars ASC
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM t),
+      |tot AS (SELECT source, sum(w) AS tw FROM t GROUP BY 1)"""
+
   private val nbPickCte =
     """tok AS (
       |  SELECT doc_id, source, unnest(string_split(text, ' ')) AS token
@@ -955,24 +965,8 @@ object MlQueries {
         |  SELECT doc_id, cand, row_number() OVER (PARTITION BY doc_id
         |      ORDER BY dist ASC, cand ASC) AS rn
         |  FROM dist) WHERE rn = 1),
-        |xtoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |db AS (
-        |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
-        |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
-        |    FROM xtoks)
-        |  GROUP BY 1, 2, 3),
-        |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
-        |uni AS (SELECT w1, count(*) AS c1
-        |        FROM (SELECT unnest(t) AS w1 FROM xtoks) GROUP BY 1),
-        |v AS (SELECT count(*) AS v FROM uni),
-        |model AS (
-        |  SELECT big.w1, big.w2,
-        |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
-        |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v),
-        |xsc AS (SELECT db.doc_id,
-        |    CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
-        |      // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
-        |  FROM db JOIN model USING (w1, w2) GROUP BY doc_id),
+        |${OracleSql.addOneLmCte},
+        |xsc AS (${OracleSql.bigramXentSql}),
         |gate AS (
         |  SELECT d.doc_id, nbp.source_ok, x.xent,
         |    coalesce(lidp.predicted = d.lang, false) AS lang_ok,
@@ -1298,14 +1292,7 @@ object MlQueries {
         |FROM f""".stripMargin,
 
     "q215_weighted_p90" ->
-      """WITH t AS (SELECT source, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS w
-        |  FROM documents),
-        |c AS (SELECT source, n_chars, w,
-        |    sum(w) OVER (PARTITION BY source ORDER BY n_chars ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t),
-        |tot AS (SELECT source, sum(w) AS tw FROM t GROUP BY 1)
+      s"""WITH $weightedCumCte
         |SELECT c.source, CAST(min(c.n_chars) AS BIGINT) AS w_quantile
         |FROM c JOIN tot ON c.source = tot.source
         |WHERE c.cum * 10 >= tot.tw * 9
@@ -1365,14 +1352,7 @@ object MlQueries {
         |GROUP BY 1""".stripMargin,
 
     "q207_weighted_median" ->
-      """WITH t AS (SELECT source, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS w
-        |  FROM documents),
-        |c AS (SELECT source, n_chars, w,
-        |    sum(w) OVER (PARTITION BY source ORDER BY n_chars ASC
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM t),
-        |tot AS (SELECT source, sum(w) AS tw FROM t GROUP BY 1)
+      s"""WITH $weightedCumCte
         |SELECT c.source, CAST(min(c.n_chars) AS BIGINT) AS w_median
         |FROM c JOIN tot ON c.source = tot.source
         |WHERE c.cum * 2 >= tot.tw

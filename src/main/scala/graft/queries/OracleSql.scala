@@ -84,4 +84,38 @@ object OracleSql {
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |      AS below
        |  FROM grid)""".stripMargin
+
+  /** The q101 add-one-smoothed bigram LM (no WITH): per-bigram-TYPE
+    * log-prob quantized to integer micro-units in `model`, over the
+    * doc-level counts `db` (CTEs toks, db, big, uni, v, model; the
+    * LlmQueries LM oracles and q319). */
+  private[queries] val addOneLmCte =
+    """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+      |db AS (
+      |  SELECT doc_id, w1, w2, count(*) AS occ FROM (
+      |    SELECT doc_id, unnest(t[1:len(t)-1]) AS w1, unnest(t[2:len(t)]) AS w2
+      |    FROM toks)
+      |  GROUP BY 1, 2, 3),
+      |big AS (SELECT w1, w2, CAST(sum(occ) AS BIGINT) AS c2 FROM db GROUP BY 1, 2),
+      |uni AS (SELECT w1, count(*) AS c1
+      |        FROM (SELECT unnest(t) AS w1 FROM toks) GROUP BY 1),
+      |v AS (SELECT count(*) AS v FROM uni),
+      |model AS (
+      |  SELECT big.w1, big.w2,
+      |    CAST(round(ln(CAST(big.c2 + 1 AS DOUBLE) / CAST(uni.c1 + v.v AS DOUBLE)) * 1e6) AS BIGINT) AS lp_mu
+      |  FROM big JOIN uni ON big.w1 = uni.w1 CROSS JOIN v)""".stripMargin
+
+  /** Per-doc tail of the LM oracles: `n` tokens and the token-weighted
+    * cross-entropy over `from` (occ, lp_mu) as the house exact-integer
+    * half-up 6 dp mean. */
+  private[queries] def docXentSql(n: String, from: String): String =
+    s"""SELECT doc_id, CAST(sum(occ) AS BIGINT) AS $n,
+       |  CAST(CAST((2 * (-sum(occ * lp_mu)) + sum(occ))
+       |    // (2 * sum(occ)) AS BIGINT) AS DOUBLE) / 1e6 AS xent
+       |FROM $from
+       |GROUP BY doc_id""".stripMargin
+
+  /** [[docXentSql]] of every doc under the [[addOneLmCte]] model. */
+  private[queries] val bigramXentSql =
+    docXentSql("n_bigrams", "db JOIN model USING (w1, w2)")
 }

@@ -949,6 +949,15 @@ object ScaleQueries {
       |      // (2 * CAST(allocation AS HUGEINT)) AS BIGINT) AS DOUBLE) / 1e6
       |    END AS repeat_efficiency""".stripMargin
 
+  /** The distinct doc_b token positions `cov(doc_id, pos)` covered by
+    * the exact-substring `runs` (q377, q391). */
+  private val runsCoveredCte =
+    """cov AS (SELECT DISTINCT doc_id, pos FROM (
+      |  SELECT doc_b AS doc_id,
+      |    CAST(unnest(range(b_start, b_start + run_tokens)) AS BIGINT)
+      |      AS pos
+      |  FROM runs))"""
+
   /** The q377 rebuild over tokens `tk(doc_id, pos, tok)` and covered
     * positions `cov(doc_id, pos)`: per-doc token and removed counts and
     * the md5 of the uncovered tokens in order ('' when all are removed). */
@@ -1045,11 +1054,7 @@ object ScaleQueries {
     // rebuild md5 (coalesce '' when every token is removed).
     "q377_exact_substr_dedup" ->
       s"""WITH ${exactRunsCte()},
-         |cov AS (SELECT DISTINCT doc_id, pos FROM (
-         |  SELECT doc_b AS doc_id,
-         |    CAST(unnest(range(b_start, b_start + run_tokens)) AS BIGINT)
-         |      AS pos
-         |  FROM runs)),
+         |$runsCoveredCte,
          |tk AS (
          |  SELECT doc_id, CAST(i AS BIGINT) AS pos, ts[i] AS tok
          |  FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts
@@ -1676,11 +1681,7 @@ object ScaleQueries {
     // decay/waterfill chain VERBATIM on the unique masses.
     "q391_dedup_aware_mix" ->
       s"""WITH ${exactRunsCte()},
-         |cov AS (SELECT DISTINCT doc_id, pos FROM (
-         |  SELECT doc_b AS doc_id,
-         |    CAST(unnest(range(b_start, b_start + run_tokens)) AS BIGINT)
-         |      AS pos
-         |  FROM runs)),
+         |$runsCoveredCte,
          |tk AS (
          |  SELECT doc_id, CAST(i AS BIGINT) AS pos
          |  FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ts

@@ -75,24 +75,9 @@ object CrossSnapshotSubstrDedup {
     // with a smaller doc in THIS batch (anchor-keep, removal from the
     // later) — the shared snapshotCovered core, so the streaming twin
     // and the oracled batch form (q396) can never drift
-    val covered = graft.operators.TextDedup
-      .snapshotCovered(inv, stored, l)
-      .withColumn("__hit", lit(1L))
-    val cleaned = batch
-      .select(col("doc_id").cast("long").as("doc_id"),
-        posexplode(split(coalesce(col("text"), lit("")), " "))
-          .as(Seq("__p0", "tok")))
-      .select(col("doc_id"), (col("__p0") + 1).cast("long").as("pos"),
-        col("tok"))
-      .join(covered, Seq("doc_id", "pos"), "left")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("__hit").isNull, 0L).otherwise(1L))
-          .as("n_tokens_removed"),
-        array_join(transform(
-          array_sort(collect_list(when(col("__hit").isNull,
-            struct(col("pos"), col("tok"))))),
-          t => t.getField("tok")), " ").as("clean_text"))
+    val covered = graft.operators.TextDedup.snapshotCovered(inv, stored, l)
+    val cleaned = graft.operators.TextDedup
+      .rebuildUncovered(batch, "doc_id", "text", covered)(_.as("clean_text"))
       // pin BEFORE the store append: the cleaned frame's lineage reads
       // the store the append is about to grow (self-invalidating
       // lineage — the IncrementalDedup localCheckpoint rule)

@@ -28,28 +28,54 @@ class CoreQueriesSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
+  /** Every `width`-line window of the lines `keep` accepts (trimmed,
+    * whitespace runs collapsed) in the `.scala` files under `dir`, and each
+    * window that occurs at two or more places as "file:line = file:line". */
+  private def pastedWindows(dir: String, width: Int)(keep: String => Boolean)
+  : (Int, Seq[String]) = {
+    val root = java.nio.file.Paths.get(dir)
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found from the working directory")
+    val files = java.nio.file.Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+    val windows = files.toSeq.flatMap { f =>
+      val kept = java.nio.file.Files.readAllLines(f).toArray(Array.empty[String])
+        .zipWithIndex.collect {
+          case (l, i) if keep(l.trim) => (l.trim.replaceAll("\\s+", " "), i + 1)
+        }
+      kept.sliding(width).filter(_.length == width)
+        .map(w => w.map(_._1).mkString("\n") -> s"${root.relativize(f)}:${w.head._2}")
+    }
+    val pasted = windows.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    (windows.size, pasted)
+  }
+
   test("no oracle SQL block is pasted twice") {
     // The DuckDB oracles are the suite's reference implementation: SQL two
     // oracles share is written once (a module-private fragment, or OracleSql
-    // across modules). Scan every `|`-margin line of the query modules,
-    // trimmed with whitespace runs collapsed; no 8-line window may occur at
-    // two places.
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
-    assert(java.nio.file.Files.isDirectory(dir), s"$dir not found from the working directory")
-    val files = dir.toFile.listFiles().filter(_.getName.endsWith(".scala")).sortBy(_.getName)
-    val windows = files.toSeq.flatMap { f =>
-      val margin = java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
-        .zipWithIndex.collect {
-          case (l, i) if l.trim.startsWith("|") => (l.trim.replaceAll("\\s+", " "), i + 1)
-        }
-      margin.sliding(8).filter(_.length == 8)
-        .map(w => w.map(_._1).mkString("\n") -> s"${f.getName}:${w.head._2}")
-    }
-    assert(windows.size > 1000, s"only ${windows.size} windows scanned in $dir")
-    val pasted = windows.groupBy(_._1).values.filter(_.size > 1)
-      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    // across modules). Scan every `|`-margin line of the query modules; no
+    // 6-line window may occur at two places.
+    val (n, pasted) = pastedWindows("src/main/scala/graft/queries", 6)(_.startsWith("|"))
+    assert(n > 1000, s"only $n windows scanned")
     if (pasted.nonEmpty)
-      fail(s"${pasted.size} 8-line oracle blocks occur twice:\n${pasted.mkString("\n")}")
+      fail(s"${pasted.size} 6-line oracle blocks occur twice:\n${pasted.mkString("\n")}")
+  }
+
+  test("no Spark code block is pasted twice") {
+    // The Spark side's twin of the oracle guard: a kernel or Column chain
+    // two operators share is written once, as a helper scoped to its
+    // callers. Scan every code line under src/main/scala, skipping blank,
+    // comment, import/package, lone-bracket and `|`-margin lines; no
+    // 6-line window may occur at two places.
+    val loneBrackets = "[{}()\\[\\],;]+"
+    val (n, pasted) = pastedWindows("src/main/scala", 6) { l =>
+      l.nonEmpty && !l.startsWith("//") && !l.startsWith("/*") && !l.startsWith("*") &&
+        !l.startsWith("import ") && !l.startsWith("package ") && !l.startsWith("|") &&
+        !l.matches(loneBrackets)
+    }
+    assert(n > 10000, s"only $n windows scanned")
+    if (pasted.nonEmpty)
+      fail(s"${pasted.size} 6-line code blocks occur twice:\n${pasted.mkString("\n")}")
   }
 
   test("entry flagship returns rows") {

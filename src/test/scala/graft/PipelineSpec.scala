@@ -333,6 +333,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(!Files.exists(root.resolve("db")), "upsert layer (Derby) never created")
   }
 
+  test("CLI fails loudly on a reversed range, an unknown flag or a flag without a value") {
+    // the config path does not exist: each rejection must come from the
+    // argument check, before any config is read or session built
+    val cfg = Seq("--config", "/nonexistent/pipeline.yaml")
+    Seq(
+      cfg ++ Seq("--date", "2024-01-09", "--end", "2024-01-08"),
+      cfg ++ Seq("--date", "2024-01-08", "--ned", "2024-01-09"),
+      cfg ++ Seq("--date", "2024-01-08", "--end"),
+      Seq("silver", "--date", "2024-01-08", "--end") ++ cfg
+    ).foreach { args =>
+      val err = intercept[IllegalArgumentException](Pipeline.main(args.toArray))
+      assert(err.getMessage.contains("usage: Pipeline"), args.mkString(" "))
+    }
+    val root = Files.createTempDirectory("graft_stage_reversed")
+    intercept[IllegalArgumentException](Pipeline.runStageRange(spark, mkCfg(root), "bronze",
+      LocalDate.parse("2024-01-09"), LocalDate.parse("2024-01-08"), _ => fixture24h("2024-01-09")))
+  }
+
   test("runStage: 'day' delegates to the full stage sequence; unknown stage names all valid ones") {
     val root = Files.createTempDirectory("graft_stage_day")
     val cfg = mkCfg(root)

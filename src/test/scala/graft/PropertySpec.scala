@@ -70,22 +70,48 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  test("TopKAgg: reduce/merge equal a full sort for any input split (pure JVM)") {
-    val agg = new graft.functions.TopKAgg(3)
-    def brute(xs: List[(Double, Long)]): List[(Double, Long)] =
-      xs.distinct.sortBy { case (s, id) => (-s, id) }.take(3)
-    check("topk", Prop.forAll(
-      Gen.listOf(Gen.zip(Gen.choose(-5, 5).map(_ / 2.0), Gen.choose(0L, 20L))),
-      Gen.choose(0, 10)) { (xs0, cut0) =>
-      // ids unique within a group in real use; dedup by id to honor that
-      val xs = xs0.groupBy(_._2).map(_._2.head).toList
+  /** A sorted bounded-k aggregator's reduce and merge against `brute`, the
+    * k first inputs in its order: folding all of `xs`, and merging the
+    * folds of any two-way split of it, must both give the brute result. */
+  private def splitMerge[T](agg: org.apache.spark.sql.expressions.Aggregator[T, Array[T], Array[T]],
+                            inputs: Gen[List[T]])(brute: List[T] => List[T]): Prop =
+    Prop.forAll(inputs, Gen.choose(0, 10)) { (xs, cut0) =>
       val cut = if (xs.isEmpty) 0 else cut0 % (xs.length + 1)
       val (l, r) = xs.splitAt(cut)
       val viaSplit = agg.merge(
         l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce)).toList
       val viaFold = xs.foldLeft(agg.zero)(agg.reduce).toList
       viaSplit == brute(xs) && viaFold == brute(xs)
-    })
+    }
+
+  test("TopKAgg: reduce/merge equal a full sort for any input split (pure JVM)") {
+    // ids unique within a group in real use; dedup by id to honor that
+    val xs = Gen.listOf(Gen.zip(Gen.choose(-5, 5).map(_ / 2.0), Gen.choose(0L, 20L)))
+      .map(_.groupBy(_._2).map(_._2.head).toList)
+    check("topk", splitMerge(new graft.functions.TopKAgg(3), xs)(
+      _.sortBy { case (s, id) => (-s, id) }.take(3)))
+  }
+
+  test("TopKStrAgg, BottomKSampleAgg, BottomKTermSampleAgg: reduce/merge equal a full sort for any input split (pure JVM)") {
+    // few distinct scores and hashes, so the tie-breaks decide often; each
+    // side of a pair is drawn on its own
+    val score = Gen.choose(-2, 2).map(_ / 2.0)
+    val terms = Seq("a", "b", "ab", "ba", "c", "日本")
+    // TopKStrAgg: keys unique within a group (grouping keys upstream)
+    val keyed = for {
+      n <- Gen.choose(0, terms.length); ks <- Gen.pick(n, terms); ss <- Gen.listOfN(n, score)
+    } yield ss.zip(ks)
+    check("topk-str", splitMerge(new graft.functions.TopKStrAgg(3), keyed)(
+      _.sortBy { case (s, k) => (-s, k) }.take(3)))
+    // bottom-k samples: (hash ASC, payload ASC); a full tie is one row
+    def hashed[B](payload: Gen[B]) = for {
+      n <- Gen.choose(0, 12); hs <- Gen.listOfN(n, Gen.choose(0L, 3L))
+      ps <- Gen.listOfN(n, payload)
+    } yield hs.zip(ps).distinct
+    check("bottomk-sample", splitMerge(new graft.functions.BottomKSampleAgg(3),
+      hashed(score))(_.sorted.take(3)))
+    check("bottomk-term", splitMerge(new graft.functions.BottomKTermSampleAgg(3),
+      hashed(Gen.oneOf(terms)))(_.sorted.take(3)))
   }
 
   test("agg invariants: min <= avg <= max over any non-empty set") {
