@@ -40,9 +40,19 @@ object Bench {
     results.map { case (k, v, _) => s"\"" + k + "\":" + sec(v) }
       .mkString("{", ",", "}")
 
+  /** `SPARK_GRAFT_REPEAT`: the number of timed passes (unset: 1). Anything
+    * but a whole number >= 1 is rejected before a session is built — zero
+    * passes would run the warm-up and every shared-cache build, then time
+    * nothing. */
+  private[graft] def repeatOf(v: Option[String]): Int = v.fold(1) { s =>
+    s.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_REPEAT=$s: need a whole number >= 1"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val repeat = repeatOf(sys.env.get("SPARK_GRAFT_REPEAT"))
     val spark = Graft.session("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // Warm up codegen/JIT/shuffle machinery so the first timed query doesn't
@@ -77,7 +87,6 @@ object Bench {
     // The driver never sets it (single pass). All passes are recorded in the
     // JSON artifact; the summary LINES report the LAST pass, matching the
     // driver's single-pass contract.
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "1").toInt
     // Pre-materialize the session-shared caches (graft.queries.SharedCaches)
     // at the TIMED sf dir, so no timed query pays — or skips — a sibling's
     // build depending on run order (the false-spike generator of r12/r13:

@@ -31,7 +31,7 @@ object Graft {
     "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  def session(appName: String = "graft"): SparkSession =
+  def session(appName: String): SparkSession =
     SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$defaultCores]")

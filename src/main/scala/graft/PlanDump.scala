@@ -4,17 +4,35 @@ package graft
   * (or `cache:<name>` SharedCaches builders) to files — the evidence dumps
   * the optimization rounds commit under plans/rNN/.
   * Usage: runMain graft.PlanDump <outDir> <suffix> [--sf <sfDir>] <name...>
-  * (`--sf` defaults to the sf0.001 test data; a directory that does not
-  * exist is rejected).
+  * (`--sf` defaults to the sf0.001 test data; see [[parseArgs]] for what
+  * is rejected).
   */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val outDir = args(0)
-    val suffix = args(1)
+
+  private val usage = "usage: PlanDump <outDir> <suffix> [--sf <sfDir>] <name...>"
+
+  /** The dump's (outDir, suffix, sf dir, names). Rejects, with the usage
+    * message, fewer than three arguments, `--sf` without a directory, an
+    * empty name list, a name that is neither a registered query nor a
+    * `cache:` builder, and an sf dir that does not exist — before any
+    * session is built. */
+  private[graft] def parseArgs(args: Array[String]): (String, String, String, Seq[String]) = {
+    def fail(why: String) = throw new IllegalArgumentException(s"$why\n$usage")
+    if (args.length < 3) fail(s"expected at least 3 arguments, got ${args.length}")
     val (sfDir, names) =
-      if (args(2) == "--sf") (args(3), args.drop(4).toSeq)
+      if (args(2) == "--sf")
+        (args.lift(3).getOrElse(fail("--sf has no directory")), args.drop(4).toSeq)
       else ("/root/testdata/sf0.001", args.drop(2).toSeq)
-    require(new java.io.File(sfDir).isDirectory, s"--sf $sfDir: no such directory")
+    if (names.isEmpty) fail("no query or cache: name to dump")
+    val caches = graft.queries.SharedCaches.builders.map("cache:" + _._1).toSet
+    val unknown = names.filterNot(n => SparkEntry.queries.contains(n) || caches(n))
+    if (unknown.nonEmpty) fail(s"unknown name ${unknown.mkString(", ")}")
+    if (!new java.io.File(sfDir).isDirectory) fail(s"--sf $sfDir: no such directory")
+    (args(0), args(1), sfDir, names)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (outDir, suffix, sfDir, names) = parseArgs(args)
     val spark = Graft.session("graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()

@@ -78,62 +78,45 @@ object TokenNgrams {
 
   /** Per-row stats over the NON-OVERLAPPING `tileN`-token tiles (the
     * [[graft.operators]] tileInventory partition of a document: ceil(n/tileN)
-    * tiles, min 1, last tile may be short): returns
-    * `[n_tiles, n_tile_types, char_mass, dup_char_mass]` where char_mass is
-    * the summed CHARACTER length of every tile instance and dup_char_mass the
-    * character length of instances beyond their type's first occurrence —
-    * the Gopher dup-line/para rule numerators. Tile identity is byte-EXACT
-    * (open-addressed probe of the original buffer — NOT hashed identity), and
-    * a tile's joined string is its byte span, so character length = count of
-    * UTF-8 lead bytes in the span. Replaces two corpus-wide
-    * `groupBy(doc, tile-string)` exchanges with a per-row scan. */
+    * tiles, at least 1 since a row has at least one token, last tile may be
+    * short): returns `[n_tiles, n_tile_types, char_mass, dup_char_mass]`
+    * where char_mass is the summed CHARACTER length of every tile instance
+    * and dup_char_mass the character length of instances beyond their
+    * type's first occurrence — the Gopher dup-line/para rule numerators.
+    * The tiles are the 1-token windows of their start offsets, so tile
+    * identity is [[WindowSet.probe]]'s byte-EXACT identity (NOT hashed),
+    * and a tile's joined string is its byte span, so character length =
+    * count of UTF-8 lead bytes in the span, counted once per tile type.
+    * Replaces two corpus-wide `groupBy(doc, tile-string)` exchanges with a
+    * per-row scan. */
   def tileStats(s: UTF8String, tileN: Int): ArrayData = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
     val nTokens = starts.length - 1
-    val nTiles = math.max((nTokens + tileN - 1) / tileN, 1)
-    val slots = new Array[Int](WindowSet.capacity(nTiles)) // 0 = empty, else (tile index + 1)
-    val mask = slots.length - 1
-    var nt = 0L
+    val nTiles = (nTokens + tileN - 1) / tileN
+    val tiles = new Array[Int](nTiles + 1)
+    var t = 0
+    while (t < nTiles) { tiles(t) = starts(t * tileN); t += 1 }
+    tiles(nTiles) = starts(nTokens)
+    val slots = new Array[Int](WindowSet.capacity(nTiles))
+    val counts = new Array[Int](slots.length)
+    val types = WindowSet.probe(bytes, tiles, 1, 1, slots, counts, null)
     var ch = 0L
     var dch = 0L
-    var t = 0
-    while (t < nTiles) {
-      val b0 = starts(t * tileN)
-      val endTok = math.min((t + 1) * tileN, nTokens)
-      val b1 = starts(endTok) - 1
-      var cl = 0L
-      var h = -3750763034362895579L // FNV-1a probe seed (identity is byte-exact)
-      var j = b0
-      while (j < b1) {
-        val b = bytes(j)
-        if ((b & 0xC0) != 0x80) cl += 1 // UTF-8 lead byte = one character
-        h = (h ^ (b & 0xffL)) * 1099511628211L
-        j += 1
+    var slot = 0
+    while (slot < slots.length) {
+      val e = slots(slot)
+      if (e != 0) {
+        var cl = 0L
+        var j = tiles(e - 1)
+        val end = tiles(e) - 1
+        while (j < end) { if ((bytes(j) & 0xC0) != 0x80) cl += 1; j += 1 }
+        ch += cl * counts(slot)
+        dch += cl * (counts(slot) - 1)
       }
-      ch += cl
-      var slot = (h.toInt ^ (h >>> 32).toInt) & mask
-      var done = false
-      while (!done) {
-        val e = slots(slot)
-        if (e == 0) {
-          slots(slot) = t + 1
-          nt += 1
-          done = true
-        } else {
-          val et = e - 1
-          val e0 = starts(et * tileN)
-          val e1 = starts(math.min((et + 1) * tileN, nTokens)) - 1
-          var same = (e1 - e0) == (b1 - b0)
-          var m = 0
-          while (same && m < b1 - b0) { same = bytes(e0 + m) == bytes(b0 + m); m += 1 }
-          if (same) { dch += cl; done = true }
-          else slot = (slot + 1) & mask
-        }
-      }
-      t += 1
+      slot += 1
     }
-    new GenericArrayData(Array(nTiles.toLong, nt, ch, dch))
+    new GenericArrayData(Array(nTiles.toLong, types.toLong, ch, dch))
   }
 
   /** Char mass of the MOST FREQUENT k-token window: max multiplicity,

@@ -91,7 +91,7 @@ object CorpusStats {
     * only over-represented tokens (a/Tₛ > C_t/N) are ranked — the
     * under-represented tail is the OTHER sources' signal. */
   def sourceKeyness(docs: DataFrame, groupCol: String, textCol: String,
-                    k: Int = 5, minCount: Long = 5): DataFrame = {
+                    k: Int, minCount: Long): DataFrame = {
     val st = docs.select(col(groupCol).as("__g"),
         explode(split(col(textCol), " ")).as("tok"))
       .groupBy(col("__g"), col("tok")).agg(count(lit(1)).as("a"))
@@ -155,6 +155,19 @@ object CorpusStats {
         col("__t").as("total_tokens"), col("n_top_p"))
   }
 
+  /** The (`__g`, tok, c) token counts per group of [[jsDivergence]] and
+    * [[oovRate]], and the corpus's top-`topV` tokens (tok, ct) by total
+    * count, ties by token — via orderBy+limit => TakeOrderedAndProject (a
+    * distributed top-k, never a single-partition sort of the vocabulary). */
+  private def topVocab(docs: DataFrame, groupCol: String, textCol: String,
+                       topV: Int): (DataFrame, DataFrame) = {
+    val cnt = docs.select(col(groupCol).as("__g"),
+        explode(split(col(textCol), " ")).as("tok"))
+      .groupBy(col("__g"), col("tok")).agg(count(lit(1)).as("c"))
+    (cnt, cnt.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
+      .orderBy(col("ct").desc, col("tok").asc).limit(topV))
+  }
+
   /** Pairwise Jensen-Shannon divergence between per-group unigram
     * distributions, restricted to the corpus-wide top-`topV` tokens — the
     * distribution-level "how different are these slices" companion to
@@ -177,15 +190,9 @@ object CorpusStats {
     * so both engines run the identical IEEE op sequence — then quantized to
     * micro-units and summed exactly (the TextLm discipline). */
   def jsDivergence(docs: DataFrame, groupCol: String, textCol: String,
-                   topV: Int = 200): DataFrame = {
-    val cnt = docs.select(col(groupCol).as("__g"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy(col("__g"), col("tok")).agg(count(lit(1)).as("c"))
-    // top-V selection via orderBy+limit => TakeOrderedAndProject (a
-    // distributed top-k, never a single-partition sort of the vocabulary)
-    val top = cnt.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
-      .orderBy(col("ct").desc, col("tok").asc).limit(topV)
-      .select(col("tok"))
+                   topV: Int): DataFrame = {
+    val (cnt, vocab) = topVocab(docs, groupCol, textCol, topV)
+    val top = vocab.select(col("tok"))
     val restricted = cnt.join(top, "tok")
     val totals = restricted.groupBy(col("__g")).agg(sum(col("c")).as("t"))
     // full |groups| x V grid so tokens missing from one group score as p=0
@@ -227,13 +234,9 @@ object CorpusStats {
     * per-group rollup; membership is a vocab-keyed left join marked before
     * the final |groups|-row aggregate. Exact BIGINT counts, one division. */
   def oovRate(docs: DataFrame, groupCol: String, textCol: String,
-              topV: Int = 1000): DataFrame = {
-    val cnt = docs.select(col(groupCol).as("__g"),
-        explode(split(col(textCol), " ")).as("tok"))
-      .groupBy(col("__g"), col("tok")).agg(count(lit(1)).as("c"))
-    val top = cnt.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
-      .orderBy(col("ct").desc, col("tok").asc).limit(topV)
-      .select(col("tok"), lit(1L).as("__in"))
+              topV: Int): DataFrame = {
+    val (cnt, vocab) = topVocab(docs, groupCol, textCol, topV)
+    val top = vocab.select(col("tok"), lit(1L).as("__in"))
     cnt.join(top, Seq("tok"), "left")
       .groupBy(col("__g"))
       .agg(sum(col("c")).as("total_tokens"),
@@ -256,8 +259,8 @@ object CorpusStats {
     * 1-row corpus total broadcast, closed-form per-group arithmetic —
     * nothing here grows with anything but the number of groups. */
   def mixPlan(docs: DataFrame, groupCol: String, textCol: String,
-              budgetFrac: Double = 0.5, maxEpochs: Double = 4.0): DataFrame = {
-    require(budgetFrac > 0.0, "budgetFrac must be positive")
+              maxEpochs: Double): DataFrame = {
+    val budgetFrac = 0.5
     val avail = docs.select(col(groupCol).as("__g"),
         size(split(col(textCol), " ")).cast("bigint").as("nt"))
       .groupBy(col("__g")).agg(sum(col("nt")).as("available_tokens"))
@@ -288,8 +291,8 @@ object CorpusStats {
     * sum is exact BIGINT arithmetic (|x|,|y| ≤ ~2e7 at any realistic count,
     * so n·Σxy stays far under 2^63), the one division happens per GROUP.
     * Ties rank deterministically (count desc, term asc). */
-  def zipfSlope(docs: DataFrame, groupCol: String, textCol: String,
-                topK: Int = 100): DataFrame = {
+  def zipfSlope(docs: DataFrame, groupCol: String, textCol: String): DataFrame = {
+    val topK = 100
     val cnt = docs.select(col(groupCol).as("__g"),
         explode(split(col(textCol), " ")).as("tok"))
       .groupBy(col("__g"), col("tok")).agg(count(lit(1)).as("c"))
@@ -657,7 +660,7 @@ object CorpusStats {
     * Output: (bucket, n_tokens, new_types, cum_tokens, cum_vocab,
     * heaps_beta) — β repeated per row. */
   def heapsLaw(docs: DataFrame, idCol: String, textCol: String,
-               buckets: Int = 100): DataFrame = {
+               buckets: Int): DataFrame = {
     require(buckets >= 2, "need at least two checkpoints to fit a slope")
     val mx = docs.agg(max(col(idCol)).cast("bigint").as("__mx"))
     val tok = docs.crossJoin(broadcast(mx))

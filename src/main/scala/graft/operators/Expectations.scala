@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
   * one scan and one partial-agg tree regardless of how many checks the
   * suite carries. `Distinctness` compiles to countDistinct, which Spark
   * plans via Expand (one duplicated stream per distinct aggregate) — the
-  * documented cost of exact cardinality; suites over truly unbounded
-  * columns swap it for `approx_count_distinct` at a declared error, the
-  * same exact→sketch posture as Robust/Sketches. The unpivot is an
+  * documented cost of exact cardinality. The unpivot is an
   * in-row `explode` of a checks-bounded array on a ONE-row frame — no
   * second pass, no driver collect.
   */
@@ -39,14 +37,9 @@ object Expectations {
   }
 
   /** Distinct values over non-null values (1.0 = key-like). */
-  final case class Distinctness(column: String, threshold: Double,
-                                approx: Boolean = false) extends Check {
+  final case class Distinctness(column: String, threshold: Double) extends Check {
     val name = "distinctness"
-    def metric: Column = {
-      val d = if (approx) approx_count_distinct(col(column))
-        else countDistinct(col(column))
-      d.cast("double") / count(col(column))
-    }
+    def metric: Column = countDistinct(col(column)).cast("double") / count(col(column))
   }
 
   /** Fraction of non-null values inside [lo, hi]. */

@@ -30,15 +30,14 @@ object Formats {
     * off here, or `"x "` silently becomes `"x"`. The sentinel collides
     * with a literal two-char backslash-N value — the unavoidable CSV
     * trade, stated; machine-to-machine data belongs in ORC/Parquet. */
-  def writeCsv(df: DataFrame, path: String,
-               maxRecordsPerFile: Long = 0L): Unit =
+  def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)
       .option("header", "true")
       .option("quote", "\"").option("escape", "\"")
       .option("nullValue", "\\N")
       .option("ignoreLeadingWhiteSpace", "false")
       .option("ignoreTrailingWhiteSpace", "false")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("maxRecordsPerFile", 0L)
       .csv(path)
 
   /** Schema-enforced CSV read matching [[writeCsv]]'s conventions.
@@ -76,10 +75,11 @@ object Formats {
       .option("compression", "gzip")
       .json(path)
 
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-                corruptCol: String = "_corrupt_record"): DataFrame =
+  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val corruptCol = "_corrupt_record"
     spark.read
       .schema(schema.add(corruptCol, "string"))
       .option("columnNameOfCorruptRecord", corruptCol)
       .json(path)
+  }
 }

@@ -24,6 +24,17 @@ import CacheScope.checkpoint
   */
 object Graphs {
 
+  /** The (src, dst, w BIGINT) edge table and its distinct node set, both
+    * checkpointed — the iteration inputs of [[pageRank]],
+    * [[personalizedPageRank]] and [[hits]]. */
+  private def edgesAndNodes(edges: DataFrame, srcCol: String, dstCol: String,
+                            wCol: String): (DataFrame, DataFrame) = {
+    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(wCol).cast("bigint").as("w")))
+    (e, checkpoint(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct()))
+  }
+
   /** Weighted PageRank, fixed `iters` power iterations, damping 85/100.
     *
     * `edges`: (srcCol, dstCol, wCol) with BIGINT-able positive weights.
@@ -44,12 +55,10 @@ object Graphs {
     * loses at most 1 micro-unit per edge per iteration: invisible at 1e9
     * scale, identical in every engine. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-               iters: Int = 8, scale: Long = 1000000000L): DataFrame = {
+               iters: Int): DataFrame = {
+    val scale: Long = 1000000000L
     require(iters >= 1, "need at least one iteration")
-    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("bigint").as("w")))
-    val nodes = checkpoint(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol, wCol)
     // out-weight per source, pre-joined once — the loop reuses this table
     val outW = checkpoint(e.groupBy(col("src")).agg(sum(col("w")).as("out_w")))
     val ew = checkpoint(e.join(outW, "src"))
@@ -90,13 +99,10 @@ object Graphs {
     * Output: (node, rank_mu, rank, is_seed). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            wCol: String, seedCol: DataFrame,
-                           iters: Int = 8,
-                           scale: Long = 1000000000L): DataFrame = {
+                           iters: Int): DataFrame = {
+    val scale: Long = 1000000000L
     require(iters >= 1, "need at least one iteration")
-    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("bigint").as("w")))
-    val nodes = checkpoint(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol, wCol)
     val seeds = checkpoint(nodes.join(
       seedCol.toDF("node").distinct(), Seq("node"), "left_semi"))
     // An empty seed∩nodes intersection would make the teleport mass
@@ -137,7 +143,7 @@ object Graphs {
     * (a, b) weight = corpus count of the ADJACENT ordered pair — the global
     * TextRank term-importance sheet. Vocab is Zipf-bounded, so node and
     * edge tables stay small relative to the corpus at any scale. */
-  def tokenPageRank(docs: DataFrame, textCol: String, iters: Int = 8): DataFrame =
+  def tokenPageRank(docs: DataFrame, textCol: String, iters: Int): DataFrame =
     pageRank(tokenBigramEdges(docs, textCol), "src", "dst", "w", iters)
 
   /** The corpus's ADJACENT-ordered-pair token graph: (src, dst, w =
@@ -173,13 +179,10 @@ object Graphs {
     * both engines. A zero L1 total (empty graph) floors to all-zero
     * masses via the greatest(S, 1) guard instead of dividing by zero.
     * Output: (node, hub_mu, auth_mu, hub, authority). */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-           iters: Int = 8, scale: Long = 1000000L): DataFrame = {
-    require(iters >= 1, "need at least one iteration")
-    val e = checkpoint(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(wCol).cast("bigint").as("w")))
-    val nodes = checkpoint(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+  def hits(edges: DataFrame, srcCol: String, dstCol: String, wCol: String): DataFrame = {
+    val iters = 8
+    val scale: Long = 1000000L
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol, wCol)
     val nNodes = checkpoint(nodes.agg(count(lit(1)).as("__n")))
 
     def normalize(raw: DataFrame, outCol: String): DataFrame = {
@@ -242,7 +245,7 @@ object Graphs {
     * connectedComponents lineage discipline). A SQL oracle replays the
     * rounds as unrolled CTEs. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       wCol: String, iters: Int = 3): DataFrame = {
+                       wCol: String, iters: Int): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val dir = edges.select(col(srcCol).as("a"), col(dstCol).as("b"),
       col(wCol).cast("bigint").as("w"))
@@ -311,8 +314,8 @@ object Graphs {
     * from a quantile of pair counts). Output: (community, n_tokens)
     * sizes. Vocab-bounded: ≤ topV nodes, ≤ topV² edges at any corpus
     * size. */
-  def tokenCommunities(docs: DataFrame, textCol: String, topV: Int = 100,
-                       iters: Int = 3, minW: Long = 0L): DataFrame = {
+  def tokenCommunities(docs: DataFrame, textCol: String, topV: Int,
+                       iters: Int, minW: Long): DataFrame = {
     val toks = docs.select(split(col(textCol), " ").as("t"))
       .where(size(col("t")) >= 2)
     val top = toks.select(explode(col("t")).as("token"))

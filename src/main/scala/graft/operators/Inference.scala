@@ -282,9 +282,10 @@ object Inference {
     * (a null used to contribute weight to Σw but nothing to Σw·v).
     * Output: (groupCol, n, point_mean, ci_lo, ci_hi, n_replicates). */
   def bootstrapCi(df: DataFrame, groupCol: String, idCol: String,
-                  valCol: String, b: Int = 32, lo: Double = 0.025,
-                  hi: Double = 0.975): DataFrame = {
-    require(b >= 2 && lo > 0 && hi < 1 && lo < hi, "bad bootstrap params")
+                  valCol: String, b: Int): DataFrame = {
+    val lo = 0.025
+    val hi = 0.975
+    require(b >= 2, "need b >= 2 resamples")
     val bootAgg = udaf(new graft.functions.PoissonBootstrapAgg(
         b, poissonCdf.toArray),
       org.apache.spark.sql.Encoders.tuple(
@@ -430,8 +431,8 @@ object Inference {
     * digits still contribute their n·p term through the group×digit
     * grid. State: |groups|×9 rows. Output per group: (groupCol,
     * n_amounts, chi2, fails_benford). */
-  def benfordByGroup(df: DataFrame, groupCol: String, valueCol: Column,
-                     chi2Crit: Double = 15.507313): DataFrame = {
+  def benfordByGroup(df: DataFrame, groupCol: String, valueCol: Column): DataFrame = {
+    val chi2Crit = 15.507313
     val probs = (1 to 9).map(dd => dd -> math.log10(1.0 + 1.0 / dd))
     val cents = (valueCol.cast(DecimalType(12, 2)) * lit(100))
       .cast("bigint")

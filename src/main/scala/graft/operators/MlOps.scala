@@ -183,8 +183,8 @@ object MlOps {
     * making the largest-|component| coordinate positive, so the result is a
     * pure function of the input set.
     */
-  def pcaTopComponent(embs: DataFrame, vecCol: String, d: Int,
-                      iters: Int = 100): Array[Double] = {
+  def pcaTopComponent(embs: DataFrame, vecCol: String, d: Int): Array[Double] = {
+    val iters = 100
     val g = gramRow(embs, vecCol, d).head().getSeq[Long](0).toArray
     val n = g(0).toDouble
     val cov = Array.ofDim[Double](d, d)
@@ -225,7 +225,7 @@ object MlOps {
     * that feeds DuckDB the Spark-computed component as exact literals;
     * MlOpsSpec carries the eigen-alignment semantics. */
   def pcaProjection(embs: DataFrame, idCol: String, vecCol: String, d: Int,
-                    k: Int = 50): DataFrame = {
+                    k: Int): DataFrame = {
     val comp = pcaTopComponent(embs, vecCol, d)
     val proj = graft.functions.VectorFunctions.dot_d(
       col(vecCol).cast("array<double>"), typedlit(comp.toSeq))
@@ -365,9 +365,9 @@ object MlOps {
     * is an m-row broadcast. Output per quasi-group: quasiCols, group_sz,
     * t (6 dp), above_t. */
   def tClosenessProfile(df: DataFrame, quasiCols: Seq[String],
-                        sensitiveCol: String, tNum: Long = 1L,
-                        tDen: Long = 5L): DataFrame = {
-    require(tNum >= 0 && tDen > 0, "need a t threshold >= 0")
+                        sensitiveCol: String): DataFrame = {
+    val tNum: Long = 1L
+    val tDen: Long = 5L
     val qs = quasiCols.map(col)
     val gv = df.groupBy(qs :+ col(sensitiveCol).as("__v"): _*)
       .agg(count(lit(1)).as("__gc"))
@@ -612,7 +612,7 @@ object MlOps {
     * aggregate, two per-doc rank windows, k·|langs| scoring shuffle —
     * measured 4.2 s warmed at sf0.1; semantics and oracle unchanged.) */
   def ctLangIdConfusion(docs: DataFrame, idCol: String, textCol: String,
-                        langCol: String, k: Int = 20): DataFrame =
+                        langCol: String, k: Int): DataFrame =
     ctLangIdPredictions(docs, idCol, textCol, langCol, k)
       .groupBy(col(langCol), col("predicted"))
       .agg(count(lit(1)).as("n_docs"))
@@ -622,7 +622,7 @@ object MlOps {
     * 3; shorter docs have no trigram evidence and drop out). Same
     * shuffle-free doc side and 1-row broadcast profile scoring. */
   def ctLangIdPredictions(docs: DataFrame, idCol: String, textCol: String,
-                          langCol: String, k: Int = 20): DataFrame = {
+                          langCol: String, k: Int): DataFrame = {
     val counted = docs.where(length(col(textCol)) >= 3)
       .select(col(idCol).as("__id"), col(langCol).as("__lang"),
         graft.functions.CharNgramCounts
@@ -762,11 +762,13 @@ object MlOps {
 
   /** The GD loop shared by q330 (step trace) and q332 (calibration of the
     * final weights): steps+1 single-aggregate passes; pass p evaluates
-    * w_{p-1} and (while p <= steps) mints w_p. Returns the per-step trace
-    * (step, weights-after-update, n_pred_pos, n_correct). */
-  private[graft] def trainLogistic(feats: DataFrame, steps: Int,
-                                   lrNum: Long, lrDen: Long)
-  : Seq[(Long, Array[Long], Long, Long)] = {
+    * w_{p-1} and (while p <= steps) mints w_p, at 6 steps of learning
+    * rate 3/2. Returns the per-step trace (step, weights-after-update,
+    * n_pred_pos, n_correct). */
+  private[graft] def trainLogistic(feats: DataFrame): Seq[(Long, Array[Long], Long, Long)] = {
+    val steps = 6
+    val lrNum = 3L
+    val lrDen = 2L
     val n = feats.count()
     var w = Array.fill(5)(0L)
     val trace = scala.collection.mutable.ArrayBuffer
@@ -793,13 +795,12 @@ object MlOps {
     trace.toSeq
   }
 
-  def logisticTeacherGate(docs: DataFrame, textCol: String,
-                          steps: Int = 6, lrNum: Long = 3, lrDen: Long = 2)
+  def logisticTeacherGate(docs: DataFrame, textCol: String)
   : DataFrame = {
     val spark = docs.sparkSession
     val feats = logisticFeatures(docs, textCol)
     import spark.implicits._
-    trainLogistic(feats, steps, lrNum, lrDen)
+    trainLogistic(feats)
       .map { case (st, wv, np, nc) =>
         (st, wv(0) / 1e6, wv(1) / 1e6, wv(2) / 1e6, wv(3) / 1e6,
           wv(4) / 1e6, np, nc) }
@@ -827,11 +828,10 @@ object MlOps {
     * Scale: training passes as q330, then ONE scoring aggregate to the
     * ≤10-row bin table; the global joins broadcast 1-row artifacts.
     */
-  def logisticCalibration(docs: DataFrame, textCol: String,
-                          steps: Int = 6, lrNum: Long = 3, lrDen: Long = 2)
+  def logisticCalibration(docs: DataFrame, textCol: String)
   : DataFrame = {
     val feats = logisticFeatures(docs, textCol)
-    val w = trainLogistic(feats, steps, lrNum, lrDen).last._2
+    val w = trainLogistic(feats).last._2
     val sig = sigmoidMicros(zMicros(w))
     val scored = feats.select(sig.as("__sig"), col("y"),
       least(floor(sig / lit(100000.0)).cast("long"), lit(9L)).as("bin"))
@@ -880,11 +880,10 @@ object MlOps {
     *
     * The grid and interval table do not grow with the corpus.
     */
-  def isotonicCalibration(docs: DataFrame, textCol: String,
-                          steps: Int = 6, lrNum: Long = 3, lrDen: Long = 2)
+  def isotonicCalibration(docs: DataFrame, textCol: String)
   : DataFrame = {
     val feats = logisticFeatures(docs, textCol)
-    val w = trainLogistic(feats, steps, lrNum, lrDen).last._2
+    val w = trainLogistic(feats).last._2
     isotonicOnScores(
       feats.select(sigmoidMicros(zMicros(w)).as("__sig"), col("y")))
   }

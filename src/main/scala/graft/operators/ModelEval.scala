@@ -67,7 +67,7 @@ object ModelEval {
     * cumulative lift vs the base rate — "the top 20% of scores capture
     * X% of positives at Y× random". */
   def gainsTable(df: DataFrame, scoreCol: String, label: Column,
-                 nBins: Int = 10): DataFrame = {
+                 nBins: Int): DataFrame = {
     require(nBins >= 2, "need at least two bins")
     val grid = df.select(col(scoreCol).cast("bigint").as("__v"),
         when(label, 1L).otherwise(0L).as("__y"))
@@ -104,9 +104,8 @@ object ModelEval {
     * score (never a double bucket boundary); per-bin positives and score
     * sums are exact BIGINTs; conf_b = (Σ score)/(n_b·max) as one double.
     * The weighted |gap| sum folds LEFT over the bin-sorted list. */
-  def ece(df: DataFrame, scoreCol: String, label: Column,
-          nBins: Int = 10): DataFrame = {
-    require(nBins >= 2, "need at least two bins")
+  def ece(df: DataFrame, scoreCol: String, label: Column): DataFrame = {
+    val nBins = 10
     val base = df.select(col(scoreCol).cast("bigint").as("__v"),
       when(label, 1L).otherwise(0L).as("__y"))
     val mx = base.agg(max(col("__v")).as("__mx"))
@@ -158,7 +157,7 @@ object ModelEval {
     * ~na·nb·3e7 ≈ 1e23. Bin assignment is all-integer against the 1-row
     * pooled bounds: bin = (v−mn)·nBins div (mx−mn+1). */
   def psi(df: DataFrame, groupCol: String, groupA: String, groupB: String,
-          scoreCol: String, nBins: Int = 10): DataFrame = {
+          scoreCol: String, nBins: Int): DataFrame = {
     require(nBins >= 2, "need at least two bins")
     val g = col(groupCol)
     val base = df.where(g === groupA || g === groupB)
@@ -247,8 +246,8 @@ object ModelEval {
     * Output one row: (n_train, n_cal, n_test, slope, intercept, q_hat,
     * coverage, level). */
   def splitConformal(df: DataFrame, idCol: String, xCol: Column,
-                     yCol: Column, level: Double = 0.9): DataFrame = {
-    require(level > 0 && level < 1, "level in (0,1)")
+                     yCol: Column): DataFrame = {
+    val level = 0.9
     val base = CacheScope.persist(df.select(
       pmod(col(idCol), lit(3)).as("__s"),
       xCol.cast("long").as("__x"), yCol.cast("long").as("__y")))

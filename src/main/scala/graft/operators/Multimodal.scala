@@ -59,8 +59,8 @@ object Multimodal {
     * deterministic downsampled byte sketch (every len/targetBytes-th byte) —
     * a real codec would decode + interpolate; the partition-parallel shape,
     * schema, and determinism contract are what this pins. */
-  def resize(media: Dataset[Media], targetW: Int, targetH: Int,
-             targetBytes: Int = 64): Dataset[MediaFeatures] = {
+  def resize(media: Dataset[Media], targetW: Int, targetH: Int): Dataset[MediaFeatures] = {
+    val targetBytes = 64
     import media.sparkSession.implicits._
     media.mapPartitions(_.map { m =>
       val len = m.content.length
@@ -80,7 +80,7 @@ object Multimodal {
   /** Frame sampling for video-like payloads: n evenly-spaced fixed-size byte
     * windows per payload (a real implementation would seek keyframes; the
     * batching/explode plumbing is identical). */
-  def sampleFrames(media: Dataset[Media], n: Int, frameBytes: Int = 16): DataFrame = {
+  def sampleFrames(media: Dataset[Media], n: Int, frameBytes: Int): DataFrame = {
     import media.sparkSession.implicits._
     media.flatMap { m =>
       val len = m.content.length
@@ -115,11 +115,10 @@ object Multimodal {
     *
     * One `mapPartitions` pass per payload (the module's batching shape) —
     * no shuffle, no per-row closure setup. Output: (media_id, band, sig). */
-  def ahashSigs(media: Dataset[Media], cells: Int = 64,
-                bands: Int = 4): DataFrame = {
+  def ahashSigs(media: Dataset[Media]): DataFrame = {
+    val cells = 64
+    val bands = 4
     import media.sparkSession.implicits._
-    require(cells % bands == 0 && cells / bands <= 62,
-      "bands must tile the cells and fit a long signature")
     val perBand = cells / bands
     media.mapPartitions { it =>
       it.flatMap { m =>
@@ -159,9 +158,9 @@ object Multimodal {
     * family (MinHash q31 / SimHash q32 / n-gram q75 / exact-substring
     * q300), with the same bucketed-join scale posture. Output:
     * (media_a, media_b, hamming ≤ maxHamming). */
-  def ahashNearDup(media: Dataset[Media], maxHamming: Int = 8,
-                   cells: Int = 64, bands: Int = 4): DataFrame = {
-    val sigs = CacheScope.persist(ahashSigs(media, cells, bands))
+  def ahashNearDup(media: Dataset[Media]): DataFrame = {
+    val maxHamming = 12
+    val sigs = CacheScope.persist(ahashSigs(media))
     val cand = sigs.toDF("media_a", "band", "sig")
       .join(sigs.toDF("media_b", "band", "sig"), Seq("band", "sig"))
       .where(col("media_a") < col("media_b"))

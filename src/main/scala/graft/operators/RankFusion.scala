@@ -22,8 +22,8 @@ object RankFusion {
 
   /** Fuse ranked lists. Each input is (df, idCol, rankCol) where rankCol is
     * a 1-based dense position. Output: id (named `outId`), rrf_score. */
-  def rrf(lists: Seq[(DataFrame, String, String)], outId: String,
-          kRrf: Int = 60, topK: Int = 10): DataFrame = {
+  def rrf(lists: Seq[(DataFrame, String, String)], outId: String, topK: Int): DataFrame = {
+    val kRrf = 60
     val parts = lists.map { case (df, idCol, rankCol) =>
       df.select(col(idCol).cast("bigint").as(outId),
         // 1e6/(kRrf+rank): one double divide of exact integers, rounded to

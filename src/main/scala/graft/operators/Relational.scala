@@ -153,7 +153,8 @@ object Relational {
     * estimates distinct-values-plus-one; n_null reports the exact count
     * beside it) — mirrored in the oracle. Raw-Flajolet + linear-counting
     * estimate, bit-reproducible per HllAgg's scaladoc. */
-  def columnProfileSketch(df: DataFrame, p: Int = 12): DataFrame = {
+  def columnProfileSketch(df: DataFrame): DataFrame = {
+    val p = 12
     import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType, StringType, TimestampNTZType, TimestampType}
     val fields = df.schema.fields
     def canon(f: org.apache.spark.sql.types.StructField): Column =

@@ -40,7 +40,8 @@ object Robust {
     * exact median for both stats. */
   def madOutliers(df: DataFrame, keyCol: String, idCol: String, valCol: String,
                   cutoff: Double, approx: Boolean = false,
-                  accuracy: Int = 10000, madFloor: Double = 0.0): DataFrame = {
+                  madFloor: Double = 0.0): DataFrame = {
+    val accuracy = 10000
     def med50(c: org.apache.spark.sql.Column) =
       if (approx) percentile_approx(c, lit(0.5), lit(accuracy)).cast("double")
       else median(c)
@@ -82,7 +83,7 @@ object Robust {
     * ties on the consensus count resolving to the smallest model_id. */
   def ransacLine(df: DataFrame, idCol: String,
                  xCol: org.apache.spark.sql.Column, yCol: org.apache.spark.sql.Column,
-                 nModels: Int = 32, tol: Double = 200.0): DataFrame = {
+                 nModels: Int, tol: Double): DataFrame = {
     require(nModels >= 1 && tol > 0, "bad ransac params")
     val pts = df.select(col(idCol).cast("long").as("__id"),
       xCol.cast("long").as("__x"), yCol.cast("long").as("__y"))

@@ -8,14 +8,13 @@ import org.apache.spark.sql.functions._
 object Scale {
 
   /** Two-phase salted sum/count for a LOW-CARDINALITY or skewed key: phase 1
-    * aggregates on (key, salt) — spreading each hot key over `salts` reducers
+    * aggregates on (key, salt) — spreading each hot key over 16 salts
     * — phase 2 combines partials per key. Decimal-exact, so the result is
     * bit-identical to a direct groupBy at any salt count or partitioning.
     * The salt is a deterministic hash of the value column (no rand(): replays
     * and retries must produce identical partials). */
-  def saltedSumCount(df: DataFrame, key: Column, value: Column,
-                     salts: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(hash(value), lit(salts)))
+  def saltedSumCount(df: DataFrame, key: Column, value: Column): DataFrame =
+    df.withColumn("__salt", pmod(hash(value), lit(16)))
       .groupBy(key, col("__salt"))
       .agg(sum(Relational.dec(value)).as("__ps"), count(lit(1)).as("__pc"))
       .groupBy(key)
@@ -50,7 +49,7 @@ object Scale {
     * point readers, retire old) belongs to the table format / orchestrator,
     * and an in-place rewrite that fails mid-way would lose data. */
   def compact(spark: SparkSession, inDir: String, outDir: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Int = {
+              targetFileBytes: Long): Int = {
     val path = new org.apache.hadoop.fs.Path(inDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(path).getLength
@@ -74,8 +73,8 @@ object Scale {
     * this adaptively for sort-merge joins; the explicit form works for any
     * join and any skew, without depending on runtime statistics. */
   def saltedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-                 dimKey: String, salts: Int = 16): DataFrame = {
-    require(salts >= 1, "need at least one salt")
+                 dimKey: String): DataFrame = {
+    val salts = 8
     val saltedFact = fact.withColumn("__salt",
       pmod(hash(fact.columns.toIndexedSeq.map(col): _*), lit(salts)))
     val repDim = dim.withColumn("__salt",
@@ -311,7 +310,7 @@ object Scale {
     * min-max file skipping effective on both clustering columns at once —
     * the ScaleSpec measures the file-pruning win directly. */
   def zorderWrite(df: DataFrame, xCol: String, yCol: String, outDir: String,
-                  nFiles: Int, bits: Int = 16): Unit =
+                  nFiles: Int, bits: Int): Unit =
     df.withColumn("__z", zValue(col(xCol), col(yCol), bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
@@ -583,6 +582,10 @@ object Scale {
         least(col("cap"), col("lvl")).as("allocation"))
   }
 
+  /** The data-constrained recipe's epoch cap per source; its budget is
+    * twice the corpus. */
+  private val dcEpochCap = 4
+
   /** The per-epoch marginal-value grid behind [[dataConstrainedMix]],
     * shared VERBATIM with the oracle SQL builder (both sides embed the
     * same driver-computed micro constants, so libm exp can never
@@ -592,16 +595,17 @@ object Scale {
     * value) and δ_mu(e) = round(1e6·R*·(exp(−(e−2)/R*) −
     * exp(−(e−1)/R*))) for e ≥ 2 — the discrete marginal effective-data
     * mass of the e-th epoch under Muennighoff et al. 2023's decay
-    * D'(R) = U + U·R*·(1 − exp(−R/R*)), R = epochs − 1. */
-  private[graft] def muennighoffGrid(epochCap: Int, rStar: Double)
-  : Seq[(Long, Long, Long)] = {
+    * D'(R) = U + U·R*·(1 − exp(−R/R*)), R = epochs − 1, with
+    * epochCap = [[dcEpochCap]] and R* = 15.4. */
+  private[graft] val muennighoffGrid: Seq[(Long, Long, Long)] = {
+    val rStar = 15.4
     def dMu(e: Int): Long =
       if (e <= 1) 1000000L
       else math.round(1e6 * rStar *
         (math.exp(-(e - 2) / rStar) - math.exp(-(e - 1) / rStar)))
-    val deltas = (1 to (epochCap + 1)).map(dMu)
+    val deltas = (1 to (dcEpochCap + 1)).map(dMu)
     val cums = deltas.scanLeft(0L)(_ + _)
-    (0 to epochCap).map(j => (j.toLong, cums(j), deltas(j)))
+    (0 to dcEpochCap).map(j => (j.toLong, cums(j), deltas(j)))
   }
 
   /** Data-constrained scaling allocation (Muennighoff et al. 2023,
@@ -627,23 +631,19 @@ object Scale {
     *
     * Scale: ONE source-keyed aggregate over the corpus + the q355
     * grid-bounded waterfill + an (epochCap+1)-row broadcast join. */
-  def dataConstrainedMix(docs: DataFrame, srcCol: String, textCol: String,
-                         epochCap: Int = 4, budgetNum: Int = 2,
-                         budgetDen: Int = 1, rStar: Double = 15.4)
+  def dataConstrainedMix(docs: DataFrame, srcCol: String, textCol: String)
   : DataFrame = {
     val per = docs.groupBy(col(srcCol).as("source"))
       .agg(sum(size(split(coalesce(col(textCol), lit("")), " ")))
         .cast("long").as("s"))
-    dataConstrainedFrom(per, epochCap, budgetNum, budgetDen, rStar)
+    dataConstrainedFrom(per)
   }
 
   /** [[dataConstrainedMix]] over a prebuilt (source, s) token-mass frame
     * — the form [[dedupAwareMixFrom]] feeds with DEDUPLICATED masses. */
-  def dataConstrainedFrom(per: DataFrame, epochCap: Int, budgetNum: Int,
-                          budgetDen: Int, rStar: Double): DataFrame = {
-    require(rStar > 0.0, "need rStar > 0")
-    val alloc = waterfillAlloc(per, epochCap, budgetNum, budgetDen)
-    val gridRows = muennighoffGrid(epochCap, rStar)
+  def dataConstrainedFrom(per: DataFrame): DataFrame = {
+    val alloc = waterfillAlloc(per, dcEpochCap, budgetNum = 2, budgetDen = 1)
+    val gridRows = muennighoffGrid
     val gridDf = alloc.sparkSession.range(1)
       .select(explode(array(gridRows.map { case (m, c, nx) =>
         struct(lit(m).as("__m"), lit(c).as("__cum"), lit(nx).as("__nxt"))
@@ -696,9 +696,7 @@ object Scale {
     * `perDoc` is [[graft.operators.TextDedup.exactSubstringDedupFrom]]'s
     * output (q391/q398 consume one session-shared build). */
   def dedupAwareMixFrom(docs: DataFrame, idCol: String, srcCol: String,
-                        perDoc: DataFrame, epochCap: Int = 4,
-                        budgetNum: Int = 2, budgetDen: Int = 1,
-                        rStar: Double = 15.4): DataFrame = {
+                        perDoc: DataFrame): DataFrame = {
     val per = CacheScope.persist(docs
       .select(col(idCol).cast("long").as("doc_id"), col(srcCol).as("source"))
       .join(perDoc, Seq("doc_id"))
@@ -707,8 +705,7 @@ object Scale {
         sum(col("n_tokens_removed")).as("n_dup_tokens"),
         (sum(col("n_tokens")) - sum(col("n_tokens_removed"))).as("s"))
       .where(col("s") > 0L))
-    dataConstrainedFrom(per.select(col("source"), col("s")),
-        epochCap, budgetNum, budgetDen, rStar)
+    dataConstrainedFrom(per.select(col("source"), col("s")))
       .join(per.select(col("source"), col("n_raw_tokens"),
         col("n_dup_tokens")), Seq("source"))
       .select(col("source"), col("n_raw_tokens"), col("n_dup_tokens"),
@@ -748,10 +745,7 @@ object Scale {
     * (type-bounded model, corpus-linear scan); in the suite they ride
     * the session-shared KN doc-bigram inventory. */
   def softWeightedMix(docs: DataFrame, idCol: String, srcCol: String,
-                      textCol: String, weights: DataFrame,
-                      epochCap: Int = 4, budgetNum: Int = 2,
-                      budgetDen: Int = 1, rStar: Double = 15.4)
-  : DataFrame = {
+                      textCol: String, weights: DataFrame): DataFrame = {
     val wmu = weights.select(col(idCol),
       expr("CAST(round(loss_weight * 1e6) AS BIGINT)").as("__wmu"))
     val per = CacheScope.persist(docs
@@ -764,8 +758,7 @@ object Scale {
         expr("CAST((2 * sum(CAST(__wmu AS DECIMAL(38,0)) * __nt)" +
           " + 1000000) DIV 2000000 AS BIGINT)").as("s"))
       .where(col("s") > 0L))
-    dataConstrainedFrom(per.select(col("source"), col("s")),
-        epochCap, budgetNum, budgetDen, rStar)
+    dataConstrainedFrom(per.select(col("source"), col("s")))
       .join(per.select(col("source"), col("n_raw_tokens")), Seq("source"))
       .select(col("source"), col("n_raw_tokens"), col("n_tokens"),
         col("cap"), col("allocation"), col("epochs"), col("eff_tokens"),
@@ -797,22 +790,17 @@ object Scale {
     * dedup leg consumes the session-shared q377 build). */
   def allocationAblationFrom(docs: DataFrame, idCol: String,
                              textCol: String, srcCol: String,
-                             weights: DataFrame, perDoc: DataFrame,
-                             epochCap: Int = 4, budgetNum: Int = 2,
-                             budgetDen: Int = 1, rStar: Double = 15.4)
+                             weights: DataFrame, perDoc: DataFrame)
   : DataFrame = {
-    val raw = dataConstrainedMix(docs, srcCol, textCol, epochCap,
-        budgetNum, budgetDen, rStar)
+    val raw = dataConstrainedMix(docs, srcCol, textCol)
       .select(col("source"), col("n_tokens"),
         col("allocation").as("alloc_raw"),
         col("eff_epochs").as("eff_epochs_raw"))
-    val ded = dedupAwareMixFrom(docs, idCol, srcCol, perDoc,
-        epochCap, budgetNum, budgetDen, rStar)
+    val ded = dedupAwareMixFrom(docs, idCol, srcCol, perDoc)
       .select(col("source"), col("n_tokens").as("unique_tokens"),
         col("allocation").as("alloc_dedup"),
         col("eff_epochs").as("eff_epochs_dedup"))
-    val soft = softWeightedMix(docs, idCol, srcCol, textCol, weights,
-        epochCap, budgetNum, budgetDen, rStar)
+    val soft = softWeightedMix(docs, idCol, srcCol, textCol, weights)
       .select(col("source"), col("n_tokens").as("soft_tokens"),
         col("allocation").as("alloc_soft"),
         col("eff_epochs").as("eff_epochs_soft"))

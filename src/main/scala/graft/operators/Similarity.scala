@@ -85,10 +85,10 @@ object Similarity {
     rankedCosine(broadcast(q).crossJoin(c), k)
   }
 
-  /** Deterministic sign-LSH bucket id over the first `nBits` dimensions —
+  /** Deterministic sign-LSH bucket id over the first 4 dimensions —
     * MUST stay aligned with the DuckDB oracles of q34/q45. */
-  private def signBucket(nBits: Int) = expr(
-    s"aggregate(transform(sequence(1, $nBits), " +
+  private def signBucket = expr(
+    "aggregate(transform(sequence(1, 4), " +
     "j -> IF(element_at(emb, j) > CAST(0 AS DOUBLE), shiftleft(1, j-1), 0)), 0, (a,x) -> a+x)")
 
   /** Embedding-cosine near-duplicate PAIRS (the dedup-flavored output, vs the
@@ -96,8 +96,8 @@ object Similarity {
     * with cosine >= threshold, each unordered pair once (id_a < id_b).
     * Bucketed — the join shuffles on the bucket key, never a cross product. */
   def cosineNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-                         threshold: Double, nBits: Int = 4): DataFrame = {
-    val n = withNorm(emb, idCol, vecCol).withColumn("bucket", signBucket(nBits))
+                         threshold: Double): DataFrame = {
+    val n = withNorm(emb, idCol, vecCol).withColumn("bucket", signBucket)
     val a = n.select(col("bucket"), col(idCol).as("id_a"),
       col("emb").as("q_emb"), col("nrm").as("q_nrm"))
     val b = n.select(col("bucket"), col(idCol).as("id_b"),
@@ -128,8 +128,8 @@ object Similarity {
     * (the PageRank lineage discipline). Output:
     * (query_id, mmr_rank, neighbor_id, score). */
   def mmrRerank(emb: DataFrame, idCol: String, vecCol: String,
-                queryPred: org.apache.spark.sql.Column, m: Int, k: Int,
-                lambda: Double = 0.5): DataFrame = {
+                queryPred: org.apache.spark.sql.Column, m: Int, k: Int): DataFrame = {
+    val lambda = 0.5
     require(k >= 1 && m >= k, "need m >= k >= 1")
     def save(df: DataFrame): DataFrame = df.localCheckpoint(true)
     val cand = save(bruteForceKnn(emb, idCol, vecCol, queryPred, m)
@@ -261,8 +261,9 @@ object Similarity {
     *    (d2, cid) / (cos DESC, id ASC) total orders), which is exactly what
     *    the SQL oracle still runs. */
   def ivfKnn(emb: DataFrame, idCol: String, vecCol: String,
-             queryPred: org.apache.spark.sql.Column, k: Int,
-             nlist: Int = 8, nprobe: Int = 2, lloydIters: Int = 2): DataFrame = {
+             queryPred: org.apache.spark.sql.Column, k: Int, lloydIters: Int): DataFrame = {
+    val nlist = 8
+    val nprobe = 2
     // the normalized corpus feeds every Lloyd round plus the assignment and
     // probe branches (2 + lloydIters lineage replays of the parquet scan +
     // norm without pinning) — the standard cache for iterative k-means
@@ -346,13 +347,13 @@ object Similarity {
       .join(c.select(col("neighbor_id"), col("c_emb"), col("c_nrm")), "neighbor_id"), k)
   }
 
-  /** Bucketed approximate top-k: deterministic sign-LSH on the first `nBits`
+  /** Bucketed approximate top-k: deterministic sign-LSH on the first 4
     * dimensions (bucket = bitmask of sign(emb[i])); candidates only within the
     * query's bucket. The candidate join shuffles on the bucket key — no cross
     * product — which is the shape that survives a 100x corpus. */
   def lshKnn(emb: DataFrame, idCol: String, vecCol: String,
-             queryPred: org.apache.spark.sql.Column, k: Int, nBits: Int = 4): DataFrame = {
-    val n = withNorm(emb, idCol, vecCol).withColumn("bucket", signBucket(nBits))
+             queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    val n = withNorm(emb, idCol, vecCol).withColumn("bucket", signBucket)
     val q = n.where(queryPred)
       .select(col("bucket"), col(idCol).as("query_id"),
         col("emb").as("q_emb"), col("nrm").as("q_nrm"))
@@ -492,11 +493,11 @@ object Similarity {
     * ≤ |Q|·k rows. Queries with zero ANN hits still appear (left join,
     * recall 0), so a collapsed index cannot hide as missing rows. */
   def annRecall(emb: DataFrame, idCol: String, vecCol: String,
-                queryPred: org.apache.spark.sql.Column, k: Int, nBits: Int): DataFrame =
+                queryPred: org.apache.spark.sql.Column, k: Int): DataFrame =
     recallCompare(
       bruteForceKnn(emb, idCol, vecCol, queryPred, k)
         .select(col("query_id"), col("neighbor_id")),
-      lshKnn(emb, idCol, vecCol, queryPred, k, nBits)
+      lshKnn(emb, idCol, vecCol, queryPred, k)
         .select(col("query_id"), col("neighbor_id")))
 
   /** The ONE exact-vs-approx recall compare behind [[annRecall]] and
@@ -538,8 +539,8 @@ object Similarity {
     * sequence(0, -1) trap in the projection fold). Output: query_id,
     * n_exact, recall. */
   def jlRecall(emb: DataFrame, idCol: String, vecCol: String,
-               queryPred: org.apache.spark.sql.Column, k: Int = 5,
-               dOut: Int = 16): DataFrame = {
+               queryPred: org.apache.spark.sql.Column, k: Int,
+               dOut: Int): DataFrame = {
     require(k >= 1 && dOut >= 1, "need k >= 1, dOut >= 1")
     // sequence() DESCENDS below its start (sequence(0, -1) = [0, -1]), so
     // an empty embedding would drive element_at(vec, 0) in the projection
@@ -618,7 +619,7 @@ object Similarity {
     * emb/idCol/vecCol/nlist/lloydIters the consumer advertises (the
     * exactSubstringSweep prebuilt rule). */
   def semAssignmentFrames(emb: DataFrame, idCol: String, vecCol: String,
-                          nlist: Int = 8, lloydIters: Int = 2)
+                          nlist: Int, lloydIters: Int)
   : (DataFrame, DataFrame) = {
     val n = CacheScope.persist(withNorm(emb, idCol, vecCol))
     val cents = kmeansCentroids(n, idCol, nlist, lloydIters)
@@ -729,11 +730,11 @@ object Similarity {
     * Output: (cid, band, n_vecs, mean_cos — 6 dp). `(assign, cents)` is
     * the [[semAssignmentFrames]] pair (the shared-cache form). */
   def prototypicalityBandFrom(assign: DataFrame, cents: DataFrame,
-                              idCol: String,
-                              loNum: Int = 1, loDen: Int = 4,
-                              hiNum: Int = 1, hiDen: Int = 4): DataFrame = {
-    require(loNum > 0 && loDen > loNum && hiNum > 0 && hiDen > hiNum,
-      "band fractions must sit strictly inside (0, 1)")
+                              idCol: String): DataFrame = {
+    val loNum = 1
+    val loDen = 4
+    val hiNum = 1
+    val hiDen = 4
     val scored = CacheScope.persist(assign
       .join(broadcast(cents), "cid")
       .withColumn("__cnrm", sqrt(dot_d(col("c_emb"), col("c_emb"))))

@@ -41,9 +41,8 @@ object Sketches {
     * by the oracle. Chapman's +1s make the estimate total (no zero-
     * overlap divide). Output one row:
     * (n1, n2, m, n_hat, n_exact, rel_err). */
-  def captureRecapture(df: DataFrame, idCol: String,
-                       rate: Int = 4): DataFrame = {
-    require(rate >= 2, "capture rate must subsample")
+  def captureRecapture(df: DataFrame, idCol: String): DataFrame = {
+    val rate = 4
     val in1 = pmod(hash60(concat(col(idCol).cast("string"), lit("#cap1"))),
       lit(rate)) === 0
     val in2 = pmod(hash60(concat(col(idCol).cast("string"), lit("#cap2"))),
@@ -68,8 +67,8 @@ object Sketches {
     * buffer per group per task); the exact `count(DISTINCT)` column is there
     * to measure the estimate and would be dropped at real scale — it is the
     * expensive full-shuffle the sketch replaces. */
-  def kmvDistinct(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                  k: Int = 64): DataFrame = {
+  def kmvDistinct(df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame = {
+    val k = 64
     val kmv = udaf(new graft.functions.KmvAgg(k), Encoders.scalaLong)
     df.groupBy(groupCols.map(col): _*)
       .agg(
@@ -101,7 +100,8 @@ object Sketches {
     * except theirs hides inside one query execution. Callers timing this
     * operator must wrap construction, not just the final action. */
   def bloomSemiJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-                    dimKey: String, expectedItems: Long = 100000L): DataFrame = {
+                    dimKey: String): DataFrame = {
+    val expectedItems: Long = 10000L
     val bfAgg = new BloomFilterAggregate(
       GraftShims.expression(xxhash64(col(dimKey))), expectedItems)
     val bytes = dim.select(GraftShims.column(bfAgg.toAggregateExpression()).as("bf"))
@@ -136,8 +136,9 @@ object Sketches {
     * multi-day shape). The exact column is the full-shuffle the sketch
     * replaces, kept for calibration like [[kmvDistinct]]. */
   def cmsPointEstimates(items: DataFrame, keyCol: String, queries: DataFrame,
-                        w: Int = 1024, d: Int = 4): DataFrame = {
-    require(w >= 2 && d >= 1 && d <= 4, "need w >= 2, 1 <= d <= 4 (8-hex slices of one md5)")
+                        w: Int): DataFrame = {
+    val d = 4
+    require(w >= 2, "need w >= 2")
     val rows = (0 until d).map(j => struct(lit(j).as("j"),
       pmod(conv(substring(md5(col(keyCol).cast("string")), j * 8 + 1, 8), 16, 10)
         .cast("long"), lit(w)).as("b")))
@@ -259,8 +260,8 @@ object Sketches {
     * at 2^53 still order correctly and the selected set is exact, not
     * approximately-bottom. The estimate is then a division of two exact
     * integers. O(k) state per (group, task) — never a per-group sort. */
-  def kmvPairwiseJaccard(df: DataFrame, groupCol: String, textCol: String,
-                         gramN: Int, k: Int = 256): DataFrame = {
+  def kmvPairwiseJaccard(df: DataFrame, groupCol: String, textCol: String, k: Int): DataFrame = {
+    val gramN = 5
     val topk = graft.functions.TopKAgg.columnAgg(k)
     val grams = df.select(col(groupCol).as("__g"),
         split(col(textCol), " ").as("toks"))
@@ -298,7 +299,7 @@ object Sketches {
     * Raw Flajolet estimator, exact-integer harmonic sum: bit-reproducible
     * by a SQL oracle (see HllAgg scaladoc). */
   def hllDistinct(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                  p: Int = 12): DataFrame = {
+                  p: Int): DataFrame = {
     val hll = udaf(new graft.functions.HllAgg(p), Encoders.scalaLong)
     df.groupBy(groupCols.map(col): _*)
       .agg(hll(hash60(col(valueCol))).as("hll_distinct"),
@@ -326,9 +327,9 @@ object Sketches {
     * Oracle: `row_number() OVER (PARTITION BY g ORDER BY hash60, value)
     * <= k` then quantile_cont, replayed verbatim. */
   def rankSketchQuantiles(df: DataFrame, groupCol: String, idCol: String,
-                          valueCol: String, k: Int = 1024,
-                          band: Double = 0.06): DataFrame = {
-    require(k >= 2 && band > 0.0, "need k >= 2 and band > 0")
+                          valueCol: String, k: Int): DataFrame = {
+    val band = 0.06
+    require(k >= 2, "need k >= 2")
     val samp = df.groupBy(col(groupCol))
       .agg(graft.functions.BottomKSampleAgg.columnAgg(k)(
         hash60(col(idCol)), col(valueCol)).as("__s"),

@@ -179,7 +179,7 @@ object Stats {
     * the conditional sums) joined on the group key — both shuffles are on
     * the group key and AQE broadcasts the tiny bounds table. */
   def winsorizedMean(df: DataFrame, groupCol: String, valueCol: String,
-                     pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
+                     pLo: Double, pHi: Double): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, s"need 0 <= pLo < pHi <= 1")
     val v = col(valueCol)
     val bounds = df.groupBy(col(groupCol))
@@ -313,8 +313,8 @@ object Stats {
     * value. A triggered SRM invalidates the experiment before any
     * metric is read. One exact-count aggregate; χ² is two fixed-order
     * terms. Output: (n_a, n_b, chi2, srm). */
-  def srmCheck(units: DataFrame, armCol: Column,
-               chi2Crit: Double = 3.841459): DataFrame = {
+  def srmCheck(units: DataFrame, armCol: Column): DataFrame = {
+    val chi2Crit = 3.841459
     val agg = units.agg(
       count(when(armCol === 0, 1)).as("n_a"),
       count(when(armCol === 1, 1)).as("n_b"))
@@ -568,7 +568,7 @@ object Stats {
     * DECIMAL(38,0). No windows: a lag window would also work, but one
     * equi-join handles ALL lags in a single shuffle. */
   def acfByKey(df: DataFrame, keyCol: String, tCol: String, vCol: String,
-               maxLag: Int = 3): DataFrame = {
+               maxLag: Int): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val lags = (1 to maxLag).map(l => s"($l)").mkString("VALUES ", ", ", " AS t(lag)")
     val lagDf = df.sparkSession.sql(s"SELECT lag FROM ($lags)")

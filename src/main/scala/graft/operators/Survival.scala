@@ -28,7 +28,7 @@ object Survival {
     * because exp/ln are libm (the q219 discipline). Censored users leave
     * risk sets without ever counting as events — the whole point. */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
-                  churnGapDays: Int = 7): DataFrame = {
+                  churnGapDays: Int): DataFrame = {
     val spans = events.groupBy(col(userCol))
       .agg(min(dayIdx(col(tsCol))).as("__first"),
         max(dayIdx(col(tsCol))).as("__last"))

@@ -261,7 +261,7 @@ object Temporal {
     * Output: (state, pi_mu BIGINT, pi DOUBLE). */
   def markovStationary(events: DataFrame, keyCol: String, tsCol: String,
                        typeCol: String, tieCol: String,
-                       iters: Int = 12): DataFrame = {
+                       iters: Int): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol), col(tieCol))
     val counts = events
@@ -396,7 +396,7 @@ object Temporal {
   def markovRemovalAttribution(events: DataFrame, userCol: String,
                                tsCol: String, typeCol: String,
                                tieCol: String, convType: String,
-                               iters: Int = 12): DataFrame = {
+                               iters: Int): DataFrame = {
     require(iters >= 1, "need at least one absorption step")
     val w = Window.partitionBy(col("__u")).orderBy(col("__ts"), col("__tie"))
     val ev0 = events.select(col(userCol).as("__u"), col(tsCol).as("__ts"),
@@ -670,9 +670,8 @@ object Temporal {
     * timestamps would re-open timezone/precision questions). The lag
     * windows run over the per-key DAILY table (≤ days×keys rows), not
     * events. */
-  def wmaTrend(events: DataFrame, keyCol: String, tsCol: String,
-               k: Int = 7): DataFrame = {
-    require(k >= 2, "window k must be >= 2")
+  def wmaTrend(events: DataFrame, keyCol: String, tsCol: String): DataFrame = {
+    val k = 7
     val daily = events
       .groupBy(col(keyCol), dayIdx(col(tsCol)).as("day_idx"))
       .agg(count(lit(1)).as("n"))
@@ -983,10 +982,11 @@ object Temporal {
     * period 7), so gaps never shift the alignment; seasonals start at 0
     * and are learned online (γ-updates from the first row — the
     * deterministic alternative to the classic first-cycle
-    * initialization, scaladoc'd so the contract is explicit). period
-    * must be ≥ 2 (forecast_next reads the NEXT day's slot from the
-    * pre-update vector, which only differs from the just-updated slot
-    * when period > 1).
+    * initialization, scaladoc'd so the contract is explicit). The
+    * smoothing constants are α = 0.4, β = 0.2, γ = 0.3 and period = 7
+    * (forecast_next reads the NEXT day's slot from the pre-update
+    * vector, which only differs from the just-updated slot when
+    * period > 1).
     *
     * Same scale/determinism posture as [[holtLinear]]: one in-row fold
     * per key over the calendar-bounded day series (state: 2 doubles +
@@ -995,12 +995,10 @@ object Temporal {
     * IEEE sequence. Output: (key, day_idx, v, level, trend, season,
     * forecast_next). */
   def holtWinters(events: DataFrame, keyCol: String, tsCol: String,
-                  valueCol: String, alpha: Double, beta: Double,
-                  gamma: Double, period: Int = 7): DataFrame = {
-    require(period >= 2, "period must be >= 2")
+                  valueCol: String): DataFrame = {
+    val (a, b, g, m) = (0.4, 0.2, 0.3, 7)
     val daily = dailySums(events, keyCol, tsCol, valueCol)
-    val (a, b, g, m) = (alpha, beta, gamma, period)
-    val (na, nb, ng) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
+    val (na, nb, ng) = (1.0 - a, 1.0 - b, 1.0 - g)
     // floor-mod: a pre-1970 timestamp makes day negative, and % would
     // hand element_at a non-positive index (index 0 errors; negatives
     // silently read from the END of the seasonal vector)
@@ -1185,8 +1183,8 @@ object Temporal {
     * appearance. Scale: one keyed daily aggregate, two self-joins on the
     * CALENDAR-bounded day grid, two 1-row reduces. */
   def forecastBacktest(orders: DataFrame, dateCol: String,
-                       amountCol: String, cutoffDay: Long,
-                       season: Int = 7): DataFrame = {
+                       amountCol: String, cutoffDay: Long): DataFrame = {
+    val season = 7
     val daily = orders
       .groupBy(dayIdx(col(dateCol)).as("day"))
       .agg(sum((col(amountCol).cast(DecimalType(12, 2)) * 100)
@@ -1270,8 +1268,8 @@ object Temporal {
     * journey cut scans more.
     */
   def shapleyAttribution(events: DataFrame, userCol: String, tsCol: String,
-                         typeCol: String, tieCol: String, convType: String,
-                         maxChannels: Int = 16): DataFrame = {
+                         typeCol: String, tieCol: String, convType: String): DataFrame = {
+    val maxChannels = 16
     val spark = events.sparkSession
     import spark.implicits._
     val w = Window.partitionBy(col("__u")).orderBy(col("__ts"), col("__tie"))

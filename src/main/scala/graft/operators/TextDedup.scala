@@ -57,10 +57,8 @@ object TextDedup {
     * still collision-guarded. Shared by the streaming ingest gate
     * ([[graft.streaming.IncrementalNearDup]]) and the batch twin
     * [[crossRunVerdicts]] — one signature scheme, two consumption modes. */
-  def bandSignatureRows(docs: DataFrame, idCol: String, textCol: String,
-                        bands: Int = 4, shingleK: Int = 3): DataFrame = {
-    require(bands <= 4, "2 draws/band x 4-hex-char slices must fit one md5 digest")
-    val banded = stackBands(minhashSigs(docs, idCol, textCol, shingleK, bands), idCol, bands)
+  def bandSignatureRows(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val banded = stackBands(minhashSigs(docs, idCol, textCol), idCol)
     val sentinels = docs.select(col(idCol),
       lit(-1).as("band"), md5(col(textCol)).as("sig"))
     banded.unionByName(sentinels)
@@ -90,9 +88,8 @@ object TextDedup {
     * warehouse scale), and the per-doc verdict aggregate; nothing is
     * all-pairs, and the store is never materialized per-doc. */
   def crossRunVerdicts(storeSigs: DataFrame, batch: DataFrame,
-                       idCol: String, textCol: String,
-                       bands: Int = 4, shingleK: Int = 3): DataFrame = {
-    val sigs = bandSignatureRows(batch, idCol, textCol, bands, shingleK)
+                       idCol: String, textCol: String): DataFrame = {
+    val sigs = bandSignatureRows(batch, idCol, textCol)
     val storeKeys = storeSigs.select(col("band"), col("sig")).distinct()
     val minPerBucket = sigs.groupBy(col("band"), col("sig"))
       .agg(min(col(idCol)).as("__min_id"))
@@ -107,17 +104,21 @@ object TextDedup {
         col("store_hits") === lit(0L) && col("batch_prior_hits") === lit(0L))
   }
 
+  /** The MinHash band scheme every signature here uses: word 3-shingles,
+    * 4 bands of 2 draws each (8 4-hex-char md5 slices fit one digest). */
+  private val shingleK = 3
+  private val bands = 4
+
   /** Each doc's 2·bands-draw MinHash signature `mh`, one native
     * [[graft.functions.MinHashSigs]] pass; docs with no shingles drop. */
-  private def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
-                          shingleK: Int, bands: Int): DataFrame =
+  private def minhashSigs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol), graft.functions.MinHashSigs.minhash_sigs(
         split(col(textCol), " "), shingleK, 2 * bands).as("mh"))
       .where(col("mh").isNotNull)
 
   /** The (idCol, band, sig) rows of a [[minhashSigs]] frame: band b
     * concatenates the minima of draws 2b and 2b+1. */
-  private def stackBands(sigs: DataFrame, idCol: String, bands: Int): DataFrame = {
+  private def stackBands(sigs: DataFrame, idCol: String): DataFrame = {
     val stacked = (0 until bands)
       .map(b => s"$b, concat(mh[${2 * b}], mh[${2 * b + 1}])").mkString(", ")
     sigs.select(col(idCol), expr(s"stack($bands, $stacked) AS (band, sig)"))
@@ -129,7 +130,7 @@ object TextDedup {
     * pair (a semi-join — typically a tiny fraction of the corpus), then
     * intersects in-row. */
   private def bandCandidates(sig: DataFrame, docs: DataFrame, idCol: String,
-                             textCol: String, shingleK: Int): (DataFrame, DataFrame) = {
+                             textCol: String): (DataFrame, DataFrame) = {
     val a = sig.select(col("band"), col("sig"), col(idCol).as("doc_a"))
     val b = sig.select(col("band"), col("sig"), col(idCol).as("doc_b"))
     val cand = a.join(b, Seq("band", "sig"))
@@ -156,17 +157,15 @@ object TextDedup {
     * all-pairs; the exact Jaccard filter then removes false positives.
     */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          shingleK: Int = 3, bands: Int = 4,
                           threshold: Double = 0.5): DataFrame = {
-    require(bands <= 4, "2 draws/band x 4-hex-char slices must fit one md5 digest")
     // Per-band min-hash signatures in ONE native pass over the token array
     // (no intermediate shingle/hash arrays — see MinHashSigs). Band b
     // concatenates the minima of draws 2b and 2b+1. The sig table is tiny
     // (bands rows per doc) and consumed by both sides of the self-join, so
     // it is persisted; at cluster scale a checkpoint plays this role.
     val sig = CacheScope.persist(
-      stackBands(minhashSigs(docs, idCol, textCol, shingleK, bands), idCol, bands))
-    val (cand, sets) = bandCandidates(sig, docs, idCol, textCol, shingleK)
+      stackBands(minhashSigs(docs, idCol, textCol), idCol))
+    val (cand, sets) = bandCandidates(sig, docs, idCol, textCol)
     cand
       .join(sets.toDF("doc_a", "sh_a"), "doc_a")
       .join(sets.toDF("doc_b", "sh_b"), "doc_b")
@@ -193,8 +192,10 @@ object TextDedup {
     * persist keeps the whole chain and planning cost grows superlinearly),
     * through [[CacheScope.checkpoint]]: reliable when the session has a
     * checkpoint dir, else local. */
-  def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
-                          bCol: String = "doc_b", maxIter: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val aCol = "doc_a"
+    val bCol = "doc_b"
+    val maxIter = 50
     val edges = checkpoint(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct())
@@ -219,7 +220,7 @@ object TextDedup {
     // is not the expected shape — fail loudly.
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter iterations " +
-        "(component diameter exceeds maxIter); raise maxIter")
+        "(component diameter exceeds it)")
     labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -388,9 +389,9 @@ object TextDedup {
     * inventory built with the same arguments, SharedFormsSpec-pinned). */
   def exactSubstringSweep(docs: DataFrame, idCol: String, textCol: String,
                           ls: Seq[Int] = Seq(10, 20, 40),
-                          maxDf: Int = 10,
                           prebuilt: Map[Int, DataFrame] = Map.empty)
   : DataFrame = {
+    val maxDf = 10
     require(ls.nonEmpty && ls.forall(_ >= 2), "need window lengths >= 2")
     prebuilt.values.foreach(f => require(
       f.columns.toSeq == Seq("doc_a", "doc_b", "a_start", "b_start",
@@ -497,9 +498,10 @@ object TextDedup {
     *     division a SQL oracle computes from plain array intersection.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 8, maxDfFrac: Double = 0.02,
-                        threshold: Double = 0.5, minShared: Int = 2,
+                        maxDfFrac: Double, threshold: Double,
                         maxInRow: Int = 1024): DataFrame = {
+    val n = 8
+    val minShared = 2
     // ONE parse of the corpus, cached in array form (one row per doc - the
     // cheapest shape to cache); every consumer below re-explodes from this
     // cache instead of re-parsing text. The harness releases all CacheScope
@@ -616,8 +618,10 @@ object TextDedup {
     * near-unique (no df-cap needed — and none is wanted: dropping a common
     * shingle could hide real contamination). */
   def contaminationPairs(corpus: DataFrame, idCol: String, textCol: String,
-                         evalDocs: DataFrame, evalIdCol: String, evalTextCol: String,
-                         k: Int = 13, minShared: Int = 1): DataFrame = {
+                         evalDocs: DataFrame, evalIdCol: String,
+                         evalTextCol: String): DataFrame = {
+    val k = 13
+    val minShared = 1
     require(idCol != evalIdCol,
       "corpus and eval id columns must have distinct names (both appear in the output)")
     // shingle identities travel as 64-bit hashes (token_ngram_distinct_hashes:
@@ -656,8 +660,8 @@ object TextDedup {
     * per-gram md5 — the same move that took q85 from 3.9 to 1.1 s), so
     * shuffles carry longs, never gram text; the raw-string oracle matches
     * exactly absent a 2⁻⁶⁴ collision (q85/q118's accepted discipline). */
-  def crossGroupOverlap(docs: DataFrame, groupCol: String, textCol: String,
-                        k: Int = 5): DataFrame =
+  def crossGroupOverlap(docs: DataFrame, groupCol: String, textCol: String): DataFrame = {
+    val k = 5
     docs.select(col(groupCol).as("g"),
         explode(graft.functions.TokenNgrams
           .token_ngram_distinct_hashes(col(textCol), k)).as("gh"))
@@ -670,16 +674,15 @@ object TextDedup {
         .as("p"))
       .groupBy(col("p.a").as("group_a"), col("p.b").as("group_b"))
       .agg(count(lit(1)).as("n_shared_grams"))
+  }
 
   /** SimHash near-duplicate pairs: 64-bit SimHash over tokens (native codegen
     * expression), split into `nBands` bit-bands; pairs sharing any band are
     * candidates; kept if total Hamming distance <= maxHamming. Bucketed on
     * (band index, band bits) — never all-pairs. */
-  def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          nBands: Int = 4, maxHamming: Int = 8): DataFrame = {
-    require(64 % nBands == 0 && nBands >= 2,
-      "nBands must divide 64 and be >= 2 (nBands=1 would need a 64-bit mask, " +
-        "and a single 64-bit band is just exact-hash equality, not banding)")
+  def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val nBands = 4
+    val maxHamming = 8
     val w = 64 / nBands
     val hashed = docs.select(col(idCol),
       graft.functions.TextHashes.simhash64(tokens(textCol)).as("sh64"))
@@ -818,8 +821,7 @@ object TextDedup {
     * hot key). Output: doc_a, doc_b (a < b), n_shared. Ids must be
     * integers in [0, 2^32); any other id fails the query. */
   def winnowNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 5, w: Int = 4, minShared: Long = 2,
-                         maxDf: Long = 20): DataFrame = {
+                         k: Int, w: Int, minShared: Long, maxDf: Long): DataFrame = {
     val fps = CacheScope.persist(winnowedFingerprints(docs, idCol, textCol, k, w))
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
       .where(col("__df") <= maxDf).select(col("fp"))
@@ -850,7 +852,8 @@ object TextDedup {
   }
 
   def dupNgramFraction(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int, minDocs: Int = 2): DataFrame = {
+                       n: Int): DataFrame = {
+    val minDocs = 2
     val grams = docs.select(col(idCol), explode(graft.functions.TokenNgrams
       .token_ngram_distinct_hashes(col(textCol), n)).as("gh"))
     val df = grams.groupBy(col("gh")).agg(count(lit(1)).as("__df"))
@@ -877,13 +880,11 @@ object TextDedup {
     * (never all-pairs); the estimate is an in-row zip over two
     * 2·bands-element signature arrays; exact verification builds shingle
     * arrays only for candidate docs (semi-join). */
-  def minhashCalibration(docs: DataFrame, idCol: String, textCol: String,
-                         shingleK: Int = 3, bands: Int = 4): DataFrame = {
-    require(bands <= 4, "2 draws/band x 4-hex-char slices must fit one md5 digest")
+  def minhashCalibration(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val nDraws = 2 * bands
-    val sigs = CacheScope.persist(minhashSigs(docs, idCol, textCol, shingleK, bands))
+    val sigs = CacheScope.persist(minhashSigs(docs, idCol, textCol))
     val (cand, sets) =
-      bandCandidates(stackBands(sigs, idCol, bands), docs, idCol, textCol, shingleK)
+      bandCandidates(stackBands(sigs, idCol), docs, idCol, textCol)
     cand
       .join(sigs.toDF("doc_a", "mh_a"), "doc_a")
       .join(sigs.toDF("doc_b", "mh_b"), "doc_b")
@@ -936,8 +937,10 @@ object TextDedup {
     * `cmpChars`-char prefixes, so each call is O(cmpChars^2) constant work,
     * not O(doc^2). */
   def blockedEditDistance(docs: DataFrame, idCol: String, textCol: String,
-                          blockChars: Int = 16, cmpChars: Int = 64,
-                          maxDist: Int = 20, maxBlock: Int = 50): DataFrame = {
+                          maxBlock: Int): DataFrame = {
+    val blockChars = 16
+    val cmpChars = 64
+    val maxDist = 20
     val rows = docs.select(col(idCol).as("__id"),
       substring(col(textCol), 1, blockChars).as("__blk"),
       substring(col(textCol), 1, cmpChars).as("__pfx"))
@@ -987,7 +990,7 @@ object TextDedup {
     * [[ngramJaccardPairs]] remains the screen-first choice for low
     * thresholds, PPJoin the lossless high-t verifier. */
   def ppjoinPairs(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int = 8, threshold: Double = 0.5): DataFrame = {
+                  n: Int, threshold: Double): DataFrame = {
     val sets = CacheScope.persist(
       charNgramHashSets(docs, idCol, textCol, n)
         .withColumn("sz", size(col("gs")).cast("bigint"))
@@ -1072,7 +1075,7 @@ object TextDedup {
     * Output: one row per maximal run — (doc_a, doc_b, a_start, b_start,
     * run_tokens), 1-based token offsets, doc_a < doc_b. */
   def exactSubstringRuns(docs: DataFrame, idCol: String, textCol: String,
-                         l: Int = 20, maxDf: Int = 10): DataFrame = {
+                         l: Int, maxDf: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // One native single-pass expression mints every window's 64-bit
     // FNV-1a byte-span fingerprint (token_window_hashes): no token
@@ -1218,9 +1221,9 @@ object TextDedup {
     * clean_text, "" when every token was removed); exists for
     * composition (the idempotence spec re-runs the operator on it). */
   def exactSubstringRebuild(docs: DataFrame, idCol: String, textCol: String,
-                            l: Int = 20, maxDf: Int = 10): DataFrame =
+                            l: Int): DataFrame =
     exactSubstrFlagged(docs, idCol, textCol,
-        exactSubstringRuns(docs, idCol, textCol, l, maxDf))
+        exactSubstringRuns(docs, idCol, textCol, l, maxDf = 10))
       .groupBy(col("doc_id"))
       .agg(array_join(
         transform(
@@ -1280,8 +1283,8 @@ object TextDedup {
     * On replica corpora the keeper group count stays constant; cost
     * rides the tile shuffles, never pairs.
     */
-  def c4SpanDedup(docs: DataFrame, idCol: String, textCol: String,
-                  tileTokens: Int = 4): DataFrame = {
+  def c4SpanDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val tileTokens = 4
     val tiles = tileInventory(docs, idCol, textCol, tileTokens)
       .select(col("doc_id"), col("tpos"),
         array_join(col("lts"), " ").as("tile"))
@@ -1421,9 +1424,8 @@ object TextDedup {
     * n_lines, n_lines_dropped, n_tokens_kept, clean_md5 (md5 of the
     * space-rejoined surviving text; md5("") for fully-dropped docs — the
     * hash travels instead of the text so the result stays narrow). */
-  def lineDedup(docs: DataFrame, idCol: String, textCol: String,
-                lineTokens: Int = 3, minDocs: Int = 3): DataFrame =
-    rebuildFlagged(lineFlagged(docs, idCol, textCol, lineTokens, minDocs))
+  def lineDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    rebuildFlagged(lineFlagged(docs, idCol, textCol))
 
   /** INTRA-document line dedup with reconstruction — the CCNet "remove
     * repeated paragraphs within a document" stage, the WITHIN-doc
@@ -1440,9 +1442,8 @@ object TextDedup {
     * rare dedup stage with zero corpus-global state).
     * Output per doc: n_lines, n_lines_dropped, n_tokens_kept,
     * clean_md5. */
-  def intraDocLineDedup(docs: DataFrame, idCol: String, textCol: String,
-                        lineTokens: Int = 3): DataFrame = {
-    require(lineTokens >= 1, "need lineTokens >= 1")
+  def intraDocLineDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val lineTokens = 3
     val lines = tileInventory(docs, idCol, textCol, lineTokens)
       .select(col("doc_id"), col("tpos").as("lpos"),
         array_join(col("lts"), " ").as("line"),
@@ -1469,12 +1470,13 @@ object TextDedup {
             t => t.getField("line")), " ")).as("clean_md5"))
 
   /** [[lineDedup]]'s flagged line inventory — (doc_id, lpos, line, ntoks,
-    * __keep) with __keep false exactly for boilerplate lines (document
-    * frequency >= minDocs) — shared with [[cleanTextRebuild]] so the keep
-    * rule can never drift between the census and the rebuild. */
-  private def lineFlagged(docs: DataFrame, idCol: String, textCol: String,
-                          lineTokens: Int, minDocs: Int): DataFrame = {
-    require(lineTokens >= 1 && minDocs >= 2, "need lineTokens>=1, minDocs>=2")
+    * __keep) with __keep false exactly for boilerplate lines (3-token
+    * lines with document frequency >= 3) — shared with
+    * [[cleanTextRebuild]] so the keep rule can never drift between the
+    * census and the rebuild. */
+  private def lineFlagged(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val lineTokens = 3
+    val minDocs = 3
     val lines = tileInventory(docs, idCol, textCol, lineTokens)
       .select(col("doc_id"), col("tpos").as("lpos"),
         array_join(col("lts"), " ").as("line"),
@@ -1490,9 +1492,8 @@ object TextDedup {
     * — the frame downstream CLEAN-TEXT consumers start from (the census
     * form ships clean_md5 so the result stays narrow; this form exists
     * for composition). */
-  def cleanTextRebuild(docs: DataFrame, idCol: String, textCol: String,
-                       lineTokens: Int = 3, minDocs: Int = 3): DataFrame =
-    lineFlagged(docs, idCol, textCol, lineTokens, minDocs)
+  def cleanTextRebuild(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    lineFlagged(docs, idCol, textCol)
       .groupBy(col("doc_id"))
       .agg(array_join(
         transform(
@@ -1517,14 +1518,9 @@ object TextDedup {
     * Scale: [[lineDedup]]'s scan-shaped stages plus the bucketed pair
     * stage — no new shuffle classes. Output: (doc_a, doc_b, jaccard) on
     * clean shingles. */
-  def paragraphMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                            lineTokens: Int = 3, minDocs: Int = 3,
-                            shingleK: Int = 3, bands: Int = 4,
-                            threshold: Double = 0.5): DataFrame = {
-    val clean = CacheScope.persist(
-      cleanTextRebuild(docs, idCol, textCol, lineTokens, minDocs))
-    minhashNearDupPairs(clean, "doc_id", "clean_text",
-      shingleK, bands, threshold)
+  def paragraphMinhashPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val clean = CacheScope.persist(cleanTextRebuild(docs, idCol, textCol))
+    minhashNearDupPairs(clean, "doc_id", "clean_text")
   }
 
   /** Span-level EVAL-SET DECONTAMINATION with document reconstruction —
@@ -1552,8 +1548,8 @@ object TextDedup {
     * clean_md5 — the [[lineDedup]] narrow contract (md5("") when every
     * tile matched the eval set). */
   def decontaminateSpans(docs: DataFrame, idCol: String, textCol: String,
-                         evalPred: Column, tileTokens: Int = 4): DataFrame = {
-    require(tileTokens >= 1, "need tileTokens >= 1")
+                         evalPred: Column): DataFrame = {
+    val tileTokens = 4
     val evalTiles = tileInventory(docs.where(evalPred), idCol, textCol,
         tileTokens)
       .select(array_join(col("lts"), " ").as("tile")).distinct()
@@ -1788,9 +1784,8 @@ object TextDedup {
     * Scale: ONE tokenize pass feeds every word-level aggregate (all
     * doc-keyed); the line rules ride the shared tile inventory — zero
     * corpus-global state, the q375 shape. */
-  def gopherQualityRules(docs: DataFrame, idCol: String, textCol: String,
-                         lineTokens: Int = 3): DataFrame = {
-    require(lineTokens >= 1, "need lineTokens >= 1")
+  def gopherQualityRules(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val lineTokens = 3
     val stops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
     val words = docs.select(col(idCol).cast("long").as("doc_id"),
         explode(split(coalesce(col(textCol), lit("")), " ")).as("w"))
@@ -2163,17 +2158,20 @@ object TextDedup {
     perK.reduce(_.unionByName(_))
   }
 
+  /** The window length, in tokens, of both cross-snapshot dedup forms. */
+  private val snapshotL = 20
+
   /** Window-fingerprint inventory shared by the cross-snapshot dedup
-    * forms: (doc_id, i 1-based, fp) — one row per sliding `l`-token
-    * window, fingerprints minted natively
+    * forms: (doc_id, i 1-based, fp) — one row per sliding
+    * [[snapshotL]]-token window, fingerprints minted natively
     * ([[graft.functions.TokenNgrams.token_window_hashes]], the q300
     * join-identity precedent; the oracle keys on md5(window), the same
     * partition of windows). */
   private[graft] def windowFpInventory(docs: DataFrame, idCol: String,
-                                       textCol: String, l: Int): DataFrame =
+                                       textCol: String): DataFrame =
     docs.select(col(idCol).cast("long").as("doc_id"),
         posexplode(graft.functions.TokenNgrams.token_window_hashes(
-          coalesce(col(textCol), lit("")), l)).as(Seq("__p0", "fp")))
+          coalesce(col(textCol), lit("")), snapshotL)).as(Seq("__p0", "fp")))
       .select(col("doc_id"), (col("__p0") + 1).cast("long").as("i"),
         col("fp"))
 
@@ -2183,8 +2181,7 @@ object TextDedup {
     * a previous snapshot) or shared with a SMALLER doc_id inside the
     * snapshot itself (the doc_a < doc_b removal-from-later policy of
     * [[exactSubstringDedupFrom]], applied intra-snapshot). */
-  private[graft] def snapshotCovered(inv: DataFrame, storeFps: DataFrame,
-                                     l: Int): DataFrame = {
+  private[graft] def snapshotCovered(inv: DataFrame, storeFps: DataFrame): DataFrame = {
     val storeHit = inv.join(storeFps.select(col("fp")), Seq("fp"),
         "left_semi")
       .select(col("doc_id"), col("i"))
@@ -2198,7 +2195,7 @@ object TextDedup {
       .select(col("doc_id"), col("i"))
     storeHit.unionByName(intraHit)
       .select(col("doc_id"),
-        explode(sequence(col("i"), col("i") + l - 1)).as("pos"))
+        explode(sequence(col("i"), col("i") + snapshotL - 1)).as("pos"))
       .distinct()
   }
 
@@ -2209,7 +2206,7 @@ object TextDedup {
     * `oldDocs` WITHOUT recomputing the old corpus's run inventory —
     * the store holds fingerprints, not positions, so cross-snapshot
     * removal needs no pair join and no run stitching. A new doc's token
-    * position is removed iff covered by an `l`-token window shared with
+    * position is removed iff covered by an `l`-token window (l = 20) shared with
     * ANY old doc or with a smaller-id doc in the same snapshot
     * ([[snapshotCovered]]); the survivor is rebuilt from its remaining
     * tokens in order. Docs shorter than `l` tokens carry no window and
@@ -2229,14 +2226,12 @@ object TextDedup {
     * and the per-fp aggregate never grow); the covered explode tracks the
     * duplicated mass. */
   def snapshotSubstrDedup(newDocs: DataFrame, oldDocs: DataFrame,
-                          idCol: String, textCol: String, l: Int = 20)
+                          idCol: String, textCol: String)
   : DataFrame = {
-    require(l >= 1, "need window length >= 1")
-    val store = windowFpInventory(oldDocs, idCol, textCol, l)
+    val store = windowFpInventory(oldDocs, idCol, textCol)
       .select(col("fp")).distinct()
-    val inv = CacheScope.persist(
-      windowFpInventory(newDocs, idCol, textCol, l))
-    rebuildUncovered(newDocs, idCol, textCol, snapshotCovered(inv, store, l))(
+    val inv = CacheScope.persist(windowFpInventory(newDocs, idCol, textCol))
+    rebuildUncovered(newDocs, idCol, textCol, snapshotCovered(inv, store))(
       kept => md5(kept).as("clean_md5"))
   }
 
@@ -2333,10 +2328,10 @@ object TextDedup {
     * (doc_id, source) map — the shared-cache form (SharedFormsSpec
     * compares it against fresh inventories). */
   def memorizationRiskBySourceFrom(ks: Seq[(Int, DataFrame)],
-                                   src: DataFrame, highNum: Int = 1,
-                                   highDen: Int = 2): DataFrame = {
+                                   src: DataFrame): DataFrame = {
+    val highNum = 1
+    val highDen = 2
     require(ks.nonEmpty && ks.forall(_._1 >= 1), "need window lengths >= 1")
-    require(highNum > 0 && highDen > 0, "need a positive high-risk ratio")
     val perK = ks.map { case (k, pw) =>
       val byPrefix = pw.groupBy(col("fp"))
         .agg(count(lit(1)).as("occ"), countDistinct(col("nxt")).as("ncont"))

@@ -429,9 +429,9 @@ object TextLm {
     * [[knBigramModel]] (one model join + one per-doc aggregate here).
     * Output: doc_id, n_bigrams, mink_xent (nats, 6 dp; docs with <2
     * tokens omitted — the [[bigramCrossEntropy]] contract). */
-  def minKProbFrom(docBig: DataFrame, model: DataFrame, idCol: String,
-                   kNum: Int = 1, kDen: Int = 5): DataFrame = {
-    require(kNum > 0 && kDen >= kNum, "need 0 < kNum <= kDen")
+  def minKProbFrom(docBig: DataFrame, model: DataFrame, idCol: String): DataFrame = {
+    val kNum = 1
+    val kDen = 5
     bottomKFold(docBig.join(model, Seq("w1", "w2")), idCol, "lp_mu", kNum, kDen)
       .select(col(idCol), col("m").as("n_bigrams"),
         (expr("CAST((2 * (-agg.s) + agg.t) DIV (2 * agg.t) AS BIGINT)")
@@ -603,10 +603,10 @@ object TextLm {
     * model and the |domains|-row round ladder are built here). */
   def doremiWeightsFrom(docBig: DataFrame, knModel: DataFrame,
                         docs: DataFrame, idCol: String, textCol: String,
-                        srcCol: String, rounds: Int = 4, smoothNum: Int = 1,
-                        smoothDen: Int = 5): DataFrame = {
-    require(rounds >= 1 && smoothNum > 0 && smoothDen > smoothNum,
-      "need rounds >= 1 and 0 < smoothNum < smoothDen")
+                        srcCol: String): DataFrame = {
+    val rounds = 4
+    val smoothNum = 1
+    val smoothDen = 5
     val perDoc = excessSums(docBig, knModel, docs, idCol, textCol)
       .select(col(idCol), col("m"),
         greatest(halfUpMu("mua") - halfUpMu("muk"), lit(0L)).as("__e"))
@@ -792,7 +792,7 @@ object TextLm {
     * Output: (rnk, idCol, log_weight, gumbel, score) — nats, 6 dp. */
   def dsirResampleFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
                        textCol: String, targetPred: Column,
-                       k: Int = 100): DataFrame = {
+                       k: Int): DataFrame = {
     require(k >= 1, "need k >= 1")
     val dflag = docBig.join(
       docs.select(col(idCol), targetPred.as("__tgt")), idCol)
@@ -1010,10 +1010,8 @@ object TextLm {
     * produced NULL (RoundSixteenShelfSpec's hand-computed replay and the
     * oracle pin the fold). */
   def dataScalingFitFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
-                         textCol: String,
-                         ks: Seq[Int] = Seq(1, 2, 4, 7)): DataFrame = {
-    require(ks.nonEmpty && ks.forall(k => k >= 1 && k <= 7) &&
-      ks == ks.sorted && ks.distinct == ks, "need sorted distinct ks in 1..7")
+                         textCol: String): DataFrame = {
+    val ks = Seq(1, 2, 4, 7)
     val eighth = 144115188075855872L // 2^57 = 2^60 / 8
     val flags = docs.select(col(idCol),
       Sketches.hash60(concat_ws("#", lit("ho"),
@@ -1229,9 +1227,9 @@ object TextLm {
     * n_bigrams, minkpp (mean bottom-k z, 6 dp — typically negative).
     * `docBig` is a prebuilt [[docBigrams]] aggregate. */
   def minKppProbFrom(docBig: DataFrame, docs: DataFrame, idCol: String,
-                     textCol: String, kNum: Int = 1,
-                     kDen: Int = 5): DataFrame = {
-    require(kNum > 0 && kDen >= kNum, "need 0 < kNum <= kDen")
+                     textCol: String): DataFrame = {
+    val kNum = 1
+    val kDen = 5
     val big = docBig.groupBy(col("w1"), col("w2")).agg(sum(col("occ")).as("c2"))
     val hist = big.groupBy(col("w1"))
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p"))
@@ -1341,9 +1339,8 @@ object TextLm {
     * n_bigrams (held-out instances), heldout_xent (under λ_r). `docBig`
     * is a prebuilt [[docBigrams]] aggregate. */
   def jmDeletedInterpolationFrom(docBig: DataFrame, docs: DataFrame,
-                                 idCol: String, textCol: String,
-                                 rounds: Int = 3): DataFrame = {
-    require(rounds >= 1 && rounds <= 8, "need 1 <= rounds <= 8")
+                                 idCol: String, textCol: String): DataFrame = {
+    val rounds = 3
     val eighth = 144115188075855872L // 2^57 = 2^60 / 8
     val flags = docs.select(col(idCol),
       (Sketches.hash60(concat_ws("#", lit("ho"),
@@ -1432,9 +1429,7 @@ object TextLm {
     * |langs|-row waterfill carries the lang key. Output per language:
     * lang, n_tokens (kept), cap, allocation, epochs. */
   def langUnimaxFromScored(scoredDocs: DataFrame, docs: DataFrame,
-                           idCol: String, textCol: String, langCol: String,
-                           epochCap: Int = 2, budgetNum: Int = 1,
-                           budgetDen: Int = 2): DataFrame = {
+                           idCol: String, textCol: String, langCol: String): DataFrame = {
     val scored = scoredDocs
       .select(col(idCol), expr("CAST(round(xent * 1e6) AS BIGINT)").as("__xmu"))
       .join(docs.select(col(idCol), col(langCol).as("lang"),
@@ -1451,8 +1446,7 @@ object TextLm {
         .as("__cut2"))
     val kept = scored.join(broadcast(cuts), "lang")
       .where(col("__xmu") <= col("__cut2"))
-    Scale.unimaxMix(kept.select(col("lang"), col("__txt")), "lang", "__txt",
-        epochCap, budgetNum, budgetDen)
+    Scale.unimaxMix(kept.select(col("lang"), col("__txt")), "lang", "__txt")
       .withColumnRenamed("source", "lang")
   }
 

@@ -137,8 +137,8 @@ object TextPrep {
     * joins; each trainer's floor is priced by its own shared build. */
   def tokenizerCompressionCensusFrom(docs: DataFrame, textCol: String,
                                      srcCol: String, bpeDict: DataFrame,
-                                     wpDict: DataFrame, ugDp: DataFrame,
-                                     maxWordLen: Int = 16): DataFrame = {
+                                     wpDict: DataFrame, ugDp: DataFrame): DataFrame = {
+    val maxWordLen = 16
     val words = CacheScope.persist(
       docs.select(col(srcCol).as("source"),
           explode(split(col(textCol), " ")).as("w"))

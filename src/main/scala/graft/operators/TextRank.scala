@@ -69,7 +69,7 @@ object TextRank {
     * per-partition work (a doc's distinct terms), keyed shuffle, never a
     * global window. Same micro-unit quantization discipline. */
   def keywordsPerDoc(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int, minTermLen: Int = 4): DataFrame = {
+                     k: Int, minTermLen: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("mu").desc, col("term").asc)
     tfidfMu(docs, idCol, textCol, None, minTermLen)
@@ -94,8 +94,9 @@ object TextRank {
     * quantized to integer micro-units before the per-doc sum (order-free)
     * and ranked on the integer with the doc id as tie-break. */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               terms: DataFrame, termCol: String, k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               terms: DataFrame, termCol: String, k: Int): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     // token count WITHOUT materializing the token array: split-on-single-
     // space semantics make it exactly (#space bytes + 1), so dlen and the
     // corpus total_toks cost three codegen'd string ops instead of a second

@@ -20,7 +20,8 @@ object HttpSource {
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(30)).build()
 
   /** GET `url`, failing on non-2xx (raise_for_status parity). */
-  def get(url: String, timeoutSec: Int = 30): String = {
+  def get(url: String): String = {
+    val timeoutSec = 30
     val req = HttpRequest.newBuilder(URI.create(url))
       .timeout(Duration.ofSeconds(timeoutSec)).GET().build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
@@ -49,8 +50,8 @@ object HttpSource {
     out.getOrElse(throw last)
   }
 
-  /** Fetch the day's forecast payload with the reference's retry posture. */
-  def fetchForecast(cfg: AppConfig, retries: Int = 1,
-                    delayMs: Long = 120000L): String =
-    withRetry(retries, delayMs)(get(cfg.forecastUrl))
+  /** Fetch the day's forecast payload with the reference's retry posture:
+    * 1 retry after a 2 min delay. */
+  def fetchForecast(cfg: AppConfig): String =
+    withRetry(retries = 1, delayMs = 120000L)(get(cfg.forecastUrl))
 }

@@ -57,7 +57,7 @@ object Pipeline {
     * production uses [[HttpSource.fetchForecast]]). Returns the staged-row
     * count the upsert consumed (the reference's diagnostic K8). */
   def runDay(spark: SparkSession, cfg: AppConfig, date: LocalDate,
-             fetch: AppConfig => String = HttpSource.fetchForecast(_)): Long =
+             fetch: AppConfig => String): Long =
     runStage(spark, cfg, "day", date, fetch)
 
   /** One stage (or the full `"day"` sequence) over an inclusive date range,

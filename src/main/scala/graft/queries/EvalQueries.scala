@@ -87,7 +87,7 @@ object EvalQueries {
     // q282's bootstrap (mean) CI. See ModelEval.splitConformal.
     "q293_split_conformal" -> ((s, d) =>
       ModelEval.splitConformal(table(s, d, "documents"), "doc_id",
-        size(split(col("text"), " ")), col("n_chars"), level = 0.9)),
+        size(split(col("text"), " ")), col("n_chars"))),
 
     // Off-policy evaluation: score the declared purchase-leaning target
     // policy against the logged event stream — IPS / SNIPS and their

@@ -69,7 +69,7 @@ object ExperimentQueries {
 
     "q247_ece" -> ((s, d) =>
       ModelEval.ece(table(s, d, "documents"), "n_chars",
-        col("lang") === "en", nBins = 10)),
+        col("lang") === "en")),
 
     // Deterministic Poisson-bootstrap 95% CI for mean order value per
     // priority — B=32 hash-seeded resamples, exact decimal replicate

@@ -169,7 +169,7 @@ object InferQueries {
     // type — the smoothed trend line, exact BIGINT numerator, one
     // division; emitted only for days with full history.
     "q224_wma_trend" -> ((s, d) =>
-      Temporal.wmaTrend(table(s, d, "events"), "event_type", "ts", k = 7)),
+      Temporal.wmaTrend(table(s, d, "events"), "event_type", "ts")),
 
     // Kruskal-Wallis H across all 20 sources on document length — the
     // k-sample rank test beside q214's parametric ANOVA F; grid-exact

@@ -55,7 +55,7 @@ object LlmQueries {
     (s, d) =>
       TextDedup.ngramJaccardPairs(
         table(s, d, "documents"), "doc_id", "text",
-        n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2)
+        maxDfFrac = 0.02, threshold = 0.5)
   }
 
   /** q141's winnowed-fingerprint pair set, shared the same way (the r12
@@ -282,8 +282,7 @@ object LlmQueries {
     // q300's run reporter. One tile-keyed min-aggregate + one join back —
     // never pairwise. See TextDedup.c4SpanDedup.
     "q329_c4_span_dedup" -> ((s, d) =>
-      TextDedup.c4SpanDedup(table(s, d, "documents"), "doc_id", "text",
-        tileTokens = 4)),
+      TextDedup.c4SpanDedup(table(s, d, "documents"), "doc_id", "text")),
 
     // BPE vocabulary TRAINER (Sennrich et al. 2016): 10 greedy merge
     // rounds over the word-type table -> the merge table the tokenizer
@@ -378,8 +377,7 @@ object LlmQueries {
     // LlmOperatorsSpec additionally pins codegen-vs-interpreted agreement.
     "q32_simhash_pairs" -> ((s, d) =>
       TextDedup.simhashNearDupPairs(
-        table(s, d, "documents"), "doc_id", "text",
-        nBands = 4, maxHamming = 8)),
+        table(s, d, "documents"), "doc_id", "text")),
 
     // Dedup-method agreement matrix: which near-dup pairs do MinHash
     // (q31), SimHash (q32) and n-gram Jaccard (q75) each find — the
@@ -392,8 +390,7 @@ object LlmQueries {
       def side(df: DataFrame, flag: String) =
         df.select(col("doc_a"), col("doc_b")).withColumn(flag, lit(1))
       side(nearDupPairs(s, d), "__mh")
-        .join(side(TextDedup.simhashNearDupPairs(docs, "doc_id", "text",
-          nBands = 4, maxHamming = 8), "__sh"),
+        .join(side(TextDedup.simhashNearDupPairs(docs, "doc_id", "text"), "__sh"),
           Seq("doc_a", "doc_b"), "full_outer")
         .join(side(ngramPairs(s, d), "__ng"),
           Seq("doc_a", "doc_b"), "full_outer")
@@ -415,7 +412,7 @@ object LlmQueries {
     "q34_knn_lsh" -> ((s, d) =>
       Similarity.lshKnn(
         table(s, d, "embeddings"), "vec_id", "embedding",
-        col("vec_id") < 100, k = 3, nBits = 4)),
+        col("vec_id") < 100, k = 3)),
 
     // Partitioned-write + basePath-read roundtrip (K2/K3 + S4 + Y2 + Y4):
     // write events Hive-partitioned by y/m/d with dynamic overwrite, read the
@@ -451,7 +448,7 @@ object LlmQueries {
     "q309_media_ahash_dedup" -> ((s, d) =>
       graft.operators.Multimodal.ahashNearDup(
         graft.operators.Multimodal.fromText(s, table(s, d, "documents"),
-          "doc_id", "text", "image"), maxHamming = 12)),
+          "doc_id", "text", "image"))),
 
     "q36_binary_meta" -> ((s, d) =>
       table(s, d, "documents").select(
@@ -519,7 +516,7 @@ object LlmQueries {
     // exactly what the oracle computes.
     "q42_salted_skew_agg" -> ((s, d) =>
       graft.operators.Scale.saltedSumCount(
-        table(s, d, "events"), col("event_type"), col("value"), salts = 16)),
+        table(s, d, "events"), col("event_type"), col("value"))),
 
     // As-of join (composed: tagged union + running window — no built-in in
     // Spark): each click matched to the user's latest prior-or-simultaneous
@@ -569,7 +566,7 @@ object LlmQueries {
     "q45_embedding_neardup" -> ((s, d) =>
       Similarity.cosineNearDupPairs(
         table(s, d, "embeddings"), "vec_id", "embedding",
-        threshold = 0.3, nBits = 4)),
+        threshold = 0.3)),
 
     // BPE-ish regex token counting (runs-of-letters / runs-of-digits /
     // single punctuation — the shape of a byte-level BPE pre-tokenizer),
@@ -614,7 +611,7 @@ object LlmQueries {
       Similarity.ivfKnn(
         table(s, d, "embeddings"), "vec_id", "embedding",
         col("vec_id") >= 100 && col("vec_id") < 200, k = 3,
-        nlist = 8, nprobe = 2, lloydIters = 2)),
+        lloydIters = 2)),
 
     // Text normalization (lowercase, whitespace collapse, trim) applied to a
     // deliberately-messy derivation of the corpus so the operator has work to
@@ -969,7 +966,7 @@ object LlmQueries {
     // TextDedup.crossGroupOverlap.
     "q104_source_overlap" -> ((s, d) =>
       graft.operators.TextDedup.crossGroupOverlap(
-        table(s, d, "documents"), "source", "text", k = 5)),
+        table(s, d, "documents"), "source", "text")),
 
     // Embedding-space quality report: per-label centroids, every vector
     // re-assigned to its nearest centroid, (label, predicted) confusion
@@ -1024,7 +1021,7 @@ object LlmQueries {
     "q112_ann_recall" -> ((s, d) =>
       Similarity.annRecall(
         table(s, d, "embeddings"), "vec_id", "embedding",
-        col("vec_id") < 100, k = 3, nBits = 4)),
+        col("vec_id") < 100, k = 3)),
 
     // Quality-gate FUNNEL: each doc is attributed to the FIRST gate it
     // fails (length → mean-token-length band → stopword floor → pass), and
@@ -1099,7 +1096,7 @@ object LlmQueries {
     // micro-unit BIGINTs. See CorpusStats.zipfSlope.
     "q125_zipf_slope" -> ((s, d) =>
       graft.operators.CorpusStats.zipfSlope(
-        table(s, d, "documents"), "source", "text", topK = 100)),
+        table(s, d, "documents"), "source", "text")),
 
     // First-order Markov transition matrix over each user's time-ordered
     // event stream: (state -> next state) counts + conditional
@@ -1162,7 +1159,7 @@ object LlmQueries {
       val evalSet = docs.where(col("doc_id") < 10)
         .select(col("doc_id").as("eval_id"), col("text"))
       val pairs = TextDedup.contaminationPairs(docs, "doc_id", "text",
-          evalSet, "eval_id", "text", k = 13, minShared = 1)
+          evalSet, "eval_id", "text")
         .where(col("doc_id") =!= col("eval_id"))
       val evalSize = evalSet.select(col("eval_id"),
         graft.functions.TokenNgrams
@@ -1232,7 +1229,7 @@ object LlmQueries {
     "q139_mix_plan" -> ((s, d) =>
       graft.operators.CorpusStats.mixPlan(
         table(s, d, "documents"), "source", "text",
-        budgetFrac = 0.5, maxEpochs = 4.0)),
+        maxEpochs = 4.0)),
 
     // CCNet-style perplexity terciles per source on the q101 LM scores:
     // head/middle/tail doc counts + mean cross-entropy. Cutoffs are exact
@@ -1325,7 +1322,7 @@ object LlmQueries {
     // parameters before a full dedup run. See TextDedup.minhashCalibration.
     "q150_lsh_calibration" -> ((s, d) =>
       TextDedup.minhashCalibration(
-        table(s, d, "documents"), "doc_id", "text", shingleK = 3, bands = 4)),
+        table(s, d, "documents"), "doc_id", "text")),
 
     // DSIR-style importance weights per source: token-weighted avg bigram
     // log-likelihood ratio, target LM (lang = 'en') vs corpus LM — the
@@ -1342,8 +1339,7 @@ object LlmQueries {
     // TextDedup.blockedEditDistance.
     "q152_edit_near_dup" -> ((s, d) =>
       TextDedup.blockedEditDistance(
-        table(s, d, "documents"), "doc_id", "text",
-        blockChars = 16, cmpChars = 64, maxDist = 20, maxBlock = 50)),
+        table(s, d, "documents"), "doc_id", "text", maxBlock = 50)),
 
     // Leakage-free split: the q113 hash carve keyed by NEAR-DUP CLUSTER
     // (cluster representative id, singletons by their own id) instead of
@@ -4864,7 +4860,7 @@ object LlmQueries {
         |    AS top_shape_share
         |FROM tot t JOIN rk r ON r.g = t.g AND r.rn = 1""".stripMargin,
 
-    // Mirrors TextDedup.minhashCalibration(shingleK=3, bands=4): the q31
+    // Mirrors TextDedup.minhashCalibration (shingleK=3, bands=4): the q31
     // draw/band construction (mh[j] = min 4-hex slice j of each shingle's
     // md5), candidates from band-sig collisions, estimate = agreeing draws
     // / 8, exact Jaccard over distinct shingle sets.

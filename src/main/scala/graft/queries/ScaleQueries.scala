@@ -75,7 +75,7 @@ object ScaleQueries {
     "q76_bloom_semi_join" -> ((s, d) => {
       val dim = table(s, d, "customer").where(col("c_mktsegment") === "BUILDING")
       Sketches.bloomSemiJoin(table(s, d, "orders"), dim,
-          "o_custkey", "c_custkey", expectedItems = 10000L)
+          "o_custkey", "c_custkey")
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           Relational.sumExact(col("o_totalprice")).as("sum_price"))
@@ -86,15 +86,14 @@ object ScaleQueries {
     // estimate a pure function of the input set — the oracle replays it.
     "q77_kmv_distinct" -> ((s, d) =>
       Sketches.kmvDistinct(table(s, d, "events"),
-        Seq("event_type"), "user_id", k = 64)),
+        Seq("event_type"), "user_id")),
 
     // Capture-recapture (Chapman) distinct-user estimate from two 25%
     // hash captures + the exact truth for calibration — the membership-
     // only distinct audit beside KMV (q77) and HLL (q202). See
     // Sketches.captureRecapture.
     "q298_capture_recapture" -> ((s, d) =>
-      Sketches.captureRecapture(table(s, d, "events"), "user_id",
-        rate = 4)),
+      Sketches.captureRecapture(table(s, d, "events"), "user_id")),
 
     // Exact-substring dedup (Lee et al. 2022 ExactSubstr): maximal
     // cross-document verbatim runs at >= 20-token granularity via
@@ -132,7 +131,7 @@ object ScaleQueries {
       TextDedup.snapshotSubstrDedup(
         docs.where(col("doc_id") % 2 === 1),
         docs.where(col("doc_id") % 2 === 0),
-        "doc_id", "text", l = 20)
+        "doc_id", "text")
     }),
 
     // Kish effective sample size of the length-weighted corpus per
@@ -315,7 +314,7 @@ object ScaleQueries {
         col("vec_id") === 0, k = 50)
       graft.operators.RankFusion.rrf(
         Seq((sparse, "doc_id", "r"), (dense, "neighbor_id", "rnk")),
-        outId = "doc_id", kRrf = 60, topK = 15)
+        outId = "doc_id", topK = 15)
     }),
 
     // Train/eval decontamination: the first 10 documents act as the
@@ -328,7 +327,7 @@ object ScaleQueries {
       val evalSet = docs.where(col("doc_id") < 10)
         .select(col("doc_id").as("eval_id"), col("text"))
       TextDedup.contaminationPairs(docs, "doc_id", "text",
-          evalSet, "eval_id", "text", k = 13, minShared = 1)
+          evalSet, "eval_id", "text")
         .where(col("doc_id") =!= col("eval_id"))
     }),
 
@@ -504,7 +503,7 @@ object ScaleQueries {
       graft.operators.Scale.saltedJoin(
           table(s, d, "orders"),
           table(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
-          "o_custkey", "c_custkey", salts = 8)
+          "o_custkey", "c_custkey")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           Relational.sumExact(col("o_totalprice")).as("sum_price"))),
@@ -628,7 +627,7 @@ object ScaleQueries {
       Sketches.cmsPointEstimates(
         table(s, d, "documents")
           .select(explode(split(col("text"), " ")).as("token")),
-        "token", tfidfTerms.toDF("token"), w = 1024, d = 4)
+        "token", tfidfTerms.toDF("token"), w = 1024)
     }),
 
     // Character-entropy quality score (gibberish / repetition detector):
@@ -673,7 +672,7 @@ object ScaleQueries {
     // exact-integer estimator. See Sketches.kmvPairwiseJaccard.
     "q130_kmv_source_jaccard" -> ((s, d) =>
       Sketches.kmvPairwiseJaccard(
-        table(s, d, "documents"), "source", "text", gramN = 5, k = 256)),
+        table(s, d, "documents"), "source", "text", k = 256)),
 
     // Quality-tier assignment from mergeable-histogram quartile cutpoints:
     // every document gets a 1–4 length tier WITHOUT the global sort ntile()
@@ -719,7 +718,7 @@ object ScaleQueries {
     "q317_sketch_quantile" -> ((s, d) =>
       graft.operators.Sketches.rankSketchQuantiles(
         table(s, d, "events"), "event_type", "event_id", "value",
-        k = 1024, band = 0.06)),
+        k = 1024)),
 
     // Deterministic 90/5/5 train/val/test carve with per-split sizing —
     // membership is a pure function of doc_id (never hops as the corpus
@@ -905,7 +904,7 @@ object ScaleQueries {
     * `dm(source, s, cap, allocation, dmu)`. */
   private[queries] def dataConstrainedChainSql(perTbl: String,
                                                pfx: String = ""): String = {
-    val grid = graft.operators.Scale.muennighoffGrid(4, 15.4)
+    val grid = graft.operators.Scale.muennighoffGrid
       .map { case (m, c, nx) => s"($m, $c, $nx)" }.mkString(", ")
     s"""${pfx}caps AS MATERIALIZED (SELECT source, s, s * 4 AS cap
        |  FROM $perTbl),

@@ -193,7 +193,7 @@ object SeriesQueries {
     // Temporal.holtWinters.
     "q328_holt_winters" -> ((s, d) =>
       Temporal.holtWinters(table(s, d, "events"), "event_type", "ts",
-        "value", alpha = 0.4, beta = 0.2, gamma = 0.3, period = 7)),
+        "value")),
 
     // Forecast backtest: seasonal-naive (lag-7) daily-revenue forecast
     // scored on the 2001-05-01+ holdout — MAE, pinball .1/.5/.9, MASE

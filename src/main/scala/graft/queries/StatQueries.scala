@@ -132,7 +132,7 @@ object StatQueries {
     // verbatim in the oracle. See Graphs.hits.
     "q326_hits" -> ((s, d) =>
       Graphs.hits(Graphs.tokenBigramEdges(table(s, d, "documents"), "text"),
-        "src", "dst", "w", iters = 8)),
+        "src", "dst", "w")),
 
     // Personalized PageRank on the token bigram graph, teleporting to
     // doc 0's tokens — graph proximity to a seed vocabulary, the

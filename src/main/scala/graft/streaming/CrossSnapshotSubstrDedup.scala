@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Cross-snapshot INCREMENTAL exact-substring dedup — the batch-vs-store
   * form of the q300/q377 ExactSubstr machinery (Lee et al. 2022, public
@@ -16,7 +15,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the two can never drift.
   *
   * Semantics per batch (the q300 anchor-keep rule, store-extended):
-  * every sliding `l`-token window of a batch doc is fingerprinted
+  * every sliding `l`-token window (l = 20) of a batch doc is fingerprinted
   * ([[graft.functions.TokenNgrams.token_window_hashes]] — the q300
   * join-identity precedent); a token position is REMOVED iff it is
   * covered by a window whose fingerprint is already IN THE STORE
@@ -31,10 +30,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * against everything previously SEEN, not against what previous passes
   * kept — the Lee et al. corpus-order contract); only fingerprints not
   * already present are appended, so the store's CONTENT is the replay
-  * guard exactly as in [[IncrementalDedup]]: a replayed batch (failure
-  * between append and checkpoint commit) finds its own fingerprints in
-  * the store and appends NOTHING. [[processBatch]] is the pure batch
-  * step so the replay property is directly testable.
+  * guard exactly as in [[IncrementalDedup]]: a replayed batch finds its
+  * own fingerprints in the store and appends NOTHING. [[processBatch]]
+  * is the batch step a caller's foreachBatch sink runs (with the sink's
+  * at-least-once contract: a failure between the store append and the
+  * checkpoint commit replays the batch), so the replay property is
+  * directly testable.
   *
   * Scale: the batch inventory is ~batch-tokens rows (small) shuffled
   * once on the fingerprint against the store scan (at warehouse scale
@@ -55,12 +56,10 @@ object CrossSnapshotSubstrDedup {
     * n_tokens, n_tokens_removed, clean_text — the exactSubstringRebuild
     * contract). Safe to call with the same batch twice: the second call
     * appends nothing to the store. */
-  def processBatch(batch: DataFrame, storeDir: String, l: Int = 20)
-  : DataFrame = {
-    require(l >= 1, "need window length >= 1")
+  def processBatch(batch: DataFrame, storeDir: String): DataFrame = {
     val spark = batch.sparkSession
     val inv = graft.operators.TextDedup
-      .windowFpInventory(batch, "doc_id", "text", l)
+      .windowFpInventory(batch, "doc_id", "text")
       .localCheckpoint()
     // Hadoop FileSystem existence (not java.io.File) — the
     // IncrementalDedup hdfs://-correctness note
@@ -75,7 +74,7 @@ object CrossSnapshotSubstrDedup {
     // with a smaller doc in THIS batch (anchor-keep, removal from the
     // later) — the shared snapshotCovered core, so the streaming twin
     // and the oracled batch form (q396) can never drift
-    val covered = graft.operators.TextDedup.snapshotCovered(inv, stored, l)
+    val covered = graft.operators.TextDedup.snapshotCovered(inv, stored)
     val cleaned = graft.operators.TextDedup
       .rebuildUncovered(batch, "doc_id", "text", covered)(_.as("clean_text"))
       // pin BEFORE the store append: the cleaned frame's lineage reads
@@ -88,18 +87,4 @@ object CrossSnapshotSubstrDedup {
     novel.write.mode("append").parquet(storeDir)
     cleaned
   }
-
-  /** Wire [[processBatch]] into a foreachBatch sink: the store is
-    * content-guarded (replay appends nothing); the cleaned-doc output
-    * appends to `outDir` with foreachBatch's standard at-least-once
-    * contract (the checkpoint dedupes committed batches). */
-  def start(docs: DataFrame, storeDir: String, outDir: String,
-            checkpointDir: String, l: Int = 20): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processBatch(batch.toDF(), storeDir, l)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
 }

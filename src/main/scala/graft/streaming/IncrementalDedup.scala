@@ -54,10 +54,17 @@ object IncrementalDedup {
 
   /** Wire [[processBatch]] into a foreachBatch sink. */
   def start(docs: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
+    sink(docs, checkpointDir)(processBatch(_, storeDir))
+
+  /** Run `step` on every micro-batch of `docs` in a foreachBatch sink
+    * checkpointed at `checkpointDir` — the wiring of [[start]] and
+    * [[IncrementalNearDup.start]]. */
+  private[streaming] def sink(docs: DataFrame, checkpointDir: String)(
+      step: DataFrame => Long): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processBatch(batch.toDF(), storeDir): Unit
+        step(batch.toDF()): Unit
       }
       .start()
 }

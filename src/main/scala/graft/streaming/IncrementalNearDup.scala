@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -39,12 +39,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * (band, sig) at warehouse scale; nothing is ever all-pairs. */
 object IncrementalNearDup {
 
-  // one signature scheme for the store, shared with the batch twin
-  // (TextDedup.crossRunVerdicts) — see TextDedup.bandSignatureRows
-  private def bandSigs(batch: DataFrame, bands: Int, shingleK: Int): DataFrame =
-    graft.operators.TextDedup.bandSignatureRows(
-      batch, "doc_id", "text", bands, shingleK)
-
   /** One ingest step: reject near-dups of the store and of smaller-id batch
     * docs, append the survivors' signatures, return the number of ACCEPTED
     * documents. Safe to call with the same batch twice.
@@ -59,10 +53,11 @@ object IncrementalNearDup {
     * function of batch CONTENT; the sentinel guard alone decides replay —
     * every processed doc (either verdict) leaves its sentinel in the store,
     * so a replayed batch always appends nothing. */
-  def processBatch(batch: DataFrame, storeDir: String,
-                   bands: Int = 4, shingleK: Int = 3): Long = {
+  def processBatch(batch: DataFrame, storeDir: String): Long = {
     val spark = batch.sparkSession
-    val sigs = bandSigs(batch, bands, shingleK)
+    // one signature scheme for the store, shared with the batch twin
+    // (TextDedup.crossRunVerdicts)
+    val sigs = graft.operators.TextDedup.bandSignatureRows(batch, "doc_id", "text")
     // within-batch rejection over the FULL batch: smallest doc_id per
     // collision bucket survives (transitive by design — see class doc)
     val minPerBucket = sigs.groupBy(col("band"), col("sig"))
@@ -104,12 +99,6 @@ object IncrementalNearDup {
   }
 
   /** Wire [[processBatch]] into a foreachBatch sink. */
-  def start(docs: DataFrame, storeDir: String, checkpointDir: String,
-            bands: Int = 4, shingleK: Int = 3): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processBatch(batch.toDF(), storeDir, bands, shingleK): Unit
-      }
-      .start()
+  def start(docs: DataFrame, storeDir: String, checkpointDir: String): StreamingQuery =
+    IncrementalDedup.sink(docs, checkpointDir)(processBatch(_, storeDir))
 }

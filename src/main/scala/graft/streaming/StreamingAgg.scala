@@ -20,9 +20,9 @@ object StreamingAgg {
   /** Hourly event-time aggregate with late-data eviction — the streaming twin
     * of batch q25 (tumbling window). Input needs `ts: timestamp`,
     * `event_type: string`, `value: double`. */
-  def hourlyCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+  def hourlyCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
@@ -53,9 +53,8 @@ object StreamingAgg {
     * the watermark horizon — the streaming counterpart of the batch
     * fingerprint dedup (state is evicted as the watermark advances, so memory
     * stays bounded no matter how long the stream runs). */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-                  watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def dedupStream(events: DataFrame, keys: Seq[String]): DataFrame =
+    events.withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
   /** Stream-stream inner join with watermarks on both sides: each click pairs
@@ -117,8 +116,9 @@ object StreamingAgg {
     * closed singleton session — a documented approximation for
     * pathologically late data (batch q51 would merge chains of such events;
     * holding them would make per-key state unbounded). */
-  def sessionizeStream(events: Dataset[Event], gapSec: Long = 1800L,
+  def sessionizeStream(events: Dataset[Event],
                        watermark: String = "0 seconds"): Dataset[ClosedSession] = {
+    val gapSec: Long = 1800L
     import events.sparkSession.implicits._
     events.withWatermark("ts", watermark)
       .groupByKey(_.user_id)
@@ -166,9 +166,9 @@ object StreamingAgg {
     * per window — O(k) state, no sort-shuffle of the full vocabulary,
     * ranked (count DESC, term ASC) deterministically. Input needs
     * `ts: timestamp`, `text: string`. */
-  def trendingTerms(docs: DataFrame, k: Int = 5,
-                    windowLen: String = "1 hour",
-                    watermark: String = "2 hours"): DataFrame = {
+  def trendingTerms(docs: DataFrame, k: Int): DataFrame = {
+    val windowLen = "1 hour"
+    val watermark = "2 hours"
     val topk = graft.functions.TopKStrAgg.columnAgg(k)
     docs.withWatermark("ts", watermark)
       .select(col("ts"), explode(split(col("text"), " ")).as("term"))

@@ -96,10 +96,10 @@ object StreamingBloomDedup {
     * session must run the RocksDB state store provider
     * (transformWithState's requirement). Tiling mirrors the batch
     * operators (split(" ", -1), NULL text tiles as ""). */
-  def dedupDecisions(docs: Dataset[Doc], lineTokens: Int = 3,
-                     mBits: Int = 1 << 16, nShards: Int = 8,
-                     k: Int = 3): Dataset[Decision] = {
-    require(lineTokens >= 1 && k >= 1, "need lineTokens>=1, k>=1")
+  def dedupDecisions(docs: Dataset[Doc],
+                     mBits: Int, nShards: Int): Dataset[Decision] = {
+    val lineTokens = 3
+    val k = 3
     require(nShards >= 1 && mBits >= nShards * 8 &&
       mBits % (nShards * 8) == 0,
       "need mBits >= nShards*8 and divisible by it (whole bytes per shard)")

@@ -106,11 +106,12 @@ object StreamingHoltWinters {
   }
 
   /** The smoothed stream: one HwRow per (key, closed day). */
-  def smoothed(events: Dataset[Event], alpha: Double = 0.4,
-               beta: Double = 0.2, gamma: Double = 0.3,
-               period: Int = 7): Dataset[HwRow] = {
+  def smoothed(events: Dataset[Event]): Dataset[HwRow] = {
+    val alpha = 0.4
+    val beta = 0.2
+    val gamma = 0.3
+    val period = 7
     import events.sparkSession.implicits._
-    require(period >= 2, "period must be >= 2")
     val zone = events.sparkSession.sessionState.conf.sessionLocalTimeZone
     events.groupByKey(_.event_type)
       .transformWithState(new Processor(alpha, beta, gamma, period, zone),

@@ -86,9 +86,9 @@ object StreamingLineDedup {
     * run the RocksDB state store provider (transformWithState's
     * requirement). Tiling mirrors the batch operator: non-overlapping
     * `lineTokens`-token windows, last tile may be short. */
-  def boilerplateLines(docs: Dataset[Doc], lineTokens: Int = 3,
-                       minDocs: Int = 3): Dataset[Boilerplate] = {
-    require(lineTokens >= 1 && minDocs >= 2, "need lineTokens>=1, minDocs>=2")
+  def boilerplateLines(docs: Dataset[Doc]): Dataset[Boilerplate] = {
+    val lineTokens = 3
+    val minDocs = 3
     import docs.sparkSession.implicits._
     // split(" ", -1) + null-coalesce mirror the batch operator exactly:
     // Spark SQL's split keeps trailing empty tokens (text "a b " tiles as

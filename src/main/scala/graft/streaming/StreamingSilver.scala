@@ -30,8 +30,8 @@ object StreamingSilver {
 
   /** Start the continuous bronze→silver flow. */
   def start(spark: SparkSession, bronzeGlob: String, silverRoot: String,
-            checkpoint: String, hourlyVars: Seq[String],
-            maxFilesPerTrigger: Int = 100): StreamingQuery = {
+            checkpoint: String, hourlyVars: Seq[String]): StreamingQuery = {
+    val maxFilesPerTrigger = 100
     val raw = spark.readStream
       .schema(Schemas.bronze(hourlyVars))
       .option("multiLine", "true")

@@ -123,7 +123,7 @@ class BenchCacheSpec extends AnyFunSuite {
     val s = spark.newSession()
     CacheScope.persist(TextDedup.ngramJaccardPairs(
       Graft.table(s, dir.toString, "documents"), "doc_id", "text",
-      n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2))
+      maxDfFrac = 0.02, threshold = 0.5))
     val shared = SharedCaches.builders.toMap.apply("ngram_jaccard_pairs")(s, dir.toString)
     CacheScope.drain()
     try assert(shared.storageLevel != StorageLevel.NONE,
@@ -142,5 +142,27 @@ class BenchCacheSpec extends AnyFunSuite {
     assert(Bench.selected(Some(Set("q310_diff_in_diff")), "q310_diff_in_diff"))
     assert(!Bench.selected(Some(Set("q310_diff_in_diff")), "q31_minhash_lsh_pairs"))
     assert(Bench.selected(None, "q310_diff_in_diff"), "no list selects every query")
+  }
+
+  test("PlanDump rejects bad arguments before building a session") {
+    def why(args: String*): String =
+      intercept[IllegalArgumentException](PlanDump.parseArgs(args.toArray)).getMessage
+    for (args <- Seq(Seq("out", "p"), Seq("out", "p", "--sf"), Seq("out", "p", "--sf", sf),
+        Seq("out", "p", "q999_none"), Seq("out", "p", "cache:q31_minhash_lsh_pairs"),
+        Seq("out", "p", "--sf", "/no/such/dir", "q31_minhash_lsh_pairs")))
+      assert(why(args: _*).contains("usage: PlanDump"), args.mkString(" "))
+    assert(why("out", "p", "--sf", sf).startsWith("no query"))
+    assert(PlanDump.parseArgs(Array("out", "p", "--sf", sf, "q31_minhash_lsh_pairs",
+      "cache:minhash_pair_graph")) ==
+      (("out", "p", sf, Seq("q31_minhash_lsh_pairs", "cache:minhash_pair_graph"))))
+    assert(PlanDump.parseArgs(Array("out", "p", "q31_minhash_lsh_pairs"))._3 == sf)
+  }
+
+  test("SPARK_GRAFT_REPEAT below one pass is rejected before building a session") {
+    for (bad <- Seq("0", "-2", "two", ""))
+      assert(intercept[IllegalArgumentException](Bench.repeatOf(Some(bad)))
+        .getMessage.contains("SPARK_GRAFT_REPEAT"), bad)
+    assert(Bench.repeatOf(None) == 1)
+    assert(Bench.repeatOf(Some("3")) == 3)
   }
 }

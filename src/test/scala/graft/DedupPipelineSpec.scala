@@ -131,8 +131,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     val docs = Seq(
       (1L, "x y z a b c"), (2L, "x y z d e f"), (3L, "x y z g h i"),
       (4L, "q r s t"), (5L, "m n o x y z p q r")).toDF("doc_id", "text")
-    val out = TextDedup.lineDedup(docs, "doc_id", "text",
-        lineTokens = 3, minDocs = 3)
+    val out = TextDedup.lineDedup(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).sortBy(_._1).toList
     assert(out == List(
@@ -147,7 +146,7 @@ class DedupPipelineSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = Seq((1L, "x y z"), (2L, "x y z"), (3L, "x y z"),
       (4L, "u v w")).toDF("doc_id", "text")
-    val out = TextDedup.lineDedup(docs, "doc_id", "text", 3, 3)
+    val out = TextDedup.lineDedup(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3),
         r.getString(4))).sortBy(_._1).toList
     assert(out == List(
@@ -155,7 +154,7 @@ class DedupPipelineSpec extends AnyFunSuite {
       (3L, 1L, 0L, md5hex("")), (4L, 0L, 3L, md5hex("u v w"))))
     // in-doc repetition is not cross-doc boilerplate: 2 distinct docs < 3
     val rep = Seq((1L, "a b c a b c"), (2L, "a b c")).toDF("doc_id", "text")
-    val kept = TextDedup.lineDedup(rep, "doc_id", "text", 3, 3)
+    val kept = TextDedup.lineDedup(rep, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(2))).sortBy(_._1).toList
     assert(kept == List((1L, 0L), (2L, 0L)))
   }

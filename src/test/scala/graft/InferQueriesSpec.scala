@@ -114,7 +114,7 @@ class InferQueriesSpec extends AnyFunSuite {
       (1 to day).map(i => ("k", java.sql.Timestamp.valueOf(
         f"2024-01-0$day 00:00:0${i % 10}")))
     }.toDF("k", "ts")
-    val rows = Temporal.wmaTrend(df, "k", "ts", k = 7).collect()
+    val rows = Temporal.wmaTrend(df, "k", "ts").collect()
       .map(r => r.getLong(1) -> r.getDouble(3)).toMap
     assert(rows.size == 2, s"only days 7 and 8 have full history: $rows")
     val d7 = rows.keys.min

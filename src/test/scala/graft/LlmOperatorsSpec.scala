@@ -207,7 +207,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // near-identical token multisets => very close simhashes
     assert(hamming.forall(_._3 <= 12), s"unexpectedly distant: $hamming")
     // banded candidate generation is guaranteed complete below nBands bits
-    val simhash = TextDedup.simhashNearDupPairs(docs, "doc_id", "text", nBands = 4, maxHamming = 8)
+    val simhash = TextDedup.simhashNearDupPairs(docs, "doc_id", "text")
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val mustFind = hamming.filter(_._3 < 4).map(t => (t._1, t._2))
     assert(mustFind.subsetOf(simhash), s"missed guaranteed pairs: ${mustFind -- simhash}")
@@ -253,7 +253,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val c = "completely unrelated text about spark query planning and shuffles"
     val corpus = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
     def run(maxInRow: Int) = TextDedup.ngramJaccardPairs(corpus, "doc_id", "text",
-        n = 8, maxDfFrac = 0.7, threshold = 0.3, minShared = 2, maxInRow = maxInRow)
+        maxDfFrac = 0.7, threshold = 0.3, maxInRow = maxInRow)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     // maxInRow = 1 forces EVERY bucket down the self-join fallback path
     val viaFallback = run(1)
@@ -313,7 +313,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // 0.06 docs, so NO gram is rare and no candidates form) — use a
     // fraction that makes df=2 grams rare but df=3 common
     val got = TextDedup.ngramJaccardPairs(corpus, "doc_id", "text",
-        n = 8, maxDfFrac = 0.7, threshold = 0.3, minShared = 2)
+        maxDfFrac = 0.7, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == 1 && got.head._1 == 1L && got.head._2 == 2L)
     // exact Jaccard of the two char-8-gram sets, computed independently
@@ -334,7 +334,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (1L, "aaaabbbbccccdddd"), (2L, "aaaabbbbcccceeee"),
       (3L, "ffffgggghhhhiiii"), (4L, "ffffgggghhhhjjjj")).toDF("doc_id", "text")
     val got = TextDedup.ngramJaccardPairs(corpus, "doc_id", "text",
-        n = 8, maxDfFrac = 0.6, threshold = 0.3, minShared = 2)
+        maxDfFrac = 0.6, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(p => (p._1, p._2))
     def grams(s: String) = s.sliding(8).toSet
     def jac(x: String, y: String) =
@@ -396,7 +396,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       toDF("doc_id", "text")
     val evalSet = Seq((1L, s"$leak trailing benchmark tokens")).toDF("eval_id", "text")
     val got = TextDedup.contaminationPairs(corpus, "doc_id", "text",
-        evalSet, "eval_id", "text", k = 13, minShared = 1)
+        evalSet, "eval_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.sameElements(Array((100L, 1L))), got.mkString(","))
   }
@@ -429,7 +429,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     def recall(iters: Int, df: org.apache.spark.sql.DataFrame = emb): Double = {
       val got = Similarity.ivfKnn(df, "vec_id", "embedding", qp, k = 3,
-          nlist = 8, nprobe = 2, lloydIters = iters)
+          lloydIters = iters)
         .collect()
         .map(r => (r.getLong(0), r.getLong(2))).toSet
       (truth intersect got).size.toDouble / truth.size
@@ -698,7 +698,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
   }
 
   test("crossGroupOverlap equals the brute-force shared-shingle count; no self/reversed pairs") {
-    val got = TextDedup.crossGroupOverlap(docs, "source", "text", k = 5)
+    val got = TextDedup.crossGroupOverlap(docs, "source", "text")
       .collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     // brute force on the driver from the same shingle definition
     val sets = TextDedup.shingles(docs, "source", "text", k = 5)
@@ -742,7 +742,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val a = Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "r")
     val b = Seq((3L, 1), (1L, 2)).toDF("id", "r")
     val got = graft.operators.RankFusion.rrf(
-        Seq((a, "id", "r"), (b, "id", "r")), outId = "id", kRrf = 60, topK = 10)
+        Seq((a, "id", "r"), (b, "id", "r")), outId = "id", topK = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     // round(1e6/61)=16393, /62=16129, /63=15873
     val expect = Seq(
@@ -760,7 +760,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
         (i, Array(1f, 1f, 1f, 1f, (i % 5).toFloat / 4f, ((i * 3) % 7).toFloat / 6f)))
       .toDF("vec_id", "embedding")
     val perfect = graft.operators.Similarity
-      .annRecall(one, "vec_id", "embedding", col("vec_id") < 6, k = 3, nBits = 4)
+      .annRecall(one, "vec_id", "embedding", col("vec_id") < 6, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(perfect.length == 6)
     assert(perfect.forall { case (_, n, rec) => n == 3L && rec == 1.0 })
@@ -773,14 +773,14 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (3L, Array(1f, 1f, 1f, 1f, 0.8f, 0.2f)))
       .toDF("vec_id", "embedding")
     val got = graft.operators.Similarity
-      .annRecall(split, "vec_id", "embedding", col("vec_id") < 2, k = 2, nBits = 4)
+      .annRecall(split, "vec_id", "embedding", col("vec_id") < 2, k = 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got(0L) == 0.0, "isolated-bucket query surfaces with recall 0")
     assert(got(1L) == 1.0)
     // real corpus: recall within [0,1], one row per query with >=1 exact neighbor
     val real = graft.operators.Similarity.annRecall(
         Graft.table(spark, sf, "embeddings"), "vec_id", "embedding",
-        col("vec_id") < 20, k = 3, nBits = 4)
+        col("vec_id") < 20, k = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
     assert(real.length == 20)
     assert(real.forall { case (_, rec) => rec >= 0.0 && rec <= 1.0 })
@@ -1113,7 +1113,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       Seq.tabulate(10)(i => ("S2", Seq.fill(35)("t").mkString(" ")))
     val got = graft.operators.CorpusStats
       .mixPlan(df.toDF("source", "text"), "source", "text",
-        budgetFrac = 0.5, maxEpochs = 1.5)
+        maxEpochs = 1.5)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4), r.getLong(5))))
       .toMap
@@ -1307,7 +1307,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (3L, (1 to 20).map(i => s"z$i").mkString(" ")))
       .toDF("doc_id", "text")
     val got = graft.operators.TextDedup
-      .minhashCalibration(df, "doc_id", "text", shingleK = 3, bands = 4)
+      .minhashCalibration(df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(got((1L, 2L)) == ((8L, 1.0, 1.0)), s"got $got")
@@ -1372,8 +1372,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       (4L, blkC + " p1"), (5L, blkC + " p2"), (6L, blkC + " p3")) // block of 3
       .toDF("doc_id", "text")
     val got = TextDedup
-      .blockedEditDistance(df, "doc_id", "text",
-        blockChars = 16, cmpChars = 64, maxDist = 20, maxBlock = 2)
+      .blockedEditDistance(df, "doc_id", "text", maxBlock = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 1L)),
       s"expected exactly the in-block 1-edit pair, got $got")
@@ -1528,7 +1527,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // and the harsh-capped q75 scheme really does drop it on this fixture —
     // the documented blind spot ppjoin exists to close
     val capped = TextDedup.ngramJaccardPairs(docs, "doc_id", "text",
-      n = 8, maxDfFrac = 0.02, threshold = 0.5, minShared = 2)
+      maxDfFrac = 0.02, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!capped.contains((100L, 101L)),
       "fixture sanity: the df cap must exhibit its blind spot here")

@@ -76,7 +76,7 @@ class MultimodalSpec extends AnyFunSuite {
       "sub-64-byte payloads carry no grid signal")
     assert(sigs.groupBy("media_id").count().collect()
       .forall(_.getLong(1) == 4L), "four bands per surviving payload")
-    val pairs = Multimodal.ahashNearDup(m, maxHamming = 12)
+    val pairs = Multimodal.ahashNearDup(m)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs((1L, 2L)) == 0L, s"exact copies must be hamming 0: $pairs")
     assert(pairs.get((1L, 3L)).exists(h => h > 0L && h <= 12L),

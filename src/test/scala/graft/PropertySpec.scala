@@ -182,4 +182,30 @@ class PropertySpec extends AnyFunSuite {
       }
     })
   }
+
+  test("TokenNgrams.tileStats == brute-force tile grouping (pure JVM)") {
+    import graft.functions.TokenNgrams
+    import org.apache.spark.unsafe.types.UTF8String
+    // tiles of split(s, ' ') (Spark keeps empty tokens), grouped by string
+    def brute(s: String, tileN: Int): Seq[Long] = {
+      val tiles = s.split(" ", -1).toSeq.grouped(tileN).map(_.mkString(" ")).toSeq
+      def chars(t: String) = t.codePointCount(0, t.length).toLong
+      val byType = tiles.groupBy(identity).values
+      Seq(tiles.size.toLong, byType.size.toLong, tiles.map(chars).sum,
+        byType.map(g => (g.size - 1) * chars(g.head)).sum)
+    }
+    def native(s: String, tileN: Int): Seq[Long] = {
+      val a = TokenNgrams.tileStats(UTF8String.fromString(s), tileN)
+      (0 until 4).map(a.getLong)
+    }
+    // the empty string, a short last tile, repeated tiles, multi-byte
+    // chars and empty tokens, at every tile size
+    for (s <- Seq("", "a", "a b c a b c a", "é 日本 é 日本 é", "😀 a  😀 a ");
+         n <- 1 to 4)
+      assert(native(s, n) == brute(s, n), s"'$s' tileN=$n")
+    val text = Gen.listOf(Gen.oneOf("a", "b", "é", "日本", "😀x", "")).map(_.mkString(" "))
+    val r = SCTest.check(params.withMinSuccessfulTests(500),
+      Prop.forAll(text, Gen.choose(1, 4)) { (s, n) => native(s, n) == brute(s, n) })
+    assert(r.passed, s"tileStats: $r")
+  }
 }

@@ -14,7 +14,7 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("muennighoffGrid: paper formula replay, monotone decay, telescoping") {
-    val g = graft.operators.Scale.muennighoffGrid(4, 15.4)
+    val g = graft.operators.Scale.muennighoffGrid
     assert(g.map(_._1) == Seq(0L, 1L, 2L, 3L, 4L))
     assert(g(0) == ((0L, 0L, 1000000L)), "epoch 1 = fresh tokens at value 1")
     // independent replay of the paper's D'(R) = U·(1 + R*(1 − e^{−R/R*}))
@@ -43,7 +43,7 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4),
           r.getLong(5), r.getDouble(6), r.getDouble(7)))).toMap
     graft.operators.CacheScope.drain()
-    val g = graft.operators.Scale.muennighoffGrid(4, 15.4).map(_._3)
+    val g = graft.operators.Scale.muennighoffGrid.map(_._3)
     // A: m = 4 full epochs, no fraction -> D'mu = 10 * (δ1+δ2+δ3+δ4)
     val dmuA = 10L * g.take(4).sum
     val effTokA = (2 * dmuA + 1000000L) / 2000000L
@@ -172,7 +172,7 @@ class RoundEighteenShelfSpec extends AnyFunSuite {
           r.getDouble(6), r.getLong(7), r.getDouble(8), r.getDouble(9))))
       .toMap
     graft.operators.CacheScope.drain()
-    val g = graft.operators.Scale.muennighoffGrid(4, 15.4).map(_._3)
+    val g = graft.operators.Scale.muennighoffGrid.map(_._3)
     val dmuA = 14L * g.head + 10L * g(1)
     val dmuB = 10L * (g.head + g(1)) + 4L * g(2)
     assert(out("A") == ((20L, 6L, 14L, 24L, 1.714286,

@@ -256,7 +256,7 @@ class RoundElevenOpsSpec extends AnyFunSuite {
     val df = (1L to 300L).map(i => (i, i % 50 + 1, 4 * (i % 50 + 1) + 7))
       .toDF("id", "x", "y")
     val r = graft.operators.ModelEval.splitConformal(df, "id",
-      col("x"), col("y"), level = 0.9).head()
+      col("x"), col("y")).head()
     assert(r.getLong(0) == 100L && r.getLong(1) == 100L &&
       r.getLong(2) == 100L, s"balanced splits: $r")
     assert(r.getDouble(3) == 4.0 && r.getDouble(4) == 7.0,
@@ -338,14 +338,14 @@ class RoundElevenOpsSpec extends AnyFunSuite {
 
   test("captureRecapture: overlap bounds, exact truth, repartition invariance") {
     val df = (1L to 500L).flatMap(i => Seq(i, i, i)).toDF("id")
-    val r = graft.operators.Sketches.captureRecapture(df, "id", rate = 4)
+    val r = graft.operators.Sketches.captureRecapture(df, "id")
       .head()
     assert(r.getLong(4) == 500L, s"exact distinct: $r")
     assert(r.getLong(2) <= math.min(r.getLong(0), r.getLong(1)),
       s"overlap within both captures: $r")
     assert(r.getDouble(3) > 0.0, s"Chapman estimate is total: $r")
     val r2 = graft.operators.Sketches.captureRecapture(
-      df.repartition(11), "id", rate = 4).head()
+      df.repartition(11), "id").head()
     assert(r == r2, "captures are pure functions of ids")
   }
 

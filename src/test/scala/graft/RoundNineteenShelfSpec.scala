@@ -98,7 +98,7 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
     assert(out("A")._5 == 1.5 && out("B")._5 == 4.0, "epochs on soft mass")
     // effective tokens from the shared grid: A = 20 full + 10 at δ2;
     // B = 4 full epochs of 5
-    val g = graft.operators.Scale.muennighoffGrid(4, 15.4)
+    val g = graft.operators.Scale.muennighoffGrid
     val dmuA = 20L * g(1)._2 + 10L * g(1)._3
     val dmuB = 5L * g(4)._2
     assert(out("A")._6 == (2 * dmuA + 1000000L) / 2000000L)
@@ -235,7 +235,7 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
       (7L, toks("d", 25)),      // ...later id removed
       (9L, "short doc")).toDF("doc_id", "text")
     val out = graft.operators.TextDedup
-      .snapshotSubstrDedup(nw, old, "doc_id", "text", l = 20)
+      .snapshotSubstrDedup(nw, old, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     graft.operators.CacheScope.drain()
@@ -259,7 +259,7 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
       (11L, toks("b", 25)),
       (12L, toks("b", 25)),
       (13L, "tiny doc under l")).toDF("doc_id", "text")
-    val o1 = CrossSnapshotSubstrDedup.processBatch(b1, store, l = 20)
+    val o1 = CrossSnapshotSubstrDedup.processBatch(b1, store)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(o1(10L) == ((25L, 0L, toks("a", 25))), "novel doc kept verbatim")
@@ -273,7 +273,7 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
     val b2 = Seq(
       (20L, toks("a", 25)),
       (21L, toks("c", 25))).toDF("doc_id", "text")
-    val o2 = CrossSnapshotSubstrDedup.processBatch(b2, store, l = 20)
+    val o2 = CrossSnapshotSubstrDedup.processBatch(b2, store)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(o2(20L) == ((25L, 25L, "")), "re-crawl fully rejected")
@@ -282,7 +282,7 @@ class RoundNineteenShelfSpec extends AnyFunSuite {
     assert(stored2 == stored1 + 6L, "store grew by the novel doc only")
     // replay snapshot 2 (failure between append and checkpoint commit):
     // the store's content is the guard — nothing appended
-    val o3 = CrossSnapshotSubstrDedup.processBatch(b2, store, l = 20)
+    val o3 = CrossSnapshotSubstrDedup.processBatch(b2, store)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(spark.read.parquet(store).count() == stored2,
       "replay appends nothing")

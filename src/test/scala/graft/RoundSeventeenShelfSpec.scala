@@ -115,13 +115,13 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
       (2L, "c1 c2 b1 b2 b3 b4 b5 b6 c3 c4"),
       (3L, "d1 b1 b2 b3 b4 b5 b6 d2 d3 d4")).toDF("doc_id", "text")
     val clean = graft.operators.TextDedup.exactSubstringRebuild(
-      docs, "doc_id", "text", l = 4, maxDf = 10)
+      docs, "doc_id", "text", l = 4)
     val texts = clean.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(texts(1L) == "a1 a2 b1 b2 b3 b4 b5 b6 a3 a4")
     assert(texts(2L) == "c1 c2 c3 c4" && texts(3L) == "d1 d2 d3 d4")
     val again = graft.operators.TextDedup.exactSubstringRebuild(
-        clean, "doc_id", "clean_text", l = 4, maxDf = 10)
+        clean, "doc_id", "clean_text", l = 4)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(again == texts, "second pass must remove nothing")
   }

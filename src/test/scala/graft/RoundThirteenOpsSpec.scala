@@ -152,8 +152,7 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
     val ev = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("event_type"), col("value"))
     def run(df: DataFrame, k: Int) = graft.operators.Sketches
-      .rankSketchQuantiles(df, "event_type", "event_id", "value", k = k,
-        band = 0.06)
+      .rankSketchQuantiles(df, "event_type", "event_id", "value", k = k)
     // merge invariance: the bottom-k sample is a pure function of the
     // row multiset, so every partitioning must give identical output
     val r1 = run(ev.repartition(1), 64)

@@ -185,7 +185,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // a and c point at b; b points at d: b is THE authority, a/c the hubs
     val edges = Seq(("a", "b", 2L), ("c", "b", 2L), ("b", "d", 1L))
       .toDF("src", "dst", "w")
-    val r = Graphs.hits(edges, "src", "dst", "w", iters = 8)
+    val r = Graphs.hits(edges, "src", "dst", "w")
       .collect().map(x => x.getAs[String]("node") -> x).toMap
     assert(r.size == 4)
     val auth = r.view.mapValues(_.getAs[Long]("auth_mu")).toMap
@@ -199,7 +199,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     assert(math.abs(hub.values.sum - 1000000L) <= 4)
     // L1 normalization makes the masses invariant to a global weight scale
     val scaled = Graphs.hits(
-      edges.withColumn("w", col("w") * 1000L), "src", "dst", "w", iters = 8)
+      edges.withColumn("w", col("w") * 1000L), "src", "dst", "w")
       .collect().map(x => x.getAs[String]("node") ->
         (x.getAs[Long]("hub_mu"), x.getAs[Long]("auth_mu"))).toMap
     r.keys.foreach { n =>
@@ -235,8 +235,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       ("k", java.sql.Timestamp.valueOf(
         java.time.LocalDate.ofEpochDay(d).atStartOfDay()), v) }
       .toDF("event_type", "ts", "value")
-    val out = Temporal.holtWinters(ev, "event_type", "ts", "value",
-      alpha = 0.4, beta = 0.2, gamma = 0.3, period = 7)
+    val out = Temporal.holtWinters(ev, "event_type", "ts", "value")
       .orderBy("day_idx").collect()
     // reference fold in plain Scala doubles, same operation order
     var l = 0.0; var b = 0.0; val s = Array.fill(7)(0.0); var first = true
@@ -273,7 +272,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       (4L, "p q r s p q r s"))          // intra-doc dup: second tile goes
       .toDF("doc_id", "text")
     val r = graft.operators.TextDedup
-      .c4SpanDedup(docs, "doc_id", "text", tileTokens = 4)
+      .c4SpanDedup(docs, "doc_id", "text")
       .collect().map(x => x.getAs[Long]("doc_id") ->
         ((x.getAs[Long]("n_tiles"), x.getAs[Long]("kept_tiles"),
           x.getAs[String]("clean_text")))).toMap
@@ -649,7 +648,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
       (3L, "d1 d2 d3 d4 d5 d6 d7 d8"))
       .toDF("doc_id", "text")
     val out = graft.operators.TextDedup.decontaminateSpans(
-        docs, "doc_id", "text", col("doc_id") === 100L, tileTokens = 4)
+        docs, "doc_id", "text", col("doc_id") === 100L)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
     graft.operators.CacheScope.drain()
@@ -665,7 +664,7 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
     // fully-contaminated doc -> md5("") row, never a vanished doc
     val all = graft.operators.TextDedup.decontaminateSpans(
         Seq((100L, bench), (4L, bench)).toDF("doc_id", "text"),
-        "doc_id", "text", col("doc_id") === 100L, tileTokens = 4)
+        "doc_id", "text", col("doc_id") === 100L)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(4))).toList
     graft.operators.CacheScope.drain()
     assert(all == List((4L, 2L, m(""))))

@@ -10,7 +10,7 @@ class ScaleSpec extends AnyFunSuite {
 
   test("salted aggregation matches the direct groupBy bit-for-bit") {
     val events = Graft.table(spark, sf, "events")
-    val salted = Scale.saltedSumCount(events, col("event_type"), col("value"), salts = 16)
+    val salted = Scale.saltedSumCount(events, col("event_type"), col("value"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).sortBy(_._1)
     val direct = events.groupBy(col("event_type"))
       .agg(Relational.sumExact(col("value")).as("sum_value"), count(lit(1)).as("n"))
@@ -299,7 +299,7 @@ class ScaleSpec extends AnyFunSuite {
       df.select(col("o_orderkey"), col("c_mktsegment"))
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
     val plain = rows(orders.join(cust, col("o_custkey") === col("c_custkey")))
-    val salted = rows(Scale.saltedJoin(orders, cust, "o_custkey", "c_custkey", salts = 8))
+    val salted = rows(Scale.saltedJoin(orders, cust, "o_custkey", "c_custkey"))
     assert(salted == plain)
   }
 
@@ -309,7 +309,7 @@ class ScaleSpec extends AnyFunSuite {
     val items = (Seq.fill(40)("hot") ++ Seq.fill(7)("warm") ++
       (0 until 20).map(i => s"t$i")).toDF("token")
     val qs = Seq("hot", "warm", "t3", "ghost").toDF("token")
-    val out = Sketches.cmsPointEstimates(items, "token", qs, w = 4096, d = 4)
+    val out = Sketches.cmsPointEstimates(items, "token", qs, w = 4096)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     // CMS can only overcount
     out.foreach { case (k, (est, exact)) => assert(est >= exact, s"$k undercounted") }
@@ -428,20 +428,20 @@ class ScaleSpec extends AnyFunSuite {
     val df = Seq(("A", "a b c d e f"), ("B", "a b c d e x"))
       .toDF("source", "text")
     val exact = graft.operators.Sketches
-      .kmvPairwiseJaccard(df, "source", "text", gramN = 5, k = 256)
+      .kmvPairwiseJaccard(df, "source", "text", k = 256)
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(exact.toSeq == Seq(("A", "B", 1L, 3L, 1.0 / 3)))
     // k = 2: the union sketch is capped at 2 hashes; the estimate stays a
     // valid ratio of exact integers whatever the hash order picked
     val capped = graft.operators.Sketches
-      .kmvPairwiseJaccard(df, "source", "text", gramN = 5, k = 2)
+      .kmvPairwiseJaccard(df, "source", "text", k = 2)
       .collect().map(r => (r.getLong(3), r.getDouble(4))).head
     assert(capped._1 == 2L && capped._2 >= 0.0 && capped._2 <= 1.0)
     // short texts (< gramN tokens) contribute no grams and no pairs
     assert(graft.operators.Sketches.kmvPairwiseJaccard(
       Seq(("A", "a b"), ("B", "c d")).toDF("source", "text"),
-      "source", "text", gramN = 5, k = 4).count() == 0)
+      "source", "text", k = 4).count() == 0)
   }
 
   test("q128 quality tiers: monotone in n_chars, all quartiles hit, no global sort") {

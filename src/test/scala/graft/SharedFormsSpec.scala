@@ -159,4 +159,17 @@ class SharedFormsSpec extends AnyFunSuite {
     assert(pairs.isEmpty, s"${pairs.size} self-building overloads beside " +
       s"their *From form: ${pairs.mkString(", ")}")
   }
+
+  test("every default argument is taken by one caller and overridden by another") {
+    // the program's compiled classes, called from them and from the tests
+    val Seq(main, test) = Seq("graft/Graft.class", "graft/SharedFormsSpec.class").map { r =>
+      new java.io.File(getClass.getClassLoader.getResource(r).toURI).getParentFile.getParentFile
+    }
+    val slots = DefaultCensus.slots(main, Seq(test))
+    assert(slots.exists(_.method == "withRetry"), "census found no default arguments")
+    // a default no caller takes is dead; one every caller takes is a constant
+    val knobs = slots.filter(s => s.taken == 0 || s.taken == s.calls)
+    if (knobs.nonEmpty) fail(s"${knobs.size} of ${slots.size} default-argument slots " +
+      s"have one value in use:\n${knobs.map(_.label).mkString("\n")}")
+  }
 }

@@ -751,8 +751,7 @@ class StreamingSpec extends AnyFunSuite {
       // batch reference over the SAME events (late row excluded by the
       // drop contract); the trailing day 9 is still pending in the stream
       val batch = graft.operators.Temporal.holtWinters(
-        evs.toDF(), "event_type", "ts", "value",
-        alpha = 0.4, beta = 0.2, gamma = 0.3, period = 7)
+        evs.toDF(), "event_type", "ts", "value")
         .where(col("day_idx") < 9).collect()
         .map(r => r.getAs[Long]("day_idx") -> (r.getAs[Double]("v"),
           r.getAs[Double]("level"), r.getAs[Double]("trend"),
@@ -780,8 +779,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val input = MemoryStream[StreamingLineDedup.Doc]
     val q = StreamingAgg.startToMemory(
-      StreamingLineDedup.boilerplateLines(input.toDS(), lineTokens = 3,
-        minDocs = 3).toDF(), "line_dedup_test")
+      StreamingLineDedup.boilerplateLines(input.toDS()).toDF(), "line_dedup_test")
     def emitted() = spark.sql("SELECT line, n_docs FROM line_dedup_test")
       .collect().map(r => (r.getString(0), r.getLong(1))).toList
     try {
@@ -835,7 +833,7 @@ class StreamingSpec extends AnyFunSuite {
     // lineDedup drops are exactly the census lines)
     val input = MemoryStream[StreamingLineDedup.Doc]
     val q = StreamingAgg.startToMemory(
-      StreamingLineDedup.boilerplateLines(input.toDS(), 3, 3).toDF(),
+      StreamingLineDedup.boilerplateLines(input.toDS()).toDF(),
       "line_dedup_split_test")
     try {
       input.addData(docs: _*)
@@ -863,8 +861,8 @@ class StreamingSpec extends AnyFunSuite {
     // 2^16 bits for ~8 line types: FP probability ~0, so decisions must
     // equal exact first-occurrence dedup whatever the arrival order
     val q = StreamingAgg.startToMemory(
-      StreamingBloomDedup.dedupDecisions(input.toDS(), lineTokens = 3,
-        mBits = 1 << 16, nShards = 8, k = 3).toDF(), "bloom_dedup_test")
+      StreamingBloomDedup.dedupDecisions(input.toDS(),
+        mBits = 1 << 16, nShards = 8).toDF(), "bloom_dedup_test")
     def decisions() = spark.sql("SELECT line, dup FROM bloom_dedup_test")
       .collect().map(r => (r.getString(0), r.getBoolean(1)))
     try {
@@ -909,8 +907,8 @@ class StreamingSpec extends AnyFunSuite {
     // so keeps <= 16 REGARDLESS of arrival order — the order-free
     // saturation invariant (the q366 census's saturation regime, live)
     val q = StreamingAgg.startToMemory(
-      StreamingBloomDedup.dedupDecisions(input.toDS(), lineTokens = 3,
-        mBits = 16, nShards = 2, k = 3).toDF(), "bloom_sat_test")
+      StreamingBloomDedup.dedupDecisions(input.toDS(),
+        mBits = 16, nShards = 2).toDF(), "bloom_sat_test")
     try {
       input.addData((0L until 100L).map(i =>
         StreamingBloomDedup.Doc(i, s"u$i v$i w$i")): _*)
