@@ -3,19 +3,33 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val usage =
+    "usage: Verify <sfDir> <outDir> [comma-separated query names or <entry>_ prefixes]"
+
+  /** The dump's (sf dir, out dir, name filter). Two arguments dump every
+    * query; the optional third restricts the dump for fast local
+    * iteration, each entry selecting queries by the `Bench.selected` rule.
+    * Rejects, with the usage message, fewer than two or more than three
+    * arguments and an entry that selects no registered query — before
+    * any session is built. */
+  private[graft] def parseArgs(args: Array[String]): (String, String, Option[Set[String]]) = {
+    def fail(why: String) = throw new IllegalArgumentException(s"$why\n$usage")
+    if (args.length < 2 || args.length > 3)
+      fail(s"expected 2 or 3 arguments, got ${args.length}")
+    val only = args.lift(2).map(_.split(",").toSet)
+    val unmatched = only.toSeq.flatten.filterNot(e =>
+      SparkEntry.queries.keys.exists(Bench.selected(Some(Set(e)), _)))
+    if (unmatched.nonEmpty) fail(s"no query matches ${unmatched.sorted.mkString(", ")}")
+    (args(0), args(1), only)
+  }
+
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [comma-separated query names] — the optional
-    // third arg restricts the dump for fast local iteration; the driver
-    // always calls with two args (all queries).
-    val sfDir = args(0)
-    val outDir = args(1)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val (sfDir, outDir, only) = parseArgs(args)
     val spark = Graft.session("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Bench.selected(only, name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -32,27 +32,19 @@ object CorpusStats {
     * Plan: per-doc DISTINCT tokens (one narrow explode), then a doc-keyed
     * self-join expands each document's token-pair set — bounded by
     * (per-doc distinct tokens)^2, the collocation-mining analogue of the
-    * LSH bucket expansion, NOT corpus x corpus. At web scale the expansion
-    * is capped the same way q75 caps gram buckets: drop ubiquitous tokens
-    * first (df cap) — here `maxDfFrac` excludes tokens in more than that
-    * fraction of documents (1.0 = keep all; stopword-class tokens pair
-    * with everything and carry no collocation signal anyway). The pair
-    * count + the two unary counts meet through pair-keyed equi-joins.
+    * LSH bucket expansion, NOT corpus x corpus. The pair count + the two
+    * unary counts meet through pair-keyed equi-joins.
     *
     * The single ln() runs once per surviving PAIR TYPE on an exact integer
     * ratio, rounded to 6 dp — no sums over doubles anywhere. */
   def tokenPmi(docs: DataFrame, idCol: String, textCol: String,
-               minPairCount: Long, maxDfFrac: Double = 1.0): DataFrame = {
+               minPairCount: Long): DataFrame = {
     val dt = docs.select(col(idCol).as("__id"),
         explode(array_distinct(split(col(textCol), " "))).as("tok"))
       .where(length(col("tok")) >= 1)
     val nDocs = docs.select(col(idCol)).distinct()
       .agg(count(lit(1)).as("n_docs"))
-    val ca = dt.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-    val kept = if (maxDfFrac >= 1.0) ca else
-      ca.join(broadcast(nDocs), // 1-row stats table
-          col("c") <= col("n_docs").cast("double") * lit(maxDfFrac))
-        .select(col("tok"), col("c"))
+    val kept = dt.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val dtk = dt.join(kept.select(col("tok")), "tok")
     val pairs = dtk.join(
         dtk.select(col("__id"), col("tok").as("tok_b")), "__id")

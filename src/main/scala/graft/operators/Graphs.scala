@@ -274,8 +274,8 @@ object Graphs {
   /** Iterative BFS tree/DAG traversal — the engine's answer to a recursive
     * CTE (Spark has none): starting from `roots` at depth 0, each round
     * joins the frontier against the child→parent edge list and assigns
-    * depth d+1, until a round discovers nothing new (or `maxIters` guards a
-    * cycle). Output: (node, depth) — first-reached depth per node
+    * depth d+1, until a round discovers nothing new (or a 100-round cap
+    * guards a cycle). Output: (node, depth) — first-reached depth per node
     * (dedup-min for DAGs where multiple parents reach a node).
     *
     * Scale design: one edge-keyed equi-join per LEVEL (O(depth) rounds,
@@ -284,8 +284,8 @@ object Graphs {
     * emptiness probe is a limit-1 action (`head(1)`), not a collect. A SQL
     * oracle replays the whole traversal as a native WITH RECURSIVE. */
   def treeDepths(edges: DataFrame, childCol: String, parentCol: String,
-                 roots: DataFrame, rootCol: String,
-                 maxIters: Int = 100): DataFrame = {
+                 roots: DataFrame, rootCol: String): DataFrame = {
+    val maxIters = 100
     val e = checkpoint(edges.select(col(childCol).as("__c"), col(parentCol).as("__p")))
     var frontier = checkpoint(roots.select(col(rootCol).as("node"),
       lit(0L).as("depth")))

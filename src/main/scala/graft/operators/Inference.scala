@@ -136,10 +136,10 @@ object Inference {
     * that table, never data. Output: idCol, p, p_rank, bh_crit,
     * significant.
     *
-    * α enters as the rational alphaNum/alphaDen so the pass predicate
-    * p·m·den ≤ i·num stays in exact terms on the p side only once. */
-  def bhFdr(df: DataFrame, idCol: String, pCol: String,
-            alphaNum: Long = 1, alphaDen: Long = 10): DataFrame = {
+    * α = 1/10 enters as the rational alphaNum/alphaDen so the pass
+    * predicate p·m·den ≤ i·num stays in exact terms on the p side only once. */
+  def bhFdr(df: DataFrame, idCol: String, pCol: String): DataFrame = {
+    val (alphaNum, alphaDen) = (1L, 10L)
     val m = Window.partitionBy()
     val w = Window.orderBy(col(pCol).asc, col(idCol).asc)
     val ranked = df

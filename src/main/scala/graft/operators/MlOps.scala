@@ -95,11 +95,11 @@ object MlOps {
     *  - source_ok — the naive-Bayes source classifier (q193) re-derives
     *    the doc's claimed `classCol`: a miss means the text does not look
     *    like its provenance says it should.
-    *  - lang_ok — the Cavnar-Trenkle trigram LID (q316) agrees with the
-    *    doc's `langCol` label (false when the doc is too short to
-    *    profile).
+    *  - lang_ok — the Cavnar-Trenkle trigram LID (q316, top 20
+    *    trigrams) agrees with the doc's `langCol` label (false when the
+    *    doc is too short to profile).
     *  - lm_ok — corpus bigram-LM cross-entropy (q140's scorer) lands in
-    *    [xentLo, xentHi]: below is degenerate repetition, above is
+    *    [3.0, 3.6] nats: below is degenerate repetition, above is
     *    gibberish (false when the doc has no scorable bigram).
     *
     * keep = majority (>= 2 of 3). Gated docs are the NB TEST half only
@@ -111,9 +111,8 @@ object MlOps {
     * composed by doc-id equi-joins; the gate itself adds one narrow
     * 3-way join and in-row boolean math. */
   def classifierEnsembleGate(docs: DataFrame, idCol: String, textCol: String,
-                             langCol: String, classCol: String, k: Int = 20,
-                             xentLo: Double = 3.0,
-                             xentHi: Double = 3.6): DataFrame = {
+                             langCol: String, classCol: String): DataFrame = {
+    val (k, xentLo, xentHi) = (20, 3.0, 3.6)
     val nb = naiveBayesPredictions(docs, idCol, textCol, classCol)
       .select(col(idCol), (col("predicted") === col("actual")).as("source_ok"))
     val lid = ctLangIdPredictions(docs, idCol, textCol, langCol, k)

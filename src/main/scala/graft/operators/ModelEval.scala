@@ -358,7 +358,7 @@ object ModelEval {
   /** Uplift decile table + Qini curve (Radcliffe 2007) for a randomized
     * experiment: units carry an integer targeting score, a treatment
     * flag and a binary outcome; units are ranked score-DESC into
-    * `nBins` cumulative bins (ties share a bin — value cutoffs, never a
+    * ten cumulative bins (ties share a bin — value cutoffs, never a
     * per-row rank, the [[gainsTable]] discipline), and each row reports
     * the cumulative treated/control counts and conversions, cumulative
     * uplift, the Qini y-value qini_y = cum_conv_t − cum_conv_c·(cum_n_t /
@@ -370,14 +370,14 @@ object ModelEval {
     * Exactness: counts are exact BIGINTs through both grid cumulations
     * (score grid, then bin grid); uplift/qini are fixed-order double
     * formulas over them. Windows ride AGGREGATED grids (distinct scores,
-    * then ≤ nBins rows), never unit rows.
+    * then ≤ 10 rows), never unit rows.
     *
     * Both grids stay constant on replicated units; cost is the unit
     * aggregate.
     */
   def upliftQini(units: DataFrame, scoreCol: String, treatCol: Column,
-                 outcomeCol: Column, nBins: Int = 10): DataFrame = {
-    require(nBins >= 2, "need at least two bins")
+                 outcomeCol: Column): DataFrame = {
+    val nBins = 10
     // the distinct-score grid is the only corpus-scale aggregate and is
     // consumed by the bin cut, the Qini coefficient AND the final
     // projection — checkpoint so the unit scan runs once

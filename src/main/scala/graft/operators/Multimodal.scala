@@ -33,7 +33,7 @@ object Multimodal {
     * image/audio codec (none available in this container). Derives stable
     * "dimensions" and a feature sketch from ONE pass over the payload bytes
     * (no per-feature copies of the content). */
-  private[operators] def stubDecode(m: Media, featureDim: Int): MediaFeatures = {
+  private[operators] def stubDecode(m: Media): MediaFeatures = {
     val h = graft.functions.SimHash64.fnv1a(m.content)
     val width = 16 + (java.lang.Long.remainderUnsigned(h, 1024L)).toInt
     val height = 16 + (java.lang.Long.remainderUnsigned(h >>> 10, 1024L)).toInt
@@ -41,7 +41,7 @@ object Multimodal {
       case "video" => 1 + (java.lang.Long.remainderUnsigned(h >>> 20, 240L)).toInt
       case _ => 1
     }
-    val feats = Array.tabulate(featureDim) { i =>
+    val feats = Array.tabulate(4) { i =>
       // continue the FNV chain per feature index instead of re-hashing content
       val hi = (h ^ (i + 1).toLong) * 1099511628211L
       (hi.toDouble / Long.MaxValue).toFloat
@@ -49,10 +49,11 @@ object Multimodal {
     MediaFeatures(m.media_id, m.kind, m.content.length.toLong, width, height, frames, feats)
   }
 
-  /** Batch decode + feature extraction over a typed media dataset. */
-  def extractFeatures(media: Dataset[Media], featureDim: Int = 4): Dataset[MediaFeatures] = {
+  /** Batch decode + feature extraction (4 features per record) over a
+    * typed media dataset. */
+  def extractFeatures(media: Dataset[Media]): Dataset[MediaFeatures] = {
     import media.sparkSession.implicits._
-    media.mapPartitions(_.map(stubDecode(_, featureDim)))
+    media.mapPartitions(_.map(stubDecode))
   }
 
   /** STUB resize: maps each payload to a target-dimension record plus a

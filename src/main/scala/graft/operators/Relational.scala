@@ -87,24 +87,17 @@ object Relational {
     * aggregate, then `stack` pivots the 1-row result into per-column rows —
     * never a scan per column.
     *
-    * Scale notes: `approx = false` (the gate-able default) uses exact
-    * `countDistinct` — k columns expand the scan k-fold (Spark's
-    * multi-distinct Expand), the priced cost of exactness (6.7 s of the
-    * 212-query bench is this query). `approx = true` swaps every distinct
-    * count for `approx_count_distinct` (HLL++ partial aggregation —
-    * constant register state per column per task, NO Expand, ~1.6% rsd,
-    * null-skipping like the exact path) — the 100 TB path, same output
-    * shape. Output: (column_name, n_rows, n_null, n_distinct, min_num,
-    * max_num). */
-  def columnProfile(df: DataFrame, approx: Boolean = false): DataFrame = {
+    * Scale notes: exact `countDistinct` — k columns expand the scan
+    * k-fold (Spark's multi-distinct Expand), the priced cost of exactness
+    * (6.7 s of the 212-query bench is this query); [[columnProfileSketch]]
+    * is the Expand-free scale form. Output: (column_name, n_rows, n_null,
+    * n_distinct, min_num, max_num). */
+  def columnProfile(df: DataFrame): DataFrame = {
     val fields = df.schema.fields
-    def distinctOf(f: org.apache.spark.sql.types.StructField): Column =
-      if (approx) approx_count_distinct(col(f.name), 0.016)
-      else countDistinct(col(f.name))
     val aggs = fields.flatMap { f =>
       Seq(
         sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__null_${f.name}"),
-        distinctOf(f).as(s"__nd_${f.name}"),
+        countDistinct(col(f.name)).as(s"__nd_${f.name}"),
         min(numView(f)).as(s"__min_${f.name}"),
         max(numView(f)).as(s"__max_${f.name}"))
     }

@@ -15,47 +15,33 @@ import org.apache.spark.sql.functions._
   *
   * Scale: two keyed aggregates over a narrow (key, id, value) projection and
   * two BROADCAST joins of |groups|-row stat tables — value data is scanned,
-  * never shuffled. Exact per-group median (the default, and the oracle
-  * contract q111/q120 pin) does sort each group; when single groups outgrow
-  * a per-task sort at 100 TB, pass `approx = true` to swap both medians for
-  * `percentile_approx` — identical shape and output schema, bounded
-  * O(accuracy) state per group (the q96/q107 sketch path), at the cost of
-  * sketch-grade stats (flags can differ for rows near the cutoff boundary;
-  * well-separated outliers are flagged identically — spec-pinned).
+  * never shuffled. The exact per-group median (the oracle contract
+  * q111/q120 pin) sorts each group.
   *
   * MAD = 0 degeneracy: when more than half a group's values are identical
   * the MAD collapses to 0 and the strict `adev > cutoff * mad` test flags
   * EVERY row with any nonzero deviation — standard MAD behavior (DuckDB
   * matches, which is why the oracle stays green) but it can flood the
-  * report on near-constant groups. `madFloor` clamps the scale estimate
-  * from below (`max(mad, madFloor)`) for callers that want a minimum
-  * meaningful deviation; the default 0.0 preserves the exact contract.
+  * report on near-constant groups.
   */
 object Robust {
 
-  /** Flag rows where |value - median_g| > cutoff * max(MAD_g, madFloor)
+  /** Flag rows where |value - median_g| > cutoff * max(MAD_g, 0.0)
     * within each group. Output: keyCol, idCol, valCol, med, mad (stat
-    * columns as double; `mad` is pre-floor so the report shows the true
-    * dispersion). `approx` selects percentile_approx(0.5, accuracy) over
-    * exact median for both stats. */
+    * columns as double). */
   def madOutliers(df: DataFrame, keyCol: String, idCol: String, valCol: String,
-                  cutoff: Double, approx: Boolean = false,
-                  madFloor: Double = 0.0): DataFrame = {
-    val accuracy = 10000
-    def med50(c: org.apache.spark.sql.Column) =
-      if (approx) percentile_approx(c, lit(0.5), lit(accuracy)).cast("double")
-      else median(c)
+                  cutoff: Double): DataFrame = {
     val vals = df.select(col(keyCol), col(idCol), col(valCol))
     val med = vals.groupBy(col(keyCol))
-      .agg(med50(col(valCol)).as("med"))
+      .agg(median(col(valCol)).as("med"))
     // dev feeds BOTH the MAD aggregate and the output join — pin it so the
     // value scan + median join run once, not once per consumer
     val dev = CacheScope.persist(vals.join(broadcast(med), keyCol)
       .withColumn("adev", abs(col(valCol).cast("double") - col("med"))))
     val mad = dev.groupBy(col(keyCol))
-      .agg(med50(col("adev")).as("mad"))
+      .agg(median(col("adev")).as("mad"))
     dev.join(broadcast(mad), keyCol)
-      .where(col("adev") > lit(cutoff) * greatest(col("mad"), lit(madFloor)))
+      .where(col("adev") > lit(cutoff) * greatest(col("mad"), lit(0.0)))
       .select(col(keyCol), col(idCol), col(valCol), col("med"), col("mad"))
   }
 

@@ -506,13 +506,13 @@ object Scale {
   /** UniMax epoch-capped budget allocation (Chung et al. 2023,
     * "UniMax: Fairer and More Effective Language Sampling" — public
     * paper): split a token budget B across sources as UNIFORMLY as
-    * possible subject to the per-source cap of `epochCap` epochs —
+    * possible subject to the per-source cap of `epochCap` = 2 epochs —
     * allocation_i = min(epochCap·s_i, L) with the water level L the
     * LARGEST integer with Σ_i min(cap_i, L) ≤ B. The fairness-first
     * alternative to q123's temperature sampling (which still
     * over-samples heads) and q94's fixed quotas: small sources get up to
     * epochCap full epochs, large sources split the remainder evenly.
-    * B = ts·budgetNum/budgetDen of the corpus's total token count, so
+    * B = ts·1/2 of the corpus's total token count, so
     * the whole computation is exact integers derived from the data.
     *
     * Exact waterfilling, no iteration: on the cap VALUE GRID (distinct
@@ -530,11 +530,8 @@ object Scale {
     * allocation is the under-cap residue (≤ n − 1 unless every source
     * capped). Scale: one source-keyed aggregate over the corpus, then
     * grid-bounded arithmetic + two 1-row broadcasts. */
-  def unimaxMix(docs: DataFrame, srcCol: String, textCol: String,
-                epochCap: Int = 2, budgetNum: Int = 1, budgetDen: Int = 2)
-  : DataFrame = {
-    require(epochCap >= 1 && budgetNum > 0 && budgetDen >= budgetNum,
-      "need epochCap >= 1 and 0 < budgetNum <= budgetDen")
+  def unimaxMix(docs: DataFrame, srcCol: String, textCol: String): DataFrame = {
+    val (epochCap, budgetNum, budgetDen) = (2, 1, 2)
     val per = docs.groupBy(col(srcCol).as("source"))
       .agg(sum(size(split(coalesce(col(textCol), lit("")), " ")))
         .cast("long").as("s"))

@@ -71,16 +71,16 @@ object SchemaDiscovery {
     * statistic behind every join-order decision: exact |A ⋈ B| =
     * Σ_k cA(k)·cB(k) from the two per-key count tables, next to the
     * end-biased KEY-sampled estimate (keep keys with hash60(k) ≡ 0
-    * mod `rate`, scale the sampled product mass by `rate` — sampling
-    * KEYS, not rows, keeps each key's contribution exact, the classic
+    * mod 16, scale the sampled product mass by 16 — sampling KEYS, not
+    * rows, keeps each key's contribution exact, the classic
     * distinct-value sampling posture). rel_err is the audit number: how
-    * far the 1/`rate` sketch lands from truth on this key distribution.
+    * far the 1/16 sketch lands from truth on this key distribution.
     * Two keyed aggregates + one key-equi join; the per-key hash gate is
     * the same deterministic hash60 the sampling shelf replays. One row:
     * join_cand, n_keys, exact_rows, sampled_keys, est_rows, rel_err. */
   def joinSizeEstimate(child: DataFrame, childCol: String, parent: DataFrame,
-                       parentCol: String, label: String,
-                       rate: Int = 16): DataFrame = {
+                       parentCol: String, label: String): DataFrame = {
+    val rate = 16
     val a = child.groupBy(col(childCol).cast("long").as("__k"))
       .agg(count(lit(1)).as("__ca"))
     val b = parent.groupBy(col(parentCol).cast("long").as("__k"))

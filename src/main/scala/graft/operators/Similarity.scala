@@ -30,12 +30,15 @@ object Similarity {
 
   private val dot = dot_d(col("q_emb"), col("c_emb"))
 
+  /** Cosine of a (q_emb, c_emb) pair over its norms (q_nrm, c_nrm). */
+  private val cosine = dot / (col("q_nrm") * col("c_nrm"))
+
   /** The k best (query_id, neighbor_id) pairs per query by cosine, ties to
     * the smaller neighbor, as (query_id, rnk, neighbor_id, cos_sim). */
   private def rankedCosine(pairs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     pairs.where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("cos", cosine)
       .withColumn("rnk", row_number().over(w).cast("bigint"))
       .where(col("rnk") <= k)
       .select(col("query_id"), col("rnk"), col("neighbor_id"),
@@ -45,7 +48,7 @@ object Similarity {
   /** The window-free form of [[rankedCosine]] over pairs already without
     * self-pairs: one bounded [[graft.functions.TopKAgg]] per query. */
   private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
-    pairs.withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+    pairs.withColumn("cos", cosine)
       .groupBy(col("query_id"))
       .agg(graft.functions.TopKAgg.columnAgg(k)(col("cos"), col("neighbor_id").cast("long")).as("tk"))
       .select(col("query_id"), posexplode(col("tk")))
@@ -104,7 +107,7 @@ object Similarity {
       col("emb").as("c_emb"), col("nrm").as("c_nrm"))
     a.join(b, "bucket")
       .where(col("id_a") < col("id_b"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("cos", cosine)
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos_sim"))
   }
@@ -143,7 +146,7 @@ object Similarity {
     val y = ce.toDF("query_id", "b", "c_emb", "c_nrm")
     val sims = save(x.join(y, "query_id").where(col("a") =!= col("b"))
       .select(col("query_id"), col("a"), col("b"),
-        round(dot / (col("q_nrm") * col("c_nrm")), 6).as("sim")))
+        round(cosine, 6).as("sim")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("cand").asc)
     var acc = save(cand.withColumn("score", col("rel"))
@@ -470,7 +473,7 @@ object Similarity {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
     broadcast(q).crossJoin(c)
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("cos", cosine)
       .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
       .groupBy(col("query_id"), col("label"))
@@ -617,7 +620,7 @@ object Similarity {
     * shares one build, so the tie-break/quantization semantics can never
     * drift. CONTRACT: the caller must pass frames built from the same
     * emb/idCol/vecCol/nlist/lloydIters the consumer advertises (the
-    * exactSubstringSweep prebuilt rule). */
+    * exactSubstringSweep `runs20` rule). */
   def semAssignmentFrames(emb: DataFrame, idCol: String, vecCol: String,
                           nlist: Int, lloydIters: Int)
   : (DataFrame, DataFrame) = {
@@ -780,7 +783,7 @@ object Similarity {
       col("emb").as("c_emb"), col("nrm").as("c_nrm"))
     a.join(b, "cid")
       .where(col("id_a") > col("id_b"))
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("cos", cosine)
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cid"), col("cos"))
   }
@@ -849,37 +852,14 @@ object Similarity {
           (col("n_vecs") - col("n_nonfinite")).cast("double"), 6).as("mean_norm"))
   }
 
-  /** Product-quantization ANN with asymmetric distance computation (ADC) —
-    * the PQ stage of Jégou et al.'s IVFADC (public paper, "Product
-    * Quantization for Nearest Neighbor Search"): the vector is split into
-    * `m` subvectors of `subDim` dims, each subspace trains its own
-    * `ksub`-centroid codebook (the shared [[kmeansCentroids]] Lloyd
-    * trainer, deterministic seeds), and every corpus vector is stored as m
-    * small codes — m·log2(ksub) bits instead of 8·dim·m bytes (here 4
-    * bytes vs 512: 128x). A query never decodes the corpus: it
-    * precomputes its distance to every centroid of every subspace (an
-    * m×ksub lookup table) and scores a candidate as the SUM of m table
-    * lookups — the memory-bandwidth shape that makes billion-vector scans
-    * feasible. Stage 2 re-ranks the `nCandidates` ADC survivors with exact
-    * cosine, as in [[quantizedRerankKnn]].
-    *
-    * Scale shape: codebooks are m·ksub rows (broadcast); the corpus is
-    * touched by ONE assignment pass per subspace (min-struct aggregates,
-    * no windows) and ONE code-scan join against the broadcast query
-    * tables; in a production store this stage sits behind the q50 IVF
-    * coarse quantizer (IVFADC composes them) so the scan covers probed
-    * lists only. ADC sums are exact BIGINT micro-units (each subspace
-    * distance quantized once per (query, centroid) TABLE ENTRY, not per
-    * candidate), so candidate ranking is deterministic on any engine; the
-    * final cosines are exact doubles rounded once. */
   /** Full IVFADC (Jégou et al.): the q50 coarse quantizer and the q165
     * product quantizer COMPOSED, with residual encoding — the index layout
     * behind billion-scale vector search. The coarse quantizer partitions
-    * the (L2-normalized) corpus into `nlist` inverted lists; each vector
+    * the (L2-normalized) corpus into `nlist` = 8 inverted lists; each vector
     * stores only its list id + the PQ codes of its RESIDUAL (x − coarse
     * centroid), which is what makes the codes sharp: residuals concentrate
     * near 0, so a small shared codebook quantizes them with far less error
-    * than raw vectors. A query probes its `nprobe` nearest lists, builds
+    * than raw vectors. A query probes its `nprobe` = 2 nearest lists, builds
     * one ADC lookup table per probed list from its per-list residual, and
     * scores only those lists' members as m integer table lookups.
     *
@@ -894,10 +874,9 @@ object Similarity {
     * argmin is a (d2, cid)-ordered min-struct, ADC entries quantize once
     * per (query, list, centroid). */
   def ivfpqKnn(emb: DataFrame, idCol: String, vecCol: String,
-               queryPred: org.apache.spark.sql.Column, k: Int,
-               nlist: Int = 8, nprobe: Int = 2, coarseIters: Int = 1,
-               m: Int = 4, subDim: Int = 16, ksub: Int = 16,
-               pqIters: Int = 1, nCandidates: Int = 30): DataFrame = {
+               queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    val (nlist, nprobe, coarseIters) = (8, 2, 1)
+    val (m, subDim, ksub, pqIters, nCandidates) = (4, 16, 16, 1, 30)
     require(nCandidates >= k, "re-rank pool must be at least k")
     val n = CacheScope.persist(withNorm(emb, idCol, vecCol))
     val un = CacheScope.persist(n.select(col(idCol),
@@ -969,10 +948,32 @@ object Similarity {
     adcRerank(adc, n, idCol, queryPred, k, nCandidates)
   }
 
+  /** Product-quantization ANN with asymmetric distance computation (ADC) —
+    * the PQ stage of Jégou et al.'s IVFADC (public paper, "Product
+    * Quantization for Nearest Neighbor Search"): the vector is split into
+    * `m` = 4 subvectors of `subDim` = 16 dims, each subspace trains its own
+    * `ksub` = 16-centroid codebook (the shared [[kmeansCentroids]] Lloyd
+    * trainer, deterministic seeds), and every corpus vector is stored as m
+    * small codes — m·log2(ksub) bits instead of 8·dim·m bytes (here 4
+    * bytes vs 512: 128x). A query never decodes the corpus: it
+    * precomputes its distance to every centroid of every subspace (an
+    * m×ksub lookup table) and scores a candidate as the SUM of m table
+    * lookups — the memory-bandwidth shape that makes billion-vector scans
+    * feasible. Stage 2 re-ranks the 30 best ADC survivors with exact
+    * cosine, as in [[quantizedRerankKnn]].
+    *
+    * Scale shape: codebooks are m·ksub rows (broadcast); the corpus is
+    * touched by ONE assignment pass per subspace (min-struct aggregates,
+    * no windows) and ONE code-scan join against the broadcast query
+    * tables; in a production store this stage sits behind the q50 IVF
+    * coarse quantizer (IVFADC composes them) so the scan covers probed
+    * lists only. ADC sums are exact BIGINT micro-units (each subspace
+    * distance quantized once per (query, centroid) TABLE ENTRY, not per
+    * candidate), so candidate ranking is deterministic on any engine; the
+    * final cosines are exact doubles rounded once. */
   def pqKnn(emb: DataFrame, idCol: String, vecCol: String,
-            queryPred: org.apache.spark.sql.Column, k: Int,
-            m: Int = 4, subDim: Int = 16, ksub: Int = 16,
-            lloydIters: Int = 1, nCandidates: Int = 30): DataFrame = {
+            queryPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    val (m, subDim, ksub, lloydIters, nCandidates) = (4, 16, 16, 1, 30)
     require(nCandidates >= k, "re-rank pool must be at least k")
     val n = CacheScope.persist(withNorm(emb, idCol, vecCol))
     // codes are built from the L2-NORMALIZED vector: on the unit sphere,
@@ -1060,7 +1061,7 @@ object Similarity {
     val b = n.where(!sideA).select(col(idCol).as("id_b"),
       col("emb").as("c_emb"), col("nrm").as("c_nrm"))
     val cos = broadcast(a).crossJoin(b)
-      .withColumn("cos", dot / (col("q_nrm") * col("c_nrm")))
+      .withColumn("cos", cosine)
     val topk = graft.functions.TopKAgg.columnAgg(k)
     def side(keyCol: String, nbCol: String) = cos
       .groupBy(col(keyCol))

@@ -367,59 +367,42 @@ object TextDedup {
   }
 
   /** Dedup-granularity sweep (the Lee et al. 2022 §4 tuning artifact):
-    * [[exactSubstringRuns]] at several window lengths l, each reduced to
-    * the numbers the threshold decision needs — run count, distinct
-    * duplicated tokens (doc_b side, the [[exactSubstringDedupFrom]] removal
-    * mass) and the duplicated fraction of the corpus (half-up 6-dp).
-    * Short l over-matches (natural collocations), long l under-matches
-    * (misses short boilerplate); the sweep shows where the curve bends
-    * for THIS corpus.
+    * [[exactSubstringRuns]] at window lengths l = 10, 20 and 40, each
+    * reduced to the numbers the threshold decision needs — run count,
+    * distinct duplicated tokens (doc_b side, the [[exactSubstringDedupFrom]]
+    * removal mass) and the duplicated fraction of the corpus (half-up
+    * 6-dp). Short l over-matches (natural collocations), long l
+    * under-matches (misses short boilerplate); the sweep shows where the
+    * curve bends for THIS corpus.
     *
-    * Scale: |ls| passes over the window-fingerprint machinery, each
-    * df-capped exactly like q300; the covered-position explode stays
-    * linear in duplicated mass per l. Output row per l: l, n_runs,
-    * n_dup_tokens, n_tokens, dup_frac.
+    * Scale: the l = 10 and 40 legs share ONE pass over the
+    * window-fingerprint machinery with l stacked as a column
+    * ([[exactSubstringRunsMulti]] — per-l run multisets are identical to
+    * [[exactSubstringRuns]] by construction), each df-capped exactly like
+    * q300; the covered-position explode stays linear in duplicated mass
+    * per l, and the census is one l-keyed aggregate pair. A leg with zero
+    * runs keeps its row through the left joins (coalesce 0). Output row
+    * per l: l, n_runs, n_dup_tokens, n_tokens, dup_frac.
     *
-    * `prebuilt` CONTRACT (r19 ADVICE): each supplied frame MUST be the
-    * [[exactSubstringRuns]] output for exactly (docs, idCol, textCol,
-    * its map key l, THIS maxDf) — the map key alone is trusted; a frame
-    * built from other docs or another maxDf silently yields wrong sweep
-    * rows. The schema is asserted below; provenance is the caller's
-    * responsibility (the only caller passes the session-shared l=20
-    * inventory built with the same arguments, SharedFormsSpec-pinned). */
+    * `runs20` CONTRACT (r19 ADVICE): it MUST be the [[exactSubstringRuns]]
+    * output for exactly (docs, idCol, textCol, l = 20, maxDf = 10) — a
+    * frame built from other docs or another l or maxDf silently yields
+    * wrong sweep rows. The schema is asserted below; provenance is the
+    * caller's responsibility (the query passes the session-shared l=20
+    * inventory, SharedFormsSpec-pinned). */
   def exactSubstringSweep(docs: DataFrame, idCol: String, textCol: String,
-                          ls: Seq[Int] = Seq(10, 20, 40),
-                          prebuilt: Map[Int, DataFrame] = Map.empty)
-  : DataFrame = {
-    val maxDf = 10
-    require(ls.nonEmpty && ls.forall(_ >= 2), "need window lengths >= 2")
-    prebuilt.values.foreach(f => require(
-      f.columns.toSeq == Seq("doc_a", "doc_b", "a_start", "b_start",
+                          runs20: DataFrame): DataFrame = {
+    val (ls, maxDf) = (Seq(10, 20, 40), 10)
+    require(runs20.columns.toSeq == Seq("doc_a", "doc_b", "a_start", "b_start",
         "run_tokens"),
-      s"prebuilt frame is not an exactSubstringRuns output " +
-        s"(got columns ${f.columns.mkString(",")})"))
+      s"runs20 is not an exactSubstringRuns output " +
+        s"(got columns ${runs20.columns.mkString(",")})")
     val total = docs.select(
       sum(size(split(coalesce(col(textCol), lit("")), " ")))
         .cast("long").as("n_tokens"))
-    // r20 fold (guide §2.4): the non-prebuilt legs used to run |ls|-1
-    // SEQUENTIAL run builds (each its own corpus scan + df-cap + pair
-    // join + stitch); now they share ONE machinery pass with l stacked
-    // as a column ([[exactSubstringRunsMulti]] — per-l run multisets are
-    // identical by construction), PREBUILT legs (the session-shared
-    // l=20 inventory) union in with their l tag, and the census is one
-    // l-keyed aggregate pair instead of per-l chains. A leg with zero
-    // runs keeps its row through the left joins (coalesce 0 — the old
-    // per-leg count-over-empty behaviour).
-    val builtLs = ls.filterNot(prebuilt.contains)
-    val runsAll = {
-      val built =
-        if (builtLs.isEmpty) Seq.empty[DataFrame]
-        else Seq(CacheScope.persist(exactSubstringRunsMulti(
-          docs, idCol, textCol, builtLs, maxDf)))
-      val pre = ls.filter(prebuilt.contains)
-        .map(l => prebuilt(l).withColumn("l", lit(l.toLong)))
-      (built ++ pre).reduce(_ unionByName _)
-    }
+    val runsAll = CacheScope.persist(exactSubstringRunsMulti(
+        docs, idCol, textCol, ls.filterNot(_ == 20), maxDf))
+      .unionByName(runs20.withColumn("l", lit(20L)))
     val nRunsPerL = runsAll.groupBy(col("l"))
       .agg(count(lit(1)).as("n_runs"))
     val nDupPerL = runsAll.select(col("l"), col("doc_b"),
@@ -1588,8 +1571,8 @@ object TextDedup {
     * (constant memory, no shuffle), accepting false positives — distinct
     * paragraphs wrongly dropped because earlier inserts already set all k
     * of their probe bits. This operator measures that trade on the real
-    * corpus: for each k in 1..maxK it reports how many distinct line
-    * TYPES a (mBits, k) filter would falsely flag, next to the true-dup
+    * corpus: for each k in 1..3 it reports how many distinct 3-token line
+    * TYPES a 2^16-bit (mBits) filter would falsely flag, next to the true-dup
     * mass (repeat occurrences) any filter catches by design.
     *
     * Order-free formulation: BFF's outcome depends on insertion order, so
@@ -1622,10 +1605,8 @@ object TextDedup {
     * one type-keyed all-slots-seen aggregate. Nothing is per-occurrence
     * after the type aggregate. Output row per k: k, n_types, n_fp_types,
     * fp_rate (6-dp half-up), n_bits_set, n_dup_occ (k-independent). */
-  def bloomDedupCensus(docs: DataFrame, idCol: String, textCol: String,
-                       lineTokens: Int = 3, mBits: Long = 1L << 16,
-                       maxK: Int = 3): DataFrame = {
-    require(mBits > 0 && maxK >= 1 && maxK <= 8, "need mBits>0, 1<=maxK<=8")
+  def bloomDedupCensus(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (lineTokens, mBits, maxK) = (3, 1L << 16, 3)
     val types = CacheScope.persist(
       tileInventory(docs, idCol, textCol, lineTokens)
         .select(col("doc_id"), array_join(col("lts"), " ").as("line"))

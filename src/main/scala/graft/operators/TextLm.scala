@@ -485,7 +485,7 @@ object TextLm {
     * Learnt"; Lin et al. 2024, RHO-1 — public papers): score each document
     * by its EXCESS loss — cross-entropy under a weak model minus
     * cross-entropy under a strong reference model — and keep the top
-    * keepNum/keepDen fraction per group. High excess = the document is
+    * keepNum/keepDen = 1/4 per group. High excess = the document is
     * poorly fit by the weak model but well explained by the reference:
     * learnable signal, not noise (noise scores high under BOTH models and
     * cancels). In-engine proxy for the two models: the add-one bigram LM
@@ -515,9 +515,8 @@ object TextLm {
     * Output: (groupCol, selected, n_docs, mean_excess — nats, 6 dp). */
   def excessLossSelectFrom(docBig: DataFrame, knModel: DataFrame,
                            docs: DataFrame, idCol: String, textCol: String,
-                           groupCol: String, keepNum: Int = 1,
-                           keepDen: Int = 4): DataFrame = {
-    require(keepNum > 0 && keepDen > keepNum, "need 0 < keepNum < keepDen")
+                           groupCol: String): DataFrame = {
+    val (keepNum, keepDen) = (1, 4)
     val scored = excessSums(docBig, knModel, docs, idCol, textCol)
       .select(col(idCol), (halfUpMu("mua") - halfUpMu("muk")).as("__e"))
       .join(docs.select(col(idCol), col(groupCol).as("__g")), idCol)
@@ -1453,10 +1452,10 @@ object TextLm {
   /** KenLM-style quantized-model size/loss audit (Heafield 2011;
     * Whittaker & Raj 2001 — public: production n-gram inference stores
     * each type's log-probability as a b-bit codebook index over
-    * equal-frequency bins, not a float): for each bit width, report the
-    * model's memory at that quantization and the corpus cross-entropy
-    * delta the quantization costs — the size/quality trade table an LM
-    * shelf ships with.
+    * equal-frequency bins, not a float): for each bit width (4, 8 and
+    * 16), report the model's memory at that quantization and the corpus
+    * cross-entropy delta the quantization costs — the size/quality trade
+    * table an LM shelf ships with.
     *
     * Quantizer (a MONOTONE function of the value, so equal lp_mu always
     * means equal code — ties cannot split): bin(v) = ⌊cumBefore(v) ·
@@ -1478,10 +1477,8 @@ object TextLm {
     * Output per bit width: bits, n_types, n_bins_used, prob_bytes
     * (⌈n_types·bits/8⌉), codebook_bytes (8 per used bin), xent, xent_q,
     * xent_delta (nats, 6 dp, delta exact from the micro images). */
-  def knQuantAudit(model: DataFrame, docBig: DataFrame,
-                   bitsList: Seq[Int] = Seq(4, 8, 16)): DataFrame = {
-    require(bitsList.nonEmpty && bitsList.forall(b => b >= 1 && b <= 30),
-      "need 1 <= bits <= 30")
+  def knQuantAudit(model: DataFrame, docBig: DataFrame): DataFrame = {
+    val bitsList = Seq(4, 8, 16)
     val big = docBig.groupBy(col("w1"), col("w2"))
       .agg(sum(col("occ")).as("occ"))
     // value grid: per distinct lp_mu, type count + occurrence mass

@@ -662,7 +662,7 @@ object TextPrep {
     * the stage that runs BEFORE every tokenizer trainer on this shelf
     * (BPE q331, WordPiece q357, unigram-LM q350). Characters are ranked
     * by corpus frequency and the KEPT alphabet is the minimal prefix of
-    * that ranking covering >= covNum/covDen of all character occurrences;
+    * that ranking covering >= covNum/covDen = 99/100 of all character occurrences;
     * everything outside it is the byte-fallback/UNK tail. Output is the
     * per-source audit a corpus card reports: total char occurrences,
     * occurrences outside the kept alphabet, the 6-dp OOV rate, and the
@@ -687,10 +687,8 @@ object TextPrep {
     * size, the q107 histogram-table argument), never over data rows; the
     * kept set rejoins the per-source aggregate char-keyed (broadcast-
     * sized). Nothing is per-occurrence after the first aggregate. */
-  def charCoverage(docs: DataFrame, textCol: String, srcCol: String,
-                   covNum: Long = 99L, covDen: Long = 100L): DataFrame = {
-    require(covNum >= 0 && covNum <= covDen && covDen > 0,
-      "need 0 <= covNum/covDen <= 1")
+  def charCoverage(docs: DataFrame, textCol: String, srcCol: String): DataFrame = {
+    val (covNum, covDen) = (99L, 100L)
     // code-POINT tokenization, not code units: split(text, "") Java-regex-
     // splits astral-plane characters (emoji, CJK extensions) into two lone
     // UTF-16 surrogates, while DuckDB's string_split(text, '') is

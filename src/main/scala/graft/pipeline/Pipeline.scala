@@ -26,7 +26,7 @@ object Pipeline {
     * rows the merge consumed (the reference's diagnostic K8); bronze, silver
     * and gold return 0. */
   def runStage(spark: SparkSession, cfg: AppConfig, stage: String, date: LocalDate,
-               fetch: AppConfig => String = HttpSource.fetchForecast(_)): Long = {
+               fetch: AppConfig => String): Long = {
     // Y3: actually apply the configured shuffle width (the reference declares
     // shuffle_partitions in yaml but never passes it, config/settings.yaml:23
     // vs dags/weather_daily_etl.py:83-88) — and the hadoop: object-store conf
@@ -81,24 +81,31 @@ object Pipeline {
       " --date YYYY-MM-DD [--end YYYY-MM-DD]"
 
   /** The CLI's (stage, config path, first day, last day). Rejects, with the
-    * usage message, an unknown stage or flag, a flag without a value, a
-    * missing `--config`/`--date` and an `--end` before `--date` — before
-    * any config is read or session built. */
+    * usage message, an unknown stage or flag, a flag without a value or
+    * given twice, a missing `--config`/`--date`, a date that is not
+    * YYYY-MM-DD and an `--end` before `--date` — before any config is read
+    * or session built. */
   private def parseArgs(args: Array[String]): (String, String, LocalDate, LocalDate) = {
     def fail(why: String) = throw new IllegalArgumentException(s"$why\n$usage")
     val (cmd, rest) =
       if (args.nonEmpty && !args(0).startsWith("--")) (args(0), args.drop(1))
       else ("day", args)
     if (!(stages :+ "day").contains(cmd)) fail(s"unknown stage '$cmd'")
-    val opts = rest.grouped(2).map {
+    val pairs = rest.grouped(2).map {
       case Array(k, v) if !v.startsWith("--") => k -> v
       case kv => fail(s"flag ${kv(0)} has no value")
-    }.toMap
+    }.toSeq
+    val repeated = pairs.groupBy(_._1).collect { case (k, kvs) if kvs.size > 1 => k }
+    if (repeated.nonEmpty) fail(s"flag ${repeated.toSeq.sorted.mkString(", ")} given twice")
+    val opts = pairs.toMap
     val unknown = opts.keySet -- Set("--config", "--date", "--end")
     if (unknown.nonEmpty) fail(s"unknown flag ${unknown.toSeq.sorted.mkString(", ")}")
     def required(k: String) = opts.getOrElse(k, fail(s"missing $k"))
-    val start = LocalDate.parse(required("--date"))
-    val end = opts.get("--end").map(LocalDate.parse).getOrElse(start)
+    def date(k: String, v: String) =
+      try LocalDate.parse(v)
+      catch { case _: java.time.format.DateTimeParseException => fail(s"$k $v is not YYYY-MM-DD") }
+    val start = date("--date", required("--date"))
+    val end = opts.get("--end").map(date("--end", _)).getOrElse(start)
     if (end.isBefore(start)) fail(s"--end $end is before --date $start")
     (cmd, required("--config"), start, end)
   }

@@ -130,7 +130,7 @@ object InferQueries {
       val withP = withZ.withColumn("p",
         round(least(lit(1.0),
           lit(2.0) * exp(lit(-0.717) * za - lit(0.416) * za * za)), 6))
-      Inference.bhFdr(withP, "event_type", "p", alphaNum = 1, alphaDen = 10)
+      Inference.bhFdr(withP, "event_type", "p")
         .select(col("event_type"), col("n_g"), col("z"), col("p"),
           col("p_rank").cast("bigint").as("p_rank"), col("bh_crit"),
           col("significant"))

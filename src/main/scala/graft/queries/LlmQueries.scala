@@ -464,7 +464,7 @@ object LlmQueries {
     "q37_media_features" -> ((s, d) => {
       import graft.operators.Multimodal
       val media = Multimodal.fromText(s, table(s, d, "documents"), "doc_id", "text", "image")
-      Multimodal.extractFeatures(media, featureDim = 4)
+      Multimodal.extractFeatures(media)
         .toDF()
         .select(col("media_id"), col("kind"), col("n_bytes"),
           col("width"), col("height"), col("n_frames"))
@@ -1074,7 +1074,7 @@ object LlmQueries {
     // Collocation mining: within-document co-occurrence PMI over the
     // corpus vocabulary — which token pairs travel together far more (or
     // less) than chance. The doc-keyed pair expansion is bounded by
-    // per-doc DISTINCT tokens (df-cappable at crawl scale); counts meet
+    // per-doc DISTINCT tokens; counts meet
     // through pair-keyed joins. See CorpusStats.tokenPmi.
     "q122_token_pmi" -> ((s, d) =>
       graft.operators.CorpusStats.tokenPmi(

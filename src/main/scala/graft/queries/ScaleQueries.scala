@@ -118,7 +118,7 @@ object ScaleQueries {
     // threshold-tuning artifact. See TextDedup.exactSubstringSweep.
     "q384_exact_substr_sweep" -> ((s, d) =>
       TextDedup.exactSubstringSweep(table(s, d, "documents"),
-        "doc_id", "text", prebuilt = Map(20 -> exactRunsShared(s, d)))),
+        "doc_id", "text", exactRunsShared(s, d))),
 
     // Cross-snapshot incremental exact-substring dedup, batch form (the
     // oracled twin of streaming CrossSnapshotSubstrDedup): even doc_ids

@@ -57,23 +57,17 @@ object StreamingAgg {
     events.withWatermark("ts", "2 hours")
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
-  /** Stream-stream inner join with watermarks on both sides: each click pairs
-    * with the same user's purchases in the following `withinSec` seconds.
-    * Both watermarks bound the join state — rows older than the horizon are
-    * evicted, so state stays finite on an unbounded stream. Inputs need
-    * (user_id, ts) plus a distinguishing id column each. */
-  def clickAttributionJoin(clicks: DataFrame, purchases: DataFrame,
-                           withinSec: Long = 1800L,
-                           watermark: String = "1 hour"): DataFrame =
-    clickAttributionJoin(clicks, purchases, withinSec, watermark, "inner")
-
-  /** Stream-stream click attribution with a join type: `"left_outer"` also
+  /** Stream-stream click attribution: each click pairs with the same
+    * user's purchases in the following `withinSec` seconds, under a
+    * watermark on both sides — rows older than the horizon are evicted, so
+    * join state stays finite on an unbounded stream. Inputs need
+    * (user_id, ts) plus a distinguishing id column each. `joinType`
+    * `"inner"` emits matched pairs only; `"left_outer"` also
     * emits clicks that never matched a purchase — but only once the
     * watermark proves no in-window purchase can still arrive (Spark holds
     * the click in state until `ts + withinSec` passes the watermark, then
     * emits it null-padded). The unmatched-click stream is the conversion-
-    * funnel denominator an attribution pipeline actually needs; state stays
-    * bounded by the same watermark eviction as the inner join. */
+    * funnel denominator an attribution pipeline actually needs. */
   def clickAttributionJoin(clicks: DataFrame, purchases: DataFrame,
                            withinSec: Long, watermark: String,
                            joinType: String): DataFrame = {

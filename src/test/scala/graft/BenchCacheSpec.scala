@@ -158,6 +158,19 @@ class BenchCacheSpec extends AnyFunSuite {
     assert(PlanDump.parseArgs(Array("out", "p", "q31_minhash_lsh_pairs"))._3 == sf)
   }
 
+  test("Verify rejects bad arguments before building a session") {
+    def why(args: String*): String =
+      intercept[IllegalArgumentException](Verify.parseArgs(args.toArray)).getMessage
+    for (args <- Seq(Seq(), Seq(sf), Seq(sf, "out", "q999_none"),
+        Seq(sf, "out", "q31,q31x"), Seq(sf, "out", "q31", "extra")))
+      assert(why(args: _*).contains("usage: Verify"), args.mkString(" "))
+    assert(why(sf, "out", "q31,nope").startsWith("no query matches nope"))
+    // the two-argument form dumps every query
+    assert(Verify.parseArgs(Array(sf, "out")) == ((sf, "out", None)))
+    assert(Verify.parseArgs(Array(sf, "out", "q31,q75_ngram_jaccard_pairs")) ==
+      ((sf, "out", Some(Set("q31", "q75_ngram_jaccard_pairs")))))
+  }
+
   test("SPARK_GRAFT_REPEAT below one pass is rejected before building a session") {
     for (bad <- Seq("0", "-2", "two", ""))
       assert(intercept[IllegalArgumentException](Bench.repeatOf(Some(bad)))

@@ -23,10 +23,9 @@ object DefaultCensus {
     * call sites, `taken` of them without the argument. */
   final case class Slot(owner: String, method: String, index: Int, param: String,
                         calls: Int, taken: Int) {
-    def label: String = {
-      val o = owner.stripPrefix("graft.").stripSuffix("$")
-      s"$o.$method#$index($param) calls=$calls taken=$taken"
-    }
+    /** `module.method#index(param)`, e.g. `pipeline.HttpSource.withRetry#3(sleep)`. */
+    def id: String = s"${owner.stripPrefix("graft.").stripSuffix("$")}.$method#$index($param)"
+    def label: String = s"$id calls=$calls taken=$taken"
   }
 
   private final case class Ref(owner: String, name: String)

@@ -62,17 +62,6 @@ class InferencePropertySpec extends AnyFunSuite {
     })
   }
 
-  test("BH rejections grow monotonically with alpha") {
-    check("bh", Prop.forAll(Gen.nonEmptyListOf(Gen.choose(1, 99))) { ps =>
-      val df = ps.zipWithIndex
-        .map { case (p, i) => (s"h$i", p / 100.0) }.toDF("hyp", "p")
-      def rejected(num: Long, den: Long): Long =
-        Inference.bhFdr(df, "hyp", "p", num, den)
-          .where(col("significant")).count()
-      rejected(1, 20) <= rejected(1, 10) && rejected(1, 10) <= rejected(1, 4)
-    })
-  }
-
   test("Kaplan-Meier survival is nonincreasing in duration, within [0,1]") {
     check("km", Prop.forAll(Gen.nonEmptyListOf(
       Gen.zip(Gen.choose(0L, 5L), Gen.choose(0L, 15L)))) { spans =>

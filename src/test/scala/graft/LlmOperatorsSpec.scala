@@ -874,48 +874,14 @@ class LlmOperatorsSpec extends AnyFunSuite {
       val got = graft.operators.Robust.madOutliers(df, "grp", "id", "v", cutoff = 3.0)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
       assert(got.toSeq == Seq(("a", 990L, 100L, 5.5, 2.5)))
+      // MAD = 0 degeneracy: > half identical values => MAD 0 => the strict
+      // test flags every nonzero deviation
+      val flat = (Seq.fill(6)(100L) ++ Seq(101L, 99L, 400L)).zipWithIndex
+        .map { case (v, i) => ("g", i.toLong, v) }.toDF("grp", "id", "v")
+      val flood = graft.operators.Robust.madOutliers(flat, "grp", "id", "v", cutoff = 3.0)
+        .select("v").collect().map(_.getLong(0)).toSet
+      assert(flood == Set(101L, 99L, 400L), s"MAD=0 floods every deviation: $flood")
     } finally graft.operators.CacheScope.drain() // madOutliers persists its dev table
-  }
-
-  test("madOutliers approx: bounded-state sketch path flags the same separated outliers") {
-    import spark.implicits._
-    // skewed fixture: a tight Zipf-ish body plus far-separated outliers per
-    // group — the regime where sketch medians may wobble but a cutoff-3
-    // screen must flag the identical set
-    val rows = (for {
-      g <- Seq("s1", "s2")
-      i <- 1 to 200
-    } yield (g, i.toLong + (if (g == "s1") 0 else 1000), (50 + i % 21).toLong)) ++
-      Seq(("s1", 900L, 5000L), ("s2", 1900L, 4000L), ("s2", 1901L, 0L))
-    val df = rows.toDF("grp", "id", "v")
-    try {
-      def flags(approx: Boolean) =
-        graft.operators.Robust.madOutliers(df, "grp", "id", "v",
-            cutoff = 3.0, approx = approx)
-          .select("grp", "id").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-      val exact = flags(approx = false)
-      assert(exact == Set(("s1", 900L), ("s2", 1900L), ("s2", 1901L)),
-        s"exact path must flag exactly the separated outliers: $exact")
-      assert(flags(approx = true) == exact,
-        "approx path must agree on well-separated outliers at cutoff 3")
-    } finally graft.operators.CacheScope.drain()
-  }
-
-  test("madOutliers madFloor: suppresses the MAD=0 flood on near-constant groups") {
-    import spark.implicits._
-    // >half identical values => MAD 0 => strict test flags every nonzero
-    // deviation; a floor of 5 keeps the tiny wobbles and still flags the spike
-    val df = (Seq.fill(6)(100L) ++ Seq(101L, 99L, 400L)).zipWithIndex
-      .map { case (v, i) => ("g", i.toLong, v) }.toDF("grp", "id", "v")
-    try {
-      val noFloor = graft.operators.Robust.madOutliers(df, "grp", "id", "v", cutoff = 3.0)
-        .select("v").collect().map(_.getLong(0)).toSet
-      assert(noFloor == Set(101L, 99L, 400L), s"MAD=0 floods every deviation: $noFloor")
-      val floored = graft.operators.Robust.madOutliers(df, "grp", "id", "v",
-          cutoff = 3.0, madFloor = 5.0)
-        .select("v").collect().map(_.getLong(0)).toSet
-      assert(floored == Set(400L), s"floor keeps only the true spike: $floored")
-    } finally graft.operators.CacheScope.drain()
   }
 
   test("tokenPmi: hand-computed document co-occurrence PMI, threshold respected") {
@@ -938,19 +904,6 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // raising the threshold drops the 2-count pairs
     assert(graft.operators.CorpusStats.tokenPmi(df, "doc_id", "text", 3)
       .count() == 1)
-  }
-
-  test("tokenPmi maxDfFrac: ubiquitous tokens are excluded before pairing") {
-    import spark.implicits._
-    // "the" is in all 4 docs (df 1.0); cap at 0.8 removes it entirely
-    val df = Seq((1L, "the x y"), (2L, "the x y"), (3L, "the x"), (4L, "the z"))
-      .toDF("doc_id", "text")
-    val toks = graft.operators.CorpusStats
-      .tokenPmi(df, "doc_id", "text", minPairCount = 1, maxDfFrac = 0.8)
-      .select("tok_a", "tok_b").collect()
-      .flatMap(r => Seq(r.getString(0), r.getString(1))).toSet
-    assert(!toks.contains("the"), s"df-capped token must not pair: $toks")
-    assert(toks == Set("x", "y"))
   }
 
   test("dupNgramFraction: cross-doc duplicated bigrams, short docs omitted") {
@@ -1444,8 +1397,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val pred = col("vec_id") < 8
-    val pq = Similarity.pqKnn(df, "vec_id", "embedding", pred, k = 5,
-        m = 4, subDim = 16, ksub = 16, lloydIters = 1, nCandidates = 16)
+    val pq = Similarity.pqKnn(df, "vec_id", "embedding", pred, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
     val bf = Similarity.bruteForceKnn(df, "vec_id", "embedding", pred, k = 5)
@@ -1453,8 +1405,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
       .sortBy(t => (t._1, t._2))
     assert(pq.nonEmpty && pq.sameElements(bf),
       s"PQ must equal brute force on separable clusters:\npq=${pq.take(6).toSeq}\nbf=${bf.take(6).toSeq}")
-    val re = Similarity.pqKnn(df.repartition(7), "vec_id", "embedding", pred, k = 5,
-        m = 4, subDim = 16, ksub = 16, lloydIters = 1, nCandidates = 16)
+    val re = Similarity.pqKnn(df.repartition(7), "vec_id", "embedding", pred, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
     assert(re.sameElements(pq), "physical layout must not change the result")
@@ -1471,9 +1422,7 @@ class LlmOperatorsSpec extends AnyFunSuite {
     }
     val df = rows.toDF("vec_id", "embedding")
     val pred = col("vec_id") < 8
-    val got = Similarity.ivfpqKnn(df, "vec_id", "embedding", pred, k = 5,
-        nlist = 8, nprobe = 2, coarseIters = 1,
-        m = 4, subDim = 16, ksub = 16, pqIters = 1, nCandidates = 16)
+    val got = Similarity.ivfpqKnn(df, "vec_id", "embedding", pred, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
     val bf = Similarity.bruteForceKnn(df, "vec_id", "embedding", pred, k = 5)
@@ -1585,7 +1534,8 @@ class LlmOperatorsSpec extends AnyFunSuite {
     // Expected excess per doc is derived from the two component operators
     // (each pinned by its own hand fixture): exc_mu = xmu_a - xmu_k.
     val docs = Seq((1L, "s1", "a b a b"), (2L, "s1", "b c"),
-        (3L, "s1", "a c b"), (4L, "s1", "c c"))
+        (3L, "s1", "a c b"), (4L, "s1", "c c"), (5L, "s1", "b a c a"),
+        (6L, "s1", "c a b c b"), (7L, "s1", "a a b"), (8L, "s1", "c b a"))
       .toDF("doc_id", "source", "text")
     def xmu(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) ->
@@ -1594,14 +1544,14 @@ class LlmOperatorsSpec extends AnyFunSuite {
     val xa = xmu(TextLm.bigramCrossEntropy(docs, "doc_id", "text"))
     val xk = xmu(TextLm.knCrossEntropyFrom(docBig, model, "doc_id"))
     val exc = xa.keys.map(k => k -> (xa(k) - xk(k))).toMap
-    // top-half (1/2): ascending cut = min e with cum*2 >= n*1; selected
-    // are the docs with e strictly above the cut.
+    // top-quarter (1/4): ascending cut = min e with cum*4 >= n*3;
+    // selected are the docs with e strictly above the cut.
     val sortedE = exc.values.toSeq.sorted
-    val cut = sortedE((sortedE.size + 1) / 2 - 1)
+    val cut = sortedE((3 * sortedE.size + 3) / 4 - 1)
     val expSel = exc.filter(_._2 > cut)
-    assert(expSel.nonEmpty && expSel.size < exc.size, "fixture must split")
+    assert(expSel.nonEmpty && expSel.size < exc.size, s"fixture must split: $exc")
     val out = TextLm.excessLossSelectFrom(docBig, model,
-        docs, "doc_id", "text", "source", keepNum = 1, keepDen = 2)
+        docs, "doc_id", "text", "source")
       .collect().map(r => r.getBoolean(1) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(out(true)._1 == expSel.size)
     assert(out(false)._1 == exc.size - expSel.size)

@@ -195,24 +195,6 @@ class MlOpsSpec extends AnyFunSuite {
       m("ts").getAs[Double]("min_num") == 86400.0)
   }
 
-  test("columnProfile approx: no Expand in the plan; estimates within rsd band") {
-    val df = (1 to 4000).map(i => (i.toLong, (i % 997).toLong, s"s${i % 131}"))
-      .toDF("id", "k", "s")
-    val exact = graft.operators.Relational.columnProfile(df)
-      .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    val approxDf = graft.operators.Relational.columnProfile(df, approx = true)
-    val est = approxDf.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    for ((c, ex) <- exact)
-      assert(math.abs(est(c) - ex) <= math.max(3, (ex * 0.05).toLong),
-        s"$c: approx ${est(c)} vs exact $ex")
-    // the whole point: the approx plan carries NO multi-distinct Expand
-    val plan = approxDf.queryExecution.executedPlan.toString
-    assert(!plan.contains("Expand"), "approx profile must not Expand the scan")
-    assert(graft.operators.Relational.columnProfile(df)
-      .queryExecution.executedPlan.toString.contains("Expand"),
-      "fixture sanity: the exact path does Expand")
-  }
-
   // ---- Theil-Sen ----
 
   test("theilSen: exact line recovers the slope; one wild outlier cannot move it") {

@@ -29,9 +29,9 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("feature vectors have the requested width and are in [-1, 1]") {
-    val rows = Multimodal.extractFeatures(media, featureDim = 8)
+    val rows = Multimodal.extractFeatures(media)
       .collect()
-    assert(rows.forall(_.features.length == 8))
+    assert(rows.forall(_.features.length == 4))
     assert(rows.forall(_.features.forall(f => f >= -1.0f && f <= 1.0f)))
   }
 

@@ -183,7 +183,8 @@ class PipelineSpec extends AnyFunSuite {
     // Replay from gold: gold must stop the day before the stage load can
     // publish the surviving gold partition.
     val err = intercept[Exception] {
-      Seq("gold", "stage", "upsert").foreach(Pipeline.runStage(spark, cfg, _, date))
+      Seq("gold", "stage", "upsert").foreach(
+        Pipeline.runStage(spark, cfg, _, date, HttpSource.fetchForecast(_)))
     }
     assert(err.getMessage.contains(silverDay.stripPrefix("file:")), err.getMessage)
     assert(stageCount(cfg) == 0, "stale gold reached the stage table")
@@ -274,11 +275,12 @@ class PipelineSpec extends AnyFunSuite {
     val temps = SilverJob.transform(spark, cfg.storage.bronze, d15, cfg.source.hourlyVars)
       .select("temperature_c").collect().map(_.getDouble(0))
     assert(temps.sameElements(Array(7.0)), "the corrupt latest doc must not hide the valid one")
-    Pipeline.runStage(spark, cfg, "silver", d15)
+    Pipeline.runStage(spark, cfg, "silver", d15, HttpSource.fetchForecast(_))
     put("16", "openmeteo_2025-09-16_a", "{\"latitude\": ")
     put("16", "openmeteo_2025-09-16_b", "[1, 2")
     intercept[IllegalStateException] {
-      Pipeline.runStage(spark, cfg, "silver", LocalDate.parse("2025-09-16"))
+      Pipeline.runStage(spark, cfg, "silver", LocalDate.parse("2025-09-16"),
+        HttpSource.fetchForecast(_))
     }
     val perDay = spark.read.parquet(s"${cfg.storage.silver}/openmeteo/")
       .groupBy("d").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -341,7 +343,10 @@ class PipelineSpec extends AnyFunSuite {
       cfg ++ Seq("--date", "2024-01-09", "--end", "2024-01-08"),
       cfg ++ Seq("--date", "2024-01-08", "--ned", "2024-01-09"),
       cfg ++ Seq("--date", "2024-01-08", "--end"),
-      Seq("silver", "--date", "2024-01-08", "--end") ++ cfg
+      Seq("silver", "--date", "2024-01-08", "--end") ++ cfg,
+      cfg ++ Seq("--date", "2024-01-08", "--date", "2024-01-09"),
+      cfg ++ Seq("--date", "2024-01-08", "--end", "2024-01-32"),
+      cfg ++ Seq("--date", "yesterday")
     ).foreach { args =>
       val err = intercept[IllegalArgumentException](Pipeline.main(args.toArray))
       assert(err.getMessage.contains("usage: Pipeline"), args.mkString(" "))
@@ -358,7 +363,8 @@ class PipelineSpec extends AnyFunSuite {
       _ => fixture24h("2025-09-15"))
     assert(staged == 1, "full DAG via runStage(\"day\")")
     val err = intercept[IllegalArgumentException](
-      Pipeline.runStage(spark, cfg, "nope", LocalDate.parse("2025-09-15")))
+      Pipeline.runStage(spark, cfg, "nope", LocalDate.parse("2025-09-15"),
+        HttpSource.fetchForecast(_)))
     assert(err.getMessage.contains("bronze, silver, gold, stage, upsert, day"))
   }
 

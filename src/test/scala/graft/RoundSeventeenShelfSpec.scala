@@ -150,26 +150,27 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
   }
 
   test("knQuantAudit: hand-computed bins, codebooks, xent images; saturation row") {
-    // 4 bigram types at lp_mu -1e6/-2e6/-3e6/-4e6 with occ 1/2/3/4.
-    // exact xent = (1+4+9+16)e6 / 10 = 3.0.
-    // bits=1 (2 bins): cumBefore 0,1,2,3 -> bins 0,0,1,1; codebooks
-    // 1.5e6 / 3.5e6; xent_q = (3*1.5e6 + 7*3.5e6)/10 = 2.9 -> delta -0.1.
-    // bits=2 (4 bins): singleton bins -> delta exactly 0.
-    val model = Seq(("a", "b", -1000000L), ("b", "c", -2000000L),
-        ("c", "d", -3000000L), ("d", "e", -4000000L))
+    // 17 bigram types at lp_mu -1e6..-17e6, occ 1 except occ 4 on the
+    // -17e6 type (20 occurrences); exact xent = (1+..+16 + 4*17)e6 / 20
+    // = 10.2. bits=4 (16 bins): cumBefore counts the more negative
+    // values, bin = cb*16 div 17 -> only cb 0,1 (-17e6, -16e6) share a
+    // bin; its codebook is 16.5e6, xent_q = (204 - 4*17 - 16 + 5*16.5)
+    // / 20 = 10.125 -> delta -0.075. bits=8 and 16: singleton bins ->
+    // delta exactly 0 (the saturation rows).
+    val occ = (1 to 17).map(k => if (k == 17) 4L else 1L)
+    val model = (1 to 17).map(k => (s"t$k", s"t${k + 1}", -1000000L * k))
       .toDF("w1", "w2", "lp_mu")
-    val docBig = Seq((1L, "a", "b", 1L), (1L, "b", "c", 2L),
-        (2L, "c", "d", 3L), (2L, "d", "e", 4L))
+    val docBig = (1 to 17).map(k => ((k % 2).toLong, s"t$k", s"t${k + 1}", occ(k - 1)))
       .toDF("doc_id", "w1", "w2", "occ")
-    val out = graft.operators.TextLm.knQuantAudit(
-        model, docBig, bitsList = Seq(1, 2))
+    val out = graft.operators.TextLm.knQuantAudit(model, docBig)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5), r.getDouble(6), r.getDouble(7)))).toMap
     graft.operators.CacheScope.drain()
-    // prob_bytes: (4*1+7) div 8 = 1; (4*2+7) div 8 = 1
-    assert(out(1L) == ((4L, 2L, 1L, 16L, 3.0, 2.9, -0.1)))
-    assert(out(2L) == ((4L, 4L, 1L, 32L, 3.0, 3.0, 0.0)))
+    // prob_bytes: (17*4+7) div 8 = 9; (17*8+7) div 8 = 17; (17*16+7) div 8 = 34
+    assert(out(4L) == ((17L, 16L, 9L, 128L, 10.2, 10.125, -0.075)))
+    assert(out(8L) == ((17L, 17L, 17L, 136L, 10.2, 10.2, 0.0)))
+    assert(out(16L) == ((17L, 17L, 34L, 136L, 10.2, 10.2, 0.0)))
   }
 
   test("gopherQualityRules: hand-computed ratios and the paper's thresholds") {
@@ -266,20 +267,22 @@ class RoundSeventeenShelfSpec extends AnyFunSuite {
   }
 
   test("exactSubstringSweep: run/removal mass per window length, zero row kept") {
-    // docs 1/2 share the 6-token run b1..b6; doc 3 is disjoint.
-    // l=4: one stitched run of 6 tokens; l=6: the run exactly; l=8: none.
+    // docs 1/2 share the 20-token run b1..b20; doc 3 is disjoint.
+    // l=10: one stitched run of 20 tokens; l=20: the run exactly; l=40:
+    // none. 30 + 30 + 40 = 100 tokens.
+    def toks(p: String, r: Range) = r.map(i => s"$p$i").mkString(" ")
     val docs = Seq(
-      (1L, "a1 a2 b1 b2 b3 b4 b5 b6 a3 a4"),
-      (2L, "c1 c2 b1 b2 b3 b4 b5 b6 c3 c4"),
-      (3L, "d1 d2 d3 d4 d5 d6 d7 d8 d9 d10")).toDF("doc_id", "text")
-    val out = graft.operators.TextDedup.exactSubstringSweep(
-        docs, "doc_id", "text", ls = Seq(4, 6, 8))
+      (1L, Seq(toks("a", 1 to 2), toks("b", 1 to 20), toks("a", 3 to 10)).mkString(" ")),
+      (2L, Seq(toks("c", 1 to 2), toks("b", 1 to 20), toks("c", 3 to 10)).mkString(" ")),
+      (3L, toks("d", 1 to 40))).toDF("doc_id", "text")
+    val out = graft.operators.TextDedup.exactSubstringSweep(docs, "doc_id", "text",
+        graft.operators.TextDedup.exactSubstringRuns(docs, "doc_id", "text", l = 20, maxDf = 10))
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     graft.operators.CacheScope.drain()
-    assert(out(4L) == ((1L, 6L, 30L, 0.2)))
-    assert(out(6L) == ((1L, 6L, 30L, 0.2)))
-    assert(out(8L) == ((0L, 0L, 30L, 0.0)))
+    assert(out(10L) == ((1L, 20L, 100L, 0.2)))
+    assert(out(20L) == ((1L, 20L, 100L, 0.2)))
+    assert(out(40L) == ((0L, 0L, 100L, 0.0)))
   }
 
   test("gopherFullGate: repetition AND quality conjunction, per-source roll-up") {

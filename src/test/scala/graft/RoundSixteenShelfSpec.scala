@@ -25,51 +25,51 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
     md5hex(s).take(15).foldLeft(0L)((a, c) => a * 16 + Character.digit(c, 16))
 
   test("charCoverage: minimal prefix keep rule, per-source OOV, exact rate") {
-    // chars: a x6, b x4, ' ' x3, c x1 (total 14); ranking (count desc,
-    // char asc): a(6) b(4) ' '(3) c(1). covNum/covDen = 11/14: kept <=>
-    // prev_cum * 14 < 14 * 11, i.e. prev_cum < 11: a(0) yes, b(6) yes,
-    // ' '(10) yes, c(13) no -> alphabet 3, c is OOV.
-    val docs = Seq(("s1", "aaaa bb"), ("s2", "ab bc a")).toDF("src", "text")
-    // s1 chars: a4 ' '1 b2 (7, 0 oov); s2: a2 b2 c1 ' '2 (7, 1 oov)
-    val out = graft.operators.TextPrep.charCoverage(
-        docs, "text", "src", covNum = 11L, covDen = 14L)
+    // chars: a x62, b x42, ' ' x3, c x1 (total 108); ranking (count desc,
+    // char asc): a(62) b(42) ' '(3) c(1). 99% coverage: kept <=>
+    // prev_cum * 100 < 108 * 99 = 10692: a(0) yes, b(62) yes,
+    // ' '(104) yes, c(107) no -> alphabet 3, c is OOV.
+    val docs = Seq(("s1", "a" * 60 + " " + "b" * 40), ("s2", "ab bc a"))
+      .toDF("src", "text")
+    // s1 chars: a60 ' '1 b40 (101, 0 oov); s2: a2 b2 c1 ' '2 (7, 1 oov)
+    val out = graft.operators.TextPrep.charCoverage(docs, "text", "src")
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4)))).toMap
     graft.operators.CacheScope.drain()
-    assert(out("s1") == ((7L, 0L, 0.0, 3L)))
+    assert(out("s1") == ((101L, 0L, 0.0, 3L)))
     // rate = halfUp(1e6 * 1/7) = (2*1*1e6 + 7) div 14 = 142857
     assert(out("s2") == ((7L, 1L, 0.142857, 3L)))
   }
 
   test("charCoverage: all-tied chars keep the char-asc prefix") {
-    // 'x', 'y', ' ' each once; asc order ' ' < 'x' < 'y'; 2/3 coverage
-    // keeps ' ' and 'x', drops 'y'.
-    val docs = Seq(("s", "x y")).toDF("src", "text")
-    val r = graft.operators.TextPrep.charCoverage(
-        docs, "text", "src", covNum = 2L, covDen = 3L)
+    // 100 distinct chars U+0100..U+0163, each once; 99% coverage keeps
+    // the 99 asc-first (prev_cum 98 * 100 < 100 * 99) and drops the last
+    // (99 * 100 >= 9900).
+    val docs = Seq(("s", (0 until 100).map(i => (0x100 + i).toChar).mkString))
+      .toDF("src", "text")
+    val r = graft.operators.TextPrep.charCoverage(docs, "text", "src")
       .collect().head
     graft.operators.CacheScope.drain()
-    assert(r.getLong(1) == 3L && r.getLong(2) == 1L && r.getLong(4) == 2L)
+    assert(r.getLong(1) == 100L && r.getLong(2) == 1L && r.getLong(4) == 99L)
   }
 
   test("charCoverage: astral-plane chars are ONE code point, never surrogates") {
-    // U+1F600 (😀, a surrogate pair in UTF-16) appears 3x, 'a' 2x, ' ' 2x
-    // (total 7 occurrences as CODE POINTS; a code-unit split would see 10).
-    // covNum/covDen = 4/7: kept <=> prev_cum < 4: 😀(0) yes, ' '(3) no?
-    // ranking (count desc, char asc): 😀(3), then ' '(2) and a(2) tie ->
-    // ' ' < 'a'. prev_cum: 😀 0 -> kept; ' ' 3 * 7 < 7 * 4 -> kept;
-    // 'a' 5*7 >= 28 -> OOV. alphabet = 2, oov = 2 of 7.
-    val docs = Seq(("s", "😀a 😀😀 a"))
+    // U+1F600 (😀, a surrogate pair in UTF-16) appears 98x, ' ' 1x, 'a' 1x
+    // (total 100 occurrences as CODE POINTS; a code-unit split would see
+    // 198). Ranking (count desc, char asc): 😀(98), then ' '(1) and a(1)
+    // tie -> ' ' < 'a'. 99% coverage, kept <=> prev_cum * 100 < 9900:
+    // 😀 0 -> kept; ' ' 98 -> kept; 'a' 99 -> OOV. alphabet = 2, oov = 1
+    // of 100.
+    val docs = Seq(("s", "😀" * 98 + " a"))
       .toDF("src", "text")
-    val r = graft.operators.TextPrep.charCoverage(
-        docs, "text", "src", covNum = 4L, covDen = 7L)
+    val r = graft.operators.TextPrep.charCoverage(docs, "text", "src")
       .collect().head
     graft.operators.CacheScope.drain()
     // (n_char_occ, n_oov_occ, oov_rate, alphabet_size)
-    assert(r.getLong(1) == 7L, s"code-unit split leaked: ${r.getLong(1)}")
-    assert(r.getLong(2) == 2L && r.getLong(4) == 2L)
-    // halfUp(1e6 * 2/7) = (2*2*1e6 + 7) div 14 = 285714
-    assert(r.getDouble(3) == 0.285714)
+    assert(r.getLong(1) == 100L, s"code-unit split leaked: ${r.getLong(1)}")
+    assert(r.getLong(2) == 1L && r.getLong(4) == 2L)
+    // halfUp(1e6 * 1/100) = (2*1*1e6 + 100) div 200 = 10000
+    assert(r.getDouble(3) == 0.01)
   }
 
   test("jlRecall: empty embedding row is excluded instead of erroring") {
@@ -88,22 +88,24 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
   }
 
   test("bloomDedupCensus: equals an imperative Bloom-filter run in canonical order") {
-    // 40 docs of 2 three-token lines; every 4th doc repeats doc 0's first
-    // line (true dups); tiny mBits=64 forces real false positives.
-    val docs = (0L until 40L).map { i =>
+    // 4000 docs of 2 three-token lines; every 4th doc repeats doc 0's
+    // first line (true dups); ~7000 line types fill the 2^16-bit filter
+    // enough to force real false positives at every k.
+    val nDocs = 4000L
+    val docs = (0L until nDocs).map { i =>
       val l1 = if (i % 4 == 0) "dup line one" else s"u$i v$i w$i"
       (i, s"$l1 x$i y$i z$i")
     }.toDF("doc_id", "text")
-    val mBits = 64L
+    val mBits = 1L << 16
     val out = graft.operators.TextDedup.bloomDedupCensus(
-        docs, "doc_id", "text", lineTokens = 3, mBits = mBits, maxK = 3)
+        docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4),
           r.getLong(5)))).toMap
     graft.operators.CacheScope.drain()
     // pure-Scala replay: tile exactly like tileInventory, then RUN the
     // Bloom filter imperatively in ascending-o order
-    val lines = (0L until 40L).flatMap { i =>
+    val lines = (0L until nDocs).flatMap { i =>
       val l1 = if (i % 4 == 0) "dup line one" else s"u$i v$i w$i"
       val ts = s"$l1 x$i y$i z$i".split(" ", -1)
       val n = math.max((ts.length + 2) / 3, 1)
@@ -129,11 +131,11 @@ class RoundSixteenShelfSpec extends AnyFunSuite {
         s"k=$k engine ${out(k.toLong)} vs replay ${(n, fp, rate, set.size, dupOcc)}")
       assert(fp > 0L, s"fixture must force false positives at k=$k")
     }
-    // NOTE deliberately no k-monotonicity claim: at this fill ratio
-    // (~85 types into 64 bits) the filter is past its optimal k, where
-    // MORE probes mean MORE false positives — exactly the regime the
-    // census exists to expose (the sf corpora sit below saturation and
-    // show the falling curve: 5.2% -> 1.2% -> 0.6% at sf0.01).
+    // NOTE deliberately no k-monotonicity claim: past the filter's
+    // optimal k MORE probes mean MORE false positives — exactly the
+    // regime the census exists to expose (the sf corpora sit below
+    // saturation and show the falling curve: 5.2% -> 1.2% -> 0.6% at
+    // sf0.01).
   }
 
   test("pairBleu: clipped precisions, brevity penalty, NULL at zero overlap") {

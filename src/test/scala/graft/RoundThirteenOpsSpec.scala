@@ -221,33 +221,35 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
     // two token families with disjoint vocab; evens train the NB model,
     // odds are gated. 7 = X text mislabeled srcY (source vote fails),
     // 9 = X text mislabeled lang ly (LID vote fails), 11 = degenerate
-    // repetition with wrong source (LM + source votes fail -> drop)
-    val xText = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    val yText = "omega psi chi phi upsilon tau sigma rho " * 4
+    // repetition with wrong source (LM + source votes fail -> drop).
+    // The families use disjoint letters (a-m vs n-z), so no word, bigram
+    // or char trigram is shared; 100 distinct words each put every
+    // natural doc's bigram cross-entropy inside the gate's [3.0, 3.6] band
+    def words(letters: String) = for (a <- letters; b <- letters; c <- letters) yield s"$a$b$c"
+    val xText = ("alpha" +: words("abcdefghijklm").take(99)).mkString(" ")
+    val yText = Seq.fill(2)(words("nopqrstuvwxyz").take(100)).flatten.mkString(" ")
     val docs = Seq(
       (1L, xText, "lx", "srcX"), (3L, xText, "lx", "srcX"),
       (5L, yText, "ly", "srcY"),
       (7L, xText, "lx", "srcY"),
       (9L, xText, "ly", "srcX"),
-      (11L, "alpha alpha alpha alpha alpha alpha alpha alpha", "lx", "srcY"),
+      (11L, "alpha alpha alpha", "lx", "srcY"),
       (2L, xText, "lx", "srcX"), (4L, xText, "lx", "srcX"),
       (6L, xText, "lx", "srcX"), (8L, yText, "ly", "srcY"),
       (10L, yText, "ly", "srcY"), (12L, yText, "ly", "srcY"))
       .toDF("doc_id", "text", "lang", "source")
-    // place the LM band from the fixture's own scores: doc 11's lone
-    // "alpha alpha" bigram is corpus-RARE, so it scores far ABOVE every
-    // natural doc — the gibberish end of the band
+    // doc 11's "alpha alpha" bigram is corpus-RARE, so it scores far
+    // ABOVE every natural doc — the gibberish end of the band
     val xents = graft.operators.TextLm
       .bigramCrossEntropy(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val normals = (xents - 11L).values
     assert(xents(11L) > normals.max,
       s"rare-bigram doc must score highest: $xents")
-    val lo = normals.min - 1.0
-    val hi = (normals.max + xents(11L)) / 2.0
+    assert(normals.min >= 3.0 && normals.max <= 3.6 && xents(11L) > 3.6,
+      s"fixture must straddle the gate's band: $xents")
     val got = graft.operators.MlOps.classifierEnsembleGate(
-        docs, "doc_id", "text", "lang", "source", k = 10,
-        xentLo = lo, xentHi = hi)
+        docs, "doc_id", "text", "lang", "source")
       .collect().map(r => r.getLong(0) ->
         ((r.getAs[Boolean]("source_ok"), r.getAs[Boolean]("lang_ok"),
           r.getAs[Boolean]("lm_ok"), r.getAs[Boolean]("keep")))).toMap

@@ -207,19 +207,21 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
   }
 
   test("joinSizeEstimate: exact product mass; rate=1 sampling is lossless") {
-    val child = Seq(1L, 1L, 2L, 3L).toDF("k")
-    val parent = Seq(1L, 2L, 2L).toDF("p")
+    // key 13 is in the 1/16 hash60 sample (md5 prefix ≡ 0 mod 16), key 1
+    // is not; key 3 has no parent row
+    val child = Seq(13L, 1L, 1L, 1L, 3L).toDF("k")
+    val parent = Seq(13L, 1L, 1L, 1L, 1L, 1L).toDF("p")
     val r1 = SchemaDiscovery.joinSizeEstimate(child, "k", parent, "p",
-      "c=p", rate = 1).collect().head
-    assert(r1.getAs[Long]("n_keys") == 2L)        // keys 1 and 2 match
-    assert(r1.getAs[Long]("exact_rows") == 4L)    // 2*1 + 1*2
-    assert(r1.getAs[Long]("sampled_keys") == 2L)  // rate 1 keeps all
-    assert(r1.getAs[Long]("est_rows") == 4L && r1.getAs[Double]("rel_err") == 0.0)
+      "c=p").collect().head
+    assert(r1.getAs[Long]("n_keys") == 2L)        // keys 13 and 1 match
+    assert(r1.getAs[Long]("exact_rows") == 16L)   // 1*1 + 3*5
+    assert(r1.getAs[Long]("sampled_keys") == 1L)  // only key 13 is sampled
+    assert(r1.getAs[Long]("est_rows") == 16L && r1.getAs[Double]("rel_err") == 0.0)
     // exact_rows equals the materialized join count on real-shaped data
     val c2 = Seq.tabulate(200)(i => (i % 37).toLong).toDF("k")
     val p2 = Seq.tabulate(50)(i => (i % 41).toLong).toDF("p")
-    val r2 = SchemaDiscovery.joinSizeEstimate(c2, "k", p2, "p", "x",
-      rate = 16).collect().head
+    val r2 = SchemaDiscovery.joinSizeEstimate(c2, "k", p2, "p", "x")
+      .collect().head
     val trueJoin = c2.join(p2, col("k") === col("p")).count()
     assert(r2.getAs[Long]("exact_rows") == trueJoin)
     assert(r2.getAs[Long]("est_rows") % 16 == 0)
@@ -410,25 +412,24 @@ class RoundThirteenShelfSpec extends AnyFunSuite {
   }
 
   test("upliftQini: hand-computed curve on a constructed-uplift experiment") {
-    // per score 1..10: one treated, one control; treated convert iff
-    // score >= 6, control never. 5 bins of 4 units each.
-    val units = (1 to 10).flatMap(s =>
-      Seq((s.toLong, true, s >= 6), (s.toLong, false, false)))
+    // per score 1..20: one treated, one control; treated convert iff
+    // score >= 11, control never. 10 bins of 4 units each.
+    val units = (1 to 20).flatMap(s =>
+      Seq((s.toLong, true, s >= 11), (s.toLong, false, false)))
       .toDF("score", "t", "y")
     val r = graft.operators.ModelEval
-      .upliftQini(units, "score", col("t"), col("y"), nBins = 5)
+      .upliftQini(units, "score", col("t"), col("y"))
       .collect().sortBy(_.getAs[Long]("bin"))
-    assert(r.map(_.getAs[Long]("bin")).toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(r.map(_.getAs[Long]("bin")).toSeq == (1L to 10L))
     assert(r.map(_.getAs[Long]("cum_conv_t")).toSeq ==
-      Seq(2L, 4L, 5L, 5L, 5L))
-    assert(r.map(_.getAs[Long]("cum_conv_c")).toSeq ==
-      Seq(0L, 0L, 0L, 0L, 0L))
+      Seq(2L, 4L, 6L, 8L, 10L, 10L, 10L, 10L, 10L, 10L))
+    assert(r.map(_.getAs[Long]("cum_conv_c")).toSeq == Seq.fill(10)(0L))
     assert(r.head.getAs[Double]("uplift_cum") == 1.0)
     assert(r.last.getAs[Double]("uplift_cum") == 0.5)
     assert(r.map(_.getAs[Double]("qini_y")).toSeq ==
-      Seq(2.0, 4.0, 5.0, 5.0, 5.0))
-    // diagonal hits 1,2,3,4,5 -> gaps 1,2,2,1,0 -> mean 1.2
-    assert(r.head.getAs[Double]("qini_coef") == 1.2)
+      Seq(2.0, 4.0, 6.0, 8.0, 10.0, 10.0, 10.0, 10.0, 10.0, 10.0))
+    // diagonal hits 1..10 -> gaps 1,2,3,4,5,4,3,2,1,0 -> mean 2.5
+    assert(r.head.getAs[Double]("qini_coef") == 2.5)
   }
 
   test("isotonicOnScores: classic PAV pooling and monotone output on the real fit") {

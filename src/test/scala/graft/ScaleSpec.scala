@@ -589,10 +589,12 @@ class ScaleSpec extends AnyFunSuite {
     assert(out == List(("A", 10L, 20L, 20L, 2.0), ("B", 20L, 40L, 22L, 1.1),
       ("C", 100L, 200L, 22L, 0.22)))
     // budget >= total caps: every source gets its full cap (the level
-    // exceeds the max cap with no special-casing)
-    val full = Scale.unimaxMix(docs, "source", "text",
-        epochCap = 1, budgetNum = 1, budgetDen = 1)
-      .collect().map(r => (r.getString(0), r.getLong(3), r.getDouble(4)))
+    // exceeds the max cap with no special-casing) — unimaxMix's budget is
+    // half its caps' total, so this runs the shared waterfill at a
+    // 1-epoch cap and a whole-corpus budget
+    val per = Seq(("A", 10L), ("B", 20L), ("C", 100L)).toDF("source", "s")
+    val full = Scale.waterfillAlloc(per, 1, 1, 1)
+      .collect().map(r => (r.getString(0), r.getLong(3), r.getLong(3).toDouble / r.getLong(1)))
       .sortBy(_._1).toList
     graft.operators.CacheScope.drain()
     assert(full == List(("A", 10L, 1.0), ("B", 20L, 1.0), ("C", 100L, 1.0)))

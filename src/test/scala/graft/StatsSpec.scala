@@ -201,7 +201,7 @@ class StatsSpec extends AnyFunSuite {
   test("treeDepths: maxIters guards a cycle; unreachable nodes stay absent") {
     val edges = Seq(("x", "y"), ("y", "x"), ("z", "w")).toDF("child", "parent")
     val roots = Seq("x").toDF("n")
-    val m = Graphs.treeDepths(edges, "child", "parent", roots, "n", maxIters = 5)
+    val m = Graphs.treeDepths(edges, "child", "parent", roots, "n")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // x at 0; y child of x at 1; x rediscovered at 2 but keeps min depth 0;
     // z/w disconnected -> absent

@@ -124,7 +124,8 @@ class StreamingSpec extends AnyFunSuite {
     val purchases = MemoryStream[Event]
     val joined = StreamingAgg.clickAttributionJoin(
       clicks.toDF().select($"event_id".as("click_id"), $"user_id", $"ts"),
-      purchases.toDF().select($"event_id".as("purchase_id"), $"user_id", $"ts", $"value"))
+      purchases.toDF().select($"event_id".as("purchase_id"), $"user_id", $"ts", $"value"),
+      withinSec = 1800L, watermark = "1 hour", joinType = "inner")
       .select($"click_id", $"purchase_id", $"value")
     val q = joined.writeStream.format("memory").queryName("attr_test")
       .outputMode("append").start()

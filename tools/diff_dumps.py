@@ -4,23 +4,35 @@
 
 Usage: python3 tools/diff_dumps.py DIR_A DIR_B
 Reads each query's parquet from both dirs, sorts columns by name and rows
-by all columns, and compares exactly (the validator's discipline). Exits
-nonzero listing any query whose two dumps differ.
+by all columns, and compares exactly (the validator's discipline). A query
+dumped in only one dir (Verify logs a failed query and goes on) differs.
+Exits nonzero listing any query whose two dumps differ.
 """
 import os
 import sys
 
 import duckdb
 
+USAGE = "usage: python3 tools/diff_dumps.py DIR_A DIR_B"
+
+
+def dumped(d: str) -> set:
+    return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+
 
 def main() -> int:
+    if len(sys.argv) != 3:
+        print(USAGE, file=sys.stderr)
+        return 2
     a, b = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
-    names = sorted(
-        d for d in os.listdir(a)
-        if os.path.isdir(os.path.join(a, d)) and
-        os.path.isdir(os.path.join(b, d)))
+    in_a, in_b = dumped(a), dumped(b)
     bad = []
+    for name, only in sorted([(n, a) for n in in_a - in_b] +
+                             [(n, b) for n in in_b - in_a]):
+        bad.append(name)
+        print(f"ONLY  {name}: dumped in {only} alone")
+    names = sorted(in_a & in_b)
     for name in names:
         try:
             ra = con.execute(
@@ -39,7 +51,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — report and continue
             bad.append(name)
             print(f"ERR   {name}: {e}")
-    print(f"\n{len(names) - len(bad)} identical, {len(bad)} differ")
+    print(f"\n{len(in_a | in_b) - len(bad)} identical, {len(bad)} differ")
     return 1 if bad else 0
 
 
